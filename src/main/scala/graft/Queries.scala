@@ -44,6 +44,23 @@ object Queries {
     * immutable, so one job per JVM suffices. */
   private val eventsCounts =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** True when `df`'s plan reads a non-empty STRICT subset of `t`'s
+    * current base files — the served point-fetch shape the index gates
+    * assert. */
+  private def servedSubset(t: GraftTable, df: DataFrame): Boolean = {
+    val baseFiles = t.meta.baseFiles.map(f =>
+      new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
+    val read = graft.plans.ScanRoots.filesRead(df.queryExecution.optimizedPlan, baseFiles)
+    read.nonEmpty && read.size < baseFiles.size
+  }
+
+  /** True when `df`'s plan reads any file under `location` — the rollup
+    * gates' served shape. */
+  private def servedFrom(location: String, df: DataFrame): Boolean =
+    graft.plans.ScanRoots.filesRead(df.queryExecution.optimizedPlan,
+      _.startsWith(location)).nonEmpty
+
   private def eventsCount(s: SparkSession, dir: String): Long =
     eventsCounts.computeIfAbsent(dir,
       _ => Tables.raw(s, dir, "events").count()).longValue
@@ -928,7 +945,6 @@ object Queries {
       // still delta-dirty (the lookup's base read folds merge-on-read
       // state itself). Gated rows = the point-query result vs the
       // oracle's direct filter over the mutated base.
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val raw = Tables.raw(s, dir, "customer")
       val t = GraftTable.create(s, tmpLoc("graft-q71b-"), "customer_q71",
         raw.schema, Seq("c_custkey"),
@@ -936,28 +952,15 @@ object Queries {
       val idx = graft.tools.SecondaryIndex.build(s, t, "c_name",
         tmpLoc("graft-q71i-"), buckets = 16) // build auto-arms the rewrite
       try {
-        def servedSubset(df: DataFrame): Boolean = {
-          val baseFiles = t.meta.baseFiles.map(f =>
-            new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-          val read = df.queryExecution.optimizedPlan.collect {
-            case lr: LogicalRelation => lr.relation match {
-              case fs: HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toUri.getPath)
-                  .filter(baseFiles.contains)
-              case _ => Nil
-            }
-          }.flatten.toSet
-          read.nonEmpty && read.size < baseFiles.size
-        }
         def q1 = t.scan().filter(col("c_name") === "Customer#000000011")
-        if (!servedSubset(q1))
+        if (!servedSubset(t, q1))
           throw new IllegalStateException(
             "a fresh index must serve the point predicate through a pruned read")
         withShufflePartitions(s, 4) {
           t.upsert(t.scan().filter(col("c_custkey") === 11)
             .withColumn("c_name", lit("RENAMED#000000011")))
         }
-        if (servedSubset(q1))
+        if (servedSubset(t, q1))
           throw new IllegalStateException("a STALE index must never serve")
         if (!graft.tools.SecondaryIndex.refresh(s, idx))
           throw new IllegalStateException("refresh must apply the mutation")
@@ -968,7 +971,7 @@ object Queries {
         val v2 = s.table(s"gq71.`${f.getName}`")
           .filter(col("c_name").isin("RENAMED#000000011",
             "Customer#000000042", "Customer#000000011"))
-        if (!servedSubset(v2))
+        if (!servedSubset(t, v2))
           throw new IllegalStateException(
             "a refreshed index must serve the V2 path on a dirty base")
         withShufflePartitions(s, 4) { materialized(s, v2) }
@@ -989,7 +992,6 @@ object Queries {
       // asserts pin the contract exactly like q71: fresh serves (strict
       // subset of base files read), stale NEVER serves, a refresh restores
       // serving on the still-dirty base through the V2 path.
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val raw = Tables.raw(s, dir, "customer")
       val t = GraftTable.create(s, tmpLoc("graft-q72b-"), "customer_q72",
         raw.schema, Seq("c_custkey"),
@@ -997,33 +999,20 @@ object Queries {
       val idx = graft.tools.SecondaryIndex.build(s, t, "c_name",
         tmpLoc("graft-q72i-"), buckets = 16)
       try {
-        def servedSubset(df: DataFrame): Boolean = {
-          val baseFiles = t.meta.baseFiles.map(f =>
-            new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-          val read = df.queryExecution.optimizedPlan.collect {
-            case lr: LogicalRelation => lr.relation match {
-              case fs: HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toUri.getPath)
-                  .filter(baseFiles.contains)
-              case _ => Nil
-            }
-          }.flatten.toSet
-          read.nonEmpty && read.size < baseFiles.size
-        }
         // a NARROW interval (3 keys over 4 PK buckets) so the strict-subset
         // plan assert is deterministic; fixed-width TPC-H names make the
         // lexicographic range exact at any SF
         def rangeCond = col("c_name") >= "Customer#000000010" &&
           col("c_name") <= "Customer#000000012"
         def q1 = t.scan().filter(rangeCond)
-        if (!servedSubset(q1))
+        if (!servedSubset(t, q1))
           throw new IllegalStateException(
             "a fresh index must serve the range predicate through a pruned read")
         withShufflePartitions(s, 4) {
           t.upsert(t.scan().filter(col("c_custkey") === 11)
             .withColumn("c_name", lit("ZZZ#000000011")))
         }
-        if (servedSubset(q1))
+        if (servedSubset(t, q1))
           throw new IllegalStateException("a STALE index must never serve a range")
         if (!graft.tools.SecondaryIndex.refresh(s, idx))
           throw new IllegalStateException("refresh must apply the mutation")
@@ -1032,7 +1021,7 @@ object Queries {
           classOf[graft.sources.v2.GraftCatalog].getName)
         s.conf.set("spark.sql.catalog.gq72.warehouse", f.getParent)
         val v2 = s.table(s"gq72.`${f.getName}`").filter(rangeCond)
-        if (!servedSubset(v2))
+        if (!servedSubset(t, v2))
           throw new IllegalStateException(
             "a refreshed index must serve the range on the V2 path of a dirty base")
         withShufflePartitions(s, 4) { materialized(s, v2) }
@@ -1050,7 +1039,6 @@ object Queries {
       // refresh case exercised here is the composite-specific one: a
       // TRAILING-only value change (the index KEY is unchanged — the
       // upsert rewrites the payload in place, no tombstone needed).
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val raw = Tables.raw(s, dir, "customer")
       val t = GraftTable.create(s, tmpLoc("graft-q73b-"), "customer_q73",
         raw.schema, Seq("c_custkey"),
@@ -1058,22 +1046,9 @@ object Queries {
       val idx = graft.tools.SecondaryIndex.build(s, t,
         Seq("c_name", "c_mktsegment"), tmpLoc("graft-q73i-"), buckets = 16)
       try {
-        def servedSubset(df: DataFrame): Boolean = {
-          val baseFiles = t.meta.baseFiles.map(f =>
-            new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-          val read = df.queryExecution.optimizedPlan.collect {
-            case lr: LogicalRelation => lr.relation match {
-              case fs: HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toUri.getPath)
-                  .filter(baseFiles.contains)
-              case _ => Nil
-            }
-          }.flatten.toSet
-          read.nonEmpty && read.size < baseFiles.size
-        }
         // lead-only serving first (the trailing column is payload, so a
         // lead probe is complete — no composite-prefix soundness hazard)
-        if (!servedSubset(t.scan().filter(col("c_name") === "Customer#000000025")))
+        if (!servedSubset(t, t.scan().filter(col("c_name") === "Customer#000000025")))
           throw new IllegalStateException(
             "a composite index must serve lead-only predicates")
         // lead+trailing conjunction with a data-true trailing value (the
@@ -1081,7 +1056,7 @@ object Queries {
         // actual value is data-dependent, read once — gate scripting only)
         val seg21 = t.scan().filter(col("c_custkey") === 21)
           .select("c_mktsegment").head().getString(0)
-        if (!servedSubset(t.scan().filter(
+        if (!servedSubset(t, t.scan().filter(
           col("c_name").isin("Customer#000000020", "Customer#000000021",
             "Customer#000000022") && col("c_mktsegment") === seg21)))
           throw new IllegalStateException(
@@ -1094,7 +1069,7 @@ object Queries {
           t.upsert(t.scan().filter(col("c_custkey") === 20)
             .withColumn("c_mktsegment", lit("GRAFTSEG")))
         }
-        if (servedSubset(q))
+        if (servedSubset(t, q))
           throw new IllegalStateException("a STALE composite index must never serve")
         if (!graft.tools.SecondaryIndex.refresh(s, idx))
           throw new IllegalStateException("refresh must apply the mutation")
@@ -1105,7 +1080,7 @@ object Queries {
         val v2 = s.table(s"gq73.`${f.getName}`").filter(
           col("c_name").isin("Customer#000000020", "Customer#000000021",
             "Customer#000000022") && col("c_mktsegment") === "GRAFTSEG")
-        if (!servedSubset(v2))
+        if (!servedSubset(t, v2))
           throw new IllegalStateException(
             "a refreshed composite index must serve the V2 path")
         withShufflePartitions(s, 4) { materialized(s, v2) }
@@ -1122,7 +1097,6 @@ object Queries {
       // the engine's zone TOP-N cut (S9/q52). Same in-query asserts as
       // q71/q72: fresh serves (strict subset of base files read), stale
       // NEVER serves, a refresh restores serving through the V2 path.
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val raw = Tables.raw(s, dir, "customer")
       val t = GraftTable.create(s, tmpLoc("graft-q74b-"), "customer_q74",
         raw.schema, Seq("c_custkey"),
@@ -1130,21 +1104,8 @@ object Queries {
       val idx = graft.tools.SecondaryIndex.build(s, t, "c_name",
         tmpLoc("graft-q74i-"), buckets = 16)
       try {
-        def servedSubset(df: DataFrame): Boolean = {
-          val baseFiles = t.meta.baseFiles.map(f =>
-            new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-          val read = df.queryExecution.optimizedPlan.collect {
-            case lr: LogicalRelation => lr.relation match {
-              case fs: HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toUri.getPath)
-                  .filter(baseFiles.contains)
-              case _ => Nil
-            }
-          }.flatten.toSet
-          read.nonEmpty && read.size < baseFiles.size
-        }
         def q1 = t.scan().orderBy(col("c_name").desc).limit(3)
-        if (!servedSubset(q1))
+        if (!servedSubset(t, q1))
           throw new IllegalStateException(
             "a fresh index must serve ORDER BY .. LIMIT k through a pruned read")
         // rename the TOP row (max name == max custkey for fixed-width
@@ -1154,7 +1115,7 @@ object Queries {
           t.upsert(t.scan().filter(col("c_custkey") === maxKey)
             .withColumn("c_name", lit("AAA#RENAMED")))
         }
-        if (servedSubset(q1))
+        if (servedSubset(t, q1))
           throw new IllegalStateException("a STALE index must never serve a top-k")
         if (!graft.tools.SecondaryIndex.refresh(s, idx))
           throw new IllegalStateException("refresh must apply the mutation")
@@ -1164,7 +1125,7 @@ object Queries {
         s.conf.set("spark.sql.catalog.gq74.warehouse", f.getParent)
         val v2 = s.table(s"gq74.`${f.getName}`")
           .orderBy(col("c_name").desc).limit(3)
-        if (!servedSubset(v2))
+        if (!servedSubset(t, v2))
           throw new IllegalStateException(
             "a refreshed index must serve the top-k on the V2 path of a dirty base")
         withShufflePartitions(s, 4) { materialized(s, v2) }
@@ -1185,7 +1146,6 @@ object Queries {
       // evaluation. Refresh re-derives mutated keys through the same
       // expression (in-query asserts: fresh serves via a strict-subset
       // read, stale never serves, the refreshed index serves the V2 path).
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val raw = Tables.raw(s, dir, "customer")
       val t = GraftTable.create(s, tmpLoc("graft-q75b-"), "customer_q75",
         raw.schema, Seq("c_custkey"),
@@ -1193,28 +1153,15 @@ object Queries {
       val idx = graft.tools.SecondaryIndex.buildExpression(s, t,
         "lower(c_name)", tmpLoc("graft-q75i-"), buckets = 16)
       try {
-        def servedSubset(df: DataFrame): Boolean = {
-          val baseFiles = t.meta.baseFiles.map(f =>
-            new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-          val read = df.queryExecution.optimizedPlan.collect {
-            case lr: LogicalRelation => lr.relation match {
-              case fs: HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toUri.getPath)
-                  .filter(baseFiles.contains)
-              case _ => Nil
-            }
-          }.flatten.toSet
-          read.nonEmpty && read.size < baseFiles.size
-        }
         def q1 = t.scan().filter(lower(col("c_name")) === "customer#000000033")
-        if (!servedSubset(q1))
+        if (!servedSubset(t, q1))
           throw new IllegalStateException(
             "a fresh functional index must serve its expression predicate")
         withShufflePartitions(s, 4) {
           t.upsert(t.scan().filter(col("c_custkey") === 33)
             .withColumn("c_name", lit("MIXEDcase#000000033")))
         }
-        if (servedSubset(q1))
+        if (servedSubset(t, q1))
           throw new IllegalStateException("a STALE functional index must never serve")
         if (!graft.tools.SecondaryIndex.refresh(s, idx))
           throw new IllegalStateException("refresh must apply the mutation")
@@ -1225,7 +1172,7 @@ object Queries {
         val v2 = s.table(s"gq75.`${f.getName}`").filter(
           lower(col("c_name")).isin("mixedcase#000000033",
             "customer#000000033", "customer#000000044"))
-        if (!servedSubset(v2))
+        if (!servedSubset(t, v2))
           throw new IllegalStateException(
             "a refreshed functional index must serve the V2 path")
         withShufflePartitions(s, 4) { materialized(s, v2) }
@@ -1247,7 +1194,6 @@ object Queries {
       // mutates, covering declines; (3) after an incremental refresh the
       // V2 path covers again on the still-dirty base (the covering read
       // never touches the base, so MOR state is irrelevant to it).
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val raw = Tables.raw(s, dir, "customer")
       val t = GraftTable.create(s, tmpLoc("graft-q76b-"), "customer_q76",
         raw.schema, Seq("c_custkey"),
@@ -1303,7 +1249,6 @@ object Queries {
       // COVERS a count (zero base files), stale declines after a date
       // mutation, and after the refresh the V2 path covers the IN and
       // RANGE shapes on the dirty base.
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val raw = Tables.raw(s, dir, "orders")
         .select(col("o_orderkey"), to_date(col("o_orderdate")).as("o_odate"))
       val t = GraftTable.create(s, tmpLoc("graft-q77b-"), "orders_q77",
@@ -1363,7 +1308,6 @@ object Queries {
       // reads a strict subset of base files, stale declines after a
       // mutation, and the refreshed index serves the V2 path on the
       // dirty base. Rows hash-gate against the oracle's direct filter.
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val raw = Tables.raw(s, dir, "customer")
       val t = GraftTable.create(s, tmpLoc("graft-q78b-"), "customer_q78",
         raw.schema, Seq("c_custkey"),
@@ -1447,13 +1391,6 @@ object Queries {
       val ib = graft.tools.SecondaryIndex.build(s, t, "c_acctbal",
         tmpLoc("graft-q79j-"), buckets = 16)
       try {
-        def servedSubset(df: DataFrame): Boolean = {
-          val baseFiles = t.meta.baseFiles.map(f =>
-            new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-          val read = graft.plans.ScanRoots.filesRead(
-            df.queryExecution.optimizedPlan, baseFiles)
-          read.nonEmpty && read.size < baseFiles.size
-        }
         // the OTHER index's probe value comes off the data (c_acctbal is
         // generated, never stable across SFs); the oracle derives the
         // same literal with a scalar subquery. TWO matched keys over 4
@@ -1462,11 +1399,11 @@ object Queries {
           .select("c_acctbal").collect().head.getDouble(0)
         def q1 = t.scan().filter(
           col("c_name") === "Customer#000000007" || col("c_acctbal") === bal42)
-        if (!servedSubset(q1))
+        if (!servedSubset(t, q1))
           throw new IllegalStateException("a fresh index pair must serve " +
             s"the OR as a union:\n${q1.queryExecution.optimizedPlan}")
         graft.plans.IndexRewrite.disable(s, ib.location)
-        if (servedSubset(q1))
+        if (servedSubset(t, q1))
           throw new IllegalStateException(
             "an OR with an uncovered disjunct must keep the scan")
         graft.plans.IndexRewrite.enable(s, ib)
@@ -1474,11 +1411,11 @@ object Queries {
           t.upsert(t.scan().filter(col("c_custkey") === 7)
             .withColumn("c_name", lit("RENAMED#000000007")))
         }
-        if (servedSubset(q1))
+        if (servedSubset(t, q1))
           throw new IllegalStateException("STALE indexes must never serve")
         if (!graft.tools.SecondaryIndex.refresh(s, ia))
           throw new IllegalStateException("refresh must apply the mutation")
-        if (servedSubset(q1))
+        if (servedSubset(t, q1))
           throw new IllegalStateException(
             "a HALF-refreshed union must decline whole")
         if (!graft.tools.SecondaryIndex.refresh(s, ib))
@@ -1489,7 +1426,7 @@ object Queries {
         s.conf.set("spark.sql.catalog.gq79.warehouse", f.getParent)
         val v2 = s.table(s"gq79.`${f.getName}`").filter(
           col("c_name") === "RENAMED#000000007" || col("c_acctbal") === bal42)
-        if (!servedSubset(v2))
+        if (!servedSubset(t, v2))
           throw new IllegalStateException("refreshed indexes must serve " +
             s"the union on the dirty base via V2:\n${v2.queryExecution.optimizedPlan}")
         withShufflePartitions(s, 4) { materialized(s, v2) }
@@ -1522,18 +1459,11 @@ object Queries {
       val idx = graft.tools.SecondaryIndex.build(s, t,
         Seq("c_name", "c_mktsegment"), tmpLoc("graft-q80i-"), buckets = 16)
       try {
-        def servedSubset(df: DataFrame): Boolean = {
-          val baseFiles = t.meta.baseFiles.map(f =>
-            new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-          val read = graft.plans.ScanRoots.filesRead(
-            df.queryExecution.optimizedPlan, baseFiles)
-          read.nonEmpty && read.size < baseFiles.size
-        }
         def leaderboard(base: DataFrame) = base
           .filter(col("c_mktsegment") === "BUILDING")
           .orderBy(col("c_name").desc).limit(3)
         def q1 = leaderboard(t.scan())
-        if (!servedSubset(q1))
+        if (!servedSubset(t, q1))
           throw new IllegalStateException("a fresh composite index must " +
             s"serve the filtered top-k:\n${q1.queryExecution.optimizedPlan}")
         // the segment's current top name, read through the serve itself
@@ -1542,7 +1472,7 @@ object Queries {
           t.upsert(t.scan().filter(col("c_custkey") === topKey)
             .withColumn("c_name", lit("AAA#RENAMED")))
         }
-        if (servedSubset(q1))
+        if (servedSubset(t, q1))
           throw new IllegalStateException("a STALE index must never serve")
         if (!graft.tools.SecondaryIndex.refresh(s, idx))
           throw new IllegalStateException("refresh must apply the mutation")
@@ -1551,7 +1481,7 @@ object Queries {
           classOf[graft.sources.v2.GraftCatalog].getName)
         s.conf.set("spark.sql.catalog.gq80.warehouse", f.getParent)
         val v2 = leaderboard(s.table(s"gq80.`${f.getName}`"))
-        if (!servedSubset(v2))
+        if (!servedSubset(t, v2))
           throw new IllegalStateException("a refreshed index must serve " +
             s"the filtered top-k via V2 on the dirty base:\n${v2.queryExecution.optimizedPlan}")
         withShufflePartitions(s, 4) { materialized(s, v2) }
@@ -1582,27 +1512,20 @@ object Queries {
       val idx = graft.tools.SecondaryIndex.build(s, t, "c_name",
         tmpLoc("graft-q81i-"), buckets = 16)
       try {
-        def servedSubset(df: DataFrame): Boolean = {
-          val baseFiles = t.meta.baseFiles.map(f =>
-            new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-          val read = graft.plans.ScanRoots.filesRead(
-            df.queryExecution.optimizedPlan, baseFiles)
-          read.nonEmpty && read.size < baseFiles.size
-        }
         val dim = Seq(("RENAMED#000000007", "A"),
           ("Customer#000000042", "B"), ("nope", "C")).toDF("k", "tag")
         def joined(base: DataFrame) = base
           .join(dim, col("c_name") === col("k"))
           .select(col("c_custkey"), col("c_name"), col("tag"))
         def q1 = joined(t.scan())
-        if (!servedSubset(q1))
+        if (!servedSubset(t, q1))
           throw new IllegalStateException("a fresh index must serve the " +
             s"join probe:\n${q1.queryExecution.optimizedPlan}")
         withShufflePartitions(s, 4) {
           t.upsert(t.scan().filter(col("c_custkey") === 7)
             .withColumn("c_name", lit("RENAMED#000000007")))
         }
-        if (servedSubset(q1))
+        if (servedSubset(t, q1))
           throw new IllegalStateException("a STALE index must never serve")
         if (!graft.tools.SecondaryIndex.refresh(s, idx))
           throw new IllegalStateException("refresh must apply the mutation")
@@ -1611,7 +1534,7 @@ object Queries {
           classOf[graft.sources.v2.GraftCatalog].getName)
         s.conf.set("spark.sql.catalog.gq81.warehouse", f.getParent)
         val v2 = joined(s.table(s"gq81.`${f.getName}`"))
-        if (!servedSubset(v2))
+        if (!servedSubset(t, v2))
           throw new IllegalStateException("a refreshed index must serve " +
             s"the join via V2 on the dirty base:\n${v2.queryExecution.optimizedPlan}")
         withShufflePartitions(s, 4) { materialized(s, v2) }
@@ -1632,7 +1555,6 @@ object Queries {
       // before merge-on-read planning). The gated rows are the
       // rollup-served aggregate, hash-matched against the oracle's
       // from-scratch recompute of the mutated base.
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val wh = q70Wh.computeIfAbsent(dir, _ => tmpLoc("graft-q70-wh-"))
       s.conf.set("spark.sql.catalog.gq70",
         classOf[graft.sources.v2.GraftCatalog].getName)
@@ -1654,19 +1576,11 @@ object Queries {
           count(lit(1)).as("n_rows"),
           sum(expr("CAST(o_totalprice AS DECIMAL(28,2))")).as("sum_price"),
           max("o_orderkey").as("max_key"))
-        def served(df: DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.collect {
-            case lr: LogicalRelation => lr.relation match {
-              case fs: HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toUri.getPath)
-              case _ => Nil
-            }
-          }.flatten.exists(_.startsWith(rollup.location))
         def v2 = agg(s.table(s"gq70.`$name`"))
-        if (!served(agg(t.scan())))
+        if (!servedFrom(rollup.location, agg(t.scan())))
           throw new IllegalStateException(
             "fresh rollup must serve the DSv1 clean-snapshot aggregate")
-        if (!served(v2))
+        if (!servedFrom(rollup.location, v2))
           throw new IllegalStateException(
             "fresh rollup must serve the V2 catalog aggregate")
         withShufflePartitions(s, 4) {
@@ -1675,12 +1589,12 @@ object Queries {
               col("o_orderkey") % 7 === 0)
             .withColumn("o_totalprice", col("o_totalprice") * 2))
         }
-        if (served(v2))
+        if (servedFrom(rollup.location, v2))
           throw new IllegalStateException("a STALE rollup must never serve")
         if (!graft.tools.MaterializedRollup.refresh(s, rollup))
           throw new IllegalStateException("refresh must apply the mutation")
         val q = v2
-        if (!served(q))
+        if (!servedFrom(rollup.location, q))
           throw new IllegalStateException(
             "a refreshed rollup must serve the V2 path on a dirty base")
         // the SUBSET path, driver-gated too: the GLOBAL aggregate must
@@ -1690,7 +1604,7 @@ object Queries {
           count(lit(1)).as("n_rows"),
           sum(expr("CAST(o_totalprice AS DECIMAL(28,2))")).as("sum_price"),
           max("o_orderkey").as("max_key"))
-        if (!served(vg))
+        if (!servedFrom(rollup.location, vg))
           throw new IllegalStateException(
             "the global aggregate must re-aggregate the rollup")
         withShufflePartitions(s, 4) {
@@ -1726,28 +1640,21 @@ object Queries {
       s.conf.set(s"spark.sql.catalog.$catName.warehouse", wh)
       val idxLoc = s"$wh/.sidx/${name}_nameidx"
       try {
-        def servedSubset(df: DataFrame): Boolean = {
-          val baseFiles = t.meta.baseFiles.map(f =>
-            new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-          val read = graft.plans.ScanRoots.filesRead(
-            df.queryExecution.optimizedPlan, baseFiles)
-          read.nonEmpty && read.size < baseFiles.size
-        }
         def q = s.table(s"$catName.`$name`").filter(
           col("c_name").isin("Customer#000000019", "Customer#000000036"))
         s.sql(s"CREATE INDEX nameidx ON TABLE $catName.`$name` (c_name)")
-        if (!servedSubset(q))
+        if (!servedSubset(t, q))
           throw new IllegalStateException("a SQL-created index must serve " +
             s"transparently:\n${q.queryExecution.optimizedPlan}")
         s.sql(s"DROP INDEX nameidx ON TABLE $catName.`$name`")
-        if (servedSubset(q))
+        if (servedSubset(t, q))
           throw new IllegalStateException(
             "a SQL-dropped index must stop serving")
         if (graft.catalog.TableMeta.exists(idxLoc))
           throw new IllegalStateException("DROP INDEX must remove the table")
         s.sql(s"CREATE INDEX nameidx ON TABLE $catName.`$name` (c_name) " +
           "OPTIONS (buckets=8)")
-        if (!servedSubset(q))
+        if (!servedSubset(t, q))
           throw new IllegalStateException("the re-created index must serve")
         withShufflePartitions(s, 4) { materialized(s, q) }
           .orderBy("c_custkey")
@@ -1767,7 +1674,6 @@ object Queries {
       // global mean, hash-exact vs DuckDB (integer sums below 2^53 are
       // double-exact, so the division is bitwise identical — no rounding
       // house rule needed).
-      import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
       val wh = q82Wh.computeIfAbsent(dir, _ => tmpLoc("graft-q82-wh-"))
       s.conf.set("spark.sql.catalog.gq82",
         classOf[graft.sources.v2.GraftCatalog].getName)
@@ -1788,19 +1694,11 @@ object Queries {
         def agg(base: DataFrame) = base.groupBy("o_orderpriority").agg(
           avg("o_custkey").as("avg_cust"),
           count(col("o_custkey")).as("n_cust"))
-        def served(df: DataFrame): Boolean =
-          df.queryExecution.optimizedPlan.collect {
-            case lr: LogicalRelation => lr.relation match {
-              case fs: HadoopFsRelation =>
-                fs.location.rootPaths.map(_.toUri.getPath)
-              case _ => Nil
-            }
-          }.flatten.exists(_.startsWith(rollup.location))
         def v2 = agg(s.table(s"gq82.`$name`"))
-        if (!served(agg(t.scan())))
+        if (!servedFrom(rollup.location, agg(t.scan())))
           throw new IllegalStateException(
             "fresh rollup must derive avg on the DSv1 aggregate")
-        if (!served(v2))
+        if (!servedFrom(rollup.location, v2))
           throw new IllegalStateException(
             "fresh rollup must derive avg on the V2 aggregate")
         withShufflePartitions(s, 4) {
@@ -1809,18 +1707,18 @@ object Queries {
               col("o_orderkey") % 11 === 0)
             .withColumn("o_custkey", col("o_custkey") + lit(1000000L)))
         }
-        if (served(v2))
+        if (servedFrom(rollup.location, v2))
           throw new IllegalStateException("a STALE rollup must never serve")
         if (!graft.tools.MaterializedRollup.refresh(s, rollup))
           throw new IllegalStateException("refresh must apply the mutation")
-        if (!served(v2))
+        if (!servedFrom(rollup.location, v2))
           throw new IllegalStateException(
             "a refreshed rollup must derive avg on the dirty base via V2")
         // the global mean re-derives: sum(sums)/sum(counts)
         def vg = s.table(s"gq82.`$name`").agg(
           avg("o_custkey").as("avg_cust"),
           count(col("o_custkey")).as("n_cust"))
-        if (!served(vg))
+        if (!servedFrom(rollup.location, vg))
           throw new IllegalStateException(
             "the global avg must re-derive from the rollup")
         withShufflePartitions(s, 4) {
@@ -1843,8 +1741,8 @@ object Queries {
       // state and evicts it as the joint watermark passes, which is what
       // makes the join runnable on an unbounded 100 TB stream (state is a
       // sliding window, never the history); the PK upsert sink makes the
-      // at-least-once replay idempotent. Cost attribution (ProfileQ63,
-      // round 14): each ~1 s trigger spends 0.6-1.1 s in addBatch — the
+      // at-least-once replay idempotent. Cost attribution (a per-trigger
+      // StreamingQueryProgress profile, round 14): each ~1 s trigger spends 0.6-1.1 s in addBatch — the
       // four per-partition state stores plus join execution — ~0.14 s in
       // queryPlanning, and <=1 ms in the engine source's latestOffset/
       // getBatch (version manifests are memoized per stream), so the

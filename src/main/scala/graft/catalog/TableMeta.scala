@@ -395,6 +395,21 @@ object TableMeta {
 
   def readCurrent(location: String): TableMeta = read(location, currentVersion(location))
 
+  /** Manifest at version `v`, checked against `floor` (the current
+    * manifest's [[TableMeta.historyFloor]]): a clear error below the
+    * history mark — and an honest one for versions that never existed
+    * (v < 1 is a caller bug, not retention). */
+  def readRetained(location: String, v: Long, floor: Long): TableMeta = {
+    if (v < 1) throw new IllegalArgumentException(
+      s"invalid snapshot version $v (versions start at 1)")
+    if (v < floor) throw expired(s"version $v", floor)
+    read(location, v)
+  }
+
+  private def expired(what: String, floor: Long) = new IllegalArgumentException(
+    s"$what expired: history retained from v$floor " +
+      s"(expireVersions ran; the ancient-history-mark analog)")
+
   def exists(location: String): Boolean = Files.exists(currentFile(location))
 
   /** Highest version whose commit timestamp is <= tsMs
@@ -404,15 +419,22 @@ object TableMeta {
     * version files — ceil(log2 n)+1 file reads, not O(versions); a
     * long-lived table with 10^4 commits pays ~15 driver-side JSON reads
     * instead of 10^4. Falls back to a linear scan if the version chain has
-    * gaps (a version file manually removed). */
+    * gaps (a version file manually removed, or the prefix expireVersions
+    * reclaimed). An instant older than every retained version errors as
+    * expired when history was expired, so no retained version qualifies. */
   def versionAtTimestamp(location: String, tsMs: Long): Long = {
     val cur = currentVersion(location)
+    def none(): Nothing = {
+      val floor = readCurrent(location).historyFloor
+      if (floor > 1) throw expired(s"the version at ts=$tsMs", floor)
+      throw new IllegalArgumentException(s"no snapshot at or before ts=$tsMs for $location")
+    }
     def linear(): Long = {
       val versions = (1L to cur).flatMap { v =>
         if (Files.exists(versionFile(location, v))) Some(read(location, v)) else None
       }
-      versions.filter(_.timestampMs <= tsMs).map(_.version).sorted.lastOption.getOrElse(
-        throw new IllegalArgumentException(s"no snapshot at or before ts=$tsMs for $location"))
+      versions.filter(_.timestampMs <= tsMs).map(_.version).sorted.lastOption
+        .getOrElse(none())
     }
     try {
       var lo = 1L
@@ -423,8 +445,7 @@ object TableMeta {
         if (read(location, mid).timestampMs <= tsMs) { ans = mid; lo = mid + 1 }
         else hi = mid - 1
       }
-      if (ans < 0)
-        throw new IllegalArgumentException(s"no snapshot at or before ts=$tsMs for $location")
+      if (ans < 0) none()
       ans
     } catch {
       case _: java.nio.file.NoSuchFileException => linear()

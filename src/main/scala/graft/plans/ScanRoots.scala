@@ -27,17 +27,18 @@ import graft.sources.GraftRelation
  */
 private[graft] object ScanRoots {
 
-  /** The subset of `files` (URI paths) the plan's file relations read —
-    * the plan-shape observable the serving gates and specs assert their
-    * contracts with (strict-subset point-fetch reads, zero-base covering
-    * reads, index-file reads). ONE implementation so a change to how scan
-    * relations expose their file sets cannot silently diverge the five
+  /** The files (URI paths) the plan's file relations read that `files`
+    * accepts — a file set, or any path predicate — the plan-shape
+    * observable the serving gates and specs assert their contracts with
+    * (strict-subset point-fetch reads, zero-base covering reads,
+    * index-file reads, rollup reads). ONE implementation so a change to
+    * how scan relations expose their file sets cannot silently diverge the
     * call sites that used to carry private copies. */
-  def filesRead(plan: LogicalPlan, files: Set[String]): Set[String] =
+  def filesRead(plan: LogicalPlan, files: String => Boolean): Set[String] =
     plan.collect {
       case lr: LogicalRelation => lr.relation match {
         case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-          fs.location.rootPaths.map(_.toUri.getPath).filter(files.contains)
+          fs.location.rootPaths.map(_.toUri.getPath).filter(files)
         case _ => Nil
       }
     }.flatten.toSet

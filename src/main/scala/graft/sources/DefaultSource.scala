@@ -199,8 +199,7 @@ case class GraftRelation(sqlContext: SQLContext, location: String,
 
   private def spark: SparkSession = sqlContext.sparkSession
   private lazy val table = GraftTable.load(spark, location)
-  private lazy val metaAtVersion =
-    version.map(TableMeta.read(location, _)).getOrElse(table.meta)
+  private lazy val metaAtVersion = version.map(table.metaAt).getOrElse(table.meta)
 
   override def schema: StructType =
     StructType(metaAtVersion.visibleColumns.map(_.toField))

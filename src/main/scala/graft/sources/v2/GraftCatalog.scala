@@ -131,7 +131,8 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     if (!GraftTable.exists(loc)) throw new NoSuchTableException(ident)
     require(version.nonEmpty && version.forall(_.isDigit),
       s"graft version identifiers are numeric snapshot versions, got '$version'")
-    try new GraftV2Table(TableMeta.read(loc, version.toLong))
+    try new GraftV2Table(TableMeta.readRetained(loc, version.toLong,
+      TableMeta.readCurrent(loc).historyFloor))
     catch {
       case _: java.nio.file.NoSuchFileException =>
         throw new IllegalArgumentException(
@@ -1873,10 +1874,12 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         spark, StructType(meta.visibleColumns.map(_.toField)), requiredSchema, filters)
     // merge-on-read overlay: read the required columns PLUS any key columns
     // the projection pruned (needed to match base rows against delta keys),
-    // broadcast the latest delta state, and let each bucket's reader apply
-    // it (MorOverlay.scala). Pushed filters are all re-evaluated by Spark
-    // above this scan (pushFilters returns every filter as unhandled), so
-    // delta-emitted rows meet the query's predicates like base rows do.
+    // ship the latest delta state to the splits — broadcast, attached from
+    // flushed per-tablet files, or spilled per route — and let each split's
+    // reader apply it (MorOverlayReaderFactory, MorOverlay.scala). Pushed
+    // filters are all re-evaluated by Spark above this scan (pushFilters
+    // returns every filter as unhandled), so delta-emitted rows meet the
+    // query's predicates like base rows do.
     val m = meta
     val internalFields = requiredSchema.fields ++
       (m.keyCols ++ m.hash.flatMap(_.cols)).distinct
@@ -1926,6 +1929,20 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     val tbl = GraftTable.load(spark, m.location)
     val inner = org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
       spark, m.schema, internalSchema, filters)
+    // Columnar capability: `clean` routes pass the bare requiredSchema
+    // reader through when no delta slice attaches to them.
+    def overlay(tail: org.apache.spark.broadcast.Broadcast[MorOverlayInfo],
+        slices: Option[MorSlices], clean: Set[String]) =
+      new MorOverlayReaderFactory(inner, tail, slices,
+        columnar =
+          if (!GraftTable.columnarMorEnabled ||
+              !MorColumnarReader.supportsAll(internalSchema)) None
+          else Some(ColumnarMorSupport(
+            org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
+              spark, m.schema, requiredSchema, filters), clean)),
+        // key grouping + coordinate-less files: the single unkeyed split
+        // owns the one route every delta row was routed to
+        defaultRoute = if (kgBare) Some(GraftV2Scan.OrphanRoute) else None)
     // Flushed (ROUTED) delta files — written per tablet coordinate by
     // compactDeltas, the reference's DMS flush into per-rowset delta
     // stores (tablet/deltafile.h) — attach to their split directly from
@@ -2023,15 +2040,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         if (!routeDerivable) Set.empty
         else owned.filter(r => !r.startsWith("f:") &&
           r != GraftV2Scan.OrphanRoute && !dirty.contains(r))
-      val colSupport =
-        if (!GraftTable.columnarMorEnabled ||
-            !MorColumnarReader.supportsAll(internalSchema)) None
-        else Some(ColumnarMorSupport(
-          org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
-            spark, m.schema, requiredSchema, filters), clean))
-      if (routedD.isEmpty)
-        new MorOverlayReaderFactory(inner, info, colSupport)
-      else {
+      val slices = if (routedD.isEmpty) None else {
         // routed attachment: group the flushed files by the same route
         // strings the splits carry (routeOf — the writer's own partition
         // expressions); unowned routes fold into the fallback split.
@@ -2053,13 +2062,11 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         val deltaFactory = org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
           spark, StructType(m.schema.fields ++ opSeqFields),
           StructType(internalFields ++ opSeqFields), Array.empty)
-        new RoutedMorReaderFactory(inner, deltaFactory, types, keyIdx, outIdx,
-          identity, opIdx, opIdx + 1, routeParts, info,
-          defaultRoute = if (kgBare) Some(GraftV2Scan.OrphanRoute) else None,
-          columnar = colSupport,
-          localCache = spark.conf.getOption("graft.mor.spillCache")
-            .forall(_.toBoolean))
+        Some(MorSlices(deltaFactory, opIdx, Some(opIdx + 1), routeParts))
       }
+      // clean = tail-clean routes; under routed attachment a split is
+      // fully clean when additionally no flushed slice attaches to it
+      overlay(info, slices, clean)
     } else {
       // SHUFFLE-SPILL overlay: past the broadcast bound, the delta state is
       // shuffled BY ROUTE into per-route parquet spills; each split's
@@ -2215,17 +2222,14 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
       }.toMap
       val deltaFactory = org.apache.spark.sql.GraftSqlBridge
         .parquetReaderFactory(spark, spillSchema, spillSchema, Array.empty)
-      new SpillMorOverlayReaderFactory(inner, deltaFactory, types, keyIdx,
-        outIdx, identity, internalFields.length, routeParts,
-        // key grouping + coordinate-less files: the single unkeyed split
-        // reads the one slice every delta row was routed to
-        defaultRoute = if (kgBare) Some(GraftV2Scan.OrphanRoute) else None,
-        bare = if (!GraftTable.columnarMorEnabled ||
-            !MorColumnarReader.supportsAll(internalSchema)) None
-          else Some(org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
-            spark, m.schema, requiredSchema, filters)),
-        localCache = spark.conf.getOption("graft.mor.spillCache")
-          .forall(_.toBoolean))
+      // no tail: every delta row sits in its route's slice, so every
+      // owned route with no slice is clean (interval routing duplicates a
+      // delta into each candidate file's slice, so an empty slice proves
+      // no delta can touch the split's rows)
+      val noTail = spark.sparkContext.broadcast(MorOverlayInfo(
+        types, keyIdx, outIdx, identity, new java.util.HashSet[Seq[Any]](), Map.empty))
+      overlay(noTail, Some(MorSlices(deltaFactory, internalFields.length, None, routeParts)),
+        ownedSeq.toSet)
     }
   }
 }

@@ -10,12 +10,15 @@ import org.apache.spark.sql.types._
  * Merge-on-read overlay for the DSv2 batch scan: the per-partition analog
  * of the DSv1 path's "base ANTI-JOIN delta-keys ∪ latest-delta-rows"
  * (reference: DeltaApplier, tablet/delta_applier.h:52 — deltas applied over
- * each rowset at read). The latest delta state is broadcast (the delta
- * fileset is bounded by broadcastDeltaBytes before this path is taken);
- * each bucket's reader suppresses base rows whose key carries a delta and
- * appends the bucket's own upsert rows — routed by the SAME murmur3-pmod
- * arithmetic the writer bucketed with, so the reported key grouping (and
- * any storage-partitioned join built on it) stays exact.
+ * each rowset at read, whether they came from memory or a flushed delta
+ * file). Each split's reader suppresses base rows whose key carries a
+ * delta and appends the split's own upsert rows — routed by the SAME
+ * murmur3-pmod arithmetic the writer bucketed with, so the reported key
+ * grouping (and any storage-partitioned join built on it) stays exact.
+ * One factory ([[MorOverlayReaderFactory]]) serves every delta transport
+ * the planner picks (GraftV2Scan.createReaderFactory): a broadcast tail,
+ * per-tablet flushed delta files attached under that tail, or per-route
+ * shuffle spills.
  *
  * @param types    column types of the INTERNAL read schema (the required
  *                 columns plus any key columns pruned out of the projection)
@@ -36,22 +39,69 @@ case class MorOverlayInfo(
     dead: java.util.HashSet[Seq[Any]],
     upserts: Map[String, Array[Array[Any]]])
 
-/** Columnar capability for the broadcast overlay (S13 under mutation — the
+/** Columnar capability for the overlay (S13 under mutation — the
   * reference's scans stay columnar through delta application,
   * tablet/delta_applier.h): `bare` reads the CALLER's schema directly for
-  * clean routes, `clean` names the routes provably untouched by any delta
-  * row (computable only when the route is a pure function of the key
-  * columns — then a dead key's base row can only sit in the dead key's own
-  * route). Spark forbids mixing row and columnar partitions in one scan,
-  * so dirty routes serve batches too, via [[MorColumnarReader]]. */
+  * clean splits, `clean` names the routes provably untouched by any
+  * broadcast delta row (computable only when the route is a pure function
+  * of the key columns — then a dead key's base row can only sit in the
+  * dead key's own route). Spark forbids mixing row and columnar partitions
+  * in one scan, so dirty routes serve batches too, via
+  * [[MorColumnarReader]]. */
 case class ColumnarMorSupport(
     bare: PartitionReaderFactory,
     clean: Set[String])
 
+/**
+ * Per-route delta slices a split reads executor-side from parquet: the
+ * table's flushed per-tablet delta files (compactDeltas — the reference's
+ * DMS flush into per-rowset delta stores, tablet/deltafile.h) or the
+ * planner's per-route shuffle spill. Either way a split holds only its own
+ * tablet's deltas in memory, never the whole table's. Correctness rests on
+ * the planner's routing guards: a key's base rows and its delta slice
+ * always meet in the same split.
+ *
+ * @param opIdx      position of the op column in the slice schema (= number
+ *                   of internal data columns)
+ * @param seqIdx     position of the seq column; None for spill slices,
+ *                   which already hold the latest state per key
+ * @param routeParts route -> its slice's parquet paths. A split rebuilds its
+ *                   own file partition executor-side, so reads redirect
+ *                   through the executor-local slice cache
+ *                   (SpillLocalCache; slice files are immutable — commits
+ *                   only add new paths — so a local copy never goes stale)
+ */
+case class MorSlices(
+    deltaFactory: PartitionReaderFactory,
+    opIdx: Int,
+    seqIdx: Option[Int],
+    routeParts: Map[String, Seq[String]])
+
+/**
+ * The one merge-on-read reader factory. Each split's overlay is the
+ * broadcast `tail` merged over the split's own delta slice, if any. The
+ * slice folds to latest-per-key by (seq desc, op desc) and tail entries
+ * always win per key: a flush folded seqs ≤ its manifest seq, and every
+ * tail commit is newer. A split whose route has no slice reads `tail`
+ * itself, with no per-split copy.
+ *
+ * @param tail         broadcast overlay of the unrouted delta tail (its
+ *                     `dead` covers every tail key, so slice upserts it
+ *                     supersedes are suppressed); empty under spill
+ * @param slices       per-route delta slices (routed attach or spill)
+ * @param columnar     columnar capability; a split passes through `bare`
+ *                     when its route has no slice and is in `clean`
+ * @param defaultRoute the route of a coordinate-less split: set when the
+ *                     planner served a key-grouped layout with
+ *                     coordinate-less files as ONE unkeyed split, which
+ *                     then owns every delta row
+ */
 class MorOverlayReaderFactory(
     inner: PartitionReaderFactory,
-    info: Broadcast[MorOverlayInfo],
-    val columnar: Option[ColumnarMorSupport] = None) extends PartitionReaderFactory {
+    tail: Broadcast[MorOverlayInfo],
+    slices: Option[MorSlices] = None,
+    val columnar: Option[ColumnarMorSupport] = None,
+    defaultRoute: Option[String] = None) extends PartitionReaderFactory {
 
   private def routeOf(p: InputPartition): String = p match {
     // the COMPOSITE id (upserts are routed by the full bucketExpr fold);
@@ -59,15 +109,25 @@ class MorOverlayReaderFactory(
     case k: org.apache.spark.sql.GraftKeyedFilePartition => k.compositeBucket.toString
     // unreported-grouping layouts: the planner stamped the owned route
     case r: org.apache.spark.sql.GraftRoutedFilePartition => r.route
-    case _ => null // coordinate-less single partition: owns every upsert
+    // coordinate-less single partition: owns every upsert
+    case _ => defaultRoute.getOrElse {
+      if (slices.isDefined) throw new IllegalStateException(
+        "per-route delta slices require route-carrying splits")
+      null
+    }
   }
   private def ownsOf(p: InputPartition): Boolean = p match {
     case r: org.apache.spark.sql.GraftRoutedFilePartition => r.ownsDeltas
     case _ => true
   }
+  private def sliceOf(route: String): Option[Seq[String]] =
+    slices.flatMap(_.routeParts.get(route))
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    new MorOverlayReader(inner.createReader(p), info.value, routeOf(p), ownsOf(p))
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val route = routeOf(p)
+    val owns = ownsOf(p)
+    new MorOverlayReader(inner.createReader(p), infoFor(route, owns), route, owns)
+  }
 
   // Uniform across partitions (both delegates answer from schema + conf
   // alone) — Spark's scan exec requires all-or-nothing columnar.
@@ -79,171 +139,8 @@ class MorOverlayReaderFactory(
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val c = columnar.get
     val route = routeOf(p)
-    if (route != null && c.clean.contains(route))
+    if (route != null && sliceOf(route).isEmpty && c.clean.contains(route))
       c.bare.createColumnarReader(p) // pass-through: no probe, no key re-add
-    else
-      new MorColumnarReader(inner.createColumnarReader(p), info.value,
-        route, ownsOf(p))
-  }
-}
-
-/**
- * Shuffle-spill variant of the overlay, for delta sets past the broadcast
- * bound: the planner shuffled the latest delta state into one parquet spill
- * per route (GraftV2Scan.createReaderFactory), and each split's reader
- * drains ONLY its own route's spill into a local dead-set + upsert list
- * before serving base rows — per-tablet delta memory, never whole-table
- * (the reference's DeltaApplier posture, tablet/delta_applier.h:52).
- * Correctness rests on the planner's spillRoutable guard: every base file
- * carries the coordinate its route derives from, so a key's base rows and
- * its delta slice always meet in the same split.
- *
- * @param opIdx  position of the op column in the spill schema (= number of
- *               internal data columns)
- */
-class SpillMorOverlayReaderFactory(
-    inner: PartitionReaderFactory,
-    deltaFactory: PartitionReaderFactory,
-    types: Array[DataType],
-    keyIdx: Array[Int],
-    outIdx: Array[Int],
-    identity: Boolean,
-    opIdx: Int,
-    // route -> its spill slice's parquet paths (a split rebuilds its own
-    // file partition executor-side, so the paths can first be redirected
-    // through the executor-local slice cache)
-    routeParts: Map[String, Seq[String]],
-    // Set when the planner served a key-grouped layout with coordinate-less
-    // files as ONE unkeyed split: that split reads this (single) route's
-    // slice, which carries every delta row.
-    defaultRoute: Option[String] = None,
-    // bare requiredSchema reader — splits whose route has NO spill slice
-    // pass through it columnar (sound for every spill route kind: interval
-    // routing duplicates a delta into each candidate file's slice, so an
-    // empty slice proves no delta can touch this split's rows)
-    bare: Option[PartitionReaderFactory] = None,
-    // serve slice reads through SpillLocalCache (cfile/block_cache.h
-    // analog): repeat reads of a hot tablet hit executor-local disk
-    // instead of re-fetching the shared-FS spill. Captured at planning
-    // from `graft.mor.spillCache` (default true).
-    localCache: Boolean = true) extends PartitionReaderFactory {
-
-  private def routeOf(p: InputPartition): String = p match {
-    case k: org.apache.spark.sql.GraftKeyedFilePartition => k.compositeBucket.toString
-    case r: org.apache.spark.sql.GraftRoutedFilePartition => r.route
-    case _ => defaultRoute.getOrElse(throw new IllegalStateException(
-      "spill overlay requires route-carrying splits (spillRoutable guard)"))
-  }
-  private def ownsOf(p: InputPartition): Boolean = p match {
-    case r: org.apache.spark.sql.GraftRoutedFilePartition => r.ownsDeltas
-    case _ => true
-  }
-
-  /** Drain this route's spill slice into an overlay state (executor-side,
-    * per split — the per-tablet memory posture). */
-  private def infoFor(route: String, owns: Boolean): MorOverlayInfo = {
-    val dead = new java.util.HashSet[Seq[Any]]()
-    val ups = scala.collection.mutable.ArrayBuffer[Array[Any]]()
-    routeParts.get(route).foreach { paths0 =>
-      val paths = if (localCache) paths0.map(SpillLocalCache.localize) else paths0
-      val dp: InputPartition =
-        org.apache.spark.sql.GraftSqlBridge.filePartition(0, paths, None)
-      val dr = deltaFactory.createReader(dp)
-      try {
-        while (dr.next()) {
-          val r = dr.get().copy() // reader reuses its row buffer
-          dead.add(MorOverlay.keyOf(r, keyIdx, types))
-          if (owns && r.getUTF8String(opIdx).toString != graft.table.GraftTable.OpDelete)
-            ups += Array.tabulate(types.length)(i => r.get(i, types(i)))
-        }
-      } finally dr.close()
-    }
-    MorOverlayInfo(types, keyIdx, outIdx, identity, dead,
-      if (ups.isEmpty) Map.empty else Map(route -> ups.toArray))
-  }
-
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val route = routeOf(p)
-    val owns = ownsOf(p)
-    new MorOverlayReader(inner.createReader(p), infoFor(route, owns), route, owns)
-  }
-
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    bare.exists(b =>
-      b.supportColumnarReads(p) && inner.supportColumnarReads(p))
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val route = routeOf(p)
-    if (!routeParts.contains(route))
-      bare.get.createColumnarReader(p) // empty slice: clean pass-through
-    else {
-      val owns = ownsOf(p)
-      new MorColumnarReader(inner.createColumnarReader(p),
-        infoFor(route, owns), route, owns)
-    }
-  }
-}
-
-/**
- * Routed-attachment variant of the overlay: the table's flushed delta
- * files carry tablet coordinates (compactDeltas on a partitioned table —
- * the reference's DMS flush into per-rowset delta stores,
- * tablet/deltafile.h), so each split folds ITS OWN tablet's flushed
- * deltas straight from disk — no broadcast, no shuffle, at any flushed
- * size — and overlays the (small, broadcast) unrouted tail on top. Tail
- * entries always win per key: the flush folded seqs ≤ its manifest seq,
- * and every tail commit is newer.
- *
- * @param opIdx   position of the op column in the slice schema
- * @param seqIdx  position of the seq column in the slice schema
- * @param tail    broadcast overlay of the unrouted tail (its `dead` covers
- *                every tail key, so routed upserts it supersedes are
- *                suppressed; its per-route `upserts` emit as usual)
- */
-class RoutedMorReaderFactory(
-    inner: PartitionReaderFactory,
-    deltaFactory: PartitionReaderFactory,
-    types: Array[DataType],
-    keyIdx: Array[Int],
-    outIdx: Array[Int],
-    identity: Boolean,
-    opIdx: Int,
-    seqIdx: Int,
-    // route -> its flushed slice's parquet paths; the split rebuilds its
-    // file partition executor-side so reads can redirect through the
-    // executor-local slice cache (flushed files are immutable — commits
-    // only add new paths — so a local copy never staleness-races)
-    routeParts: Map[String, Seq[String]],
-    tail: Broadcast[MorOverlayInfo],
-    defaultRoute: Option[String] = None,
-    // Columnar capability: `clean` = routes the TAIL provably never
-    // touches (planner-computed, key-derivable layouts only); a split is
-    // fully clean when additionally no flushed slice attaches to it.
-    columnar: Option[ColumnarMorSupport] = None,
-    localCache: Boolean = true) extends PartitionReaderFactory {
-
-  private def routeOf(p: InputPartition): String = p match {
-    case k: org.apache.spark.sql.GraftKeyedFilePartition => k.compositeBucket.toString
-    case r: org.apache.spark.sql.GraftRoutedFilePartition => r.route
-    case _ => defaultRoute.getOrElse(throw new IllegalStateException(
-      "routed delta attachment requires route-carrying splits"))
-  }
-  private def ownsOf(p: InputPartition): Boolean = p match {
-    case r: org.apache.spark.sql.GraftRoutedFilePartition => r.ownsDeltas
-    case _ => true
-  }
-
-  override def supportColumnarReads(p: InputPartition): Boolean =
-    columnar.exists(c =>
-      c.bare.supportColumnarReads(p) && inner.supportColumnarReads(p))
-
-  override def createColumnarReader(p: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val c = columnar.get
-    val route = routeOf(p)
-    if (!routeParts.contains(route) && c.clean.contains(route))
-      c.bare.createColumnarReader(p) // no flushed slice, tail-clean route
     else {
       val owns = ownsOf(p)
       new MorColumnarReader(inner.createColumnarReader(p),
@@ -251,52 +148,49 @@ class RoutedMorReaderFactory(
     }
   }
 
-  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
-    val route = routeOf(p)
-    val owns = ownsOf(p)
-    new MorOverlayReader(inner.createReader(p), infoFor(route, owns), route, owns)
-  }
+  /** This split's overlay: the broadcast tail, or (executor-side, per
+    * split) the split's slice folded to latest-per-key with the tail
+    * merged on top. */
+  private def infoFor(route: String, owns: Boolean): MorOverlayInfo =
+    sliceOf(route).fold(tail.value)(foldSlice(route, owns, _))
 
-  /** Fold this split's flushed slice to latest-per-key and merge the
-    * broadcast tail on top (tail always wins per key). */
-  private def infoFor(route: String, owns: Boolean): MorOverlayInfo = {
+  private def foldSlice(route: String, owns: Boolean,
+      paths: Seq[String]): MorOverlayInfo = {
     val t = tail.value
+    val s = slices.get
     val opDelete = graft.table.GraftTable.OpDelete
-    // fold the split's flushed slice to latest-per-key — same (seq desc,
-    // op desc) tie-break as latestDeltas ("U" > "D": the upsert wins)
-    val best = new java.util.HashMap[Seq[Any], (Long, String, Array[Any])]()
-    routeParts.get(route).foreach { paths0 =>
-      val paths = if (localCache) paths0.map(SpillLocalCache.localize) else paths0
-      val dp: InputPartition =
-        org.apache.spark.sql.GraftSqlBridge.filePartition(0, paths, None)
-      val dr = deltaFactory.createReader(dp)
-      try {
-        while (dr.next()) {
-          val r = dr.get().copy() // reader reuses its row buffer
-          val key = MorOverlay.keyOf(r, keyIdx, types)
-          val seq = r.getLong(seqIdx)
-          val op = r.getUTF8String(opIdx).toString
-          val cur = best.get(key)
-          if (cur == null || seq > cur._1 || (seq == cur._1 && op > cur._2)) {
-            val row =
-              if (op == opDelete) null
-              else Array.tabulate(types.length)(i => r.get(i, types(i)))
-            best.put(key, (seq, op, row))
-          }
+    // same (seq desc, op desc) tie-break as latestDeltas ("U" > "D": the
+    // upsert wins); a spill slice carries no seq, so only the op decides
+    // between a key's owner row and its dead-set-only duplicate
+    val best = new java.util.LinkedHashMap[Seq[Any], (Long, String, Array[Any])]()
+    val dp: InputPartition = org.apache.spark.sql.GraftSqlBridge.filePartition(
+      0, paths.map(SpillLocalCache.localize), None)
+    val dr = s.deltaFactory.createReader(dp)
+    try {
+      while (dr.next()) {
+        val r = dr.get().copy() // reader reuses its row buffer
+        val key = MorOverlay.keyOf(r, t.keyIdx, t.types)
+        val seq = s.seqIdx.fold(0L)(r.getLong)
+        val op = r.getUTF8String(s.opIdx).toString
+        val cur = best.get(key)
+        if (cur == null || seq > cur._1 || (seq == cur._1 && op > cur._2)) {
+          val row =
+            if (op == opDelete) null
+            else Array.tabulate(t.types.length)(i => r.get(i, t.types(i)))
+          best.put(key, (seq, op, row))
         }
-      } finally dr.close()
-    }
+      }
+    } finally dr.close()
     val dead = new java.util.HashSet[Seq[Any]](t.dead)
     val ups = scala.collection.mutable.ArrayBuffer[Array[Any]]()
     best.forEach { (k, v) =>
       dead.add(k)
       // a tail entry (upsert OR tombstone) for this key is newer than the
-      // flushed winner — the flushed upsert must not emit
+      // slice's winner — the slice upsert must not emit
       if (owns && v._2 != opDelete && !t.dead.contains(k)) ups += v._3
     }
     t.upserts.get(route).foreach(a => ups ++= a)
-    MorOverlayInfo(types, keyIdx, outIdx, identity, dead,
-      if (ups.isEmpty) Map.empty else Map(route -> ups.toArray))
+    t.copy(dead = dead, upserts = if (ups.isEmpty) Map.empty else Map(route -> ups.toArray))
   }
 }
 

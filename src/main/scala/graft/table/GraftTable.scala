@@ -59,18 +59,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     if (m.hasAutoInc) full.select(m.visibleColumns.map(c => col(c.name)): _*) else full
   }
 
-  /** Version manifest read with a clear error below the history mark —
-    * and an honest one for versions that never existed (v < 1 is a caller
-    * bug, not retention). */
-  private def readVersion(v: Long): TableMeta = {
-    if (v < 1) throw new IllegalArgumentException(
-      s"invalid snapshot version $v (versions start at 1)")
-    val floor = meta.historyFloor
-    if (v < floor) throw new IllegalArgumentException(
-      s"version $v expired: history retained from v$floor " +
-        s"(expireVersions ran; the ancient-history-mark analog)")
-    TableMeta.read(location, v)
-  }
+  /** Version manifest read, history-floor-checked (TableMeta.readRetained). */
+  private def readVersion(v: Long): TableMeta =
+    TableMeta.readRetained(location, v, meta.historyFloor)
 
   def scan(): DataFrame = scan(None)
 
@@ -227,25 +218,30 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * reader, sources/v2/MorOverlay.scala). */
   private[graft] def latestDeltas(m: TableMeta, deltaFiles: Seq[DataFileMeta]): DataFrame = {
     val deltas = dropMaskDelta(m, readFileGroup(m, deltaFiles, delta = true))
-    // size the fold's exchange by the delta bytes actually read (same
-    // derivation as changesSince): the window otherwise shuffles into the
-    // session constant — wasteful width for the usual small tail whether
-    // or not AQE is on to re-coalesce it. The explicit hash repartition
-    // satisfies the window's required distribution, so the exchange COUNT
-    // is unchanged.
-    val foldParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
-      (GraftTable.deltaBytes(deltaFiles) + GraftTable.CdcFoldTargetBytes - 1) /
-        GraftTable.CdcFoldTargetBytes)).toInt
     // OpCol breaks same-seq ties deterministically ("U" > "D": the upsert
     // wins) — reachable only when one commit carries both a tombstone and
     // an upsert for a key (SQL MERGE deleting key A while inserting A)
     val w = Window.partitionBy(m.keyCols.map(col): _*)
       .orderBy(col(SeqCol).desc, col(OpCol).desc)
-    deltas.repartition(foldParts, m.keyCols.map(col): _*)
+    deltas.repartition(foldPartitions(deltaFiles), m.keyCols.map(col): _*)
       .withColumn(RnCol, row_number().over(w))
       .filter(col(RnCol) === 1).drop(RnCol)
   }
+
+  /** Exchange width for a per-key fold over `files`: one partition per
+    * CdcFoldTargetBytes of the delta bytes actually read, capped at the
+    * session's shuffle partitions so a backfill-sized fold still spreads
+    * cluster-wide. The fold otherwise shuffles into the session constant —
+    * wasteful width for the usual small tail, which a caller's persist()
+    * then pins for every downstream pass (AQE does not re-coalesce cached
+    * plans). The explicit hash repartition on the key columns satisfies
+    * the window's (or distinct's) required distribution, so this changes
+    * the exchange's partition COUNT, never adds one. */
+  private def foldPartitions(files: Seq[DataFileMeta]): Int =
+    math.max(1L, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
+      (GraftTable.deltaBytes(files) + GraftTable.CdcFoldTargetBytes - 1) /
+        GraftTable.CdcFoldTargetBytes)).toInt
 
   /** Reads a set of files, remapping physical→current logical names per
     * schema generation (GetMappedReadProjection analog, common/schema.cc) and
@@ -419,27 +415,11 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(m2.visibleColumns.map(_.toField.copy(nullable = true)) :+
           StructField(DeletedCol, BooleanType, nullable = false)))
-    // Size the per-key fold's exchange by the DELTA bytes actually in
-    // range, not the session's shuffle-partition constant: a CDC window is
-    // usually a sliver of the table (often one commit), and the window fold
-    // below otherwise shuffles into spark.sql.shuffle.partitions tasks —
-    // which a caller's persist() then pins for every downstream pass
-    // (AQE does not re-coalesce cached plans). The explicit hash
-    // repartition on the key columns satisfies the window's required
-    // distribution, so this changes the exchange's partition COUNT, never
-    // adds one; capped at the session setting so a backfill-sized window
-    // still spreads cluster-wide.
-    val deltaBytes = inRange.map(f => fileSize(f.path)).sum
-    val foldParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
-      (deltaBytes + GraftTable.CdcFoldTargetBytes - 1) /
-        GraftTable.CdcFoldTargetBytes)).toInt
-    val deltas = readFileGroup(m2, inRange, delta = true)
-      .repartition(foldParts, m2.keyCols.map(col): _*)
-    val w = Window.partitionBy(m2.keyCols.map(col): _*)
-      .orderBy(col(SeqCol).desc, col(OpCol).desc) // same tie-break as latestDeltas
-    val latest = deltas.withColumn(RnCol, row_number().over(w))
-      .filter(col(RnCol) === 1)
+    // the per-key fold sized by the in-range delta bytes (a CDC window is
+    // usually a sliver of the table, often one commit). latestDeltas' drop
+    // mask is a no-op here: the fast path requires equal drop lists, so
+    // every drop predates v1, which is below every in-range seq.
+    val latest = latestDeltas(m2, inRange)
     // ghost dedup: only emit deletes for keys that existed at v1 — through
     // a scan PRUNED to the key interval the in-range delta files record
     // (every touched key lies within some delta file's [keyLo, keyHi], so
@@ -512,17 +492,10 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(cols.map(n =>
           m2.column(n).toField.copy(nullable = true))))
-    // same delta-byte-derived exchange sizing as [[changesSince]]: the
-    // distinct's exchange inherits the session shuffle-partition constant
-    // otherwise, and callers persist() this frame (pinning the count for
-    // every downstream pass over a usually-tiny touched-key set)
-    val deltaBytes = inRange.map(f => fileSize(f.path)).sum
-    val nParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
-      (deltaBytes + GraftTable.CdcFoldTargetBytes - 1) /
-        GraftTable.CdcFoldTargetBytes)).toInt
+    // callers persist() this frame: size its distinct's exchange by the
+    // in-range delta bytes (foldPartitions)
     readFileGroup(m2, inRange, delta = true).select(cols.map(col): _*)
-      .repartition(nParts, cols.map(col): _*).distinct()
+      .repartition(foldPartitions(inRange), cols.map(col): _*).distinct()
   }
 
   // --------------------------------------------------------------- write
@@ -1238,20 +1211,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       if (!tailOnly) (Nil, m.deltaFiles)
       else m.deltaFiles.partition(f => f.bucket.isDefined || f.rangeKey.isDefined)
     if (fold.size <= 1) return
-    // fold-width from the manifest bytes actually folded (same derivation
-    // as latestDeltas); the explicit hash repartition satisfies the
-    // window's required distribution — exchange count unchanged
     val foldBytes = GraftTable.deltaBytes(fold)
-    val foldParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
-      (foldBytes + GraftTable.CdcFoldTargetBytes - 1) /
-        GraftTable.CdcFoldTargetBytes)).toInt
-    val deltas = dropMaskDelta(m, readFileGroup(m, fold, delta = true))
-      .repartition(foldParts, m.keyCols.map(col): _*)
-    val w = Window.partitionBy(m.keyCols.map(col): _*)
-      .orderBy(col(SeqCol).desc, col(OpCol).desc) // same tie-break as latestDeltas
-    val latest = deltas.withColumn(RnCol, row_number().over(w))
-      .filter(col(RnCol) === 1).drop(RnCol)
+    val latest = latestDeltas(m, fold)
     val v = m.version + 1
     val dir = Paths.get(location, "data",
       s"c${v}_deltamerge_${java.util.UUID.randomUUID().toString.take(8)}").toString
@@ -1333,19 +1294,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val m = meta
     val tail = m.deltaFiles.filter(f => f.bucket.isEmpty && f.rangeKey.isEmpty)
     if (tail.size < math.max(2, minFiles)) return false
-    // the streaming tail is small — collapse to one file per ~128 MB, and
-    // size the fold window's exchange by the same bytes
+    // the streaming tail is small — collapse to one file per ~128 MB
     val tailBytes = tail.map(f => GraftTable.fileSize(f.path)).sum
-    val foldParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
-      (tailBytes + GraftTable.CdcFoldTargetBytes - 1) /
-        GraftTable.CdcFoldTargetBytes)).toInt
-    val deltas = dropMaskDelta(m, readFileGroup(m, tail, delta = true))
-      .repartition(foldParts, m.keyCols.map(col): _*)
-    val w = Window.partitionBy(m.keyCols.map(col): _*)
-      .orderBy(col(SeqCol).desc, col(OpCol).desc) // latestDeltas tie-break
-    val latest = deltas.withColumn(RnCol, row_number().over(w))
-      .filter(col(RnCol) === 1).drop(RnCol)
+    val latest = latestDeltas(m, tail)
     val v = m.version + 1
     val dir = Paths.get(location, "data",
       s"c${v}_deltamerge_tail_${java.util.UUID.randomUUID().toString.take(8)}").toString
@@ -2760,7 +2711,7 @@ object GraftTable {
   }
 
   /** Columnar merge-on-read toggle (`graft.mor.columnar`, default true):
-    * when false the V2 overlay factories serve row-based readers only —
+    * when false the V2 overlay factory serves row-based readers only —
     * a safety valve, and the A/B knob the columnar win was measured with. */
   def columnarMorEnabled: Boolean =
     org.apache.spark.sql.SparkSession.active.conf

@@ -22,9 +22,30 @@ class AdaptiveTransportSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private def factoryOf(t: GraftTable) =
-    new graft.sources.v2.GraftV2Scan(t.meta, t.scan().schema, Array.empty)
-      .createReaderFactory()
+  /** Builds a V2 scan's merge-on-read reader factory over `t` and returns
+    * the delta files the scan reports per transport, read off its own
+    * driver metrics: (broadcast, attached, spilled). */
+  private def transportOf(t: GraftTable,
+      filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
+      : (Long, Long, Long) = {
+    val scan = new graft.sources.v2.GraftV2Scan(t.meta, t.scan().schema, filters)
+    val f = scan.createReaderFactory()
+    assert(f.isInstanceOf[graft.sources.v2.MorOverlayReaderFactory],
+      s"expected the merge-on-read overlay factory, got $f")
+    val m = scan.reportDriverMetrics().map(c => c.name() -> c.value()).toMap
+    import graft.sources.v2.GraftV2Scan.{DeltasAttached, DeltasBroadcast, DeltasSpilled}
+    (m(DeltasBroadcast), m(DeltasAttached), m(DeltasSpilled))
+  }
+  private def assertBroadcast(t: GraftTable,
+      filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty): Unit = {
+    val tr @ (b, a, s) = transportOf(t, filters)
+    assert(b > 0 && a == 0 && s == 0, s"expected the broadcast transport, got $tr")
+  }
+  private def assertSpill(t: GraftTable): Unit = {
+    val tr @ (b, a, s) = transportOf(t)
+    assert(b == 0 && a == 0 && s == t.meta.deltaFiles.length,
+      s"expected the spill transport, got $tr")
+  }
 
   private def assertNoGraftConf(): Unit =
     assert(spark.conf.getOption("graft.mor.broadcastBytes").isEmpty)
@@ -36,7 +57,7 @@ class AdaptiveTransportSpec extends AnyFunSuite {
     val t = GraftTable.create(spark, s"$wh/t1", "t1", df.schema, Seq("k"),
       Seq(HashComponent(Seq("k"), 4)), data = Some(df))
     t.upsert(Seq((1L, "u1"), (2L, "u2")).toDF("k", "v"))
-    assert(factoryOf(t).isInstanceOf[graft.sources.v2.MorOverlayReaderFactory])
+    assertBroadcast(t)
   }
 
   test("delta past the session's broadcast appetite: spill chosen") {
@@ -56,7 +77,7 @@ class AdaptiveTransportSpec extends AnyFunSuite {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
       assert(GraftTable.deltaBytes(t.meta.deltaFiles) > 64L * 1024,
         s"test delta too small: ${GraftTable.deltaBytes(t.meta.deltaFiles)}")
-      assert(factoryOf(t).isInstanceOf[graft.sources.v2.SpillMorOverlayReaderFactory])
+      assertSpill(t)
       // and the read is exact through the spill
       val got = spark.read.format("graft").load(s"$wh/t2")
       assert(got.count() == 500)
@@ -66,7 +87,7 @@ class AdaptiveTransportSpec extends AnyFunSuite {
     }
     // with the session's default appetite restored, the SAME table
     // broadcasts again — the decision is per scan, not per table
-    assert(factoryOf(t).isInstanceOf[graft.sources.v2.MorOverlayReaderFactory])
+    assertBroadcast(t)
   }
 
   test("flushed deltas: routed-attach chosen at any size, no conf") {
@@ -79,7 +100,8 @@ class AdaptiveTransportSpec extends AnyFunSuite {
     t.delete(Seq(Tuple1(390L)).toDF("k"))
     t.compactDeltas() // flush -> tablet-routed delta files
     t.upsert(Seq((5L, "tail")).toDF("k", "v"))
-    assert(factoryOf(t).isInstanceOf[graft.sources.v2.RoutedMorReaderFactory])
+    val tr @ (_, attached, spilled) = transportOf(t)
+    assert(attached > 0 && spilled == 0, s"expected routed attachment, got $tr")
     val v2 = GraftTable.load(spark, s"$wh/t3").scan()
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(v2.size == 399 && v2(5L) == "tail" && v2(1L) == "u1" &&
@@ -103,14 +125,12 @@ class AdaptiveTransportSpec extends AnyFunSuite {
       val full = GraftTable.deltaBytes(t.meta.deltaFiles)
       assert(full > 64L * 1024, s"test delta too small: $full")
       // unfiltered: past the bound -> spill
-      assert(factoryOf(t).isInstanceOf[graft.sources.v2.SpillMorOverlayReaderFactory])
+      assertSpill(t)
       // a first-PK-column point predicate prunes the tail to ~1/8 by the
       // recorded delta-file key bounds; the pruned slice fits -> broadcast
-      val sel = new graft.sources.v2.GraftV2Scan(t.meta, t.scan().schema,
-        Array(org.apache.spark.sql.sources.EqualTo("k", 7L)))
-        .createReaderFactory()
-      assert(sel.isInstanceOf[graft.sources.v2.MorOverlayReaderFactory],
-        s"selective scan should broadcast its pruned tail, got $sel")
+      val point: Array[org.apache.spark.sql.sources.Filter] =
+        Array(org.apache.spark.sql.sources.EqualTo("k", 7L))
+      assertBroadcast(t, point) // the selective scan broadcasts its pruned tail
     } finally before match {
       case Some(v) => spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
       case None => spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")

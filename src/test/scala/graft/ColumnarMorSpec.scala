@@ -37,6 +37,38 @@ class ColumnarMorSpec extends AnyFunSuite {
       s"expected a columnar scan under the MOR overlay:\n$plan")
   }
 
+  /** The same V2 read served by the ROW overlay readers
+    * (`graft.mor.columnar=false`) — the reference the columnar readers
+    * must agree with, checked on every delta transport. */
+  private def rowStateOf(table: String): Map[Long, String] = {
+    spark.conf.set("graft.mor.columnar", "false")
+    try {
+      val df = spark.table(table)
+      df.queryExecution.toRdd.count()
+      val plan = df.queryExecution.explainString(
+        org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      assert(!plan.contains("ColumnarToRow"),
+        s"graft.mor.columnar=false must serve rows:\n$plan")
+      stateOf(df)
+    } finally spark.conf.unset("graft.mor.columnar")
+  }
+
+  /** The reader factory of a fresh V2 scan over `t`, with the scan's own
+    * transport counters proving the broadcast overlay was chosen. */
+  private def broadcastFactory(t: GraftTable)
+      : graft.sources.v2.MorOverlayReaderFactory = {
+    val scan = new graft.sources.v2.GraftV2Scan(t.meta, t.scan().schema, Array.empty)
+    val fac = scan.createReaderFactory()
+    val m = scan.reportDriverMetrics().map(c => c.name() -> c.value()).toMap
+    import graft.sources.v2.GraftV2Scan.{DeltasAttached, DeltasBroadcast, DeltasSpilled}
+    assert(m(DeltasBroadcast) > 0 && m(DeltasAttached) == 0 &&
+      m(DeltasSpilled) == 0, s"expected the broadcast transport: $m")
+    fac match {
+      case f: graft.sources.v2.MorOverlayReaderFactory => f
+      case other => fail(s"expected the merge-on-read overlay factory: $other")
+    }
+  }
+
   test("delta-carrying hash table serves columnar batches, matches DSv1") {
     val wh = Files.createTempDirectory("graft-cmor1-").toString
     val df = (1 to 400).map(i => (i.toLong, s"a$i")).toDF("k", "v")
@@ -53,6 +85,7 @@ class ColumnarMorSpec extends AnyFunSuite {
     assert(v2 == stateOf(t.scan()))
     assert(v2.size == 390 && v2(1L) == "u1" && v2(200L) == "a200" &&
       v2(900L) == "new" && !v2.contains(395L))
+    assert(rowStateOf("gcm1.c1") == stateOf(t.scan()))
   }
 
   test("key-pruning projection (identity=false) stays columnar and exact") {
@@ -132,6 +165,7 @@ class ColumnarMorSpec extends AnyFunSuite {
       val v2 = stateOf(v2df)
       assert(v2 == stateOf(t.scan()))
       assert(v2.size == 199 && v2(1L) == "u1" && !v2.contains(190L))
+      assert(rowStateOf("gcm6.c6") == stateOf(t.scan()))
     } finally spark.conf.unset("graft.mor.broadcastBytes")
   }
 
@@ -152,6 +186,7 @@ class ColumnarMorSpec extends AnyFunSuite {
     assert(v2 == stateOf(t.scan()))
     assert(v2.size == 199 && v2(1L) == "u1" && v2(2L) == "tail" &&
       !v2.contains(150L))
+    assert(rowStateOf("gcm7.c7") == stateOf(t.scan()))
   }
 
   test("every atomic type survives the dirty-batch copy and upsert batch") {
@@ -229,15 +264,9 @@ class ColumnarMorSpec extends AnyFunSuite {
     // the untouched buckets are CLEAN: their splits take the bare
     // pass-through reader (no probe, no key re-add). Asserted on the
     // factory itself — the pass-through has no observable plan shape.
-    val fac = new graft.sources.v2.GraftV2Scan(t.meta,
-      t.scan().schema, Array.empty).createReaderFactory()
-    fac match {
-      case f: graft.sources.v2.MorOverlayReaderFactory =>
-        val clean = f.columnar.get.clean
-        assert(clean == (0 until 4).map(_.toString).toSet - hot.toString,
-          s"expected all buckets but $hot clean, got $clean")
-      case other => fail(s"expected the broadcast overlay factory: $other")
-    }
+    val clean = broadcastFactory(t).columnar.get.clean
+    assert(clean == (0 until 4).map(_.toString).toSet - hot.toString,
+      s"expected all buckets but $hot clean, got $clean")
   }
 
   test("type outside the columnar writer's set falls back to row overlay") {
@@ -262,12 +291,7 @@ class ColumnarMorSpec extends AnyFunSuite {
     assert(v2 == stateOf(t.scan().select(col("k"), col("v"))))
     assert(v2.size == 119 && v2(1L) == "up" && !v2.contains(2L))
     // and the factory must not offer a columnar path at all
-    val fac = new graft.sources.v2.GraftV2Scan(t.meta,
-      t.scan().schema, Array.empty).createReaderFactory()
-    fac match {
-      case f: graft.sources.v2.MorOverlayReaderFactory =>
-        assert(f.columnar.isEmpty, "columnar gate must decline interval columns")
-      case other => fail(s"expected the broadcast overlay factory: $other")
-    }
+    assert(broadcastFactory(t).columnar.isEmpty,
+      "columnar gate must decline interval columns")
   }
 }

@@ -120,15 +120,6 @@ class MorSpillCacheSpec extends AnyFunSuite {
       assert(after.size == 301 && after(700L) == "late")
       assert(cache.misses.get() > m2,
         "a new version's slices must re-enter the cache cold")
-
-      // disabled by conf: the counters freeze
-      spark.conf.set("graft.mor.spillCache", "false")
-      try {
-        val (m3, h3) = (cache.misses.get(), cache.hits.get())
-        assert(state() == after)
-        assert(cache.misses.get() == m3 && cache.hits.get() == h3,
-          "graft.mor.spillCache=false must bypass the local cache")
-      } finally spark.conf.unset("graft.mor.spillCache")
     }
   }
 

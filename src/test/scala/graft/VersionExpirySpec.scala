@@ -39,6 +39,7 @@ class VersionExpirySpec extends AnyFunSuite {
     t.compact() // v4: fresh base — v1's base + v2/v3 deltas now superseded
     t.upsert(Seq((200L, -5)).toDF("k", "v")) // v5
     val before = dataFiles(loc)
+    val ts2 = graft.catalog.TableMeta.read(loc, 2L).timestampMs
     val vHead = t.currentVersion
     assert(vHead == 5)
 
@@ -71,6 +72,26 @@ class VersionExpirySpec extends AnyFunSuite {
     assert(t.scan(Some(4L)).count() == 299)
     val err = intercept[IllegalArgumentException](t.scan(Some(2L)).count())
     assert(err.getMessage.contains("expired"))
+    // every other time-travel face hits the same floor check: SQL VERSION
+    // AS OF / TIMESTAMP AS OF and the format reader's snapshot options
+    def assertExpired(read: => Any): Unit = {
+      val e = intercept[Exception](read)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).toSeq
+      assert(msgs.exists(m => m != null &&
+        m.contains("expired: history retained from v4")), msgs.mkString(" <- "))
+    }
+    val dir = Paths.get(loc)
+    spark.conf.set("spark.sql.catalog.gexpaof", classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gexpaof.warehouse", dir.getParent.toString)
+    val sqlName = s"gexpaof.`${dir.getFileName}`"
+    assert(spark.sql(s"SELECT * FROM $sqlName VERSION AS OF 4").count() == 299)
+    assertExpired(spark.sql(s"SELECT * FROM $sqlName VERSION AS OF 2").count())
+    assertExpired(spark.sql(
+      s"SELECT * FROM $sqlName TIMESTAMP AS OF timestamp_millis(${ts2}L)").count())
+    def fmt = spark.read.format("graft").option("graft.table.path", loc)
+    assertExpired(fmt.option("graft.snapshotVersion", "2").load().count())
+    assertExpired(fmt.option("graft.snapshotTimestampMs", ts2.toString).load().count())
     // CDC above the floor works; spanning it errors
     assert(t.changesSince(4L, 5L).count() == 1)
     intercept[IllegalArgumentException](t.changes(2L, 5L))
