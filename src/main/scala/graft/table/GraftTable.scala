@@ -1818,7 +1818,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       s"non-nullable column $colName requires a default (existing rows must read something)")
     val used = m.columns.map(_.physName).toSet ++ m.retiredPhysNames
     val phys = if (used.contains(colName)) s"${colName}_cid${m.nextColId}" else colName
-    val cm = ColumnMeta(m.nextColId, colName, phys, dataType.json, nullable,
+    val cm = ColumnMeta(m.nextColId, colName, phys, nullableNested(dataType).json, nullable,
       isKey = false, defaultValue = default)
     bumpMeta(m.copy(columns = m.columns :+ cm, nextColId = m.nextColId + 1), "add_column")
   }
@@ -3309,7 +3309,7 @@ object GraftTable {
     // the hidden auto_incrementing_id appended (common/schema.h:263-264).
     val ordered = keys.map(k => schema(k)) ++ schema.fields.filterNot(f => keys.contains(f.name))
     val base = ordered.zipWithIndex.map { case (f, i) =>
-      ColumnMeta(i, f.name, f.name, f.dataType.json,
+      ColumnMeta(i, f.name, f.name, nullableNested(f.dataType).json,
         nullable = f.nullable && !keys.contains(f.name), isKey = keys.contains(f.name))
     }
     if (!nonUniqueKey) base.toSeq
@@ -3321,6 +3321,19 @@ object GraftTable {
       val (ks, nks) = visible.partition(_.isKey)
       ks ++ Seq(auto) ++ nks
     }
+  }
+
+  /** `dt` with every nested element, map value and struct field nullable
+    * — what a parquet read yields for any file. A manifest recording the
+    * non-null form (e.g. `Seq(Array(1f)).toDF`'s `array<float>` without
+    * null elements) could never cast its own reads back to it. */
+  private[graft] def nullableNested(dt: DataType): DataType = dt match {
+    case ArrayType(e, _) => ArrayType(nullableNested(e), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(nullableNested(k), nullableNested(v), valueContainsNull = true)
+    case StructType(fs) => StructType(fs.map(f =>
+      f.copy(dataType = nullableNested(f.dataType), nullable = true)))
+    case other => other
   }
 
   /** Deterministic initial auto-id assignment for a bulk load: per-user-key

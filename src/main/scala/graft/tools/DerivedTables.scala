@@ -1,6 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.table.GraftTable
 
@@ -15,7 +18,8 @@ import graft.table.GraftTable
  * runs when an operator remembers to CALL it is the same gap the delta
  * backstop closed for base tables — so [[graft.table.MaintenanceScheduler]]
  * ticks call this per table, and warehouse ticks sweep it across every
- * table under the directory.
+ * table under the directory. Every kind's refresh runs the one protocol in
+ * [[refresh]]; a kind supplies only its change frame and derivation.
  */
 object DerivedTables {
 
@@ -81,6 +85,27 @@ object DerivedTables {
   private[graft] def deregister(sourceLoc: String, derivedLoc: String): Unit =
     java.nio.file.Files.deleteIfExists(regFile(sourceLoc, derivedLoc))
 
+  /** One maintained kind: the properties that mark a table as one (its
+    * source location and source-version watermark) and its refresh. */
+  private final case class Kind(srcLocKey: String, srcVersionKey: String,
+      refresh: (SparkSession, GraftTable) => Boolean)
+
+  private val kinds = Seq(
+    Kind(MaterializedRollup.SrcLocKey, MaterializedRollup.SrcVersionKey,
+      MaterializedRollup.refresh(_, _)),
+    Kind(SecondaryIndex.SrcLocKey, SecondaryIndex.SrcVersionKey,
+      SecondaryIndex.refresh(_, _)),
+    Kind(VectorIndex.SrcLocKey, VectorIndex.SrcVersionKey,
+      VectorIndex.refresh(_, _)))
+
+  private def kindOf(props: Map[String, String]): Option[Kind] =
+    kinds.find(k => props.contains(k.srcLocKey))
+
+  /** The absolute normalized spelling of a table location: a trailing
+    * slash, a relative path or a `..` segment names the same table. */
+  private def canonical(location: String): String =
+    java.nio.file.Paths.get(location).toAbsolutePath.normalize.toString
+
   /** The source-version watermark `derivedLoc` still needs, IF it exists
     * and its forward pointer names `sourceLoc` (a dropped derived table, or
     * one rebuilt against another source, yields None — the caller should
@@ -89,13 +114,8 @@ object DerivedTables {
       sourceLoc: String): Option[Long] = {
     if (!graft.catalog.TableMeta.exists(derivedLoc)) return None
     val p = graft.catalog.TableMeta.readCurrent(derivedLoc).propsMap
-    val fwd = p.get(MaterializedRollup.SrcLocKey)
-      .orElse(p.get(SecondaryIndex.SrcLocKey))
-      .orElse(p.get(VectorIndex.SrcLocKey))
-    if (!fwd.contains(sourceLoc)) return None
-    p.get(MaterializedRollup.SrcVersionKey)
-      .orElse(p.get(SecondaryIndex.SrcVersionKey))
-      .orElse(p.get(VectorIndex.SrcVersionKey))
+    kindOf(p).filter(k => canonical(p(k.srcLocKey)) == canonical(sourceLoc))
+      .flatMap(k => p.get(k.srcVersionKey))
       .flatMap(v => scala.util.Try(v.toLong).toOption)
   }
 
@@ -107,20 +127,16 @@ object DerivedTables {
     * write their watermarks in the other — leaving the table marked
     * CURRENT while rows recomputed against the earlier snapshot overwrote
     * the newer ones (stale-but-current, the one state a refresh-or-miss
-    * serving layer must never reach). Every refresh path serializes on
-    * this per-location monitor; single-driver posture, same as the
+    * serving layer must never reach). Every refresh serializes on this
+    * per-location monitor, keyed by the canonical location so two
+    * spellings of one table share it; single-driver posture, same as the
     * scheduler registry. Never nests: a chained rollup's refresh only
     * SCANS its source, it never refreshes it. */
-  private[graft] def lockFor(location: String): Object =
-    locks.computeIfAbsent(location, _ => new Object)
+  private def lockFor(location: String): Object =
+    locks.computeIfAbsent(canonical(location), _ => new Object)
 
   /** Whether `t`'s properties mark it as a maintained derived table. */
-  def isDerived(t: GraftTable): Boolean = {
-    val p = t.properties
-    p.contains(MaterializedRollup.SrcLocKey) ||
-      p.contains(SecondaryIndex.SrcLocKey) ||
-      p.contains(VectorIndex.SrcLocKey)
-  }
+  def isDerived(t: GraftTable): Boolean = kindOf(t.properties).nonEmpty
 
   /** Refresh `t` if it is a derived table whose source version moved past
     * the recorded watermark. Returns true when a refresh ran (a current
@@ -128,14 +144,172 @@ object DerivedTables {
     * underlying refresh throws — e.g. a cleanly-worded history-expiry
     * error when the source GC'd past the watermark (rebuild is the only
     * remedy; the scheduler records it as the tick's lastError). */
-  def refreshIfStale(spark: SparkSession, t: GraftTable): Boolean = {
-    val p = t.properties
-    if (p.contains(MaterializedRollup.SrcLocKey))
-      MaterializedRollup.refresh(spark, t)
-    else if (p.contains(SecondaryIndex.SrcLocKey))
-      SecondaryIndex.refresh(spark, t)
-    else if (p.contains(VectorIndex.SrcLocKey))
-      VectorIndex.refresh(spark, t)
-    else false
+  def refreshIfStale(spark: SparkSession, t: GraftTable): Boolean =
+    kindOf(t.properties).exists(_.refresh(spark, t))
+
+  /** What one kind supplies for a refresh window: the window's change
+    * frame (one row per changed key, carrying `keyCols`), the source
+    * columns those keys address, the source version the keyed read pins
+    * (`Some(v0)` for a before-image, None for the current snapshot), and
+    * the derivation `(changed, sourceRows, bounded) => (fresh, stale)`.
+    * `changed` is the change frame — a LocalRelation of the collected rows
+    * when `bounded`, the persisted distributed frame otherwise — and
+    * `sourceRows` the source rows of its keys. `fresh` rows upsert; `stale`
+    * rows (any column subset holding the derived table's key) tombstone,
+    * so the derivation must keep the two disjoint. A bounded derivation
+    * broadcasts its small join sides explicitly: their optimizer estimates
+    * flow through joins and aggregates, and a static plan would otherwise
+    * pick a session-width sort-merge join; an unbounded (backfill) one
+    * must not broadcast. */
+  private[tools] final case class Derivation(changes: DataFrame,
+      keyCols: Seq[String], readAt: Option[Long])(
+      val derive: (DataFrame, DataFrame, Boolean) => (DataFrame, DataFrame))
+
+  /**
+   * The incremental refresh of every derived kind: re-derive exactly the
+   * keys the source's change stream touched since the recorded watermark
+   * `v0`, commit fresh and stale rows with the new watermark as ONE atomic
+   * version, and return true — or false when the table is already
+   * current. O(changed), never O(derived table) or O(source).
+   *
+   *   - The window `(v0, v1]` is sized from the manifest
+   *     (`cdcWindowBytes`). A tiny window — the steady-state maintenance
+   *     tick — runs under ONE static plan per action: the CDC fold
+   *     exchange is delta-byte-sized and every small join side is a
+   *     LocalRelation or an explicit broadcast, so AQE's per-stage jobs
+   *     would be most of its cost. Snapshot-diff or backfill windows keep
+   *     AQE, and persist the change frame BEFORE the bounded probe so an
+   *     over-bound fallback reuses its partitions.
+   *   - ONE bounded probe collects up to `maxPruneKeys + 1` change rows.
+   *     An empty window (a compaction, no logical change) only advances
+   *     the watermark. A bounded window derives from a LocalRelation of
+   *     those rows — exact tiny stats keep the downstream joins broadcast
+   *     — and reads the source through [[readByKeys]]: an IN-list per key
+   *     column prunes untouched tablets at the manifest (S8/P4). A larger
+   *     window semi-joins the source by its distributed key set instead
+   *     (no driver risk). `assertPrune = true` gates the pruned path (test
+   *     hook: it must run and keep at most half the source files).
+   *   - The watermark rides the SAME commit as the rows: the before-image
+   *     derivations read `source@watermark`, so a torn pair would corrupt
+   *     the next refresh, not just mislabel this one. The commit is
+   *     `applyChanges`, not a validated transaction — fresh and stale are
+   *     disjoint by construction, and its in-write duplicate-key guard
+   *     still allows one action per key (W9).
+   *
+   * If the source's history GC expired `v0`, the change read errors
+   * cleanly ("expired") — a rebuild is the only remedy. (The GC floors its
+   * expiry at registered watermarks, so that means the registration was
+   * removed or the GC predates it.)
+   */
+  private[tools] def refresh(spark: SparkSession, derived: GraftTable,
+      srcLocKey: String, srcVersionKey: String, maxPruneKeys: Int,
+      assertPrune: Boolean)(window: (GraftTable, Long, Long) => Derivation)
+      : Boolean = lockFor(derived.location).synchronized {
+    val p = derived.properties
+    val src = GraftTable.load(spark, p(srcLocKey))
+    val v0 = p(srcVersionKey).toLong
+    val v1 = src.meta.version
+    if (v1 == v0) return false
+    val watermark = Map(srcVersionKey -> Some(v1.toString))
+    val winBytes = src.cdcWindowBytes(v0, v1)
+    val winBig = winBytes.forall(_ > GraftTable.staticPlanMaxBytes)
+    GraftTable.withStaticPlan(spark, !winBig) {
+      val d = window(src, v0, v1)
+      def persisted = Some(d.changes.persist(StorageLevel.MEMORY_AND_DISK))
+      var cached = if (winBig) persisted else None
+      try {
+        val rows = cached.getOrElse(d.changes).limit(maxPruneKeys + 1).collect()
+        if (rows.isEmpty) derived.setProperties(watermark)
+        else {
+          val bounded = rows.length <= maxPruneKeys
+          val (changed, sourceRows) =
+            if (bounded) {
+              val keyIdx = d.keyCols.map(d.changes.schema.fieldIndex)
+              (localFrame(spark, d.changes.schema, rows),
+                readByKeys(spark, src, d.readAt,
+                  StructType(d.keyCols.map(d.changes.schema(_))),
+                  rows.map(r => Row.fromSeq(keyIdx.map(r.get))).distinct,
+                  assertPrune))
+            } else {
+              if (assertPrune) throw new IllegalStateException(
+                s"refresh of ${derived.location} fell back to the semi-join " +
+                  s"path (> $maxPruneKeys changed keys)")
+              if (cached.isEmpty) cached = persisted
+              val changed = cached.get
+              // a change frame of exactly the key columns (touchedKeys) is
+              // already a distinct key set
+              val keys =
+                if (changed.columns.toSeq == d.keyCols) changed
+                else changed.select(d.keyCols.map(col): _*).distinct()
+              (changed, src.scan(d.readAt).join(keys, d.keyCols, "left_semi"))
+            }
+          val (fresh, stale) = d.derive(changed, sourceRows, bounded)
+          // fresh + stale per changed key: ~2x the window, a manifest-
+          // derived size for the commit's guard-window exchange (the
+          // optimizer's estimate through the joins is useless)
+          commit(derived, fresh, stale, watermark, winBytes.map(b => b * 2 + 1024))
+        }
+        true
+      } finally cached.foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  /** The source rows whose key columns (`keySchema`'s fields) match one of
+    * the collected `keys`, at `version` (None = current). An IN-list per
+    * key column prunes base tablets and files at the manifest — exact for
+    * one column, a pruning superset for several — and an exact broadcast
+    * key semi-join lands behind it. Empty keys give an empty scan-shaped
+    * frame. `assertPrune = true` requires the IN-lists to keep at most
+    * half the base files (test/verification hook). */
+  private[tools] def readByKeys(spark: SparkSession, src: GraftTable,
+      version: Option[Long], keySchema: StructType, keys: Array[Row],
+      assertPrune: Boolean = false): DataFrame = {
+    if (keys.isEmpty) return src.scan(version).limit(0)
+    val filters: Seq[org.apache.spark.sql.sources.Filter] =
+      keySchema.fieldNames.toSeq.zipWithIndex.map { case (c, i) =>
+        org.apache.spark.sql.sources.In(c, keys.map(_.get(i)).distinct)
+      }
+    if (assertPrune) {
+      val m = version.map(src.metaAt).getOrElse(src.meta)
+      val kept = graft.sources.PartitionPruner.pruneFiles(m, m.baseFiles, filters)
+      if (kept.length * 2 > m.baseFiles.length)
+        throw new IllegalStateException(
+          s"keyed read of ${src.location} must prune its base scan: kept " +
+            s"${kept.length} of ${m.baseFiles.length} files for " +
+            s"${keys.length} keys")
+    }
+    src.scanPruned(filters, version)
+      .join(broadcast(localFrame(spark, keySchema, keys)),
+        keySchema.fieldNames.toSeq, "left_semi")
+  }
+
+  /** A true LocalRelation (createDataFrame over a java List), never an
+    * RDD-backed frame: the RDD form reports UNKNOWN stats, which a static
+    * plan turns into a session-width sort-merge join. */
+  private def localFrame(spark: SparkSession, schema: StructType,
+      rows: Array[Row]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.toSeq.asJava,
+      StructType(schema.fields.map(_.copy(nullable = true))))
+  }
+
+  /** Fresh rows upsert, stale rows tombstone, with the watermark
+    * properties, as ONE [[GraftTable.applyChanges]] version. `stale` may
+    * carry any subset of the table's columns that includes its key;
+    * missing columns null-fill. */
+  private def commit(t: GraftTable, fresh: DataFrame, stale: DataFrame,
+      watermark: Map[String, Option[String]], sizeHintBytes: Option[Long]): Unit = {
+    val cols = t.meta.visibleColumns
+    val have = stale.columns.toSet
+    val staleFull = stale.select(cols.map { c =>
+      if (have(c.name)) col(c.name).cast(c.dataType).as(c.name)
+      else lit(null).cast(c.dataType).as(c.name)
+    }: _*)
+    val freshFull = fresh.select(cols.map(c =>
+      col(c.name).cast(c.dataType).as(c.name)): _*)
+    t.applyChanges(
+      freshFull.withColumn(GraftTable.DeletedCol, lit(false))
+        .unionByName(staleFull.withColumn(GraftTable.DeletedCol, lit(true))),
+      propsUpdate = watermark, sizeHintBytes = sizeHintBytes)
   }
 }

@@ -114,138 +114,42 @@ object MaterializedRollup {
   }
 
   /**
-   * Incremental refresh: recompute exactly the groups the source's change
-   * stream touched since the recorded watermark, commit as one atomic
-   * transaction (fresh group rows upserted, vanished groups deleted), and
-   * advance the watermark. O(touched groups), never O(base). Returns false
-   * when the rollup is already current.
-   *
-   * When the touched group-key set has at most `maxPruneKeys` rows it is
-   * collected and pushed as an IN-list into the base scan, so a base
-   * laid out on the group columns prunes untouched tablets at the manifest
-   * level; larger sets fall back to a distributed semi-join (correct on
-   * any size, no driver risk). `assertPrune = true` turns the pruning into
-   * a hard gate: the IN-list path must run and keep at most half the base
-   * files (test/verification hook, not for production use).
-   *
-   * If the source's history GC expired the watermark version, the change
-   * read errors cleanly — rebuild with [[build]].
+   * Incremental refresh through [[DerivedTables.refresh]] (the one refresh
+   * path of every derived kind; `maxPruneKeys`/`assertPrune` as there):
+   * recompute exactly the groups the source's change stream touched since
+   * the recorded watermark from the CURRENT source, upsert them, and
+   * tombstone groups that vanished. O(touched groups), never O(base). The
+   * window is `touchedKeys` — only the delta files in range, no per-key
+   * fold and no v1 snapshot scan: ghost or superseded keys recompute to
+   * the same result. A bounded touched set pushes an IN-list over the
+   * group columns, so a base laid out on them opens only the touched
+   * tablets' files. Returns false when the rollup is already current; an
+   * expired watermark means rebuild with [[build]].
    */
   def refresh(spark: SparkSession, rollup: GraftTable,
       maxPruneKeys: Int = 4096, assertPrune: Boolean = false): Boolean =
-      DerivedTables.lockFor(rollup.location).synchronized {
-    val p = rollup.properties
-    val src = GraftTable.load(spark, p(SrcLocKey))
-    val v0 = p(SrcVersionKey).toLong
-    val v1 = src.meta.version
-    if (v1 == v0) return false
-    // tiny CDC window → one static plan per action (see
-    // SecondaryIndex.refresh: same explicit-exchange posture)
-    val winBytes = src.cdcWindowBytes(v0, v1)
-    GraftTable.withStaticPlan(spark,
-      winBytes.exists(_ <= GraftTable.staticPlanMaxBytes)) {
-      refreshImpl(spark, rollup, src, v0, v1, maxPruneKeys, assertPrune,
-        winBytes)
-    }
-  }
-
-  private def refreshImpl(spark: SparkSession, rollup: GraftTable,
-      src: GraftTable, v0: Long, v1: Long,
-      maxPruneKeys: Int, assertPrune: Boolean,
-      winBytes: Option[Long]): Boolean = {
-    val p = rollup.properties
-    val groupCols = p(GroupColsKey).split(FieldSep).toSeq
-    val aggs = p(AggsKey).split(RecSep).toSeq.map { r =>
-      val i = r.indexOf(FieldSep)
-      (r.substring(0, i), r.substring(i + 1))
-    }
-    // distinct touched group keys — tiny in steady state (bounded by the
-    // mutation count, then by group cardinality). touchedKeys reads only
-    // the delta files in range: no per-key fold, no v1 snapshot scan —
-    // ghost/superseded keys recompute to the same result below. The
-    // common small window drives everything from the ONE bounded collect;
-    // only the over-bound fallback (a second pass over the CDC subtree)
-    // pays a persist.
-    val touched0 = src.touchedKeys(v0, v1, groupCols)
-    // manifest-big (or unknown-size) window → persist BEFORE the bounded
-    // probe so the over-bound fallback reuses the materialized partitions
-    // (see SecondaryIndex.refresh)
-    val winBig = winBytes.forall(_ > GraftTable.staticPlanMaxBytes)
-    val touched =
-      if (winBig) touched0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else touched0
-    var persisted: Option[DataFrame] = if (winBig) Some(touched) else None
-    try {
-      val rows = touched.limit(maxPruneKeys + 1).collect()
-      if (rows.isEmpty) {
-        // version moved with no logical row change (e.g. a compaction):
-        // just advance the watermark
-        rollup.setProperties(Map(SrcVersionKey -> Some(v1.toString)))
-        return true
+    DerivedTables.refresh(spark, rollup, SrcLocKey, SrcVersionKey,
+        maxPruneKeys, assertPrune) { (src, v0, v1) =>
+      val p = rollup.properties
+      val groupCols = p(GroupColsKey).split(FieldSep).toSeq
+      val aggs = p(AggsKey).split(RecSep).toSeq.map { r =>
+        val i = r.indexOf(FieldSep)
+        (r.substring(0, i), r.substring(i + 1))
       }
-      val (base, keys) =
-        if (rows.length <= maxPruneKeys) {
-          // IN-list per group column: exact for one column, a pruning
-          // superset for several — the semi-join below is always the
-          // exact restriction either way
-          val filters: Seq[org.apache.spark.sql.sources.Filter] =
-            groupCols.zipWithIndex.map { case (c, i) =>
-              org.apache.spark.sql.sources.In(c,
-                rows.map(_.get(i)).distinct.toArray)
-            }
-          if (assertPrune) {
-            val kept = graft.sources.PartitionPruner.pruneFiles(
-              src.meta, src.meta.baseFiles, filters)
-            val total = src.meta.baseFiles.length
-            if (kept.length * 2 > total)
-              throw new IllegalStateException(
-                s"rollup refresh must prune the base scan: kept " +
-                  s"${kept.length} of $total files for ${rows.length} " +
-                  "touched groups")
-          }
-          // LocalRelation (exact tiny stats) — see SecondaryIndex.refresh
-          val local = {
-            import scala.jdk.CollectionConverters._
-            spark.createDataFrame(rows.toSeq.asJava,
-              org.apache.spark.sql.types.StructType(
-                touched.schema.fields.map(_.copy(nullable = true))))
-          }
-          (src.scanPruned(filters), broadcast(local))
-        } else {
-          if (assertPrune) throw new IllegalStateException(
-            s"rollup refresh fell back to the semi-join path " +
-              s"(> $maxPruneKeys touched groups)")
-          val p = if (winBig) touched else touched.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          persisted = Some(p)
-          (src.scan(), p.toDF(groupCols: _*))
-        }
-      val freshRaw = grouped(base.join(keys, groupCols, "left_semi"),
-        groupCols, aggs)
-      // conform to the rollup's persisted column types (an agg's natural
-      // result type can widen — e.g. sum(DECIMAL(28,2)) is DECIMAL(38,2))
-      val fresh = freshRaw.select(rollup.meta.visibleColumns.map(c =>
-        col(c.name).cast(c.dataType).as(c.name)): _*)
-      // groups whose recompute came back empty vanished from the base.
-      // In the small path fresh is bounded by the touched-group count but
-      // its optimizer estimate flows through a join + aggregate —
-      // broadcast it explicitly so a static plan never turns this into a
-      // session-width sort-merge join; the over-bound path (backfill)
-      // must NOT broadcast (fresh can be group-cardinality huge)
-      val freshKeys = fresh.select(groupCols.map(col): _*)
-      val stale = rollup.scan().select(groupCols.map(col): _*)
-        .join(keys, groupCols, "left_semi")
-        .join(if (rows.length <= maxPruneKeys) broadcast(freshKeys)
-              else freshKeys,
-          groupCols, "left_anti")
-      // the watermark rides the SAME atomic commit as the rows
-      RefreshCommit(rollup, fresh, stale,
-        watermark = Map(SrcVersionKey -> Some(v1.toString)),
-        // one row per touched group (plus the stale keys) — bounded by
-        // the window itself; manifest-derived size for the commit's
-        // guard-window exchange
-        sizeHintBytes = winBytes.map(b => b * 2 + 1024))
-      true
-    } finally persisted.foreach(_.unpersist(blocking = false))
-  }
+      DerivedTables.Derivation(src.touchedKeys(v0, v1, groupCols), groupCols,
+          readAt = None) { (touched, base, bounded) =>
+        // conform to the rollup's persisted column types (an agg's natural
+        // result type can widen — e.g. sum(DECIMAL(28,2)) is DECIMAL(38,2))
+        val fresh = grouped(base, groupCols, aggs)
+          .select(rollup.meta.visibleColumns.map(c =>
+            col(c.name).cast(c.dataType).as(c.name)): _*)
+        // touched groups whose recompute came back empty vanished from the
+        // base
+        val freshKeys = fresh.select(groupCols.map(col): _*)
+        (fresh, rollup.scan().select(groupCols.map(col): _*)
+          .join(if (bounded) broadcast(touched) else touched, groupCols, "left_semi")
+          .join(if (bounded) broadcast(freshKeys) else freshKeys,
+            groupCols, "left_anti"))
+      }
+    }
 }

@@ -37,8 +37,8 @@ import graft.table.GraftTable
  *     point-read-sized set by contract), then reads the base through its
  *     OWN key layout — PK hash/range pruning + zone maps (S8) — so both
  *     sides of the lookup touch tablets, never tables;
- *   - `refresh` rides the engine CDC exactly like the vector index: the
- *     keys mutated since the recorded watermark re-derive their index
+ *   - `refresh` rides the engine CDC through [[DerivedTables.refresh]]:
+ *     the keys mutated since the recorded watermark re-derive their index
  *     entries, and one atomic transaction (W9) upserts fresh entries and
  *     tombstones stale ones (value changed or row deleted).
  *
@@ -436,22 +436,15 @@ object SecondaryIndex {
     fetchByKeys(spark, src, pkCols, seen.values.toArray, Some(baseV))
   }
 
-  /** The base rows for a collected (bounded) PK set: an IN-list over the
-    * leading PK column prunes base tablets at the manifest, an exact key
-    * semi-join lands behind it. Empty keys → an empty scan-shaped frame. */
+  /** The base rows for a collected (bounded) PK set, through the derived
+    * tables' keyed read (an IN-list per PK column, an exact key semi-join
+    * behind it). Empty keys → an empty scan-shaped frame. */
   private def fetchByKeys(spark: SparkSession, src: GraftTable,
       pkCols: Seq[String], hits: Array[org.apache.spark.sql.Row],
       baseV: Option[Long]): DataFrame = {
-    if (hits.isEmpty)
-      return src.scan(baseV).limit(0)
-    val baseFilters: Seq[org.apache.spark.sql.sources.Filter] =
-      Seq(org.apache.spark.sql.sources.In(pkCols.head,
-        hits.map(_.get(0)).distinct.toArray))
-    val keyDf = broadcast(spark.createDataFrame(
-      spark.sparkContext.parallelize(hits.toSeq, 1),
-      StructType(src.scan().select(pkCols.map(col): _*).schema
-        .fields.map(_.copy(nullable = true)))))
-    src.scanPruned(baseFilters, baseV).join(keyDf, pkCols, "left_semi")
+    val m = src.meta
+    DerivedTables.readByKeys(spark, src, baseV,
+      StructType(pkCols.map(m.column(_).toField)), hits)
   }
 
   /**
@@ -648,172 +641,59 @@ object SecondaryIndex {
   }
 
   /**
-   * Incremental refresh from the source's change stream: only the keys
-   * mutated since the recorded watermark re-derive their index entries;
-   * one atomic transaction upserts the fresh entries and deletes stale
-   * ones (the key's old value entry when the value changed, every entry of
-   * a deleted key). O(changed), never O(index) — FOR REAL: the stale
-   * entries are the BEFORE-IMAGE of the mutated keys, and the index (hash-
-   * partitioned on the VALUE) cannot be probed by key, so they derive from
-   * the SOURCE's watermark snapshot instead. By the maintenance invariant
-   * the index at watermark v0 is exactly `entries(source@v0)`, so the old
-   * entries of the changed keys are `entries(source@v0 ⋉ changedKeys)` —
-   * a time-travel read of the base, which IS partitioned on its PK: when
-   * the changed-key set fits `maxPruneKeys` it collects and pushes an
-   * IN-list over the leading PK column, pruning untouched base tablets at
-   * the manifest level (S8/P4). Larger sets (a backfill-sized refresh)
-   * fall back to a distributed semi-join over the v0 snapshot — O(base),
-   * never O(index), and with no driver risk. `assertPrune = true` gates
-   * the pruned path (test hook: the IN-list must run and keep at most
-   * half the v0 base files).
+   * Incremental refresh through [[DerivedTables.refresh]] (the one refresh
+   * path of every derived kind; `maxPruneKeys`/`assertPrune` as there).
+   * The mutated keys re-derive their entries, and the stale ones — the
+   * key's old value entry when the value changed, every entry of a deleted
+   * key — tombstone in the same commit. The stale entries are the
+   * BEFORE-IMAGE of the mutated keys, and the index (hash-partitioned on
+   * the VALUE) cannot be probed by key, so they derive from the SOURCE's
+   * watermark snapshot instead: by the maintenance invariant the index at
+   * watermark v0 is exactly `entries(source@v0)`, so the old entries of
+   * the changed keys are `entries(source@v0 ⋉ changedKeys)` — a keyed
+   * time-travel read of the base, which IS partitioned on its PK.
    *
-   * Returns false when the index is already current. If the source's
-   * history GC expired the watermark version, the change read errors
-   * cleanly — rebuild with [[build]]. (The GC itself floors its expiry at
-   * registered derived watermarks — GraftTable.expireVersions — so that
-   * error means the registration was removed or the GC predates it.)
+   * The IN-lists carry CURRENT-typed key values and prune against the v0
+   * manifest's recorded bounds — sound because PK column types can never
+   * change (widenColumnType refuses key and partition columns). Returns
+   * false when the index is already current; an expired watermark means
+   * rebuild with [[build]].
    */
   def refresh(spark: SparkSession, index: GraftTable,
       maxPruneKeys: Int = 4096, assertPrune: Boolean = false): Boolean =
-      DerivedTables.lockFor(index.location).synchronized {
-    val p = index.properties
-    val src = GraftTable.load(spark, p(SrcLocKey))
-    val v0 = p(SrcVersionKey).toLong
-    val v1 = src.meta.version
-    if (v1 == v0) return false
-    // a manifest-known-tiny CDC window (the steady-state maintenance tick)
-    // refreshes under ONE static plan per action: the CDC fold exchange is
-    // delta-byte-sized, the before-image semi-join explicitly broadcast,
-    // the anti-join's fresh side a LocalRelation — AQE's per-stage jobs
-    // were most of a 1-row refresh's cost. Snapshot-diff or backfill
-    // windows keep AQE.
-    val winBytes = src.cdcWindowBytes(v0, v1)
-    GraftTable.withStaticPlan(spark,
-      winBytes.exists(_ <= GraftTable.staticPlanMaxBytes)) {
-      refreshImpl(spark, index, src, v0, v1, maxPruneKeys, assertPrune,
-        winBytes)
-    }
-  }
-
-  private def refreshImpl(spark: SparkSession, index: GraftTable,
-      src: GraftTable, v0: Long, v1: Long,
-      maxPruneKeys: Int, assertPrune: Boolean,
-      winBytes: Option[Long]): Boolean = {
-    val p = index.properties
-    val colNames = indexedCols(p)
-    val lead = colNames.head
-    val exprCanon = p.get(ExprKey)
-    val pkCols = src.meta.keyCols
-    // a FUNCTIONAL index derives its entries by re-evaluating the persisted
-    // expression over source rows; a plain one projects its columns
-    def derive(rows: DataFrame): DataFrame = exprCanon match {
-      case Some(sql) => rows
-        .select(expr(sql).as(ExprCol) +: pkCols.map(col): _*)
-        .filter(col(ExprCol).isNotNull)
-      case None => entries(rows, colNames, pkCols)
-    }
-    val changed0 = exprCanon match {
-      // the expression may reference any source column — keep them all
-      // (the changed set is O(changed) small); plain indexes project narrow
-      case Some(_) => src.changesSince(v0, v1)
-      case None => src.changesSince(v0, v1)
-        .select((colNames ++ pkCols).distinct.map(col) :+
-          col(GraftTable.DeletedCol): _*)
-    }
-    // ONE bounded probe collects the changed ROWS themselves (changesSince
-    // emits latest-per-key, so row count == key count): the common small
-    // refresh window then derives keys and fresh entries from a LOCAL
-    // relation — no persist, no distributed distinct, no second pass over
-    // the CDC subtree — and the refresh's distributed work shrinks to the
-    // before-image scan plus the commit. An over-bound window keeps the
-    // distributed derivation (no driver risk at backfill sizes).
-    // a manifest-big window (or a snapshot-diff fallback, bytes unknown)
-    // persists the CDC frame BEFORE the bounded probe, so the over-bound
-    // path's distributed derivation reuses the materialized partitions
-    // instead of recomputing the whole CDC subtree after the probe
-    val winBig = winBytes.forall(_ > GraftTable.staticPlanMaxBytes)
-    val probed =
-      if (winBig) changed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else changed0
-    val changedRows = probed.limit(maxPruneKeys + 1).collect()
-    val small = changedRows.length <= maxPruneKeys
-    if (small && winBig) probed.unpersist(blocking = false)
-    val changed =
-      // a true LocalRelation (createDataFrame over a java List), NOT an
-      // RDD-backed frame: the RDD form reports UNKNOWN stats, which under
-      // a static plan turns the stale anti-join below into a
-      // session-width sort-merge join; the LocalRelation's exact tiny
-      // size keeps it a broadcast at plan time
-      if (small) {
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(changedRows.toSeq.asJava,
-          StructType(changed0.schema.fields.map(_.copy(nullable = true))))
-      } else if (winBig) probed
-      else changed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val keys = changed.select(pkCols.map(col): _*).distinct()
-      val rows =
-        if (small) {
-          val idx = pkCols.map(changed0.schema.fieldIndex)
-          changedRows.map(r => org.apache.spark.sql.Row.fromSeq(
-            idx.map(r.get))).distinct
-        } else keys.limit(maxPruneKeys + 1).collect()
-      if (rows.isEmpty) {
-        // version moved with no logical row change (e.g. a compaction):
-        // just advance the watermark
-        index.setProperties(Map(SrcVersionKey -> Some(v1.toString)))
-        return true
+    DerivedTables.refresh(spark, index, SrcLocKey, SrcVersionKey,
+        maxPruneKeys, assertPrune) { (src, v0, v1) =>
+      val p = index.properties
+      val colNames = indexedCols(p)
+      val exprCanon = p.get(ExprKey)
+      val pkCols = src.meta.keyCols
+      // a FUNCTIONAL index derives its entries by re-evaluating the
+      // persisted expression over source rows; a plain one projects its
+      // columns
+      def derive(rows: DataFrame): DataFrame = exprCanon match {
+        case Some(sql) => rows
+          .select(expr(sql).as(ExprCol) +: pkCols.map(col): _*)
+          .filter(col(ExprCol).isNotNull)
+        case None => entries(rows, colNames, pkCols)
       }
-      val fresh = derive(changed.filter(!col(GraftTable.DeletedCol))
-        .drop(GraftTable.DeletedCol))
-      // the IN-list carries CURRENT-typed key values and prunes against
-      // the v0 manifest's recorded bounds — sound because PK column types
-      // can never change (widenColumnType refuses key and partition
-      // columns), so both sides encode identically at any version
-      val oldRows =
-        if (rows.length <= maxPruneKeys) {
-          val filters: Seq[org.apache.spark.sql.sources.Filter] =
-            Seq(org.apache.spark.sql.sources.In(pkCols.head,
-              rows.map(_.get(0)).distinct.toArray))
-          if (assertPrune) {
-            val m0 = src.metaAt(v0)
-            val kept = graft.sources.PartitionPruner.pruneFiles(
-              m0, m0.baseFiles, filters)
-            if (kept.length * 2 > m0.baseFiles.length)
-              throw new IllegalStateException(
-                s"index refresh must prune the v0 base scan: kept " +
-                  s"${kept.length} of ${m0.baseFiles.length} files for " +
-                  s"${rows.length} changed keys")
-          }
-          val keyDf = broadcast(spark.createDataFrame(
-            spark.sparkContext.parallelize(rows.toSeq, 1),
-            StructType(keys.schema.fields.map(_.copy(nullable = true)))))
-          src.scanPruned(filters, Some(v0)).join(keyDf, pkCols, "left_semi")
-        } else {
-          if (assertPrune) throw new IllegalStateException(
-            s"index refresh fell back to the semi-join path " +
-              s"(> $maxPruneKeys changed keys)")
-          src.scan(Some(v0)).join(keys, pkCols, "left_semi")
-        }
-      // the before-image entries the fresh set does not re-assert BY KEY
-      // are stale (old lead value on rename, every entry of a deleted
-      // key); the anti-join is on the INDEX KEY (lead, pk…) — a trailing
-      // composite column changing value keeps the same key, so upsert
-      // alone covers it — and the txn allows one op per key
-      val stale = derive(oldRows)
-        .join(fresh, lead +: pkCols, "left_anti")
-      // the watermark rides the SAME atomic commit as the rows: the
-      // before-image derivation above is only sound when index state and
-      // watermark can never disagree (a refresh crashing between two
-      // separate commits would leave v1 rows labeled v0 — the re-run
-      // would then tombstone v0 entries instead of the v1 ones)
-      RefreshCommit(index, fresh, stale,
-        watermark = Map(SrcVersionKey -> Some(v1.toString)),
-        // the commit rows are ~2x the window (fresh + stale per changed
-        // key): a manifest-derived size for its guard-window exchange —
-        // the optimizer's own estimate through the anti-join is useless
-        sizeHintBytes = winBytes.map(b => b * 2 + 1024))
-      true
-    } finally if (!small) changed.unpersist(blocking = false)
-  }
+      val changes = exprCanon match {
+        // the expression may reference any source column — keep them all
+        // (the changed set is O(changed) small); plain indexes project narrow
+        case Some(_) => src.changesSince(v0, v1)
+        case None => src.changesSince(v0, v1)
+          .select((colNames ++ pkCols).distinct.map(col) :+
+            col(GraftTable.DeletedCol): _*)
+      }
+      DerivedTables.Derivation(changes, pkCols, readAt = Some(v0)) {
+        (changed, oldRows, _) =>
+          val fresh = derive(changed.filter(!col(GraftTable.DeletedCol))
+            .drop(GraftTable.DeletedCol))
+          // the before-image entries the fresh set does not re-assert BY
+          // KEY are stale (old lead value on rename, every entry of a
+          // deleted key); the anti-join is on the INDEX KEY (lead, pk…) —
+          // a trailing composite column changing value keeps the same key,
+          // so upsert alone covers it
+          (fresh, derive(oldRows).join(fresh, colNames.head +: pkCols, "left_anti"))
+      }
+    }
 }

@@ -302,146 +302,46 @@ object VectorIndex {
   }
 
   /**
-   * Incremental refresh from the source's change stream: reads ONLY the
-   * keys mutated since the recorded watermark (`changesSince` — the S11
-   * fast path when no compaction intervened), re-assigns their vectors
-   * against the frozen centroids, and commits upserts + moved/dead-row
-   * tombstones as ONE atomic transaction. O(changed × cells), never
-   * O(index) — FOR REAL: the stale rows are the BEFORE-IMAGE cells of the
+   * Incremental refresh through [[DerivedTables.refresh]] (the one refresh
+   * path of every derived kind; `maxPruneKeys`/`assertPrune` as there):
+   * the mutated ids' vectors re-assign against the frozen centroids, and
+   * moved or dead rows tombstone in the same commit. O(changed × cells),
+   * never O(index) — the stale rows are the BEFORE-IMAGE cells of the
    * mutated ids, and the index (hash-partitioned on `cell`) cannot be
    * probed by id, so they derive from the SOURCE's watermark snapshot
    * instead. By the maintenance invariant the index at watermark v0 is
    * exactly the deterministic assignment of `source@v0` against the
-   * frozen centroids, so re-assigning the changed ids' v0 vectors
-   * reproduces their current index rows bit-for-bit (same expressions,
-   * same tie-break). When the changed-id set fits `maxPruneKeys` it
-   * collects and pushes an IN-list over the id column into the v0 scan —
-   * a source keyed/partitioned on the id prunes untouched tablets at the
-   * manifest level (S8/P4); larger backfill-sized sets fall back to a
-   * distributed semi-join over the v0 snapshot (O(source), never
-   * O(index), no driver risk). Returns false when the index is already
-   * current.
-   *
-   * If the source's history GC expired the watermark version, the change
-   * read errors cleanly ("expired") — rebuild with [[build]] (an index
-   * left unrefreshed past the retention window has no cheaper path).
+   * frozen centroids, so re-assigning the changed ids' v0 vectors (a keyed
+   * read over the id column — a source keyed on it prunes untouched
+   * tablets) reproduces their current index rows bit-for-bit (same
+   * expressions, same tie-break). Returns false when the index is already
+   * current; an expired watermark means rebuild with [[build]].
    */
   def refresh(spark: SparkSession, index: GraftTable,
       maxPruneKeys: Int = 4096, assertPrune: Boolean = false): Boolean =
-      DerivedTables.lockFor(index.location).synchronized {
-    val p = index.properties
-    val src = GraftTable.load(spark, p(SrcLocKey))
-    val v0 = p(SrcVersionKey).toLong
-    val v1 = src.meta.version
-    if (v1 == v0) return false
-    // tiny CDC window → one static plan per action (see
-    // SecondaryIndex.refresh: same explicit-exchange posture)
-    val winBytes = src.cdcWindowBytes(v0, v1)
-    GraftTable.withStaticPlan(spark,
-      winBytes.exists(_ <= GraftTable.staticPlanMaxBytes)) {
-      refreshImpl(spark, index, src, v0, v1, maxPruneKeys, assertPrune,
-        winBytes)
-    }
-  }
-
-  private def refreshImpl(spark: SparkSession, index: GraftTable,
-      src: GraftTable, v0: Long, v1: Long,
-      maxPruneKeys: Int, assertPrune: Boolean,
-      winBytes: Option[Long]): Boolean = {
-    val p = index.properties
-    val idCol = p(IdColKey)
-    val vecCol = p(VecColKey)
-    val cents = centroids(spark, index)
-    val changed0 = src.changesSince(v0, v1)
-      .select(col(idCol), col(vecCol), col(GraftTable.DeletedCol))
-    // ONE bounded probe collects the changed rows (latest-per-key, so row
-    // count == id count); the common small window then derives ids and the
-    // fresh assignment from a LOCAL relation — no persist, no distributed
-    // distinct, no second CDC pass (see SecondaryIndex.refresh). Over-bound
-    // windows keep the distributed derivation.
-    // manifest-big (or unknown-size) window → persist BEFORE the bounded
-    // probe so the over-bound fallback reuses the materialized CDC
-    // partitions (see SecondaryIndex.refresh)
-    val winBig = winBytes.forall(_ > GraftTable.staticPlanMaxBytes)
-    val probed =
-      if (winBig) changed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else changed0
-    val changedRows = probed.limit(maxPruneKeys + 1).collect()
-    val small = changedRows.length <= maxPruneKeys
-    if (small && winBig) probed.unpersist(blocking = false)
-    val changed =
-      // LocalRelation, not an RDD-backed frame — exact tiny stats keep
-      // the downstream joins broadcast under a static plan (see
-      // SecondaryIndex.refresh)
-      if (small) {
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(changedRows.toSeq.asJava,
-          StructType(changed0.schema.fields.map(_.copy(nullable = true))))
-      } else if (winBig) probed
-      else changed0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ids = changed.select(col(idCol)).distinct()
-      val rows =
-        if (small) {
-          val i = changed0.schema.fieldIndex(idCol)
-          changedRows.map(r => org.apache.spark.sql.Row(r.get(i))).distinct
-        } else ids.limit(maxPruneKeys + 1).collect()
-      if (rows.isEmpty) {
-        // version moved with no logical row change (e.g. a compaction):
-        // just advance the watermark
-        index.setProperties(Map(SrcVersionKey -> Some(v1.toString)))
-        return true
+    DerivedTables.refresh(spark, index, SrcLocKey, SrcVersionKey,
+        maxPruneKeys, assertPrune) { (src, v0, v1) =>
+      val p = index.properties
+      val idCol = p(IdColKey)
+      val vecCol = p(VecColKey)
+      val cents = centroids(spark, index)
+      val changes = src.changesSince(v0, v1)
+        .select(col(idCol), col(vecCol), col(GraftTable.DeletedCol))
+      DerivedTables.Derivation(changes, Seq(idCol), readAt = Some(v0)) {
+        (changed, oldSrc, bounded) =>
+          // latest state of surviving mutated vectors → their (possibly
+          // moved) cells; a NULLed-out vector counts as removal
+          val fresh = assigned(
+            normalized(changed.filter(!col(GraftTable.DeletedCol)), idCol, vecCol),
+            idCol, cents)
+          // before-image (cell, id) rows the fresh assignment does not
+          // re-assert are stale (moved cell, deleted id); upsert already
+          // covers re-asserted rows
+          val freshKeys = fresh.select(col("cell"), col(idCol))
+          (fresh, assigned(normalized(oldSrc, idCol, vecCol), idCol, cents)
+            .select(col("cell"), col(idCol))
+            .join(if (bounded) broadcast(freshKeys) else freshKeys,
+              Seq("cell", idCol), "left_anti"))
       }
-      // latest state of surviving mutated vectors → their (possibly moved)
-      // cells; a NULLed-out vector counts as removal
-      val fresh = assigned(
-        normalized(changed.filter(!col(GraftTable.DeletedCol)), idCol, vecCol),
-        idCol, cents)
-      val oldSrc =
-        if (rows.length <= maxPruneKeys) {
-          val filters: Seq[org.apache.spark.sql.sources.Filter] =
-            Seq(org.apache.spark.sql.sources.In(idCol,
-              rows.map(_.get(0)).distinct.toArray))
-          if (assertPrune) {
-            val m0 = src.metaAt(v0)
-            val kept = graft.sources.PartitionPruner.pruneFiles(
-              m0, m0.baseFiles, filters)
-            if (kept.length * 2 > m0.baseFiles.length)
-              throw new IllegalStateException(
-                s"vector-index refresh must prune the v0 source scan: " +
-                  s"kept ${kept.length} of ${m0.baseFiles.length} files " +
-                  s"for ${rows.length} changed ids")
-          }
-          val idDf = broadcast(spark.createDataFrame(
-            spark.sparkContext.parallelize(rows.toSeq, 1),
-            StructType(ids.schema.fields.map(_.copy(nullable = true)))))
-          src.scanPruned(filters, Some(v0)).join(idDf, Seq(idCol), "left_semi")
-        } else {
-          if (assertPrune) throw new IllegalStateException(
-            s"vector-index refresh fell back to the semi-join path " +
-              s"(> $maxPruneKeys changed ids)")
-          src.scan(Some(v0)).join(ids, Seq(idCol), "left_semi")
-        }
-      // before-image (cell, id) rows the fresh assignment does not
-      // re-assert are stale (moved cell, deleted id); the txn allows one
-      // op per key, and upsert already covers re-asserted rows
-      // small path: fresh is window-bounded but its estimate flows through
-      // a crossJoin + window — broadcast explicitly so a static plan never
-      // picks a session-width sort-merge join; over-bound keeps AQE's call
-      val freshKeys = fresh.select(col("cell"), col(idCol))
-      val stale = assigned(normalized(oldSrc, idCol, vecCol), idCol, cents)
-        .select(col("cell"), col(idCol))
-        .join(if (small) broadcast(freshKeys) else freshKeys,
-          Seq("cell", idCol), "left_anti")
-      // watermark rides the SAME atomic commit as the rows (see
-      // SecondaryIndex.refresh — the before-image derivation requires
-      // index state and watermark to move together)
-      RefreshCommit(index, fresh, stale,
-        watermark = Map(SrcVersionKey -> Some(v1.toString)),
-        // ~2x the window per changed id (fresh + stale) — manifest-derived
-        // size for the commit's guard-window exchange
-        sizeHintBytes = winBytes.map(b => b * 2 + 1024))
-      true
-    } finally if (!small) changed.unpersist(blocking = false)
-  }
+    }
 }

@@ -107,4 +107,30 @@ class AllTypesSpec extends AnyFunSuite {
     assert(state(t.scan()) == expect)
     assert(state(spark.table("gdp.dp")) == expect)
   }
+
+  test("non-null array elements and map values: created tables read back") {
+    // toDF records array<float> without null elements and map<string,int>
+    // without null values; every parquet read yields the nullable forms,
+    // so the manifest must record those or no read can cast back
+    import spark.implicits._
+    val wh = Files.createTempDirectory("graft-nested-").toString
+    val df = (1L to 20L).map(i => (i, Array(i.toFloat, 1f), Map(s"k$i" -> i.toInt)))
+      .toDF("id", "vec", "tags")
+    assert(!df.schema("vec").dataType.asInstanceOf[ArrayType].containsNull)
+    assert(!df.schema("tags").dataType.asInstanceOf[MapType].valueContainsNull)
+    val t = GraftTable.create(spark, s"$wh/nested", "nested", df.schema,
+      Seq("id"), Seq(HashComponent(Seq("id"), 2)), data = Some(df))
+    def state(dfr: org.apache.spark.sql.DataFrame) =
+      dfr.collect().map(r => r.getLong(0) ->
+        ((r.getSeq[Float](1), r.getMap[String, Int](2).toMap))).toMap
+    val built = (1L to 20L).map(i =>
+      i -> ((Seq(i.toFloat, 1f), Map(s"k$i" -> i.toInt)))).toMap
+    assert(state(t.scan()) == built)
+    t.upsert(Seq((3L, Array(9f), Map("up" -> 3))).toDF("id", "vec", "tags"))
+    val expect = built + (3L -> ((Seq(9f), Map("up" -> 3))))
+    assert(state(t.scan()) == expect)
+    spark.conf.set("spark.sql.catalog.gnest", classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gnest.warehouse", wh)
+    assert(state(spark.sql("SELECT id, vec, tags FROM gnest.nested")) == expect)
+  }
 }

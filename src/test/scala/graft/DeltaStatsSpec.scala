@@ -146,7 +146,6 @@ class DeltaStatsSpec extends AnyFunSuite {
     // every touched key, so on a layout whose base files are disjoint PK
     // slabs the v1 scan must open only the overlapping slab — at 100 TB
     // the difference between a tablet read and a table read per refresh
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val wh = Files.createTempDirectory("graft-dstats4-").toString
     val df = (1 to 2000).map(i => (i.toLong, i * 2L)).toDF("k", "v")
     val t = GraftTable.create(spark, s"$wh/gd", "gd", df.schema, Seq("k"),
@@ -161,13 +160,8 @@ class DeltaStatsSpec extends AnyFunSuite {
       t.delete(Seq(Tuple1(7L)).toDF("k"))
     }
     val cs = t.changesSince(v1, t.currentVersion)
-    val read = cs.queryExecution.optimizedPlan.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          fs.location.rootPaths.map(_.toUri.getPath).filter(v1Files.contains)
-        case _ => Nil
-      }
-    }.flatten.toSet
+    val read = graft.plans.ScanRoots.filesRead(
+      cs.queryExecution.optimizedPlan, v1Files)
     assert(read.nonEmpty && read.size < v1Files.size,
       s"ghost-dedup must scan a strict subset of the v1 slabs " +
         s"(read ${read.size} of ${v1Files.size})")

@@ -32,15 +32,8 @@ class IndexRewriteSpec extends AnyFunSuite {
   private def served(df: DataFrame, t: GraftTable): Boolean = {
     val baseFiles = t.meta.baseFiles.map(f =>
       new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-    val read = df.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toUri.getPath)
-              .filter(baseFiles.contains)
-          case _ => Nil
-        }
-    }.flatten.toSet
+    val read = graft.plans.ScanRoots.filesRead(
+      df.queryExecution.optimizedPlan, baseFiles)
     read.nonEmpty && read.size < baseFiles.size
   }
 
@@ -420,15 +413,8 @@ class IndexRewriteSpec extends AnyFunSuite {
       // fewer files than the full base (id hash(4): 1 of 4 buckets)
       val baseFiles = t.meta.baseFiles.map(f =>
         new org.apache.hadoop.fs.Path(f.path).toUri.getPath).toSet
-      val readFiles = q.queryExecution.optimizedPlan.collect {
-        case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-          lr.relation match {
-            case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-              fs.location.rootPaths.map(_.toUri.getPath)
-                .filter(baseFiles.contains)
-            case _ => Nil
-          }
-      }.flatten
+      val readFiles = graft.plans.ScanRoots.filesRead(
+        q.queryExecution.optimizedPlan, baseFiles)
       assert(readFiles.nonEmpty && readFiles.size * 2 <= baseFiles.size,
         s"base read must prune PK buckets: ${readFiles.size} of ${baseFiles.size}")
     } finally IndexRewrite.disable(spark, idx.location)
@@ -732,10 +718,13 @@ class IndexRewriteSpec extends AnyFunSuite {
     try {
       // the 16-key tie set spreads over every PK bucket, so the strict-
       // subset detector cannot discriminate — the fetch plan's signature
-      // is the spliced broadcast key frame (LogicalRDD) instead
+      // is the spliced key frame (a LocalRelation semi-joined behind the
+      // base read) instead
       def fetchServed(df: DataFrame): Boolean =
         df.queryExecution.optimizedPlan.collect {
-          case r: org.apache.spark.sql.execution.LogicalRDD => r
+          case j @ org.apache.spark.sql.catalyst.plans.logical.Join(_,
+              _: org.apache.spark.sql.catalyst.plans.logical.LocalRelation,
+              org.apache.spark.sql.catalyst.plans.LeftSemi, _, _) => j
         }.nonEmpty
       def q = t.scan().orderBy(col("v").desc, col("id").asc).limit(5)
       assert(fetchServed(q),

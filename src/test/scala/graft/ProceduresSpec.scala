@@ -152,14 +152,8 @@ class ProceduresSpec extends AnyFunSuite {
     finally spark.conf.unset("graft.rollup.autoRewrite")
     def q = spark.sql(s"SELECT g, count(*) AS n, sum(x) AS sx " +
       s"FROM $cat.rwsrc GROUP BY g")
-    def servesRollup = q.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toUri.getPath)
-          case _ => Nil
-        }
-    }.flatten.exists(_.startsWith(loc))
+    def servesRollup = graft.plans.ScanRoots.filesRead(
+      q.queryExecution.optimizedPlan, _.startsWith(loc)).nonEmpty
     assert(!servesRollup, "un-armed rollup must not serve")
     val r = spark.sql(
       s"CALL $cat.system.enable_rollup_rewrite('$loc')").collect().head

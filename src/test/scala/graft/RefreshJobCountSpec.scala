@@ -1,0 +1,104 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.types._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.catalog.HashComponent
+import graft.table.GraftTable
+import graft.tools.{MaterializedRollup, SecondaryIndex, VectorIndex}
+
+/** Job-count guard for the incremental refresh of all three derived-table
+  * kinds. One source carries a secondary index, a rollup and a vector
+  * index; each refresh call's Spark jobs are counted through a listener
+  * and must stay at or under the counts the refresh path had when this
+  * guard was written (a one-row fast-path window, the first refresh after
+  * build, and a window spanning a compaction — the snapshot-diff path). */
+class RefreshJobCountSpec extends AnyFunSuite {
+  lazy val spark = SparkTestSession.spark
+
+  private val TagKey = "graft.spec.refreshJobCount"
+
+  /** Spark jobs `body` starts. Counted by a local property rather than a
+    * job group: broadcast exchanges re-group their own jobs but keep the
+    * caller's local properties, and background work on other suites'
+    * tables never carries the tag. */
+  private def jobs(body: => Boolean): Int = {
+    val tag = java.util.UUID.randomUUID().toString
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (js.properties != null && tag == js.properties.getProperty(TagKey))
+          n.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.setLocalProperty(TagKey, tag)
+    try {
+      assert(body, "the window must refresh")
+      org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark)
+    } finally {
+      spark.sparkContext.setLocalProperty(TagKey, null)
+      spark.sparkContext.removeSparkListener(l)
+    }
+    n.get
+  }
+
+  test("refresh job counts stay at or under the recorded floors for every kind") {
+    val dir = Files.createTempDirectory("graft-rjc-").toString
+    val schema = StructType(Seq(
+      StructField("g", IntegerType, nullable = false),
+      StructField("id", LongType, nullable = false),
+      StructField("v", StringType),
+      StructField("x", DoubleType),
+      StructField("emb", ArrayType(FloatType, containsNull = true))))
+    def rows(ids: Seq[Long], salt: Int) = spark.createDataFrame(
+      java.util.Arrays.asList(ids.map { i =>
+        Row((i % 8).toInt, i, s"v${i}_$salt", i.toDouble + salt,
+          Seq(i % 7 + 1f, i % 5 + salt.toFloat, i % 3 + 1f, 1f))
+      }: _*), schema)
+    spark.conf.set("graft.maintain.auto", "false")
+    val (src, sidx, roll, vidx) =
+      try {
+        val src = GraftTable.create(spark, s"$dir/src", "rjc_src", schema,
+          Seq("g", "id"), hash = Seq(HashComponent(Seq("id"), 4)),
+          data = Some(rows(1L to 400L, 0)))
+        (src,
+          SecondaryIndex.build(spark, src, "v", s"$dir/sidx", 4),
+          MaterializedRollup.build(spark, src, Seq("g"),
+            Seq("n" -> "count(*)", "sx" -> "sum(x)"), s"$dir/roll", 4),
+          VectorIndex.build(spark, src, "id", "emb", s"$dir/vidx", 4))
+      } finally spark.conf.unset("graft.maintain.auto")
+    def refreshAll(): (Int, Int, Int) = (
+      jobs(SecondaryIndex.refresh(spark, sidx)),
+      jobs(MaterializedRollup.refresh(spark, roll)),
+      jobs(VectorIndex.refresh(spark, vidx)))
+
+    src.upsert(rows(Seq(11L), 1))
+    val first = refreshAll()
+    src.upsert(rows(Seq(12L), 2))
+    val steady = refreshAll()
+    src.upsert(rows(Seq(13L), 3))
+    src.compact()
+    val compacted = refreshAll()
+    info(s"jobs (sindex, rollup, vindex): first $first, steady $steady, " +
+      s"across compaction $compacted")
+
+    def within(got: (Int, Int, Int), floor: (Int, Int, Int), what: String) =
+      assert(got._1 <= floor._1 && got._2 <= floor._2 && got._3 <= floor._3,
+        s"$what refresh jobs (sindex, rollup, vindex) $got exceed $floor")
+    within(first, (5, 5, 6), "first")
+    within(steady, (7, 6, 8), "steady-state fast-path")
+    within(compacted, (11, 12, 19), "across-compaction")
+
+    // the guarded refreshes stayed exact: each derived table equals a
+    // rebuild from the current source
+    val live = src.scan().collect().map(r => r.getLong(1) -> r.getString(2)).toMap
+    assert(sidx.scan().collect().map(r => r.getLong(2) -> r.getString(0)).toMap == live)
+    assert(roll.scan().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap ==
+      live.keys.groupBy(i => (i % 8).toInt).map { case (g, ids) => g -> ids.size.toLong })
+    assert(vidx.scan().count() == live.size)
+  }
+}

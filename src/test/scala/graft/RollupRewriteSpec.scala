@@ -22,14 +22,8 @@ class RollupRewriteSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def readsRollup(df: DataFrame, rollupLoc: String): Boolean =
-    df.queryExecution.optimizedPlan.collect {
-      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        lr.relation match {
-          case fs: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            fs.location.rootPaths.map(_.toUri.getPath)
-          case _ => Nil
-        }
-    }.flatten.exists(_.startsWith(rollupLoc))
+    graft.plans.ScanRoots.filesRead(df.queryExecution.optimizedPlan,
+      _.startsWith(rollupLoc)).nonEmpty
 
   private def rows(df: DataFrame): Set[Seq[Any]] =
     df.collect().map(_.toSeq).toSet

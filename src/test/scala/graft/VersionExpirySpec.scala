@@ -143,6 +143,33 @@ class VersionExpirySpec extends AnyFunSuite {
     } finally GraftTable.drop(idx.location, force = true)
   }
 
+  test("expiry through another spelling of the source path still honours the derived watermark") {
+    val loc = Files.createTempDirectory("graft-expspell-").toString
+    val df = (1L to 50L).map(i => (i, s"n_$i")).toDF("k", "name")
+    val t = GraftTable.create(spark, loc, "expspell", df.schema, Seq("k"),
+      data = Some(df)) // v1
+    val idx = graft.tools.SecondaryIndex.build(spark, t,
+      "name", Files.createTempDirectory("graft-expspell-i-").toString)
+    spark.conf.set("graft.derived.buildGraceMs", "0")
+    try {
+      t.upsert(Seq((3L, "renamed_3")).toDF("k", "name")) // v2
+      t.upsert(Seq((4L, "renamed_4")).toDF("k", "name")) // v3
+      Seq(s"$loc/", s"$loc/../${Paths.get(loc).getFileName}").foreach { spelled =>
+        assert(GraftTable.load(spark, spelled).expireVersions(1, 0L).isEmpty,
+          s"expiry through '$spelled' must floor at the index watermark")
+        assert(graft.tools.DerivedTables.registered(loc).nonEmpty,
+          s"expiry through '$spelled' must keep the live index registered")
+      }
+      assert(Files.exists(Paths.get(loc, "_graft", "v1.json")))
+      assert(graft.tools.SecondaryIndex.refresh(spark, idx))
+      assert(graft.tools.SecondaryIndex.lookup(spark, idx, Seq("renamed_3", "n_4"))
+        .collect().map(_.getLong(0)).toSet == Set(3L))
+    } finally {
+      spark.conf.unset("graft.derived.buildGraceMs")
+      GraftTable.drop(idx.location, force = true)
+    }
+  }
+
   test("a build in flight (marker without watermark yet) floors retention for its grace window") {
     val loc = Files.createTempDirectory("graft-expbuild-").toString
     val df = (1L to 50L).map(i => (i, i * 2)).toDF("k", "v")
