@@ -1324,7 +1324,6 @@ object Queries {
         graft.tools.SecondaryIndex.lookupWhere(s, idx,
           Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("c_nationkey", 5L),
             org.apache.spark.sql.sources.LessThanOrEqual("c_nationkey", 7L)),
-          col("c_nationkey") >= 5L && col("c_nationkey") <= 7L,
           assertPrune = true).collect()
         // the interval matches ~180 keys — every PK bucket, so a strict-
         // subset fetch assert cannot discriminate; the COVERING serve can:
@@ -2630,14 +2629,7 @@ object Queries {
       val filters: Seq[org.apache.spark.sql.sources.Filter] = Seq(
         org.apache.spark.sql.sources.LessThanOrEqual("user_id", uq),
         org.apache.spark.sql.sources.LessThan("ts", tsLit))
-      val kept = graft.sources.PartitionPruner.pruneFiles(
-        t.meta, t.meta.baseFiles, filters)
-      if (kept.length * 2 > t.meta.baseFiles.length)
-        throw new IllegalStateException(
-          s"zone maps must prune the clustered box: kept ${kept.length} of " +
-            s"${t.meta.baseFiles.length}")
-      t.scanPruned(filters)
-        .filter(col("user_id") <= uq && unix_micros(col("ts")) < tmid)
+      t.scanPruned(filters, assertPrune = true)
         .groupBy("event_type")
         .agg(count(lit(1)).as("n"), sum("user_id").as("su"))
         .orderBy("event_type")

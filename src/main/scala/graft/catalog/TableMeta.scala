@@ -96,6 +96,11 @@ case class ColStat(
     histogram: Option[Seq[HBin]] = None,
     histogramHeight: Option[Double] = None)
 
+/** The loser of an optimistic commit race: another writer already
+  * published the version this commit meant to write ([[TableMeta.write]]).
+  * Retry loops and best-effort maintenance catch it by type. */
+class ConcurrentCommitException(msg: String) extends IllegalStateException(msg)
+
 /** One hash-bucket partition component over key columns
   * (reference: PartitionSchemaPB common/common.proto:355-398). */
 case class HashComponent(cols: Seq[String], buckets: Int)
@@ -337,7 +342,7 @@ object TableMeta {
         Files.write(vf, bytes, StandardOpenOption.CREATE, StandardOpenOption.TRUNCATE_EXISTING)
     } catch {
       case _: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
+        throw new ConcurrentCommitException(
           s"concurrent commit detected: version ${meta.version} already exists at ${meta.location}")
     }
     // Atomic pointer swing = our single-writer commit protocol (the Spark

@@ -2,13 +2,13 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, GlobalLimit, Join, LocalLimit, LogicalPlan, Project, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 
 import graft.catalog.TableMeta
 import graft.table.GraftTable
@@ -220,7 +220,7 @@ object IndexRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** One servable probe: probe builders parameterized by the index's
+  /** One servable probe: its source filters parameterized by the index's
     * PHYSICAL lead column name (the source column for a plain index, the
     * synthesized value column for a functional one). `canon` is the key's
     * canonical form (what matches the armed index); `positions` are the
@@ -230,8 +230,7 @@ object IndexRewrite extends Rule[LogicalPlan] {
     * by construction, so they try first). */
   private final case class Servable(canon: String,
       positions: Seq[Int], nLiterals: Int, isRange: Boolean,
-      filters: String => Seq[org.apache.spark.sql.sources.Filter],
-      cond: String => Column)
+      filters: String => Seq[org.apache.spark.sql.sources.Filter])
 
   /** Literal-only, null-free, type-exact equality/IN values of `e` over a
     * single canonical key — Scala-converted. Shared by candidate
@@ -290,51 +289,47 @@ object IndexRewrite extends Rule[LogicalPlan] {
     val conjuncts = split(cond)
     if (conjuncts.exists(!_.deterministic)) return (conjuncts, Nil)
     def rangeOne(canon: String, i: Int, v: Any,
-        f: (String, Any) => org.apache.spark.sql.sources.Filter,
-        c: (Column, Any) => Column): Servable =
-      Servable(canon, Seq(i), 1, isRange = true,
-        n => Seq(f(n, v)), n => c(col(n), v))
+        f: (String, Any) => org.apache.spark.sql.sources.Filter): Servable =
+      Servable(canon, Seq(i), 1, isRange = true, n => Seq(f(n, v)))
     val raw = conjuncts.zipWithIndex.flatMap { case (c, i) =>
       val eq = eqValues(c).map { case (canon, vs) =>
         Servable(canon, Seq(i), vs.length, isRange = false,
-          n => Seq(sf.In(n, vs.toArray)),
-          n => col(n).isin(vs: _*))
+          n => Seq(sf.In(n, vs.toArray)))
       }
       def range: Option[Servable] = c match {
         case GreaterThan(k, l: Literal) =>
-          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.GreaterThan, _ > _) }
+          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.GreaterThan) }
         case GreaterThan(l: Literal, k) =>
-          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.LessThan, _ < _) }
+          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.LessThan) }
         case GreaterThanOrEqual(k, l: Literal) =>
-          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.GreaterThanOrEqual, _ >= _) }
+          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.GreaterThanOrEqual) }
         case GreaterThanOrEqual(l: Literal, k) =>
-          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.LessThanOrEqual, _ <= _) }
+          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.LessThanOrEqual) }
         case LessThan(k, l: Literal) =>
-          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.LessThan, _ < _) }
+          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.LessThan) }
         case LessThan(l: Literal, k) =>
-          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.GreaterThan, _ > _) }
+          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.GreaterThan) }
         case LessThanOrEqual(k, l: Literal) =>
-          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.LessThanOrEqual, _ <= _) }
+          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.LessThanOrEqual) }
         case LessThanOrEqual(l: Literal, k) =>
-          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.GreaterThanOrEqual, _ >= _) }
+          bound(k, l).map { case (cn, v) => rangeOne(cn, i, v, sf.GreaterThanOrEqual) }
         case StartsWith(k, l: Literal) =>
           bound(k, l).collect { case (cn, v: String) =>
             Servable(cn, Seq(i), 1, isRange = true,
-              n => Seq(sf.StringStartsWith(n, v)),
-              n => col(n).startsWith(v)) }
+              n => Seq(sf.StringStartsWith(n, v))) }
         case _ => None
       }
       eq.orElse(range)
     }
     val (ranges, points) = raw.partition(_.isRange)
     // merge every range/prefix bound over one key into ONE interval probe
-    // (filters concatenate, conditions AND) — the unit of a range scan is
+    // (filters concatenate) — the unit of a range scan is
     // the interval, and probing a half-open bound when the other half sits
     // one conjunct over would over-match for nothing
     val merged = ranges.groupBy(_.canon).values.map { g =>
       g.reduce { (x, y) =>
         Servable(x.canon, x.positions ++ y.positions, 1, isRange = true,
-          n => x.filters(n) ++ y.filters(n), n => x.cond(n) && y.cond(n))
+          n => x.filters(n) ++ y.filters(n))
       }
     }.toSeq.sortBy(_.positions.min)
     (conjuncts, points ++ merged)
@@ -372,6 +367,89 @@ object IndexRewrite extends Rule[LogicalPlan] {
     }.flatten
   }
 
+  /** The skeleton every serve runs in: `body` under the re-entrancy
+    * guard, with ONE decline path. A serve never blocks the query, and
+    * never declines silently either: the lookup contract's own bound (a
+    * predicate matching more than rewriteMaxKeys keys is a scan, not a
+    * point read) is expected planner traffic — it records `bound` and
+    * logs at info; anything else (corrupt index, lost executor) records
+    * `error` and warns, so a persistently sick index degrading every
+    * query to a scan leaves a trail. `locs` names the indexes a decline
+    * is charged to, read when it fires. */
+  private def serving(spark: SparkSession, what: String,
+      locs: => Iterable[String])(body: => Option[LogicalPlan])
+      : Option[LogicalPlan] =
+    guarded {
+      try body catch {
+        case e: Exception =>
+          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+          if (msg.contains("matched more than")) {
+            locs.foreach(ServingStats.bound(spark, _))
+            logInfo(s"$what declined (probe over rewriteMaxKeys); " +
+              "keeping the scan plan")
+          } else {
+            locs.foreach(ServingStats.error(spark, _))
+            logWarning(s"$what declined after error; keeping the scan " +
+              s"plan: $msg")
+          }
+          None
+      }
+    }
+
+  /** The index's ONE manifest snapshot for a serve. Watermark and index
+    * version move together in a refresh commit, so reading both from one
+    * manifest is the whole TOCTOU defense: the watermark must equal the
+    * base version the scan-root MATCH observed (not a later re-read of
+    * "current"), and the serve then pins this index version and that base
+    * version. A stale index records `stale` and never serves. */
+  private def pinnedIndex(spark: SparkSession, indexLoc: String,
+      baseV: Long): Option[(GraftTable, TableMeta)] = {
+    val idx = GraftTable.load(spark, indexLoc)
+    val im = idx.meta
+    if (im.propsMap(SecondaryIndex.SrcVersionKey).toLong == baseV) Some((idx, im))
+    else { ServingStats.stale(spark, indexLoc); None }
+  }
+
+  /** The columns an index table carries that name base columns: the
+    * indexed columns plus the base PK every entry holds — minus a
+    * functional index's synthesized value column, which no base attribute
+    * names. */
+  private def carriedCols(im: TableMeta): Seq[String] = {
+    val functional = im.propsMap.contains(SecondaryIndex.ExprKey)
+    im.columns.map(_.name)
+      .filterNot(n => functional && n == SecondaryIndex.ExprCol)
+  }
+
+  /** `looked`'s optimized plan under a Project that aliases its columns,
+    * by name, to `want`'s attribute ids — the splice every serve ends in,
+    * so the operators above resolve untouched. None when a wanted column
+    * is missing or its type diverges. */
+  private def spliceByName(looked: DataFrame,
+      want: Seq[Attribute]): Option[Project] = {
+    val lp = looked.queryExecution.optimizedPlan
+    val byName = lp.output.map(a => a.name.toLowerCase -> a).toMap
+    val mapped = want.map { a =>
+      byName.get(a.name.toLowerCase).filter(_.dataType == a.dataType)
+        .map(r => Alias(r, a.name)(exprId = a.exprId))
+    }
+    if (mapped.exists(_.isEmpty)) None else Some(Project(mapped.flatten, lp))
+  }
+
+  /** The index probe for a served pick: the pick's filters over the lead,
+    * plus an IN per residual equality over a COMPOSITE index's trailing
+    * columns. Those narrow the probe (their zone maps prune within the
+    * lead's hash buckets and the matched-key set shrinks), and they STAY
+    * in the residual too — re-applying an equality is free and keeps the
+    * exactness argument one line. */
+  private def probeFilters(im: TableMeta, served: Servable,
+      residual: Seq[Expression]): Seq[org.apache.spark.sql.sources.Filter] = {
+    val physCols = SecondaryIndex.indexedCols(im.propsMap)
+    val byTrail = physCols.tail.map(n => n.toLowerCase -> n).toMap
+    served.filters(physCols.head) ++ residual.flatMap(eqValues).flatMap {
+      case (canon, vs) => byTrail.get(canon).map(sf.In(_, vs.toArray))
+    }
+  }
+
   /** The index-union replacement for a served Filter: one bounded probe
     * per disjunct pick (each possibly a different index of the base),
     * matched keys unioned, ONE base fetch, and the FULL original
@@ -383,65 +461,34 @@ object IndexRewrite extends Rule[LogicalPlan] {
   private def tryUnionRewrite(spark: SparkSession, f: Filter,
       indexes: Map[String, (String, Seq[String])], baseLoc: String,
       baseV: Long, picks: Seq[Servable], maxKeys: Int): Option[LogicalPlan] = {
-    // the DISTINCT indexes the union involves — for the stats hooks,
-    // visible to the catch too
-    val involved = scala.collection.mutable.LinkedHashSet.empty[String]
-    busy.set(true)
-    try {
-      // one meta snapshot per DISTINCT index (two disjuncts over one
-      // column share a probe target), watermark-checked against the
-      // matched base version — same TOCTOU posture as tryRewrite
-      val metaCache = scala.collection.mutable.Map
-        .empty[String, Option[(GraftTable, TableMeta)]]
-      def indexFor(canon: String): Option[(GraftTable, TableMeta)] =
+    // one pinned snapshot per DISTINCT index (two disjuncts over one
+    // column share a probe target); the fresh ones are what the union
+    // involves, for the stats hooks
+    val pinned = scala.collection.mutable.LinkedHashMap
+      .empty[String, Option[(GraftTable, TableMeta)]]
+    def involved = pinned.collect { case (loc, Some(_)) => loc }
+    serving(spark, "index union rewrite", involved) {
+      val probes = picks.map { c =>
         indexes.collectFirst {
           case (loc, (src, cols))
-              if src == baseLoc && cols.headOption.contains(canon) => loc
-        }.flatMap { loc =>
-          metaCache.getOrElseUpdate(loc, {
-            val idx = GraftTable.load(spark, loc)
-            val im = idx.meta
-            if (im.propsMap(SecondaryIndex.SrcVersionKey).toLong == baseV) {
-              involved += loc
-              Some((idx, im))
-            } else { ServingStats.stale(spark, loc); None }
-          })
-        }
-      val probes = picks.map { c =>
-        indexFor(c.canon).map { case (idx, im) =>
-          val lead = SecondaryIndex.indexedCols(im.propsMap).head
-          (idx, c.filters(lead), c.cond(lead), im.version)
-        }
+              if src == baseLoc && cols.headOption.contains(c.canon) => loc
+        }.flatMap(loc => pinned.getOrElseUpdate(loc,
+          pinnedIndex(spark, loc, baseV)))
+          .map { case (idx, im) =>
+            (idx, c.filters(SecondaryIndex.indexedCols(im.propsMap).head),
+              im.version)
+          }
       }
-      if (probes.exists(_.isEmpty)) return None
-      val looked = SecondaryIndex.lookupUnionWhere(spark, probes.flatten,
-        baseV, maxKeys)
-      val lp = looked.queryExecution.optimizedPlan
-      val byName = lp.output.map(a => a.name.toLowerCase -> a).toMap
-      val mapped = f.output.map { a =>
-        byName.get(a.name.toLowerCase).filter(_.dataType == a.dataType)
-          .map(r => Alias(r, a.name)(exprId = a.exprId))
+      if (probes.exists(_.isEmpty)) None
+      else spliceByName(SecondaryIndex.lookupUnionWhere(spark,
+          probes.flatten, baseV, maxKeys), f.output).map { projected =>
+        // the whole ORIGINAL predicate re-applies over the fetched rows:
+        // the union is a superset (each probe over-matches its disjunct's
+        // other conjuncts), and re-filtering a bounded fetch is free
+        involved.foreach(ServingStats.serve(spark, _, "union"))
+        Filter(f.condition, projected)
       }
-      if (mapped.exists(_.isEmpty)) return None
-      // the whole ORIGINAL predicate re-applies over the fetched rows:
-      // the union is a superset (each probe over-matches its disjunct's
-      // other conjuncts), and re-filtering a bounded fetch is free
-      involved.foreach(ServingStats.serve(spark, _, "union"))
-      Some(Filter(f.condition, Project(mapped.map(_.get), lp)))
-    } catch {
-      case e: Exception =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        if (msg.contains("matched more than")) {
-          involved.foreach(ServingStats.bound(spark, _))
-          logInfo("index union rewrite declined (probe over " +
-            "rewriteMaxKeys); keeping the scan plan")
-        } else {
-          involved.foreach(ServingStats.error(spark, _))
-          logWarning("index union rewrite declined after error; " +
-            s"keeping the scan plan: $msg")
-        }
-        None
-    } finally busy.set(false)
+    }
   }
 
   /** Translate a Filter condition under a top-k Sort into an INDEX-ENTRY
@@ -456,17 +503,17 @@ object IndexRewrite extends Rule[LogicalPlan] {
     * probe are exactly the matching non-null-lead base rows. */
   private def entryProbe(cond: Expression, leadCanon: String,
       lead: String, carried: Seq[String], maxKeys: Int)
-      : Option[(Seq[org.apache.spark.sql.sources.Filter], Column)] = {
+      : Option[Seq[org.apache.spark.sql.sources.Filter]] = {
     val (conjuncts, cands) = servables(cond)
     val byName = carried.map(n => n.toLowerCase -> n).toMap
     val parts = scala.collection.mutable.ArrayBuffer
-      .empty[(Seq[org.apache.spark.sql.sources.Filter], Column)]
+      .empty[org.apache.spark.sql.sources.Filter]
     var covered = Set.empty[Int]
     cands.foreach { c =>
       val phys = if (c.canon == leadCanon) Some(lead) else byName.get(c.canon)
       if (phys.isDefined && c.nLiterals <= maxKeys &&
           !c.positions.exists(covered)) {
-        parts += ((c.filters(phys.get), c.cond(phys.get)))
+        parts ++= c.filters(phys.get)
         covered ++= c.positions
       }
     }
@@ -477,15 +524,12 @@ object IndexRewrite extends Rule[LogicalPlan] {
         case IsNotNull(a: Attribute) if servedRefs.contains(a) =>
           covered += i // implied: the served conjuncts never match null
         case IsNotNull(a: Attribute) if byName.contains(a.name.toLowerCase) =>
-          val phys = byName(a.name.toLowerCase)
-          parts += ((Seq(sf.IsNotNull(phys)), col(phys).isNotNull))
+          parts += sf.IsNotNull(byName(a.name.toLowerCase))
           covered += i
         case _ => ()
       }
     }
-    if (covered.size != conjuncts.length) None
-    else Some((parts.toSeq.flatMap(_._1),
-      parts.toSeq.map(_._2).foldLeft(lit(true))(_ && _)))
+    if (covered.size != conjuncts.length) None else Some(parts.toSeq)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
@@ -551,7 +595,7 @@ object IndexRewrite extends Rule[LogicalPlan] {
                 }.flatMap { indexLoc =>
                   val residual = conjuncts.zipWithIndex
                     .collect { case (e, i) if !c.positions.contains(i) => e }
-                  tryRewrite(spark, f, indexLoc, baseLoc, baseV, c,
+                  tryRewrite(spark, f, indexLoc, baseV, c,
                     residual, maxKeys)
                 }
               }.nextOption())
@@ -746,197 +790,132 @@ object IndexRewrite extends Rule[LogicalPlan] {
   private def probeJoin(spark: SparkSession, fact: LogicalPlan,
       factFilter: Option[Filter], indexLoc: String, baseV: Long,
       dim: LogicalPlan, dimExpr: Expression,
-      maxKeys: Int): Option[LogicalPlan] = {
-    busy.set(true)
-    try {
-      val idx = GraftTable.load(spark, indexLoc)
-      val im = idx.meta // one snapshot: version + watermark (see tryRewrite)
-      if (im.propsMap(SecondaryIndex.SrcVersionKey).toLong != baseV) {
-        ServingStats.stale(spark, indexLoc); return None
-      }
-      val keyAlias = Alias(dimExpr, "__graft_join_key")()
-      val dimKeys = org.apache.spark.sql.GraftSqlBridge
-        .ofRows(spark, Project(Seq(keyAlias), dim))
-        .filter(col("__graft_join_key").isNotNull)
-        .distinct().limit(maxKeys + 1)
-      // plan-estimated-small dim → one static-planned probe job (the
-      // output is bounded either way; only the dim's own scan size decides
-      // whether AQE's runtime coalescing is worth its per-stage jobs)
-      val vals = GraftTable.withStaticPlan(spark,
-        GraftTable.planBytes(dimKeys) <= GraftTable.staticPlanMaxBytes) {
-        dimKeys.collect()
-      }.map(_.get(0))
-      // over the bound: the dim is key-rich enough that this IS a join,
-      // not a point-read fan — keep the scan plan. Empty: the join is
-      // empty anyway; the scan plan handles it without a probe.
-      if (vals.isEmpty || vals.length > maxKeys) return None
-      val lead = SecondaryIndex.indexedCols(im.propsMap).head
-      val looked = SecondaryIndex.lookupWhere(spark, idx,
-        Seq(sf.In(lead, vals)), col(lead).isin(vals.toIndexedSeq: _*),
-        maxKeys = maxKeys, pinned = Some((im.version, baseV)))
-      val lp = looked.queryExecution.optimizedPlan
-      val byName = lp.output.map(a => a.name.toLowerCase -> a).toMap
-      // the re-applied fact Filter may reference columns a pruning
-      // Project above it dropped from fact.output — alias the union,
-      // filter, then project back down to the attrs the Join expects
-      val want = (fact.output ++
-        factFilter.map(_.condition.references.toSeq).getOrElse(Nil))
-        .foldLeft(Vector.empty[Attribute])((acc, a) =>
-          if (acc.exists(_.exprId == a.exprId)) acc else acc :+ a)
-      val mapped = want.map { a =>
-        byName.get(a.name.toLowerCase).filter(_.dataType == a.dataType)
-          .map(r => Alias(r, a.name)(exprId = a.exprId))
-      }
-      if (mapped.exists(_.isEmpty)) return None
-      val projected = Project(mapped.map(_.get), lp)
-      val filtered = factFilter
-        .map(fl => Filter(fl.condition, projected): LogicalPlan)
-        .getOrElse(projected)
-      ServingStats.serve(spark, indexLoc, "join")
-      Some(if (want.size == fact.output.size) filtered
-           else Project(fact.output, filtered))
-    } catch {
-      case e: Exception =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        if (msg.contains("matched more than")) {
-          ServingStats.bound(spark, indexLoc)
-          logInfo(s"index join rewrite via $indexLoc declined (probe over " +
-            "rewriteMaxKeys); keeping the scan plan")
-        } else {
-          ServingStats.error(spark, indexLoc)
-          logWarning(s"index join rewrite via $indexLoc declined after " +
-            s"error; keeping the scan plan: $msg")
+      maxKeys: Int): Option[LogicalPlan] =
+    serving(spark, s"index join rewrite via $indexLoc", Seq(indexLoc)) {
+      pinnedIndex(spark, indexLoc, baseV).flatMap { case (idx, im) =>
+        val keyAlias = Alias(dimExpr, "__graft_join_key")()
+        val dimKeys = org.apache.spark.sql.GraftSqlBridge
+          .ofRows(spark, Project(Seq(keyAlias), dim))
+          .filter(col("__graft_join_key").isNotNull)
+          .distinct().limit(maxKeys + 1)
+        // plan-estimated-small dim → one static-planned probe job (the
+        // output is bounded either way; only the dim's own scan size
+        // decides whether AQE's runtime coalescing is worth its per-stage
+        // jobs)
+        val vals = GraftTable.withStaticPlan(spark,
+          GraftTable.planBytes(dimKeys) <= GraftTable.staticPlanMaxBytes) {
+          dimKeys.collect()
+        }.map(_.get(0))
+        // over the bound: the dim is key-rich enough that this IS a join,
+        // not a point-read fan — keep the scan plan. Empty: the join is
+        // empty anyway; the scan plan handles it without a probe.
+        if (vals.isEmpty || vals.length > maxKeys) None
+        else {
+          val lead = SecondaryIndex.indexedCols(im.propsMap).head
+          val looked = SecondaryIndex.lookupWhere(spark, idx,
+            Seq(sf.In(lead, vals)), maxKeys = maxKeys,
+            pinned = Some((im.version, baseV)))
+          // the re-applied fact Filter may reference columns a pruning
+          // Project above it dropped from fact.output — alias the union,
+          // filter, then project back down to the attrs the Join expects
+          val want = (fact.output ++
+            factFilter.map(_.condition.references.toSeq).getOrElse(Nil))
+            .foldLeft(Vector.empty[Attribute])((acc, a) =>
+              if (acc.exists(_.exprId == a.exprId)) acc else acc :+ a)
+          spliceByName(looked, want).map { projected =>
+            val filtered = factFilter
+              .map(fl => Filter(fl.condition, projected): LogicalPlan)
+              .getOrElse(projected)
+            ServingStats.serve(spark, indexLoc, "join")
+            if (want.size == fact.output.size) filtered
+            else Project(fact.output, filtered)
+          }
         }
-        None
-    } finally busy.set(false)
-  }
+      }
+    }
 
   private def tryTopK(spark: SparkSession, gl: GlobalLimit, ll: LocalLimit,
       projOpt: Option[Project], sort: Sort, indexLoc: String, baseV: Long,
       k: Int, desc: Boolean, ties: Boolean, maxKeys: Int,
       needNullFree: Boolean = false,
       keyRefs: Seq[String] = Nil,
-      filtOpt: Option[Filter] = None): Option[LogicalPlan] = {
-    busy.set(true)
-    try {
-      val idx = GraftTable.load(spark, indexLoc)
-      val im = idx.meta // one snapshot: version + watermark (see tryRewrite)
-      if (im.propsMap(SecondaryIndex.SrcVersionKey).toLong != baseV) {
-        ServingStats.stale(spark, indexLoc); return None
-      }
-      // FILTERED top-k: the condition between the Sort and the scan must
-      // translate whole into an index-entry probe, or the serve declines
-      // (a conjunct the entries cannot evaluate would make the k fetched
-      // rows the wrong k). The fetched rows then need no residual — they
-      // satisfy the predicate by the entry-equals-base-row invariant.
-      val physCols = SecondaryIndex.indexedCols(im.propsMap)
-      val leadCanon = im.propsMap.get(SecondaryIndex.ExprKey)
-        .getOrElse(physCols.head.toLowerCase)
-      val functional0 = im.propsMap.contains(SecondaryIndex.ExprKey)
-      // every column the index table carries (the indexed columns plus
-      // the base PK each entry holds) can evaluate filter conjuncts on
-      // entries — minus a functional index's synthesized value column,
-      // which no base attribute names
-      val carried = im.columns.map(_.name)
-        .filterNot(n => functional0 && n == SecondaryIndex.ExprCol)
-      val whereOpt: Option[(Seq[org.apache.spark.sql.sources.Filter],
-        org.apache.spark.sql.Column)] = filtOpt match {
-        case None => None
-        case Some(fc) =>
-          entryProbe(fc.condition, leadCanon, physCols.head, carried,
-            maxKeys) match {
-            case Some(p) => Some(p)
-            case None => return None
-          }
-      }
-      if (needNullFree) {
+      filtOpt: Option[Filter] = None): Option[LogicalPlan] =
+    serving(spark, s"index top-k rewrite via $indexLoc", Seq(indexLoc)) {
+      pinnedIndex(spark, indexLoc, baseV).flatMap { case (idx, im) =>
+        val physCols = SecondaryIndex.indexedCols(im.propsMap)
+        val leadCanon = im.propsMap.get(SecondaryIndex.ExprKey)
+          .getOrElse(physCols.head.toLowerCase)
+        // every column the index table carries can evaluate filter
+        // conjuncts on entries
+        val carried = carriedCols(im)
+        // FILTERED top-k: the condition between the Sort and the scan must
+        // translate whole into an index-entry probe, or the serve declines
+        // (a conjunct the entries cannot evaluate would make the k fetched
+        // rows the wrong k). The fetched rows then need no residual — they
+        // satisfy the predicate by the entry-equals-base-row invariant.
+        val where = filtOpt match {
+          case None => Some(Nil)
+          case Some(fc) => entryProbe(fc.condition, leadCanon, physCols.head,
+            carried, maxKeys)
+        }
         // prove the key null-free from the DECLARED schema at the pinned
         // version: every referenced column NOT NULL — otherwise a
         // nulls-first top-k could need null-lead rows the index never holds
-        val sm = GraftTable.load(spark,
-          im.propsMap(SecondaryIndex.SrcLocKey)).metaAt(baseV)
-        val ok = keyRefs.nonEmpty && keyRefs.forall(r =>
-          sm.columns.exists(c => c.name.equalsIgnoreCase(r) && !c.nullable))
-        if (!ok) return None
-      }
-      // COVERING top-k first: an attribute-only Project above the Sort
-      // whose references (plus the sort key's) are all index-carried
-      // columns serves with NO base fetch and NO plan-time collect — one
-      // zone-cut-pruned index scan, ordered and limited, spliced under
-      // the re-applied Sort. Needs a delta-free index at the pinned
-      // version (manifest row counts are then exact, proving ≥ k entries
-      // — fewer could need null-lead rows the index never holds) and
-      // single-key sorts (tie sets need the fetch path's completion).
-      if (!ties && whereOpt.isEmpty) {
-        // what the plan above consumes is the Sort's own output — a
-        // column-pruned query leaves an attribute-only Project UNDER the
-        // Sort, so `SELECT id, v … ORDER BY v LIMIT k` needs exactly
-        // (id, v) here, not the full row. (A FILTERED top-k skips the
-        // covering branch: manifest row counts prove ≥ k entries for the
-        // unfiltered population only — the fetch path proves it by
-        // fetching k matching entries instead.)
-        val needs = sort.child.output
-        val functional = im.propsMap.contains(SecondaryIndex.ExprKey)
-        val idxCols = im.columns.map(_.name.toLowerCase)
-          .filterNot(n => functional && n == SecondaryIndex.ExprCol).toSet
-        val eligible = im.deltaFiles.isEmpty &&
-          im.baseFiles.forall(_.rows >= 0) &&
-          im.baseFiles.map(_.rows).sum >= k &&
-          needs.forall(a => idxCols.contains(a.name.toLowerCase))
-        if (eligible) {
-          val entries = SecondaryIndex.topEntries(spark, idx, k, desc,
-            Some(im.version))
-          val lp = entries.queryExecution.optimizedPlan
-          val byName = lp.output.map(a => a.name.toLowerCase -> a).toMap
-          val mapped = needs.map(a =>
-            byName.get(a.name.toLowerCase).filter(_.dataType == a.dataType)
-              .map(r => Alias(r, a.name)(exprId = a.exprId)))
-          if (mapped.forall(_.isDefined)) {
-            val newSort = sort.copy(child = Project(mapped.map(_.get), lp))
-            val newInner =
-              projOpt.map(p => p.copy(child = newSort)).getOrElse(newSort)
-            ServingStats.serve(spark, indexLoc, "topk_covering")
-            return Some(gl.copy(child = ll.copy(child = newInner)))
+        def nullFree: Boolean = {
+          val sm = GraftTable.load(spark,
+            im.propsMap(SecondaryIndex.SrcLocKey)).metaAt(baseV)
+          keyRefs.nonEmpty && keyRefs.forall(r =>
+            sm.columns.exists(c => c.name.equalsIgnoreCase(r) && !c.nullable))
+        }
+        // the fetched rows splice under the ORIGINAL Sort, re-applied over
+        // them (they are A valid top-k set; re-sorting orders them; ties
+        // beyond k never change the set the original plan was free to
+        // pick) — and the original Limit nodes stay, so parent operators
+        // see an identical contract. What the plan above consumes is the
+        // Sort's own output — a column-pruned query leaves an
+        // attribute-only Project UNDER the Sort, so `SELECT id, v … ORDER
+        // BY v LIMIT k` needs exactly (id, v) here, not the full row.
+        def splice(looked: DataFrame, path: String) =
+          spliceByName(looked, sort.child.output).map { projected =>
+            val newSort = sort.copy(child = projected)
+            ServingStats.serve(spark, indexLoc, path)
+            gl.copy(child = ll.copy(child =
+              projOpt.map(p => p.copy(child = newSort)).getOrElse(newSort)))
           }
+        where.filter(_ => !needNullFree || nullFree).flatMap { w =>
+          val pinned = Some((im.version, baseV))
+          // COVERING top-k first: when the Sort's output (the sort key
+          // included) is all index-carried columns, the serve needs NO
+          // base fetch and NO plan-time collect — one zone-cut-pruned
+          // index scan, ordered and limited. Needs a delta-free index at
+          // the pinned version (manifest row counts are then exact,
+          // proving ≥ k entries — fewer could need null-lead rows the
+          // index never holds), single-key sorts (tie sets need the fetch
+          // path's completion) and no filter (manifest counts prove ≥ k
+          // entries for the unfiltered population only — the fetch path
+          // proves it by fetching k matching entries instead).
+          val idxCols = carried.map(_.toLowerCase).toSet
+          val covering =
+            if (ties || filtOpt.isDefined || im.deltaFiles.nonEmpty ||
+                !im.baseFiles.forall(_.rows >= 0) ||
+                im.baseFiles.map(_.rows).sum < k ||
+                !sort.child.output.forall(a =>
+                  idxCols.contains(a.name.toLowerCase))) None
+            else splice(SecondaryIndex.topEntries(spark, idx, k, desc,
+              Some(im.version)), "topk_covering")
+          // multi-key ORDER BY fetches the k-th lead value's FULL tie set
+          // so the re-applied sort can order ties by the trailing keys
+          // exactly; single-key fetches exactly k (ties interchangeable)
+          covering.orElse((if (ties)
+            SecondaryIndex.topKTies(spark, idx, k, desc, maxKeys,
+              pinned = pinned, where = w)
+          else
+            SecondaryIndex.topK(spark, idx, k, desc, pinned = pinned,
+              where = w)).flatMap(splice(_,
+            if (filtOpt.isDefined) "topk_filtered" else "topk")))
         }
       }
-      // multi-key ORDER BY fetches the k-th lead value's FULL tie set so
-      // the re-applied sort can order ties by the trailing keys exactly;
-      // single-key fetches exactly k (ties interchangeable there)
-      val looked = (if (ties)
-        SecondaryIndex.topKTies(spark, idx, k, desc, maxKeys,
-          pinned = Some((im.version, baseV)), where = whereOpt)
-      else
-        SecondaryIndex.topK(spark, idx, k, desc,
-          pinned = Some((im.version, baseV)),
-          where = whereOpt)).getOrElse(return None)
-      val lp = looked.queryExecution.optimizedPlan
-      val byName = lp.output.map(a => a.name.toLowerCase -> a).toMap
-      val mapped = sort.child.output.map { a =>
-        byName.get(a.name.toLowerCase).filter(_.dataType == a.dataType)
-          .map(r => Alias(r, a.name)(exprId = a.exprId))
-      }
-      if (mapped.exists(_.isEmpty)) return None
-      // the ORIGINAL Sort re-applies over the k fetched rows (they are A
-      // valid top-k set; re-sorting orders them; ties beyond k never
-      // change the set the original plan was free to pick) — and the
-      // original Limit nodes stay, so parent operators see an identical
-      // contract
-      val newSort = sort.copy(child = Project(mapped.map(_.get), lp))
-      val newInner = projOpt.map(p => p.copy(child = newSort)).getOrElse(newSort)
-      ServingStats.serve(spark, indexLoc,
-        if (filtOpt.isDefined) "topk_filtered" else "topk")
-      Some(gl.copy(child = ll.copy(child = newInner)))
-    } catch {
-      case e: Exception =>
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        if (msg.contains("matched more than")) ServingStats.bound(spark, indexLoc)
-        else ServingStats.error(spark, indexLoc)
-        logWarning(s"index top-k rewrite via $indexLoc declined after " +
-          s"error; keeping the scan plan: $msg")
-        None
-    } finally busy.set(false)
-  }
+    }
 
   /** Candidate extraction + index match for the covering serve: same
     * servable/residual split as the Filter case, but instead of a bounded
@@ -1008,130 +987,44 @@ object IndexRewrite extends Rule[LogicalPlan] {
     * stale, a needed/residual column is not covered, or types diverge. */
   private def coveringPlan(spark: SparkSession, indexLoc: String,
       baseV: Long, served: Servable, residual: Seq[Expression],
-      needed: Seq[Attribute]): Option[LogicalPlan] = {
-    busy.set(true)
-    try {
-      val idx = GraftTable.load(spark, indexLoc)
-      val im = idx.meta // one snapshot: watermark + version (see tryRewrite)
-      if (im.propsMap(SecondaryIndex.SrcVersionKey).toLong != baseV) {
-        ServingStats.stale(spark, indexLoc); return None
-      }
-      val functional = im.propsMap.contains(SecondaryIndex.ExprKey)
-      // the index table's columns ARE base columns (the indexed columns
-      // plus the base PK its entries carry) — except a functional index's
-      // synthesized value column, which no base attribute names
-      val idxCols = im.columns.map(_.name.toLowerCase)
-        .filterNot(n => functional && n == SecondaryIndex.ExprCol).toSet
-      val residualRefs = residual.flatMap(_.references.toSeq)
-      val want = (needed ++ residualRefs)
-        .foldLeft(Vector.empty[Attribute])((acc, a) =>
-          if (acc.exists(_.exprId == a.exprId)) acc else acc :+ a)
-      if (!want.forall(a => idxCols.contains(a.name.toLowerCase))) return None
-      val physCols = SecondaryIndex.indexedCols(im.propsMap)
-      val lead = physCols.head
-      // trailing composite equalities narrow the probe exactly like the
-      // point-fetch path; they stay in the residual too (re-applying an
-      // equality is free and keeps the exactness argument one line)
-      val byTrail = physCols.tail.map(n => n.toLowerCase -> n).toMap
-      val trailing = residual.flatMap(eqValues).flatMap { case (canon, vs) =>
-        byTrail.get(canon).map { phys =>
-          (Seq(sf.In(phys, vs.toArray)): Seq[org.apache.spark.sql.sources.Filter],
-            col(phys).isin(vs: _*))
+      needed: Seq[Attribute]): Option[LogicalPlan] =
+    serving(spark, s"covering index rewrite via $indexLoc", Seq(indexLoc)) {
+      pinnedIndex(spark, indexLoc, baseV).flatMap { case (idx, im) =>
+        // the index table's columns ARE base columns (carriedCols)
+        val idxCols = carriedCols(im).map(_.toLowerCase).toSet
+        val residualRefs = residual.flatMap(_.references.toSeq)
+        val want = (needed ++ residualRefs)
+          .foldLeft(Vector.empty[Attribute])((acc, a) =>
+            if (acc.exists(_.exprId == a.exprId)) acc else acc :+ a)
+        if (!want.forall(a => idxCols.contains(a.name.toLowerCase))) None
+        else spliceByName(idx.scanPruned(probeFilters(im, served, residual),
+            Some(im.version)), want).map { projected =>
+          ServingStats.serve(spark, indexLoc, "covering")
+          residual.reduceOption(And).map(Filter(_, projected))
+            .getOrElse(projected)
         }
       }
-      val probeFilters = served.filters(lead) ++ trailing.flatMap(_._1)
-      val probeCond = trailing.map(_._2).foldLeft(served.cond(lead))(_ && _)
-      val looked = idx.scanPruned(probeFilters, Some(im.version))
-        .filter(probeCond)
-      val lp = looked.queryExecution.optimizedPlan
-      val byName = lp.output.map(a => a.name.toLowerCase -> a).toMap
-      val mapped = want.map { a =>
-        byName.get(a.name.toLowerCase).filter(_.dataType == a.dataType)
-          .map(r => Alias(r, a.name)(exprId = a.exprId))
-      }
-      if (mapped.exists(_.isEmpty)) return None
-      val projected = Project(mapped.map(_.get), lp)
-      ServingStats.serve(spark, indexLoc, "covering")
-      Some(residual.reduceOption(And).map(Filter(_, projected))
-        .getOrElse(projected))
-    } catch {
-      case e: Exception =>
-        ServingStats.error(spark, indexLoc)
-        logWarning(s"covering index rewrite via $indexLoc declined after " +
-          "error; keeping the scan plan: " +
-          Option(e.getMessage).getOrElse(e.getClass.getName))
-        None
-    } finally busy.set(false)
-  }
+    }
 
   private def tryRewrite(spark: SparkSession, f: Filter, indexLoc: String,
-      baseLoc: String, baseV: Long, served: Servable,
-      residual: Seq[Expression], maxKeys: Int): Option[LogicalPlan] = {
-    busy.set(true)
-    try {
-      val idx = GraftTable.load(spark, indexLoc)
-      // ONE meta snapshot: watermark + index version move together in a
-      // refresh commit, so reading both from one manifest is the whole
-      // TOCTOU defense — the watermark must equal the base version the
-      // MATCH observed (not a later re-read of "current"), and the probe
-      // below pins this index version and that base version
-      val im = idx.meta
-      if (im.propsMap(SecondaryIndex.SrcVersionKey).toLong != baseV) {
-        ServingStats.stale(spark, indexLoc); return None
-      }
-      val physCols = SecondaryIndex.indexedCols(im.propsMap)
-      val lead = physCols.head
-      // residual equalities over a composite index's trailing columns
-      // narrow the probe (their zone maps prune within the lead's hash
-      // buckets and the matched-key set shrinks); they STAY in the
-      // residual too — re-applying an equality is free and keeps the
-      // exactness argument one line
-      val byTrail = physCols.tail.map(n => n.toLowerCase -> n).toMap
-      val trailing = residual.flatMap(eqValues).flatMap { case (canon, vs) =>
-        byTrail.get(canon).map { phys =>
-          (Seq(sf.In(phys, vs.toArray)): Seq[org.apache.spark.sql.sources.Filter],
-            col(phys).isin(vs: _*))
+      baseV: Long, served: Servable, residual: Seq[Expression],
+      maxKeys: Int): Option[LogicalPlan] =
+    serving(spark, s"index rewrite via $indexLoc", Seq(indexLoc)) {
+      pinnedIndex(spark, indexLoc, baseV).flatMap { case (idx, im) =>
+        // bounded plan-time probe (DPP posture), version-pinned both
+        // sides; a scan-sized predicate throws the lookup contract and
+        // declines
+        val looked = SecondaryIndex.lookupWhere(spark, idx,
+          probeFilters(im, served, residual), maxKeys = maxKeys,
+          pinned = Some((im.version, baseV)))
+        // the Project restores the ORIGINAL attribute ids, so the residual
+        // conjuncts re-apply above it unchanged (they reference f's attrs)
+        spliceByName(looked, f.output).map { projected =>
+          ServingStats.serve(spark, indexLoc,
+            if (served.isRange) "range" else "point")
+          residual.reduceOption(And).map(Filter(_, projected))
+            .getOrElse(projected)
         }
       }
-      val probeFilters = served.filters(lead) ++ trailing.flatMap(_._1)
-      val probeCond = trailing.map(_._2).foldLeft(served.cond(lead))(_ && _)
-      // bounded plan-time probe (DPP posture), version-pinned both sides;
-      // a scan-sized predicate throws the lookup contract and declines
-      val looked = SecondaryIndex.lookupWhere(spark, idx, probeFilters,
-        probeCond, maxKeys = maxKeys, pinned = Some((im.version, baseV)))
-      val lp = looked.queryExecution.optimizedPlan
-      val byName = lp.output.map(a => a.name.toLowerCase -> a).toMap
-      val mapped = f.output.map { a =>
-        byName.get(a.name.toLowerCase).filter(_.dataType == a.dataType)
-          .map(r => Alias(r, a.name)(exprId = a.exprId))
-      }
-      if (mapped.exists(_.isEmpty)) return None
-      // the Project restores the ORIGINAL attribute ids, so the residual
-      // conjuncts re-apply above it unchanged (they reference f's attrs)
-      val projected = Project(mapped.map(_.get), lp)
-      ServingStats.serve(spark, indexLoc,
-        if (served.isRange) "range" else "point")
-      Some(residual.reduceOption(And).map(Filter(_, projected))
-        .getOrElse(projected))
-    } catch {
-      case e: Exception =>
-        // never block the query — but never silently either: a
-        // persistently sick index degrading every point query to a full
-        // scan must leave a trail. The lookup contract's own decline (a
-        // predicate matching more than rewriteMaxKeys keys is a scan, not
-        // a point read) is expected planner traffic and logs at info;
-        // everything else (corrupt index, lost executor) warns.
-        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-        if (msg.contains("matched more than")) {
-          ServingStats.bound(spark, indexLoc)
-          logInfo(s"index rewrite via $indexLoc declined (probe over " +
-            s"rewriteMaxKeys); keeping the scan plan")
-        } else {
-          ServingStats.error(spark, indexLoc)
-          logWarning(s"index rewrite via $indexLoc declined after error; " +
-            s"keeping the scan plan: $msg")
-        }
-        None
-    } finally busy.set(false)
-  }
+    }
 }

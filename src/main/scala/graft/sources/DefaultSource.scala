@@ -178,8 +178,7 @@ class DefaultSource extends RelationProvider with CreatableRelationProvider
           catch {
             // a racing writer/maintainer taking the commit is fine — the
             // bound is hygiene, the next batch re-checks
-            case e: IllegalStateException if Option(e.getMessage)
-              .exists(_.startsWith("concurrent commit detected")) =>
+            case _: graft.catalog.ConcurrentCommitException =>
           }
       }
     }
@@ -213,9 +212,10 @@ case class GraftRelation(sqlContext: SQLContext, location: String,
   }
 
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val pruned = table.scanPruned(filters.toSeq, version)
-    val filtered = filters.flatMap(GraftRelation.toColumn)
-      .foldLeft(pruned)((df, c) => df.filter(c))
+    // the handled filters prune AND filter inside scanPruned; Spark
+    // re-evaluates the unhandled ones above this relation
+    val filtered = table.scanPruned(
+      filters.filter(f => GraftRelation.toColumn(f).isDefined).toSeq, version)
     val projected =
       if (requiredColumns.isEmpty) filtered
       else filtered.select(requiredColumns.map(col).toSeq: _*)

@@ -61,8 +61,10 @@ object PartitionPruner {
     *  - FIRST-PK interval pruning, ANY file kind (keyLo/keyHi — the
     *    rowset key-bounds analog, tablet/rowset_tree.cc; delta files too:
     *    a delta file whose key interval cannot meet the predicate holds no
-    *    delta for any surviving base row, sound because both read paths
-    *    re-apply every filter above the MOR union);
+    *    delta for any row that satisfies it, sound because the filters
+    *    apply above the MOR union on both read paths: the V2 scan hands
+    *    every pushed filter back to Spark, and `GraftTable.scanPruned`
+    *    applies its own);
     *  - ZONE-MAP pruning on ANY recorded column, BASE files only (a delta
     *    zone map describes its NEW values, while the base rows its
     *    tombstones kill may carry arbitrary OLD ones — pruning a delta
@@ -75,8 +77,9 @@ object PartitionPruner {
     *    value predicate with no bounds at all — null satisfies none.
     *
     * Conservative throughout: unknown columns, rename-swapped names
-    * (filters carry LOGICAL names on the V2/scanPruned paths but PHYSICAL
-    * names through GraftFileIndex — refuse any name a second column could
+    * (filters carry LOGICAL names on the V2 and `scanPruned` paths —
+    * `scanPruned` then applies the same filters to rows — but PHYSICAL
+    * names through GraftFileIndex; refuse any name a second column could
     * claim physically), absent bounds/null counts, un-encodable values,
     * and unsupported shapes all keep the file. */
   private def compileFileTests(m: TableMeta,

@@ -83,22 +83,38 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   def scanAtTimestamp(tsMs: Long): DataFrame =
     scan(Some(TableMeta.versionAtTimestamp(location, tsMs)))
 
-  /** Partition-pruned scan for the DataSource path: equality/IN filters on
-    * hash columns prune bucket files, range filters prune range partitions
-    * (SURVEY.md §4 — metadata-time pruning inside the relation). Filters are
-    * NOT applied to rows here; the caller re-applies them. */
+  /** Pruned AND filtered scan: the rows of the snapshot at `version`
+    * (None = latest) that satisfy every filter in `filters`. The same
+    * filter list prunes files at the manifest — equality/IN filters on
+    * hash columns prune bucket files, range filters prune range
+    * partitions, per-file zone maps and key bounds prune the rest
+    * (SURVEY.md §4) — and then applies to rows, each filter converted by
+    * [[graft.sources.GraftRelation.toColumn]]; a filter that does not
+    * convert fails loudly. Delta files prune by their recorded first-key
+    * bounds too (delta stats, tablet/deltafile.h): a delta file whose
+    * interval cannot meet the predicate holds no delta for any row that
+    * satisfies it, which is sound because the filters apply ABOVE the MOR
+    * union. `assertPrune = true` requires the filters to keep at most
+    * half of this manifest's base files (test/verification hook). */
   def scanPruned(filters: Seq[org.apache.spark.sql.sources.Filter],
-      version: Option[Long] = None): DataFrame = {
+      version: Option[Long] = None,
+      assertPrune: Boolean = false): DataFrame = {
     val m = version.map(readVersion).getOrElse(meta)
-    val keepBase = graft.sources.PartitionPruner.pruneFiles(m, m.baseFiles, filters)
-    // Delta files prune by their recorded first-key bounds too (delta
-    // stats, tablet/deltafile.h): a delta file whose interval cannot meet
-    // the predicate holds no delta for any surviving base row — sound
-    // because buildScan re-applies every convertible filter ABOVE the MOR
-    // union, so upserts from pruned files could never have been emitted.
+    val conds = filters.map(f => graft.sources.GraftRelation.toColumn(f)
+      .getOrElse(throw new IllegalArgumentException(
+        s"scanPruned cannot apply filter $f")))
+    val kept = graft.sources.PartitionPruner.pruneFiles(m, m.baseFiles, filters)
+    if (assertPrune && kept.length * 2 > m.baseFiles.length)
+      throw new IllegalStateException(
+        s"pruned scan of $location must keep at most half its base files: " +
+          s"kept ${kept.length} of ${m.baseFiles.length} for " +
+          filters.mkString(", "))
     val keepDelta = graft.sources.PartitionPruner.pruneFiles(m, m.deltaFiles, filters)
-    val full = scanFiles(m, keepBase, keepDelta)
-    if (m.hasAutoInc) full.select(m.visibleColumns.map(c => col(c.name)): _*) else full
+    val full = scanFiles(m, kept, keepDelta)
+    val visible =
+      if (m.hasAutoInc) full.select(m.visibleColumns.map(c => col(c.name)): _*)
+      else full
+    conds.reduceOption(_ && _).map(visible.filter).getOrElse(visible)
   }
 
   private def scanMeta(m: TableMeta): DataFrame =
@@ -770,10 +786,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       if (missing.limit(1).count() > 0)
         throw new PrimaryKeyException(s"DELETE key not found in ${m.name}")
     }
-    val tombstones = k.select(m.columns.map { c =>
-      if (keys.contains(c.name)) col(c.name) else lit(null).cast(c.dataType).as(c.name)
-    }: _*)
-    commitDelta(m, tombstones.withColumn(OpCol, lit(OpDelete)),
+    commitDelta(m, tombstoneRows(m, k).withColumn(OpCol, lit(OpDelete)),
       if (ignore) "delete_ignore" else "delete")
   }
 
@@ -790,10 +803,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val newKeys = batch.select(m.keyCols.map(col): _*)
     val gone = scanMeta(m).select(m.keyCols.map(col): _*)
       .join(newKeys, m.keyCols, "left_anti")
-    val tombstones = gone.select(m.columns.map { c =>
-      if (m.keyCols.contains(c.name)) col(c.name)
-      else lit(null).cast(c.dataType).as(c.name)
-    }: _*).withColumn(OpCol, lit(OpDelete))
+    val tombstones = tombstoneRows(m, gone).withColumn(OpCol, lit(OpDelete))
     commitDelta(m, batch.withColumn(OpCol, lit(OpUpsert)).unionByName(tombstones),
       "overwrite", guardDupKeys = true)
   }
@@ -830,12 +840,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         .cast(org.apache.spark.sql.types.BooleanType))
     val ups = conform(m, checked.filter(!col(DeletedCol)).drop(DeletedCol))
       .withColumn(OpCol, lit(OpUpsert))
-    val tombstones = checked.filter(col(DeletedCol))
-      .select(m.keyCols.map(col): _*)
-      .select(m.columns.map { c =>
-        if (m.keyCols.contains(c.name)) col(c.name)
-        else lit(null).cast(c.dataType).as(c.name)
-      }: _*).withColumn(OpCol, lit(OpDelete))
+    val tombstones = tombstoneRows(m,
+      checked.filter(col(DeletedCol)).select(m.keyCols.map(col): _*))
+      .withColumn(OpCol, lit(OpDelete))
     // propsUpdate commits ATOMICALLY with the data — a derived-table
     // refresh records its watermark in the same version as its rows, so
     // no crash window can leave the table marked behind (or ahead of)
@@ -849,11 +856,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   def deleteWhere(condition: Column): Unit = withCommitRetry {
     val m = meta
     val keys = scanMeta(m).filter(condition).select(m.keyCols.map(col): _*)
-    val tombstones = keys.select(m.columns.map { c =>
-      if (m.keyCols.contains(c.name)) col(c.name)
-      else lit(null).cast(c.dataType).as(c.name)
-    }: _*)
-    commitDelta(m, tombstones.withColumn(OpCol, lit(OpDelete)), "delete")
+    commitDelta(m, tombstoneRows(m, keys).withColumn(OpCol, lit(OpDelete)),
+      "delete")
   }
 
   /**
@@ -972,8 +976,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
               case "merge_tail" => mergeTailDeltas()
             }
           } catch {
-            case e: IllegalStateException
-                if Option(e.getMessage).exists(_.startsWith("concurrent commit detected")) =>
+            case _: ConcurrentCommitException =>
               false // preempted by a racing writer: skip, keep the budget
           }
         if (ok) { spent += a.ioBytes; ran += a }
@@ -1168,8 +1171,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         true
       } else false
     } catch {
-      case e: IllegalStateException
-          if Option(e.getMessage).exists(_.startsWith("concurrent commit detected")) =>
+      case _: ConcurrentCommitException =>
         false
     }
   }
@@ -2218,9 +2220,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     while (true) {
       try return body
       catch {
-        case e: IllegalStateException
-            if Option(e.getMessage).exists(_.startsWith("concurrent commit detected")) &&
-              attempt < maxAttempts && System.nanoTime() < deadline =>
+        case _: ConcurrentCommitException
+            if attempt < maxAttempts && System.nanoTime() < deadline =>
           attempt += 1
           Thread.sleep(math.min(25L << math.min(attempt, 5), 400L) +
             java.util.concurrent.ThreadLocalRandom.current().nextLong(100L))
@@ -2617,6 +2618,14 @@ object GraftTable {
   val RangeCol = "_r"
   /** Transient Morton-code column of a clustered rewrite (never written). */
   val ZOrderCol = "_graft_z"
+
+  /** Tombstone rows for `keys` (a frame holding `m`'s key columns): the
+    * key columns kept, every other column a typed null. */
+  private[graft] def tombstoneRows(m: TableMeta, keys: DataFrame): DataFrame =
+    keys.select(m.columns.map { c =>
+      if (m.keyCols.contains(c.name)) col(c.name)
+      else lit(null).cast(c.dataType).as(c.name)
+    }: _*)
 
   /** A clustered-rewrite request: `expr` builds the Morton code over a
     * name resolver (writeBase resolves to PHYSICAL columns), `files` is the

@@ -39,11 +39,8 @@ class GraftTxn private[table] (t: GraftTable, m: TableMeta) {
   /** Strict DELETE by PK: at commit, errors if any key is missing. */
   def delete(keysDf: DataFrame): Unit = {
     val keys = m.keyCols
-    val tombstones = keysDf.select(keys.map(col): _*).select(m.columns.map { c =>
-      if (keys.contains(c.name)) col(c.name).cast(c.dataType).as(c.name)
-      else lit(null).cast(c.dataType).as(c.name)
-    }: _*)
-    stage(OpDelete, tombstones, strict = true)
+    stage(OpDelete, GraftTable.tombstoneRows(m, keysDf.select(
+      keys.map(k => col(k).cast(m.column(k).dataType).as(k)): _*)), strict = true)
   }
 
   private[graft] def commit(): Unit = {

@@ -256,11 +256,11 @@ object DerivedTables {
 
   /** The source rows whose key columns (`keySchema`'s fields) match one of
     * the collected `keys`, at `version` (None = current). An IN-list per
-    * key column prunes base tablets and files at the manifest — exact for
-    * one column, a pruning superset for several — and an exact broadcast
-    * key semi-join lands behind it. Empty keys give an empty scan-shaped
-    * frame. `assertPrune = true` requires the IN-lists to keep at most
-    * half the base files (test/verification hook). */
+    * key column prunes base tablets and files at the manifest and filters
+    * the rows — exact for one column, a superset for several — and an
+    * exact broadcast key semi-join lands behind it. Empty keys give an
+    * empty scan-shaped frame. `assertPrune` as in [[GraftTable.scanPruned]]
+    * (test/verification hook). */
   private[tools] def readByKeys(spark: SparkSession, src: GraftTable,
       version: Option[Long], keySchema: StructType, keys: Array[Row],
       assertPrune: Boolean = false): DataFrame = {
@@ -269,16 +269,7 @@ object DerivedTables {
       keySchema.fieldNames.toSeq.zipWithIndex.map { case (c, i) =>
         org.apache.spark.sql.sources.In(c, keys.map(_.get(i)).distinct)
       }
-    if (assertPrune) {
-      val m = version.map(src.metaAt).getOrElse(src.meta)
-      val kept = graft.sources.PartitionPruner.pruneFiles(m, m.baseFiles, filters)
-      if (kept.length * 2 > m.baseFiles.length)
-        throw new IllegalStateException(
-          s"keyed read of ${src.location} must prune its base scan: kept " +
-            s"${kept.length} of ${m.baseFiles.length} files for " +
-            s"${keys.length} keys")
-    }
-    src.scanPruned(filters, version)
+    src.scanPruned(filters, version, assertPrune)
       .join(broadcast(localFrame(spark, keySchema, keys)),
         keySchema.fieldNames.toSeq, "left_semi")
   }

@@ -355,7 +355,6 @@ object ScaleSmoke {
       val hits = SecondaryIndex.lookupWhere(spark, sidx,
         Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("v", probeV - 20L),
           org.apache.spark.sql.sources.LessThanOrEqual("v", probeV + 20L)),
-        col("v") >= (probeV - 20L) && col("v") <= (probeV + 20L),
         assertPrune = true).collect()
       require(hits.nonEmpty, s"range lookup around $probeV must find rows")
     }
@@ -375,12 +374,11 @@ object ScaleSmoke {
       // clustered index the range side opens only its value slabs
       val iv = sidx.meta.version
       val hits = SecondaryIndex.lookupUnionWhere(spark, Seq(
-        (sidx, Seq(org.apache.spark.sql.sources.In("v", Array(-1L))),
-          col("v") === -1L, iv),
+        (sidx, Seq(org.apache.spark.sql.sources.In("v", Array(-1L))), iv),
         (sidx,
           Seq(org.apache.spark.sql.sources.GreaterThanOrEqual("v", probeV + 5L),
             org.apache.spark.sql.sources.LessThanOrEqual("v", probeV + 15L)),
-          col("v") >= (probeV + 5L) && col("v") <= (probeV + 15L), iv)),
+          iv)),
         baseV = rbase.currentVersion).collect()
       require(hits.exists(_.getLong(1) == 12345L),
         "the union's point disjunct must find the mutated row")
@@ -392,8 +390,7 @@ object ScaleSmoke {
       // filter evaluates on the entries' carried PK column, the lead
       // orders them, five keys fetch; no corpus sort anywhere
       val top = SecondaryIndex.topK(spark, sidx, k = 5, desc = true,
-        where = Some((Seq(org.apache.spark.sql.sources.In("grp",
-          Array(7L))), col("grp") === 7L)))
+        where = Seq(org.apache.spark.sql.sources.In("grp", Array(7L))))
         .getOrElse(throw new IllegalStateException("filtered topK must serve"))
         .collect()
       require(top.length == 5 && top.forall(_.getLong(0) == 7L),

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -318,20 +318,20 @@ object SecondaryIndex {
     val lead = indexedCols(index.properties).head
     lookupWhere(spark, index,
       Seq(org.apache.spark.sql.sources.In(lead, values.toArray)),
-      col(lead).isin(values: _*), maxKeys, assertPrune)
+      maxKeys, assertPrune)
   }
 
   /**
-   * Generalized lookup: the base rows whose index entry satisfies
-   * `probeCond` (a deterministic predicate over the indexed columns).
-   * `probeFilters` is the same predicate in source-filter form, pushed to
-   * the index scan for manifest-level pruning — IN over the lead prunes
-   * hash buckets; range/prefix filters prune per-file zone maps within
-   * them; trailing-column equalities prune their own zone maps. The
-   * collected key set is bounded by `maxKeys` (a lookup is a point read —
-   * an unbounded predicate is a scan, use the base table), and the base
-   * read pushes an IN-list over the first PK column (PK hash/range/zone
-   * pruning) with an exact key semi-join behind it.
+   * Generalized lookup: the base rows whose index entry satisfies every
+   * filter in `probeFilters` (a conjunction over the indexed columns).
+   * The index scan ([[GraftTable.scanPruned]]) prunes with the filters
+   * and applies them — IN over the lead prunes hash buckets; range/prefix
+   * filters prune per-file zone maps within them; trailing-column
+   * equalities prune their own zone maps. The collected key set is
+   * bounded by `maxKeys` (a lookup is a point read — an unbounded
+   * predicate is a scan, use the base table), and the base read pushes an
+   * IN-list per PK column (PK hash/range/zone pruning) with an exact key
+   * semi-join behind it.
    *
    * `pinned = Some((indexVersion, baseVersion))` pins BOTH reads for the
    * serving rewrite: the probe scans the index AT `indexVersion` (whose
@@ -342,37 +342,24 @@ object SecondaryIndex {
    */
   def lookupWhere(spark: SparkSession, index: GraftTable,
       probeFilters: Seq[org.apache.spark.sql.sources.Filter],
-      probeCond: Column, maxKeys: Int = 100000,
+      maxKeys: Int = 100000,
       assertPrune: Boolean = false,
       pinned: Option[(Long, Long)] = None): DataFrame = {
     val src = GraftTable.load(spark, index.properties(SrcLocKey))
     val pkCols = src.meta.keyCols
-    val indexV = pinned.map(_._1)
-    val baseV = pinned.map(_._2)
-    if (assertPrune) {
-      val im = indexV.map(index.metaAt).getOrElse(index.meta)
-      val kept = graft.sources.PartitionPruner.pruneFiles(
-        im, im.baseFiles, probeFilters)
-      val total = im.baseFiles.length
-      if (kept.length * 2 > total)
-        throw new IllegalStateException(
-          s"index probe must prune: kept ${kept.length} of $total files " +
-            s"for ${probeFilters.mkString(", ")}")
-    }
     // contract-bounded probe (limit + the require below) over a scan whose
     // exchanges are byte-sized → one static-planned job instead of one per
     // AQE stage; this runs at PLAN time for the serving rewrite, so the
     // job floor here is pure query latency
     val hits = GraftTable.withStaticPlan(spark, tiny = true) {
-      index.scanPruned(probeFilters, indexV)
-        .filter(probeCond)
+      index.scanPruned(probeFilters, pinned.map(_._1), assertPrune)
         .select(pkCols.map(col): _*)
         .limit(maxKeys + 1).collect()
     }
     require(hits.length <= maxKeys,
       s"lookup matched more than $maxKeys rows — not a point read; scan " +
         "the base table instead")
-    fetchByKeys(spark, src, pkCols, hits, baseV)
+    fetchByKeys(spark, src, pkCols, hits, pinned.map(_._2))
   }
 
   /**
@@ -384,14 +371,13 @@ object SecondaryIndex {
    * point read — the caller keeps the scan plan); the matched keys then
    * read the base ONCE through its own PK layout, not once per probe.
    *
-   * Each probe tuple is `(index, probeFilters, probeCond, indexVersion)`
-   * — the version pins that index's scan to the manifest whose watermark
+   * Each probe tuple is `(index, probeFilters, indexVersion)` — the
+   * version pins that index's scan to the manifest whose watermark
    * the caller already validated against `baseV`, so a refresh landing
    * mid-plan can never mix snapshots across the probes.
    */
   def lookupUnionWhere(spark: SparkSession,
-      probes: Seq[(GraftTable, Seq[org.apache.spark.sql.sources.Filter],
-        Column, Long)],
+      probes: Seq[(GraftTable, Seq[org.apache.spark.sql.sources.Filter], Long)],
       baseV: Long, maxKeys: Int = 100000): DataFrame = {
     require(probes.nonEmpty, "union lookup needs at least one probe")
     val srcLocs = probes.map(_._1.properties(SrcLocKey)).distinct
@@ -411,10 +397,9 @@ object SecondaryIndex {
     // inherit it; each future flipping it itself would race the restore
     val hitArrays = GraftTable.withStaticPlan(spark, tiny = true) {
       Await.result(
-      Future.traverse(probes.toList) { case (idx, probeFilters, probeCond, indexV) =>
+      Future.traverse(probes.toList) { case (idx, probeFilters, indexV) =>
         Future(graft.plans.IndexRewrite.guarded {
           val hits = idx.scanPruned(probeFilters, Some(indexV))
-            .filter(probeCond)
             .select(pkCols.map(col): _*)
             .limit(maxKeys + 1).collect()
           require(hits.length <= maxKeys,
@@ -453,22 +438,21 @@ object SecondaryIndex {
    * value slabs of a CLUSTERED index instead of sorting the whole index:
    * order files by their recorded lead max (desc; min for asc), take the
    * smallest prefix whose row count covers `k`, and return a pushed
-   * bound at θ = the prefix's weakest recorded opposite bound. Sound for
+   * filter at θ = the prefix's weakest recorded opposite bound. Sound for
    * ANY layout: the prefix holds ≥ k rows, each ≥ its file's recorded
    * min ≥ θ (bounds are conservative — parquet stat truncation only
    * widens them), so the true k-th value is ≥ θ and every top-k row
    * passes `lead >= θ`. Under a hash layout every file spans the full
    * domain, θ degrades to the global min and the cut keeps everything —
-   * exactly today's full sort, nothing lost. No cut (empty) when deltas
+   * exactly today's full sort, nothing lost. No cut (Nil) when deltas
    * exist (delta values carry no zone maps), any file lacks lead bounds
    * or a row count, the index is a single file, or θ's type cannot
    * round-trip the bound encoding.
    */
   private def topCut(index: GraftTable, k: Int, desc: Boolean,
-      version: Option[Long]): (Seq[org.apache.spark.sql.sources.Filter],
-      Option[Column]) = {
+      version: Option[Long]): Seq[org.apache.spark.sql.sources.Filter] = {
     val m = version.map(index.metaAt).getOrElse(index.meta)
-    if (m.deltaFiles.nonEmpty || m.baseFiles.length < 2) return (Nil, None)
+    if (m.deltaFiles.nonEmpty || m.baseFiles.length < 2) return Nil
     val lead = indexedCols(m.propsMap).head
     val cmeta = m.column(lead)
     val cid = cmeta.id.toString
@@ -479,35 +463,22 @@ object SecondaryIndex {
         if f.rows >= 0
       } yield (lo, hi, f.rows)
     }
-    if (stats.exists(_.isEmpty)) return (Nil, None)
+    if (stats.exists(_.isEmpty)) return Nil
     val fs = stats.flatten
     val ordered =
       if (desc) fs.sortBy(_._2)(Ordering[String].reverse) else fs.sortBy(_._1)
     var acc = 0L
     var i = 0
     while (i < ordered.length && acc < k) { acc += ordered(i)._3; i += 1 }
-    if (acc < k) return (Nil, None) // fewer than k entries: caller declines
+    if (acc < k) return Nil // fewer than k entries: caller declines
     val prefix = ordered.take(i)
     val thetaEnc = if (desc) prefix.map(_._1).min else prefix.map(_._2).max
     val internal = GraftTable.decodeBound(cmeta.dataType, thetaEnc)
-      .getOrElse(return (Nil, None))
+      .getOrElse(return Nil)
     val v = org.apache.spark.sql.catalyst.CatalystTypeConverters
       .createToScalaConverter(cmeta.dataType)(internal)
-    if (desc)
-      (Seq(org.apache.spark.sql.sources.GreaterThanOrEqual(lead, v)),
-        Some(col(lead) >= lit(v)))
-    else
-      (Seq(org.apache.spark.sql.sources.LessThanOrEqual(lead, v)),
-        Some(col(lead) <= lit(v)))
-  }
-
-  /** The index scan for a top-k pass: zone-cut-pruned when the manifest
-    * affords it, the full index otherwise. */
-  private def topScan(index: GraftTable, k: Int, desc: Boolean,
-      version: Option[Long]): DataFrame = {
-    val (cutFilters, cutCond) = topCut(index, k, desc, version)
-    val scan0 = index.scanPruned(cutFilters, version)
-    cutCond.map(scan0.filter).getOrElse(scan0)
+    Seq(if (desc) org.apache.spark.sql.sources.GreaterThanOrEqual(lead, v)
+        else org.apache.spark.sql.sources.LessThanOrEqual(lead, v))
   }
 
   /**
@@ -523,32 +494,30 @@ object SecondaryIndex {
    * non-null entries exist — the caller may need null-lead rows the index
    * never holds, so it must keep the scan. `pinned` as in [[lookupWhere]].
    *
-   * `where = Some((filters, cond))` makes this a FILTERED top-k: the k
-   * extreme entries AMONG those satisfying `cond` (a predicate over the
-   * index's carried columns — entry values equal the base row's at the
+   * A non-empty `where` makes this a FILTERED top-k: the k extreme
+   * entries AMONG those satisfying every filter in it (a conjunction over
+   * the index's carried columns — entry values equal the base row's at the
    * watermark, so matching entries ARE the matching non-null-lead base
    * rows). The [[topCut]] is BYPASSED under a filter — its θ bound is
    * derived from the unfiltered population, and cutting files below it
    * could drop matching rows that belong to the filtered answer; the
-   * probe filters themselves prune instead (trailing-column zone maps,
+   * `where` filters themselves prune instead (trailing-column zone maps,
    * lead ranges). Fewer than `k` matching entries returns None — a
    * null-lead row satisfying the predicate could then pad the true
    * answer.
    */
   def topK(spark: SparkSession, index: GraftTable, k: Int, desc: Boolean,
       pinned: Option[(Long, Long)] = None,
-      where: Option[(Seq[org.apache.spark.sql.sources.Filter], Column)] = None)
+      where: Seq[org.apache.spark.sql.sources.Filter] = Nil)
       : Option[DataFrame] = {
     require(k > 0, "topK needs k > 0")
     val lead = indexedCols(index.properties).head
     val src = GraftTable.load(spark, index.properties(SrcLocKey))
     val pkCols = src.meta.keyCols
     val ord = if (desc) col(lead).desc else col(lead).asc
-    val scan0 = where match {
-      case Some((pf, pc)) =>
-        index.scanPruned(pf, pinned.map(_._1)).filter(pc)
-      case None => topScan(index, k, desc, pinned.map(_._1))
-    }
+    val scan0 = index.scanPruned(
+      if (where.nonEmpty) where else topCut(index, k, desc, pinned.map(_._1)),
+      pinned.map(_._1))
     // bounded top-k probe (TakeOrderedAndProject) → one static-planned job
     val hits = GraftTable.withStaticPlan(spark, tiny = true) {
       scan0
@@ -576,7 +545,7 @@ object SecondaryIndex {
     val m = indexVersion.map(index.metaAt).getOrElse(index.meta)
     val keys = m.keyCols // (lead, pk…)
     val ord = if (desc) col(keys.head).desc else col(keys.head).asc
-    topScan(index, k, desc, indexVersion)
+    index.scanPruned(topCut(index, k, desc, indexVersion), indexVersion)
       .orderBy(ord +: keys.tail.map(col(_).asc): _*)
       .limit(k)
   }
@@ -591,8 +560,9 @@ object SecondaryIndex {
    * equal-lead rows), so sorting the candidates by the full key list and
    * cutting at k reproduces the corpus sort's answer. The candidate set
    * is bounded by `maxKeys` — tie-heavy data (more than maxKeys rows
-   * sharing the k-th value) returns None and the caller keeps the scan.
-   * Returns None too when fewer than `k` non-null entries exist (the
+   * at or past the k-th value) throws the lookup contract, like
+   * [[lookupWhere]], and the caller keeps the scan. Returns None when
+   * fewer than `k` non-null entries exist (the
    * caller may need null-lead rows the index never holds). `pinned` as
    * in [[lookupWhere]]; `where` as in [[topK]] (filtered tie completion:
    * both passes apply the predicate, and the topCut is bypassed — its
@@ -601,7 +571,7 @@ object SecondaryIndex {
   def topKTies(spark: SparkSession, index: GraftTable, k: Int,
       desc: Boolean, maxKeys: Int,
       pinned: Option[(Long, Long)] = None,
-      where: Option[(Seq[org.apache.spark.sql.sources.Filter], Column)] = None)
+      where: Seq[org.apache.spark.sql.sources.Filter] = Nil)
       : Option[DataFrame] = {
     require(k > 0, "topKTies needs k > 0")
     val lead = indexedCols(index.properties).head
@@ -611,11 +581,9 @@ object SecondaryIndex {
     // pass 1: the k-th extreme lead value (ties beyond k irrelevant —
     // any row tied at vk joins the candidate set in pass 2); zone-cut-
     // pruned like topK when unfiltered
-    val scan0 = where match {
-      case Some((pf, pc)) =>
-        index.scanPruned(pf, pinned.map(_._1)).filter(pc)
-      case None => topScan(index, k, desc, pinned.map(_._1))
-    }
+    val scan0 = index.scanPruned(
+      if (where.nonEmpty) where else topCut(index, k, desc, pinned.map(_._1)),
+      pinned.map(_._1))
     val leadVals = GraftTable.withStaticPlan(spark, tiny = true) {
       scan0.orderBy(ord).select(col(lead)).limit(k).collect()
     }
@@ -624,19 +592,17 @@ object SecondaryIndex {
     // pass 2: every entry at-or-better than vk — zone maps prune a
     // value-clustered index to the extreme slabs; the bound keeps the
     // collect point-read-sized either way
-    val candFilter: Seq[org.apache.spark.sql.sources.Filter] =
+    val candFilters: Seq[org.apache.spark.sql.sources.Filter] =
       (if (desc) org.apache.spark.sql.sources.GreaterThanOrEqual(lead, vk)
-       else org.apache.spark.sql.sources.LessThanOrEqual(lead, vk)) +:
-        where.map(_._1).getOrElse(Nil)
-    val candCond0 = if (desc) col(lead) >= lit(vk) else col(lead) <= lit(vk)
-    val candCond = where.map(_._2).map(candCond0 && _).getOrElse(candCond0)
+       else org.apache.spark.sql.sources.LessThanOrEqual(lead, vk)) +: where
     val hits = GraftTable.withStaticPlan(spark, tiny = true) {
-      index.scanPruned(candFilter, pinned.map(_._1))
-        .filter(candCond)
+      index.scanPruned(candFilters, pinned.map(_._1))
         .select(pkCols.map(col): _*)
         .limit(maxKeys + 1).collect()
     }
-    if (hits.length > maxKeys) return None // tie set too big — scan instead
+    require(hits.length <= maxKeys,
+      s"top-k tie set matched more than $maxKeys rows — not a point read; " +
+        "scan the base table instead")
     Some(fetchByKeys(spark, src, pkCols, hits, pinned.map(_._2)))
   }
 

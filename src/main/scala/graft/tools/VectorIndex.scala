@@ -171,18 +171,9 @@ object VectorIndex {
       .collect().map(_.getLong(0)).sorted
     val filters: Seq[org.apache.spark.sql.sources.Filter] =
       Seq(org.apache.spark.sql.sources.In("cell", cells.map(c => c: Any)))
-    if (assertPrune) {
-      val kept = graft.sources.PartitionPruner.pruneFiles(
-        index.meta, index.meta.baseFiles, filters)
-      val total = index.meta.baseFiles.length
-      if (kept.length * 2 > total)
-        throw new IllegalStateException(
-          s"index probe must prune hash buckets: kept ${kept.length} of " +
-            s"$total files for ${cells.length} probed cells")
-    }
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("c").desc, col("neighbor_id"))
-    index.scanPruned(filters)
+    index.scanPruned(filters, assertPrune = assertPrune)
       .join(broadcast(probeCells), "cell")
       .filter(col("query_id") =!= col(idCol))
       .withColumn("c", dot(col("qv"), col("v")))
@@ -230,21 +221,12 @@ object VectorIndex {
       .collect().map(_.getLong(0)).sorted
     val filters: Seq[org.apache.spark.sql.sources.Filter] =
       Seq(org.apache.spark.sql.sources.In("cell", cells.map(c => c: Any)))
-    if (assertPrune) {
-      val kept = graft.sources.PartitionPruner.pruneFiles(
-        index.meta, index.meta.baseFiles, filters)
-      val total = index.meta.baseFiles.length
-      if (kept.length * 2 > total)
-        throw new IllegalStateException(
-          s"index probe must prune hash buckets: kept ${kept.length} of " +
-            s"$total files for ${cells.length} probed cells")
-    }
     val topR = math.max(k, k * rerank)
     val wAdc = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("neighbor_id"))
     // candidate stage: codes only — `v` must NOT appear here, so column
     // pruning keeps raw vectors out of the scan (spec-asserted)
-    val cand = index.scanPruned(filters)
+    val cand = index.scanPruned(filters, assertPrune = assertPrune)
       .select(col("cell"), col(idCol), col("code"))
       .join(broadcast(probeCells.select("query_id", "qz", "cell", "qc")), "cell")
       .filter(col("query_id") =!= col(idCol))
@@ -283,14 +265,13 @@ object VectorIndex {
       survivorIds) : org.apache.spark.sql.sources.Filter)
     // survivors' raw vectors load through a second pruned read (exact
     // key join on the broadcast survivor set) and re-rank by exact dot.
-    // The id IN-list rides twice: as a source filter (manifest/zone file
-    // pruning inside the probed cells) and as a Catalyst predicate (parquet
-    // row-group pruning inside surviving files) — both bounded by the
-    // plan-time survivor count.
+    // scanPruned applies the id IN-list it prunes with, so the one list
+    // prunes files (manifest/zone maps inside the probed cells) and row
+    // groups inside the surviving files — bounded by the plan-time
+    // survivor count.
     val wRank = Window.partitionBy(col("query_id"))
       .orderBy(col("c").desc, col("neighbor_id"))
     index.scanPruned(rerankFilters)
-      .filter(col(idCol).isin(survivorIds.toSeq: _*))
       .select(col("cell"), col(idCol).as("neighbor_id"), col("v"))
       .join(candDf, Seq("cell", "neighbor_id"))
       .join(broadcast(queries.select(col("query_id"), col("qv"))),

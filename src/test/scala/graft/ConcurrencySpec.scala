@@ -236,6 +236,7 @@ class ConcurrencySpec extends AnyFunSuite {
       }
     }
     assert(e.getMessage.startsWith("concurrent commit detected"))
+    assert(e.isInstanceOf[graft.catalog.ConcurrentCommitException], e.toString)
     // the rival's commit stands; the transaction's op does not
     assert(t.scan().filter("id = 201").count() == 1)
     assert(t.scan().filter("id = 200").count() == 0)

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.sources.{EqualTo, GreaterThan, LessThan}
+import org.apache.spark.sql.sources.{EqualTo, GreaterThan, In, LessThan, LessThanOrEqual}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.HashComponent
@@ -66,6 +66,31 @@ class DeltaStatsSpec extends AnyFunSuite {
     val v2 = spark.sql("SELECT v FROM gds.ds1 WHERE k = 1930").collect()
     assert(v2.map(_.getString(0)).toSeq == Seq("hi1930"))
     assert(spark.sql("SELECT * FROM gds.ds1 WHERE k = 1000").isEmpty)
+  }
+
+  test("scanPruned applies its own filters: a pruned delta file never resurrects rows") {
+    val wh = Files.createTempDirectory("graft-dstats-sp-").toString
+    val df = (1 to 20).map(i => (i.toLong, s"a$i")).toDF("k", "v")
+    val t = GraftTable.create(spark, s"$wh/sp", "sp", df.schema, Seq("k"),
+      data = Some(df))
+    onePerCommit {
+      t.delete(Seq(Tuple1(15L)).toDF("k"))
+      t.upsert(Seq((18L, "b18")).toDF("k", "v"))
+    }
+    assert(t.meta.baseFiles.size == 1 && t.meta.deltaFiles.size == 2,
+      s"fixture: one base file, two delta files: ${t.meta}")
+    // each predicate prunes BOTH delta files by their key bounds (15 and
+    // 18 lie outside it); the returned rows must still be exactly the
+    // snapshot's rows under the predicate
+    Seq(
+      Seq(EqualTo("k", 5L)) -> (col("k") === 5L),
+      Seq(In("k", Array(5L, 7L))) -> col("k").isin(5L, 7L),
+      Seq(LessThanOrEqual("k", 6L)) -> (col("k") <= 6L)
+    ).foreach { case (fs, c) =>
+      def rows(d: org.apache.spark.sql.DataFrame) =
+        d.collect().map(r => (r.getLong(0), r.getString(1))).toSet
+      assert(rows(t.scanPruned(fs)) == rows(t.scan().filter(c)), fs.toString)
+    }
   }
 
   test("distributed footer-stat branch records identical manifests") {

@@ -324,6 +324,75 @@ class IndexRewriteSpec extends AnyFunSuite {
     } finally IndexRewrite.disable(spark, idx.location)
   }
 
+  test("every serve kind declines through one path: stale and over-bound probes are counted") {
+    import graft.plans.ServingStats
+    // v = i % 8: eight rows share each value, so one probed value matches
+    // past a rewriteMaxKeys of 4
+    val data = (1L to 64L).map(i => (i, i % 8, s"g_${i % 16}", s"x_$i"))
+      .toDF("id", "v", "g", "other")
+    val t = GraftTable.create(spark, tmp(), "idxrw_decl", data.schema,
+      Seq("id"), Seq(HashComponent(Seq("id"), 4)), data = Some(data))
+    val iv = SecondaryIndex.build(spark, t, "v", tmp(), buckets = 4)
+    val ig = SecondaryIndex.build(spark, t, "g", tmp(), buckets = 4)
+    try {
+      ServingStats.reset(spark)
+      def counts(idx: GraftTable): ServingStats.Counts =
+        ServingStats.snapshot(spark).toMap
+          .getOrElse(idx.location, ServingStats.Counts())
+      val dim = Seq(3L).toDF("k")
+      // kind -> (query, the indexes it involves)
+      val kinds: Seq[(String, () => DataFrame, Seq[GraftTable])] = Seq(
+        ("covering", () => t.scan().filter(col("v") === 3L).select("id", "v"),
+          Seq(iv)),
+        ("union", () => t.scan().filter(col("v") === 3L || col("g") === "g_5"),
+          Seq(iv, ig)),
+        ("join", () => t.scan().join(dim, col("v") === col("k")), Seq(iv)),
+        // multi-key: the tie-completion probe collects the 8 rows at v=7
+        ("topk", () => t.scan().orderBy(col("v").desc, col("id").asc).limit(2),
+          Seq(iv)))
+      def run(q: () => DataFrame): Unit = q().collect()
+      // fresh: every kind serves, so the declines below are real declines
+      kinds.foreach { case (kind, q, idxs) =>
+        val before = idxs.map(counts(_).serves)
+        run(q)
+        assert(idxs.map(counts(_)).zip(before).forall { case (c, b) =>
+          c.serves > b && c.lastPath == kind }, s"$kind must serve fresh")
+      }
+      // over the key bound: every probe that collects keys records
+      // `bound`; the covering serve collects nothing and has no bound
+      spark.conf.set("graft.sindex.rewriteMaxKeys", "4")
+      try kinds.foreach { case (kind, q, idxs) =>
+        val before = idxs.map(counts)
+        run(q)
+        val after = idxs.map(counts)
+        if (kind == "covering")
+          assert(after.head.serves > before.head.serves &&
+            after.head.boundDeclines == before.head.boundDeclines,
+            "the covering serve has no key bound")
+        else
+          assert(after.zip(before).forall { case (a, b) =>
+            a.boundDeclines > b.boundDeclines && a.serves == b.serves &&
+              a.errorDeclines == b.errorDeclines },
+            s"$kind over the bound must record bound: $after")
+      } finally spark.conf.unset("graft.sindex.rewriteMaxKeys")
+      // stale: a mutation compacted into a clean snapshot the indexes'
+      // watermarks lag — every kind records `stale` and never serves
+      t.upsert(Seq((1L, 1L, "g_1", "moved")).toDF("id", "v", "g", "other"))
+      t.compact()
+      kinds.foreach { case (kind, q, idxs) =>
+        val before = idxs.map(counts)
+        run(q)
+        val after = idxs.map(counts)
+        assert(after.zip(before).forall { case (a, b) =>
+          a.staleDeclines > b.staleDeclines && a.serves == b.serves },
+          s"a stale $kind serve must record stale: $after")
+      }
+    } finally {
+      IndexRewrite.disable(spark, iv.location)
+      IndexRewrite.disable(spark, ig.location)
+    }
+  }
+
   test("SQL CREATE INDEX builds and arms the serving index; DROP INDEX disarms and removes it") {
     val wh = Files.createTempDirectory("graft-idxddl-").toString
     spark.conf.set("spark.sql.catalog.gidxddl",
