@@ -1695,7 +1695,13 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
       .distinct.filter(requiredSchema.fieldNames.contains)
       .map(Expressions.column).toArray
 
-  override def filter(fs: Array[Filter]): Unit = { runtimeFilters = fs }
+  // the only writer of runtimeFilters: a runtime-filter update drops the
+  // planning memos built over the old filters
+  override def filter(fs: Array[Filter]): Unit = {
+    runtimeFilters = fs
+    cutMemo = null
+    factoryMemo = null
+  }
 
   override def readSchema(): StructType = requiredSchema
   override def toBatch: Batch = this
@@ -1782,28 +1788,26 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         planInputPartitions().length)
   }
 
-  /** Pruned fileset with the LIMIT/TOP-N cuts applied, memoized on the
-    * runtime-filter state (the only planning input that changes): one
-    * manifest pass serves planInputPartitions, outputPartitioning's
-    * sizing re-entry, AND outputOrdering — on a many-thousand-file
-    * manifest each extra pass is real driver latency. A runtime-filter
-    * update misses the memo (In filters compare by array reference) and
-    * recomputes; never stale, only conservative. */
-  @volatile private var cutMemo: (Seq[Filter], Seq[graft.catalog.DataFileMeta]) = null
+  /** Pruned fileset with the LIMIT/TOP-N cuts applied, memoized until
+    * the runtime filters change (the only planning input that does;
+    * [[filter]] clears the memo): one manifest pass serves
+    * planInputPartitions, outputPartitioning's sizing re-entry, AND
+    * outputOrdering — on a many-thousand-file manifest each extra pass is
+    * real driver latency. */
+  @volatile private var cutMemo: Seq[graft.catalog.DataFileMeta] = null
   private def prunedCutFiles(): Seq[graft.catalog.DataFileMeta] = {
-    val key = runtimeFilters.toSeq
     val memo = cutMemo
-    if (memo != null && memo._1 == key) memo._2
+    if (memo != null) memo
     else {
       val files = graft.sources.PartitionPruner.pruneFiles(
-        meta, meta.baseFiles, filters.toSeq ++ key)
+        meta, meta.baseFiles, filters.toSeq ++ runtimeFilters)
       // LIMIT file-prefix and TOP-N cuts apply in EVERY branch (both
       // refuse under deltas/filters, so the cut set is sound regardless
       // of how the survivors are grouped into splits): with SPJ bucketing
       // enabled a plain `LIMIT 10` would otherwise open every bucket's
       // files.
       val cut = topNFiles(limitFilePrefix(files))
-      cutMemo = (key, cut)
+      cutMemo = cut
       cut
     }
   }
@@ -1863,9 +1867,23 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     }
   }
 
+  /** The reader factory, memoized until the runtime filters change like
+    * [[prunedCutFiles]]: Spark asks one scan for its factory more than
+    * once per query (the columnar-support probe at planning, then again
+    * from a copied BatchScanExec during physical preparation), and a
+    * delta-carrying factory collects and broadcasts its overlay each time
+    * it is built. Every other input is fixed when the scan is built; a
+    * runtime-filter update rebuilds. */
+  @volatile private var factoryMemo: PartitionReaderFactory = null
   override def createReaderFactory(): PartitionReaderFactory = {
-    val f = createReaderFactory0()
-    limit.map(new LimitedReaderFactory(f, _)).getOrElse(f)
+    val memo = factoryMemo
+    if (memo != null) memo
+    else {
+      val f0 = createReaderFactory0()
+      val f = limit.map(new LimitedReaderFactory(f0, _)).getOrElse(f0)
+      factoryMemo = f
+      f
+    }
   }
 
   private def createReaderFactory0(): PartitionReaderFactory = {
@@ -1951,8 +1969,8 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     // routed file is attach-eligible only when a raw by-name read of it
     // is exact: every defaulted column must be physically present (absent
     // columns read null, correct only when no read default exists);
-    // ineligible files just ride the tail through the remapping
-    // latestDeltas path.
+    // ineligible files just ride the tail, whose read remaps columns
+    // (maskedDeltas).
     // Attachment additionally requires every planned base file to carry a
     // coordinate (or the single kgBare split, which owns everything):
     // coordinate-less base files hold rows of ANY route, and a split that
@@ -1981,13 +1999,14 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
       m, tailD, filters.toSeq ++ runtimeFilters)
     if (GraftTable.deltaBytes(keepTailEarly) < GraftTable.broadcastDeltaBytes) {
       mDeltasBroadcast = keepTailEarly.length
-      // broadcast overlay for the tail: collect its latest delta state
-      // once, ship it to every split. The spill branch below deliberately
-      // keeps the FULL delta set: its per-route spill is cached by
-      // (version, shape) across queries.
+      // broadcast overlay for the tail: collect its delta rows once, fold
+      // them to latest-per-key here, ship the result to every split. The
+      // spill branch below deliberately keeps the FULL delta set: its
+      // per-route spill is cached by (version, shape) across queries.
       val keepTail = keepTailEarly
       val opIdx = internalFields.length
-      val routeIdx = opIdx + 1
+      val seqIdx = opIdx + 1
+      val routeIdx = opIdx + 2
       val dead = new java.util.HashSet[Seq[Any]]()
       val ups = scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[Array[Any]]]()
       // Routes touched by ANY delta row (upsert or tombstone). Trackable
@@ -2006,26 +2025,27 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
       val routeDerivable = routeRefCols.subsetOf(m.keyCols.toSet)
       val dirty = scala.collection.mutable.Set[String]()
       if (keepTail.nonEmpty) { // a fully-flushed table plans with NO driver job
-        // bounded by the broadcast byte check above → one static-planned
-        // collect (the latest-fold's exchange is delta-byte-sized; AQE
-        // would split this plan-time job into one per stage)
-        val rows = GraftTable.withStaticPlan(spark, tiny = true) {
-          val sel = tbl.latestDeltas(m, keepTail)
-            .select(internalSchema.fieldNames.toSeq.map(col) ++
-              Seq(col(GraftTable.OpCol), routeCol): _*)
-          sel.queryExecution.toRdd.map(_.copy()).collect()
-        }
-        rows.foreach { r =>
-          dead.add(MorOverlay.keyOf(r, keyIdx, types))
-          val r0 = if (r.isNullAt(routeIdx)) null
-            else r.getUTF8String(routeIdx).toString
-          val route = if (r0 != null && owned.contains(r0)) r0 else fallback
-          dirty += route
-          if (r.getUTF8String(opIdx).toString != GraftTable.OpDelete) {
-            ups.getOrElseUpdate(route, scala.collection.mutable.ArrayBuffer()) +=
-              types.indices.map(i => r.get(i, types(i))).toArray
+        // the tail's raw delta rows, collected unfolded: one scan stage,
+        // no exchange, so the plan-time job is one job of one stage and
+        // touches no session conf. The driver holds at most the tail
+        // bytes the broadcast check above admitted, and folds them to
+        // latest-per-key with the slice readers' own fold.
+        val rows = tbl.maskedDeltas(m, keepTail)
+          .select(internalSchema.fieldNames.toSeq.map(col) ++
+            Seq(col(GraftTable.OpCol), col(GraftTable.SeqCol), routeCol): _*)
+          .queryExecution.toRdd.map(_.copy()).collect()
+        MorOverlay.latestPerKey(rows.iterator, keyIdx, types, opIdx, Some(seqIdx))
+          .forEach { (key, r) =>
+            dead.add(key)
+            val r0 = if (r.isNullAt(routeIdx)) null
+              else r.getUTF8String(routeIdx).toString
+            val route = if (r0 != null && owned.contains(r0)) r0 else fallback
+            dirty += route
+            if (!MorOverlay.isDelete(r, opIdx)) {
+              ups.getOrElseUpdate(route, scala.collection.mutable.ArrayBuffer()) +=
+                types.indices.map(i => r.get(i, types(i))).toArray
+            }
           }
-        }
       }
       val info = spark.sparkContext.broadcast(MorOverlayInfo(
         types, keyIdx, outIdx, identity, dead,

@@ -18,7 +18,11 @@ import org.apache.spark.sql.types._
  * One factory ([[MorOverlayReaderFactory]]) serves every delta transport
  * the planner picks (GraftV2Scan.createReaderFactory): a broadcast tail,
  * per-tablet flushed delta files attached under that tail, or per-route
- * shuffle spills.
+ * shuffle spills. The planner builds it once per scan; the broadcast tail
+ * costs one plan-time job of one stage (the tail's raw delta rows,
+ * collected and folded on the driver). One fold,
+ * [[MorOverlay.latestPerKey]], resolves every key's latest delta row: on
+ * the driver for the tail, per split for a delta slice.
  *
  * @param types    column types of the INTERNAL read schema (the required
  *                 columns plus any key columns pruned out of the projection)
@@ -80,9 +84,9 @@ case class MorSlices(
 /**
  * The one merge-on-read reader factory. Each split's overlay is the
  * broadcast `tail` merged over the split's own delta slice, if any. The
- * slice folds to latest-per-key by (seq desc, op desc) and tail entries
- * always win per key: a flush folded seqs ≤ its manifest seq, and every
- * tail commit is newer. A split whose route has no slice reads `tail`
+ * slice folds to latest-per-key ([[MorOverlay.latestPerKey]]) and tail
+ * entries always win per key: a flush folded seqs ≤ its manifest seq, and
+ * every tail commit is newer. A split whose route has no slice reads `tail`
  * itself, with no per-split copy.
  *
  * @param tail         broadcast overlay of the unrouted delta tail (its
@@ -158,36 +162,25 @@ class MorOverlayReaderFactory(
       paths: Seq[String]): MorOverlayInfo = {
     val t = tail.value
     val s = slices.get
-    val opDelete = graft.table.GraftTable.OpDelete
-    // same (seq desc, op desc) tie-break as latestDeltas ("U" > "D": the
-    // upsert wins); a spill slice carries no seq, so only the op decides
-    // between a key's owner row and its dead-set-only duplicate
-    val best = new java.util.LinkedHashMap[Seq[Any], (Long, String, Array[Any])]()
     val dp: InputPartition = org.apache.spark.sql.GraftSqlBridge.filePartition(
       0, paths.map(SpillLocalCache.localize), None)
     val dr = s.deltaFactory.createReader(dp)
-    try {
-      while (dr.next()) {
-        val r = dr.get().copy() // reader reuses its row buffer
-        val key = MorOverlay.keyOf(r, t.keyIdx, t.types)
-        val seq = s.seqIdx.fold(0L)(r.getLong)
-        val op = r.getUTF8String(s.opIdx).toString
-        val cur = best.get(key)
-        if (cur == null || seq > cur._1 || (seq == cur._1 && op > cur._2)) {
-          val row =
-            if (op == opDelete) null
-            else Array.tabulate(t.types.length)(i => r.get(i, t.types(i)))
-          best.put(key, (seq, op, row))
-        }
-      }
-    } finally dr.close()
+    // a spill slice carries no seq, so only the op decides between a key's
+    // owner row and its dead-set-only duplicate
+    val best =
+      try MorOverlay.latestPerKey(
+        // the reader reuses its row buffer
+        Iterator.continually(dr).takeWhile(_.next()).map(_.get().copy()),
+        t.keyIdx, t.types, s.opIdx, s.seqIdx)
+      finally dr.close()
     val dead = new java.util.HashSet[Seq[Any]](t.dead)
     val ups = scala.collection.mutable.ArrayBuffer[Array[Any]]()
-    best.forEach { (k, v) =>
+    best.forEach { (k, r) =>
       dead.add(k)
       // a tail entry (upsert OR tombstone) for this key is newer than the
       // slice's winner — the slice upsert must not emit
-      if (owns && v._2 != opDelete && !t.dead.contains(k)) ups += v._3
+      if (owns && !MorOverlay.isDelete(r, s.opIdx) && !t.dead.contains(k))
+        ups += Array.tabulate(t.types.length)(i => r.get(i, t.types(i)))
     }
     t.upserts.get(route).foreach(a => ups ++= a)
     t.copy(dead = dead, upserts = if (ups.isEmpty) Map.empty else Map(route -> ups.toArray))
@@ -212,6 +205,36 @@ object MorOverlay {
       i += 1
     }
     scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+  }
+
+  private val OpDelete =
+    org.apache.spark.unsafe.types.UTF8String.fromString(graft.table.GraftTable.OpDelete)
+
+  def isDelete(row: InternalRow, opIdx: Int): Boolean =
+    row.getUTF8String(opIdx) == OpDelete
+
+  /** The merge-on-read fold: the latest delta row per key, newest seq
+    * first and, at equal seq, the greater op ("U" > "D": the upsert wins —
+    * reachable only when one commit carries both a tombstone and an upsert
+    * for a key, e.g. a SQL MERGE deleting key A while inserting A). The
+    * same tie-break as GraftTable.latestDeltas. Serves the driver-side
+    * fold of the broadcast tail and the executor-side fold of each split's
+    * delta slice. `rows` must not reuse buffers; `seqIdx` None (spill
+    * slices, already latest per key) decides by op alone.
+    * @return key -> winning row, in first-seen key order */
+  def latestPerKey(rows: Iterator[InternalRow], keyIdx: Array[Int],
+      types: Array[DataType], opIdx: Int,
+      seqIdx: Option[Int]): java.util.LinkedHashMap[Seq[Any], InternalRow] = {
+    def seq(r: InternalRow): Long = seqIdx.fold(0L)(r.getLong)
+    val best = new java.util.LinkedHashMap[Seq[Any], InternalRow]()
+    rows.foreach { r =>
+      val key = keyOf(r, keyIdx, types)
+      val cur = best.get(key)
+      if (cur == null || seq(r) > seq(cur) || (seq(r) == seq(cur) &&
+          r.getUTF8String(opIdx).compareTo(cur.getUTF8String(opIdx)) > 0))
+        best.put(key, r)
+    }
+    best
   }
 }
 

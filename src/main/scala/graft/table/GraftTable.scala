@@ -228,12 +228,23 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     }
   }
 
+  /** Every delta row of `deltaFiles` (all table columns + the op/seq
+    * columns), unfolded, after drop-range masking: one scan stage, no
+    * exchange. The DSv2 broadcast overlay collects this and folds it to
+    * latest-per-key on the driver (MorOverlay.latestPerKey). */
+  private[graft] def maskedDeltas(m: TableMeta, deltaFiles: Seq[DataFileMeta]): DataFrame =
+    dropMaskDelta(m, readFileGroup(m, deltaFiles, delta = true))
+
   /** Latest delta state per key (all table columns + the op/seq columns),
     * after drop-range masking — the per-key winner the merge-on-read
-    * overlay applies over the base (also consumed by the DSv2 overlay
-    * reader, sources/v2/MorOverlay.scala). */
-  private[graft] def latestDeltas(m: TableMeta, deltaFiles: Seq[DataFileMeta]): DataFrame = {
-    val deltas = dropMaskDelta(m, readFileGroup(m, deltaFiles, delta = true))
+    * overlay applies over the base. */
+  private[graft] def latestDeltas(m: TableMeta, deltaFiles: Seq[DataFileMeta]): DataFrame =
+    latestOf(m, maskedDeltas(m, deltaFiles), deltaFiles)
+
+  /** The per-key fold of `deltas`, rows read from `deltaFiles` (which size
+    * the fold's exchange). */
+  private def latestOf(m: TableMeta, deltas: DataFrame,
+      deltaFiles: Seq[DataFileMeta]): DataFrame = {
     // OpCol breaks same-seq ties deterministically ("U" > "D": the upsert
     // wins) — reachable only when one commit carries both a tombstone and
     // an upsert for a key (SQL MERGE deleting key A while inserting A)
@@ -389,25 +400,54 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
    * instead of rescanning two full snapshots (what the reference's diff scan
    * does physically: mutations since the start timestamp, ghost rows
    * deduped — generic_iterators.cc:440-467). Falls back to the logical
-   * [[changes]] when the base filesets differ (a compaction intervened).
+   * [[changes]] when [[cdcFastPath]] declines (a compaction intervened).
    *
    * Semantics: latest mutated state per key + `_deleted`. Matches Kudu's
    * physical diff: an upsert writing an unchanged value IS emitted (it is a
    * mutation); a row inserted and deleted entirely within the window is NOT
    * (ghost dedup via an existence check against v1).
    */
-  /** True when `(v1, v2]` is a pure delta tail — the [[changesSince]] /
-    * [[touchedKeys]] fast path. False (compaction, a minor fold, or a
-    * range drop in range) forces the two-snapshot logical diff. */
+  /** True when `(v1, v2]` changed the table through delta files alone —
+    * the [[changesSince]] / [[touchedKeys]] fast path. Minor delta folds
+    * (`merge_tail`, `compact_deltas`) may rewrite delta files inside the
+    * window: they keep every surviving row's `_graft_seq` and the latest
+    * row per key, so the rows with seq in `(v1, v2]` still carry the
+    * window's changes (both readers filter rows by seq, since a folded
+    * file's manifest seq is its NEWEST row's). Any other commit that
+    * retires delta files (a compaction, even one whose output is empty and
+    * so leaves the base file set as it was), a base rewrite, or a range
+    * drop in range forces the two-snapshot logical diff. */
   private def cdcFastPath(m1: TableMeta, m2: TableMeta): Boolean =
     m1.baseFiles.map(_.path).toSet == m2.baseFiles.map(_.path).toSet &&
-      m1.deltaFiles.map(_.path).toSet.subsetOf(m2.deltaFiles.map(_.path).toSet) &&
-      m1.rangeDrops == m2.rangeDrops
+      m1.rangeDrops == m2.rangeDrops && deltasRetiredByFoldsOnly(m1, m2)
 
-  /** Manifest-derived size in bytes of the CDC window `(v1, v2]` when it is
-    * a pure delta tail; None when the window needs the two-snapshot diff —
-    * callers sizing work from this must then assume snapshot-scale. Pure
-    * driver-side metadata (two manifest reads + file stats). */
+  /** True when every delta file live at `m1` is still live at `m2`, or was
+    * retired by a seq-preserving fold. Walks the window's manifests only
+    * when some `m1` delta file is gone. */
+  private def deltasRetiredByFoldsOnly(m1: TableMeta, m2: TableMeta): Boolean = {
+    def keeps(a: TableMeta, b: TableMeta) =
+      a.deltaFiles.map(_.path).toSet.subsetOf(b.deltaFiles.map(_.path).toSet)
+    keeps(m1, m2) || {
+      val window = m1 +: ((m1.version + 1) to m2.version).map(readVersion)
+      window.zip(window.tail).forall { case (prev, m) =>
+        keeps(prev, m) || SeqPreservingFolds(m.operation)
+      }
+    }
+  }
+
+  /** The delta rows committed in `(v1, v2]`, read from the live delta
+    * files of `m2` that can hold one. A file's manifest seq is the newest
+    * commit it holds, so files at or below v1 are skipped whole; a folded
+    * file above v1 may also carry older rows, which the row-level seq
+    * filter drops. */
+  private def windowDeltas(m2: TableMeta, inRange: Seq[DataFileMeta], v1: Long): DataFrame =
+    readFileGroup(m2, inRange, delta = true).filter(col(SeqCol) > lit(v1))
+
+  /** Manifest-derived size in bytes of the CDC window `(v1, v2]` when it
+    * changed the table through delta files alone; None when the window
+    * needs the two-snapshot diff — callers sizing work from this must then
+    * assume snapshot-scale. Pure driver-side metadata (two manifest reads
+    * + file stats). */
   def cdcWindowBytes(v1: Long, v2: Long): Option[Long] = {
     val m1 = readVersion(v1)
     val m2 = readVersion(v2)
@@ -420,22 +460,20 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val m1 = readVersion(v1)
     val m2 = readVersion(v2)
     if (!cdcFastPath(m1, m2))
-      // compaction, a minor delta fold (v1's delta files no longer all
-      // live — their per-commit history was collapsed), or a
-      // range-partition drop in range → logical diff (a drop is a mass
-      // delete the delta files don't record; the snapshot diff emits its
-      // rows as _deleted)
+      // a base rewrite (compaction) or a range-partition drop in range →
+      // logical diff (a drop is a mass delete the delta files don't
+      // record; the snapshot diff emits its rows as _deleted)
       return changes(v1, v2)
     val inRange = m2.deltaFiles.filter(f => f.seq > v1 && f.seq <= v2)
     if (inRange.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(m2.visibleColumns.map(_.toField.copy(nullable = true)) :+
           StructField(DeletedCol, BooleanType, nullable = false)))
-    // the per-key fold sized by the in-range delta bytes (a CDC window is
-    // usually a sliver of the table, often one commit). latestDeltas' drop
-    // mask is a no-op here: the fast path requires equal drop lists, so
-    // every drop predates v1, which is below every in-range seq.
-    val latest = latestDeltas(m2, inRange)
+    // the per-key fold over the window's rows, sized by the in-range delta
+    // bytes (a CDC window is usually a sliver of the table, often one
+    // commit). No drop mask: the fast path requires equal drop lists, so
+    // every drop predates v1, which is below every window row's seq.
+    val latest = latestOf(m2, windowDeltas(m2, inRange, v1), inRange)
     // ghost dedup: only emit deletes for keys that existed at v1 — through
     // a scan PRUNED to the key interval the in-range delta files record
     // (every touched key lies within some delta file's [keyLo, keyHi], so
@@ -491,9 +529,10 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * the per-key latest fold and the ghost-delete dedup are irrelevant
     * when the caller recomputes from the current snapshot (a ghost key
     * re-derives to the same nothing, a superseded upsert to the same
-    * latest), so the fast path reads ONLY the delta files in range — no
-    * window, no v1 snapshot scan. Falls back to the logical diff when
-    * compaction or a minor fold collapsed the range's per-commit history. */
+    * latest), so the fast path reads ONLY the window's delta rows — no
+    * window function, no v1 snapshot scan. A minor delta fold inside the
+    * window keeps the fast path (see [[cdcFastPath]]); a base rewrite or a
+    * range drop falls back to the logical diff. */
   def touchedKeys(v1: Long, v2: Long, cols: Seq[String]): DataFrame = {
     val m1 = readVersion(v1)
     val m2 = readVersion(v2)
@@ -510,7 +549,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
           m2.column(n).toField.copy(nullable = true))))
     // callers persist() this frame: size its distinct's exchange by the
     // in-range delta bytes (foldPartitions)
-    readFileGroup(m2, inRange, delta = true).select(cols.map(col): _*)
+    windowDeltas(m2, inRange, v1).select(cols.map(col): _*)
       .repartition(foldPartitions(inRange), cols.map(col): _*).distinct()
   }
 
@@ -1524,10 +1563,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         rangeKey.forall(rk => f.rangeKey.forall(v => v == rk || v == "__null"))
     val (touch, untouched) = m.deltaFiles.partition(mayContain)
     val deltas = readFileGroup(m, touch, delta = true)
-    val w = Window.partitionBy(m.keyCols.map(col): _*)
-      .orderBy(col(SeqCol).desc, col(OpCol).desc) // same tie-break as latestDeltas
-    val dLatest = deltas.filter(member).withColumn(RnCol, row_number().over(w))
-      .filter(col(RnCol) === 1).drop(RnCol)
+    val dLatest = latestOf(m, deltas.filter(member), touch)
     val live = readFileGroup(m, inTablet, delta = false)
       .join(dLatest.select(m.keyCols.map(col): _*), m.keyCols, "left_anti")
       .unionByName(dLatest.filter(col(OpCol) =!= lit(OpDelete))
@@ -1565,8 +1601,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       val restFiles =
         if (touch.isEmpty) Nil
         else {
-          val rest0 = deltas.filter(!member).withColumn(RnCol, row_number().over(w))
-            .filter(col(RnCol) === 1).drop(RnCol)
+          val rest0 = latestOf(m, deltas.filter(!member), touch)
           // A non-member entry superseded by a FOLDED entry for the same
           // key must not survive: the folded row's seq is gone (it lives
           // in the new base), so a stale non-member tombstone left behind
@@ -2685,6 +2720,10 @@ object GraftTable {
   val DeletedCol = "_deleted"
   val OpUpsert = "U"
   val OpDelete = "D"
+  /** Commit operations that retire delta files while keeping every
+    * surviving row's `_graft_seq` and the latest row per key: the minor
+    * delta folds, which leave a CDC window on the delta fast path. */
+  private val SeqPreservingFolds = Set("merge_tail", "compact_deltas")
   /** Merge-on-read broadcast bound for the delta tail, chosen PER SCAN
     * (`graft.mor.broadcastBytes` remains an explicit override — specs use
     * it to force past-bound paths with tiny data). Past the bound the DSv1

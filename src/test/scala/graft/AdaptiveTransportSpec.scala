@@ -157,4 +157,32 @@ class AdaptiveTransportSpec extends AnyFunSuite {
       }
     }
   }
+
+  test("a merge-on-read get plans with one single-stage tail collect") {
+    val wh = Files.createTempDirectory("graft-at-jobs-").toString
+    val df = (1 to 300).map(i => (i.toLong, s"a$i")).toDF("k", "v")
+    val t = GraftTable.create(spark, s"$wh/tj", "tj", df.schema, Seq("k"),
+      Seq(HashComponent(Seq("k"), 4)), data = Some(df))
+    // a 3-commit unrouted tail
+    t.upsert(Seq((1L, "u1"), (2L, "u2")).toDF("k", "v"))
+    t.upsert(Seq((1L, "w1")).toDF("k", "v"))
+    t.delete(Seq(Tuple1(3L)).toDF("k"))
+    assert(t.meta.deltaFiles.forall(f => f.bucket.isEmpty && f.rangeKey.isEmpty))
+    spark.conf.set("spark.sql.catalog.gatj", classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gatj.warehouse", wh)
+    val q = spark.sql("SELECT v FROM gatj.tj WHERE k = 1")
+    val ((jobs, stages), rows) = TaggedJobs.count(spark)(q.collect())
+    assert(rows.map(_.getString(0)).toSeq == Seq("w1"))
+    // one plan-time collect of the pruned tail (a scan, no exchange), then
+    // the scan itself: the factory is built once and folds on the driver
+    assert((jobs, stages) == (2, 2), s"(jobs, stages) = ${(jobs, stages)}")
+    val scan = q.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.head
+    // the broadcast tail is the delta files whose key bounds hold k = 1
+    val held = graft.sources.PartitionPruner.pruneFiles(t.meta, t.meta.deltaFiles,
+      Seq(org.apache.spark.sql.sources.EqualTo("k", 1L)))
+    assert(held.nonEmpty && held.length < t.meta.deltaFiles.length)
+    assert(scan.metrics(graft.sources.v2.GraftV2Scan.DeltasBroadcast).value == held.length)
+  }
 }

@@ -164,6 +164,57 @@ class GraftTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(afterCompact == Map(1 -> false, 3 -> false, 2 -> true), afterCompact.toString)
   }
 
+  test("changesSince/touchedKeys keep the delta fast path across a tail merge") {
+    val t = newKv(1 -> "a", 2 -> "b", 3 -> "c", 4 -> "d")
+    t.upsert(kv(1 -> "pre"))     // before the window: must not come out
+    t.delete(Seq(4).toDF("k"))   // a pre-window tombstone: must not come out
+    val v1 = t.currentVersion
+    t.upsert(kv(2 -> "B"))       // change
+    t.delete(Seq(3).toDF("k"))   // delete existing
+    t.insert(kv(9 -> "ghost"))   // insert...
+    t.delete(Seq(9).toDF("k"))   // ...and delete within window → ghost
+    t.upsert(kv(5 -> "new"))     // new
+    // folds tail files from both sides of v1 into one fileset whose
+    // manifest seq lies inside the window
+    assert(t.mergeTailDeltas())
+    val v2 = t.currentVersion
+    assert(t.cdcWindowBytes(v1, v2).isDefined,
+      "a tail merge must not force the two-snapshot diff")
+    def flags(df: DataFrame): Map[Int, Boolean] =
+      df.collect().map(r => r.getInt(0) -> r.getBoolean(r.length - 1)).toMap
+    val fast = t.changesSince(v1, v2)
+    assert(flags(fast) == Map(2 -> false, 3 -> true, 5 -> false), flags(fast).toString)
+    assert(flags(fast) == flags(t.changes(v1, v2)))
+    assert(fast.filter(!col("_deleted")).collect()
+      .map(r => r.getInt(0) -> r.getString(1)).toMap == Map(2 -> "B", 5 -> "new"))
+    assert(t.touchedKeys(v1, v2, Seq("k")).collect().map(_.getInt(0)).toSet ==
+      Set(2, 3, 5, 9))
+    // a window opening after the merge reads only its own commits
+    t.upsert(kv(6 -> "f"))
+    assert(flags(t.changesSince(v2, t.currentVersion)) == Map(6 -> false))
+  }
+
+  test("changesSince/touchedKeys report a delete folded away by a compaction that writes no base file") {
+    // Every live row is deleted, so the compaction's output is empty and
+    // the base file set stays {} across the window: only the delta files
+    // tell that history was rewritten.
+    def deletedThenCompacted(compactIt: GraftTable => Unit): Unit = {
+      val t = newKv()
+      t.upsert(kv(1 -> "a"))
+      val v1 = t.currentVersion
+      t.delete(Seq(1).toDF("k"))
+      compactIt(t)
+      val v2 = t.currentVersion
+      assert(t.meta.baseFiles.isEmpty && t.meta.deltaFiles.isEmpty)
+      val got = t.changesSince(v1, v2).collect()
+        .map(r => r.getInt(0) -> r.getBoolean(r.length - 1)).toMap
+      assert(got == Map(1 -> true), got.toString)
+      assert(t.touchedKeys(v1, v2, Seq("k")).collect().map(_.getInt(0)).toSet == Set(1))
+    }
+    deletedThenCompacted(_.compact())
+    deletedThenCompacted(t => (0 until 2).foreach(b => t.compactTablet(bucket = Some(b))))
+  }
+
   test("fork: zero-copy private view; mutations stay local; maintain() compacts") {
     val t = newKv(1 -> "a", 2 -> "b")
     val fork = GraftTable.fork(spark, t, tmp())

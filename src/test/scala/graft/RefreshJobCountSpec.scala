@@ -15,35 +15,16 @@ import graft.tools.{MaterializedRollup, SecondaryIndex, VectorIndex}
   * index; each refresh call's Spark jobs are counted through a listener
   * and must stay at or under the counts the refresh path had when this
   * guard was written (a one-row fast-path window, the first refresh after
-  * build, and a window spanning a compaction — the snapshot-diff path). */
+  * build, a window spanning a tail merge — still the fast path — and a
+  * window spanning a compaction — the snapshot-diff path). */
 class RefreshJobCountSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
-  private val TagKey = "graft.spec.refreshJobCount"
-
-  /** Spark jobs `body` starts. Counted by a local property rather than a
-    * job group: broadcast exchanges re-group their own jobs but keep the
-    * caller's local properties, and background work on other suites'
-    * tables never carries the tag. */
+  /** Spark jobs `body` starts ([[TaggedJobs]]). */
   private def jobs(body: => Boolean): Int = {
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (js.properties != null && tag == js.properties.getProperty(TagKey))
-          n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.setLocalProperty(TagKey, tag)
-    try {
-      assert(body, "the window must refresh")
-      org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark)
-    } finally {
-      spark.sparkContext.setLocalProperty(TagKey, null)
-      spark.sparkContext.removeSparkListener(l)
-    }
-    n.get
+    val ((n, _), refreshed) = TaggedJobs.count(spark)(body)
+    assert(refreshed, "the window must refresh")
+    n
   }
 
   test("refresh job counts stay at or under the recorded floors for every kind") {
@@ -80,17 +61,23 @@ class RefreshJobCountSpec extends AnyFunSuite {
     val first = refreshAll()
     src.upsert(rows(Seq(12L), 2))
     val steady = refreshAll()
+    // a tail merge folds the window's delta file together with the ones
+    // before it: the refresh stays on the delta fast path
+    src.upsert(rows(Seq(14L), 4))
+    assert(src.mergeTailDeltas())
+    val merged = refreshAll()
     src.upsert(rows(Seq(13L), 3))
     src.compact()
     val compacted = refreshAll()
     info(s"jobs (sindex, rollup, vindex): first $first, steady $steady, " +
-      s"across compaction $compacted")
+      s"across a tail merge $merged, across compaction $compacted")
 
     def within(got: (Int, Int, Int), floor: (Int, Int, Int), what: String) =
       assert(got._1 <= floor._1 && got._2 <= floor._2 && got._3 <= floor._3,
         s"$what refresh jobs (sindex, rollup, vindex) $got exceed $floor")
     within(first, (5, 5, 6), "first")
     within(steady, (7, 6, 8), "steady-state fast-path")
+    within(merged, (7, 6, 8), "across-a-tail-merge")
     within(compacted, (11, 12, 19), "across-compaction")
 
     // the guarded refreshes stayed exact: each derived table equals a
