@@ -204,7 +204,7 @@ case class DataFileMeta(
     colHi: Option[Map[String, String]] = None,
     colNulls: Option[Map[String, Long]] = None,
     // Some(true) when the WRITER proves the file's rows are sorted by the
-    // table's full key column list (writeBase PK-sorts every file it
+    // table's full key column list (the base writer PK-sorts every file it
     // emits; z-clustered rewrites order by (z, PK) → Some(false); files
     // registered from external parquet keep None = unknown). Consumed by
     // the V2 scan's SupportsReportOrdering: a clean one-sorted-file-per-

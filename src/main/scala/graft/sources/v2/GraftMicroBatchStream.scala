@@ -22,8 +22,8 @@ import graft.table.GraftTable
  * a directory-glob file stream, which can observe an attempt directory
  * before its commit fails. Version metadata is immutable once written, so
  * replanning a batch after recovery reads the identical fileset
- * (exactly-once per committed version; `c*_deltamerge_*` compaction
- * rewrites are excluded — folds re-emit nothing).
+ * (exactly-once per committed version; minor-fold rewrites are
+ * excluded — folds re-emit nothing, [[GraftTable.committedDeltas]]).
  *
  * Emitted rows are the UPSERT row images in the table's visible schema
  * (append-only stream semantics); delete tombstones are filtered out —
@@ -85,8 +85,7 @@ class GraftMicroBatchStream(meta: TableMeta, requiredSchema: StructType,
 
   /** Bytes a version's micro-batch would read (its own delta filesets). */
   private def versionBytes(v: Long): Long =
-    readV(v).deltaFiles
-      .filter(f => f.seq == v && !f.path.contains("_deltamerge_"))
+    GraftTable.committedDeltas(readV(v), v)
       .map(f => GraftTable.fileSize(f.path)).sum
 
   /** Bounded triggers: advance at most maxVersionsPerTrigger versions per
@@ -135,9 +134,7 @@ class GraftMicroBatchStream(meta: TableMeta, requiredSchema: StructType,
     val paths = (v0 + 1 to v1).flatMap { v =>
       // each version's metadata is immutable: its own delta files are the
       // ones stamped seq == v (compaction-fold rewrites excluded)
-      val m = readV(v)
-      m.deltaFiles.filter(f => f.seq == v && !f.path.contains("_deltamerge_"))
-        .map(_.path)
+      GraftTable.committedDeltas(readV(v), v).map(_.path)
     }
     paths.zipWithIndex.map { case (p, i) =>
       org.apache.spark.sql.GraftSqlBridge.filePartition(i, Seq(p), None)

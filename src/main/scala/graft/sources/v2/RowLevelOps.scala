@@ -10,7 +10,7 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
@@ -65,9 +65,8 @@ class GraftDeltaWrite(meta: TableMeta, cmd: RowLevelOperation.Command,
     info: LogicalWriteInfo) extends DeltaWrite with DeltaBatchWrite {
 
   private val expectedVersion = meta.version + 1
-  private val attemptDir = Paths.get(meta.location, "data",
-    s"c${expectedVersion}_delta_${java.util.UUID.randomUUID().toString.take(8)}")
-    .toString
+  private val attemptDir =
+    GraftTable.attemptDir(meta.location, expectedVersion, GraftTable.DeltaToken)
 
   override def toBatch: DeltaBatchWrite = this
 
@@ -75,10 +74,7 @@ class GraftDeltaWrite(meta: TableMeta, cmd: RowLevelOperation.Command,
       pInfo: PhysicalWriteInfo): DeltaWriterFactory = {
     val spark = SparkSession.active
     // the engine's delta-file layout: physical column names + op + seq
-    val fileSchema = StructType(
-      meta.columns.map(c => StructField(c.physName, c.dataType, nullable = true)) ++
-        Seq(StructField(GraftTable.OpCol, StringType, nullable = false),
-          StructField(GraftTable.SeqCol, LongType, nullable = false)))
+    val fileSchema = GraftTable.deltaFileSchema(meta)
     val rowSchema = info.schema()
     val idSchema = info.rowIdSchema().orElse(rowSchema)
     // file position i <- full-row position (by logical name); -1 when the
@@ -118,13 +114,7 @@ class GraftDeltaWrite(meta: TableMeta, cmd: RowLevelOperation.Command,
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = sweep()
 
-  private def sweep(): Unit =
-    try {
-      if (Files.exists(Paths.get(attemptDir)))
-        Files.walk(Paths.get(attemptDir))
-          .sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.deleteIfExists(_))
-    } catch { case _: Exception => }
+  private def sweep(): Unit = GraftTable.sweepTree(Paths.get(attemptDir))
 }
 
 case class GraftDeltaCommitMessage(rows: Long, path: String)

@@ -102,10 +102,11 @@ object GraftStreaming {
  * that lost the metadata race (or aborted mid-write, e.g. an in-job PK
  * guard) are never emitted. The directory-glob file stream this replaces
  * could observe an attempt directory before its commit failed and stream
- * phantom rows. `c*_deltamerge_*` compaction rewrites are excluded — a
- * minor fold re-emits nothing (logical changes only, diff-scan
- * semantics). A fresh stream starts from version 0: the full committed
- * delta history (initial-load base files are not deltas).
+ * phantom rows. Minor-fold rewrites are excluded
+ * ([[graft.table.GraftTable.committedDeltas]]) — a minor fold re-emits
+ * nothing (logical changes only, diff-scan semantics). A fresh stream
+ * starts from version 0: the full committed delta history (initial-load
+ * base files are not deltas).
  */
 class GraftChangeSource(spark: SparkSession, location: String,
     maxVersionsPerTrigger: Int = 64)
@@ -146,8 +147,7 @@ class GraftChangeSource(spark: SparkSession, location: String,
     planned = math.max(planned, v1)
     val paths = (v0 + 1 to v1).flatMap { v =>
       // each version's own delta files are the ones stamped seq == v
-      TableMeta.read(location, v).deltaFiles
-        .filter(f => f.seq == v && !f.path.contains("_deltamerge_"))
+      graft.table.GraftTable.committedDeltas(TableMeta.read(location, v), v)
         .map(_.path)
     }
     val s = schema

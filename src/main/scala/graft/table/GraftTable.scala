@@ -4,7 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -28,9 +28,19 @@ case class MaintenanceAction(kind: String, bucket: Option[Int],
  *
  * Layout under `location`:
  *   _graft/v<N>.json   full metadata snapshot per commit (MVCC versions)
- *   data/c<N>_base_<id>/   columnar base files (hash/range partition dirs _b=/_r=)
- *   data/c<N>_delta_<id>/  delta files: full rows + _op (U|D) + _seq columns
- *   (<id> = per-commit-attempt nonce, so racing writers never share a path)
+ *   data/c<N>_<token>_<nonce>/   one fileset per commit attempt (<nonce> is
+ *     per attempt, so racing writers never share a path), every one written,
+ *     statted and published by the one data-file writer ([[writeFileset]]):
+ *     base             base files under physical column names: hash/range
+ *                      tablet dirs _b=/_r=, z-clustered, or range-sorted
+ *     delta            a commit's delta files: full rows + _graft_op (U|D)
+ *                      + _graft_seq, unrouted (SQL UPDATE/MERGE executors
+ *                      write the same schema into the same kind of dir)
+ *     deltamerge       a minor fold, latest row per key under its original
+ *                      seq: compactDeltas (routed per tablet when the
+ *                      table is partitioned; routed/ + tomb/ when
+ *                      tombstones cannot route) or compactTablet's rest
+ *     deltamerge_tail  mergeTailDeltas' unrouted tail fold
  *
  * Invariant: every base file's seq < every live delta file's seq — all
  * mutations (including INSERT after the initial load) commit as deltas, so
@@ -286,12 +296,13 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       // CONSTRUCTION time — one per readFileGroup call, i.e. per scan plan,
       // per MOR branch, per micro-batch replan. The physical schema is
       // fully determined by the manifest already: every committed file
-      // carries exactly the physNames of the column ids it records (writeBase
-      // casts to the declared type before writing; register derives the
-      // ColumnMeta FROM the footer; prior generations keep their recorded
-      // type), so the provided schema matches the footer field-for-field
-      // and the job disappears. At 100 TB the same call otherwise pays a
-      // driver-side footer read per plan on top of the job-scheduling floor.
+      // carries exactly the physNames of the column ids it records (the
+      // writer casts to the declared type before writing; register derives
+      // the ColumnMeta FROM the footer; prior generations keep their
+      // recorded type), so the provided schema matches the footer
+      // field-for-field and the job disappears. At 100 TB the same call
+      // otherwise pays a driver-side footer read per plan on top of the
+      // job-scheduling floor.
       val physFields = m.columns.flatMap(c =>
         physGenOf(c, present).map { case (n, dt) => StructField(n, dt) })
       val extraFields =
@@ -328,7 +339,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   /** Footer-vs-manifest schema audit (`fsck(verifySchemas = true)`):
     * [[readFileGroup]] reads every committed file under the PHYSICAL
     * schema the manifest implies — sound for every engine writer
-    * (writeBase casts before writing, register derives ColumnMeta FROM
+    * (the writer casts before writing, register derives ColumnMeta FROM
     * the footer) — so a foreign or hand-edited file whose footer
     * disagrees would otherwise surface as an opaque vectorized-reader
     * type error (or silent nulls) at scan time. This names the file and
@@ -1226,7 +1237,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
    * O(delta bytes), not the O(base bytes) of a full [[compact]].
    *
    * On partitioned tables the fold is ROUTED: files are written per tablet
-   * coordinate (the same `partitionBy` dirs as [[writeBase]]) and each
+   * coordinate (the same `partitionBy` dirs as a base write) and each
    * records its bucket/rangeKey — the reference's DMS flush into
    * per-rowset delta stores (tablet/deltafile.h). The V2 read then
    * attaches each tablet's flushed deltas to its own split straight from
@@ -1252,67 +1263,24 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       if (!tailOnly) (Nil, m.deltaFiles)
       else m.deltaFiles.partition(f => f.bucket.isDefined || f.rangeKey.isDefined)
     if (fold.size <= 1) return
-    val foldBytes = GraftTable.deltaBytes(fold)
-    val latest = latestDeltas(m, fold)
     val v = m.version + 1
-    val dir = Paths.get(location, "data",
-      s"c${v}_deltamerge_${java.util.UUID.randomUUID().toString.take(8)}").toString
-    val physCols = m.columns.map(c => col(c.name).cast(c.dataType).as(c.physName)) ++
-      Seq(col(OpCol), col(SeqCol))
-    val projected = latest.select(physCols: _*)
-    val keysPhys = m.columns.filter(_.isKey).map(c => col(c.physName))
-    var routed = projected
-    val partCols = ArrayBuffer[String]()
-    if (m.hash.nonEmpty) {
-      routed = routed.withColumn(BucketCol,
-        GraftTable.bucketExpr(m, n => col(m.column(n).physName)))
-      partCols += BucketCol
-    }
-    m.range.foreach { r =>
-      routed = routed.withColumn(RangeCol,
-        GraftTable.rangeKeyExprM(m, r, n => col(m.column(n).physName)))
-      partCols += RangeCol
-    }
-    GraftTable.withStaticPlan(spark,
-      foldBytes <= GraftTable.staticPlanMaxBytes) {
-    withMicrosTimestamps {
-      if (partCols.isEmpty)
-        projected.repartition(DeltaWritePartitions)
-          .sortWithinPartitions(keysPhys: _*)
-          .write.mode("overwrite").parquet(dir)
-      else if (GraftTable.deleteRouteTrusted(m))
-        routed.repartition(partCols.toSeq.map(col): _*)
-          .sortWithinPartitions(partCols.toSeq.map(col) ++ keysPhys: _*)
-          .write.partitionBy(partCols.toSeq: _*).mode("overwrite").parquet(dir)
-      else {
-        // The route depends on a NON-KEY column, which tombstones carry as
-        // null — their coords would be garbage. Write tombstones UNROUTED
-        // (coordinate-less files ride the V2 tail's global dead set, and
-        // CDC sees each op exactly once); upserts carry full rows, so
-        // their coords stay exact.
-        routed.filter(col(OpCol) =!= lit(OpDelete))
-          .repartition(partCols.toSeq.map(col): _*)
-          .sortWithinPartitions(partCols.toSeq.map(col) ++ keysPhys: _*)
-          .write.partitionBy(partCols.toSeq: _*).mode("overwrite")
-          .parquet(Paths.get(dir, "routed").toString)
-        projected.filter(col(OpCol) === lit(OpDelete))
-          .repartition(DeltaWritePartitions)
-          .sortWithinPartitions(keysPhys: _*)
-          .write.mode("overwrite").parquet(Paths.get(dir, "tomb").toString)
-      }
-    }
-    } // withStaticPlan
+    // fold layout: unpartitioned tables stay unrouted; a route that reads a
+    // NON-KEY column (tombstones carry it as null — their coords would be
+    // garbage) routes only the upserts and leaves tombstones unrouted
+    // (coordinate-less files ride the V2 tail's global dead set, and CDC
+    // sees each op exactly once)
+    val layout =
+      if (m.hash.isEmpty && m.range.isEmpty) Layout.Unrouted(DeltaWritePartitions)
+      else if (GraftTable.deleteRouteTrusted(m)) Layout.Routed
+      else Layout.RoutedUpserts
     // the merged fileset's manifest seq is the HIGHEST folded commit — CDC
     // range selection (changesSince file filter) stays conservative and the
     // row-level _graft_seq filter inside it restores exactness
-    val maxSeq = fold.map(_.seq).max
-    val files = deltaFileMetas(m, listParquet(dir), maxSeq, withCoords = true)
-    try TableMeta.write(m.copy(version = v, timestampMs = now(),
-      operation = "compact_deltas", deltaFiles = kept ++ files))
-    catch {
-      case e: Throwable =>
-        sweepTree(Paths.get(dir))
-        throw e
+    publish { a =>
+      val files = writeFileset(a, m, latestDeltas(m, fold), v, FoldToken, layout,
+        fold.map(_.seq).max, Some(BigInt(GraftTable.deltaBytes(fold))))
+      m.copy(version = v, timestampMs = now(), operation = "compact_deltas",
+        deltaFiles = kept ++ files)
     }
   }
 
@@ -1328,7 +1296,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
    * sustained micro-batch stream otherwise leaves one delta fileset per
    * commit). Per-row `_graft_seq` survives the fold, so merge-on-read
    * windows and CDC range selection are unchanged; the output dir carries
-   * the `_deltamerge_` token the streaming sources already exclude.
+   * the fold token the streaming sources exclude
+   * ([[GraftTable.committedDeltas]]).
    * Returns true when a merge happened.
    */
   def mergeTailDeltas(minFiles: Int = 2): Boolean = {
@@ -1337,32 +1306,15 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     if (tail.size < math.max(2, minFiles)) return false
     // the streaming tail is small — collapse to one file per ~128 MB
     val tailBytes = tail.map(f => GraftTable.fileSize(f.path)).sum
-    val latest = latestDeltas(m, tail)
-    val v = m.version + 1
-    val dir = Paths.get(location, "data",
-      s"c${v}_deltamerge_tail_${java.util.UUID.randomUUID().toString.take(8)}").toString
-    val physCols = m.columns.map(c => col(c.name).cast(c.dataType).as(c.physName)) ++
-      Seq(col(OpCol), col(SeqCol))
-    val keysPhys = m.columns.filter(_.isKey).map(c => col(c.physName))
     val parts = math.max(1, math.min(DeltaWritePartitions,
       (tailBytes / (128L * 1024 * 1024)).toInt))
-    GraftTable.withStaticPlan(spark,
-      tailBytes <= GraftTable.staticPlanMaxBytes) {
-      withMicrosTimestamps {
-        latest.select(physCols: _*).repartition(parts)
-          .sortWithinPartitions(keysPhys: _*)
-          .write.mode("overwrite").parquet(dir)
-      }
-    }
-    val maxSeq = tail.map(_.seq).max
-    val files = deltaFileMetas(m, GraftTable.listParquet(dir), maxSeq)
+    val v = m.version + 1
     val flushed = m.deltaFiles.filter(f => f.bucket.isDefined || f.rangeKey.isDefined)
-    try TableMeta.write(m.copy(version = v, timestampMs = now(),
-      operation = "merge_tail", deltaFiles = flushed ++ files))
-    catch {
-      case e: Throwable =>
-        sweepTree(Paths.get(dir))
-        throw e
+    publish { a =>
+      val files = writeFileset(a, m, latestDeltas(m, tail), v, s"${FoldToken}_tail",
+        Layout.Unrouted(parts), tail.map(_.seq).max, Some(BigInt(tailBytes)))
+      m.copy(version = v, timestampMs = now(), operation = "merge_tail",
+        deltaFiles = flushed ++ files)
     }
     true
   }
@@ -1589,15 +1541,13 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       if (inTablet.forall(_.rows >= 0L))
         Some(inTablet.map(_.rows).sum + touch.map(f => math.max(0L, f.rows)).sum)
       else None
-    val newBase = writeBaseWith(m, live, v,
-      clusterColsOf(m).map(zc =>
-        buildClusterSpecFrom(m, zc, perTabletFiles, live, tabletRows)),
-      // tablet bytes from the manifest: the fold reads exactly these files
-      sizeHintBytes = Some((inTablet ++ touch)
-        .map(f => GraftTable.fileSize(f.path)).sum))
-    val restDir = Paths.get(location, "data",
-      s"c${v}_deltamerge_${java.util.UUID.randomUUID().toString.take(8)}").toString
-    try {
+    // tablet bytes from the manifest: the fold reads exactly these files
+    val tabletBytes = (inTablet ++ touch).map(f => GraftTable.fileSize(f.path)).sum
+    publish { a =>
+      val newBase = writeFileset(a, m, live, v, BaseToken,
+        Layout.Base(clusterColsOf(m).map(zc =>
+          buildClusterSpecFrom(m, zc, perTabletFiles, live, tabletRows))),
+        v, Some(BigInt(tabletBytes)))
       val restFiles =
         if (touch.isEmpty) Nil
         else {
@@ -1614,37 +1564,17 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
           val rest = rest0.join(foldedKeys, m.keyCols, "left")
             .filter(col(foldCol).isNull || col(foldCol) < col(SeqCol))
             .drop(foldCol)
-          val physCols = m.columns.map(c => col(c.name).cast(c.dataType).as(c.physName)) ++
-            Seq(col(OpCol), col(SeqCol))
-          rest.select(physCols: _*)
-            .repartition(DeltaWritePartitions)
-            .sortWithinPartitions(m.columns.filter(_.isKey).map(c => col(c.physName)): _*)
-            .write.mode("overwrite").parquet(restDir)
           // highest folded commit, like compactDeltas — CDC file selection
-          // stays conservative, the row-level seq filter restores exactness
-          val maxSeq = m.deltaFiles.map(_.seq).max
-          val (kept, empty) =
-            deltaFileMetas(m, listParquet(restDir), maxSeq).partition(_.rows != 0)
-          // an all-in-tablet delta set folds to nothing: drop the empty
-          // part files now so they never read as another commit's orphans
-          if (kept.isEmpty) sweepTree(Paths.get(restDir))
-          else empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
-          kept
+          // stays conservative, the row-level seq filter restores
+          // exactness; an all-in-tablet delta set folds to nothing, so
+          // its empty part files go now, never to read as orphans
+          writeFileset(a, m, rest, v, FoldToken,
+            Layout.Unrouted(DeltaWritePartitions), m.deltaFiles.map(_.seq).max,
+            None, dropEmpty = true)
         }
-      TableMeta.write(m.copy(version = v, timestampMs = now(),
-        operation = "compact_tablet",
+      m.copy(version = v, timestampMs = now(), operation = "compact_tablet",
         baseFiles = m.baseFiles.filterNot(inTablet.contains) ++ newBase,
-        deltaFiles = untouched ++ restFiles))
-    } catch {
-      case e: Throwable =>
-        newBase.headOption.foreach { f =>
-          var d = Paths.get(f.path).getParent
-          while (d != null && !d.getFileName.toString.startsWith(s"c${v}_base_"))
-            d = d.getParent
-          if (d != null) sweepTree(d)
-        }
-        sweepTree(Paths.get(restDir))
-        throw e
+        deltaFiles = untouched ++ restFiles)
     }
   }
 
@@ -1730,7 +1660,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   def uncluster(): Unit = rewriteBase(meta, "uncluster", None, None, None, None)
 
   /** Equi-depth cut points per cluster column (bounded driver work at any
-    * table size) folded into the Morton-code spec writeBase applies. Row
+    * table size) folded into the Morton-code spec the base writer applies. Row
     * count for the sampling fraction comes from MANIFEST footer counts
     * (no extra count job); unknown counts (-1 in old manifests) fall back
     * to one count job. */
@@ -1810,33 +1740,21 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       newClusterFiles: Option[Int],
       newClusterMode: Option[String]): Unit = {
     val v = m.version + 1
-    val snapshot = scanMeta(m)
-    // the write must see the clusterBy being COMMITTED (the first
-    // cluster() rewrite happens before the ids land in the manifest) so
-    // boundsColumns prioritizes the cluster columns inside the zone-map cap
-    val files = writeBaseWith(m.copy(clusterBy = newClusterBy), snapshot, v, spec,
-      // snapshot bytes from the manifest — never run the optimizer over
-      // the MOR fold just to size the write
-      sizeHintBytes = Some((m.baseFiles ++ m.deltaFiles)
-        .map(f => GraftTable.fileSize(f.path)).sum))
     // the rewritten base has no dropped-range rows → the masks retire
     // (uncovered ranges stay uncovered for writes)
-    try TableMeta.write(m.copy(version = v, timestampMs = now(), operation = op,
-      baseFiles = files, deltaFiles = Nil, droppedRanges = None,
-      clusterBy = newClusterBy, clusterFiles = newClusterFiles,
-      clusterMode = newClusterMode))
-    catch {
-      case e: Throwable =>
-        // lost the metadata race — sweep the rewritten base attempt (walk up
-        // from any written file to the per-attempt c<v>_base_* directory;
-        // same no-orphans guarantee as commitDelta)
-        files.headOption.foreach { f =>
-          var d = Paths.get(f.path).getParent
-          while (d != null && !d.getFileName.toString.startsWith(s"c${v}_base_"))
-            d = d.getParent
-          if (d != null) sweepTree(d)
-        }
-        throw e
+    publish { a =>
+      // the write must see the clusterBy being COMMITTED (the first
+      // cluster() rewrite happens before the ids land in the manifest) so
+      // boundsColumns prioritizes the cluster columns inside the zone-map cap
+      val files = writeFileset(a, m.copy(clusterBy = newClusterBy), scanMeta(m), v,
+        BaseToken, Layout.Base(spec), v,
+        // snapshot bytes from the manifest — never run the optimizer over
+        // the MOR fold just to size the write
+        Some(BigInt((m.baseFiles ++ m.deltaFiles).map(f => GraftTable.fileSize(f.path)).sum)))
+      m.copy(version = v, timestampMs = now(), operation = op,
+        baseFiles = files, deltaFiles = Nil, droppedRanges = None,
+        clusterBy = newClusterBy, clusterFiles = newClusterFiles,
+        clusterMode = newClusterMode)
     }
   }
 
@@ -2308,13 +2226,6 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     requireCovered(m, rows)
     requireVarcharFits(m, rows)
     val v = m.version + 1
-    // Unique dir per commit ATTEMPT: two writers racing to version v must
-    // not share a data path, or the loser's file write would clobber the
-    // winner's committed files before the metadata guard aborts it. The
-    // loser's orphan dir is removed below; metadata records explicit file
-    // paths, so the suffix is otherwise invisible.
-    val dir = Paths.get(location, "data",
-      s"c${v}_delta_${java.util.UUID.randomUUID().toString.take(8)}").toString
     val out0 = rows.withColumn(SeqCol, lit(v))
     // Intra-batch duplicate-key guard, evaluated INSIDE the write job (a
     // window count piggybacked on the commit's own shuffle — no extra Spark
@@ -2365,42 +2276,134 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
             .cast(LongType))
           .otherwise(col(SeqCol)))
     } else out0
-    val physCols = m.columns.map(c => col(c.name).cast(c.dataType).as(c.physName)) ++
-      Seq(col(OpCol), col(SeqCol))
     // Deltas stay small between compactions; a few sorted files keep the
-    // merge-on-read broadcast cheap. Sort by PK for row-group stats.
-    // graft.delta.writePartitions tunes file count (streaming sinks commit
-    // many small batches → 1 file each).
+    // merge-on-read broadcast cheap. graft.delta.writePartitions tunes file
+    // count (streaming sinks commit many small batches → 1 file each).
+    // Single-file commits coalesce instead of adding a whole extra shuffle
+    // — the upstream dedup shuffle already bounded the partition count,
+    // and a micro-batch is small by construction. A failed write job (e.g.
+    // an in-job PK guard fired) or a lost metadata race sweeps the attempt.
     val deltaParts = spark.conf.getOption("graft.delta.writePartitions")
       .map(_.toInt).getOrElse(DeltaWritePartitions)
-    val projected = out.select(physCols: _*)
-    // single-file commits (streaming sinks) coalesce instead of adding a
-    // whole extra shuffle — the upstream dedup shuffle already bounded the
-    // partition count, and a micro-batch is small by construction
-    val parted =
-      if (deltaParts == 1) projected.coalesce(1) else projected.repartition(deltaParts)
-    try {
-      val w0 = parted
-        .sortWithinPartitions(m.columns.filter(_.isKey).map(c => col(c.physName)): _*)
-        .write
-      withMicrosTimestamps {
-        GraftTable.effectiveCodec(m).fold(w0)(cc => w0.option("compression", cc))
-          .mode("overwrite").parquet(dir)
-      }
-      val files = deltaFileMetas(m, listParquet(dir), v)
-      val mergedProps = propsUpdate.foldLeft(m.propsMap) {
-        case (acc, (k, Some(value))) => acc + (k -> value)
-        case (acc, (k, None)) => acc - k
-      }
-      TableMeta.write(m.copy(version = v, timestampMs = now(), operation = op,
+    val mergedProps = propsUpdate.foldLeft(m.propsMap) {
+      case (acc, (k, Some(value))) => acc + (k -> value)
+      case (acc, (k, None)) => acc - k
+    }
+    publish { a =>
+      val files = writeFileset(a, m, out, v, DeltaToken,
+        Layout.Unrouted(deltaParts, shuffle = deltaParts != 1), v, Some(estBytes))
+      m.copy(version = v, timestampMs = now(), operation = op,
         deltaFiles = m.deltaFiles ++ files,
-        props = if (mergedProps.isEmpty) None else Some(mergedProps)))
-    } catch {
+        props = if (mergedProps.isEmpty) None else Some(mergedProps))
+    }
+  }
+
+  // ---------------------------------------------------------- file writer
+
+  /** The attempt directories of one commit — swept together when any
+    * write, footer read or the manifest publish fails. */
+  private final class Attempt {
+    private val dirs = ArrayBuffer[String]()
+    def add(dir: String): String = { dirs += dir; dir }
+    def sweep(): Unit = dirs.foreach(d => sweepTree(Paths.get(d)))
+  }
+
+  /** Publishes the manifest `body` builds from the filesets it writes
+    * through [[writeFileset]]. The manifest write is the CREATE_NEW guard:
+    * a lost race, like a failed write job or footer read inside `body`,
+    * sweeps every attempt dir and rethrows — nothing committed, nothing
+    * orphaned (fsckRepair stays the backstop for a writer that died
+    * before reaching the sweep). */
+  private def publish(body: Attempt => TableMeta): Unit = {
+    val a = new Attempt
+    try TableMeta.write(body(a))
+    catch {
       case e: Throwable =>
-        // failed write job (e.g. an in-job PK guard fired) or a lost
-        // metadata race → remove the attempt's fileset; nothing committed
-        sweepTree(Paths.get(dir))
+        a.sweep()
         throw e
+    }
+  }
+
+  /**
+   * THE data-file writer: every base and delta fileset the table stores is
+   * laid out, written and statted here — the role of the reference's one
+   * CFile writer under both base rowsets and delta stores
+   * (cfile/cfile_writer.cc, tablet/deltafile.h), so a column's codec or
+   * encoding attribute reaches every file. `rows` are logical rows (plus
+   * `_graft_op`/`_graft_seq` for a delta layout). The writer projects
+   * them to physical names, adds the tablet route columns the layout
+   * needs, PK-sorts within each file and writes INT64-micros timestamps
+   * (Spark's INT96 default records no usable statistics, so timestamp
+   * keys would get no bounds) with the table codec into the attempt dir
+   * `c<v>_<token>_<nonce>` ([[GraftTable.attemptDir]]). It returns the
+   * files' manifest entries stamped `seq` ([[GraftTable.fileMetas]]).
+   * `planBytes` is the write's input size: at or under
+   * [[GraftTable.staticPlanMaxBytes]] the write plans statically, None
+   * keeps AQE. `dropEmpty` deletes zero-row part files (and the whole dir
+   * when nothing is left).
+   */
+  private def writeFileset(a: Attempt, m: TableMeta, rows: DataFrame, v: Long,
+      token: String, layout: Layout, seq: Long, planBytes: Option[BigInt],
+      dropEmpty: Boolean = false): Seq[DataFileMeta] = {
+    val dir = a.add(attemptDir(location, v, token))
+    // every layout PK-sorts within each output file — except the
+    // clustered rewrite, whose file order is (z, PK)
+    val (kind, sorted) = layout match {
+      case Layout.Base(cluster) => ("base", Some(cluster.isEmpty))
+      case _ => ("delta", None)
+    }
+    val base = kind == "base"
+    val out = rows.select(
+      m.columns.map(c => col(c.name).cast(c.dataType).as(c.physName)) ++
+        (if (base) Nil else Seq(col(OpCol), col(SeqCol))): _*)
+    val keys = m.columns.filter(_.isKey).map(c => col(c.physName))
+    val partCols = (if (m.hash.nonEmpty) Seq(BucketCol) else Nil) ++
+      (if (m.range.isDefined) Seq(RangeCol) else Nil)
+    lazy val routed = m.range.foldLeft(
+      if (m.hash.isEmpty) out
+      else out.withColumn(BucketCol, bucketExpr(m, n => col(m.column(n).physName)))) {
+      (df, r) => df.withColumn(RangeCol, rangeKeyExprM(m, r, n => col(m.column(n).physName)))
+    }
+    def unrouted(df: DataFrame, files: Int, shuffle: Boolean) =
+      (if (shuffle) df.repartition(files) else df.coalesce(files))
+        .sortWithinPartitions(keys: _*).write
+    def byTablet(df: DataFrame) =
+      df.repartition(partCols.map(col): _*)
+        .sortWithinPartitions(partCols.map(col) ++ keys: _*)
+        .write.partitionBy(partCols: _*)
+    val writes = layout match {
+      case Layout.Unrouted(files, shuffle) => Seq(unrouted(out, files, shuffle) -> dir)
+      case Layout.Routed => Seq(byTablet(routed) -> dir)
+      case Layout.RoutedUpserts => Seq(
+        byTablet(routed.filter(col(OpCol) =!= lit(OpDelete))) -> s"$dir/routed",
+        unrouted(out.filter(col(OpCol) === lit(OpDelete)), DeltaWritePartitions,
+          shuffle = true) -> s"$dir/tomb")
+      case Layout.Base(cluster) =>
+        Seq(baseWriter(m, routed, partCols, keys, cluster,
+          planBytes.getOrElse(BigInt(Long.MaxValue))) -> dir)
+    }
+    // per-column encoding attribute → parquet dictionary toggle; table
+    // codec attribute → file codec (common/common.proto:90-100 analog)
+    def withAttrs(w: DataFrameWriter[Row]) = {
+      val enc = m.columns.filter(_.encoding.isDefined).foldLeft(w) { (w, c) =>
+        w.option(s"parquet.enable.dictionary#${c.physName}",
+          (c.encoding.get == "dictionary").toString)
+      }
+      effectiveCodec(m).fold(enc)(cc => enc.option("compression", cc))
+    }
+    GraftTable.withStaticPlan(spark,
+      planBytes.exists(_ <= GraftTable.staticPlanMaxBytes)) {
+      withMicrosTimestamps {
+        writes.foreach { case (w, d) => withAttrs(w).mode("overwrite").parquet(d) }
+      }
+    }
+    val files = fileMetas(spark, m, listParquet(dir), kind, seq, Some(dir), sorted)
+    if (!dropEmpty) files
+    else {
+      val (kept, empty) = files.partition(_.rows != 0)
+      if (kept.isEmpty) sweepTree(Paths.get(dir))
+      else empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
+      kept
     }
   }
 
@@ -2411,114 +2414,21 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   private def withMicrosTimestamps[A](f: => A): A = {
     val k = "spark.sql.parquet.outputTimestampType"
     val prev = spark.conf.getOption(k)
-    spark.conf.set(k, "TIMESTAMP_MICROS")
+    spark.conf.set(k, FileTimestampType)
     try f finally prev match {
       case Some(v) => spark.conf.set(k, v)
       case None => spark.conf.unset(k)
     }
   }
 
-  /** Manifest entries for freshly written DELTA files: row count + lead-key
-    * bounds gathered in ONE footer open per file (was two — a row-count
-    * open then a bounds open), the opens fanned out by
-    * [[GraftTable.statFiles]]. A commit of F delta files previously paid 2F
-    * sequential driver-side footer reads. The recorded bounds are the
-    * reference's per-store delta stats (tablet/deltafile.h DeltaStats
-    * min/max row keys): scans carrying a first-PK predicate skip delta
-    * files whose key interval cannot intersect it; files without usable
-    * stats keep None and callers stay conservative. Partition coordinates
-    * parse from the path when the writer laid the files out under _b=/_r=
-    * dirs (`withCoords`). */
-  private def deltaFileMetas(m: TableMeta, paths: Seq[String], seq: Long,
-      withCoords: Boolean = false): Seq[DataFileMeta] = {
-    val keyCol = m.keyCols.headOption.map(m.column)
-      .map(c => (c.id, c.physName, c.dataType)).toSeq
-    val keyId = keyCol.headOption.map(_._1.toString)
-    GraftTable.statFiles(spark, paths, keyCol).map { case (p, st) =>
-      DataFileMeta(p, "delta", seq, st.rows, m.columns.map(_.id),
-        bucket = if (withCoords) GraftTable.partFromPath(p, BucketCol).map(_.toInt) else None,
-        rangeKey = if (withCoords) GraftTable.partFromPath(p, RangeCol) else None,
-        keyLo = keyId.flatMap(st.lo.get), keyHi = keyId.flatMap(st.hi.get))
-    }
-  }
-
-  /** Best-effort recursive delete of a commit attempt's fileset — the
-    * no-orphans half of the abort path (fsck would otherwise flag the
-    * loser's files; fsckRepair remains the backstop for a writer that
-    * died before reaching this sweep). */
-  private def sweepTree(dir: java.nio.file.Path): Unit =
-    try {
-      if (Files.exists(dir))
-        Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
-          .iterator().asScala.foreach(Files.deleteIfExists(_))
-    } catch { case _: Exception => }
-
-  /** Commits delta files ALREADY WRITTEN under `dir` as one snapshot
-    * version — the V2 row-level-operations path (SQL UPDATE/MERGE) streams
-    * its executor-side writers straight into the attempt directory, then
-    * calls this with the version it stamped into the rows' SeqCol. The
-    * CREATE_NEW metadata guard aborts the loser of a concurrent race; the
-    * caller sweeps the attempt directory on any failure. */
-  private[graft] def commitPrewrittenDeltas(expectedVersion: Long, dir: String,
-      op: String, onlyPaths: Seq[String] = Nil): Unit = {
-    val m = meta
-    require(m.version + 1 == expectedVersion,
-      s"concurrent commit on ${m.name}: expected to write version " +
-        s"$expectedVersion but the table is at ${m.version}")
-    // Trust the caller's task-reported file list when given (retry/
-    // speculation safety: a stray partial file in the dir is NOT committed);
-    // fall back to a directory listing for single-writer callers.
-    val paths = if (onlyPaths.nonEmpty) onlyPaths else listParquet(dir)
-    val files = deltaFileMetas(m, paths, expectedVersion)
-    if (files.isEmpty) return // nothing matched — no version churn
-    TableMeta.write(m.copy(version = expectedVersion, timestampMs = now(),
-      operation = op, deltaFiles = m.deltaFiles ++ files))
-  }
-
-  /** Writes `df` as the base fileset for commit `v`: hash-bucket (+ range)
-    * partition dirs, PK-sorted within each file — one writer per "tablet"
-    * (KuduContext.repartitionRows:464-509 analog). */
-  private[table] def writeBase(m: TableMeta, df: DataFrame, v: Long): Seq[DataFileMeta] =
-    writeBaseWith(m, df, v, None)
-
-  private[table] def writeBaseWith(m: TableMeta, df: DataFrame, v: Long,
-      clusterSpec: Option[GraftTable.ZCluster],
-      sizeHintBytes: Option[Long] = None): Seq[DataFileMeta] =
-    // small loads/rewrites (scratch tables, small-table compactions) write
-    // in one static-planned job; the exchanges here are all explicit
-    // (bucket/range repartition, z-range, salt), so AQE adds only
-    // per-stage jobs. Big loads keep AQE (runtime coalescing matters).
-    // Compaction callers pass manifest-derived bytes — running the
-    // optimizer over a MOR-fold plan just to estimate would cost more
-    // than it saves and estimate garbage anyway.
-    {
-      val estBytes = sizeHintBytes.map(BigInt(_))
-        .getOrElse(GraftTable.planBytes(df))
-      GraftTable.withStaticPlan(spark,
-        estBytes <= GraftTable.staticPlanMaxBytes) {
-        writeBaseWithImpl(m, df, v, clusterSpec, estBytes)
-      }
-    }
-
-  private def writeBaseWithImpl(m: TableMeta, df: DataFrame, v: Long,
-      clusterSpec: Option[GraftTable.ZCluster], estBytes: BigInt): Seq[DataFileMeta] = {
-    // unique per attempt — same clobber-avoidance as commitDelta (racing
-    // compactions must not share a data path)
-    val dir = Paths.get(location, "data",
-      s"c${v}_base_${java.util.UUID.randomUUID().toString.take(8)}").toString
-    val physCols = m.columns.map(c => col(c.name).cast(c.dataType).as(c.physName))
-    var out = df.select(physCols: _*)
-    val partCols = ArrayBuffer[String]()
-    if (m.hash.nonEmpty) {
-      out = out.withColumn(BucketCol, bucketExpr(m, n => col(m.column(n).physName)))
-      partCols += BucketCol
-    }
-    m.range.foreach { r =>
-      out = out.withColumn(RangeCol,
-        rangeKeyExprM(m, r, n => col(m.column(n).physName)))
-      partCols += RangeCol
-    }
-    val keysPhys = m.columns.filter(_.isKey).map(c => col(c.physName))
+  /** The base layouts over `out` (physical rows with their route columns):
+    * hash-bucket (+ range) partition dirs, PK-sorted within each file — one
+    * writer per "tablet" (KuduContext.repartitionRows:464-509 analog) —
+    * or a z-clustered, salted or range-sorted rewrite; key columns (and
+    * columns with the bloom attribute) carry parquet bloom filters. */
+  private def baseWriter(m: TableMeta, out: DataFrame, partCols: Seq[String],
+      keysPhys: Seq[Column], clusterSpec: Option[GraftTable.ZCluster],
+      estBytes: BigInt): DataFrameWriter[Row] = {
     // graft.base.filesPerTablet (default 1): write parallelism within one
     // tablet. One writer per tablet is the reference posture and keeps each
     // tablet a single PK-sorted file (best range-scan pruning) — but a full
@@ -2547,11 +2457,11 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         val zCol = zc.expr(n => col(m.column(n).physName))
         val nOut = if (zc.files > 0) zc.files else nShuffle
         val ranged = out.withColumn(ZOrderCol, zCol)
-          .repartitionByRange(nOut, partCols.toSeq.map(col) :+ col(ZOrderCol): _*)
+          .repartitionByRange(nOut, partCols.map(col) :+ col(ZOrderCol): _*)
           .sortWithinPartitions(
-            partCols.toSeq.map(col) ++ Seq(col(ZOrderCol)) ++ keysPhys: _*)
+            partCols.map(col) ++ Seq(col(ZOrderCol)) ++ keysPhys: _*)
           .drop(ZOrderCol)
-        if (partCols.nonEmpty) ranged.write.partitionBy(partCols.toSeq: _*)
+        if (partCols.nonEmpty) ranged.write.partitionBy(partCols: _*)
         else ranged.write
       case None if partCols.nonEmpty =>
         // width deliberately unsized: one task per tablet coordinate is
@@ -2561,11 +2471,11 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         val repartitioned =
           if (filesPerTablet > 1)
             out.repartition(nShuffle,
-              partCols.toSeq.map(col) :+ pmod(hash(keysPhys: _*), lit(filesPerTablet)): _*)
-          else out.repartition(partCols.toSeq.map(col): _*)
+              partCols.map(col) :+ pmod(hash(keysPhys: _*), lit(filesPerTablet)): _*)
+          else out.repartition(partCols.map(col): _*)
         repartitioned
-          .sortWithinPartitions(partCols.toSeq.map(col) ++ keysPhys: _*)
-          .write.partitionBy(partCols.toSeq: _*)
+          .sortWithinPartitions(partCols.map(col) ++ keysPhys: _*)
+          .write.partitionBy(partCols: _*)
       case None if filesPerTablet > 1 =>
         out.repartition(nShuffle, pmod(hash(keysPhys: _*), lit(filesPerTablet)))
           .sortWithinPartitions(keysPhys: _*).write
@@ -2589,43 +2499,34 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     // adaptively skips the bloom when a column ends up fully
     // dictionary-encoded — the dictionary already gives exact row-group
     // filtering there, so only high-entropy key columns pay for a bloom.
-    val withBlooms = m.columns
-      .filter(c => c.isKey || c.bloom.contains(true)).foldLeft(
+    m.columns.filter(c => c.isKey || c.bloom.contains(true)).foldLeft(
       // adaptive sizing: without it every bloom is the 1MB max regardless of
       // NDV, which dwarfs small files (and the delta:base maintenance ratio)
       writer0.option("parquet.bloom.filter.adaptive.enabled", "true")) { (w, c) =>
       w.option(s"parquet.bloom.filter.enabled#${c.physName}", "true")
     }
-    // per-column encoding attribute → parquet dictionary toggle; table
-    // codec attribute → file codec (common/common.proto:90-100 analog)
-    val withEnc = m.columns.filter(_.encoding.isDefined).foldLeft(withBlooms) { (w, c) =>
-      w.option(s"parquet.enable.dictionary#${c.physName}",
-        (c.encoding.get == "dictionary").toString)
-    }
-    val writer = effectiveCodec(m).fold(withEnc)(cc => withEnc.option("compression", cc))
-    withMicrosTimestamps { writer.mode("overwrite").parquet(dir) }
-    // Record footer statistics on EVERY base file in one footer open per
-    // file: first-key bounds (coordinate-less layouts need them for
-    // merge-on-read interval routing; partitioned layouts get manifest-level
-    // first-PK file pruning inside their hash buckets plus metadata-served
-    // MIN/MAX on the lead key) AND per-column zone maps + null counts
-    // (PartitionPruner.zoneOk file skipping on ANY recorded column,
-    // GraftScanBuilder.servableAgg any-column MIN/MAX).
-    val zcols = GraftTable.boundsColumns(spark, m)
-    val firstKeyId = m.keyCols.headOption.map(k => m.column(k).id)
-    GraftTable.statFiles(spark, listParquet(dir), zcols).map { case (p, st) =>
-      DataFileMeta(p, "base", v, st.rows, m.columns.map(_.id),
-        bucket = partFromPath(p, BucketCol).map(_.toInt),
-        rangeKey = partFromPath(p, RangeCol),
-        keyLo = firstKeyId.flatMap(id => st.lo.get(id.toString)),
-        keyHi = firstKeyId.flatMap(id => st.hi.get(id.toString)),
-        colLo = Some(st.lo).filter(_.nonEmpty),
-        colHi = Some(st.hi).filter(_.nonEmpty),
-        colNulls = Some(st.nulls).filter(_.nonEmpty),
-        // every writer branch above PK-sorts within each output file —
-        // except the clustered rewrite, whose file order is (z, PK)
-        sorted = Some(clusterSpec.isEmpty))
-    }
+  }
+
+  /** Commits delta files ALREADY WRITTEN under `dir` as one snapshot
+    * version — the V2 row-level-operations path (SQL UPDATE/MERGE) streams
+    * its executor-side writers straight into the attempt directory, then
+    * calls this with the version it stamped into the rows' SeqCol. The
+    * CREATE_NEW metadata guard aborts the loser of a concurrent race; the
+    * caller sweeps the attempt directory on any failure. */
+  private[graft] def commitPrewrittenDeltas(expectedVersion: Long, dir: String,
+      op: String, onlyPaths: Seq[String] = Nil): Unit = {
+    val m = meta
+    require(m.version + 1 == expectedVersion,
+      s"concurrent commit on ${m.name}: expected to write version " +
+        s"$expectedVersion but the table is at ${m.version}")
+    // Trust the caller's task-reported file list when given (retry/
+    // speculation safety: a stray partial file in the dir is NOT committed);
+    // fall back to a directory listing for single-writer callers.
+    val paths = if (onlyPaths.nonEmpty) onlyPaths else listParquet(dir)
+    val files = fileMetas(spark, m, paths, "delta", expectedVersion)
+    if (files.isEmpty) return // nothing matched — no version churn
+    TableMeta.write(m.copy(version = expectedVersion, timestampMs = now(),
+      operation = op, deltaFiles = m.deltaFiles ++ files))
   }
 }
 
@@ -2654,6 +2555,98 @@ object GraftTable {
   /** Transient Morton-code column of a clustered rewrite (never written). */
   val ZOrderCol = "_graft_z"
 
+  /** Fileset tokens — the middle of an attempt dir `c<v>_<token>_<nonce>`
+    * ([[attemptDir]]): base filesets, commit deltas, and the minor folds
+    * (compactDeltas and compactTablet's rest; mergeTailDeltas writes
+    * `<FoldToken>_tail`), which carry folded rows under their original
+    * seqs, never a commit's own changes. */
+  val BaseToken = "base"
+  val DeltaToken = "delta"
+  val FoldToken = "deltamerge"
+
+  /** Parquet timestamp type of every data file: INT64 micros, whose footer
+    * statistics order (Spark's INT96 default records none usable). */
+  val FileTimestampType = "TIMESTAMP_MICROS"
+
+  /** A commit attempt's data dir `<location>/data/c<v>_<token>_<nonce>`:
+    * the nonce is per ATTEMPT, so two writers racing to version v never
+    * share a path (the loser's write would clobber the winner's committed
+    * files before the manifest guard aborts it); manifests record explicit
+    * file paths, so the suffix is otherwise invisible. */
+  private[graft] def attemptDir(location: String, v: Long, token: String): String =
+    Paths.get(location, "data",
+      s"c${v}_${token}_${java.util.UUID.randomUUID().toString.take(8)}").toString
+
+  /** The delta files commit `v` itself wrote: stamped `seq == v` and not a
+    * fold rewrite (a minor fold re-emits nothing) — what a change stream
+    * emits for version `v` of manifest `m`. */
+  private[graft] def committedDeltas(m: TableMeta, v: Long): Seq[DataFileMeta] =
+    m.deltaFiles.filter(f => f.seq == v && !f.path.contains(s"_${FoldToken}_"))
+
+  /** The physical schema of `m`'s delta files — what the writer's
+    * projection produces: every column under its physical name, then op
+    * and seq. Executor-side writers (SQL UPDATE/MERGE) write it directly. */
+  private[graft] def deltaFileSchema(m: TableMeta): StructType =
+    StructType(m.columns.map(c => StructField(c.physName, c.dataType, nullable = true)) ++
+      Seq(StructField(OpCol, StringType, nullable = false),
+        StructField(SeqCol, LongType, nullable = false)))
+
+  /** How [[GraftTable.writeFileset]] lays a fileset out. */
+  private[table] sealed trait Layout
+  private[table] object Layout {
+    /** `files` PK-sorted files; `shuffle = false` coalesces instead of
+      * adding an exchange. */
+    case class Unrouted(files: Int, shuffle: Boolean = true) extends Layout
+    /** PK-sorted files per tablet coordinate, under `_b=`/`_r=` dirs. */
+    case object Routed extends Layout
+    /** Upserts routed by tablet (under `routed/`), tombstones unrouted
+      * (under `tomb/`): for a route that reads a non-key column, which a
+      * tombstone carries as null. */
+    case object RoutedUpserts extends Layout
+    /** A base fileset: routed by tablet, z-clustered by `cluster`, or
+      * range-sorted when the table has no partitioning. */
+    case class Base(cluster: Option[ZCluster]) extends Layout
+  }
+
+  /** The one manifest-entry builder for data files, from ONE footer open
+    * per file ([[statFiles]]): row count plus the lead key's
+    * [keyLo, keyHi]. A base file also records zone maps and null counts
+    * over [[boundsColumns]]; a delta file records only its key interval
+    * (the reference's per-store delta stats, tablet/deltafile.h — scans
+    * with a first-PK predicate skip delta files that cannot meet it;
+    * files without usable stats keep None and callers stay conservative).
+    * Tablet coordinates parse from `_b=`/`_r=` dirs below `routedUnder`
+    * (the writer's attempt dir); other files record none. */
+  private[graft] def fileMetas(spark: SparkSession, m: TableMeta,
+      paths: Seq[String], kind: String, seq: Long,
+      routedUnder: Option[String] = None,
+      sorted: Option[Boolean] = None): Seq[DataFileMeta] = {
+    val base = kind == "base"
+    val lead = m.keyCols.headOption.map(m.column)
+    val leadId = lead.map(_.id.toString)
+    val cols =
+      if (base) boundsColumns(spark, m)
+      else lead.map(c => (c.id, c.physName, c.dataType)).toSeq
+    def zone[A](byCol: Map[String, A]) = Some(byCol).filter(_.nonEmpty && base)
+    statFiles(spark, paths, cols).map { case (p, st) =>
+      def coord(c: String) = routedUnder.flatMap(d => partFromPath(p.stripPrefix(d), c))
+      DataFileMeta(p, kind, seq, st.rows, m.columns.map(_.id),
+        bucket = coord(BucketCol).map(_.toInt), rangeKey = coord(RangeCol),
+        keyLo = leadId.flatMap(st.lo.get), keyHi = leadId.flatMap(st.hi.get),
+        colLo = zone(st.lo), colHi = zone(st.hi), colNulls = zone(st.nulls),
+        sorted = sorted)
+    }
+  }
+
+  /** Best-effort recursive delete of a commit attempt's fileset — the
+    * no-orphans half of every abort path. */
+  private[graft] def sweepTree(dir: java.nio.file.Path): Unit =
+    try {
+      if (Files.exists(dir))
+        Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+          .iterator().asScala.foreach(Files.deleteIfExists(_))
+    } catch { case _: Exception => }
+
   /** Tombstone rows for `keys` (a frame holding `m`'s key columns): the
     * key columns kept, every other column a typed null. */
   private[graft] def tombstoneRows(m: TableMeta, keys: DataFrame): DataFrame =
@@ -2663,7 +2656,7 @@ object GraftTable {
     }: _*)
 
   /** A clustered-rewrite request: `expr` builds the Morton code over a
-    * name resolver (writeBase resolves to PHYSICAL columns), `files` is the
+    * name resolver (the base writer resolves to PHYSICAL columns), `files` is the
     * output file count (0 = spark.sql.shuffle.partitions). */
   private[table] case class ZCluster(
       expr: (String => org.apache.spark.sql.Column) => org.apache.spark.sql.Column,
@@ -2794,7 +2787,7 @@ object GraftTable {
 
   /** Runs `body` with adaptive execution OFF when `tiny` (see
     * [[staticPlanMaxBytes]]); set-and-restore on the session conf, the
-    * same scoping as `withMicrosTimestamps`. Queries PLANNED inside `body`
+    * same scoping as the writer's timestamp-type flip. Queries PLANNED inside `body`
     * get one job per action instead of one per query stage. */
   private[graft] def withStaticPlan[A](spark: org.apache.spark.sql.SparkSession,
       tiny: Boolean)(body: => A): A = {
@@ -3173,11 +3166,6 @@ object GraftTable {
 
   private[graft] def boundsColumns(spark: org.apache.spark.sql.SparkSession,
       columns: Seq[graft.catalog.ColumnMeta],
-      keyCols: Seq[String]): Seq[(Int, String, org.apache.spark.sql.types.DataType)] =
-    boundsColumns(spark, columns, keyCols, Nil)
-
-  private[graft] def boundsColumns(spark: org.apache.spark.sql.SparkSession,
-      columns: Seq[graft.catalog.ColumnMeta],
       keyCols: Seq[String],
       clusterIds: Seq[Int]): Seq[(Int, String, org.apache.spark.sql.types.DataType)] = {
     val cap = spark.conf.getOption("graft.bounds.maxColumns").map(_.toInt).getOrElse(32)
@@ -3428,7 +3416,7 @@ object GraftTable {
     val m0 = TableMeta(name, location, 1L, now(), "create",
       columns, columns.length, hash, range, Nil, Nil, Nil)
     val t = new GraftTable(spark, location)
-    val withData = data match {
+    data match {
       case Some(df0) =>
         val df = if (nonUniqueKey) withInitialAutoIds(columns, df0) else df0
         val conformed = df.select(columns.map(c =>
@@ -3436,10 +3424,12 @@ object GraftTable {
         // bounds-mode tables: the initial load must be fully covered, or
         // rows would silently land in an __uncovered coordinate
         if (range.exists(_.isBounds)) t.requireCovered(m0, conformed)
-        m0.copy(baseFiles = t.writeBase(m0, conformed, 1L))
-      case None => m0
+        t.publish { a =>
+          m0.copy(baseFiles = t.writeFileset(a, m0, conformed, 1L, BaseToken,
+            Layout.Base(None), 1L, Some(planBytes(conformed))))
+        }
+      case None => TableMeta.write(m0)
     }
-    TableMeta.write(withData)
     // default-on background self-maintenance (graft.maintain.auto) — the
     // reference's MaintenanceManager starts unconditionally with the server
     MaintenanceScheduler.autoSchedule(spark, location)
@@ -3466,31 +3456,19 @@ object GraftTable {
       // Hidden ids must exist physically → materialize the base once.
       return create(spark, location, name, rawDf.schema, keys, hash, range,
         data = Some(rawDf), nonUniqueKey = true)
-    val schema = rawDf.schema
-    val columns = buildColumns(schema, keys, nonUniqueKey = false)
+    val columns = buildColumns(rawDf.schema, keys, nonUniqueKey = false)
     val raw = Paths.get(rawParquetPath)
+    val m0 = TableMeta(name, location, 1L, now(), "register",
+      columns, columns.length, hash, range, Nil, Nil, Nil)
     // Zero-copy files carry no partition coordinates, so record the first
     // key column's footer min/max instead (the reference's rowset key
     // bounds, tablet/diskrowset.h) — merge-on-read can then interval-route
     // deltas to these files at any delta size instead of forcing a compact.
     // The same footer open also records every column's zone map + null
     // count (file skipping / metadata MIN-MAX, like written bases).
-    val zcols = GraftTable.boundsColumns(spark, columns, keys)
-    val firstKeyId = columns.find(_.name == keys.head).map(_.id)
-    val files =
-      GraftTable.statFiles(spark,
-        if (Files.isDirectory(raw)) listParquet(rawParquetPath) else Seq(rawParquetPath),
-        zcols).map { case (p, st) =>
-          DataFileMeta(p, "base", 1L, st.rows,
-            columns.map(_.id),
-            keyLo = firstKeyId.flatMap(id => st.lo.get(id.toString)),
-            keyHi = firstKeyId.flatMap(id => st.hi.get(id.toString)),
-            colLo = Some(st.lo).filter(_.nonEmpty),
-            colHi = Some(st.hi).filter(_.nonEmpty),
-            colNulls = Some(st.nulls).filter(_.nonEmpty))
-        }
-    val m = TableMeta(name, location, 1L, now(), "register",
-      columns, columns.length, hash, range, Nil, files, Nil)
+    val m = m0.copy(baseFiles = fileMetas(spark, m0,
+      if (Files.isDirectory(raw)) listParquet(rawParquetPath) else Seq(rawParquetPath),
+      "base", 1L))
     TableMeta.write(m)
     MaintenanceScheduler.autoSchedule(spark, location)
     new GraftTable(spark, location)

@@ -734,7 +734,10 @@ object GraftTools {
           catch { case _: java.io.IOException => Seq(p) } // vanished: not empty
         if (children.forall(c => Files.isRegularFile(c) && sidecar(c))) {
           children.foreach(Files.deleteIfExists(_))
-          Files.deleteIfExists(p)
+          // a live writer (a maintenance tick's job) may add an entry
+          // between the listing and the delete: its dir is not junk
+          try Files.deleteIfExists(p)
+          catch { case _: java.nio.file.DirectoryNotEmptyException => }
         }
       }
     }

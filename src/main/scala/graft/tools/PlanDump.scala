@@ -57,7 +57,7 @@ object PlanDump {
         dump(n, t.latestDeltas(m, m.deltaFiles))
       case n @ ("changes_since" | "touched_keys") =>
         import org.apache.spark.sql.functions._
-        // UNPARTITIONED layout: writeBase PK-sorts, so base files are
+        // UNPARTITIONED layout: the base writer PK-sorts, so base files are
         // disjoint key slabs and the ghost-dedup interval prune is visible
         // in the plan (a hash layout scatters keys across every file and
         // the conservative interval keeps them all)

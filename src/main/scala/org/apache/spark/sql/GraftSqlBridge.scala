@@ -234,7 +234,8 @@ object GraftSqlBridge {
     * over rows of `schema` — the conf plumbing ParquetFileFormat
     * .prepareWrite performs before handing writers to tasks (the session's
     * newHadoopConf already carries the SQL conf entries ParquetWriteSupport
-    * reads: legacy format, timestamp type, field ids). */
+    * reads: legacy format, field ids), with the engine's file timestamp
+    * type pinned per writer. */
   def parquetWriterConf(session: SparkSession, schema: types.StructType,
       codec: Option[String]): org.apache.spark.util.SerializableConfiguration = {
     import execution.datasources.parquet.{ParquetOptions, ParquetWriteSupport}
@@ -250,8 +251,10 @@ object GraftSqlBridge {
     // defaults) — same list ParquetFileFormat.prepareWrite pins
     hconf.set(SQLConf.PARQUET_WRITE_LEGACY_FORMAT.key,
       sqlConf.writeLegacyParquetFormat.toString)
+    // INT64 micros like every engine-written file (the session default,
+    // INT96, records no usable footer statistics — no key bounds)
     hconf.set(SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key,
-      sqlConf.parquetOutputTimestampType.toString)
+      graft.table.GraftTable.FileTimestampType)
     hconf.set(SQLConf.PARQUET_FIELD_ID_WRITE_ENABLED.key,
       sqlConf.parquetFieldIdWriteEnabled.toString)
     hconf.set(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,

@@ -133,6 +133,23 @@ class DeltaStatsSpec extends AnyFunSuite {
     assert(tt.meta.deltaFiles.forall(f => f.keyLo.isDefined && f.keyHi.isDefined),
       "timestamp-keyed delta files must carry bounds (INT64-micros write)")
     assert(tt.scan().filter(col("t") === ts(5)).head().getLong(1) == 99L)
+    // the SQL UPDATE executor writer and a tablet fold's rest fileset
+    // write micros too, whatever the session's timestamp type
+    val b5 = tt.deltaTabletStats().head().getInt(0)
+    spark.conf.set("spark.sql.catalog.gdts", classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gdts.warehouse", wh)
+    spark.sql("UPDATE gdts.dts SET n = 66 WHERE t = timestamp'2024-03-07 10:00:00'")
+    assert(tt.scan().filter(col("t") === ts(7)).head().getLong(1) == 66L)
+    assert(tt.meta.deltaFiles.forall(f => f.keyLo.isDefined && f.keyHi.isDefined),
+      "SQL UPDATE delta files must carry bounds")
+    val before = tt.meta.deltaFiles.toSet
+    tt.compactTablet(bucket = Some(1 - b5))
+    val rest = tt.meta.deltaFiles.filterNot(before.contains)
+    assert(rest.nonEmpty, "the fold must leave ts(5)'s bucket in a rest fileset")
+    assert(tt.meta.deltaFiles.forall(f => f.keyLo.isDefined && f.keyHi.isDefined),
+      "compactTablet rest files must carry bounds")
+    assert(tt.scan().filter(col("t") === ts(5)).head().getLong(1) == 99L)
+    assert(tt.scan().filter(col("t") === ts(7)).head().getLong(1) == 66L)
 
     val sdf = (1 to 20).map(i => (f"id$i%03d", i.toLong)).toDF("s", "n")
     val st = GraftTable.create(spark, s"$wh/dss", "dss", sdf.schema, Seq("s"),

@@ -26,6 +26,14 @@ class FuzzSpec extends AnyFunSuite {
 
   private val Keyspace = 8
 
+  /** Footer audit of a random end state: every writer's files (commits,
+    * compactions, tablet and minor folds, tail merges, clustering, txns)
+    * match the physical schema the manifest records. */
+  private def assertFooters(t: GraftTable, seed: Long): Unit = {
+    val audit = t.verifyFileSchemas()
+    assert(audit.isEmpty, s"footer audit seed=$seed: $audit")
+  }
+
   private def runCase(seed: Long, nOps: Int,
       hash: Seq[HashComponent] = Seq(HashComponent(Seq("k"), 2))): Unit = {
     val rnd = new Random(seed)
@@ -97,6 +105,7 @@ class FuzzSpec extends AnyFunSuite {
       df.collect().map(r => r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1)))).toMap
 
     assert(stateOf(t.scan()) == model.toMap, s"final state mismatch seed=$seed")
+    assertFooters(t, seed)
     // the DSv2 catalog's merge-on-read overlay must agree with the DSv1
     // scan on the same random end state (per-bucket delta routing)
     val whName = java.nio.file.Paths.get(loc).getFileName.toString
@@ -348,6 +357,7 @@ class FuzzSpec extends AnyFunSuite {
         (r.getTimestamp(1).toLocalDateTime.getYear, r.getInt(2))).toMap
 
     assert(stateOf(t.scan()) == model.toMap, s"final state mismatch seed=$seed")
+    assertFooters(t, seed)
     snaps.foreach { case (ver, m) =>
       assert(stateOf(t.scan(Some(ver))) == m, s"snapshot v$ver mismatch seed=$seed")
     }
@@ -463,6 +473,7 @@ class FuzzSpec extends AnyFunSuite {
 
     checkState(t.scan(), cols.map(c => (c.id, c.name)).toList,
       rows.map { case (kk, m) => kk -> m.toMap }.toMap, "final")
+    assertFooters(t, seed)
     snaps.foreach { case (ver, colsAt, exp) =>
       checkState(t.scan(Some(ver)), colsAt, exp, s"snapshot v$ver")
     }

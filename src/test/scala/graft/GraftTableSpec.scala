@@ -354,9 +354,38 @@ class GraftTableSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(cols.forall(_.getCodec.toString.toLowerCase == "zstd"),
         cols.map(_.getCodec).mkString(","))
     } finally reader.close()
-    // deltas honor the resolved codec too
+    // deltas honor the resolved codec too: the commit's own files and the
+    // output of every fold (tail merge, minor compaction, a tablet fold's
+    // rest fileset)
+    def codecs(files: Seq[graft.catalog.DataFileMeta]): Set[String] =
+      files.flatMap { f =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.path), conf))
+        try r.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala)
+          .map(_.getCodec.toString.toLowerCase).toSet
+        finally r.close()
+      }.toSet
     t.upsert(kv(1 -> "changed"))
     assert(asMap(t)(1) == "changed")
+    assert(codecs(t.meta.deltaFiles) == Set("zstd"), "commit delta")
+    t.upsert(kv(2 -> "two"))
+    assert(t.mergeTailDeltas())
+    assert(codecs(t.meta.deltaFiles) == Set("zstd"), "mergeTailDeltas")
+    t.upsert(kv(3 -> "three"))
+    t.compactDeltas()
+    assert(t.meta.deltaFiles.forall(_.bucket.isDefined))
+    assert(codecs(t.meta.deltaFiles) == Set("zstd"), "compactDeltas")
+    // one unrouted commit over both buckets: folding bucket 0 leaves the
+    // bucket-1 rows in a rest fileset
+    t.upsert(kv((4 to 20).map(i => i -> s"w$i"): _*))
+    val before = t.meta.deltaFiles.toSet
+    t.compactTablet(bucket = Some(0))
+    val rest = t.meta.deltaFiles.filterNot(before.contains)
+    assert(rest.nonEmpty, "compactTablet must leave a rest fileset")
+    assert(codecs(rest) == Set("zstd"), "compactTablet rest")
+    assert(asMap(t) == (1 to 50).map(i => i -> s"value$i").toMap ++
+      Map(1 -> "changed", 2 -> "two", 3 -> "three") ++ (4 to 20).map(i => i -> s"w$i"))
     // clearing the attributes falls back to the table default
     t.setColumnCompression("v", None)
     t.setColumnCompression("k", None)
