@@ -976,7 +976,7 @@ object Queries {
             "a refreshed index must serve the V2 path on a dirty base")
         withShufflePartitions(s, 4) { materialized(s, v2) }
           .orderBy("c_custkey")
-      } finally graft.plans.IndexRewrite.disable(s, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(s, idx.location)
     }),
 
     "q72_index_range" -> ((s, dir) => {
@@ -1026,7 +1026,7 @@ object Queries {
             "a refreshed index must serve the range on the V2 path of a dirty base")
         withShufflePartitions(s, 4) { materialized(s, v2) }
           .orderBy("c_custkey")
-      } finally graft.plans.IndexRewrite.disable(s, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(s, idx.location)
     }),
 
     "q73_composite_index" -> ((s, dir) => {
@@ -1085,7 +1085,7 @@ object Queries {
             "a refreshed composite index must serve the V2 path")
         withShufflePartitions(s, 4) { materialized(s, v2) }
           .orderBy("c_custkey")
-      } finally graft.plans.IndexRewrite.disable(s, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(s, idx.location)
     }),
 
     "q74_index_topn" -> ((s, dir) => {
@@ -1130,7 +1130,7 @@ object Queries {
             "a refreshed index must serve the top-k on the V2 path of a dirty base")
         withShufflePartitions(s, 4) { materialized(s, v2) }
           .orderBy(col("c_name").desc)
-      } finally graft.plans.IndexRewrite.disable(s, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(s, idx.location)
     }),
 
     "q75_functional_index" -> ((s, dir) => {
@@ -1177,7 +1177,7 @@ object Queries {
             "a refreshed functional index must serve the V2 path")
         withShufflePartitions(s, 4) { materialized(s, v2) }
           .orderBy("c_custkey")
-      } finally graft.plans.IndexRewrite.disable(s, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(s, idx.location)
     }),
 
     "q76_covering_index" -> ((s, dir) => {
@@ -1234,7 +1234,7 @@ object Queries {
             s"the V2 grouped count on a dirty base:\n${v2.queryExecution.optimizedPlan}")
         withShufflePartitions(s, 4) { materialized(s, v2) }
           .orderBy("c_mktsegment")
-      } finally graft.plans.IndexRewrite.disable(s, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(s, idx.location)
     }),
 
     "q77_date_index" -> ((s, dir) => {
@@ -1293,7 +1293,7 @@ object Queries {
         withShufflePartitions(s, 4) {
           materialized(s, qIn.union(qRange).select("tag", "n"))
         }.orderBy("tag")
-      } finally graft.plans.IndexRewrite.disable(s, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(s, idx.location)
     }),
 
     "q78_clustered_range" -> ((s, dir) => {
@@ -1360,7 +1360,7 @@ object Queries {
             "a refreshed clustered index must cover the V2 path")
         withShufflePartitions(s, 4) { materialized(s, v2) }
           .orderBy("c_custkey")
-      } finally graft.plans.IndexRewrite.disable(s, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(s, idx.location)
     }),
 
     "q79_index_union" -> ((s, dir) => {
@@ -1401,11 +1401,11 @@ object Queries {
         if (!servedSubset(t, q1))
           throw new IllegalStateException("a fresh index pair must serve " +
             s"the OR as a union:\n${q1.queryExecution.optimizedPlan}")
-        graft.plans.IndexRewrite.disable(s, ib.location)
+        graft.plans.ServingRewrites.disarm(s, ib.location)
         if (servedSubset(t, q1))
           throw new IllegalStateException(
             "an OR with an uncovered disjunct must keep the scan")
-        graft.plans.IndexRewrite.enable(s, ib)
+        graft.plans.ServingRewrites.arm(s, ib)
         withShufflePartitions(s, 4) {
           t.upsert(t.scan().filter(col("c_custkey") === 7)
             .withColumn("c_name", lit("RENAMED#000000007")))
@@ -1431,8 +1431,8 @@ object Queries {
         withShufflePartitions(s, 4) { materialized(s, v2) }
           .orderBy("c_custkey")
       } finally {
-        graft.plans.IndexRewrite.disable(s, ia.location)
-        graft.plans.IndexRewrite.disable(s, ib.location)
+        graft.plans.ServingRewrites.disarm(s, ia.location)
+        graft.plans.ServingRewrites.disarm(s, ib.location)
       }
     }),
 
@@ -1485,7 +1485,7 @@ object Queries {
             s"the filtered top-k via V2 on the dirty base:\n${v2.queryExecution.optimizedPlan}")
         withShufflePartitions(s, 4) { materialized(s, v2) }
           .orderBy("c_custkey")
-      } finally graft.plans.IndexRewrite.disable(s, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(s, idx.location)
     }),
 
     "q81_index_join" -> ((s, dir) => {
@@ -1538,7 +1538,7 @@ object Queries {
             s"the join via V2 on the dirty base:\n${v2.queryExecution.optimizedPlan}")
         withShufflePartitions(s, 4) { materialized(s, v2) }
           .orderBy("c_custkey")
-      } finally graft.plans.IndexRewrite.disable(s, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(s, idx.location)
     }),
 
     "q70_mv_rewrite" -> ((s, dir) => {
@@ -1569,7 +1569,7 @@ object Queries {
           "sum_price" -> "sum(CAST(o_totalprice AS DECIMAL(28,2)))",
           "max_key" -> "max(o_orderkey)"),
         tmpLoc("graft-q70r-"), buckets = 4)
-      graft.plans.RollupRewrite.enable(s, rollup)
+      graft.plans.ServingRewrites.arm(s, rollup)
       try {
         def agg(base: DataFrame) = base.groupBy("o_orderpriority").agg(
           count(lit(1)).as("n_rows"),
@@ -1614,7 +1614,7 @@ object Queries {
           // AFTER the checkpoint so the served aggregate stays rewrite-shaped
           .withColumn("sum_price", round(col("sum_price").cast("double"), 2))
           .orderBy("o_orderpriority")
-      } finally graft.plans.RollupRewrite.disable(s, rollup.location)
+      } finally graft.plans.ServingRewrites.disarm(s, rollup.location)
     }),
 
     "q83_sql_index" -> ((s, dir) => {
@@ -1657,7 +1657,7 @@ object Queries {
           throw new IllegalStateException("the re-created index must serve")
         withShufflePartitions(s, 4) { materialized(s, q) }
           .orderBy("c_custkey")
-      } finally graft.plans.IndexRewrite.disable(s, idxLoc)
+      } finally graft.plans.ServingRewrites.disarm(s, idxLoc)
     }),
 
     "q82_mv_avg" -> ((s, dir) => {
@@ -1688,7 +1688,7 @@ object Queries {
           "sc" -> "sum(o_custkey)",
           "cc" -> "count(o_custkey)"),
         tmpLoc("graft-q82r-"), buckets = 4)
-      graft.plans.RollupRewrite.enable(s, rollup)
+      graft.plans.ServingRewrites.arm(s, rollup)
       try {
         def agg(base: DataFrame) = base.groupBy("o_orderpriority").agg(
           avg("o_custkey").as("avg_cust"),
@@ -1725,7 +1725,7 @@ object Queries {
             v2.unionByName(vg.select(lit("__ALL__").as("o_orderpriority"),
               col("avg_cust"), col("n_cust"))))
         }.orderBy("o_orderpriority")
-      } finally graft.plans.RollupRewrite.disable(s, rollup.location)
+      } finally graft.plans.ServingRewrites.disarm(s, rollup.location)
     }),
 
     "q63_stream_join" -> ((s, dir) => {

@@ -322,7 +322,23 @@ object TableMeta {
   implicit val formats: Formats = Serialization.formats(NoTypeHints)
 
   def metaDir(location: String) = Paths.get(location, "_graft")
-  private def versionFile(location: String, v: Long) = metaDir(location).resolve(s"v$v.json")
+  /** The manifest file of version `v`. */
+  def versionFile(location: String, v: Long): java.nio.file.Path =
+    metaDir(location).resolve(s"v$v.json")
+
+  /** Every manifest version with a file on disk, ascending (empty when the
+    * table has no metadata directory). Lists the files only: whether each
+    * one parses is the caller's question. */
+  def versionsOnDisk(location: String): Seq[Long] = {
+    val dir = metaDir(location)
+    if (!Files.isDirectory(dir)) return Nil
+    import scala.jdk.CollectionConverters._
+    scala.util.Using.resource(Files.list(dir)) { s =>
+      s.iterator().asScala.map(_.getFileName.toString)
+        .collect { case n if n.matches("v\\d+\\.json") => n.drop(1).dropRight(5).toLong }
+        .toSeq.sorted
+    }
+  }
   private def currentFile(location: String) = metaDir(location).resolve("_current.json")
 
   def write(meta: TableMeta): Unit = {
@@ -361,16 +377,11 @@ object TableMeta {
     * already-moved directory; bounded driver-side work, one JSON rewrite
     * per version. */
   def relocate(from: String, to: String): Unit = {
-    import scala.jdk.CollectionConverters._
     def swap(p: String): String =
       if (p == from) to
       else if (p.startsWith(from + "/")) to + p.substring(from.length)
       else p
-    val vfs = scala.util.Using.resource(Files.list(metaDir(to))) { s =>
-      s.iterator().asScala
-        .filter(_.getFileName.toString.matches("v\\d+\\.json")).toSeq
-    }
-    vfs.foreach { vf =>
+    versionsOnDisk(to).map(versionFile(to, _)).foreach { vf =>
       val m = Serialization.read[TableMeta](
         new String(Files.readAllBytes(vf), StandardCharsets.UTF_8))
       val moved = m.copy(location = swap(m.location),

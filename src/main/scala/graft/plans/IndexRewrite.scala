@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions._
@@ -62,106 +60,21 @@ import graft.tools.SecondaryIndex
  * bounded index probe AT PLAN TIME (a driver-side job); the spliced plan
  * then reads only the matched keys' base tablets. Output attribute ids
  * are preserved through aliases, so parent operators resolve untouched.
- * Arming follows the rollup rewrite: `SecondaryIndex.build` arms the
- * building session, a catalog open re-arms every index persisted under
- * its warehouse, and loading an index re-arms it (opt out with
- * `graft.sindex.autoRewrite` set to anything but "true"). A probe that
- * FAILS (sick index, lost executor) logs a warning and keeps the scan —
- * never blocks the query, never silently: a permanently failing index
- * must be observable.
+ * Arming is the one path of every derived table ([[ServingRewrites]]):
+ * `SecondaryIndex.build` arms the building session, a catalog open
+ * re-arms every index persisted under its warehouse, and loading an index
+ * re-arms it (opt out with `graft.sindex.autoRewrite` set to anything but
+ * "true"). Every serve checks freshness through [[ServingRewrites.pinned]]
+ * and declines through [[ServingRewrites.serving]]: a probe that FAILS
+ * (sick index, lost executor) logs a warning and keeps the scan — never
+ * blocks the query, never silently: a permanently failing index must be
+ * observable.
  */
 object IndexRewrite extends Rule[LogicalPlan] {
-
-  // indexLoc -> (srcLoc, indexed cols lowercased, lead first) per session
-  // (weak: sessions die with their tests); values are tiny and self-clean
-  // like RollupRewrite's
-  private val registry =
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (String, Seq[String])]]()
-
-  // the spliced lookup optimizes its own queries through this same rule —
-  // never rewrite while a rewrite's probe is in flight on this thread
-  private val busy = new ThreadLocal[java.lang.Boolean] {
-    override def initialValue: java.lang.Boolean = java.lang.Boolean.FALSE
-  }
-
-  /** Run `body` with this THREAD's re-entrancy guard set — for probe
-    * work a serve farms out to other threads (the union's parallel
-    * probes): their query planning must not re-enter the rule any more
-    * than the planning thread's own would. */
-  private[graft] def guarded[T](body: => T): T = {
-    val was = busy.get()
-    busy.set(true)
-    try body finally busy.set(was)
-  }
-
-  private[plans] def autoRewriteEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("graft.sindex.autoRewrite")
-      .forall(_.equalsIgnoreCase("true"))
 
   private def rewriteMaxKeys(spark: SparkSession): Int =
     spark.conf.getOption("graft.sindex.rewriteMaxKeys")
       .flatMap(v => scala.util.Try(v.toInt).toOption).getOrElse(4096)
-
-  private[plans] def isArmed(spark: SparkSession, indexLoc: String): Boolean =
-    registry.synchronized(Option(registry.get(spark)))
-      .exists(_.containsKey(indexLoc))
-
-  /** Register `index` for rewrite in `spark` and inject the rule (once). */
-  def enable(spark: SparkSession, index: GraftTable): Unit = {
-    val p = index.properties
-    val srcLoc = p.getOrElse(SecondaryIndex.SrcLocKey,
-      throw new IllegalArgumentException(
-        s"${index.location} is not a secondary index"))
-    // the registry keys on CANONICAL forms: a plain index's lead canon is
-    // its column name, a functional index's is its persisted expression
-    // canon — one matching mechanism for both
-    val cols = p.get(SecondaryIndex.ExprKey) match {
-      case Some(canon) => Seq(canon)
-      case None => SecondaryIndex.indexedCols(p).map(_.toLowerCase)
-    }
-    registry.synchronized {
-      registry.computeIfAbsent(spark,
-        _ => new ConcurrentHashMap[String, (String, Seq[String])]())
-        .put(index.location, (srcLoc, cols))
-    }
-    // the read-append-write on extraOptimizations serializes on ONE lock
-    // shared with RollupRewrite (ServingRewrites.armLock): a rollup and an
-    // index arming concurrently under two different monitors could lose an
-    // append and silently disarm one rule for the session
-    ServingRewrites.armLock.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(this))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ this
-    }
-  }
-
-  /** Drop `index` from the rewrite registry. */
-  def disable(spark: SparkSession, indexLoc: String): Unit =
-    registry.synchronized {
-      Option(registry.get(spark)).foreach(_.remove(indexLoc))
-    }
-
-  /** Arm `t` for rewrite IF it is a persisted secondary index and the
-    * session's ambient gate is on; idempotent. */
-  def autoArm(spark: SparkSession, t: GraftTable): Boolean = {
-    if (isArmed(spark, t.location)) return true
-    if (!autoRewriteEnabled(spark)) return false
-    if (!t.properties.contains(SecondaryIndex.SrcLocKey)) return false
-    enable(spark, t)
-    true
-  }
-
-  private def indexesFor(spark: SparkSession): Map[String, (String, Seq[String])] = {
-    val m = registry.synchronized(Option(registry.get(spark)))
-      .getOrElse(return Map.empty)
-    import scala.jdk.CollectionConverters._
-    // self-clean: dropped indexes or dropped bases leave the registry
-    m.asScala.toMap.filter { case (loc, (src, _)) =>
-      val ok = TableMeta.exists(loc) && TableMeta.exists(src)
-      if (!ok) m.remove(loc)
-      ok
-    }
-  }
 
   /**
    * Canonical string of a servable INDEX KEY expression — the shared
@@ -367,49 +280,6 @@ object IndexRewrite extends Rule[LogicalPlan] {
     }.flatten
   }
 
-  /** The skeleton every serve runs in: `body` under the re-entrancy
-    * guard, with ONE decline path. A serve never blocks the query, and
-    * never declines silently either: the lookup contract's own bound (a
-    * predicate matching more than rewriteMaxKeys keys is a scan, not a
-    * point read) is expected planner traffic — it records `bound` and
-    * logs at info; anything else (corrupt index, lost executor) records
-    * `error` and warns, so a persistently sick index degrading every
-    * query to a scan leaves a trail. `locs` names the indexes a decline
-    * is charged to, read when it fires. */
-  private def serving(spark: SparkSession, what: String,
-      locs: => Iterable[String])(body: => Option[LogicalPlan])
-      : Option[LogicalPlan] =
-    guarded {
-      try body catch {
-        case e: Exception =>
-          val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
-          if (msg.contains("matched more than")) {
-            locs.foreach(ServingStats.bound(spark, _))
-            logInfo(s"$what declined (probe over rewriteMaxKeys); " +
-              "keeping the scan plan")
-          } else {
-            locs.foreach(ServingStats.error(spark, _))
-            logWarning(s"$what declined after error; keeping the scan " +
-              s"plan: $msg")
-          }
-          None
-      }
-    }
-
-  /** The index's ONE manifest snapshot for a serve. Watermark and index
-    * version move together in a refresh commit, so reading both from one
-    * manifest is the whole TOCTOU defense: the watermark must equal the
-    * base version the scan-root MATCH observed (not a later re-read of
-    * "current"), and the serve then pins this index version and that base
-    * version. A stale index records `stale` and never serves. */
-  private def pinnedIndex(spark: SparkSession, indexLoc: String,
-      baseV: Long): Option[(GraftTable, TableMeta)] = {
-    val idx = GraftTable.load(spark, indexLoc)
-    val im = idx.meta
-    if (im.propsMap(SecondaryIndex.SrcVersionKey).toLong == baseV) Some((idx, im))
-    else { ServingStats.stale(spark, indexLoc); None }
-  }
-
   /** The columns an index table carries that name base columns: the
     * indexed columns plus the base PK every entry holds — minus a
     * functional index's synthesized value column, which no base attribute
@@ -467,13 +337,13 @@ object IndexRewrite extends Rule[LogicalPlan] {
     val pinned = scala.collection.mutable.LinkedHashMap
       .empty[String, Option[(GraftTable, TableMeta)]]
     def involved = pinned.collect { case (loc, Some(_)) => loc }
-    serving(spark, "index union rewrite", involved) {
+    ServingRewrites.serving(spark, "index union rewrite", involved) {
       val probes = picks.map { c =>
         indexes.collectFirst {
           case (loc, (src, cols))
               if src == baseLoc && cols.headOption.contains(c.canon) => loc
         }.flatMap(loc => pinned.getOrElseUpdate(loc,
-          pinnedIndex(spark, loc, baseV)))
+          ServingRewrites.pinned(spark, loc, baseV)))
           .map { case (idx, im) =>
             (idx, c.filters(SecondaryIndex.indexedCols(im.propsMap).head),
               im.version)
@@ -533,9 +403,9 @@ object IndexRewrite extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
-    if (busy.get()) return plan
+    if (ServingRewrites.inServe) return plan
     val spark = SparkSession.active
-    val indexes = indexesFor(spark)
+    val indexes = ServingRewrites.armed(spark, this)
     if (indexes.isEmpty) return plan
     val maxKeys = rewriteMaxKeys(spark)
     plan.transform {
@@ -791,8 +661,8 @@ object IndexRewrite extends Rule[LogicalPlan] {
       factFilter: Option[Filter], indexLoc: String, baseV: Long,
       dim: LogicalPlan, dimExpr: Expression,
       maxKeys: Int): Option[LogicalPlan] =
-    serving(spark, s"index join rewrite via $indexLoc", Seq(indexLoc)) {
-      pinnedIndex(spark, indexLoc, baseV).flatMap { case (idx, im) =>
+    ServingRewrites.serving(spark, s"index join rewrite via $indexLoc", Seq(indexLoc)) {
+      ServingRewrites.pinned(spark, indexLoc, baseV).flatMap { case (idx, im) =>
         val keyAlias = Alias(dimExpr, "__graft_join_key")()
         val dimKeys = org.apache.spark.sql.GraftSqlBridge
           .ofRows(spark, Project(Seq(keyAlias), dim))
@@ -840,8 +710,8 @@ object IndexRewrite extends Rule[LogicalPlan] {
       needNullFree: Boolean = false,
       keyRefs: Seq[String] = Nil,
       filtOpt: Option[Filter] = None): Option[LogicalPlan] =
-    serving(spark, s"index top-k rewrite via $indexLoc", Seq(indexLoc)) {
-      pinnedIndex(spark, indexLoc, baseV).flatMap { case (idx, im) =>
+    ServingRewrites.serving(spark, s"index top-k rewrite via $indexLoc", Seq(indexLoc)) {
+      ServingRewrites.pinned(spark, indexLoc, baseV).flatMap { case (idx, im) =>
         val physCols = SecondaryIndex.indexedCols(im.propsMap)
         val leadCanon = im.propsMap.get(SecondaryIndex.ExprKey)
           .getOrElse(physCols.head.toLowerCase)
@@ -988,8 +858,8 @@ object IndexRewrite extends Rule[LogicalPlan] {
   private def coveringPlan(spark: SparkSession, indexLoc: String,
       baseV: Long, served: Servable, residual: Seq[Expression],
       needed: Seq[Attribute]): Option[LogicalPlan] =
-    serving(spark, s"covering index rewrite via $indexLoc", Seq(indexLoc)) {
-      pinnedIndex(spark, indexLoc, baseV).flatMap { case (idx, im) =>
+    ServingRewrites.serving(spark, s"covering index rewrite via $indexLoc", Seq(indexLoc)) {
+      ServingRewrites.pinned(spark, indexLoc, baseV).flatMap { case (idx, im) =>
         // the index table's columns ARE base columns (carriedCols)
         val idxCols = carriedCols(im).map(_.toLowerCase).toSet
         val residualRefs = residual.flatMap(_.references.toSeq)
@@ -1009,8 +879,8 @@ object IndexRewrite extends Rule[LogicalPlan] {
   private def tryRewrite(spark: SparkSession, f: Filter, indexLoc: String,
       baseV: Long, served: Servable, residual: Seq[Expression],
       maxKeys: Int): Option[LogicalPlan] =
-    serving(spark, s"index rewrite via $indexLoc", Seq(indexLoc)) {
-      pinnedIndex(spark, indexLoc, baseV).flatMap { case (idx, im) =>
+    ServingRewrites.serving(spark, s"index rewrite via $indexLoc", Seq(indexLoc)) {
+      ServingRewrites.pinned(spark, indexLoc, baseV).flatMap { case (idx, im) =>
         // bounded plan-time probe (DPP posture), version-pinned both
         // sides; a scan-sized predicate throws the lookup contract and
         // declines

@@ -1,7 +1,5 @@
 package graft.plans
 
-import java.util.concurrent.ConcurrentHashMap
-
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedFunction, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions._
@@ -57,93 +55,21 @@ import graft.tools.MaterializedRollup
  * execution serves the plan-time snapshot — exactly the snapshot
  * semantics every engine scan already has (a scan planned before a commit
  * reads its manifest's files), never an error and never a torn read.
- * Serving also survives the session: `MaterializedRollup.build` arms the
- * building session, a `GraftCatalog` open re-arms every rollup persisted
- * under its warehouse, and `GraftTable.load` of a rollup re-arms it — so
- * yesterday's materialized view serves today's sessions with zero calls
- * (opt out with `graft.rollup.autoRewrite` set to anything but "true").
+ * Arming is the one path of every derived table ([[ServingRewrites]]):
+ * `MaterializedRollup.build` arms the building session, a `GraftCatalog`
+ * open re-arms every rollup persisted under its warehouse, and
+ * `GraftTable.load` of a rollup re-arms it — so yesterday's materialized
+ * view serves today's sessions with zero calls (opt out with
+ * `graft.rollup.autoRewrite` set to anything but "true"). The freshness
+ * check is [[ServingRewrites.pinned]] and a failing serve declines through
+ * [[ServingRewrites.serving]], exactly as an index serve does: it records
+ * `error` and logs a warning, never blocks the query.
  *
  * Output attribute ids are preserved through aliases, so parent operators
  * resolve untouched. Dead registrations (dropped rollup or base) fall out
  * of the registry on the next apply.
  */
 object RollupRewrite extends Rule[LogicalPlan] {
-
-  // rollup locations per session (weak: sessions die with their tests)
-  private val registry =
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, String]]()
-
-  /** Ambient-arming gate — enabled unless `graft.rollup.autoRewrite` is set
-    * to something other than "true" (lenient: "false"/"off"/"0" all opt
-    * out; none of them throws out of a build/load). */
-  private[graft] def autoRewriteEnabled(spark: SparkSession): Boolean =
-    spark.conf.getOption("graft.rollup.autoRewrite")
-      .forall(_.equalsIgnoreCase("true"))
-
-  private[plans] def isArmed(spark: SparkSession, rollupLoc: String): Boolean =
-    registry.synchronized(Option(registry.get(spark)))
-      .exists(_.containsKey(rollupLoc))
-
-  /** Arm `t` for rewrite IF it is a persisted rollup and the session's
-    * ambient-arming gate is on. Idempotent and cheap (a registry put), so
-    * it hooks [[graft.table.GraftTable.load]]: a rollup built YESTERDAY
-    * serves again the moment ANY session touches it — maintenance sweep,
-    * refresh call, or a direct read — not just its builder's session.
-    * Returns whether `t` is an armed rollup. */
-  def autoArm(spark: SparkSession, t: GraftTable): Boolean = {
-    // already-armed short-circuit first: it needs no manifest read, and
-    // the hot callers are repeated loads of the same rollup (refresh
-    // ticks). The property probe below costs one manifest read — loads
-    // of plain tables pay it once per load, noise next to any real use
-    // of the table they were loaded for.
-    if (isArmed(spark, t.location)) return true
-    if (!autoRewriteEnabled(spark)) return false
-    if (!t.properties.contains(MaterializedRollup.SrcLocKey)) return false
-    enable(spark, t)
-    true
-  }
-
-  /** Register `rollup` for rewrite in `spark` and inject the rule (once). */
-  def enable(spark: SparkSession, rollup: GraftTable): Unit = {
-    val srcLoc = rollup.properties.getOrElse(MaterializedRollup.SrcLocKey,
-      throw new IllegalArgumentException(
-        s"${rollup.location} is not a materialized rollup"))
-    registry.synchronized {
-      registry.computeIfAbsent(spark,
-        _ => new ConcurrentHashMap[String, String]())
-        .put(rollup.location, srcLoc)
-    }
-    // the read-append-write on extraOptimizations serializes on ONE lock
-    // shared with IndexRewrite (ServingRewrites.armLock): two rules arming
-    // concurrently under separate monitors could lose an append and
-    // silently disarm one rewrite for the session
-    ServingRewrites.armLock.synchronized {
-      if (!spark.experimental.extraOptimizations.contains(this))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ this
-    }
-  }
-
-  /** Drop `rollup` from the rewrite registry (the rule stays injected —
-    * with an empty registry it is a no-op pattern match). */
-  def disable(spark: SparkSession, rollupLocation: String): Unit =
-    registry.synchronized {
-      Option(registry.get(spark)).foreach(_.remove(rollupLocation))
-    }
-
-  private def rollupsFor(spark: SparkSession): Map[String, String] = {
-    val m = registry.synchronized(Option(registry.get(spark)))
-      .getOrElse(return Map.empty)
-    import scala.jdk.CollectionConverters._
-    // self-clean: dropped rollups or dropped BASES (bench scratch tables)
-    // leave the registry, so a long session's optimizer overhead stays
-    // bounded by its live rollups
-    m.asScala.toMap.filter { case (loc, src) =>
-      val ok = TableMeta.exists(loc) && TableMeta.exists(src)
-      if (!ok) m.remove(loc)
-      ok
-    }
-  }
 
   /** Canonical string for the tiny aggregate language rollups persist.
     * Handles BOTH resolved query-side trees and parsed-spec trees, so the
@@ -214,7 +140,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     val spark = SparkSession.active
-    val rollups = rollupsFor(spark)
+    val rollups = ServingRewrites.armed(spark, this)
     if (rollups.isEmpty) return plan
     plan.transform {
       case agg @ Aggregate(groupExprs, resultExprs, child, _)
@@ -236,31 +162,34 @@ object RollupRewrite extends Rule[LogicalPlan] {
         (for {
           (baseLoc, baseV) <- baseLocation(scanChild)
           rewritten <- rollups.collectFirst(Function.unlift {
-            case (rollupLoc, srcLoc) if srcLoc == baseLoc =>
-              tryRewrite(spark, agg, groupExprs, resultExprs, cond,
-                baseV, rollupLoc)
+            case (rollupLoc, (srcLoc, _)) if srcLoc == baseLoc =>
+              tryRewrite(spark, groupExprs, resultExprs, cond, baseV,
+                rollupLoc)
             case _ => None
           })
         } yield rewritten).getOrElse(agg)
     }
   }
 
-  private def tryRewrite(spark: SparkSession, agg: Aggregate,
+  private def tryRewrite(spark: SparkSession,
       groupExprs: Seq[Expression], resultExprs: Seq[NamedExpression],
       cond: Option[Expression], baseV: Long,
-      rollupLoc: String): Option[LogicalPlan] = try {
-    val rollup = GraftTable.load(spark, rollupLoc)
-    // ONE meta snapshot: watermark + rollup version move together in a
-    // refresh commit. The watermark must equal the base version the MATCH
-    // observed — not a later re-read of "current": a base commit plus a
-    // rollup refresh landing between the match and this check must decline
-    // rather than serve v+1 aggregates through a plan pinned at v. The
-    // spliced scan below pins this same rollup version.
-    val rm = rollup.meta
-    val p = rm.propsMap
-    if (p(MaterializedRollup.SrcVersionKey).toLong != baseV) {
-      ServingStats.stale(spark, rollupLoc); return None
+      rollupLoc: String): Option[LogicalPlan] =
+    ServingRewrites.serving(spark, s"rollup rewrite via $rollupLoc",
+        Seq(rollupLoc)) {
+      ServingRewrites.pinned(spark, rollupLoc, baseV).flatMap {
+        case (rollup, rm) => serve(spark, groupExprs, resultExprs, cond,
+          rollupLoc, rollup, rm)
+      }
     }
+
+  /** The serve against the pinned rollup snapshot `rm`: None when the
+    * query does not match the rollup's definition. */
+  private def serve(spark: SparkSession, groupExprs: Seq[Expression],
+      resultExprs: Seq[NamedExpression], cond: Option[Expression],
+      rollupLoc: String, rollup: GraftTable,
+      rm: TableMeta): Option[LogicalPlan] = {
+    val p = rm.propsMap
     val groupCols = p(MaterializedRollup.GroupColsKey)
       .split(MaterializedRollup.FieldSep).toSeq.map(_.toLowerCase)
     val gNames = groupExprs.map {
@@ -375,8 +304,5 @@ object RollupRewrite extends Rule[LogicalPlan] {
       ServingStats.serve(spark, rollupLoc, "rollup_reagg")
       Some(Aggregate(subGroup, mapped.map(_.get), src))
     }
-  } catch {
-    // a sick rollup never blocks the query — but it counts
-    case _: Exception => ServingStats.error(spark, rollupLoc); None
   }
 }

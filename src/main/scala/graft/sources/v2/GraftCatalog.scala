@@ -770,7 +770,7 @@ class GraftV2Table(meta: TableMeta) extends Table with SupportsRead
       throw new org.apache.spark.sql.catalyst.analysis
         .NoSuchIndexException(indexName, meta.name, None)
     val loc = sidxLoc(indexName)
-    graft.plans.IndexRewrite.disable(SparkSession.active, loc)
+    graft.plans.ServingRewrites.disarm(SparkSession.active, loc)
     GraftTable.drop(loc)
   }
 

@@ -538,9 +538,12 @@ private[v2] object GraftProcedures {
         new StructType().add("enabled", BooleanType)
           .add("source", StringType)) { in =>
           val r = GraftTable.load(spark, in.getUTF8String(0).toString)
-          graft.plans.RollupRewrite.enable(spark, r)
-          Seq(InternalRow(true,
-            str(r.properties(graft.tools.MaterializedRollup.SrcLocKey))))
+          val srcLoc = r.properties.getOrElse(
+            graft.tools.MaterializedRollup.SrcLocKey,
+            throw new IllegalArgumentException(
+              s"${r.location} is not a materialized rollup"))
+          graft.plans.ServingRewrites.arm(spark, r)
+          Seq(InternalRow(true, str(srcLoc)))
         })
       case "build_secondary_index" => Some(proc("build_secondary_index",
         "build a maintained secondary index on non-key columns (comma-" +

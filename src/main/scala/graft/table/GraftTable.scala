@@ -1018,22 +1018,25 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     var spent = 0L
     val ran = scala.collection.mutable.ArrayBuffer[MaintenanceAction]()
     maintenancePlan().takeWhile(_.score >= minScore).foreach { a =>
-      if (spent + a.ioBytes <= ioBudgetBytes) {
-        val ok =
-          try {
-            a.kind match {
-              case "compact_tablet" => compactTablet(a.bucket, a.rangeKey); true
-              case "merge_tail" => mergeTailDeltas()
-            }
-          } catch {
-            case _: ConcurrentCommitException =>
-              false // preempted by a racing writer: skip, keep the budget
-          }
-        if (ok) { spent += a.ioBytes; ran += a }
+      if (spent + a.ioBytes <= ioBudgetBytes && runMaintenance(a)) {
+        spent += a.ioBytes; ran += a
       }
     }
     ran.toSeq
   }
+
+  /** Execute one [[maintenancePlan]] action — the one executor of both
+    * budgeted loops (this table's [[maintain]] and the warehouse's
+    * `GraftTools.maintainWarehouseBudgeted`). Returns whether it did work:
+    * false when a racing writer preempted it (a [[ConcurrentCommitException]]
+    * — skip, keep the budget) or a tail merge found nothing to fold. */
+  private[graft] def runMaintenance(a: MaintenanceAction): Boolean =
+    try {
+      a.kind match {
+        case "compact_tablet" => compactTablet(a.bucket, a.rangeKey); true
+        case "merge_tail" => mergeTailDeltas()
+      }
+    } catch { case _: ConcurrentCommitException => false }
 
   /**
    * History retention GC — the reference's ancient-history-mark
@@ -1073,12 +1076,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       import java.nio.file.{Files, Paths}
       import scala.jdk.CollectionConverters._
       val m = meta
-      val metaDir = TableMeta.metaDir(location)
-      val onDisk = scala.util.Using.resource(Files.list(metaDir)) { s =>
-        s.iterator().asScala.map(_.getFileName.toString)
-          .collect { case n if n.matches("v\\d+\\.json") => n.drop(1).dropRight(5).toLong }
-          .toSeq.sorted
-      }
+      val onDisk = TableMeta.versionsOnDisk(location)
       // derived-table floor: a registered rollup/index refreshes by reading
       // `source@watermark` (CDC before-image), so every version >= the
       // smallest live watermark must survive — otherwise one missed refresh
@@ -1163,7 +1161,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       // re-run or fsckRepair's orphan sweep finishes.
       val gone = scala.collection.mutable.ArrayBuffer[String]()
       prefix.foreach { v =>
-        val vf = metaDir.resolve(s"v$v.json")
+        val vf = TableMeta.versionFile(location, v)
         if (Files.deleteIfExists(vf)) gone += vf.toString
       }
       deletable.foreach { p =>
@@ -3391,7 +3389,8 @@ object GraftTable {
       hash: Seq[HashComponent] = Nil,
       range: Option[RangeComponent] = None,
       data: Option[DataFrame] = None,
-      nonUniqueKey: Boolean = false): GraftTable = {
+      nonUniqueKey: Boolean = false,
+      properties: Map[String, String] = Map.empty): GraftTable = {
     require(keys.nonEmpty, "primary key required")
     keys.foreach { k =>
       require(schema.fieldNames.contains(k), s"key column $k not in schema")
@@ -3413,8 +3412,12 @@ object GraftTable {
       }
     }
     val columns = buildColumns(schema, keys, nonUniqueKey)
+    // the first manifest carries the table's properties: a table defined
+    // by them (a derived table's source pointer and watermark) is whole
+    // from v1, with no second properties-only commit
     val m0 = TableMeta(name, location, 1L, now(), "create",
-      columns, columns.length, hash, range, Nil, Nil, Nil)
+      columns, columns.length, hash, range, Nil, Nil, Nil,
+      props = Some(properties).filter(_.nonEmpty))
     val t = new GraftTable(spark, location)
     data match {
       case Some(df0) =>
@@ -3589,14 +3592,7 @@ object GraftTable {
     * (normalized) — the full set a table needs readable, across time
     * travel. Unreadable manifests contribute nothing (fsck's problem). */
   private[graft] def manifestFilePaths(location: String): Set[String] = {
-    val metaDir = TableMeta.metaDir(location)
-    if (!Files.isDirectory(metaDir)) return Set.empty
-    val versions = scala.util.Using.resource(Files.list(metaDir)) { s =>
-      s.iterator().asScala.map(_.getFileName.toString)
-        .collect { case n if n.matches("v\\d+\\.json") => n.drop(1).dropRight(5).toLong }
-        .toSeq
-    }
-    versions.flatMap { v =>
+    TableMeta.versionsOnDisk(location).flatMap { v =>
       try {
         val vm = TableMeta.read(location, v)
         (vm.baseFiles ++ vm.deltaFiles).map(f => Paths.get(f.path).normalize.toString)

@@ -5,21 +5,34 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
 
+import graft.catalog.{HashComponent, TableMeta}
 import graft.table.GraftTable
 
 /**
- * Maintenance hook for CDC-maintained DERIVED tables — materialized
- * rollups, secondary indexes, vector indexes. Each records its source
- * location and a source-version watermark in table properties; this probes
- * those properties and runs the matching incremental refresh when the
- * source moved past the watermark. The reference's MaintenanceManager
- * covers every tablet's upkeep unconditionally in the background
- * (util/maintenance_manager.cc:736); a derived table whose refresh only
- * runs when an operator remembers to CALL it is the same gap the delta
- * backstop closed for base tables — so [[graft.table.MaintenanceScheduler]]
- * ticks call this per table, and warehouse ticks sweep it across every
- * table under the directory. Every kind's refresh runs the one protocol in
- * [[refresh]]; a kind supplies only its change frame and derivation.
+ * The one lifecycle of every CDC-maintained DERIVED table — materialized
+ * rollups, secondary indexes, vector indexes. A derived table records its
+ * source location and a source-version watermark in its table properties;
+ * the three kinds differ only in what they derive, never in how they are
+ * built, kept current or served:
+ *
+ *   - [[build]] registers the source's back-pointer marker, pins the
+ *     source version, creates the derived table with its source pointer,
+ *     definition and watermark in its FIRST commit, re-writes the marker,
+ *     and arms serving for the kinds that serve. A kind supplies only its
+ *     validation, its rows over the pinned source scan, its table shape and
+ *     its definition properties.
+ *   - [[refresh]] re-derives exactly the keys the source's change stream
+ *     touched since the watermark, and commits rows and the new watermark
+ *     as one version; a kind supplies only its change frame and its
+ *     derivation. [[refreshIfStale]] is the maintenance hook: the
+ *     reference's MaintenanceManager covers every tablet's upkeep
+ *     unconditionally in the background (util/maintenance_manager.cc:736),
+ *     so [[graft.table.MaintenanceScheduler]] ticks call it per table, and
+ *     warehouse ticks sweep it across every table under the directory.
+ *   - Serving is [[graft.plans.ServingRewrites]]: one session-keyed
+ *     registry arms a rollup's or an index's rewrite rule, and every serve
+ *     pins the derived table at the base version its plan observed through
+ *     [[watermarkOf]].
  */
 object DerivedTables {
 
@@ -42,11 +55,11 @@ object DerivedTables {
 
   /** Record `derivedLoc` as a derived table of `source` (idempotent). The
     * marker also records the source version current AT REGISTRATION: until
-    * the build commits its watermark property, the derived table cannot
-    * answer [[watermarkFor]], and a long build racing an aggressive
-    * retention tick would otherwise lose the very version it is about to
-    * record — the GC honors this recorded floor while the marker is
-    * younger than the tick's own age grace (see GraftTable.expireVersions). */
+    * the build commits the derived table, it cannot answer
+    * [[watermarkFor]], and a long build racing an aggressive retention tick
+    * would otherwise lose the very version it is about to record — the GC
+    * honors this recorded floor while the marker is younger than the
+    * tick's own age grace (see GraftTable.expireVersions). */
   private[graft] def register(source: GraftTable, derivedLoc: String): Unit = {
     val f = regFile(source.location, derivedLoc)
     java.nio.file.Files.createDirectories(f.getParent)
@@ -106,17 +119,23 @@ object DerivedTables {
   private def canonical(location: String): String =
     java.nio.file.Paths.get(location).toAbsolutePath.normalize.toString
 
+  /** The source-version watermark a derived table's properties record
+    * (None for a plain table). */
+  private[graft] def watermarkOf(props: Map[String, String]): Option[Long] =
+    kindOf(props).flatMap(k => props.get(k.srcVersionKey))
+      .flatMap(v => scala.util.Try(v.toLong).toOption)
+
   /** The source-version watermark `derivedLoc` still needs, IF it exists
     * and its forward pointer names `sourceLoc` (a dropped derived table, or
     * one rebuilt against another source, yields None — the caller should
     * also clear the dead registration). */
   private[graft] def watermarkFor(derivedLoc: String,
       sourceLoc: String): Option[Long] = {
-    if (!graft.catalog.TableMeta.exists(derivedLoc)) return None
-    val p = graft.catalog.TableMeta.readCurrent(derivedLoc).propsMap
-    kindOf(p).filter(k => canonical(p(k.srcLocKey)) == canonical(sourceLoc))
-      .flatMap(k => p.get(k.srcVersionKey))
-      .flatMap(v => scala.util.Try(v.toLong).toOption)
+    if (!TableMeta.exists(derivedLoc)) return None
+    val p = TableMeta.readCurrent(derivedLoc).propsMap
+    if (kindOf(p).exists(k => canonical(p(k.srcLocKey)) == canonical(sourceLoc)))
+      watermarkOf(p)
+    else None
   }
 
   private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
@@ -146,6 +165,57 @@ object DerivedTables {
     * remedy; the scheduler records it as the tick's lastError). */
   def refreshIfStale(spark: SparkSession, t: GraftTable): Boolean =
     kindOf(t.properties).exists(_.refresh(spark, t))
+
+  /** What one kind's build supplies: the derived table's name, schema,
+    * primary key and hash layout, its rows (derived from the pinned source
+    * scan), and its definition properties — [[build]] adds the source
+    * pointer and the watermark. */
+  private[tools] final case class Shape(name: String, schema: StructType,
+      keys: Seq[String], hash: Seq[HashComponent], rows: DataFrame,
+      props: Map[String, String])
+
+  /**
+   * The build of every derived kind. `define` validates the source's
+   * manifest and derives the table's [[Shape]] from the source scan pinned
+   * at that manifest's version.
+   *
+   *   - The back-pointer marker is written FIRST (a marker file, no
+   *     commit): from this moment the source's history GC floors its
+   *     expiry at the registration-time version. A failed build leaves a
+   *     dangling marker, which `expireVersions` clears lazily.
+   *   - The source scan is PINNED to the version the watermark records: an
+   *     unpinned scan reads whatever version is current at execution, and a
+   *     commit landing between the manifest read and the job would leave
+   *     rows one version ahead of the watermark — the next refresh would
+   *     then derive from the wrong before-image (FuzzSpec's build-vs-storm
+   *     chaos exercises exactly this window).
+   *   - The table's first commit carries its properties (source pointer,
+   *     definition, watermark), so it answers [[watermarkFor]] from v1.
+   *   - The marker is re-written after that commit: an aggressive expiry
+   *     tick during a LONG build can pass the build grace and deregister
+   *     the marker, and the finished table would then be excluded from the
+   *     GC floor forever — one missed refresh would force the full rebuild
+   *     the marker exists to prevent.
+   *   - A kind that serves (rollup, secondary index) arms its rewrite in
+   *     this session ([[graft.plans.ServingRewrites.autoArm]]): exact and
+   *     freshness-gated, so it can never change results. A session opts
+   *     out with `graft.rollup.autoRewrite`/`graft.sindex.autoRewrite` set
+   *     to anything but "true".
+   */
+  private[tools] def build(spark: SparkSession, source: GraftTable,
+      location: String, srcLocKey: String, srcVersionKey: String)(
+      define: (TableMeta, DataFrame) => Shape): GraftTable = {
+    register(source, location)
+    val m = source.meta
+    val s = define(m, source.scan(Some(m.version)))
+    val t = GraftTable.create(spark, location, s.name, s.schema, s.keys,
+      hash = s.hash, data = Some(s.rows),
+      properties = s.props ++ Map(srcLocKey -> m.location,
+        srcVersionKey -> m.version.toString))
+    register(source, location)
+    graft.plans.ServingRewrites.autoArm(spark, t)
+    t
+  }
 
   /** What one kind supplies for a refresh window: the window's change
     * frame (one row per changed key, carrying `keyCols`), the source

@@ -467,13 +467,14 @@ object GraftTools {
     val ran = scala.collection.mutable.ArrayBuffer[(String, graft.table.MaintenanceAction)]()
     ranked.foreach { case (name, t, a) =>
       if (spent + a.ioBytes <= ioBudgetBytes) {
+        // one sick table never stops the sweep, but its failure is logged
         val ok =
-          try {
-            a.kind match {
-              case "compact_tablet" => t.compactTablet(a.bucket, a.rangeKey); true
-              case "merge_tail" => t.mergeTailDeltas()
-            }
-          } catch { case _: Exception => false }
+          try t.runMaintenance(a)
+          catch { case e: Exception =>
+            org.slf4j.LoggerFactory.getLogger(getClass)
+              .warn(s"warehouse maintenance of $name failed: $a", e)
+            false
+          }
         if (ok) { spent += a.ioBytes; ran += ((name, a)) }
       }
     }
@@ -633,13 +634,7 @@ object GraftTools {
     }
 
     // every snapshot version's references, for orphan detection + chain audit
-    val metaDir = TableMeta.metaDir(location)
-    val versions = scala.util.Using.resource(Files.list(metaDir)) { stream =>
-      stream.iterator().asScala
-        .map(_.getFileName.toString)
-        .collect { case s if s.matches("v\\d+\\.json") => s.drop(1).dropRight(5).toLong }
-        .toSeq.sorted
-    }
+    val versions = TableMeta.versionsOnDisk(location)
     // versions below the history mark were EXPIRED on purpose
     // (expireVersions — the ancient-history-mark analog); only gaps at or
     // above the floor are findings
@@ -671,22 +666,16 @@ object GraftTools {
     * freshly-written unreferenced file may belong to a writer that is about
     * to commit — deleting it would corrupt that table the moment the commit
     * lands (same posture as Iceberg's remove_orphan_files older-than
-    * default). Empty fileset directories left behind are removed too.
-    * Returns the deleted paths. */
+    * default). Directories left holding nothing (or only writer sidecars)
+    * are removed too, under the same grace: a live writer's freshly made
+    * `_temporary` tree is empty until its tasks commit. Returns the
+    * deleted paths. */
   def fsckRepair(location: String,
       graceMs: Long = GraftTools.FsckGraceMs): Seq[String] = {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
     import graft.catalog.TableMeta
     if (!TableMeta.exists(location)) return Nil
-    val metaDir = TableMeta.metaDir(location)
-    def listVersions(): Seq[Long] =
-      scala.util.Using.resource(Files.list(metaDir)) { stream =>
-        stream.iterator().asScala
-          .map(_.getFileName.toString)
-          .collect { case s if s.matches("v\\d+\\.json") => s.drop(1).dropRight(5).toLong }
-          .toSeq
-      }
     // UNPUBLISHED commits: a writer killed between writing its version
     // file and swinging the _current pointer leaves v(N+1).json with no
     // reader able to see it — and every future committer of N+1 hits the
@@ -695,17 +684,16 @@ object GraftTools {
     // protocol rolls the dead commit back instead). The writer never
     // returned success, so aborting it is the correct recovery. The grace
     // window protects an in-flight committer exactly as for data files.
+    val cutoff = System.currentTimeMillis() - math.max(0L, graceMs)
+    def old(p: java.nio.file.Path): Boolean =
+      try Files.getLastModifiedTime(p).toMillis < cutoff
+      catch { case _: Exception => false } // vanished mid-walk: skip
     val cur = TableMeta.currentVersion(location)
-    val rolledBack = listVersions().filter(_ > cur).flatMap { v =>
-      val vf = metaDir.resolve(s"v$v.json")
-      val old = try {
-        Files.getLastModifiedTime(vf).toMillis <
-          System.currentTimeMillis() - math.max(0L, graceMs)
-      } catch { case _: Exception => false }
-      if (old && Files.deleteIfExists(vf)) Some(vf.toString) else None
+    val rolledBack = TableMeta.versionsOnDisk(location).filter(_ > cur).flatMap { v =>
+      val vf = TableMeta.versionFile(location, v)
+      if (old(vf) && Files.deleteIfExists(vf)) Some(vf.toString) else None
     }
-    val versions = listVersions()
-    val referenced = versions.flatMap { v =>
+    val referenced = TableMeta.versionsOnDisk(location).flatMap { v =>
       try {
         val vm = TableMeta.read(location, v)
         (vm.baseFiles ++ vm.deltaFiles).map(f => Paths.get(f.path).normalize.toString)
@@ -713,13 +701,17 @@ object GraftTools {
     }.toSet
     val dataDir = Paths.get(location, "data")
     if (!Files.isDirectory(dataDir)) return rolledBack
-    val cutoff = System.currentTimeMillis() - math.max(0L, graceMs)
-    val orphans = walkTolerant(dataDir)
+    val walked = walkTolerant(dataDir)
+    val orphans = walked
       .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".parquet"))
       .filter(p => !referenced.contains(p.normalize.toString))
-      .filter(p =>
-        try Files.getLastModifiedTime(p).toMillis < cutoff
-        catch { case _: Exception => false }) // vanished mid-walk: skip
+      .filter(old)
+    // directories are aged BEFORE the deletes below touch their mtimes: a
+    // directory modified within the grace window may be a live writer's
+    // (a maintenance write's `_temporary` tree), and sweeping it would
+    // fail that write
+    val oldDirs = walked.filter(p => p != dataDir && Files.isDirectory(p))
+      .filter(old)
     orphans.foreach(Files.deleteIfExists(_))
     // sweep directories the deletes left holding only writer sidecar junk
     // (_SUCCESS, .crc) or nothing — deepest first
@@ -727,18 +719,16 @@ object GraftTools {
       val n = p.getFileName.toString
       n == "_SUCCESS" || n.endsWith(".crc")
     }
-    walkTolerant(dataDir).sortBy(-_.getNameCount).foreach { p =>
-      if (p != dataDir && Files.isDirectory(p)) {
-        val children =
-          try scala.util.Using.resource(Files.list(p))(_.iterator().asScala.toSeq)
-          catch { case _: java.io.IOException => Seq(p) } // vanished: not empty
-        if (children.forall(c => Files.isRegularFile(c) && sidecar(c))) {
-          children.foreach(Files.deleteIfExists(_))
-          // a live writer (a maintenance tick's job) may add an entry
-          // between the listing and the delete: its dir is not junk
-          try Files.deleteIfExists(p)
-          catch { case _: java.nio.file.DirectoryNotEmptyException => }
-        }
+    oldDirs.sortBy(-_.getNameCount).foreach { p =>
+      val children =
+        try scala.util.Using.resource(Files.list(p))(_.iterator().asScala.toSeq)
+        catch { case _: java.io.IOException => Seq(p) } // vanished: not empty
+      if (children.forall(c => Files.isRegularFile(c) && sidecar(c))) {
+        children.foreach(Files.deleteIfExists(_))
+        // a live writer (a maintenance tick's job) may add an entry
+        // between the listing and the delete: its dir is not junk
+        try Files.deleteIfExists(p)
+        catch { case _: java.nio.file.DirectoryNotEmptyException => }
       }
     }
     rolledBack ++ orphans.map(_.toString)

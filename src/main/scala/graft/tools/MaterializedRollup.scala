@@ -63,55 +63,33 @@ object MaterializedRollup {
   }
 
   /**
-   * Build the rollup beside `source`. `aggs` is (alias, aggregate SQL
-   * expression), e.g. `("sum_price", "sum(CAST(o_totalprice AS
-   * DECIMAL(28,2)))")`. The rollup table is keyed by `groupCols` and
+   * Build the rollup beside `source` through [[DerivedTables.build]] (the
+   * one build of every derived kind: marker, pinned source scan,
+   * properties in the first commit, serving armed). `aggs` is (alias,
+   * aggregate SQL expression), e.g. `("sum_price", "sum(CAST(o_totalprice
+   * AS DECIMAL(28,2)))")`. The rollup table is keyed by `groupCols` and
    * hash-partitioned on them across `buckets`.
    */
   def build(spark: SparkSession, source: GraftTable, groupCols: Seq[String],
       aggs: Seq[(String, String)], location: String,
-      buckets: Int = 16): GraftTable = {
-    // back-pointer first (a marker file, no commit): from this moment the
-    // source's history GC floors its expiry at this rollup's watermark —
-    // see DerivedTables.register
-    DerivedTables.register(source, location)
-    val m = source.meta
-    require(groupCols.nonEmpty, "at least one group column required")
-    require(aggs.nonEmpty, "at least one aggregate required")
-    val pk = m.keyCols.toSet
-    groupCols.foreach(c => require(pk.contains(c),
-      s"rollup group column $c must be a primary-key column of ${m.name} " +
-        s"(PK: ${m.keyCols.mkString(", ")}) — CDC tombstones carry keys only"))
-    val badAlias = aggs.map(_._1).find(a =>
-      groupCols.contains(a) || a.contains(FieldSep) || a.contains(RecSep))
-    require(badAlias.isEmpty, s"bad aggregate alias: ${badAlias.getOrElse("")}")
-    val srcVersion = m.version
-    // pinned to the watermark version: an unpinned scan could read a later
-    // commit than the recorded watermark (see SecondaryIndex.build)
-    val df = grouped(source.scan(Some(srcVersion)), groupCols, aggs)
-    val rollup = GraftTable.create(spark, location, s"${m.name}_rollup",
-      df.schema, groupCols,
-      hash = Seq(HashComponent(groupCols, buckets)),
-      data = Some(df))
-    rollup.setProperties(Map(
-      SrcLocKey -> Some(m.location),
-      GroupColsKey -> Some(groupCols.mkString(FieldSep)),
-      AggsKey -> Some(aggs.map { case (a, e) => a + FieldSep + e }
-        .mkString(RecSep)),
-      SrcVersionKey -> Some(srcVersion.toString)))
-    // marker re-write after the watermark commit: an expiry tick outlasting
-    // the build grace mid-build deregisters the marker; re-registering here
-    // restores the GC floor for the finished rollup
-    DerivedTables.register(source, location)
-    // a materialized view's whole point is transparent serving: arm the
-    // query rewrite by default (exact-only and freshness-gated, so it can
-    // never change results — see plans/RollupRewrite). Same ambient-wiring
-    // posture as graft.maintain.auto; opt out per session by setting
-    // graft.rollup.autoRewrite to anything but "true" (lenient parse — a
-    // value like "off" disables, it doesn't throw out of build).
-    graft.plans.RollupRewrite.autoArm(spark, rollup)
-    rollup
-  }
+      buckets: Int = 16): GraftTable =
+    DerivedTables.build(spark, source, location, SrcLocKey, SrcVersionKey) {
+      (m, scan) =>
+        require(groupCols.nonEmpty, "at least one group column required")
+        require(aggs.nonEmpty, "at least one aggregate required")
+        val pk = m.keyCols.toSet
+        groupCols.foreach(c => require(pk.contains(c),
+          s"rollup group column $c must be a primary-key column of ${m.name} " +
+            s"(PK: ${m.keyCols.mkString(", ")}) — CDC tombstones carry keys only"))
+        val badAlias = aggs.map(_._1).find(a =>
+          groupCols.contains(a) || a.contains(FieldSep) || a.contains(RecSep))
+        require(badAlias.isEmpty, s"bad aggregate alias: ${badAlias.getOrElse("")}")
+        val df = grouped(scan, groupCols, aggs)
+        DerivedTables.Shape(s"${m.name}_rollup", df.schema, groupCols,
+          Seq(HashComponent(groupCols, buckets)), df,
+          Map(GroupColsKey -> groupCols.mkString(FieldSep),
+            AggsKey -> aggs.map { case (a, e) => a + FieldSep + e }.mkString(RecSep)))
+    }
 
   /**
    * Incremental refresh through [[DerivedTables.refresh]] (the one refresh

@@ -298,7 +298,7 @@ object ScaleSmoke {
     }
     val g7 = roll.scan().filter(col("grp") === 7).collect().head
     require(g7.getLong(1) > 0, "refreshed group must carry its aggregate")
-    graft.plans.RollupRewrite.disable(spark, roll.location)
+    graft.plans.ServingRewrites.disarm(spark, roll.location)
     // Maintained SECONDARY INDEX at scale: the same O(changed) contract
     // for the refresh (round-14: stale entries derive as the before-image
     // from the source's watermark snapshot through a PK IN-list — the v0

@@ -87,10 +87,12 @@ object SecondaryIndex {
     build(spark, source, Seq(colName), location, 16)
 
   /**
-   * Build the index beside `source` on `colNames` (lead first). The index
-   * table is keyed `(lead, pk…)` (one entry per base row), hash-partitioned
-   * on the lead across `buckets`, with any trailing indexed columns carried
-   * as payload.
+   * Build the index beside `source` on `colNames` (lead first), through
+   * [[DerivedTables.build]] — the one build of every derived kind (marker,
+   * pinned source scan, properties in the first commit, serving armed).
+   * The index table is keyed `(lead, pk…)` (one entry per base row),
+   * hash-partitioned on the lead across `buckets`, with any trailing
+   * indexed columns carried as payload.
    *
    * `clustered = true` additionally VALUE-CLUSTERS the index files at
    * build time (z-order on (lead, pk-head) within each hash bucket): the
@@ -109,59 +111,18 @@ object SecondaryIndex {
     require(colNames.nonEmpty, "index needs at least one column")
     require(colNames.distinct == colNames,
       s"duplicate index columns in ${colNames.mkString(",")}")
-    // register the derived back-pointer FIRST (a marker file, no commit):
-    // from this moment the source's history GC floors its expiry at this
-    // index's watermark. A failed build leaves a dangling marker;
-    // expireVersions lazily clears markers whose table is gone or points
-    // elsewhere.
-    DerivedTables.register(source, location)
-    val m = source.meta
-    require(!m.hasAutoInc,
-      s"${m.name} has a hidden auto-increment key — non-unique-PK tables " +
-        "are not secondary-indexable (the CDC export does not carry the " +
-        "hidden id)")
-    colNames.foreach { n =>
-      val c = m.column(n)
-      require(!m.keyCols.contains(n),
-        s"$n is already a primary-key column — the base table's own " +
-          "layout serves it (S8)")
-      require(!Seq("array", "map", "struct").contains(c.dataType.typeName),
-        s"index column must be an atomic type, got ${c.dataType.catalogString}")
+    buildIndex(spark, source, location, buckets, clustered) { (m, scan) =>
+      colNames.foreach { n =>
+        val c = m.column(n)
+        require(!m.keyCols.contains(n),
+          s"$n is already a primary-key column — the base table's own " +
+            "layout serves it (S8)")
+        require(!Seq("array", "map", "struct").contains(c.dataType.typeName),
+          s"index column must be an atomic type, got ${c.dataType.catalogString}")
+      }
+      (s"${m.name}_${colNames.head}_sidx", colNames.head,
+        entries(scan, colNames, m.keyCols), Map(ColKey -> colNames.mkString(",")))
     }
-    val lead = colNames.head
-    val pkCols = m.keyCols
-    val srcVersion = m.version
-    // PIN the build scan to the recorded watermark: an unpinned scan reads
-    // whatever version is current at execution, and a commit landing
-    // between the meta read and the job would leave index rows one version
-    // ahead of the recorded watermark — refresh would then tombstone the
-    // wrong before-image (the build-vs-storm chaos in FuzzSpec exercises
-    // exactly this window)
-    val data = entries(source.scan(Some(srcVersion)), colNames, pkCols)
-    val keyCols = lead +: pkCols
-    val idx = GraftTable.create(spark, location, s"${m.name}_${lead}_sidx",
-      StructType(data.schema.fields.map(f =>
-        if (keyCols.contains(f.name)) f.copy(nullable = false) else f)),
-      keyCols,
-      hash = Seq(HashComponent(Seq(lead), buckets)),
-      data = Some(data))
-    idx.setProperties(Map(
-      SrcLocKey -> Some(m.location),
-      ColKey -> Some(colNames.mkString(",")),
-      SrcVersionKey -> Some(srcVersion.toString)))
-    // re-write the marker now that the watermark property exists: an
-    // aggressive expiry tick during a LONG build can pass the build grace
-    // and deregister the marker — the finished index would then be
-    // forever excluded from the GC floor, and one missed refresh would
-    // force the full rebuild the marker exists to prevent
-    DerivedTables.register(source, location)
-    if (clustered) clusterIndex(idx)
-    // transparent serving: arm the point-predicate query rewrite by
-    // default (exact-predicate-only and freshness-gated, so it can never
-    // change results — see plans/IndexRewrite). Opt out per session by
-    // setting graft.sindex.autoRewrite to anything but "true".
-    graft.plans.IndexRewrite.autoArm(spark, idx)
-    idx
   }
 
   /**
@@ -178,66 +139,67 @@ object SecondaryIndex {
    * `WHERE lower(c_name) = '…'` rides the index exactly like a plain
    * column predicate. The reference has no functional-index analog at
    * all; at 100 TB a case-folded or prefix-bucketed lookup is otherwise a
-   * corpus scan with expression evaluation.
+   * corpus scan with expression evaluation. Built through
+   * [[DerivedTables.build]] like [[build]].
    */
   def buildExpression(spark: SparkSession, source: GraftTable,
       exprSql: String, location: String, buckets: Int = 16,
-      clustered: Boolean = false): GraftTable = {
-    // marker first — same posture as build()
-    DerivedTables.register(source, location)
-    val m = source.meta
-    require(!m.hasAutoInc,
-      s"${m.name} has a hidden auto-increment key — non-unique-PK tables " +
-        "are not secondary-indexable")
-    val parsed = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
-      .parseExpression(exprSql)
-    val canon0 = graft.plans.IndexRewrite.canonScalar(parsed).getOrElse(
-      throw new IllegalArgumentException(
-        s"unsupported index expression '$exprSql' — supported: a column; " +
-          "lower/upper/trim/length/substring over one; year/month/day " +
-          "over a DATE column"))
-    val pkCols = m.keyCols
-    val srcVersion = m.version
-    // resolution against the source validates the referenced columns AND
-    // re-applies the language's TYPE guards on the resolved tree — the
-    // parsed expression carries no types, so e.g. year(<timestamp>) (a
-    // session-timezone read that must never serve) only refuses here:
-    // either the resolved function's DateType guard fails, or the
-    // analyzer inserted a Cast, which falls outside the language
-    val probe = source.scan(Some(srcVersion)).select(expr(canon0).as(ExprCol))
-    val resolvedExpr = probe.queryExecution.analyzed.expressions.collectFirst {
-      case a: org.apache.spark.sql.catalyst.expressions.Alias
-          if a.name == ExprCol => a.child
-    }.getOrElse(parsed)
-    val canon = graft.plans.IndexRewrite.canonScalar(resolvedExpr).getOrElse(
-      throw new IllegalArgumentException(
-        s"unsupported index expression '$exprSql' after resolution — " +
-          "date functions (year/month/day) admit DATE columns only " +
-          "(timestamps read through the session timezone and cannot " +
-          "serve soundly)"))
-    // pinned to the watermark version like build() (see there)
-    val data = source.scan(Some(srcVersion))
-      .select(expr(canon).as(ExprCol) +: pkCols.map(col): _*)
-      .filter(col(ExprCol).isNotNull)
-    val dt = data.schema(ExprCol).dataType
-    require(!Seq("array", "map", "struct").contains(dt.typeName),
-      s"index expression must be an atomic type, got ${dt.catalogString}")
-    val keyCols = ExprCol +: pkCols
-    val idx = GraftTable.create(spark, location, s"${m.name}_expr_sidx",
-      StructType(data.schema.fields.map(f =>
-        if (keyCols.contains(f.name)) f.copy(nullable = false) else f)),
-      keyCols,
-      hash = Seq(HashComponent(Seq(ExprCol), buckets)),
-      data = Some(data))
-    idx.setProperties(Map(
-      SrcLocKey -> Some(m.location),
-      ColKey -> Some(ExprCol),
-      ExprKey -> Some(canon),
-      SrcVersionKey -> Some(srcVersion.toString)))
-    // marker re-write after the watermark commit — same healing as build()
-    DerivedTables.register(source, location)
+      clustered: Boolean = false): GraftTable =
+    buildIndex(spark, source, location, buckets, clustered) { (m, scan) =>
+      val parsed = org.apache.spark.sql.catalyst.parser.CatalystSqlParser
+        .parseExpression(exprSql)
+      val canon0 = graft.plans.IndexRewrite.canonScalar(parsed).getOrElse(
+        throw new IllegalArgumentException(
+          s"unsupported index expression '$exprSql' — supported: a column; " +
+            "lower/upper/trim/length/substring over one; year/month/day " +
+            "over a DATE column"))
+      // resolution against the source validates the referenced columns AND
+      // re-applies the language's TYPE guards on the resolved tree — the
+      // parsed expression carries no types, so e.g. year(<timestamp>) (a
+      // session-timezone read that must never serve) only refuses here:
+      // either the resolved function's DateType guard fails, or the
+      // analyzer inserted a Cast, which falls outside the language
+      val probe = scan.select(expr(canon0).as(ExprCol))
+      val resolvedExpr = probe.queryExecution.analyzed.expressions.collectFirst {
+        case a: org.apache.spark.sql.catalyst.expressions.Alias
+            if a.name == ExprCol => a.child
+      }.getOrElse(parsed)
+      val canon = graft.plans.IndexRewrite.canonScalar(resolvedExpr).getOrElse(
+        throw new IllegalArgumentException(
+          s"unsupported index expression '$exprSql' after resolution — " +
+            "date functions (year/month/day) admit DATE columns only " +
+            "(timestamps read through the session timezone and cannot " +
+            "serve soundly)"))
+      val data = scan.select(expr(canon).as(ExprCol) +: m.keyCols.map(col): _*)
+        .filter(col(ExprCol).isNotNull)
+      val dt = data.schema(ExprCol).dataType
+      require(!Seq("array", "map", "struct").contains(dt.typeName),
+        s"index expression must be an atomic type, got ${dt.catalogString}")
+      (s"${m.name}_expr_sidx", ExprCol, data,
+        Map(ColKey -> ExprCol, ExprKey -> canon))
+    }
+
+  /** The build shared by plain and functional indexes, through
+    * [[DerivedTables.build]]: `define` names the index and its lead
+    * column, and derives the entries and definition properties from the
+    * pinned source scan. The index is keyed `(lead, pk…)` and
+    * hash-partitioned on the lead; `clustered` value-clusters it once
+    * built. */
+  private def buildIndex(spark: SparkSession, source: GraftTable,
+      location: String, buckets: Int, clustered: Boolean)(
+      define: (graft.catalog.TableMeta, DataFrame) =>
+        (String, String, DataFrame, Map[String, String])): GraftTable = {
+    val idx = DerivedTables.build(spark, source, location, SrcLocKey,
+        SrcVersionKey) { (m, scan) =>
+      require(!m.hasAutoInc,
+        s"${m.name} has a hidden auto-increment key — non-unique-PK tables " +
+          "are not secondary-indexable (the CDC export does not carry the " +
+          "hidden id)")
+      val (name, lead, data, props) = define(m, scan)
+      DerivedTables.Shape(name, data.schema, lead +: m.keyCols,
+        Seq(HashComponent(Seq(lead), buckets)), data, props)
+    }
     if (clustered) clusterIndex(idx)
-    graft.plans.IndexRewrite.autoArm(spark, idx)
     idx
   }
 
@@ -398,7 +360,7 @@ object SecondaryIndex {
     val hitArrays = GraftTable.withStaticPlan(spark, tiny = true) {
       Await.result(
       Future.traverse(probes.toList) { case (idx, probeFilters, indexV) =>
-        Future(graft.plans.IndexRewrite.guarded {
+        Future(graft.plans.ServingRewrites.guarded {
           val hits = idx.scanPruned(probeFilters, Some(indexV))
             .select(pkCols.map(col): _*)
             .limit(maxKeys + 1).collect()

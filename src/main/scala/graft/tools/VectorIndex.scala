@@ -73,7 +73,9 @@ object VectorIndex {
 
   /**
    * Build the index beside `source` (any engine table with an integral id
-   * column and an array vector column). Deterministic medoid centroids with
+   * column and an array vector column) through [[DerivedTables.build]],
+   * the one build of every derived kind (marker, pinned source scan,
+   * properties in the first commit). Deterministic medoid centroids with
    * the modulus derived from n — M = max(⌈√n⌉, ⌈n/4096⌉) keeps the cell
    * count (≈ n/M) sublinear and the centroid broadcast bounded at any
    * scale. Two engine tables are created: `location` (the index) and
@@ -81,67 +83,51 @@ object VectorIndex {
    */
   def build(spark: SparkSession, source: GraftTable, idCol: String,
       vecCol: String, location: String, buckets: Int = 16): GraftTable = {
-    // back-pointer first (a marker file, no commit): from this moment the
-    // source's history GC floors its expiry at this index's watermark —
-    // see DerivedTables.register
-    DerivedTables.register(source, location)
-    val m = source.meta
-    require(m.column(idCol).dataType == LongType,
-      s"vector index id column must be LONG, got ${m.column(idCol).dataType}")
-    val srcVersion = m.version
-    // pinned to the watermark version: an unpinned scan could read a later
-    // commit than the recorded watermark (see SecondaryIndex.build)
-    val vecs0 = normalized(source.scan(Some(srcVersion)), idCol, vecCol)
-    val n = vecs0.count()
-    require(n > 0, s"${m.name} has no vectors in $vecCol")
-    // The assignment below is the build's dominant term (~n·√n pair dots)
-    // and is CPU-bound, so its parallelism must come from the ROW COUNT,
-    // not from however many files the source happens to occupy — a small
-    // table written as one PK-sorted file would otherwise assign on one
-    // core. ~4096 vectors per task, capped at the session width.
-    val spreadParts = math.max(1L, math.min(
-      spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
-      math.ceil(n / 4096.0).toLong)).toInt
-    val vecs = vecs0.repartition(spreadParts)
-    val mMod = math.max(1L, math.max(
-      math.ceil(math.sqrt(n.toDouble)).toLong,
-      math.ceil(n / 4096.0).toLong))
-    val cents = vecs0.filter(col(idCol) % mMod === lit(5L % mMod))
-      .select(col(idCol).as("cell"), col("v").as("cv"))
     val centsLoc = location + "_cents"
-    GraftTable.create(spark, centsLoc, s"${m.name}_${vecCol}_cents",
-      StructType(Seq(
-        StructField("cell", LongType, nullable = false),
-        StructField("cv", ArrayType(DoubleType), nullable = true))),
-      Seq("cell"), data = Some(cents))
-    val idx =
-      try GraftTable.create(spark, location, s"${m.name}_${vecCol}_idx",
-        StructType(Seq(
-          StructField("cell", LongType, nullable = false),
-          StructField(idCol, LongType, nullable = false),
-          StructField("v", ArrayType(DoubleType), nullable = true),
-          StructField("code", BinaryType, nullable = true))),
-        Seq("cell", idCol),
-        hash = Seq(HashComponent(Seq("cell"), buckets)),
-        data = Some(assigned(vecs, idCol, cents)))
-      catch {
-        case e: Throwable =>
-          // don't strand a half-built index: the cents table is useless
-          // without its index
+    try DerivedTables.build(spark, source, location, SrcLocKey, SrcVersionKey) {
+      (m, scan) =>
+        require(m.column(idCol).dataType == LongType,
+          s"vector index id column must be LONG, got ${m.column(idCol).dataType}")
+        val vecs0 = normalized(scan, idCol, vecCol)
+        val n = vecs0.count()
+        require(n > 0, s"${m.name} has no vectors in $vecCol")
+        // The assignment below is the build's dominant term (~n·√n pair
+        // dots) and is CPU-bound, so its parallelism must come from the ROW
+        // COUNT, not from however many files the source happens to occupy
+        // — a small table written as one PK-sorted file would otherwise
+        // assign on one core. ~4096 vectors per task, capped at the session
+        // width.
+        val spreadParts = math.max(1L, math.min(
+          spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
+          math.ceil(n / 4096.0).toLong)).toInt
+        val mMod = math.max(1L, math.max(
+          math.ceil(math.sqrt(n.toDouble)).toLong,
+          math.ceil(n / 4096.0).toLong))
+        val cents = vecs0.filter(col(idCol) % mMod === lit(5L % mMod))
+          .select(col(idCol).as("cell"), col("v").as("cv"))
+        GraftTable.create(spark, centsLoc, s"${m.name}_${vecCol}_cents",
+          StructType(Seq(
+            StructField("cell", LongType, nullable = false),
+            StructField("cv", ArrayType(DoubleType), nullable = true))),
+          Seq("cell"), data = Some(cents))
+        DerivedTables.Shape(s"${m.name}_${vecCol}_idx",
+          StructType(Seq(
+            StructField("cell", LongType, nullable = false),
+            StructField(idCol, LongType, nullable = false),
+            StructField("v", ArrayType(DoubleType), nullable = true),
+            StructField("code", BinaryType, nullable = true))),
+          Seq("cell", idCol), Seq(HashComponent(Seq("cell"), buckets)),
+          assigned(vecs0.repartition(spreadParts), idCol, cents),
+          Map(IdColKey -> idCol, VecColKey -> vecCol, CentsLocKey -> centsLoc,
+            ModulusKey -> mMod.toString))
+    } catch {
+      case e: Throwable =>
+        // don't strand the centroids of an index that never got created:
+        // the cents table is useless without its index
+        if (!graft.catalog.TableMeta.exists(location))
           try GraftTable.drop(centsLoc) catch { case _: Throwable => () }
-          throw e
-      }
-    idx.setProperties(Map(
-      SrcLocKey -> Some(m.location),
-      IdColKey -> Some(idCol),
-      VecColKey -> Some(vecCol),
-      SrcVersionKey -> Some(srcVersion.toString),
-      CentsLocKey -> Some(centsLoc),
-      ModulusKey -> Some(mMod.toString)))
-    // marker re-write after the watermark commit — heals a marker an
-    // expiry tick deregistered mid-build (see SecondaryIndex.build)
-    DerivedTables.register(source, location)
-    idx
+        throw e
+    }
   }
 
   /** The index's frozen centroid frame (cell, cv). */

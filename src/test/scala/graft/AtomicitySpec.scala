@@ -117,6 +117,21 @@ class AtomicitySpec extends AnyFunSuite {
     assert(t.scan().collect().map(r => r.getLong(0) -> r.getString(1)).toMap == before)
   }
 
+  test("fsckRepair keeps a live writer's empty directories inside the grace window") {
+    val loc = tmp()
+    mkTable(loc)
+    // what an in-flight fileset write holds before its tasks commit
+    val live = java.nio.file.Paths.get(loc, "data", "c9_base_x",
+      "_temporary", "0", "_temporary")
+    Files.createDirectories(live)
+    assert(graft.tools.GraftTools.fsckRepair(loc).isEmpty)
+    assert(Files.isDirectory(live), "a fresh writer dir must survive the sweep")
+    Thread.sleep(5) // past the directories' mtimes for the zero grace below
+    graft.tools.GraftTools.fsckRepair(loc, graceMs = 0L)
+    assert(!Files.exists(live.getParent.getParent.getParent),
+      "past the grace window the empty tree is swept")
+  }
+
   test("changeStream: a delta fold re-emits nothing") {
     val loc = tmp()
     val t = mkTable(loc)

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.HashComponent
-import graft.plans.IndexRewrite
+import graft.plans.ServingRewrites
 import graft.table.GraftTable
 import graft.tools.SecondaryIndex
 
@@ -53,10 +53,10 @@ class IndexRewriteSpec extends AnyFunSuite {
     try {
       def q = t.scan().filter(col("name") === "name_7")
       assert(served(q, t), s"fresh index must serve:\n${q.queryExecution.optimizedPlan}")
-      IndexRewrite.disable(spark, idx.location)
+      ServingRewrites.disarm(spark, idx.location)
       val want = rows(q)
       assert(!served(q, t), "deregistered index must keep the scan plan")
-      IndexRewrite.enable(spark, idx)
+      ServingRewrites.arm(spark, idx)
       assert(rows(q) == want, "index-served rows must equal the scan's")
       assert(want.size == 1 && want.head(0) == 7L)
 
@@ -108,15 +108,15 @@ class IndexRewriteSpec extends AnyFunSuite {
         .filter(col("name") === "renamed_7")
       assert(served(qv2, t),
         s"a refreshed index must serve the V2 path on a dirty base:\n${qv2.queryExecution.optimizedPlan}")
-      IndexRewrite.disable(spark, idx.location)
+      ServingRewrites.disarm(spark, idx.location)
       val want2 = rows(qv2)
-      IndexRewrite.enable(spark, idx)
+      ServingRewrites.arm(spark, idx)
       assert(rows(qv2) == want2)
       assert(want2.size == 1 && want2.head(1) == "renamed_7")
       // the old value is gone on the index path too
       assert(rows(spark.table(s"gidxrw.`${wh.getName}`")
         .filter(col("name") === "name_7")).isEmpty)
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("OR across two indexed columns serves as a UNION of probes; exact; declines while any index is stale") {
@@ -135,10 +135,10 @@ class IndexRewriteSpec extends AnyFunSuite {
       assert(rows(q).map(_(0)) == Set(3L, 35L, 6L))
       // without the name index one disjunct has no probe — whole union
       // declines (a half-covered OR can never serve soundly)
-      IndexRewrite.disable(spark, ia.location)
+      ServingRewrites.disarm(spark, ia.location)
       assert(!served(q, t),
         "an OR with an uncovered disjunct must keep the scan")
-      IndexRewrite.enable(spark, ia)
+      ServingRewrites.arm(spark, ia)
 
       // a point disjunct unions with a RANGE disjunct
       def qr = t.scan().filter(col("name") === "name_6" ||
@@ -182,8 +182,8 @@ class IndexRewriteSpec extends AnyFunSuite {
       // id 6 renamed AND regrouped: neither disjunct matches it now
       assert(rows(qv2).map(_(0)) == Set(3L, 35L))
     } finally {
-      IndexRewrite.disable(spark, ia.location)
-      IndexRewrite.disable(spark, ib.location)
+      ServingRewrites.disarm(spark, ia.location)
+      ServingRewrites.disarm(spark, ib.location)
     }
   }
 
@@ -250,7 +250,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       // stale declines like every serve
       t.upsert(Seq((5L, 999L, "grp_1", "x_5")).toDF("id", "v", "g", "other"))
       assert(!served(q, t), "a stale index must never serve a filtered top-k")
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("index join: an equi-join with a broadcast-small dim probes the index instead of scanning the fact") {
@@ -321,7 +321,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       // stale declines like every serve
       t.upsert(Seq((7L, "renamed_7", 0L)).toDF("id", "name", "v"))
       assert(!served(q, t), "a stale index must never serve a join probe")
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("every serve kind declines through one path: stale and over-bound probes are counted") {
@@ -388,8 +388,8 @@ class IndexRewriteSpec extends AnyFunSuite {
           s"a stale $kind serve must record stale: $after")
       }
     } finally {
-      IndexRewrite.disable(spark, iv.location)
-      IndexRewrite.disable(spark, ig.location)
+      ServingRewrites.disarm(spark, iv.location)
+      ServingRewrites.disarm(spark, ig.location)
     }
   }
 
@@ -451,8 +451,8 @@ class IndexRewriteSpec extends AnyFunSuite {
         e2.getMessage.toLowerCase.contains("cannot find the index"),
         e2.getMessage)
     } finally {
-      IndexRewrite.disable(spark, idxLoc)
-      IndexRewrite.disable(spark, s"$wh/.sidx/t_widx")
+      ServingRewrites.disarm(spark, idxLoc)
+      ServingRewrites.disarm(spark, s"$wh/.sidx/t_widx")
     }
   }
 
@@ -469,7 +469,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       assert(rows(q).size == 40)
     } finally {
       spark.conf.unset("graft.sindex.rewriteMaxKeys")
-      IndexRewrite.disable(spark, idx.location)
+      ServingRewrites.disarm(spark, idx.location)
     }
   }
 
@@ -486,7 +486,7 @@ class IndexRewriteSpec extends AnyFunSuite {
         q.queryExecution.optimizedPlan, baseFiles)
       assert(readFiles.nonEmpty && readFiles.size * 2 <= baseFiles.size,
         s"base read must prune PK buckets: ${readFiles.size} of ${baseFiles.size}")
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("a non-indexed equality BEFORE the indexed one still serves (any armed conjunct, not the first servable)") {
@@ -501,7 +501,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       assert(rows(q).map(_(0)) == Set(8L)) // 8 % 5 == 3
       // and the residual still filters: same shape, contradicting residual
       assert(rows(t.scan().filter(col("v") === 4 && col("name") === "name_8")).isEmpty)
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("range and prefix predicates on the indexed column serve through the index") {
@@ -533,7 +533,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       t.upsert(Seq((61L, "renamed_61", 0L)).toDF("id", "name", "v"))
       assert(!served(qr, t), "a STALE index must never serve a range")
       assert(SecondaryIndex.refresh(spark, idx))
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("an over-long IN-list keeps the scan plan and never plans a probe job") {
@@ -579,7 +579,7 @@ class IndexRewriteSpec extends AnyFunSuite {
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("graft.sindex.rewriteMaxKeys")
-      IndexRewrite.disable(spark, idx.location)
+      ServingRewrites.disarm(spark, idx.location)
     }
   }
 
@@ -626,7 +626,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       assert(rows(q4).map(_(0)) == Set(8L))
       assert(rows(t.scan().filter(
         col("name") === "name_8" && col("grp") === "grp_0")).isEmpty)
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("ORDER BY indexed column LIMIT k serves through the index; nulls-first, short-index, and big-k decline") {
@@ -656,7 +656,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       assert(served(qd, t))
       assert(qd.collect().map(_.getLong(0)).toSeq == Seq(8L, 7L, 64L),
         "the renamed row must leave the top-k")
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("top-k never serves past the index's non-null entries (null rows could pad the true answer)") {
@@ -679,7 +679,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       assert(baseFilesRead(q2, t) == 0 && readsIndex(q2, idx),
         s"a fully-covered top-k must be index-only:\n${q2.queryExecution.optimizedPlan}")
       assert(q2.collect().map(_.getLong(0)).toSeq == Seq(4L, 2L))
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("functional index: lower(col) predicates serve, refresh re-derives, unsupported exprs refuse") {
@@ -720,7 +720,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       intercept[IllegalArgumentException] {
         SecondaryIndex.buildExpression(spark, t, "name || 'x'", tmp())
       }
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("an index built in one session serves in a NEW session with zero explicit enables") {
@@ -739,7 +739,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       GraftTable.load(s3, idx.location)
       assert(!served(GraftTable.load(s3, t.location).scan()
         .filter(col("name") === "name_5"), t))
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("default-ASC top-k serves when the sort key is non-nullable; nullable keeps the scan") {
@@ -770,8 +770,8 @@ class IndexRewriteSpec extends AnyFunSuite {
       def qe = tn.scan().orderBy(col("name").asc_nulls_last).limit(3)
       assert(served(qe, tn), "explicit NULLS LAST serves regardless of nullability")
     } finally {
-      IndexRewrite.disable(spark, idxNn.location)
-      IndexRewrite.disable(spark, idxN.location)
+      ServingRewrites.disarm(spark, idxNn.location)
+      ServingRewrites.disarm(spark, idxN.location)
     }
   }
 
@@ -812,7 +812,7 @@ class IndexRewriteSpec extends AnyFunSuite {
           "an over-bound tie set must keep the scan plan")
         assert(qb.collect().map(_.getLong(0)).toSeq == Seq(3L, 7L, 11L))
       } finally spark.conf.unset("graft.sindex.rewriteMaxKeys")
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   /** Base files the plan reads (0 = no base relation at all). */
@@ -914,12 +914,12 @@ class IndexRewriteSpec extends AnyFunSuite {
       assert(covered(qv2),
         s"a refreshed index must cover through V2 on a dirty base:\n${qv2.queryExecution.optimizedPlan}")
       assert(qv2.collect().head.getLong(0) == 8L)
-    } finally IndexRewrite.disable(spark, idx.location)
+    } finally ServingRewrites.disarm(spark, idx.location)
   }
 
   test("covering serve: a functional index covers PK-only outputs (count under the expression predicate)") {
     val (t, nameIdx) = mk() // plain index on name — disable it, test the functional one
-    IndexRewrite.disable(spark, nameIdx.location)
+    ServingRewrites.disarm(spark, nameIdx.location)
     val fidx = SecondaryIndex.buildExpression(spark, t, "length(name)", tmp(),
       buckets = 8)
     def coveredF(df: DataFrame): Boolean =
@@ -940,7 +940,7 @@ class IndexRewriteSpec extends AnyFunSuite {
       assert(!coveredF(qn),
         "the expression's source column is NOT covered — base fetch required")
       assert(rows(qn).size == 9)
-    } finally IndexRewrite.disable(spark, fidx.location)
+    } finally ServingRewrites.disarm(spark, fidx.location)
   }
 
   test("date-family functional index: year(date) serves point/IN/range; timestamps refuse") {
@@ -981,7 +981,7 @@ class IndexRewriteSpec extends AnyFunSuite {
         assert(baseFilesRead(qd, t) == 0 && readsIndex(qd, didx),
           "dayofmonth() must canonicalize to the day() index")
         assert(qd.collect().head.getLong(0) == 96L)
-      } finally IndexRewrite.disable(spark, didx.location)
+      } finally ServingRewrites.disarm(spark, didx.location)
       // year over a TIMESTAMP is session-timezone-dependent — refuse
       val e = intercept[IllegalArgumentException] {
         SecondaryIndex.buildExpression(spark, t, "year(ts)", tmp())
@@ -991,6 +991,6 @@ class IndexRewriteSpec extends AnyFunSuite {
       // year(date) index (different canon — guards on the resolved type)
       assert(!coveredF(t.scan().filter(year(col("ts")) === 1995)
         .agg(count(lit(1)).as("n"))))
-    } finally IndexRewrite.disable(spark, fidx.location)
+    } finally ServingRewrites.disarm(spark, fidx.location)
   }
 }

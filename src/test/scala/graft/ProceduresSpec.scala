@@ -160,7 +160,7 @@ class ProceduresSpec extends AnyFunSuite {
     assert(r.getBoolean(0) && r.getString(1).endsWith("rwsrc"))
     assert(servesRollup, "armed + fresh rollup must serve the SQL GROUP BY")
     val got = q.collect().map(_.toSeq).toSet
-    graft.plans.RollupRewrite.disable(spark, loc)
+    graft.plans.ServingRewrites.disarm(spark, loc)
     assert(q.collect().map(_.toSeq).toSet == got,
       "served result must equal direct compute")
     // rollup_status: fresh now; stale after a mutation; fresh after refresh
@@ -261,7 +261,7 @@ class ProceduresSpec extends AnyFunSuite {
       spark.table(s"$cat.svsrc").filter(col("n") === "renamed").collect()
       val s3 = stats()
       assert(s3(idxLoc)._1 > before, s3.toString)
-    } finally graft.plans.IndexRewrite.disable(spark, idx.location)
+    } finally graft.plans.ServingRewrites.disarm(spark, idx.location)
   }
 
   test("SHOW PROCEDURES lists the surface; DESCRIBE PROCEDURE documents it") {

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.HashComponent
-import graft.plans.RollupRewrite
+import graft.plans.ServingRewrites
 import graft.table.GraftTable
 import graft.tools.MaterializedRollup
 
@@ -37,7 +37,7 @@ class RollupRewriteSpec extends AnyFunSuite {
     val rollup = MaterializedRollup.build(spark, t, Seq("g"),
       Seq("n" -> "count(*)", "sv" -> "sum(v)", "mx" -> "max(k)"),
       s"$wh/roll", buckets = 2)
-    RollupRewrite.enable(spark, rollup)
+    ServingRewrites.arm(spark, rollup)
     try {
       def q = t.scan().groupBy("g")
         .agg(count(lit(1)).as("n"), sum("v").as("sv"), max("k").as("mx"))
@@ -46,10 +46,10 @@ class RollupRewriteSpec extends AnyFunSuite {
         s"fresh rollup must serve:\n${q.queryExecution.optimizedPlan}")
       // ... and returns exactly what the base computes (deregister to get
       // the ground truth through the ordinary plan)
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val want = rows(q)
       assert(!readsRollup(q, rollup.location))
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(q) == want, "rewritten result must equal direct compute")
 
       // 2. a subset of the aggregates + reordered grouping still serves
@@ -64,10 +64,10 @@ class RollupRewriteSpec extends AnyFunSuite {
         max("k").as("mx"))
       assert(readsRollup(qg, rollup.location),
         s"global aggregate must re-aggregate the rollup:\n${qg.queryExecution.optimizedPlan}")
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val wantG = rows(qg)
       assert(!readsRollup(qg, rollup.location))
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(qg) == wantG,
         "re-aggregated result must equal direct compute")
 
@@ -77,9 +77,9 @@ class RollupRewriteSpec extends AnyFunSuite {
         .agg(sum("v").as("sv"))
       assert(readsRollup(qf, rollup.location),
         s"group-column filter must rebase and serve:\n${qf.queryExecution.optimizedPlan}")
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val wantF = rows(qf)
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(qf) == wantF, "filtered rewrite must equal direct compute")
 
       // 3. shapes that MUST NOT rewrite: a filter on a NON-group column, a
@@ -116,7 +116,7 @@ class RollupRewriteSpec extends AnyFunSuite {
         "clean again + refreshed: the rollup must serve")
       assert(rows(q) == afterMut,
         "the refreshed rollup must serve the post-mutation truth")
-    } finally RollupRewrite.disable(spark, rollup.location)
+    } finally ServingRewrites.disarm(spark, rollup.location)
   }
 
   test("avg derives from sum+count; count(col) skips nulls; HAVING rides above the serve") {
@@ -132,15 +132,15 @@ class RollupRewriteSpec extends AnyFunSuite {
     val rollup = MaterializedRollup.build(spark, t, Seq("g"),
       Seq("n" -> "count(*)", "sx" -> "sum(x)", "cx" -> "count(x)"),
       s"$wh/roll", buckets = 2)
-    RollupRewrite.enable(spark, rollup)
+    ServingRewrites.arm(spark, rollup)
     try {
       // count(col) serves on exact grouping AND folds by SUM on subset
       def qc = t.scan().groupBy("g").agg(count(col("x")).as("cx"))
       assert(readsRollup(qc, rollup.location),
         s"count(col) must serve:\n${qc.queryExecution.optimizedPlan}")
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val wantC = rows(qc)
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(qc) == wantC)
 
       // avg on exact grouping: sum(x)/count(x) off the rollup — the
@@ -148,9 +148,9 @@ class RollupRewriteSpec extends AnyFunSuite {
       def qa = t.scan().groupBy("g").agg(avg(col("x")).as("ax"))
       assert(readsRollup(qa, rollup.location),
         s"avg must derive from sum+count:\n${qa.queryExecution.optimizedPlan}")
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val wantA = rows(qa)
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(qa) == wantA, "derived avg must equal direct compute")
       assert(wantA.exists(r => r(1) == null), "the all-null group is the null-avg case")
 
@@ -158,9 +158,9 @@ class RollupRewriteSpec extends AnyFunSuite {
       def qg = t.scan().agg(avg(col("x")).as("ax"))
       assert(readsRollup(qg, rollup.location),
         s"global avg must re-derive:\n${qg.queryExecution.optimizedPlan}")
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val wantP = rows(qg)
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(qg) == wantP)
 
       // HAVING is a Filter ABOVE the aggregate — it applies over the
@@ -169,21 +169,21 @@ class RollupRewriteSpec extends AnyFunSuite {
         .filter(col("n") > 35)
       assert(readsRollup(qh, rollup.location),
         s"HAVING must ride above the serve:\n${qh.queryExecution.optimizedPlan}")
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val wantH = rows(qh)
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(qh) == wantH && wantH.nonEmpty)
 
       // a rollup WITHOUT count(x) cannot derive avg — declines, stays exact
       val r2 = MaterializedRollup.build(spark, t, Seq("g"),
         Seq("sx" -> "sum(x)"), s"$wh/roll2", buckets = 2)
-      RollupRewrite.disable(spark, rollup.location)
-      RollupRewrite.enable(spark, r2)
+      ServingRewrites.disarm(spark, rollup.location)
+      ServingRewrites.arm(spark, r2)
       try assert(!readsRollup(qa, r2.location),
         "avg must NOT serve without a count(x) column")
-      finally RollupRewrite.disable(spark, r2.location)
+      finally ServingRewrites.disarm(spark, r2.location)
     } finally {
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
     }
   }
 
@@ -206,15 +206,15 @@ class RollupRewriteSpec extends AnyFunSuite {
         s"GROUP BY g must serve from the g rollup:\n${qg.queryExecution.optimizedPlan}")
       assert(readsRollup(qh, byH.location) && !readsRollup(qh, byG.location),
         s"GROUP BY h must serve from the h rollup:\n${qh.queryExecution.optimizedPlan}")
-      RollupRewrite.disable(spark, byG.location)
-      RollupRewrite.disable(spark, byH.location)
+      ServingRewrites.disarm(spark, byG.location)
+      ServingRewrites.disarm(spark, byH.location)
       val (wg, wh2) = (rows(qg), rows(qh))
-      RollupRewrite.enable(spark, byG)
-      RollupRewrite.enable(spark, byH)
+      ServingRewrites.arm(spark, byG)
+      ServingRewrites.arm(spark, byH)
       assert(rows(qg) == wg && rows(qh) == wh2)
     } finally {
-      RollupRewrite.disable(spark, byG.location)
-      RollupRewrite.disable(spark, byH.location)
+      ServingRewrites.disarm(spark, byG.location)
+      ServingRewrites.disarm(spark, byH.location)
     }
   }
 
@@ -231,9 +231,9 @@ class RollupRewriteSpec extends AnyFunSuite {
       def q = t.scan().groupBy("g").agg(countDistinct(col("v")).as("nd"))
       assert(readsRollup(q, rollup.location),
         s"exact grouping must serve the stored distinct count:\n${q.queryExecution.optimizedPlan}")
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val want = rows(q)
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(q) == want)
       // a GLOBAL count(distinct) must NOT fold from per-group distincts —
       // the groups' value sets overlap
@@ -244,7 +244,7 @@ class RollupRewriteSpec extends AnyFunSuite {
       def qn = t.scan().agg(count(lit(1)).as("n"))
       assert(readsRollup(qn, rollup.location))
       assert(qn.collect().head.getLong(0) == 300L)
-    } finally RollupRewrite.disable(spark, rollup.location)
+    } finally ServingRewrites.disarm(spark, rollup.location)
   }
 
   test("global aggregate over an EMPTY base serves count 0 through the rollup, not sum's NULL") {
@@ -270,7 +270,7 @@ class RollupRewriteSpec extends AnyFunSuite {
       val r = q.collect().head
       assert(r.getLong(0) == 0L, s"count over empty must be 0: $r")
       assert(r.isNullAt(1), s"sum over empty must be NULL: $r")
-    } finally RollupRewrite.disable(spark, rollup.location)
+    } finally ServingRewrites.disarm(spark, rollup.location)
   }
 
   test("V2 catalog SQL GROUP BY rides the rewrite too") {
@@ -280,7 +280,7 @@ class RollupRewriteSpec extends AnyFunSuite {
       Seq("g", "k"), Seq(HashComponent(Seq("k"), 2)), data = Some(df))
     val rollup = MaterializedRollup.build(spark, t, Seq("g"),
       Seq("n" -> "count(*)", "sv" -> "sum(v)"), s"$wh/r2", buckets = 2)
-    RollupRewrite.enable(spark, rollup)
+    ServingRewrites.arm(spark, rollup)
     try {
       spark.conf.set("spark.sql.catalog.gmvrw",
         classOf[graft.sources.v2.GraftCatalog].getName)
@@ -289,9 +289,9 @@ class RollupRewriteSpec extends AnyFunSuite {
         "SELECT g, count(*) AS n, sum(v) AS sv FROM gmvrw.b2 GROUP BY g")
       assert(readsRollup(q, rollup.location),
         s"V2 aggregate must serve from the rollup:\n${q.queryExecution.optimizedPlan}")
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val want = rows(q)
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(q) == want)
       // the V2 relation path serves a DIRTY base too: the rewrite fires on
       // the catalog relation before any merge-on-read planning, so a
@@ -301,12 +301,12 @@ class RollupRewriteSpec extends AnyFunSuite {
       assert(t.meta.deltaFiles.nonEmpty, "the base must be dirty here")
       assert(readsRollup(q, rollup.location),
         "a refreshed rollup must serve a dirty base through the V2 relation")
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val want2 = rows(q)
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(q) == want2,
         "the rollup must serve the post-mutation truth on the V2 path")
-    } finally RollupRewrite.disable(spark, rollup.location)
+    } finally ServingRewrites.disarm(spark, rollup.location)
   }
 
   test("time travel never serves: VERSION AS OF and stale V2 handles decline the rewrite") {
@@ -341,7 +341,7 @@ class RollupRewriteSpec extends AnyFunSuite {
       assert(!readsRollup(pinned, rollup.location),
         "a V2 handle pinned before the commit must not serve current rollup data")
       assert(rows(pinned) == wantOld)
-    } finally RollupRewrite.disable(spark, rollup.location)
+    } finally ServingRewrites.disarm(spark, rollup.location)
   }
 
   test("a rollup built in one session serves in a NEW session with zero explicit enables") {
@@ -362,9 +362,9 @@ class RollupRewriteSpec extends AnyFunSuite {
         "SELECT g, count(*) AS n, sum(v) AS sv FROM gmvarm.armb GROUP BY g")
       assert(readsRollup(q2, rollup.location),
         s"catalog open must arm persisted rollups:\n${q2.queryExecution.optimizedPlan}")
-      RollupRewrite.disable(s2, rollup.location)
+      ServingRewrites.disarm(s2, rollup.location)
       val want = rows(q2)
-      RollupRewrite.enable(s2, rollup)
+      ServingRewrites.arm(s2, rollup)
       assert(rows(q2) == want)
       // face 2: merely LOADING the rollup in another fresh session arms it
       // (a refresh call, a maintenance sweep, or a direct read all load)
@@ -384,7 +384,7 @@ class RollupRewriteSpec extends AnyFunSuite {
         .agg(count(lit(1)).as("n"), sum("v").as("sv"))
       assert(!readsRollup(q4, rollup.location),
         "autoRewrite=off must keep the session unarmed")
-    } finally RollupRewrite.disable(spark, rollup.location)
+    } finally ServingRewrites.disarm(spark, rollup.location)
   }
 
   test("a commit landing between plan time and execution serves the PLAN-TIME snapshot") {
@@ -418,11 +418,11 @@ class RollupRewriteSpec extends AnyFunSuite {
       def qf = spark.sql(
         "SELECT g, count(*) AS n, sum(v) AS sv FROM gmvsnap.snapb GROUP BY g")
       assert(readsRollup(qf, rollup.location))
-      RollupRewrite.disable(spark, rollup.location)
+      ServingRewrites.disarm(spark, rollup.location)
       val wantNew = rows(qf)
-      RollupRewrite.enable(spark, rollup)
+      ServingRewrites.arm(spark, rollup)
       assert(rows(qf) == wantNew)
       assert(wantNew != planTime, "the mutation must be visible to fresh queries")
-    } finally RollupRewrite.disable(spark, rollup.location)
+    } finally ServingRewrites.disarm(spark, rollup.location)
   }
 }

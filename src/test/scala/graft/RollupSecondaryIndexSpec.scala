@@ -266,7 +266,7 @@ class RollupSecondaryIndexSpec extends AnyFunSuite {
           org.apache.spark.sql.sources.LessThanOrEqual("v", 140L)),
         assertPrune = true).collect()
       assert(hits.length == 41, s"BETWEEN must find all 41 rows: ${hits.length}")
-    } finally graft.plans.IndexRewrite.disable(spark, idx.location)
+    } finally graft.plans.ServingRewrites.disarm(spark, idx.location)
   }
 
   test("maybeCluster: the scheduler policy clusters a hash-layout index once, then never again") {
@@ -304,8 +304,8 @@ class RollupSecondaryIndexSpec extends AnyFunSuite {
           assert(idx2.meta.clusterBy.nonEmpty,
             "a maintenance tick must value-cluster a hash-layout index")
         } finally graft.table.MaintenanceScheduler.unschedule(idx2.location)
-      } finally graft.plans.IndexRewrite.disable(spark, idx2.location)
-    } finally graft.plans.IndexRewrite.disable(spark, idx.location)
+      } finally graft.plans.ServingRewrites.disarm(spark, idx2.location)
+    } finally graft.plans.ServingRewrites.disarm(spark, idx.location)
   }
 
   test("topK walks the extreme slabs of a clustered index (zone cut), exact either layout") {
@@ -332,6 +332,6 @@ class RollupSecondaryIndexSpec extends AnyFunSuite {
       val expAsc = t.scan().orderBy(col("v").asc).limit(3).collect()
         .map(_.getLong(0)).toSet
       assert(gotAsc == expAsc)
-    } finally graft.plans.IndexRewrite.disable(spark, idx.location)
+    } finally graft.plans.ServingRewrites.disarm(spark, idx.location)
   }
 }
