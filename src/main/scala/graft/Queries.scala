@@ -1546,8 +1546,8 @@ object Queries {
       // the base is answered from the maintained rollup — at 100 TB this
       // turns every dashboard refresh from a full-corpus shuffle into a
       // groups-sized read. In-query asserts pin the contract: (1) a fresh
-      // rollup serves BOTH scan shapes (the DSv1 clean-snapshot file scan
-      // and the V2 catalog relation); (2) the instant the base mutates the
+      // rollup serves BOTH read faces (the engine's `scan()` and the SQL
+      // catalog relation); (2) the instant the base mutates the
       // rewrite declines — a stale rollup NEVER serves; (3) after an
       // incremental refresh the V2 path serves again even though the base
       // is still delta-dirty (the rewrite fires on the catalog relation
@@ -1578,7 +1578,7 @@ object Queries {
         def v2 = agg(s.table(s"gq70.`$name`"))
         if (!servedFrom(rollup.location, agg(t.scan())))
           throw new IllegalStateException(
-            "fresh rollup must serve the DSv1 clean-snapshot aggregate")
+            "fresh rollup must serve the scan() aggregate")
         if (!servedFrom(rollup.location, v2))
           throw new IllegalStateException(
             "fresh rollup must serve the V2 catalog aggregate")
@@ -1696,7 +1696,7 @@ object Queries {
         def v2 = agg(s.table(s"gq82.`$name`"))
         if (!servedFrom(rollup.location, agg(t.scan())))
           throw new IllegalStateException(
-            "fresh rollup must derive avg on the DSv1 aggregate")
+            "fresh rollup must derive avg on the scan() aggregate")
         if (!servedFrom(rollup.location, v2))
           throw new IllegalStateException(
             "fresh rollup must derive avg on the V2 aggregate")

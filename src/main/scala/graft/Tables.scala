@@ -126,7 +126,7 @@ object Tables {
     Files.createDirectories(Paths.get(loc))
     // Materialize a hash/range-partitioned base (create, not zero-copy
     // register): partition coordinates in the fileset are what let
-    // scanIndexed / the write-path presence pruning skip whole files, so
+    // the scan / the write-path presence pruning skip whole files, so
     // every declared query exercises the pruned read path — the bulk-load
     // analog, paid once per (sfDir, table) and reused across JVMs.
     // Zero-copy registration remains the API for external parquet handoffs
@@ -186,9 +186,9 @@ object Tables {
     } else rawRead(spark, s"$sfDir/$table.parquet")
   }
 
-  /** Scan through the engine's Catalyst-integrated read path: filters the
-    * optimizer pushes down prune hash-bucket/range files from table metadata
-    * before any file opens (GraftFileIndex). */
+  /** Scan through the engine's read path: filters the optimizer pushes
+    * down prune hash-bucket/range files from table metadata before any
+    * file opens (the V2 scan). */
   def scan(spark: SparkSession, sfDir: String, table: String): DataFrame =
-    readonly(spark, sfDir, table).scanIndexed()
+    readonly(spark, sfDir, table).scan()
 }

@@ -450,9 +450,9 @@ object IndexRewrite extends Rule[LogicalPlan] {
             // set: V2 column pruning folds the projection INTO the
             // relation (a covered `SELECT a, b WHERE …` optimizes to a
             // bare Filter over a pruned relation, no Project parent for
-            // the cases above to see), and DSv1 pruning can land the same
-            // shape — when f.output itself is index-carried, answer
-            // index-only and skip the key probe. The conjunct parse and
+            // the cases above to see) — when f.output itself is
+            // index-carried, answer index-only and skip the key probe.
+            // The conjunct parse and
             // the filesystem-statting scan-root match above run ONCE and
             // feed both attempts.
             coveringFor(spark, indexes, maxKeys, conjuncts, usable,

@@ -7,11 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.aggregate._
 import org.apache.spark.sql.catalyst.parser.CatalystSqlParser
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.LogicalRelation
-import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
 
 import graft.catalog.TableMeta
-import graft.sources.GraftRelation
 import graft.table.GraftTable
 import graft.tools.MaterializedRollup
 
@@ -28,9 +25,9 @@ import graft.tools.MaterializedRollup
  * Spark-first shape: a `Rule[LogicalPlan]` appended to
  * `spark.experimental.extraOptimizations` (runtime-injectable; no session
  * rebuild), firing on `Aggregate` nodes whose child is a bare scan of a
- * registered base (DSv1 `GraftRelation` at current version, or the V2
- * catalog relation before/after scan pushdown). A `WHERE` under the
- * aggregate rewrites too when it references GROUP COLUMNS only — such a
+ * registered base (the V2 relation over its whole current snapshot,
+ * before or after scan pushdown — SQL or any `GraftTable` read face). A
+ * `WHERE` under the aggregate rewrites too when it references GROUP COLUMNS only — such a
  * predicate commutes with grouping, so it rebases onto the rollup exactly
  * (any other filter, or a non-trivial projection, disqualifies). The
  * rewrite is strictly conservative:
@@ -131,9 +128,9 @@ object RollupRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  // scan-root recognition (current-version DSv1 / clean file scan / pinned
-  // V2 handle — time travel and stale handles yield None) lives in the
-  // shared [[ScanRoots]]; IndexRewrite consumes the identical rules. The
+  // scan-root recognition (the V2 relation over the whole current
+  // snapshot — time travel, stale handles and restricted manifests yield
+  // None) lives in the shared [[ScanRoots]]; IndexRewrite consumes the identical rules. The
   // returned version is what the MATCH observed — freshness pins to it.
   private def baseLocation(plan: LogicalPlan): Option[(String, Long)] =
     ScanRoots.baseLocation(plan)

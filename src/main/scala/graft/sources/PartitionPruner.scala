@@ -76,19 +76,15 @@ object PartitionPruner {
     *    frame unconditionally). A proven all-null column prunes under any
     *    value predicate with no bounds at all — null satisfies none.
     *
-    * Conservative throughout: unknown columns, rename-swapped names
-    * (filters carry LOGICAL names on the V2 and `scanPruned` paths —
-    * `scanPruned` then applies the same filters to rows — but PHYSICAL
-    * names through GraftFileIndex; refuse any name a second column could
-    * claim physically), absent bounds/null counts, un-encodable values,
-    * and unsupported shapes all keep the file. */
+    * Filters carry LOGICAL column names. Conservative throughout:
+    * unknown columns, absent bounds/null counts, un-encodable values, and
+    * unsupported shapes all keep the file. */
   private def compileFileTests(m: TableMeta,
       filters: Seq[Filter]): Seq[DataFileMeta => Boolean] = {
     val leadKey = m.keyCols.headOption
     val keep: DataFileMeta => Boolean = _ => true
     def colOf(name: String): Option[graft.catalog.ColumnMeta] =
-      m.columns.find(_.name == name).filterNot(cm =>
-        m.columns.exists(o => o.physName == name && o.id != cm.id))
+      m.columns.find(_.name == name)
     // Compile a value predicate on column c: `mk` runs ONCE, receiving the
     // column and its literal encoder, and yields the encoded-interval test
     // (None = un-encodable/unsupported → bounds prune nothing, but the

@@ -13,7 +13,7 @@ import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.catalog.TableMeta
@@ -34,13 +34,13 @@ import graft.table.GraftTable
  * `spark.table("<name>.<table>")`. Joins additionally need
  * `spark.sql.sources.v2.bucketing.enabled=true`.
  *
- * Scope: BATCH_READ over the base fileset, with a per-partition
- * merge-on-read delta overlay (MorOverlay.scala) for ANY layout — hash
- * (per-range bucket-count overrides included), range-only, or
- * unpartitioned — whenever the delta set fits the broadcast bound;
- * past the bound (or under a pending range-drop mask) `compact()` first
- * (compactForV2 is the convenience gate). Writes go through the engine
- * API or the DSv1 "graft" format.
+ * Scope: BATCH_READ over any manifest the engine writes — every schema
+ * generation (renamed, widened and defaulted columns remap per file),
+ * pending range drops (masked), and a per-partition merge-on-read delta
+ * overlay (MorOverlay.scala) for ANY layout and delta size: broadcast
+ * under the bound, attached per tablet, or spilled per route past it.
+ * The same relation serves every `GraftTable` read face. Writes go
+ * through the engine API or the DSv1 "graft" format.
  */
 class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatalog
     with org.apache.spark.sql.connector.catalog.StagingTableCatalog
@@ -595,9 +595,6 @@ class GraftBucketReducer(n: Int) extends Reducer[Integer, Integer] with Serializ
   override def reduce(bucket: Integer): Integer = ((bucket % n) + n) % n
 }
 
-/** Read-only V2 table over a graft snapshot: the compacted base fileset,
-  * plus a merge-on-read delta overlay (MorOverlay.scala) when the layout
-  * is broadcast-sized (per-split routing works on any layout). */
 /** A staged CTAS/RTAS table (StagingTableCatalog): a fully real engine
   * table living under `.staging/`, published to its identity on commit by
   * the ALTER-RENAME machinery (atomic move + per-version path relocation).
@@ -694,7 +691,12 @@ class StagedGraftTable(inner: GraftV2Table, stagedLoc: String,
   override def abortStagedChanges(): Unit = GraftTable.drop(stagedLoc)
 }
 
-class GraftV2Table(meta: TableMeta) extends Table with SupportsRead
+/** A graft table as a DataSource V2 table: the SQL catalog's handle and
+  * the one relation behind every `GraftTable` read face. `meta` is the
+  * manifest the scan reads — a catalog snapshot, or a read face's copy
+  * restricted to the files it may read; `hidden` exposes the hidden
+  * auto-increment key column of a non-unique-PK table (`scanWithHidden`). */
+class GraftV2Table(meta: TableMeta, hidden: Boolean = false) extends Table with SupportsRead
     with SupportsWrite with SupportsDelete with TruncatableTable
     with SupportsRowLevelOperations with SupportsPartitionManagement
     with org.apache.spark.sql.connector.catalog.index.SupportsIndex {
@@ -708,6 +710,13 @@ class GraftV2Table(meta: TableMeta) extends Table with SupportsRead
     * must compare this against the table's CURRENT version: a pinned
     * handle must never be answered from current rollup data. */
   private[graft] def graftVersion: Long = meta.version
+
+  /** Whether this handle reads the whole snapshot of its version, not a
+    * read face's restricted copy (which only drops files). */
+  private[graft] def wholeSnapshot: Boolean = {
+    val m = TableMeta.read(meta.location, meta.version)
+    m.baseFiles.size == meta.baseFiles.size && m.deltaFiles.size == meta.deltaFiles.size
+  }
 
   // ---- SQL range-partition lifecycle (SupportsPartitionManagement):
   // ALTER TABLE ADD/DROP PARTITION (<rangeCol>='<key>') and SHOW
@@ -925,37 +934,9 @@ class GraftV2Table(meta: TableMeta) extends Table with SupportsRead
     true
   }
 
-  /** READ-path preconditions only — checked in [[newScanBuilder]], not at
-    * table resolution, so the WRITE path (which delegates to the engine's
-    * own layout-agnostic ops) stays available on any table. */
-  private def checkReadable(): Unit = {
-    require(meta.deltaFiles.isEmpty ||
-        GraftV2Scan.morOverlayable(GraftV2Scan.hydrateKeyBounds(meta)),
-      s"graft V2 reads need a compacted base or an overlay-able delta set; " +
-        s"${meta.name} has ${meta.deltaFiles.size} pending delta files and " +
-        "(pending range drops, or a past-broadcast-bound delta set over " +
-        "base files with neither partition coordinates nor recorded key " +
-        "bounds, where per-route spilling is unsound) — compact() first " +
-        "or read through the DSv1 'graft' format (merge-on-read)")
-    // The V2 parquet factory reads files by LOGICAL column name; a renamed
-    // or type-widened column lives in files under its physical name/type,
-    // and a column added later with a non-null read default is absent from
-    // old files — both would silently read wrong values here, so refuse.
-    // Absent-with-default heals via compact() (the rewrite materializes
-    // defaults); renamed/widened columns need the DSv1 id-remap read path.
-    require(meta.columns.forall { c =>
-        c.physName == c.name &&
-          (c.defaultValue.isEmpty || meta.baseFiles.forall(_.colIds.contains(c.id)))
-      },
-      s"graft V2 reads serve physical==logical column layouts only; " +
-        s"${meta.name} has renamed/widened or defaulted-absent columns — " +
-        "read through the DSv1 'graft' format (id-remap), or compact() to " +
-        "materialize absent defaults")
-  }
-
   override def name(): String = meta.name
   override def schema(): StructType =
-    StructType(meta.visibleColumns.map(_.toField))
+    StructType((if (hidden) meta.columns else meta.visibleColumns).map(_.toField))
   /** Free-form engine properties (TableMeta.props — the extra_configs
     * analog) surface through SHOW TBLPROPERTIES / DESCRIBE EXTENDED. */
   override def properties(): util.Map[String, String] = {
@@ -1013,21 +994,28 @@ class GraftV2Table(meta: TableMeta) extends Table with SupportsRead
       .map(_.map(hc => Expressions.bucket(hc.buckets, hc.cols.head)).toArray)
       .getOrElse(Array.empty) // multi-col-component/per-range layouts: no report
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder = {
-    checkReadable()
-    new GraftScanBuilder(meta, options)
-  }
+  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
+    new GraftScanBuilder(meta, options, hidden, tails)
+
+  /** The delta tail rows this relation's scans collected, by tail files:
+    * a plan reading the relation more than once (a union or join of one
+    * frame with itself) collects each tail once. The manifest
+    * is pinned and data files are immutable, so the rows never go stale. */
+  private val tails = new GraftV2Scan.TailRows
 }
 
 class GraftScanBuilder(meta: TableMeta,
-    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
+    options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
+    hidden: Boolean = false,
+    tails: GraftV2Scan.TailRows = new GraftV2Scan.TailRows)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownTopN
     with SupportsPushDownAggregates {
 
-  private var requiredSchema: StructType =
-    StructType(meta.visibleColumns.map(_.toField))
+  private val fullSchema: StructType =
+    StructType((if (hidden) meta.columns else meta.visibleColumns).map(_.toField))
+  private var requiredSchema: StructType = fullSchema
   private var filters: Array[Filter] = Array.empty
   private var limitN: Option[Int] = None
   private var topN: Option[(Int, Boolean, Int)] = None // (n, descending, colId)
@@ -1041,8 +1029,7 @@ class GraftScanBuilder(meta: TableMeta,
 
   override def pruneColumns(required: StructType): Unit = {
     val keep = required.fieldNames.toSet
-    requiredSchema = StructType(
-      StructType(meta.visibleColumns.map(_.toField)).filter(f => keep.contains(f.name)))
+    requiredSchema = StructType(fullSchema.filter(f => keep.contains(f.name)))
   }
 
   /** CLEAN snapshot: no pending deltas (an unflushed UPSERT/DELETE changes
@@ -1072,59 +1059,50 @@ class GraftScanBuilder(meta: TableMeta,
     else Some((files.map(_.keyLo.get).min, files.map(_.keyHi.get).max))
   }
 
-  /** Invert [[GraftTable.encodeKeyValue]]'s order-preserving encoding back
-    * to the catalyst-INTERNAL value — delegates to the one shared decode
-    * core (GraftTable.decodeBound; zone_stats renders through the same). */
-  private def decodeKeyBound(dt: org.apache.spark.sql.types.DataType,
-      enc: String): Option[Any] = GraftTable.decodeBound(dt, enc)
-
   /** Global (encodedMin, encodedMax) of ANY column from the per-file zone
     * maps (DataFileMeta.colLo/colHi), or None when the extremes are not
     * provable: the snapshot must be clean and EVERY base file must account
-    * for the column — bounds recorded, or all-null proven by its null
-    * count, or the column physically absent with a NULL
-    * add-time default (a non-null default refuses — see the branch note). Returns
+    * for the column ([[boundsOver]]). Returns
     * Some(None) when the column is provably all-null everywhere (MIN/MAX
     * ignore nulls → a null result). Lead-PK bounds hydrate from footers
     * for old manifests; other columns only serve from write-time zone maps
     * (hydrating every column of a 100 TB manifest on first query would be
     * a driver-side footer storm — conservative refusal instead). */
   private def metadataColBounds(
-      cm: graft.catalog.ColumnMeta): Option[Option[(String, String)]] = {
-    if (!cleanSnapshot) return None
-    val files =
+      cm: graft.catalog.ColumnMeta): Option[Option[(String, String)]] =
+    if (!cleanSnapshot) None
+    else boundsOver(cm,
       if (meta.keyCols.headOption.contains(cm.name))
         GraftV2Scan.hydrateKeyBounds(meta).baseFiles
-      else meta.baseFiles
+      else meta.baseFiles)
+
+  /** What `files` prove about column `cm`'s extremes from manifest
+    * metadata alone: Some(Some((encodedMin, encodedMax))) over their zone
+    * maps (lead-PK key bounds for old manifests); Some(None) when no file
+    * holds a value (empty, provably all-null, or absent and reading null);
+    * None when any file is unprovable — no bounds, or the column absent
+    * with a read default (materialized under the session time zone) or an
+    * older generation in the file (zone map in the narrow type's
+    * encoding), which the scan reads exactly instead. */
+  private def boundsOver(cm: graft.catalog.ColumnMeta,
+      files: Seq[graft.catalog.DataFileMeta]): Option[Option[(String, String)]] = {
     val isLead = meta.keyCols.headOption.contains(cm.name)
-    val perFile: Seq[Option[Option[(String, String)]]] = files.map { f =>
-      if (f.rows == 0L) Some(None) // empty file contributes nothing
+    val perFile = files.map { f =>
+      if (f.rows == 0L) Some(None)
       else if (!f.colIds.contains(cm.id)) {
-        // rows read the add-time default: a null default contributes
-        // nothing; a NON-NULL default refuses — folding it in would have
-        // to materialize the default under the session timezone exactly
-        // like the read path (defaultLit), and checkReadable refuses
-        // defaulted-absent layouts on V2 anyway, so this branch stays the
-        // conservative dead-end rather than a latent wrong-extremes path
-        if (cm.defaultValue.isEmpty) Some(None)
-        else None
-      } else {
-        val b = f.colBounds(cm.id).orElse(
-          if (isLead) f.keyLo.zip(f.keyHi) else None)
-        b match {
-          case Some(lohi) => Some(Some(lohi))
-          case None =>
-            // no bounds: servable only when provably all-null
-            if (f.rows > 0L && f.colNullCount(cm.id).contains(f.rows)) Some(None)
-            else None
-        }
+        if (GraftV2Scan.readsNull(cm, f)) Some(None) else None
+      } else f.colBounds(cm.id).orElse(if (isLead) f.keyLo.zip(f.keyHi) else None) match {
+        case Some(lohi) => Some(Some(lohi))
+        case None =>
+          if (f.rows > 0L && f.colNullCount(cm.id).contains(f.rows)) Some(None) else None
       }
     }
-    if (files.isEmpty) return Some(None)
-    if (perFile.exists(_.isEmpty)) return None
-    val valued = perFile.flatten.flatten
-    if (valued.isEmpty) Some(None)
-    else Some(Some((valued.map(_._1).min, valued.map(_._2).max)))
+    if (perFile.exists(_.isEmpty)) None
+    else {
+      val valued = perFile.flatten.flatten
+      Some(if (valued.isEmpty) None
+        else Some((valued.map(_._1).min, valued.map(_._2).max)))
+    }
   }
 
   /** Single-field column reference → its column metadata. */
@@ -1166,7 +1144,7 @@ class GraftScanBuilder(meta: TableMeta,
         case None => Some((StructField(s"agg_$i", cm.dataType, nullable = true),
           null: Any))
         case Some((lo, hi)) =>
-          decodeKeyBound(cm.dataType, if (takeLo) lo else hi)
+          GraftTable.decodeBound(cm.dataType, if (takeLo) lo else hi)
             .map(v => (StructField(s"agg_$i", cm.dataType, nullable = true), v))
       }
     val cols = agg.aggregateExpressions().toSeq.zipWithIndex.map {
@@ -1222,10 +1200,9 @@ class GraftScanBuilder(meta: TableMeta,
       f: graft.catalog.DataFileMeta)
     val classified: Seq[FG] = files.map { f =>
       if (!f.colIds.contains(g.id)) {
-        // absent column reads the add-time default: null default → the
-        // NULL group; a non-null default refuses (same conservative
-        // dead-end as metadataColBounds)
-        if (g.defaultValue.isEmpty) FG(None, 0L, f.rows, f) else return None
+        // an absent column that reads as null → the NULL group; a read
+        // default or an older generation refuses (as in metadataColBounds)
+        if (GraftV2Scan.readsNull(g, f)) FG(None, 0L, f.rows, f) else return None
       } else if (f.colNullCount(g.id).contains(f.rows)) {
         FG(None, 0L, f.rows, f)
       } else (f.colBounds(g.id).orElse(
@@ -1249,25 +1226,11 @@ class GraftScanBuilder(meta: TableMeta,
     // per-group MIN/MAX of a measured column from its member files' zone
     // maps (all-null members contribute nothing; group-wide all-null → null)
     def groupEnd(cm: graft.catalog.ColumnMeta,
-        members: Seq[graft.catalog.DataFileMeta], takeLo: Boolean): Option[Any] = {
-      val cmLead = meta.keyCols.headOption.contains(cm.name)
-      val per: Seq[Option[Option[(String, String)]]] = members.map { f =>
-        if (!f.colIds.contains(cm.id)) {
-          if (cm.defaultValue.isEmpty) Some(None) else None
-        } else f.colBounds(cm.id).orElse(
-            if (cmLead) f.keyLo.zip(f.keyHi) else None) match {
-          case Some(lohi) => Some(Some(lohi))
-          case None =>
-            if (f.rows > 0L && f.colNullCount(cm.id).contains(f.rows)) Some(None)
-            else None
-        }
+        members: Seq[graft.catalog.DataFileMeta], takeLo: Boolean): Option[Any] =
+      boundsOver(cm, members).flatMap {
+        case None => Some(null)
+        case Some((lo, hi)) => GraftTable.decodeBound(cm.dataType, if (takeLo) lo else hi)
       }
-      if (per.exists(_.isEmpty)) return None
-      val valued = per.flatten.flatten
-      if (valued.isEmpty) Some(null)
-      else decodeKeyBound(cm.dataType,
-        if (takeLo) valued.map(_._1).min else valued.map(_._2).max)
-    }
     val gField = StructField("group_0", g.dataType, nullable = true)
     val aggFields = aggExprs.zipWithIndex.map {
       case (_: CountStar, i) => StructField(s"agg_$i",
@@ -1284,7 +1247,7 @@ class GraftScanBuilder(meta: TableMeta,
       .sortBy(_._1.getOrElse("")) // deterministic row order (cosmetic)
       .map { case (enc, members) =>
         val gv: Any = enc match {
-          case Some(e) => decodeKeyBound(g.dataType, e).getOrElse(return None)
+          case Some(e) => GraftTable.decodeBound(g.dataType, e).getOrElse(return None)
           case None => null
         }
         val memberFiles = members.map(_._3)
@@ -1370,7 +1333,8 @@ class GraftScanBuilder(meta: TableMeta,
       Option(options.get("graft.maxVersionsPerTrigger")).map(_.toInt).getOrElse(64),
       limitN, topN,
       Option(options.get("graft.maxBytesPerTrigger"))
-        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes))
+        .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes),
+      tails)
   }
 }
 
@@ -1449,7 +1413,8 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     maxVersionsPerTrigger: Int = 64,
     limit: Option[Int] = None,
     topN: Option[(Int, Boolean, Int)] = None,
-    maxBytesPerTrigger: Option[Long] = None) extends Scan with Batch
+    maxBytesPerTrigger: Option[Long] = None,
+    tails: GraftV2Scan.TailRows = new GraftV2Scan.TailRows) extends Scan with Batch
     with SupportsReportPartitioning with SupportsRuntimeFiltering
     with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -1467,6 +1432,17 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
     GraftV2Scan.scanMetricDecls
+
+  // Equal scans (one manifest, one read shape) make equal BatchScanExecs,
+  // so Spark reuses an exchange over one for the other: a plan that
+  // broadcasts one frame twice broadcasts it once.
+  private def shape = (meta, requiredSchema, filters.toSeq, runtimeFilters.toSeq,
+    limit, topN, startingVersion, maxVersionsPerTrigger, maxBytesPerTrigger)
+  override def equals(o: Any): Boolean = o match {
+    case s: GraftV2Scan => (s eq this) || shape == s.shape
+    case _ => false
+  }
+  override def hashCode(): Int = (meta.location, meta.version, requiredSchema).hashCode
 
   override def reportDriverMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = Array(
@@ -1707,6 +1683,8 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
   override def toBatch: Batch = this
   override def description(): String =
     s"graft ${meta.name} (buckets=${GraftTable.totalBuckets(meta)})" +
+      (if (filters.isEmpty) "" else filters.mkString(" PushedFilters: [", ", ", "]")) +
+      s" ReadSchema: ${requiredSchema.catalogString}" +
       limit.map(n => s" limit=$n").getOrElse("") +
       topN.map { case (n, d, cid) =>
         val cn = meta.columns.find(_.id == cid).map(_.name).getOrElse(cid.toString)
@@ -1812,22 +1790,24 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     }
   }
 
+  /** The base and delta files of the manifest this scan reads — a read
+    * face's restricted manifest, or the whole snapshot (paths as the
+    * manifest records them): what [[graft.plans.ScanRoots.filesRead]]
+    * reports. Filters the optimizer pushes prune further at planning, but
+    * not here, so only an engine-restricted read shows as a subset. */
+  private[graft] def plannedFiles: Seq[String] =
+    (meta.baseFiles ++ meta.deltaFiles).map(_.path)
+
   override def planInputPartitions(): Array[InputPartition] = {
     // one input partition per (composite) hash bucket = the SPJ grouping
     // unit, keyed by the per-component bucket ids (one key field per
-    // reported bucket transform). Files without a bucket coordinate would
-    // break the key grouping → the table constructor already restricted us
-    // to compacted (coordinate-carrying) bases; a coordinate-less fileset
-    // reports a single unkeyed partition.
+    // reported bucket transform), unless the files need one split
     val cutFiles = prunedCutFiles()
     mBasesRead = cutFiles.length
+    if (singleSplit(cutFiles))
+      return Array(org.apache.spark.sql.GraftSqlBridge.filePartition(
+        0, cutFiles.map(_.path), None))
     keyGrouped match {
-      case Some(_) if cutFiles.exists(_.bucket.isEmpty) =>
-        // a reported key grouping cannot place coordinate-less files into
-        // key groups — serve them as one unkeyed split (which then owns
-        // every delta row)
-        Array(org.apache.spark.sql.GraftSqlBridge.filePartition(
-          0, cutFiles.map(_.path), None))
       case Some(comps) =>
         // preserve the reported key grouping under pruning: one partition
         // per bucket ALWAYS (pruned buckets become empty partitions), so a
@@ -1867,6 +1847,29 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     }
   }
 
+  /** Whether the scan reads its planned base files as ONE unkeyed split
+    * that owns every delta row: a reported key grouping cannot place
+    * coordinate-less files, and a delta set past the broadcast bound over
+    * files the spill cannot route ([[GraftV2Scan.spillRoutable]]) has no
+    * per-split decomposition — the one split reads the whole spill. */
+  private def singleSplit(files: Seq[graft.catalog.DataFileMeta]): Boolean =
+    (keyGrouped.isDefined && files.exists(_.bucket.isEmpty)) ||
+      (!GraftV2Scan.spillRoutable(meta) &&
+        GraftTable.deltaBytes(meta.deltaFiles) >= GraftTable.broadcastDeltaBytes)
+
+  /** Whether every base file reads by physical name, with no generation
+    * remap or drop mask: then one parquet factory reads them and the scan
+    * may stay columnar. Decided over the whole manifest, so runtime
+    * filtering can never flip the columnar mode after planning. */
+  private val remapFree = meta.baseFiles.forall(f =>
+    GraftV2Scan.currentGeneration(meta, f) && !GraftV2Scan.masked(meta, f))
+
+  /** The reader of the planned base files as the logical fields `read`. */
+  private def baseReader(read: StructType): PartitionReaderFactory =
+    if (remapFree) GraftV2Scan.directReader(meta, read, filters)
+    else GraftV2Scan.generationReader(meta, prunedCutFiles(), read, filters,
+      GraftV2Scan.masked(meta, _))
+
   /** The reader factory, memoized until the runtime filters change like
     * [[prunedCutFiles]]: Spark asks one scan for its factory more than
     * once per query (the columnar-support probe at planning, then again
@@ -1887,9 +1890,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
   }
 
   private def createReaderFactory0(): PartitionReaderFactory = {
-    if (meta.deltaFiles.isEmpty)
-      return org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
-        spark, StructType(meta.visibleColumns.map(_.toField)), requiredSchema, filters)
+    if (meta.deltaFiles.isEmpty) return baseReader(requiredSchema)
     // merge-on-read overlay: read the required columns PLUS any key columns
     // the projection pruned (needed to match base rows against delta keys),
     // ship the latest delta state to the splits — broadcast, attached from
@@ -1931,58 +1932,51 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     // route: some split must emit those rows, and every filter is
     // re-evaluated above this scan, so rows of a pruned-away route still
     // drop correctly.
-    val prunedFiles = graft.sources.PartitionPruner.pruneFiles(
-      m, m.baseFiles, filters.toSeq ++ runtimeFilters)
-    // A reported key grouping cannot place coordinate-less files into key
-    // groups — planInputPartitions served the whole fileset as ONE unkeyed
-    // split, which therefore owns every delta row.
-    val kgBare = keyGrouped.isDefined && prunedFiles.exists(_.bucket.isEmpty)
+    val prunedFiles = prunedCutFiles()
+    // one split (planInputPartitions) owns the one route every delta row
+    // is routed to
+    val single = singleSplit(prunedFiles)
     val owned: Set[String] =
-      if (kgBare) Set(GraftV2Scan.OrphanRoute)
+      if (single) Set(GraftV2Scan.OrphanRoute)
       else keyGrouped match {
         case Some(_) => (0 until GraftTable.totalBuckets(m)).map(_.toString).toSet
         case None => GraftV2Scan.routeGroups(m, prunedFiles).map(_._1).toSet
       }
     val fallback = owned.toSeq.sorted.headOption.getOrElse(GraftV2Scan.OrphanRoute)
     val tbl = GraftTable.load(spark, m.location)
-    val inner = org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
-      spark, m.schema, internalSchema, filters)
+    val inner = baseReader(internalSchema)
     // Columnar capability: `clean` routes pass the bare requiredSchema
     // reader through when no delta slice attaches to them.
     def overlay(tail: org.apache.spark.broadcast.Broadcast[MorOverlayInfo],
         slices: Option[MorSlices], clean: Set[String]) =
       new MorOverlayReaderFactory(inner, tail, slices,
         columnar =
-          if (!GraftTable.columnarMorEnabled ||
+          if (!GraftTable.columnarMorEnabled || !remapFree ||
               !MorColumnarReader.supportsAll(internalSchema)) None
-          else Some(ColumnarMorSupport(
-            org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
-              spark, m.schema, requiredSchema, filters), clean)),
-        // key grouping + coordinate-less files: the single unkeyed split
-        // owns the one route every delta row was routed to
-        defaultRoute = if (kgBare) Some(GraftV2Scan.OrphanRoute) else None)
+          else Some(ColumnarMorSupport(baseReader(requiredSchema), clean)),
+        defaultRoute = if (single) Some(GraftV2Scan.OrphanRoute) else None)
     // Flushed (ROUTED) delta files — written per tablet coordinate by
     // compactDeltas, the reference's DMS flush into per-rowset delta
     // stores (tablet/deltafile.h) — attach to their split directly from
     // disk; only the unrouted TAIL (commits since the last flush) needs
-    // transport, so the broadcast bound applies to the tail alone. A
-    // routed file is attach-eligible only when a raw by-name read of it
-    // is exact: every defaulted column must be physically present (absent
-    // columns read null, correct only when no read default exists);
-    // ineligible files just ride the tail, whose read remaps columns
-    // (maskedDeltas).
+    // transport, so the broadcast bound applies to the tail alone. Only a
+    // current-generation routed file attaches (the slice reader reads by
+    // physical name, with no remap); every other file rides the tail,
+    // whose read remaps columns (maskedDeltas). While a range drop is
+    // pending every delta file rides the tail too, whose read masks the
+    // dropped delta rows by seq.
     // Attachment additionally requires every planned base file to carry a
-    // coordinate (or the single kgBare split, which owns everything):
+    // coordinate (or the single split, which owns everything):
     // coordinate-less base files hold rows of ANY route, and a split that
     // reads them must see the whole dead set — their layouts keep the
     // tail/spill transport for all deltas.
-    val canAttach = kgBare ||
-      prunedFiles.forall(f => f.bucket.isDefined || f.rangeKey.isDefined)
+    val canAttach = m.rangeDrops.isEmpty && (single ||
+      prunedFiles.forall(f => f.bucket.isDefined || f.rangeKey.isDefined))
     val (routedD, tailD) =
       if (!canAttach) (Nil, m.deltaFiles)
       else m.deltaFiles.partition(f =>
         (f.bucket.isDefined || f.rangeKey.isDefined) &&
-          m.columns.forall(c => c.defaultValue.isEmpty || f.colIds.contains(c.id)))
+          GraftV2Scan.currentGeneration(m, f))
     // Transport decision PER SCAN, on the PRUNED tail: tail files prune by
     // their recorded first-key bounds (delta stats, tablet/deltafile.h) —
     // sound because every file that can hold a surviving key is kept, and
@@ -2004,9 +1998,6 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
       // spill branch below deliberately keeps the FULL delta set: its
       // per-route spill is cached by (version, shape) across queries.
       val keepTail = keepTailEarly
-      val opIdx = internalFields.length
-      val seqIdx = opIdx + 1
-      val routeIdx = opIdx + 2
       val dead = new java.util.HashSet[Seq[Any]]()
       val ups = scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[Array[Any]]]()
       // Routes touched by ANY delta row (upsert or tombstone). Trackable
@@ -2029,21 +2020,29 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         // no exchange, so the plan-time job is one job of one stage and
         // touches no session conf. The driver holds at most the tail
         // bytes the broadcast check above admitted, and folds them to
-        // latest-per-key with the slice readers' own fold.
-        val rows = tbl.maskedDeltas(m, keepTail)
-          .select(internalSchema.fieldNames.toSeq.map(col) ++
-            Seq(col(GraftTable.OpCol), col(GraftTable.SeqCol), routeCol): _*)
-          .queryExecution.toRdd.map(_.copy()).collect()
-        MorOverlay.latestPerKey(rows.iterator, keyIdx, types, opIdx, Some(seqIdx))
+        // latest-per-key with the slice readers' own fold. Every table
+        // column is collected, so the relation's scans of other columns
+        // share the rows.
+        val cols = m.columns.map(_.name)
+        val colTypes = m.columns.map(_.dataType).toArray
+        val rows = tails.computeIfAbsent(keepTail.map(_.path), _ =>
+          tbl.maskedDeltas(m, keepTail)
+            .select(cols.map(col) ++
+              Seq(col(GraftTable.OpCol), col(GraftTable.SeqCol), routeCol): _*)
+            .queryExecution.toRdd.map(_.copy()).collect())
+        val (opAt, routeAt) = (cols.length, cols.length + 2)
+        val colAt = internalFields.map(f => cols.indexOf(f.name))
+        MorOverlay.latestPerKey(rows.iterator, m.keyCols.map(cols.indexOf).toArray,
+            colTypes, opAt, Some(opAt + 1))
           .forEach { (key, r) =>
             dead.add(key)
-            val r0 = if (r.isNullAt(routeIdx)) null
-              else r.getUTF8String(routeIdx).toString
+            val r0 = if (r.isNullAt(routeAt)) null
+              else r.getUTF8String(routeAt).toString
             val route = if (r0 != null && owned.contains(r0)) r0 else fallback
             dirty += route
-            if (!MorOverlay.isDelete(r, opIdx)) {
+            if (!MorOverlay.isDelete(r, opAt)) {
               ups.getOrElseUpdate(route, scala.collection.mutable.ArrayBuffer()) +=
-                types.indices.map(i => r.get(i, types(i))).toArray
+                colAt.map(i => r.get(i, colTypes(i))).toArray
             }
           }
       }
@@ -2079,10 +2078,10 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
             org.apache.spark.sql.types.StringType, nullable = false),
           org.apache.spark.sql.types.StructField(GraftTable.SeqCol,
             org.apache.spark.sql.types.LongType, nullable = false))
-        val deltaFactory = org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
-          spark, StructType(m.schema.fields ++ opSeqFields),
+        val deltaFactory = GraftV2Scan.directReader(m,
           StructType(internalFields ++ opSeqFields), Array.empty)
-        Some(MorSlices(deltaFactory, opIdx, Some(opIdx + 1), routeParts))
+        Some(MorSlices(deltaFactory, internalFields.length,
+          Some(internalFields.length + 1), routeParts))
       }
       // clean = tail-clean routes; under routed attachment a split is
       // fully clean when additionally no flushed slice attaches to it
@@ -2122,7 +2121,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
       // bounds are order-preserving-encoded strings, so containment is a
       // plain string compare matching the delta-side encodeKeyExpr
       val bareIv: Array[(String, String, String)] =
-        if (kgBare) Array.empty
+        if (single) Array.empty
         else GraftV2Scan.routeGroups(m, prunedFiles).iterator.collect {
           case (r, fs) if r.startsWith("f:") && fs.nonEmpty &&
               fs.head.keyLo.isDefined && fs.head.keyHi.isDefined =>
@@ -2162,8 +2161,10 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
       val spillRoot = java.nio.file.Paths.get(m.location, "tmp")
       GraftV2Scan.sweepStaleSpills(spillRoot, keepPrefix = s"_morspill_v${m.version}_")
       // The spill's CONTENT is fully determined by (table version, internal
-      // projection, dense route-id mapping, planned bare-file intervals) —
-      // hash that shape into the directory name and REUSE a finished spill
+      // projection, dense route-id mapping, planned bare-file intervals,
+      // planned base and delta file sets — a read face's restricted copy of
+      // a version must never share another copy's spill) — hash that shape
+      // into the directory name and REUSE a finished spill
       // instead of re-shuffling: a read-heavy workload pays the delta
       // shuffle once per commit, not once per query. This is the
       // persistence posture of the reference's on-disk delta stores
@@ -2171,8 +2172,10 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
       // flush, then served from disk by every later scan); a new commit
       // bumps the version and naturally invalidates the cache.
       val shape = (internalSchema.fieldNames.mkString(",") + "|" +
-        ownedSeq.mkString(",") + "|" + (if (kgBare) "kg|" else "") +
-        bareIv.map(iv => s"${iv._1}:${iv._2}:${iv._3}").mkString(",")).getBytes("UTF-8")
+        ownedSeq.mkString(",") + "|" + (if (single) "one|" else "") +
+        bareIv.map(iv => s"${iv._1}:${iv._2}:${iv._3}").mkString(",") + "|" +
+        prunedFiles.map(_.path).mkString(",") + "|" +
+        m.deltaFiles.map(_.path).mkString(",")).getBytes("UTF-8")
       val shapeHash = java.security.MessageDigest.getInstance("SHA-256")
         .digest(shape).take(8).map("%02x".format(_)).mkString
       val spillDir = spillRoot.resolve(s"_morspill_v${m.version}_$shapeHash")
@@ -2181,7 +2184,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         // publish below moves complete writes atomically) — rebuild it
         GraftV2Scan.deleteTree(spillDir)
         // With no interval candidates (every planned file coordinate-carrying,
-        // or the single key-grouped split) and trusted delete routes, the
+        // or the single split) and trusted delete routes, the
         // candidate fold degenerates to route = owned(layoutRoute) |
         // fallback with the op unchanged — keep that single-route
         // projection (no explode, one scalar udf) so the common
@@ -2255,6 +2258,9 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
 }
 
 object GraftV2Scan {
+  /** Collected delta tail rows by tail files ([[GraftV2Table]]'s memo). */
+  class TailRows extends java.util.concurrent.ConcurrentHashMap[Seq[String], Array[InternalRow]]
+
   /** Scan-observability metrics (the reference's per-scan counters —
     * tablet metrics like `scanner_rows_scanned` / delta-file reads,
     * tablet/tablet_metrics.h): declared once, surfaced in the Spark UI
@@ -2351,10 +2357,11 @@ object GraftV2Scan {
     * their recorded first-key interval (DataFileMeta.keyLo/keyHi — the
     * reference's rowset key bounds, tablet/diskrowset.h): a delta row is
     * duplicated into every bare file whose interval can contain its key
-    * (tombstone everywhere, upsert emitted by exactly one owner). Only
-    * files with NEITHER coordinates NOR bounds (older metadata, absent
-    * footer stats, non-encodable key type) still force the broadcast /
-    * compact-first posture. */
+    * (tombstone everywhere, upsert emitted by exactly one owner). Files
+    * with NEITHER coordinates NOR bounds (older metadata, absent footer
+    * stats, non-encodable key type) have no per-route decomposition: past
+    * the broadcast bound the scan reads them as one split that owns the
+    * whole spill (GraftV2Scan.singleSplit). */
   def spillRoutable(meta: TableMeta): Boolean = {
     val (coord, bare) = meta.baseFiles.partition(
       f => f.bucket.isDefined || f.rangeKey.isDefined)
@@ -2362,11 +2369,70 @@ object GraftV2Scan {
       (bare.forall(f => f.keyLo.isDefined && f.keyHi.isDefined) &&
         meta.keyCols.headOption.exists(k =>
           GraftTable.keyBoundEncodable(meta.column(k).dataType)))
-    meta.rangeDrops.isEmpty && bareOk && (keyGroupedComponents(meta) match {
+    bareOk && (keyGroupedComponents(meta) match {
       case Some(_) => coord.forall(_.bucket.isDefined)
       case None =>
         meta.hash.nonEmpty || meta.range.isDefined || coord.isEmpty
     })
+  }
+
+  /** Whether data file `f` reads by physical column name with no remap:
+    * every column of `meta` is in the file under its current id, or
+    * absent from it with nothing to read instead ([[readsNull]]). */
+  def currentGeneration(meta: TableMeta, f: graft.catalog.DataFileMeta): Boolean =
+    meta.columns.forall(c => f.colIds.contains(c.id) || readsNull(c, f))
+
+  /** Whether column `c`, absent from file `f`, reads as null there: no
+    * read default, and no older generation of it in the file. */
+  def readsNull(c: graft.catalog.ColumnMeta, f: graft.catalog.DataFileMeta): Boolean =
+    c.defaultValue.isEmpty && !c.priorGenerations.exists(g => f.colIds.contains(g.id))
+
+  /** Whether base file `f`'s rows need the pending range drops' mask: a
+    * coordinate-less file (files with a dropped coordinate already left
+    * the fileset). */
+  def masked(meta: TableMeta, f: graft.catalog.DataFileMeta): Boolean =
+    meta.rangeDrops.nonEmpty && f.rangeKey.isEmpty
+
+  /** The parquet reader of current-generation files as the logical fields
+    * `read` (table columns, plus non-table fields such as the delta op
+    * column): it asks for each column under its physical name, and rows
+    * come back by position, so a rename costs nothing. `filters` push down
+    * only where they name a column stored under its own name (a renamed
+    * column's name may be another's physical one); Spark re-evaluates
+    * every filter above the scan. */
+  def directReader(meta: TableMeta, read: StructType,
+      filters: Array[Filter]): PartitionReaderFactory = {
+    def physical(fields: Seq[StructField]) = StructType(fields.map(f =>
+      meta.columns.find(_.name == f.name).fold(f)(c => f.copy(name = c.physName))))
+    org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(SparkSession.active,
+      physical(meta.schema ++ read.filterNot(f => meta.columns.exists(_.name == f.name))),
+      physical(read), filters.filter(_.references.forall(n =>
+        meta.columns.exists(c => c.name == n && c.physName == n))))
+  }
+
+  /** The row reader of `files` as the logical fields `read`:
+    * current-generation files read through [[directReader]]; every other
+    * group of files — one older generation, or `masked` by a pending range
+    * drop — through its own parquet factory and projection
+    * (GraftTable.generationRead). Pushed filters reach current-generation
+    * files only. */
+  def generationReader(meta: TableMeta, files: Seq[graft.catalog.DataFileMeta],
+      read: StructType, filters: Array[Filter],
+      masked: graft.catalog.DataFileMeta => Boolean): GenerationReaderFactory = {
+    val spark = SparkSession.active
+    val groups = files.filter(f => !currentGeneration(meta, f) || masked(f))
+      .groupBy(f => (f.colIds.toSet, masked(f))).toSeq
+    val tbl = if (groups.isEmpty) null else GraftTable.load(spark, meta.location)
+    new GenerationReaderFactory(directReader(meta, read, filters),
+      groups.zipWithIndex.flatMap { case ((_, fs), i) =>
+        fs.map(f => org.apache.spark.sql.GraftSqlBridge.fileKey(f.path) -> i)
+      }.toMap,
+      groups.map { case ((present, mask), _) =>
+        val (phys, project, keep) =
+          tbl.generationRead(meta, present, read.fields.toSeq, mask)
+        GenerationRead(org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
+          spark, phys, phys, Array.empty), project, keep)
+      }.toArray)
   }
 
   /** JVM-wide memo of footer-derived key bounds. Published parquet files
@@ -2378,7 +2444,7 @@ object GraftV2Scan {
   /** Backfill missing first-key bounds on coordinate-less files from their
     * parquet footers — metadata written before bounds were recorded
     * (pre-r9 manifests, old backups) reads as keyLo/keyHi = None, which
-    * used to force the compact-first posture past the broadcast bound.
+    * forces the one-split spill past the broadcast bound.
     * Driver-side footer reads (no data pages), memoized per JVM; a file
     * whose footer carries no usable stats keeps None and callers keep
     * their conservative treatment. In-memory only: a read never writes
@@ -2451,33 +2517,4 @@ object GraftV2Scan {
         Files.walk(p).sorted(java.util.Comparator.reverseOrder())
           .iterator().asScala.foreach(Files.deleteIfExists(_))
     } catch { case _: Exception => }
-
-  /** Whether a delta-carrying table can serve the V2 merge-on-read
-    * overlay: ANY layout — hash (multi-component, multi-column components,
-    * per-range bucket-count overrides), range-only, or unpartitioned
-    * (upserts route by the writer's own partition expressions; routes no
-    * split owns fold into the fallback split) — with no pending
-    * range-drop masks. Below the broadcast bound the delta state is
-    * broadcast; past it, [[spillRoutable]] layouts shuffle deltas into
-    * per-route spills (any delta size) — coordinate-less files route by
-    * their recorded key intervals — and only files with neither
-    * coordinates nor bounds still require compaction first. */
-  def morOverlayable(meta: TableMeta): Boolean = {
-    // Only the unrouted TAIL needs broadcast/spill transport: flushed
-    // delta files with tablet coordinates attach per split straight from
-    // disk at any size (when every base file carries a coordinate —
-    // mirroring createReaderFactory's canAttach, conservatively, since no
-    // scan context exists here). A fully-flushed multi-GB delta state is
-    // servable even on layouts the spill path can't decompose.
-    val canAttach = meta.baseFiles.forall(
-      f => f.bucket.isDefined || f.rangeKey.isDefined)
-    val tail =
-      if (!canAttach) meta.deltaFiles
-      else meta.deltaFiles.filterNot(f =>
-        (f.bucket.isDefined || f.rangeKey.isDefined) &&
-          meta.columns.forall(c => c.defaultValue.isEmpty || f.colIds.contains(c.id)))
-    meta.rangeDrops.isEmpty &&
-      (GraftTable.deltaBytes(tail) < GraftTable.broadcastDeltaBytes ||
-        spillRoutable(meta))
-  }
 }

@@ -31,8 +31,9 @@ import graft.table.GraftTable
  * tagged CDC feed. Options: `graft.startingVersion` = first version to
  * EXCLUDE history before (default: the version at stream start, i.e. new
  * commits only; initial-load rows are base files, not deltas, and are
- * never streamed). Rows from files predating an ALTER ADD COLUMN stream
- * the new column as null (their committed images carried no value).
+ * never streamed). Rows from files predating an ALTER stream under the
+ * current schema, remapped per file like a batch read (renamed columns by
+ * position, widened ones cast, added ones at their read default).
  */
 class GraftMicroBatchStream(meta: TableMeta, requiredSchema: StructType,
     startingVersion: Option[Long], maxVersionsPerTrigger: Int = 64,
@@ -131,30 +132,33 @@ class GraftMicroBatchStream(meta: TableMeta, requiredSchema: StructType,
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val v0 = start.asInstanceOf[GraftStreamOffset].version
     val v1 = end.asInstanceOf[GraftStreamOffset].version
-    val paths = (v0 + 1 to v1).flatMap { v =>
+    val files = (v0 + 1 to v1).flatMap { v =>
       // each version's metadata is immutable: its own delta files are the
       // ones stamped seq == v (compaction-fold rewrites excluded)
-      GraftTable.committedDeltas(readV(v), v).map(_.path)
+      GraftTable.committedDeltas(readV(v), v)
     }
-    paths.zipWithIndex.map { case (p, i) =>
-      org.apache.spark.sql.GraftSqlBridge.filePartition(i, Seq(p), None)
+    planned = files
+    files.zipWithIndex.map { case (f, i) =>
+      org.apache.spark.sql.GraftSqlBridge.filePartition(i, Seq(f.path), None)
     }.toArray
   }
 
+  /** The delta files the latest [[planInputPartitions]] planned: Spark
+    * plans a micro-batch's partitions before it asks for its reader
+    * factory, which reads each of them through its schema generation. */
+  @volatile private var planned: Seq[graft.catalog.DataFileMeta] = Nil
+
   override def createReaderFactory(): PartitionReaderFactory = {
-    // read the required columns plus the op column; emit upsert images
-    // only, projected back to the caller's schema (the MorOverlay
-    // internal-schema pattern)
+    // read the required columns plus the op column — every file through
+    // its schema generation, as the batch scan reads base files; emit
+    // upsert images only, projected back to the caller's schema (the
+    // MorOverlay internal-schema pattern)
     val internal = StructType(requiredSchema.fields :+
       org.apache.spark.sql.types.StructField(GraftTable.OpCol,
         org.apache.spark.sql.types.StringType))
-    val fileSchema = StructType(
-      meta.columns.map(c => org.apache.spark.sql.types.StructField(
-        c.physName, c.dataType, nullable = true)) ++ internal.fields.takeRight(1))
-    val inner = org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
-      spark, fileSchema, internal, Array.empty)
-    new UpsertImageReaderFactory(inner, requiredSchema.fields.map(_.dataType),
-      requiredSchema.fields.length)
+    new UpsertImageReaderFactory(
+      GraftV2Scan.generationReader(meta, planned, internal, Array.empty, _ => false),
+      requiredSchema.fields.map(_.dataType), requiredSchema.fields.length)
   }
 }
 

@@ -2,19 +2,21 @@ package graft.sources.v2
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, Predicate, UnsafeProjection}
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
 import org.apache.spark.sql.types._
 
 /**
- * Merge-on-read overlay for the DSv2 batch scan: the per-partition analog
- * of the DSv1 path's "base ANTI-JOIN delta-keys ∪ latest-delta-rows"
- * (reference: DeltaApplier, tablet/delta_applier.h:52 — deltas applied over
- * each rowset at read, whether they came from memory or a flushed delta
- * file). Each split's reader suppresses base rows whose key carries a
- * delta and appends the split's own upsert rows — routed by the SAME
- * murmur3-pmod arithmetic the writer bucketed with, so the reported key
- * grouping (and any storage-partitioned join built on it) stays exact.
+ * Merge-on-read for the graft V2 scan — the engine's one merge-on-read,
+ * behind every `GraftTable` read face and every SQL read (reference:
+ * DeltaApplier, tablet/delta_applier.h:52 — deltas applied over each
+ * rowset at read, whether they came from memory or a flushed delta file).
+ * Each split's reader suppresses base rows whose key carries a delta and
+ * appends the split's own upsert rows — routed by the SAME murmur3-pmod
+ * arithmetic the writer bucketed with, so the reported key grouping (and
+ * any storage-partitioned join built on it) stays exact. Base rows reach
+ * it already remapped to the current schema ([[GenerationReaderFactory]]).
  * One factory ([[MorOverlayReaderFactory]]) serves every delta transport
  * the planner picks (GraftV2Scan.createReaderFactory): a broadcast tail,
  * per-tablet flushed delta files attached under that tail, or per-route
@@ -349,7 +351,9 @@ class MorColumnarReader(
       } else if (keep.length > 0) {
         current = batchOf(keep.iterator.map { i =>
           val row = batch.getRow(i)
-          c => row.get(info.outIdx(c), outTypes(c))
+          // a batch row's typed get ignores nulls: check them first
+          c => if (row.isNullAt(info.outIdx(c))) null
+            else row.get(info.outIdx(c), outTypes(c))
         }, keep.length)
         return true
       }
@@ -411,4 +415,81 @@ class MorOverlayReader(
 
   override def get(): InternalRow = current
   override def close(): Unit = inner.close()
+}
+
+/** How one group of data files — one older schema generation, or files a
+  * pending range drop masks — reads: a parquet factory over its physical
+  * columns, and the projection and mask bound to that row
+  * (GraftTable.generationRead). */
+case class GenerationRead(
+    factory: PartitionReaderFactory,
+    project: Seq[Expression],
+    keep: Option[Expression])
+
+/**
+ * The base reader of a split whose files span schema generations — the
+ * column-id remap of Kudu's GetMappedReadProjection (common/schema.cc).
+ * Files absent from `genOf` read through `direct`; every other file through
+ * its group's [[GenerationRead]], one reader per consecutive run of a
+ * group, so rows keep the planned file order.
+ *
+ * @param genOf planned file (`GraftSqlBridge.fileKey`) -> index into `gens`
+ */
+class GenerationReaderFactory(
+    direct: PartitionReaderFactory,
+    genOf: Map[String, Int],
+    gens: Array[GenerationRead]) extends PartitionReaderFactory {
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+    val fp = p.asInstanceOf[FilePartition]
+    def gen(f: PartitionedFile) = genOf.get(f.urlEncodedPath)
+    if (fp.files.forall(gen(_).isEmpty)) return direct.createReader(p)
+    val runs = scala.collection.mutable.ArrayBuffer[(Option[Int], Array[PartitionedFile])]()
+    fp.files.foreach { f =>
+      if (runs.nonEmpty && runs.last._1 == gen(f))
+        runs(runs.length - 1) = (gen(f), runs.last._2 :+ f)
+      else runs += ((gen(f), Array(f)))
+    }
+    new ConcatReader(runs.iterator.map { case (g, fs) => () =>
+      val part = FilePartition(fp.index, fs)
+      g.fold(direct.createReader(part))(i =>
+        new GenerationReader(gens(i), gens(i).factory.createReader(part)))
+    })
+  }
+}
+
+/** One group's rows: masked, then projected to the scan's fields. */
+private class GenerationReader(g: GenerationRead, inner: PartitionReader[InternalRow])
+    extends PartitionReader[InternalRow] {
+  private val project = UnsafeProjection.create(g.project)
+  private val keep = g.keep.map { e => val p = Predicate.create(e); p.initialize(0); p }
+  private var current: InternalRow = _
+
+  override def next(): Boolean = {
+    while (inner.next()) {
+      val row = inner.get()
+      if (keep.forall(_.eval(row))) { current = project(row); return true }
+    }
+    false
+  }
+  override def get(): InternalRow = current
+  override def close(): Unit = inner.close()
+}
+
+/** The readers `parts` opens one after another, each closed when drained. */
+private class ConcatReader(parts: Iterator[() => PartitionReader[InternalRow]])
+    extends PartitionReader[InternalRow] {
+  private var cur: PartitionReader[InternalRow] = _
+
+  override def next(): Boolean = {
+    while (true) {
+      if (cur != null && cur.next()) return true
+      if (cur != null) { cur.close(); cur = null }
+      if (!parts.hasNext) return false
+      cur = parts.next()()
+    }
+    false
+  }
+  override def get(): InternalRow = cur.get()
+  override def close(): Unit = if (cur != null) cur.close()
 }

@@ -44,10 +44,12 @@ case class MaintenanceAction(kind: String, bucket: Option[Int],
  *
  * Invariant: every base file's seq < every live delta file's seq — all
  * mutations (including INSERT after the initial load) commit as deltas, so
- * merge-on-read is: base ANTI-JOIN delta-keys ∪ latest-delta-rows. With small
- * deltas this broadcasts, keeping the base scan shuffle-free and
- * pushdown-friendly (the analog of DeltaApplier, tablet/delta_applier.h:52).
- * Compaction rewrites base and clears deltas (tablet/compaction.cc analog).
+ * merge-on-read is: base rows whose key carries no delta, plus the latest
+ * delta row per key. The V2 scan applies it inside each split's reader
+ * (sources/v2/MorOverlay.scala — the analog of DeltaApplier,
+ * tablet/delta_applier.h:52), keeping the base scan shuffle-free and
+ * pushdown-friendly. Compaction rewrites base and clears deltas
+ * (tablet/compaction.cc analog).
  */
 class GraftTable private[table] (val spark: SparkSession, val location: String) {
   import GraftTable._
@@ -60,14 +62,28 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
 
   // ---------------------------------------------------------------- read
 
+  /** The one DataFrame every read face returns: a DataSource V2 relation
+    * over [[graft.sources.v2.GraftV2Table]] for manifest `m`, whose scan
+    * prunes files, remaps every schema generation, masks pending range
+    * drops and applies the delta overlay per split (MorOverlay.scala — the
+    * one merge-on-read). A face reading part of a snapshot passes a copy of
+    * `m` restricted to the files it may read, which a serving rewrite's
+    * scan root (ScanRoots.baseLocation) matches only when it kept every
+    * file. Columns are the visible ones, or all including the hidden
+    * auto-increment key when `hidden`; all read nullable, as a parquet
+    * read reports them. */
+  private def read(m: TableMeta, hidden: Boolean = false): DataFrame =
+    org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new graft.sources.v2.GraftV2Table(
+          m.copy(columns = m.columns.map(_.copy(nullable = true))), hidden),
+        None, None))
+
   /** Snapshot scan at `version` (None = latest). READ_AT_SNAPSHOT semantics
     * (common/common.proto:268-326). The hidden auto-increment key column of
     * non-unique-PK tables is projected away; use [[scanWithHidden]] to see it. */
-  def scan(version: Option[Long] = None): DataFrame = {
-    val m = version.map(readVersion).getOrElse(meta)
-    val full = scanMeta(m)
-    if (m.hasAutoInc) full.select(m.visibleColumns.map(c => col(c.name)): _*) else full
-  }
+  def scan(version: Option[Long] = None): DataFrame =
+    read(version.map(readVersion).getOrElse(meta))
 
   /** Version manifest read, history-floor-checked (TableMeta.readRetained). */
   private def readVersion(v: Long): TableMeta =
@@ -83,10 +99,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   /** Scan including the hidden `auto_incrementing_id` column — needed to
     * address individual rows of a non-unique-PK table for UPDATE/DELETE
     * (reference: ColumnSchema.java:529 nonUniqueKey()). */
-  def scanWithHidden(version: Option[Long] = None): DataFrame = {
-    val m = version.map(readVersion).getOrElse(meta)
-    scanMeta(m)
-  }
+  def scanWithHidden(version: Option[Long] = None): DataFrame =
+    read(version.map(readVersion).getOrElse(meta), hidden = true)
 
   /** Time-travel by wall-clock ms (kudu.snapshotTimestampMs read option,
     * kudu-spark DefaultSource.scala:74). */
@@ -103,9 +117,11 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * convert fails loudly. Delta files prune by their recorded first-key
     * bounds too (delta stats, tablet/deltafile.h): a delta file whose
     * interval cannot meet the predicate holds no delta for any row that
-    * satisfies it, which is sound because the filters apply ABOVE the MOR
-    * union. `assertPrune = true` requires the filters to keep at most
-    * half of this manifest's base files (test/verification hook). */
+    * satisfies it, which is sound because the filters apply ABOVE the
+    * merge-on-read. The scan reads the manifest restricted to the kept
+    * files, so its pruning never depends on how the optimizer re-derives
+    * the predicate. `assertPrune = true` requires the filters to keep at
+    * most half of this manifest's base files (test/verification hook). */
   def scanPruned(filters: Seq[org.apache.spark.sql.sources.Filter],
       version: Option[Long] = None,
       assertPrune: Boolean = false): DataFrame = {
@@ -113,22 +129,21 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val conds = filters.map(f => graft.sources.GraftRelation.toColumn(f)
       .getOrElse(throw new IllegalArgumentException(
         s"scanPruned cannot apply filter $f")))
-    val kept = graft.sources.PartitionPruner.pruneFiles(m, m.baseFiles, filters)
-    if (assertPrune && kept.length * 2 > m.baseFiles.length)
+    val kept = prunedTo(m, filters)
+    if (assertPrune && kept.baseFiles.length * 2 > m.baseFiles.length)
       throw new IllegalStateException(
         s"pruned scan of $location must keep at most half its base files: " +
-          s"kept ${kept.length} of ${m.baseFiles.length} for " +
+          s"kept ${kept.baseFiles.length} of ${m.baseFiles.length} for " +
           filters.mkString(", "))
-    val keepDelta = graft.sources.PartitionPruner.pruneFiles(m, m.deltaFiles, filters)
-    val full = scanFiles(m, kept, keepDelta)
-    val visible =
-      if (m.hasAutoInc) full.select(m.visibleColumns.map(c => col(c.name)): _*)
-      else full
-    conds.reduceOption(_ && _).map(visible.filter).getOrElse(visible)
+    conds.reduceOption(_ && _).map(read(kept).filter).getOrElse(read(kept))
   }
 
-  private def scanMeta(m: TableMeta): DataFrame =
-    scanFiles(m, m.baseFiles, m.deltaFiles)
+  /** `m` restricted to the base and delta files `filters` can match. */
+  private def prunedTo(m: TableMeta,
+      filters: Seq[org.apache.spark.sql.sources.Filter]): TableMeta =
+    m.copy(
+      baseFiles = graft.sources.PartitionPruner.pruneFiles(m, m.baseFiles, filters),
+      deltaFiles = graft.sources.PartitionPruner.pruneFiles(m, m.deltaFiles, filters))
 
   /**
    * Table snapshot pruned to what can possibly match `batch` on `joinKeys`
@@ -154,7 +169,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     // pays when the full scan it can avoid is substantial. Small tables
     // take the plain scan (local fixtures sit here; a 100 TB table never).
     if (m.baseFiles.map(f => fileSize(f.path)).sum < PresencePruneMinBytes)
-      return scanMeta(m)
+      return read(m, hidden = true)
     val hashCols = m.hash.flatMap(_.cols)
     // per-range hash overrides make the bucket id range-dependent; the
     // range column is not a join key, so bucket pruning is off there
@@ -164,7 +179,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       m.baseFiles.exists(_.bucket.isDefined)
     val leadKey = m.keyCols.headOption
       .filter(k => joinKeys.contains(k) && batch.columns.contains(k))
-    if (!canBucket && leadKey.isEmpty) return scanMeta(m)
+    if (!canBucket && leadKey.isEmpty) return read(m, hidden = true)
     // cast to table types first: murmur3(5:int) != murmur3(5:long), and a
     // raw caller batch may carry narrower key types than the table
     def typed(n: String): Column = col(n).cast(m.column(n).dataType)
@@ -180,61 +195,11 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         val buckets = probe.getSeq[Int](0).toSet
         m.baseFiles.filter(f => f.bucket.forall(buckets.contains))
       }
-    val scanned = scanFiles(m, keepBase, m.deltaFiles)
+    val scanned = read(m.copy(baseFiles = keepBase), hidden = true)
     leadKey match {
       case Some(k) if probe.get(1) != null =>
         scanned.filter(col(k) >= lit(probe.get(1)) && col(k) <= lit(probe.get(2)))
       case _ => scanned
-    }
-  }
-
-  /**
-   * Catalyst-integrated scan: the base fileset is served through a custom
-   * [[graft.sources.GraftFileIndex]], so filters the optimizer pushes to the
-   * scan prune hash-bucket/range files automatically — no explicit
-   * `scanPruned` call needed in the DataFrame path. Falls back to [[scan]]
-   * when the base spans schema generations or carries renamed hash columns
-   * (the index prunes on physical names).
-   */
-  def scanIndexed(version: Option[Long] = None): DataFrame = {
-    val m = version.map(readVersion).getOrElse(meta)
-    val groups = m.baseFiles.groupBy(_.colIds)
-    val hashColsRenamed = m.hash.flatMap(_.cols)
-      .exists(c => m.columns.find(_.name == c).exists(cm => cm.physName != cm.name))
-    if (groups.size != 1 || hashColsRenamed) return scan(version)
-    val present = groups.keys.head.toSet
-    val physFields = m.columns.flatMap(c => physGenOf(c, present))
-      .map { case (n, t) => StructField(n, t, nullable = true) }
-    val index = new graft.sources.GraftFileIndex(spark, m, m.baseFiles)
-    val raw = org.apache.spark.sql.GraftSqlBridge
-      .ofFileIndex(spark, index, StructType(physFields))
-    val base = raw.select(m.columns.map { c =>
-      physGenOf(c, present) match {
-        case Some((n, _)) => col(n).cast(c.dataType).as(c.name)
-        case None         => defaultLit(c).as(c.name)
-      }
-    }: _*)
-    val full = morCombine(m, base, m.deltaFiles)
-    if (m.hasAutoInc) full.select(m.visibleColumns.map(c => col(c.name)): _*) else full
-  }
-
-  private def scanFiles(m: TableMeta, baseFiles: Seq[DataFileMeta],
-      deltaFiles: Seq[DataFileMeta]): DataFrame =
-    morCombine(m, readFileGroup(m, baseFiles, delta = false), deltaFiles)
-
-  private def morCombine(m: TableMeta, base0: DataFrame,
-      deltaFiles: Seq[DataFileMeta]): DataFrame = {
-    val base = dropMaskBase(m, base0)
-    if (deltaFiles.isEmpty) base
-    else {
-      val dLatest = latestDeltas(m, deltaFiles)
-      val dBytes = GraftTable.deltaBytes(deltaFiles)
-      val dKeys0 = dLatest.select(m.keyCols.map(col): _*)
-      val dKeys = if (dBytes < GraftTable.broadcastDeltaBytes) broadcast(dKeys0) else dKeys0
-      val live = base.join(dKeys, m.keyCols, "left_anti")
-      val upserts = dLatest.filter(col(OpCol) =!= lit(OpDelete))
-        .select(m.columns.map(c => col(c.name).cast(c.dataType)): _*)
-      live.unionByName(upserts)
     }
   }
 
@@ -280,9 +245,12 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       (GraftTable.deltaBytes(files) + GraftTable.CdcFoldTargetBytes - 1) /
         GraftTable.CdcFoldTargetBytes)).toInt
 
-  /** Reads a set of files, remapping physical→current logical names per
-    * schema generation (GetMappedReadProjection analog, common/schema.cc) and
-    * filling later-added columns with their defaults. */
+  /** Reads delta files (or, for `compactTablet`, one tablet's base files)
+    * as a DataFrame, remapping physical→current logical names per schema
+    * generation (GetMappedReadProjection analog, common/schema.cc) and
+    * filling later-added columns with their defaults. Table reads go
+    * through the V2 scan instead, which applies the same remap per file
+    * ([[generationRead]]). */
   private def readFileGroup(m: TableMeta, files: Seq[DataFileMeta], delta: Boolean): DataFrame = {
     if (files.isEmpty) {
       val s = if (delta) deltaStruct(m) else m.schema
@@ -331,6 +299,38 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     else c.priorGenerations.reverseIterator
       .find(g => present.contains(g.id))
       .map(g => (g.physName, DataType.fromJson(g.dataTypeJson)))
+
+  /** How the V2 scan reads files carrying the `present` column ids as the
+    * logical fields `out` (table columns, plus non-table fields such as the
+    * delta op column, read as they are): the physical read schema
+    * ([[physGenOf]]), the projection to `out` (a renamed column moves by
+    * position, a widened one is cast, an absent one reads its read
+    * default) and, when `masked`, the predicate keeping rows no pending
+    * range drop killed — both bound to the physical row, resolved by the
+    * analyzer on the driver as [[readFileGroup]]'s are; no job runs. */
+  private[graft] def generationRead(m: TableMeta, present: Set[Int],
+      out: Seq[StructField], masked: Boolean): (StructType,
+      Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      Option[org.apache.spark.sql.catalyst.expressions.Expression]) = {
+    val mask = if (masked) droppedRows(m) else None
+    val (extra, outCols) = out.partition(f => !m.columns.exists(_.name == f.name))
+    val cols = (outCols.map(f => m.column(f.name)) ++
+      mask.toSeq.flatMap(_ => m.range.get.columns.map(m.column))).distinct
+    val phys = StructType(cols.flatMap(c => physGenOf(c, present)).distinct
+      .map { case (n, dt) => StructField(n, dt) } ++ extra)
+    val logical = spark.createDataFrame(java.util.Collections.emptyList[Row](), phys)
+      .select(cols.map(c => physGenOf(c, present) match {
+        case Some((n, _)) => col(n).cast(c.dataType).as(c.name)
+        case None         => defaultLit(c).as(c.name)
+      }) ++ extra.map(f => col(f.name)): _*)
+    val plan = mask.fold(logical)(d => logical.filter(!d))
+      .select(out.map(f => col(f.name)): _*).queryExecution.analyzed
+    val org.apache.spark.sql.catalyst.planning.PhysicalOperation(projects, conds, rel) = plan
+    def bind(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+      org.apache.spark.sql.catalyst.expressions.BindReferences.bindReference(e, rel.output)
+    (phys, projects.map(bind(_)),
+      conds.reduceOption(org.apache.spark.sql.catalyst.expressions.And).map(bind))
+  }
 
   private def deltaStruct(m: TableMeta): StructType =
     StructType(m.schema.fields.map(_.copy(nullable = true)) ++
@@ -492,15 +492,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     // semi-join re-applies exact equality). Without this the ghost check
     // reads the ENTIRE v1 snapshot for a one-key delete — at 100 TB the
     // difference between a tablet read and a table read.
-    val v1Keys = {
-      val ivFilters = keyIntervalFilters(m2, inRange)
-      val v1Scan =
-        if (ivFilters.isEmpty) scanWithHidden(Some(v1))
-        else scanFiles(m1,
-          graft.sources.PartitionPruner.pruneFiles(m1, m1.baseFiles, ivFilters),
-          graft.sources.PartitionPruner.pruneFiles(m1, m1.deltaFiles, ivFilters))
-      v1Scan.select(m2.keyCols.map(col): _*)
-    }
+    val v1Keys = read(prunedTo(m1, keyIntervalFilters(m2, inRange)), hidden = true)
+      .select(m2.keyCols.map(col): _*)
     val dels = latest.filter(col(OpCol) === OpDelete)
       .join(v1Keys, m2.keyCols, "left_semi")
     val ups = latest.filter(col(OpCol) =!= OpDelete)
@@ -717,7 +710,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val cm = m.column(colName)
     require(cm.dataType == StringType, s"$colName is not a string column")
     require(length > 0, "varchar length must be positive")
-    val over = scanMeta(m).filter(org.apache.spark.sql.functions.length(col(colName)) > length)
+    val over = read(m, hidden = true).filter(org.apache.spark.sql.functions.length(col(colName)) > length)
     if (over.limit(1).count() > 0)
       throw new IllegalArgumentException(
         s"existing rows of ${m.name}.$colName exceed varchar($length)")
@@ -817,7 +810,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   /** SQL-style UPDATE ... SET ... WHERE — materializes the updated rows. */
   def updateWhere(condition: Column, set: Map[String, Column]): Unit = withCommitRetry {
     val m = meta
-    val updated = scanMeta(m).filter(condition).select(
+    val updated = read(m, hidden = true).filter(condition).select(
       m.columns.map { c =>
         set.get(c.name).map(_.cast(c.dataType).as(c.name)).getOrElse(col(c.name))
       }: _*)
@@ -851,7 +844,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val m = meta
     val batch = conform(m, assignAutoInc(m, df))
     val newKeys = batch.select(m.keyCols.map(col): _*)
-    val gone = scanMeta(m).select(m.keyCols.map(col): _*)
+    val gone = read(m, hidden = true).select(m.keyCols.map(col): _*)
       .join(newKeys, m.keyCols, "left_anti")
     val tombstones = tombstoneRows(m, gone).withColumn(OpCol, lit(OpDelete))
     commitDelta(m, batch.withColumn(OpCol, lit(OpUpsert)).unionByName(tombstones),
@@ -905,7 +898,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   /** DELETE WHERE — resolves matching PKs at current snapshot then deletes. */
   def deleteWhere(condition: Column): Unit = withCommitRetry {
     val m = meta
-    val keys = scanMeta(m).filter(condition).select(m.keyCols.map(col): _*)
+    val keys = read(m, hidden = true).filter(condition).select(m.keyCols.map(col): _*)
     commitDelta(m, tombstoneRows(m, keys).withColumn(OpCol, lit(OpDelete)),
       "delete")
   }
@@ -1576,17 +1569,6 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     }
   }
 
-  /** Compact only if deltas are pending — the convenience gate before a
-    * DSv2 catalog read on a layout the V2 merge-on-read overlay cannot
-    * serve (multi-component hash, pending range drops, deltas past the
-    * broadcast bound, renamed/widened columns — see
-    * sources/v2/MorOverlay.scala for what the overlay does handle).
-    * Returns this table, so `Tables.readonly(...).compactForV2()` chains. */
-  def compactForV2(): GraftTable = {
-    if (meta.deltaFiles.nonEmpty) compact()
-    this
-  }
-
   /** Merge deltas into a fresh hash/range-partitioned, PK-sorted base and
     * clear the delta set (minor+major delta compaction + rowset merge analog,
     * tablet/compaction.cc, tablet/delta_compaction.cc). */
@@ -1668,7 +1650,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       if (m.baseFiles.forall(_.rows >= 0L))
         Some(m.baseFiles.map(_.rows).sum + m.deltaFiles.map(f => math.max(0L, f.rows)).sum)
       else None
-    buildClusterSpecFrom(m, zcols, nFiles, scanMeta(m), manifestRows)
+    buildClusterSpecFrom(m, zcols, nFiles, read(m, hidden = true), manifestRows)
   }
 
   /** Spec over an explicit frame: compactTablet clusters one tablet with
@@ -1744,7 +1726,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       // the write must see the clusterBy being COMMITTED (the first
       // cluster() rewrite happens before the ids land in the manifest) so
       // boundsColumns prioritizes the cluster columns inside the zone-map cap
-      val files = writeFileset(a, m.copy(clusterBy = newClusterBy), scanMeta(m), v,
+      val files = writeFileset(a, m.copy(clusterBy = newClusterBy), read(m, hidden = true), v,
         BaseToken, Layout.Base(spec), v,
         // snapshot bytes from the manifest — never run the optimizer over
         // the MOR fold just to size the write
@@ -1944,16 +1926,15 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     } else rangeKeyExprM(m, r, col) === lit(d.key)
   }
 
-  /** Row mask for dropped ranges over a base scan. Base files never
-    * postdate a live drop record (compaction — the only later base write —
-    * clears the records), so the mask is unconditional on base rows; files
-    * with the dropped coordinate were already removed from the fileset and
-    * this only affects coordinate-less (zero-copy registered) bases. */
-  private def dropMaskBase(m: TableMeta, base: DataFrame): DataFrame =
+  /** The rows pending range drops killed, as a predicate over the range
+    * columns (None: no drop pending). Base files never postdate a live drop
+    * record (compaction clears the records), so the V2 scan masks the base
+    * rows that can hold them — those of coordinate-less files — with it. */
+  private def droppedRows(m: TableMeta): Option[Column] =
     (m.rangeDrops, m.range) match {
       case (drops, Some(r)) if drops.nonEmpty =>
-        base.filter(!drops.map(d => dropRowPred(m, r, d)).reduce(_ || _))
-      case _ => base
+        Some(drops.map(d => dropRowPred(m, r, d)).reduce(_ || _))
+      case _ => None
     }
 
   /** Seq-aware mask for dropped ranges over delta rows: a delta row in a
@@ -2717,9 +2698,9 @@ object GraftTable {
   private val SeqPreservingFolds = Set("merge_tail", "compact_deltas")
   /** Merge-on-read broadcast bound for the delta tail, chosen PER SCAN
     * (`graft.mor.broadcastBytes` remains an explicit override — specs use
-    * it to force past-bound paths with tiny data). Past the bound the DSv1
-    * path joins without a broadcast hint and the V2 overlay shuffles
-    * deltas into per-route spills instead of broadcasting.
+    * it to force past-bound paths with tiny data). Past the bound the V2
+    * overlay shuffles deltas into per-route spills instead of
+    * broadcasting.
     *
     * The adaptive default derives from what the session already declares
     * about broadcast appetite instead of a fixed engine constant (the
@@ -3142,7 +3123,8 @@ object GraftTable {
     * statistics only — no data pages read), encoded order-preservingly.
     * (None, None) when statistics are absent, the column is all-null, or
     * the type is unsupported — callers treat that as "file can hold any
-    * key" and keep today's compact-first posture. */
+    * key" (past the broadcast bound the scan then reads such files as
+    * one split). */
   private[graft] def parquetKeyBounds(p: String, physName: String,
       dt: org.apache.spark.sql.types.DataType): (Option[String], Option[String]) = {
     val st = parquetFileStats(p, Seq((0, physName, dt)))

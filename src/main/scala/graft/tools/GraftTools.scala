@@ -78,7 +78,7 @@ object GraftTools {
     * path using the JSON predicate grammar (E1). */
   def scanTable(table: GraftTable, predicatesJson: Option[String] = None,
       columns: Seq[String] = Nil): DataFrame = {
-    val base = table.scanIndexed()
+    val base = table.scan()
     val filtered = predicatesJson.fold(base)(j => base.filter(parsePredicates(j)))
     if (columns.isEmpty) filtered else filtered.select(columns.map(col): _*)
   }

@@ -45,11 +45,12 @@ object VectorIndex {
 
   /** (id, v): L2-normalized double vectors — the same expression shape as
     * the pipeline's normalizedVecs, so an index built from the embeddings
-    * table reproduces p13's assignment bit-for-bit. Null vectors drop (a
-    * vector-less row has no cell). */
+    * table reproduces p13's assignment bit-for-bit. Null and zero-norm
+    * vectors drop: neither has a direction, so neither has a cell (and
+    * normalizing a zero vector would divide by zero). */
   private def normalized(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     val v = toDouble(col(vecCol))
-    df.filter(col(vecCol).isNotNull)
+    df.filter(col(vecCol).isNotNull && l2norm(v) =!= 0.0)
       .select(col(idCol),
         zip_with(v, array_repeat(l2norm(v), size(v)), (x, n) => x / n).as("v"))
   }

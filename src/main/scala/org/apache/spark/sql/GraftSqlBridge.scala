@@ -82,11 +82,6 @@ object GraftSqlBridge {
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
 
-  /** Catalyst data filter → public sources.Filter (for metadata pruning). */
-  def translateFilter(e: Expression): Option[sources.Filter] =
-    org.apache.spark.sql.execution.datasources.DataSourceStrategy
-      .translateFilter(e, supportNestedPredicatePushdown = false)
-
   /** Re-wrap an already-executed plan's InternalRow RDD as a batch
     * DataFrame WITHOUT moving rows to the driver — the standard pattern for
     * streaming Sinks (the incoming micro-batch DataFrame carries a streaming
@@ -167,6 +162,11 @@ object GraftSqlBridge {
         ownsDeltas = i == 0)
     }.toSeq
   }
+
+  /** The key a planned file carries in its input partition
+    * (`PartitionedFile.urlEncodedPath`) for manifest path `path`. */
+  def fileKey(path: String): String =
+    org.apache.spark.paths.SparkPath.fromPath(new org.apache.hadoop.fs.Path(path)).urlEncoded
 
   private def partitionedFiles(
       paths: Seq[String]): Array[execution.datasources.PartitionedFile] = {
@@ -283,24 +283,5 @@ object GraftSqlBridge {
       new TaskID(new JobID("graft", 0), TaskType.MAP, 0), 0)
     new execution.datasources.parquet.ParquetOutputWriter(path,
       new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf, attempt))
-  }
-
-  /** DataFrame over a HadoopFsRelation built on a custom FileIndex — the
-    * extension-library path to metadata-controlled file listings. */
-  def ofFileIndex(
-      session: SparkSession,
-      index: org.apache.spark.sql.execution.datasources.FileIndex,
-      dataSchema: types.StructType): DataFrame = {
-    val spark = session.asInstanceOf[classic.SparkSession]
-    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(
-      location = index,
-      partitionSchema = types.StructType(Nil),
-      dataSchema = dataSchema,
-      bucketSpec = None,
-      fileFormat =
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      options = Map.empty)(spark)
-    classic.Dataset.ofRows(spark,
-      org.apache.spark.sql.execution.datasources.LogicalRelation(relation))
   }
 }

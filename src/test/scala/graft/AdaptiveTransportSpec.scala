@@ -184,5 +184,11 @@ class AdaptiveTransportSpec extends AnyFunSuite {
       Seq(org.apache.spark.sql.sources.EqualTo("k", 1L)))
     assert(held.nonEmpty && held.length < t.meta.deltaFiles.length)
     assert(scan.metrics(graft.sources.v2.GraftV2Scan.DeltasBroadcast).value == held.length)
+    // the engine's own read face plans the same way: a `scan()` get costs
+    // what the SQL get costs
+    val ((sJobs, sStages), sRows) = TaggedJobs.count(spark)(
+      t.scan().where(col("k") === 1).select("v").collect())
+    assert(sRows.map(_.getString(0)).toSeq == Seq("w1"))
+    assert((sJobs, sStages) == (2, 2), s"scan() (jobs, stages) = ${(sJobs, sStages)}")
   }
 }

@@ -69,6 +69,22 @@ class ColumnarMorSpec extends AnyFunSuite {
     }
   }
 
+  test("a dirty batch keeps its surviving rows' nulls") {
+    // one bucket, so the upsert's key dirties the batch every base row is in
+    val wh = Files.createTempDirectory("graft-cm-null-").toString
+    val df = (1 to 20).map(i => (i.toLong, if (i % 3 == 0) null else s"a$i")).toDF("k", "v")
+    val t = GraftTable.create(spark, s"$wh/n", "n", df.schema, Seq("k"),
+      Seq(HashComponent(Seq("k"), 1)), data = Some(df))
+    t.upsert(Seq((1L, "u1")).toDF("k", "v"))
+    spark.conf.set("spark.sql.catalog.gcmn", classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gcmn.warehouse", wh)
+    assertColumnar(spark.table("gcmn.n"))
+    val want = (1 to 20).map(i => i.toLong ->
+      (if (i == 1) "u1" else if (i % 3 == 0) null else s"a$i")).toMap
+    assert(stateOf(spark.table("gcmn.n")) == want)
+    assert(rowStateOf("gcmn.n") == want)
+  }
+
   test("delta-carrying hash table serves columnar batches, matches DSv1") {
     val wh = Files.createTempDirectory("graft-cmor1-").toString
     val df = (1 to 400).map(i => (i.toLong, s"a$i")).toDF("k", "v")

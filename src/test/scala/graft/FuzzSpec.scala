@@ -34,6 +34,22 @@ class FuzzSpec extends AnyFunSuite {
     assert(audit.isEmpty, s"footer audit seed=$seed: $audit")
   }
 
+  /** `check` of the end state at `loc` read through SQL V2 — a catalog
+    * `cat` over its parent dir — with the default reader, then with the
+    * row-based overlay (`graft.mor.columnar=false`). */
+  private def sqlReads(loc: String, cat: String)(
+      check: (org.apache.spark.sql.DataFrame, String) => Unit): Unit = {
+    val whName = java.nio.file.Paths.get(loc).getFileName.toString
+    spark.conf.set(s"spark.sql.catalog.$cat",
+      classOf[graft.sources.v2.GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.warehouse",
+      java.nio.file.Paths.get(loc).getParent.toString)
+    check(spark.table(s"$cat.`$whName`"), "SQL V2")
+    spark.conf.set("graft.mor.columnar", "false")
+    try check(spark.table(s"$cat.`$whName`"), "SQL V2 row-based")
+    finally spark.conf.unset("graft.mor.columnar")
+  }
+
   private def runCase(seed: Long, nOps: Int,
       hash: Seq[HashComponent] = Seq(HashComponent(Seq("k"), 2))): Unit = {
     val rnd = new Random(seed)
@@ -177,6 +193,24 @@ class FuzzSpec extends AnyFunSuite {
       val got = t.changes(v1, v2).select(col("k"), col("_deleted"))
         .collect().map(r => r.getInt(0) -> r.getBoolean(1)).toMap
       assert(got == expected, s"diff v$v1->v$v2 mismatch seed=$seed")
+    }
+    // the CDC faces across every consecutive pair of surviving snapshots
+    // (the op mix folds, compacts and merges tails between them):
+    // changesSince applied to the older model gives the newer one, and
+    // touchedKeys covers every key on which the two differ
+    live.sliding(2).filter(_.size == 2).foreach { pair =>
+      val (va, ma) = pair(0)
+      val (vb, mb) = pair(1)
+      val applied = t.changesSince(va, vb).select(col("k"), col("v"), col("_deleted"))
+        .collect().foldLeft(ma) { (m, r) =>
+          if (r.getBoolean(2)) m - r.getInt(0)
+          else m + (r.getInt(0) -> (if (r.isNullAt(1)) None else Some(r.getInt(1))))
+        }
+      assert(applied == mb, s"changesSince v$va->v$vb mismatch seed=$seed")
+      val touched = t.touchedKeys(va, vb, Seq("k")).collect().map(_.getInt(0)).toSet
+      val differ = (ma.keySet ++ mb.keySet).filter(k => ma.get(k) != mb.get(k))
+      assert(differ.subsetOf(touched),
+        s"touchedKeys v$va->v$vb misses ${differ -- touched} seed=$seed")
     }
     // backup-chain differential: full backup at the FIRST surviving
     // snapshot, one increment per consecutive snapshot pair (pinned by
@@ -358,6 +392,9 @@ class FuzzSpec extends AnyFunSuite {
 
     assert(stateOf(t.scan()) == model.toMap, s"final state mismatch seed=$seed")
     assertFooters(t, seed)
+    sqlReads(loc, s"gfuzzr$seed") { (df, tag) =>
+      assert(stateOf(df) == model.toMap, s"$tag state mismatch seed=$seed")
+    }
     snaps.foreach { case (ver, m) =>
       assert(stateOf(t.scan(Some(ver))) == m, s"snapshot v$ver mismatch seed=$seed")
     }
@@ -474,6 +511,10 @@ class FuzzSpec extends AnyFunSuite {
     checkState(t.scan(), cols.map(c => (c.id, c.name)).toList,
       rows.map { case (kk, m) => kk -> m.toMap }.toMap, "final")
     assertFooters(t, seed)
+    sqlReads(loc, s"gfuzzs$seed") { (df, tag) =>
+      checkState(df, cols.map(c => (c.id, c.name)).toList,
+        rows.map { case (kk, m) => kk -> m.toMap }.toMap, tag)
+    }
     snaps.foreach { case (ver, colsAt, exp) =>
       checkState(t.scan(Some(ver)), colsAt, exp, s"snapshot v$ver")
     }
@@ -486,9 +527,8 @@ class FuzzSpec extends AnyFunSuite {
     * alter_table-randomized-test.cc analog): SQL column ALTERs (add / drop /
     * rename) interleave with SQL DML, the CALL txn_* surface, and V2 reads
     * forced through the shuffle-spill overlay. Three contracts raced here:
-    * (a) a rename makes physName diverge from the logical name, which the
-    * V2 reader refuses BY DESIGN — the refusal must surface (and dropping
-    * the renamed column restores readability); (b) a transaction spanning
+    * (a) a rename makes physName diverge from the logical name, and the V2
+    * read must serve the column under its new name at once; (b) a transaction spanning
     * an ALTER must abort on commit (optimistic version guard) publishing
     * NONE of its staged ops; (c) the spill overlay must serve every
     * post-ALTER schema (added/dropped columns change the internal read
@@ -511,6 +551,16 @@ class FuzzSpec extends AnyFunSuite {
     var nextCol = 1
     // model: k -> (v, extraCol -> value)
     val model = mutable.Map[Int, (Int, Map[String, Option[Int]])]()
+    def stateOf(df: org.apache.spark.sql.DataFrame): Map[Int, (Int, Map[String, Option[Int]])] = {
+      val schema = df.schema
+      df.collect().map { r =>
+        r.getInt(schema.fieldIndex("k")) -> (r.getInt(schema.fieldIndex("v")),
+          extraCols.map { c =>
+            val i = schema.fieldIndex(c)
+            c -> (if (r.isNullAt(i)) None else Some(r.getInt(i)))
+          }.toMap)
+      }.toMap
+    }
 
     for (_ <- 0 until nOps) {
       val k = rnd.nextInt(Keyspace)
@@ -522,8 +572,8 @@ class FuzzSpec extends AnyFunSuite {
           model(k) = (v, extraCols.zip(extras.map(Some(_))).toMap)
         case 3 =>
           spark.sql(s"DELETE FROM $tbl WHERE k = $k"); model.remove(k)
-        case 4 => // ADD COLUMN (no default — defaulted-absent refuses V2 reads
-          // until compact, a separate contract already spec'd elsewhere)
+        case 4 => // ADD COLUMN (no default; defaulted-absent reads are
+          // V2LayoutsSpec's)
           val name = s"a$nextCol"; nextCol += 1
           spark.sql(s"ALTER TABLE $tbl ADD COLUMNS ($name INT)")
           extraCols :+= name
@@ -535,16 +585,15 @@ class FuzzSpec extends AnyFunSuite {
             extraCols = extraCols.patch(i, Nil, 1)
             model.mapValuesInPlace { case (_, (vv, m)) => (vv, m - c) }
           }
-        case 6 => // RENAME: V2 read must refuse (physName != name), engine
-          // scan still serves; dropping the renamed column restores V2 reads
+        case 6 => // RENAME: physName now differs from the logical name;
+          // the V2 read serves the column under its new name at once
           if (extraCols.nonEmpty) {
             val i = rnd.nextInt(extraCols.size); val c = extraCols(i)
             spark.sql(s"ALTER TABLE $tbl RENAME COLUMN $c TO ${c}x")
-            val e = intercept[Exception] { spark.table(tbl).count() }
-            assert(e.getMessage.contains("DSv1"), s"rename refusal: ${e.getMessage}")
-            spark.sql(s"ALTER TABLE $tbl DROP COLUMN ${c}x")
-            extraCols = extraCols.patch(i, Nil, 1)
-            model.mapValuesInPlace { case (_, (vv, m)) => (vv, m - c) }
+            extraCols = extraCols.updated(i, s"${c}x")
+            model.mapValuesInPlace { case (_, (vv, m)) => (vv, m - c + (s"${c}x" -> m(c))) }
+            assert(stateOf(spark.table(tbl)) == model.toMap,
+              s"V2 state after rename mismatch seed=$seed")
           }
         case 7 => // txn spanning an ALTER: the version guard must abort the
           // commit and publish NOTHING (the ALTER itself lands)
@@ -576,16 +625,6 @@ class FuzzSpec extends AnyFunSuite {
       }
     }
 
-    def stateOf(df: org.apache.spark.sql.DataFrame): Map[Int, (Int, Map[String, Option[Int]])] = {
-      val schema = df.schema
-      df.collect().map { r =>
-        r.getInt(schema.fieldIndex("k")) -> (r.getInt(schema.fieldIndex("v")),
-          extraCols.map { c =>
-            val i = schema.fieldIndex(c)
-            c -> (if (r.isNullAt(i)) None else Some(r.getInt(i)))
-          }.toMap)
-      }.toMap
-    }
     val want = model.toMap
     assert(stateOf(GraftTable.load(spark, loc).scan()) == want,
       s"engine state mismatch seed=$seed")

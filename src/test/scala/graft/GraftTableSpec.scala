@@ -12,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.HashComponent
 import graft.table.{GraftTable, PrimaryKeyException}
+import graft.SparkTestSession.FilesRead
 
 object SparkTestSession {
   lazy val spark: SparkSession = {
@@ -25,7 +26,16 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** `df.filesRead`: the files `df`'s graft scans plan to read
+    * ([[graft.plans.ScanRoots.filesRead]]; `Dataset.inputFiles` sees no
+    * files behind a V2 relation). */
+  implicit class FilesRead(df: DataFrame) {
+    def filesRead: Seq[String] =
+      graft.plans.ScanRoots.filesRead(df.queryExecution.optimizedPlan, _ => true).toSeq
+  }
 }
+
 
 class GraftTableSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark = SparkTestSession.spark
@@ -471,7 +481,7 @@ class GraftTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bucketsOf("1996") == Seq(0, 1, 2, 3), bucketsOf("1996").toString)
     // point lookup prunes per-range with each range's own modulus:
     // one candidate file among 1995's two buckets + one among 1996's four
-    val pruned = t.scanPruned(Seq(EqualTo("id", 7L))).inputFiles
+    val pruned = t.scanPruned(Seq(EqualTo("id", 7L))).filesRead
     assert(pruned.length == 2, pruned.mkString(","))
     assert(t.scanPruned(Seq(EqualTo("id", 7L))).filter(col("id") === 7L).count() == 1)
     // row content correct across mixed schemas

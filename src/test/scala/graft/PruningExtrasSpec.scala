@@ -8,6 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.{HashComponent, TableMeta}
 import graft.table.GraftTable
+import graft.SparkTestSession.FilesRead
+
 
 class PruningExtrasSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -21,13 +23,13 @@ class PruningExtrasSpec extends AnyFunSuite {
       Seq("a", "b"),
       hash = Seq(HashComponent(Seq("a"), 3), HashComponent(Seq("b"), 2)),
       data = Some(data))
-    assert(t.scanPruned(Nil).inputFiles.length == 6) // 3 × 2 buckets
+    assert(t.scanPruned(Nil).filesRead.length == 6) // 3 × 2 buckets
     // point lookup on both components → exactly one bucket file
     val one = t.scanPruned(Seq(EqualTo("a", 42L), EqualTo("b", 0L)))
-    assert(one.inputFiles.length == 1)
+    assert(one.filesRead.length == 1)
     assert(one.filter(col("a") === 42 && col("b") === 0).count() == 1)
     // constraint on only one component → no pruning (conservative)
-    assert(t.scanPruned(Seq(EqualTo("a", 42L))).inputFiles.length == 6)
+    assert(t.scanPruned(Seq(EqualTo("a", 42L))).filesRead.length == 6)
     // every row is found in the file its computed partition id points to
     val withPid = t.scan().withColumn("pid", t.partitionIdColumn())
       .withColumn("f", input_file_name()).collect()
@@ -43,23 +45,23 @@ class PruningExtrasSpec extends AnyFunSuite {
     def numFiles(df: org.apache.spark.sql.DataFrame): Long = {
       df.collect()
       df.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-          f.metrics("numFiles").value
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.metrics(graft.sources.v2.GraftV2Scan.FilesRead).value
       }.sum
     }
-    assert(numFiles(t.scanIndexed()) == 8)
-    assert(numFiles(t.scanIndexed().filter(col("id") === 42)) == 1)
-    assert(numFiles(t.scanIndexed().filter(col("id").isin(1L, 2L, 3L))) == 3)
+    assert(numFiles(t.scan()) == 8)
+    assert(numFiles(t.scan().filter(col("id") === 42)) == 1)
+    assert(numFiles(t.scan().filter(col("id").isin(1L, 2L, 3L))) == 3)
     // merge-on-read correctness on top of the indexed base
     t.upsert(Seq((42L, "X")).toDF("id", "v"))
     t.deleteWhere(col("id") === 100)
-    assert(t.scanIndexed().orderBy("id").collect().toSeq ==
+    assert(t.scan().orderBy("id").collect().toSeq ==
       t.scan().orderBy("id").collect().toSeq)
     // schema evolution → multiple generations → silent fallback, still correct
     t.addColumn("extra", org.apache.spark.sql.types.StringType, default = Some("d"))
     t.upsert(Seq((2000L, "new", "e")).toDF("id", "v", "extra"))
     t.compact() // compaction writes a fresh single-generation base again
-    assert(t.scanIndexed().filter(col("id") === 2000).count() == 1)
+    assert(t.scan().filter(col("id") === 2000).count() == 1)
   }
 
   test("scanAtTimestamp picks the right snapshot") {
@@ -84,18 +86,18 @@ class PruningExtrasSpec extends AnyFunSuite {
     (1 to 400).map(i => (i.toLong, s"v$i")).toDF("k", "v")
       .repartitionByRange(4, col("k")).write.parquet(raw)
     val t = GraftTable.register(spark, s"$wh/reg", "reg", raw, Seq("k"))
-    assert(t.scanPruned(Nil).inputFiles.length == 4)
+    assert(t.scanPruned(Nil).filesRead.length == 4)
     // point lookup → exactly the one file whose interval holds the key
     val one = t.scanPruned(Seq(EqualTo("k", 150L)))
-    assert(one.inputFiles.length == 1)
+    assert(one.filesRead.length == 1)
     assert(one.filter(col("k") === 150L).count() == 1)
     // range predicate spanning two files
     assert(t.scanPruned(Seq(GreaterThan("k", 150L), LessThanOrEqual("k", 250L)))
-      .inputFiles.length == 2)
+      .filesRead.length == 2)
     // IN list across distant files
-    assert(t.scanPruned(Seq(In("k", Array(5L, 395L)))).inputFiles.length == 2)
+    assert(t.scanPruned(Seq(In("k", Array(5L, 395L)))).filesRead.length == 2)
     // out-of-domain point lookup → nothing to scan
-    assert(t.scanPruned(Seq(EqualTo("k", 5000L))).inputFiles.isEmpty)
+    assert(t.scanPruned(Seq(EqualTo("k", 5000L))).filesRead.isEmpty)
     // results stay correct through the pruned path
     assert(t.scanPruned(Seq(LessThan("k", 101L))).filter(col("k") < 101)
       .count() == 100)

@@ -11,6 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.{HashComponent, RangeBound, RangeComponent}
 import graft.sources.PartitionPruner
 import graft.table.{GraftTable, PrimaryKeyException}
+import graft.SparkTestSession.FilesRead
 
 /**
  * Explicit [lower, upper) range-partition bounds (reference:
@@ -19,6 +20,7 @@ import graft.table.{GraftTable, PrimaryKeyException}
  * metadata-time pruning against the bound intervals, and the full
  * drop → re-add lifecycle with seq-aware masking.
  */
+
 class RangeBoundsSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -183,7 +185,7 @@ class RangeBoundsSpec extends AnyFunSuite {
       Seq(EqualTo("month", "2024-02"))).flatMap(_.rangeKey).toSet == Set("m2"))
     // engine read path agrees
     assert(t.scan().filter(col("month") === "2024-01").count() == 3)
-    assert(t.scanPruned(Seq(EqualTo("month", "2024-02"))).inputFiles.length
+    assert(t.scanPruned(Seq(EqualTo("month", "2024-02"))).filesRead.length
       <= m.baseFiles.count(f => Set("m1_big", "m2").contains(f.rangeKey.get)))
     // non-covered tuple writes error: before every bound / after every bound
     val bad1 = Seq((9, "2023-12", 5, "early")).toDF("id", "month", "tenant", "v")

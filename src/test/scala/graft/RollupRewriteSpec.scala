@@ -101,15 +101,14 @@ class RollupRewriteSpec extends AnyFunSuite {
       val afterMut = rows(q)
       assert(afterMut != want, "the direct plan must see the mutation")
 
-      // 5. refresh alone is not enough for the DIRECT-scan path: the base
-      // now carries a delta, so scan() plans the MOR overlay — not a bare
-      // file relation the rewrite can prove equal to the snapshot. (The V2
-      // relation path serves dirty bases; see the next test.) Compaction
-      // restores the clean snapshot; one more refresh re-arms the
-      // watermark past the compaction's version bump.
+      // 5. a refresh re-arms the rollup over the still-dirty base: scan()
+      // is the V2 relation over the whole current snapshot, which serves
+      // dirty bases like SQL does. Compaction bumps the version (stale
+      // again); one more refresh re-arms the watermark past it.
       assert(MaterializedRollup.refresh(spark, rollup))
-      assert(!readsRollup(q, rollup.location),
-        "a dirty base must not rewrite on the direct-scan path")
+      assert(readsRollup(q, rollup.location),
+        "a refreshed rollup must serve the dirty base's scan()")
+      assert(rows(q) == afterMut)
       t.compact()
       assert(MaterializedRollup.refresh(spark, rollup)) // watermark → post-compaction
       assert(readsRollup(q, rollup.location),
@@ -240,8 +239,9 @@ class RollupRewriteSpec extends AnyFunSuite {
       def qg = t.scan().agg(countDistinct(col("v")).as("nd"))
       assert(!readsRollup(qg, rollup.location),
         "subset grouping must never re-aggregate a distinct count")
-      // ... while the co-stored plain count still re-aggregates fine
-      def qn = t.scan().agg(count(lit(1)).as("n"))
+      // ... while the co-stored plain count still re-aggregates fine (the
+      // group-column predicate keeps the scan's own metadata count out)
+      def qn = t.scan().where(col("g") >= 0).agg(count(lit(1)).as("n"))
       assert(readsRollup(qn, rollup.location))
       assert(qn.collect().head.getLong(0) == 300L)
     } finally ServingRewrites.disarm(spark, rollup.location)
@@ -259,13 +259,17 @@ class RollupRewriteSpec extends AnyFunSuite {
         classOf[graft.sources.v2.GraftCatalog].getName)
       spark.conf.set("spark.sql.catalog.gmvrw3.warehouse", wh)
       def q = spark.sql("SELECT count(*) AS n, sum(v) AS sv FROM gmvrw3.b3")
-      // an EMPTY rollup's scan optimizes to a LogicalRDD (no file relation
-      // for the path detector) — the rewrite's signature here is the BASE
-      // V2 relation vanishing from the plan
+      // an EMPTY rollup holds no file for the path detector — the
+      // rewrite's signature here is the BASE relation vanishing from the
+      // plan (the rollup's own read is a V2 relation too)
       val p = q.queryExecution.optimizedPlan
       import org.apache.spark.sql.execution.datasources.v2.{DataSourceV2Relation, DataSourceV2ScanRelation}
-      assert(p.collectFirst { case r: DataSourceV2ScanRelation => r }.isEmpty &&
-        p.collectFirst { case r: DataSourceV2Relation => r }.isEmpty,
+      def base(r: DataSourceV2Relation) = r.table match {
+        case g: graft.sources.v2.GraftV2Table => g.graftLocation == t.location
+        case _ => false
+      }
+      assert(p.collectFirst { case r: DataSourceV2ScanRelation if base(r.relation) => r }.isEmpty &&
+        p.collectFirst { case r: DataSourceV2Relation if base(r) => r }.isEmpty,
         s"the V2 global aggregate must re-aggregate the (empty) rollup:\n$p")
       val r = q.collect().head
       assert(r.getLong(0) == 0L, s"count over empty must be 0: $r")

@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.catalog.{HashComponent, RangeComponent}
 import graft.table.GraftTable
 import graft.tools.GraftTools
+import graft.SparkTestSession.FilesRead
 
 /** DataSource ("graft" format), partition pruning, streaming, and tools. */
+
 class SourcesSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
@@ -57,9 +59,9 @@ class SourcesSpec extends AnyFunSuite {
 
   test("hash-bucket and range-partition file pruning") {
     val (_, t) = mkTable()
-    assert(t.scanPruned(Nil).inputFiles.length == 4)
-    assert(t.scanPruned(Seq(EqualTo("id", 42L))).inputFiles.length == 1)
-    val in3 = t.scanPruned(Seq(In("id", Array(1L, 2L, 3L)))).inputFiles.length
+    assert(t.scanPruned(Nil).filesRead.length == 4)
+    assert(t.scanPruned(Seq(EqualTo("id", 42L))).filesRead.length == 1)
+    val in3 = t.scanPruned(Seq(In("id", Array(1L, 2L, 3L)))).filesRead.length
     assert(in3 <= 3 && in3 >= 1)
     // pruned scan still contains the looked-up row
     assert(t.scanPruned(Seq(EqualTo("id", 42L))).filter(col("id") === 42).count() == 1)
@@ -69,21 +71,21 @@ class SourcesSpec extends AnyFunSuite {
       (i.toLong, java.sql.Timestamp.valueOf(s"${1995 + i % 5}-06-01 00:00:00"))).toDF("id", "d")
     val ot = GraftTable.create(spark, oloc, "o", odata.schema, Seq("id"),
       Seq(HashComponent(Seq("id"), 2)), Some(RangeComponent("d", "year")), data = Some(odata))
-    val all = ot.scanPruned(Nil).inputFiles.length
+    val all = ot.scanPruned(Nil).filesRead.length
     val one = ot.scanPruned(Seq(
       GreaterThanOrEqual("d", java.sql.Timestamp.valueOf("1996-01-01 00:00:00")),
-      LessThanOrEqual("d", java.sql.Timestamp.valueOf("1996-12-31 00:00:00")))).inputFiles.length
+      LessThanOrEqual("d", java.sql.Timestamp.valueOf("1996-12-31 00:00:00")))).filesRead.length
     assert(all == 10 && one == 2, s"all=$all one=$one")
     // exclusive year-start bound excludes the boundary year's partition
     // (data years 1995-1999 → `< 1997-01-01` keeps 1995+1996 = 4 files)
     val excl = ot.scanPruned(Seq(
-      LessThan("d", java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))).inputFiles.length
+      LessThan("d", java.sql.Timestamp.valueOf("1997-01-01 00:00:00")))).filesRead.length
     assert(excl == 4, s"excl=$excl")
     // ...one tick past the boundary keeps 1997 at the RANGE level, but the
     // per-file zone maps see that no 1997 row (all at 1997-06-01) can sit
     // below the cutoff and prune the two 1997 files anyway
     val incl = ot.scanPruned(Seq(
-      LessThan("d", java.sql.Timestamp.valueOf("1997-01-01 00:00:01")))).inputFiles.length
+      LessThan("d", java.sql.Timestamp.valueOf("1997-01-01 00:00:01")))).filesRead.length
     assert(incl == 4, s"incl=$incl")
     // the range-pruner's boundary conservatism, judged in isolation: strip
     // the zone maps and the 1997 files come back

@@ -177,12 +177,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     // filters evaluate over delta-emitted rows like base rows
     assert(spark.table("gspj2.t1").filter(col("k") === 101L)
       .select("v").as[String].head() == "new")
-    // compactForV2 is the convenience gate: compacts iff deltas pending
-    t.compactForV2()
-    assert(t.meta.deltaFiles.isEmpty)
-    val vBefore = t.currentVersion
-    t.compactForV2() // no deltas → no-op, no new version
-    assert(t.currentVersion == vBefore)
     assert(spark.table("gspj2.t1").filter(col("k") === 5)
       .select("v").as[String].head() == "changed")
   }
@@ -237,10 +231,10 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     assert(msgs(e).exists(_.contains("already present")), e.toString)
   }
 
-  test("renamed and widened columns are refused by V2 (need the DSv1 remap)") {
-    // the V2 parquet factory reads by logical name — a renamed/widened
-    // column lives in files under its physical name and would silently
-    // read null; the table must refuse, not mis-serve
+  test("renamed and widened columns read through V2 by column id") {
+    // files keep a renamed or widened column under its physical name and
+    // type; the V2 scan reads a renamed column by position and casts a
+    // widened one up, so both serve their values, never nulls
     val wh = Files.createTempDirectory("graft-wh4-").toString
     val df = (1 to 10).map(i => (i.toLong, i)).toDF("k", "n")
     val t = GraftTable.create(spark, s"$wh/ren", "ren", df.schema, Seq("k"),
@@ -248,13 +242,14 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     t.renameColumn("n", "m")
     spark.conf.set("spark.sql.catalog.gren", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gren.warehouse", wh)
-    val e1 = intercept[Exception] { spark.table("gren.ren").count() }
-    assert(e1.getMessage.contains("DSv1"), e1.getMessage)
+    val want = (1 to 10).map(i => i.toLong -> i.toLong).toMap
+    assert(spark.table("gren.ren").collect()
+      .map(r => r.getLong(0) -> r.getInt(1).toLong).toMap == want)
     val t2 = GraftTable.create(spark, s"$wh/wid", "wid", df.schema, Seq("k"),
       Seq(HashComponent(Seq("k"), 2)), data = Some(df))
     t2.widenColumnType("n", org.apache.spark.sql.types.LongType)
-    val e2 = intercept[Exception] { spark.table("gren.wid").count() }
-    assert(e2.getMessage.contains("DSv1"), e2.getMessage)
+    assert(spark.table("gren.wid").collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
   }
 
   test("multi-component hash layouts serve deltas through the MOR overlay") {
@@ -557,9 +552,9 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     assert(rc.contains(BigInt(100)), rc.toString)
   }
 
-  test("non-overlayable delta sets are still refused with the compact pointer") {
-    // a pending range-drop mask cannot be applied by the overlay → the
-    // scan must refuse rather than serve dropped rows
+  test("a pending range drop reads through V2 with its delta rows masked") {
+    // the dropped range's base files left the manifest; its delta rows
+    // written before the drop are masked by seq, so V2 serves neither
     val wh = Files.createTempDirectory("graft-wh3b-").toString
     val df = (1 to 40).map(i => (i.toLong, i.toLong, s"x$i")).toDF("k", "ts", "v")
     val t = GraftTable.create(spark, s"$wh/rdrop", "rdrop", df.schema, Seq("k"),
@@ -572,14 +567,13 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     t.dropRangeBound("low")
     spark.conf.set("spark.sql.catalog.gref2", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gref2.warehouse", wh)
-    val e = intercept[Exception] { spark.table("gref2.rdrop").count() }
-    assert(e.getMessage.contains("compact"), e.getMessage)
-    // the READ refusal must not block V2 WRITES: the write path delegates
-    // to the engine's layout-agnostic ops, so repeated INSERT INTO works
-    // even while the table stays V2-unreadable
+    assert(spark.table("gref2.rdrop").select("k").as[Long].collect().sorted.toSeq ==
+      (20L to 40L))
+    // V2 writes delegate to the engine's layout-agnostic ops
     spark.sql("INSERT INTO gref2.rdrop VALUES (100, 700, 'w1')")
     spark.sql("INSERT INTO gref2.rdrop VALUES (101, 707, 'w2')")
     assert(t.scan().filter(col("k") >= 100).count() == 2)
+    assert(spark.table("gref2.rdrop").count() == 23)
   }
 
   test("multi-component layouts co-partition: composite-keyed SPJ, no shuffle") {
@@ -643,13 +637,14 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     val t = GraftTable.load(spark, s"$wh/nt")
     assert(t.meta.column("n").comment.contains("counter"))
     assert(t.meta.keyCols == Seq("k") && t.meta.hash.head.buckets == 4)
-    // widening through SQL lands, and the V2 read guard then points the
-    // reader at the DSv1 remap path (physName != name after a widen)
+    // widening through SQL lands, and the V2 read casts the files written
+    // before it up to the wide type (physName != name after a widen)
     spark.sql("ALTER TABLE gddl.nt ALTER COLUMN n TYPE BIGINT")
     assert(t.meta.column("n").dataType == org.apache.spark.sql.types.LongType)
-    val e = intercept[Exception] { spark.table("gddl.nt").count() }
-    assert(e.getMessage.contains("DSv1"), e.getMessage)
-    assert(t.scan().count() == 3) // the engine path reads through the remap
+    assert(spark.table("gddl.nt").collect()
+      .map(r => r.getLong(0) -> (if (r.isNullAt(2)) -1L else r.getLong(2))).toMap ==
+      Map(1L -> -1L, 2L -> -1L, 3L -> 30L))
+    assert(t.scan().count() == 3)
     // storage-attribute TBLPROPERTIES map onto engine ALTERs
     spark.sql("ALTER TABLE gddl.nt SET TBLPROPERTIES (" +
       "'graft.compression'='gzip', 'graft.compression.v'='zstd', " +

