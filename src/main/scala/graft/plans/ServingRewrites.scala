@@ -67,9 +67,9 @@ object ServingRewrites extends Logging {
 
   /** Arm `t` — a persisted rollup or secondary index — in `spark`, and
     * inject its kind's rule (once per session). The registry's monitor
-    * also serializes the `extraOptimizations` read-append-write: two kinds
-    * arming concurrently (a catalog open racing a build) must not lose an
-    * append and silently disarm one rule for the session. */
+    * also serializes the `extraOptimizations` read-append-write ([[inject]]):
+    * two kinds arming concurrently (a catalog open racing a build) must not
+    * lose an append and silently disarm one rule for the session. */
   def arm(spark: SparkSession, t: GraftTable): Unit = arm(spark, t.location,
     t.properties)
 
@@ -79,11 +79,24 @@ object ServingRewrites extends Logging {
     registry.synchronized {
       registry.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Entry]())
         .put(loc, Entry(k, p(k.srcLocKey), k.cols(p)))
-      if (!spark.experimental.extraOptimizations.contains(k.rule))
-        spark.experimental.extraOptimizations =
-          spark.experimental.extraOptimizations :+ k.rule
+      inject(spark, k.rule)
     }
   }
+
+  /** Append `rule` (and `strategies`) to `spark`'s extra optimizations
+    * (planner strategies) once, under the registry's monitor. The inline
+    * point read ([[InlineReads]]) stays the last rule, so every serve sees
+    * the plan before it. */
+  private[plans] def inject(spark: SparkSession, rule: Rule[LogicalPlan],
+      strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] = Nil): Unit =
+    registry.synchronized {
+      val exp = spark.experimental
+      if (!exp.extraOptimizations.contains(rule)) {
+        val (inline, serving) = exp.extraOptimizations.partition(_ eq InlineReads)
+        exp.extraOptimizations = (serving :+ rule) ++ inline
+        exp.extraStrategies = exp.extraStrategies ++ strategies
+      }
+    }
 
   /** Drop `loc` from the registry. Its rule stays injected: with no entry
     * of its kind it is a no-op pattern match. */

@@ -94,6 +94,7 @@ class GraftCatalog extends TableCatalog with FunctionCatalog with ProcedureCatal
     try graft.plans.ServingRewrites.armFromWarehouse(
       SparkSession.active, warehouse)
     catch { case _: Throwable => () }
+    graft.plans.InlineReads.inject(SparkSession.active)
   }
 
   override def name(): String = catalogName
@@ -1798,6 +1799,19 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
   private[graft] def plannedFiles: Seq[String] =
     (meta.baseFiles ++ meta.deltaFiles).map(_.path)
 
+  /** Whether a read of this scan opens at most `bound` bytes: the pruned
+    * base files plus the delta files the filters can touch (what an
+    * inline read holds on the driver, graft.plans.InlineReads). Sizes
+    * stop at the first file past the bound, so a big table pays a few
+    * file stats, not one per file. */
+  private[graft] def opensAtMost(bound: Long): Boolean = {
+    val files = (prunedCutFiles() ++ graft.sources.PartitionPruner.pruneFiles(
+      meta, meta.deltaFiles, filters.toSeq ++ runtimeFilters)).iterator
+    var bytes = 0L
+    while (files.hasNext && bytes <= bound) bytes += GraftTable.fileSize(files.next().path)
+    bytes <= bound
+  }
+
   override def planInputPartitions(): Array[InputPartition] = {
     // one input partition per (composite) hash bucket = the SPJ grouping
     // unit, keyed by the per-component bucket ids (one key field per
@@ -1943,7 +1957,6 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         case None => GraftV2Scan.routeGroups(m, prunedFiles).map(_._1).toSet
       }
     val fallback = owned.toSeq.sorted.headOption.getOrElse(GraftV2Scan.OrphanRoute)
-    val tbl = GraftTable.load(spark, m.location)
     val inner = baseReader(internalSchema)
     // Columnar capability: `clean` routes pass the bare requiredSchema
     // reader through when no delta slice attaches to them.
@@ -1962,7 +1975,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     // transport, so the broadcast bound applies to the tail alone. Only a
     // current-generation routed file attaches (the slice reader reads by
     // physical name, with no remap); every other file rides the tail,
-    // whose read remaps columns (maskedDeltas). While a range drop is
+    // whose read remaps columns (generationReader). While a range drop is
     // pending every delta file rides the tail too, whose read masks the
     // dropped delta rows by seq.
     // Attachment additionally requires every planned base file to carry a
@@ -2015,21 +2028,17 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
       }
       val routeDerivable = routeRefCols.subsetOf(m.keyCols.toSet)
       val dirty = scala.collection.mutable.Set[String]()
-      if (keepTail.nonEmpty) { // a fully-flushed table plans with NO driver job
-        // the tail's raw delta rows, collected unfolded: one scan stage,
-        // no exchange, so the plan-time job is one job of one stage and
-        // touches no session conf. The driver holds at most the tail
-        // bytes the broadcast check above admitted, and folds them to
-        // latest-per-key with the slice readers' own fold. Every table
-        // column is collected, so the relation's scans of other columns
-        // share the rows.
+      if (keepTail.nonEmpty) { // a fully-flushed table reads no tail
+        // the tail's raw delta rows, read on the driver through the scan's
+        // own parquet readers (GraftV2Scan.readTail): no Spark job, no
+        // session conf. The driver holds at most the tail bytes the
+        // broadcast check above admitted, and folds them to latest-per-key
+        // with the slice readers' own fold. Every table column is read, so
+        // the relation's scans of other columns share the rows.
         val cols = m.columns.map(_.name)
         val colTypes = m.columns.map(_.dataType).toArray
         val rows = tails.computeIfAbsent(keepTail.map(_.path), _ =>
-          tbl.maskedDeltas(m, keepTail)
-            .select(cols.map(col) ++
-              Seq(col(GraftTable.OpCol), col(GraftTable.SeqCol), routeCol): _*)
-            .queryExecution.toRdd.map(_.copy()).collect())
+          GraftV2Scan.readTail(m, keepTail, routeCol))
         val (opAt, routeAt) = (cols.length, cols.length + 2)
         val colAt = internalFields.map(f => cols.indexOf(f.name))
         MorOverlay.latestPerKey(rows.iterator, m.keyCols.map(cols.indexOf).toArray,
@@ -2073,13 +2082,8 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
             if (owned.contains(r)) r else fallback
           }
           .map { case (r, fs) => r -> fs.map(_.path).sorted }
-        val opSeqFields = Seq(
-          org.apache.spark.sql.types.StructField(GraftTable.OpCol,
-            org.apache.spark.sql.types.StringType, nullable = false),
-          org.apache.spark.sql.types.StructField(GraftTable.SeqCol,
-            org.apache.spark.sql.types.LongType, nullable = false))
         val deltaFactory = GraftV2Scan.directReader(m,
-          StructType(internalFields ++ opSeqFields), Array.empty)
+          StructType(internalFields ++ GraftV2Scan.OpSeqFields), Array.empty)
         Some(MorSlices(deltaFactory, internalFields.length,
           Some(internalFields.length + 1), routeParts))
       }
@@ -2190,7 +2194,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         // projection (no explode, one scalar udf) so the common
         // partitioned-table spill stays cheap; the duplicate-emitting
         // explode runs only for bare-file intervals or untrusted deletes.
-        val routed = tbl.latestDeltas(m, m.deltaFiles)
+        val routed = GraftTable.load(spark, m.location).latestDeltas(m, m.deltaFiles)
           .select(internalSchema.fieldNames.toSeq.map(col) ++
             Seq(col(GraftTable.OpCol), routeCol.as("_graft_layout_route"),
               keyEncCol.as("_graft_key_enc")): _*)
@@ -2433,6 +2437,33 @@ object GraftV2Scan {
         GenerationRead(org.apache.spark.sql.GraftSqlBridge.parquetReaderFactory(
           spark, phys, phys, Array.empty), project, keep)
       }.toArray)
+  }
+
+  /** The op and seq columns every delta file carries after its data. */
+  private[v2] val OpSeqFields = Seq(
+    StructField(GraftTable.OpCol, org.apache.spark.sql.types.StringType, nullable = false),
+    StructField(GraftTable.SeqCol, org.apache.spark.sql.types.LongType, nullable = false))
+
+  /** The delta rows of `files` — every table column, then the op and seq
+    * columns, then the delta `route` (a string column over the table
+    * columns) — read on the driver: the scan's own parquet readers
+    * ([[generationReader]]: every schema generation remapped, pending
+    * range drops masked by seq), one split over all of them, and the route
+    * as a projection bound on the driver (GraftTable.bindOn). No Spark job
+    * runs. The rows are copies. */
+  private[v2] def readTail(meta: TableMeta, files: Seq[graft.catalog.DataFileMeta],
+      route: org.apache.spark.sql.Column): Array[InternalRow] = {
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
+    val read = StructType(meta.columns.map(_.toField.copy(nullable = true)) ++ OpSeqFields)
+    val (Seq(routeExpr), _) = GraftTable.bindOn(SparkSession.active, read, _.select(route))
+    val project = InterpretedUnsafeProjection.createProjection(
+      read.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        BoundReference(i, f.dataType, f.nullable) } :+ routeExpr)
+    val r = generationReader(meta, files, read, Array.empty, _ => meta.rangeDrops.nonEmpty)
+      .createReader(org.apache.spark.sql.GraftSqlBridge.filePartition(
+        0, files.map(_.path), None))
+    try Iterator.continually(r).takeWhile(_.next()).map(x => project(x.get()).copy()).toArray
+    finally r.close()
   }
 
   /** JVM-wide memo of footer-derived key bounds. Published parquet files

@@ -21,8 +21,8 @@ import org.apache.spark.sql.types._
  * the planner picks (GraftV2Scan.createReaderFactory): a broadcast tail,
  * per-tablet flushed delta files attached under that tail, or per-route
  * shuffle spills. The planner builds it once per scan; the broadcast tail
- * costs one plan-time job of one stage (the tail's raw delta rows,
- * collected and folded on the driver). One fold,
+ * costs no job (the tail's raw delta rows are read and folded on the
+ * driver, GraftV2Scan.readTail). One fold,
  * [[MorOverlay.latestPerKey]], resolves every key's latest delta row: on
  * the driver for the tail, per split for a delta slice.
  *

@@ -71,13 +71,16 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * scan root (ScanRoots.baseLocation) matches only when it kept every
     * file. Columns are the visible ones, or all including the hidden
     * auto-increment key when `hidden`; all read nullable, as a parquet
-    * read reports them. */
-  private def read(m: TableMeta, hidden: Boolean = false): DataFrame =
+    * read reports them. A small single-split read collects on the driver
+    * (graft.plans.InlineReads). */
+  private def read(m: TableMeta, hidden: Boolean = false): DataFrame = {
+    graft.plans.InlineReads.inject(spark)
     org.apache.spark.sql.GraftSqlBridge.ofRows(spark,
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
         new graft.sources.v2.GraftV2Table(
           m.copy(columns = m.columns.map(_.copy(nullable = true))), hidden),
         None, None))
+  }
 
   /** Snapshot scan at `version` (None = latest). READ_AT_SNAPSHOT semantics
     * (common/common.proto:268-326). The hidden auto-increment key column of
@@ -203,18 +206,16 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     }
   }
 
-  /** Every delta row of `deltaFiles` (all table columns + the op/seq
-    * columns), unfolded, after drop-range masking: one scan stage, no
-    * exchange. The DSv2 broadcast overlay collects this and folds it to
-    * latest-per-key on the driver (MorOverlay.latestPerKey). */
-  private[graft] def maskedDeltas(m: TableMeta, deltaFiles: Seq[DataFileMeta]): DataFrame =
-    dropMaskDelta(m, readFileGroup(m, deltaFiles, delta = true))
-
   /** Latest delta state per key (all table columns + the op/seq columns),
-    * after drop-range masking — the per-key winner the merge-on-read
-    * overlay applies over the base. */
-  private[graft] def latestDeltas(m: TableMeta, deltaFiles: Seq[DataFileMeta]): DataFrame =
-    latestOf(m, maskedDeltas(m, deltaFiles), deltaFiles)
+    * after drop-range masking — the per-key winner the delta folds write
+    * and the spill overlay routes. The V2 scan's broadcast tail reads its
+    * delta files on the driver instead ([[generationRead]] applies the
+    * same mask) and folds them with MorOverlay.latestPerKey. */
+  private[graft] def latestDeltas(m: TableMeta, deltaFiles: Seq[DataFileMeta]): DataFrame = {
+    val deltas = readFileGroup(m, deltaFiles, delta = true)
+    latestOf(m, droppedRows(m, deltas = true).fold(deltas)(d => deltas.filter(!d)),
+      deltaFiles)
+  }
 
   /** The per-key fold of `deltas`, rows read from `deltaFiles` (which size
     * the fold's exchange). */
@@ -302,34 +303,32 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
 
   /** How the V2 scan reads files carrying the `present` column ids as the
     * logical fields `out` (table columns, plus non-table fields such as the
-    * delta op column, read as they are): the physical read schema
+    * delta op and seq columns, read as they are): the physical read schema
     * ([[physGenOf]]), the projection to `out` (a renamed column moves by
     * position, a widened one is cast, an absent one reads its read
     * default) and, when `masked`, the predicate keeping rows no pending
-    * range drop killed — both bound to the physical row, resolved by the
-    * analyzer on the driver as [[readFileGroup]]'s are; no job runs. */
+    * range drop killed ([[droppedRows]]; seq-aware when `out` carries the
+    * seq column, i.e. for delta rows) — both bound to the physical row on
+    * the driver ([[GraftTable.bindOn]]); no job runs. */
   private[graft] def generationRead(m: TableMeta, present: Set[Int],
       out: Seq[StructField], masked: Boolean): (StructType,
       Seq[org.apache.spark.sql.catalyst.expressions.Expression],
       Option[org.apache.spark.sql.catalyst.expressions.Expression]) = {
-    val mask = if (masked) droppedRows(m) else None
+    val mask =
+      if (masked) droppedRows(m, deltas = out.exists(_.name == SeqCol)) else None
     val (extra, outCols) = out.partition(f => !m.columns.exists(_.name == f.name))
     val cols = (outCols.map(f => m.column(f.name)) ++
       mask.toSeq.flatMap(_ => m.range.get.columns.map(m.column))).distinct
     val phys = StructType(cols.flatMap(c => physGenOf(c, present)).distinct
       .map { case (n, dt) => StructField(n, dt) } ++ extra)
-    val logical = spark.createDataFrame(java.util.Collections.emptyList[Row](), phys)
-      .select(cols.map(c => physGenOf(c, present) match {
+    val (projects, keep) = bindOn(spark, phys, { rows =>
+      val logical = rows.select(cols.map(c => physGenOf(c, present) match {
         case Some((n, _)) => col(n).cast(c.dataType).as(c.name)
         case None         => defaultLit(c).as(c.name)
       }) ++ extra.map(f => col(f.name)): _*)
-    val plan = mask.fold(logical)(d => logical.filter(!d))
-      .select(out.map(f => col(f.name)): _*).queryExecution.analyzed
-    val org.apache.spark.sql.catalyst.planning.PhysicalOperation(projects, conds, rel) = plan
-    def bind(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-      org.apache.spark.sql.catalyst.expressions.BindReferences.bindReference(e, rel.output)
-    (phys, projects.map(bind(_)),
-      conds.reduceOption(org.apache.spark.sql.catalyst.expressions.And).map(bind))
+      mask.fold(logical)(d => logical.filter(!d)).select(out.map(f => col(f.name)): _*)
+    })
+    (phys, projects, keep)
   }
 
   private def deltaStruct(m: TableMeta): StructType =
@@ -390,13 +389,21 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
    */
   def changes(v1: Long, v2: Long): DataFrame = {
     val m = readVersion(v2) // diff in v2's schema
+    val m1 = readVersion(v1)
     val keys = m.keyCols
-    // cast each field to v2's type: v1 may predate an ALTER type-widening,
-    // and the struct equality below needs both sides in one type
-    val valueStruct = struct(m.columns.map(c =>
-      col(c.name).cast(c.dataType).as(c.name)): _*)
-    val a = scanWithHidden(Some(v1)).select(keys.map(col) :+ valueStruct.as("_av"): _*)
-    val b = scanWithHidden(Some(v2)).select(keys.map(col) :+ valueStruct.as("_bv"): _*)
+    // v1's side by column id: each of v2's columns is v1's column with
+    // that id — or with an older generation of it, since a widen assigns a
+    // new id — under v1's name, cast to v2's type (the struct equality
+    // below needs both sides in one type); a column added after v1 reads
+    // its read default, as v2's snapshot shows v1's rows
+    def atV1(c: ColumnMeta): Column =
+      m1.columns.find(o => o.id == c.id || c.priorGenerations.exists(_.id == o.id))
+        .fold(defaultLit(c))(o => col(o.name).cast(c.dataType))
+    def side(v: Long, at: ColumnMeta => Column, tag: String) =
+      scanWithHidden(Some(v)).select(keys.map(k => at(m.column(k)).as(k)) :+
+        struct(m.columns.map(c => at(c).as(c.name)): _*).as(tag): _*)
+    val a = side(v1, atV1, "_av")
+    val b = side(v2, c => col(c.name), "_bv")
     val j = a.join(b, keys, "full_outer")
     val changed = j.filter(!(col("_av") <=> col("_bv")))
     val pick = when(col("_bv").isNull, col("_av")).otherwise(col("_bv"))
@@ -1928,25 +1935,20 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
 
   /** The rows pending range drops killed, as a predicate over the range
     * columns (None: no drop pending). Base files never postdate a live drop
-    * record (compaction clears the records), so the V2 scan masks the base
-    * rows that can hold them — those of coordinate-less files — with it. */
-  private def droppedRows(m: TableMeta): Option[Column] =
+    * record (compaction clears the records), so every base row in a
+    * dropped range is dead; the V2 scan masks the base rows that can hold
+    * them — those of coordinate-less files — with it. A delta row
+    * (`deltas`, the predicate then also reads the seq column) in a dropped
+    * range is dead only if written at or before the drop: rows upserted
+    * after a re-add live. */
+  private def droppedRows(m: TableMeta, deltas: Boolean): Option[Column] =
     (m.rangeDrops, m.range) match {
       case (drops, Some(r)) if drops.nonEmpty =>
-        Some(drops.map(d => dropRowPred(m, r, d)).reduce(_ || _))
+        Some(drops.map { d =>
+          val in = dropRowPred(m, r, d)
+          if (deltas) in && col(SeqCol) <= lit(d.version) else in
+        }.reduce(_ || _))
       case _ => None
-    }
-
-  /** Seq-aware mask for dropped ranges over delta rows: a delta row in a
-    * dropped range is dead only if written at or before the drop (rows
-    * upserted after a re-add are live). */
-  private def dropMaskDelta(m: TableMeta, deltas: DataFrame): DataFrame =
-    (m.rangeDrops, m.range) match {
-      case (drops, Some(r)) if drops.nonEmpty =>
-        drops.foldLeft(deltas) { (df, d) =>
-          df.filter(!(dropRowPred(m, r, d) && col(SeqCol) <= lit(d.version)))
-        }
-      case _ => deltas
     }
 
   /** Errors when a write batch touches a non-covered range: a granularity
@@ -2700,7 +2702,8 @@ object GraftTable {
     * (`graft.mor.broadcastBytes` remains an explicit override — specs use
     * it to force past-bound paths with tiny data). Past the bound the V2
     * overlay shuffles deltas into per-route spills instead of
-    * broadcasting.
+    * broadcasting. The same bound caps the bytes a point read may open on
+    * the driver with no job (graft.plans.InlineReads).
     *
     * The adaptive default derives from what the session already declares
     * about broadcast appetite instead of a fixed engine constant (the
@@ -2779,6 +2782,44 @@ object GraftTable {
       case Some(v) => spark.conf.set(k, v)
       case None => spark.conf.unset(k)
     }
+  }
+
+  /** The projection and filter `body` applies to rows of `schema`, bound
+    * to those rows on the driver: the analyzer resolves `body` over an
+    * empty local relation, so no job runs and no data is read. Driver-side
+    * readers evaluate the result per row (the generation remap, the drop
+    * masks, the delta route). Every Project and Filter of `body` folds
+    * into the result, each expression inlined into the ones above it —
+    * never left out, as an extractor declining to duplicate an expression
+    * would leave out a filter. */
+  private[graft] def bindOn(spark: SparkSession, schema: StructType,
+      body: DataFrame => DataFrame): (Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+      Option[org.apache.spark.sql.catalyst.expressions.Expression]) = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeMap, BoundReference, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical
+    // (the plan's output, the conditions under it), over the input row
+    def fold(p: logical.LogicalPlan): (Seq[Expression], Seq[Expression]) = p match {
+      case logical.Project(list, c) =>
+        val (below, conds) = fold(c)
+        (list.map(inlined(_, c.output, below)), conds)
+      case logical.Filter(cond, c) =>
+        val (below, conds) = fold(c)
+        (below, conds :+ inlined(cond, c.output, below))
+      case rel: logical.LocalRelation =>
+        (rel.output.zipWithIndex.map { case (a, i) => BoundReference(i, a.dataType, a.nullable) },
+          Nil)
+    }
+    def inlined(e: Expression, attrs: Seq[Attribute], exprs: Seq[Expression]) = {
+      val by = AttributeMap(attrs.zip(exprs.map {
+        case a: Alias => a.child
+        case x => x
+      }))
+      e.transformUp { case a: Attribute => by.getOrElse(a, a) }
+    }
+    val (projects, conds) = fold(
+      body(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
+        .queryExecution.analyzed)
+    (projects, conds.reduceOption(And))
   }
 
   /** Size estimate of a frame's input for the tiny-gate. The ANALYZED

@@ -42,7 +42,7 @@ object PlanDump {
     }
     names.foreach {
       case n @ "latest_deltas" =>
-        // the MOR overlay / plan-time collect fold: exchange width is the
+        // the delta folds' / spill overlay's per-key fold: exchange width is the
         // round-17 diff (byte-derived vs the session constant)
         import org.apache.spark.sql.functions._
         val raw = graft.Tables.raw(spark, dir, "supplier")

@@ -132,6 +132,18 @@ class FuzzSpec extends AnyFunSuite {
       java.nio.file.Paths.get(loc).getParent.toString)
     assert(stateOf(spark.table(s"$catName.`$whName`")) == model.toMap,
       s"V2 overlay mismatch seed=$seed")
+    // point reads through both read faces on a sample of present and
+    // absent (deleted or never written) keys: collected on the driver
+    // under the default bound (graft.plans.InlineReads), through a job
+    // under the 1KB one
+    val (present, absent) = (0 until Keyspace).partition(model.contains)
+    (rnd.shuffle(present).take(3) ++ rnd.shuffle(absent).take(2)).foreach { k =>
+      val want = model.get(k).map(k -> _).toMap
+      assert(stateOf(t.scan().where(col("k") === k)) == want,
+        s"scan() get k=$k mismatch seed=$seed")
+      assert(stateOf(spark.sql(s"SELECT * FROM $catName.`$whName` WHERE k = $k")) == want,
+        s"SQL get k=$k mismatch seed=$seed")
+    }
     // differential check of the COLUMNAR overlay readers against the
     // row-based ones on the same random end state (the default read above
     // went columnar; force rows and compare)

@@ -555,6 +555,10 @@ class IndexRewriteSpec extends AnyFunSuite {
     }
     try {
       spark.conf.set("graft.sindex.rewriteMaxKeys", "5")
+      // a probe small enough reads on the driver with no job
+      // (graft.plans.InlineReads); a 1-byte bound keeps every probe a job
+      // the listener can see
+      spark.conf.set("graft.mor.broadcastBytes", "1")
       // positive control first: a servable query's PLANNING runs the probe
       // job, proving the listener observes plan-time jobs at all
       spark.sparkContext.addSparkListener(listener)
@@ -579,6 +583,7 @@ class IndexRewriteSpec extends AnyFunSuite {
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("graft.sindex.rewriteMaxKeys")
+      spark.conf.unset("graft.mor.broadcastBytes")
       ServingRewrites.disarm(spark, idx.location)
     }
   }

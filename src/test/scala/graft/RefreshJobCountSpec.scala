@@ -75,10 +75,10 @@ class RefreshJobCountSpec extends AnyFunSuite {
     def within(got: (Int, Int, Int), floor: (Int, Int, Int), what: String) =
       assert(got._1 <= floor._1 && got._2 <= floor._2 && got._3 <= floor._3,
         s"$what refresh jobs (sindex, rollup, vindex) $got exceed $floor")
-    within(first, (5, 5, 6), "first")
-    within(steady, (7, 6, 8), "steady-state fast-path")
-    within(merged, (7, 6, 8), "across-a-tail-merge")
-    within(compacted, (11, 12, 19), "across-compaction")
+    within(first, (5, 4, 6), "first")
+    within(steady, (5, 4, 6), "steady-state fast-path")
+    within(merged, (5, 4, 6), "across-a-tail-merge")
+    within(compacted, (7, 8, 13), "across-compaction")
 
     // the guarded refreshes stayed exact: each derived table equals a
     // rebuild from the current source
