@@ -2038,7 +2038,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         val cols = m.columns.map(_.name)
         val colTypes = m.columns.map(_.dataType).toArray
         val rows = tails.computeIfAbsent(keepTail.map(_.path), _ =>
-          GraftV2Scan.readTail(m, keepTail, routeCol))
+          GraftV2Scan.readTail(m, keepTail, Some(routeCol)))
         val (opAt, routeAt) = (cols.length, cols.length + 2)
         val colAt = internalFields.map(f => cols.indexOf(f.name))
         MorOverlay.latestPerKey(rows.iterator, m.keyCols.map(cols.indexOf).toArray,
@@ -2445,20 +2445,21 @@ object GraftV2Scan {
     StructField(GraftTable.SeqCol, org.apache.spark.sql.types.LongType, nullable = false))
 
   /** The delta rows of `files` — every table column, then the op and seq
-    * columns, then the delta `route` (a string column over the table
-    * columns) — read on the driver: the scan's own parquet readers
-    * ([[generationReader]]: every schema generation remapped, pending
-    * range drops masked by seq), one split over all of them, and the route
-    * as a projection bound on the driver (GraftTable.bindOn). No Spark job
-    * runs. The rows are copies. */
-  private[v2] def readTail(meta: TableMeta, files: Seq[graft.catalog.DataFileMeta],
-      route: org.apache.spark.sql.Column): Array[InternalRow] = {
+    * columns, then, when given, the delta `route` (a string column over
+    * the table columns) — read on the driver: the scan's own parquet
+    * readers ([[generationReader]]: every schema generation remapped,
+    * pending range drops masked by seq), one split over all of them, and
+    * the route as a projection bound on the driver (GraftTable.bindOn).
+    * No Spark job runs. The rows are copies. */
+  private[graft] def readTail(meta: TableMeta, files: Seq[graft.catalog.DataFileMeta],
+      route: Option[org.apache.spark.sql.Column]): Array[InternalRow] = {
     import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
     val read = StructType(meta.columns.map(_.toField.copy(nullable = true)) ++ OpSeqFields)
-    val (Seq(routeExpr), _) = GraftTable.bindOn(SparkSession.active, read, _.select(route))
+    val routeExpr = route.toSeq.flatMap(r =>
+      GraftTable.bindOn(SparkSession.active, read, _.select(r))._1)
     val project = InterpretedUnsafeProjection.createProjection(
       read.fields.toSeq.zipWithIndex.map { case (f, i) =>
-        BoundReference(i, f.dataType, f.nullable) } :+ routeExpr)
+        BoundReference(i, f.dataType, f.nullable) } ++ routeExpr)
     val r = generationReader(meta, files, read, Array.empty, _ => meta.rangeDrops.nonEmpty)
       .createReader(org.apache.spark.sql.GraftSqlBridge.filePartition(
         0, files.map(_.path), None))

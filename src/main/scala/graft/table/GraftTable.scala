@@ -4,12 +4,14 @@ import java.nio.file.{Files, Path, Paths}
 import scala.collection.mutable.ArrayBuffer
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.catalog._
+import graft.sources.v2.{GraftV2Scan, MorOverlay}
 
 /** Thrown when INSERT hits an existing PK or strict UPDATE/DELETE misses one
   * (reference: row_operations.proto:34-63 — non-IGNORE ops error). */
@@ -586,11 +588,11 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     }
     if (!ignore) {
       // both preconditions (keys already present in the table; duplicate
-      // keys inside the batch) are evaluated INSIDE the commit's own write
-      // job — present keys raise_error out of a left join against the
-      // pruned presence scan, intra-batch dups use commitDelta's window
-      // guard — so an INSERT costs one Spark job, not a stats job plus a
-      // commit job per mutation batch. The per-row error message carries
+      // keys inside the batch) are evaluated by the commit itself —
+      // present keys raise_error out of a left join against the pruned
+      // presence scan as the commit collects or writes the batch,
+      // intra-batch dups use commitDelta's guard — so an INSERT pays no
+      // stats job per mutation batch. The per-row error message carries
       // the clashing key itself (no second sample-fetch job).
       val existing = scanForBatch(m, batch, keys).select(keys.map(col): _*)
         .withColumn("_graft_ex", lit(1))
@@ -604,9 +606,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
               lit(")"))).cast(keyDt))
             .otherwise(col(keys.head)))
         .drop("_graft_ex")
-      try commitDelta(m, guarded.withColumn(OpCol, lit(OpUpsert)), "insert",
+      commitDelta(m, guarded.withColumn(OpCol, lit(OpUpsert)), "insert",
         guardDupKeys = true)
-      catch { case e: Throwable => throw asPkError(e) }
     } else {
       val existing = scanForBatch(m, batch, keys).select(keys.map(col): _*)
       val fresh = batch.dropDuplicates(keys).join(existing, keys, "left_anti")
@@ -772,21 +773,6 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       if (c.name == colName) c.copy(compression = codec) else c)), "alter_column")
   }
 
-  /** Errors when a write batch violates a VARCHAR(n) attribute (the
-    * reference rejects over-length VARCHAR writes per row). */
-  private def requireVarcharFits(m: TableMeta, rows: DataFrame): Unit = {
-    val limited = m.columns.filter(c =>
-      c.varcharLength.isDefined && rows.columns.contains(c.name))
-    if (limited.isEmpty) return
-    val over = limited.map(c =>
-      org.apache.spark.sql.functions.length(col(c.name)) > c.varcharLength.get)
-      .reduce(_ || _)
-    if (rows.filter(over).limit(1).count() > 0)
-      throw new IllegalArgumentException(
-        s"write exceeds varchar length on ${m.name} (" +
-          limited.map(c => s"${c.name} varchar(${c.varcharLength.get})").mkString(", ") + ")")
-  }
-
   /** UPDATE / UPDATE_IGNORE: mutate existing rows; `df` carries the PK plus
     * any subset of non-key columns to set (W4, KuduContext.updateRows:319).
     * Missing PKs error unless ignore. Duplicate keys within one batch error
@@ -829,7 +815,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   def delete(keysDf: DataFrame, ignore: Boolean = false): Unit = withCommitRetry {
     val m = meta
     val keys = m.keyCols
-    val k = keysDf.select(keys.map(col): _*).dropDuplicates(keys)
+    val k = keysDf.select(keys.map(col): _*)
     if (!ignore) {
       val missing = k.join(
         scanForBatch(m, k, keys).select(keys.map(col): _*), keys, "left_anti")
@@ -837,7 +823,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         throw new PrimaryKeyException(s"DELETE key not found in ${m.name}")
     }
     commitDelta(m, tombstoneRows(m, k).withColumn(OpCol, lit(OpDelete)),
-      if (ignore) "delete_ignore" else "delete")
+      if (ignore) "delete_ignore" else "delete", dropDupKeys = true)
   }
 
   /** OVERWRITE: replace the table's live rows with `df` in ONE atomic
@@ -1250,6 +1236,10 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
    * must not re-fold the 10^4 files already flushed). Cross-fileset key
    * overlap is resolved at read time by the per-row `_graft_seq` fold,
    * exactly as overlapping delta stores merge in the reference.
+   *
+   * A fold within [[GraftTable.broadcastDeltaBytes]] runs on the driver
+   * with no Spark job ([[writeFold]]); a single unrouted file still
+   * flushes into its tablets on a partitioned table.
    */
   def compactDeltas(tailOnly: Boolean = false): Unit = {
     val m = meta
@@ -1260,8 +1250,6 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val (kept, fold) =
       if (!tailOnly) (Nil, m.deltaFiles)
       else m.deltaFiles.partition(f => f.bucket.isDefined || f.rangeKey.isDefined)
-    if (fold.size <= 1) return
-    val v = m.version + 1
     // fold layout: unpartitioned tables stay unrouted; a route that reads a
     // NON-KEY column (tombstones carry it as null — their coords would be
     // garbage) routes only the upserts and leaves tombstones unrouted
@@ -1271,12 +1259,19 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       if (m.hash.isEmpty && m.range.isEmpty) Layout.Unrouted(DeltaWritePartitions)
       else if (GraftTable.deleteRouteTrusted(m)) Layout.Routed
       else Layout.RoutedUpserts
+    // one file gains nothing from a fold, unless a routed layout flushes
+    // it into its tablets (a bounded commit writes one file); a flush's
+    // unrouted tombstone file is already where that layout leaves it
+    def flushed(f: DataFileMeta) =
+      f.bucket.isDefined || f.rangeKey.isDefined || f.path.contains("/tomb/")
+    if (fold.isEmpty || (fold.size == 1 &&
+        (layout.isInstanceOf[Layout.Unrouted] || flushed(fold.head)))) return
+    val v = m.version + 1
     // the merged fileset's manifest seq is the HIGHEST folded commit — CDC
     // range selection (changesSince file filter) stays conservative and the
     // row-level _graft_seq filter inside it restores exactness
     publish { a =>
-      val files = writeFileset(a, m, latestDeltas(m, fold), v, FoldToken, layout,
-        fold.map(_.seq).max, Some(BigInt(GraftTable.deltaBytes(fold))))
+      val files = writeFold(a, m, fold, v, FoldToken, layout)
       m.copy(version = v, timestampMs = now(), operation = "compact_deltas",
         deltaFiles = kept ++ files)
     }
@@ -1295,7 +1290,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
    * commit). Per-row `_graft_seq` survives the fold, so merge-on-read
    * windows and CDC range selection are unchanged; the output dir carries
    * the fold token the streaming sources exclude
-   * ([[GraftTable.committedDeltas]]).
+   * ([[GraftTable.committedDeltas]]). A tail within
+   * [[GraftTable.broadcastDeltaBytes]] is read, folded and written on the
+   * driver with no Spark job ([[writeFold]]).
    * Returns true when a merge happened.
    */
   def mergeTailDeltas(minFiles: Int = 2): Boolean = {
@@ -1303,14 +1300,12 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val tail = m.deltaFiles.filter(f => f.bucket.isEmpty && f.rangeKey.isEmpty)
     if (tail.size < math.max(2, minFiles)) return false
     // the streaming tail is small — collapse to one file per ~128 MB
-    val tailBytes = tail.map(f => GraftTable.fileSize(f.path)).sum
     val parts = math.max(1, math.min(DeltaWritePartitions,
-      (tailBytes / (128L * 1024 * 1024)).toInt))
+      (GraftTable.deltaBytes(tail) / (128L * 1024 * 1024)).toInt))
     val v = m.version + 1
     val flushed = m.deltaFiles.filter(f => f.bucket.isDefined || f.rangeKey.isDefined)
     publish { a =>
-      val files = writeFileset(a, m, latestDeltas(m, tail), v, s"${FoldToken}_tail",
-        Layout.Unrouted(parts), tail.map(_.seq).max, Some(BigInt(tailBytes)))
+      val files = writeFold(a, m, tail, v, s"${FoldToken}_tail", Layout.Unrouted(parts))
       m.copy(version = v, timestampMs = now(), operation = "merge_tail",
         deltaFiles = flushed ++ files)
     }
@@ -1951,30 +1946,6 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       case _ => None
     }
 
-  /** Errors when a write batch touches a non-covered range: a granularity
-    * range that was dropped and not re-added, or — in bounds mode — any
-    * value outside every declared [lower, upper) bound (reference:
-    * non-covered-range row error, row_operations). */
-  private[table] def requireCovered(m: TableMeta, rows: DataFrame): Unit = {
-    val unc = m.uncovered
-    m.range match {
-      case Some(r) if r.isBounds && r.columns.forall(rows.columns.contains) =>
-        val rk = rangeKeyExprM(m, r, col)
-        if (rows.filter(rk === lit(UncoveredKey)).limit(1).count() > 0)
-          throw new PrimaryKeyException(
-            s"write touches a range not covered by any declared bound of " +
-              s"${m.name} (bounds: ${r.boundsList.map(_.key).mkString(",")}); " +
-              "addRangeBound first")
-      case Some(r) if unc.nonEmpty && r.columns.forall(rows.columns.contains) =>
-        val bad = rows.filter(rangeKeyExprM(m, r, col).isin(unc: _*))
-        if (bad.limit(1).count() > 0)
-          throw new PrimaryKeyException(
-            s"write touches non-covered range partition(s) ${unc.mkString(",")} " +
-              s"of ${m.name}; addRangePartition first")
-      case _ =>
-    }
-  }
-
   /** ADD RANGE PARTITION with explicit [lower, upper) bounds (bounds-mode
     * tables; CreateTableOptions.addRangePartition /
     * AlterTableOptions.java:321-361 analog). The new bound must not overlap
@@ -2164,81 +2135,206 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     sys.error("unreachable")
   }
 
-  /** Surfaces an in-job PK guard (raise_error inside the commit's write
-    * job) as the engine's typed PrimaryKeyException: Spark wraps the raised
-    * message in SparkException layers, so walk the cause chain for it. Any
-    * other failure rethrows untouched. */
-  private def asPkError(e: Throwable): Throwable = {
-    var t: Throwable = e
-    while (t != null) {
-      val msg = Option(t.getMessage).getOrElse("")
-      if (msg.contains("already present in") || msg.contains("duplicate key within"))
-        return new PrimaryKeyException(
-          msg.linesIterator.find(l =>
-            l.contains("already present in") || l.contains("duplicate key within"))
-            .getOrElse(msg))
-      t = t.getCause
+  /** A write guard's failure as the typed exception it stands for, the
+    * same on both commit paths. A guard raised with raise_error (a
+    * duplicate key within the batch, an INSERT key already present, a
+    * NULL `_deleted`) reaches the caller wrapped in Spark's job and task
+    * errors when a job evaluates it, and bare when the driver does; its
+    * raised message becomes a PrimaryKeyException (the key guards) or an
+    * IllegalArgumentException (a malformed batch). Any other failure
+    * rethrows untouched. */
+  private def guardError(e: Throwable): Throwable =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).collectFirst {
+      case s: org.apache.spark.SparkThrowable if s.getCondition == "USER_RAISED_EXCEPTION" =>
+        s.getMessageParameters.get("errorMessage")
+    } match {
+      case Some(msg) if msg.contains("already present in") || msg.contains("duplicate key within") =>
+        new PrimaryKeyException(msg)
+      case Some(msg) if msg.contains(s"NULL $DeletedCol") => new IllegalArgumentException(msg)
+      case _ => e
     }
-    e
+
+  /** Commits `rows` (table columns plus the op column) as one delta
+    * fileset under version `m.version + 1`, with `propsUpdate` merged into
+    * the table properties. `guardDupKeys` fails a batch that names a key
+    * twice (the ops of one commit are unordered); `dropDupKeys` keeps one
+    * row per key instead (a delete naming a key twice).
+    *
+    * A batch whose estimated bytes — the caller's manifest-derived hint
+    * when it has one (refresh commits join pruned base reads, whose
+    * optimizer estimate is garbage-large), else the plan estimate — fit
+    * [[GraftTable.broadcastDeltaBytes]] commits on the driver
+    * ([[commitOnDriver]]): no write job. A bigger one commits through a
+    * Spark write job ([[commitWithJob]]). Both raise the same typed
+    * guard errors ([[guardError]]). */
+  private def commitDelta(m: TableMeta, rows: DataFrame, op: String,
+      guardDupKeys: Boolean = false, dropDupKeys: Boolean = false,
+      propsUpdate: Map[String, Option[String]] = Map.empty,
+      sizeHintBytes: Option[Long] = None): Unit = {
+    val estBytes = sizeHintBytes.map(BigInt(_))
+      .getOrElse(GraftTable.planBytes(rows))
+    val props = propsUpdate.foldLeft(m.propsMap) {
+      case (acc, (k, Some(value))) => acc + (k -> value)
+      case (acc, (k, None)) => acc - k
+    }
+    // a known-tiny batch plans statically: a derived batch's collect (or
+    // the job path's write) runs as ONE job, not one per shuffle stage;
+    // big batches keep AQE
+    try GraftTable.withStaticPlan(spark, estBytes <= GraftTable.staticPlanMaxBytes) {
+      if (estBytes <= GraftTable.broadcastDeltaBytes)
+        commitOnDriver(m, rows, op, guardDupKeys, dropDupKeys, props)
+      else commitWithJob(m, rows, op, guardDupKeys, dropDupKeys, props, estBytes)
+    } catch { case e: Throwable => throw guardError(e) }
   }
 
-  private def commitDelta(m: TableMeta, rows: DataFrame, op: String,
-      guardDupKeys: Boolean = false,
-      propsUpdate: Map[String, Option[String]] = Map.empty,
-      sizeHintBytes: Option[Long] = None): Unit =
-    // a known-tiny batch (point mutations, maintenance refreshes,
-    // streaming micro-batches) commits as ONE static-planned job with a
-    // byte-sized guard-window exchange; big batches keep AQE. The size
-    // comes from the caller's manifest-derived hint when it has one
-    // (refresh commits join pruned base reads, whose optimizer estimate
-    // is garbage-large), else from the plan estimate.
-    {
-      val estBytes = sizeHintBytes.map(BigInt(_))
-        .getOrElse(GraftTable.planBytes(rows))
-      GraftTable.withStaticPlan(spark,
-        estBytes <= GraftTable.staticPlanMaxBytes) {
-        commitDeltaImpl(m, rows, op, guardDupKeys, propsUpdate, estBytes)
-      }
+  /** Publishes version `m.version + 1` adding the delta files `write`
+    * produces, with table properties `props`. */
+  private def publishDelta(m: TableMeta, op: String, props: Map[String, String])(
+      write: Attempt => Seq[DataFileMeta]): Unit =
+    publish { a =>
+      val files = write(a)
+      m.copy(version = m.version + 1, timestampMs = now(), operation = op,
+        deltaFiles = m.deltaFiles ++ files,
+        props = if (props.isEmpty) None else Some(props))
     }
 
-  private def commitDeltaImpl(m: TableMeta, rows: DataFrame, op: String,
-      guardDupKeys: Boolean,
-      propsUpdate: Map[String, Option[String]], estBytes: BigInt): Unit = {
-    requireCovered(m, rows)
-    requireVarcharFits(m, rows)
+  /** The row checks a write batch with columns `cols` must pass, each the
+    * predicate a violating row satisfies and the error it raises:
+    * [[coverageCheck]], then [[varcharCheck]]. */
+  private def rowChecks(m: TableMeta, cols: Seq[String]): Seq[(Column, () => Throwable)] =
+    coverageCheck(m, cols).toSeq ++ varcharCheck(m, cols)
+
+  /** A write touching a non-covered range: a granularity range that was
+    * dropped and not re-added, or — in bounds mode — any value outside
+    * every declared [lower, upper) bound (reference: non-covered-range row
+    * error, row_operations). */
+  private def coverageCheck(m: TableMeta, cols: Seq[String]): Option[(Column, () => Throwable)] = {
+    val unc = m.uncovered
+    m.range.filter(_.columns.forall(cols.contains)).collect {
+      case r if r.isBounds =>
+        (rangeKeyExprM(m, r, col) === lit(UncoveredKey), () => new PrimaryKeyException(
+          s"write touches a range not covered by any declared bound of " +
+            s"${m.name} (bounds: ${r.boundsList.map(_.key).mkString(",")}); " +
+            "addRangeBound first"))
+      case r if unc.nonEmpty =>
+        (rangeKeyExprM(m, r, col).isin(unc: _*), () => new PrimaryKeyException(
+          s"write touches non-covered range partition(s) ${unc.mkString(",")} " +
+            s"of ${m.name}; addRangePartition first"))
+    }
+  }
+
+  /** A write exceeding a VARCHAR(n) attribute (the reference rejects
+    * over-length VARCHAR writes per row). */
+  private def varcharCheck(m: TableMeta, cols: Seq[String]): Option[(Column, () => Throwable)] = {
+    val limited = m.columns.filter(c => c.varcharLength.isDefined && cols.contains(c.name))
+    Option.when(limited.nonEmpty)((
+      limited.map(c => length(col(c.name)) > c.varcharLength.get).reduce(_ || _),
+      () => new IllegalArgumentException(
+        s"write exceeds varchar length on ${m.name} (" +
+          limited.map(c => s"${c.name} varchar(${c.varcharLength.get})").mkString(", ") + ")")))
+  }
+
+  /** Runs `checks` over `rows`, one bounded probe each. */
+  private def requireRows(rows: DataFrame, checks: Seq[(Column, () => Throwable)]): Unit =
+    checks.foreach { case (bad, error) =>
+      if (rows.filter(bad).limit(1).count() > 0) throw error()
+    }
+
+  /** Errors when a write batch touches a non-covered range ([[coverageCheck]]). */
+  private[table] def requireCovered(m: TableMeta, rows: DataFrame): Unit =
+    requireRows(rows, coverageCheck(m, rows.columns.toSeq).toSeq)
+
+  /** The error a duplicate key within one `op` batch raises, naming the key. */
+  private def dupKeyMessage(m: TableMeta, op: String): Column =
+    concat(
+      lit(s"duplicate key within one $op batch on ${m.name}: ("),
+      concat_ws(",", m.keyCols.map(c => col(c).cast("string")): _*),
+      lit(") — ops within one commit are unordered; " +
+        "use upsert(df, lastWinsBy = <orderCol>) for defined last-wins"))
+
+  /** A batch whose key columns are ALL constant-foldable (e.g.
+    * withColumn(key, lit(...))): Catalyst folds a window's partition spec
+    * over them away entirely, so it is one key group by construction, and
+    * "more than one row" is its duplicate. Partially foldable keys
+    * partition correctly. */
+  private def keysAllFoldable(m: TableMeta, rows: DataFrame): Boolean =
+    rows.select(m.keyCols.map(col): _*).queryExecution.optimizedPlan match {
+      case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
+        p.projectList.forall {
+          // Alias never reports foldable itself — ask its child
+          case a: org.apache.spark.sql.catalyst.expressions.Alias =>
+            a.child.foldable
+          case e => e.foldable
+        }
+      case _ => false
+    }
+
+  private def constantKeyError(m: TableMeta, op: String): PrimaryKeyException =
+    new PrimaryKeyException(
+      s"duplicate key within one $op batch on ${m.name}: every row " +
+        "carries the same constant key — ops within one commit are " +
+        "unordered; use upsert(df, lastWinsBy = <orderCol>) for defined " +
+        "last-wins")
+
+  /** The driver commit of a bounded batch, the reference's in-tablet
+    * apply of a write batch (tablet/memrowset.h, tablet/deltamemstore.h):
+    * no distributed write job. The batch, cast to the table types, is
+    * collected through its executed plan
+    * ([[GraftSqlBridge.collectInternal]]: a local batch or an inline read
+    * collects with no job, a derived batch in its own collect); the row
+    * checks and the duplicate-key guard run over the collected rows with
+    * the job path's messages, and the rows are written on the driver as
+    * one PK-sorted file ([[writeFileset]]). A failed guard leaves no
+    * attempt dir: it fails before the write. */
+  private def commitOnDriver(m: TableMeta, rows: DataFrame, op: String,
+      guardDupKeys: Boolean, dropDupKeys: Boolean, props: Map[String, String]): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.Predicate
+    val v = m.version + 1
+    val schema = deltaStruct(m)
+    val collected = GraftSqlBridge.collectInternal(rows.select(
+      m.columns.map(c => col(c.name).cast(c.dataType).as(c.name)) ++
+        Seq(col(OpCol), lit(v).as(SeqCol)): _*))
+    rowChecks(m, rows.columns.toSeq).foreach { case (bad, error) =>
+      val p = Predicate.createInterpreted(bindOn(spark, schema, _.filter(bad))._2.get)
+      if (collected.exists(p.eval)) throw error()
+    }
+    val keyIdx = m.keyCols.map(k => m.columns.indexWhere(_.name == k)).toArray
+    val types = schema.fields.map(_.dataType)
+    val seen = new java.util.HashSet[Seq[Any]]()
+    val kept =
+      if (dropDupKeys) collected.filter(r => seen.add(MorOverlay.keyOf(r, keyIdx, types)))
+      else if (!guardDupKeys) collected
+      else {
+        collected.find(r => !seen.add(MorOverlay.keyOf(r, keyIdx, types))).foreach { dup =>
+          if (keysAllFoldable(m, rows)) throw constantKeyError(m, op)
+          val msg = bindOn(spark, schema, _.select(dupKeyMessage(m, op)))._1.head
+          throw new PrimaryKeyException(msg.eval(dup).toString)
+        }
+        collected
+      }
+    publishDelta(m, op, props)(a =>
+      writeFileset(a, m, kept, v, DeltaToken, Layout.Unrouted(1), v))
+  }
+
+  /** The Spark-job commit of a batch past the driver bound. */
+  private def commitWithJob(m: TableMeta, rows0: DataFrame, op: String,
+      guardDupKeys: Boolean, dropDupKeys: Boolean, props: Map[String, String],
+      estBytes: BigInt): Unit = {
+    val rows = if (dropDupKeys) rows0.dropDuplicates(m.keyCols) else rows0
+    requireRows(rows, rowChecks(m, rows.columns.toSeq))
     val v = m.version + 1
     val out0 = rows.withColumn(SeqCol, lit(v))
     // Intra-batch duplicate-key guard, evaluated INSIDE the write job (a
     // window count piggybacked on the commit's own shuffle — no extra Spark
     // job per mutation): a duplicate key fails the write before any
     // metadata commits. Attached to SeqCol, which is always materialized,
-    // so column pruning cannot drop the check.
-    // A batch whose key columns are ALL constant-foldable (e.g.
-    // withColumn(key, lit(...))) folds the window's partition spec away
-    // entirely — Catalyst would run the guard as a GLOBAL single-partition
-    // window. Such a batch is one key group by construction, so the guard
-    // degenerates to "more than one row": check that directly (a limit(2)
-    // probe — only in this rare shape) and skip the window. Partially
-    // foldable keys are fine: the surviving columns partition correctly.
-    val keysAllFoldable = guardDupKeys && {
-      out0.select(m.keyCols.map(col): _*).queryExecution.optimizedPlan match {
-        case p: org.apache.spark.sql.catalyst.plans.logical.Project =>
-          p.projectList.forall {
-            // Alias never reports foldable itself — ask its child
-            case a: org.apache.spark.sql.catalyst.expressions.Alias =>
-              a.child.foldable
-            case e => e.foldable
-          }
-        case _ => false
-      }
-    }
-    if (keysAllFoldable && rows.limit(2).count() > 1)
-      throw new PrimaryKeyException(
-        s"duplicate key within one $op batch on ${m.name}: every row " +
-          "carries the same constant key — ops within one commit are " +
-          "unordered; use upsert(df, lastWinsBy = <orderCol>) for defined " +
-          "last-wins")
-    val out = if (guardDupKeys && !keysAllFoldable) {
+    // so column pruning cannot drop the check. An all-constant key folds
+    // the window's partition spec away (a GLOBAL single-partition window),
+    // so that rare shape checks "more than one row" with a limit(2) probe
+    // instead ([[keysAllFoldable]]).
+    val foldable = guardDupKeys && keysAllFoldable(m, out0)
+    if (foldable && rows.limit(2).count() > 1) throw constantKeyError(m, op)
+    val out = if (guardDupKeys && !foldable) {
       // size the guard window's exchange by the batch's estimated bytes —
       // the same derivation as the CDC fold; AQE previously re-coalesced
       // this width at runtime, the explicit width is right either way
@@ -2248,13 +2344,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         .max(BigInt(1)).toInt
       val w = Window.partitionBy(m.keyCols.map(col): _*)
       out0.repartition(guardParts, m.keyCols.map(col): _*).withColumn(SeqCol,
-        when(count(lit(1)).over(w) > 1,
-          raise_error(concat(
-            lit(s"duplicate key within one $op batch on ${m.name}: ("),
-            concat_ws(",", m.keyCols.map(c => col(c).cast("string")): _*),
-            lit(") — ops within one commit are unordered; " +
-              "use upsert(df, lastWinsBy = <orderCol>) for defined last-wins")))
-            .cast(LongType))
+        when(count(lit(1)).over(w) > 1, raise_error(dupKeyMessage(m, op)).cast(LongType))
           .otherwise(col(SeqCol)))
     } else out0
     // Deltas stay small between compactions; a few sorted files keep the
@@ -2266,17 +2356,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     // an in-job PK guard fired) or a lost metadata race sweeps the attempt.
     val deltaParts = spark.conf.getOption("graft.delta.writePartitions")
       .map(_.toInt).getOrElse(DeltaWritePartitions)
-    val mergedProps = propsUpdate.foldLeft(m.propsMap) {
-      case (acc, (k, Some(value))) => acc + (k -> value)
-      case (acc, (k, None)) => acc - k
-    }
-    publish { a =>
-      val files = writeFileset(a, m, out, v, DeltaToken,
-        Layout.Unrouted(deltaParts, shuffle = deltaParts != 1), v, Some(estBytes))
-      m.copy(version = v, timestampMs = now(), operation = op,
-        deltaFiles = m.deltaFiles ++ files,
-        props = if (mergedProps.isEmpty) None else Some(mergedProps))
-    }
+    publishDelta(m, op, props)(a =>
+      writeFileset(a, m, out, v, DeltaToken,
+        Layout.Unrouted(deltaParts, shuffle = deltaParts != 1), v, Some(estBytes)))
   }
 
   // ---------------------------------------------------------- file writer
@@ -2322,6 +2404,12 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
    * [[GraftTable.staticPlanMaxBytes]] the write plans statically, None
    * keeps AQE. `dropEmpty` deletes zero-row part files (and the whole dir
    * when nothing is left).
+   *
+   * This writes through a Spark job. A delta fileset whose rows are
+   * already on the driver — a bounded commit ([[commitOnDriver]]) or fold
+   * ([[writeFold]]), within [[GraftTable.broadcastDeltaBytes]] — is
+   * written there by the overload below, into the same layout; every
+   * `Base` layout and every input past the bound takes this path.
    */
   private def writeFileset(a: Attempt, m: TableMeta, rows: DataFrame, v: Long,
       token: String, layout: Layout, seq: Long, planBytes: Option[BigInt],
@@ -2386,6 +2474,85 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       else empty.foreach(f => Files.deleteIfExists(Paths.get(f.path)))
       kept
     }
+  }
+
+  /** [[writeFileset]]'s delta layouts written on the driver, from delta
+    * rows already there: every table column under its logical name and
+    * current type, then op and seq ([[deltaStruct]] order). No Spark job
+    * runs and no session conf changes: each file goes through the stock
+    * parquet writer ([[GraftSqlBridge.openParquetRowWriter]]) under
+    * [[GraftSqlBridge.parquetWriterConf]], which pins INT64-micros
+    * timestamps and the table codec; the encoding attributes ride the
+    * same conf. The attempt dir, physical projection and route values are
+    * the job path's (`_b=`/`_r=` dirs from the route expressions, bound on
+    * the driver by [[GraftTable.bindOn]]). Rows are PK-sorted within each
+    * file, one file per route; an unrouted set is one route, written even
+    * when empty, like the job path's first write task. */
+  private def writeFileset(a: Attempt, m: TableMeta, rows: Array[InternalRow], v: Long,
+      token: String, layout: Layout, seq: Long): Seq[DataFileMeta] = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, InterpretedUnsafeProjection, SortOrder}
+    val dir = a.add(attemptDir(location, v, token))
+    // every field nullable, as a Spark write job writes it
+    val conf = GraftSqlBridge.parquetWriterConf(spark,
+      StructType(deltaFileSchema(m).fields.map(_.copy(nullable = true))), effectiveCodec(m)).value
+    // per-column encoding attribute → parquet dictionary toggle
+    m.columns.filter(_.encoding.isDefined).foreach { c =>
+      conf.set(s"parquet.enable.dictionary#${c.physName}",
+        (c.encoding.get == "dictionary").toString)
+    }
+    val pkOrder = new InterpretedOrdering(m.columns.zipWithIndex.filter(_._1.isKey)
+      .map { case (c, i) => SortOrder(BoundReference(i, c.dataType, nullable = true), Ascending) })
+    def write(d: String, rs: Seq[InternalRow]): Unit = {
+      val w = GraftSqlBridge.openParquetRowWriter(
+        s"$d/part-00000-${java.util.UUID.randomUUID()}-c000.parquet", conf)
+      try rs.sorted(pkOrder).foreach(w.write) finally w.close()
+    }
+    val routeCols = (if (m.hash.nonEmpty) Seq(BucketCol -> bucketExpr(m, col)) else Nil) ++
+      m.range.map(r => RangeCol -> rangeKeyExprM(m, r, col))
+    lazy val route = InterpretedUnsafeProjection.createProjection(bindOn(spark, deltaStruct(m),
+      _.select(routeCols.map(_._2.cast(StringType)): _*))._1)
+    def byRoute(d: String, rs: Seq[InternalRow]): Unit =
+      rs.groupBy { r =>
+        val x = route(r)
+        routeCols.indices.map(i => if (x.isNullAt(i)) null else x.getUTF8String(i).toString)
+      }.foreach { case (values, group) =>
+        write(routeCols.map(_._1).zip(values).foldLeft(d) { case (p, (n, value)) =>
+          s"$p/${ExternalCatalogUtils.getPartitionPathString(n, value)}"
+        }, group)
+      }
+    layout match {
+      case Layout.Unrouted(_, _) => write(dir, rows.toSeq)
+      case Layout.Routed => byRoute(dir, rows.toSeq)
+      case Layout.RoutedUpserts =>
+        val (tomb, ups) = rows.toSeq.partition(MorOverlay.isDelete(_, m.columns.length))
+        byRoute(s"$dir/routed", ups)
+        write(s"$dir/tomb", tomb)
+      case Layout.Base(_) =>
+        throw new IllegalArgumentException("a base fileset is written by a Spark job")
+    }
+    fileMetas(spark, m, listParquet(dir), "delta", seq, Some(dir))
+  }
+
+  /** A minor fold's fileset: the latest delta row per key of the delta
+    * files `fold`, pending range drops masked, under the newest folded
+    * seq (each row keeps its own). A fold of at most
+    * [[GraftTable.broadcastDeltaBytes]] reads its rows on the driver
+    * through the V2 scan's readers (GraftV2Scan.readTail), folds them with
+    * the scan's own fold (MorOverlay.latestPerKey) and writes them on the
+    * driver; a bigger one folds and writes in a Spark job
+    * ([[latestDeltas]]). */
+  private def writeFold(a: Attempt, m: TableMeta, fold: Seq[DataFileMeta], v: Long,
+      token: String, layout: Layout): Seq[DataFileMeta] = {
+    val bytes = GraftTable.deltaBytes(fold)
+    val seq = fold.map(_.seq).max
+    if (bytes <= GraftTable.broadcastDeltaBytes) {
+      val names = m.columns.map(_.name)
+      val latest = MorOverlay.latestPerKey(GraftV2Scan.readTail(m, fold, None).iterator,
+        m.keyCols.map(names.indexOf).toArray, m.columns.map(_.dataType).toArray,
+        names.length, Some(names.length + 1))
+      writeFileset(a, m, latest.values.asScala.toArray, v, token, layout, seq)
+    } else writeFileset(a, m, latestDeltas(m, fold), v, token, layout, seq, Some(BigInt(bytes)))
   }
 
   /** Runs `f` with parquet timestamps written as INT64 micros — Spark's

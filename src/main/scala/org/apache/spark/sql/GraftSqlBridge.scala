@@ -230,7 +230,7 @@ object GraftSqlBridge {
         Map.empty[String, String], spark.sessionState.conf))
   }
 
-  /** Hadoop conf prepared for executor-side [[openParquetRowWriter]] calls
+  /** Hadoop conf prepared for [[openParquetRowWriter]] calls
     * over rows of `schema` — the conf plumbing ParquetFileFormat
     * .prepareWrite performs before handing writers to tasks (the session's
     * newHadoopConf already carries the SQL conf entries ParquetWriteSupport
@@ -271,10 +271,32 @@ object GraftSqlBridge {
     new org.apache.spark.util.SerializableConfiguration(hconf)
   }
 
-  /** One executor-side parquet writer at `path` (OutputWriter: write
-    * InternalRows, then close) — the stock ParquetOutputWriter under a
-    * synthetic task attempt, for writers that live outside a Spark
-    * FileFormat write job (the V2 row-level-operations delta path). */
+  /** `df`'s rows as InternalRows on the driver, collected through its
+    * executed plan under a SQL execution id, as `Dataset.collect` runs it
+    * but with no conversion to external rows. A local relation collects
+    * with no job (`LocalTableScanExec`'s driver-local collect), and so
+    * does a union of local relations, child by child; any other plan
+    * runs its usual collect. */
+  def collectInternal(df: DataFrame): Array[catalyst.InternalRow] = {
+    import execution.{LocalTableScanExec, SparkPlan, UnionExec}
+    def local(p: SparkPlan): Boolean = p match {
+      case _: LocalTableScanExec => true
+      case u: UnionExec => u.children.forall(local)
+      case _ => false
+    }
+    def collect(p: SparkPlan): Array[catalyst.InternalRow] = p match {
+      case u: UnionExec if local(u) => u.children.toArray.flatMap(collect)
+      case _ => p.executeCollect()
+    }
+    val qe = df.queryExecution
+    execution.SQLExecution.withNewExecutionId(qe, Some("collect"))(collect(qe.executedPlan))
+  }
+
+  /** One parquet writer at `path` (OutputWriter: write InternalRows, then
+    * close) — the stock ParquetOutputWriter under a synthetic task
+    * attempt, for writers that live outside a Spark FileFormat write job:
+    * the V2 row-level-operations delta path on executors, and the bounded
+    * delta writes on the driver (GraftTable.writeFileset). */
   def openParquetRowWriter(path: String,
       conf: org.apache.hadoop.conf.Configuration)
       : execution.datasources.OutputWriter = {

@@ -66,10 +66,11 @@ class AdaptiveTransportSpec extends AnyFunSuite {
     val df = (1 to 500).map(i => (i.toLong, s"a$i")).toDF("k", "v")
     val t = GraftTable.create(spark, s"$wh/t2", "t2", df.schema, Seq("k"),
       Seq(HashComponent(Seq("k"), 4)), data = Some(df))
-    // ~150 KB+ of incompressible delta payload (sha chains defeat snappy)
+    // ~150 KB of delta payload, three distinct sha digests per row (one
+    // digest repeated would compress to a third, near the 64 KB floor)
+    def digest(pad: String) = sha2(concat_ws("#", col("k"), lit(pad)), 512)
     t.upsert((1 to 400).map(_.toLong).toDF("k")
-      .withColumn("v", sha2(concat_ws("#", col("k"), lit("pad")), 512))
-      .select(col("k"), concat(col("v"), col("v"), col("v")).as("v")))
+      .select(col("k"), concat(digest("pad"), digest("pad2"), digest("pad3")).as("v")))
     val before = spark.conf.getOption("spark.sql.autoBroadcastJoinThreshold")
     try {
       // a deliberately tiny join threshold drops the adaptive bound to its

@@ -188,6 +188,10 @@ class MaintenanceSchedulerSpec extends AnyFunSuite {
     val df = (1 to 100).map(i => (i.toLong, i)).toDF("k", "v")
     val t = GraftTable.create(spark, s"$wh/ms3", "ms3", df.schema, Seq("k"),
       Seq(HashComponent(Seq("k"), 2)), data = Some(df))
+    // pile up tail delta files past the bound before the schedule starts
+    // (a bounded commit writes one delta file, so three commits)
+    (1 to 3).foreach(i => t.upsert(df.withColumn("v", col("v") + 1000 * i)))
+    assert(t.meta.deltaFiles.size > 2, "the writes must breach the file bound")
     spark.conf.set("spark.sql.catalog.gmsched",
       classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gmsched.warehouse", wh)
@@ -196,13 +200,11 @@ class MaintenanceSchedulerSpec extends AnyFunSuite {
         "max_delta_ratio => 0.05, max_delta_files => 2)").collect().head
     assert(row.getLong(1) == 50L)
     assert(MaintenanceScheduler.scheduled.contains(t.location))
-    // real timer ticks: pile up tail delta files past the bound, wait for
-    // the daemon to fold them back under it. The contract is BOUNDS HELD,
-    // not zero deltas — at unit-test scale parquet per-file overhead makes
+    // real timer ticks: wait for the daemon to fold the files back under
+    // the bound. The contract is BOUNDS HELD, not zero deltas — at
+    // unit-test scale parquet per-file overhead makes
     // the base look huge, so the delta RATIO sits under max_delta_ratio
     // already and the correctly-idle scheduler must not churn it further.
-    t.upsert(df.withColumn("v", col("v") + 1000))
-    assert(t.meta.deltaFiles.size > 2, "the write must breach the file bound")
     val deadline = System.currentTimeMillis() + 20000
     def bounded = t.meta.deltaFiles.size <= 2 && deltaRatio(t) <= 0.05 + 1e-9
     while (!bounded && System.currentTimeMillis() < deadline)
@@ -434,7 +436,9 @@ class MaintenanceSchedulerSpec extends AnyFunSuite {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(s"$wh/ns1"))
     val tn = GraftTable.create(spark, s"$wh/ns1/deep", "deep", df.schema,
       Seq("k"), Seq(HashComponent(Seq("k"), 2)), data = Some(df))
-    (1 to 6).foreach { r =>
+    // 24 commits: dirty past the 0.2 delta:base byte ratio (a bounded
+    // commit writes one delta file)
+    (1 to 24).foreach { r =>
       t.upsert(df.filter(col("k") % 7 === r % 7).withColumn("v", lit(r)))
       tn.upsert(df.filter(col("k") % 5 === r % 5).withColumn("v", lit(r)))
     }

@@ -25,6 +25,19 @@ class RoutedDeltaSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** A test run with `confs` set on the shared session, each previous
+    * value restored (or unset) afterwards: a leaked setting would change
+    * how every later suite in the JVM plans. */
+  private def confTest(name: String, confs: (String, String)*)(body: => Any): Unit =
+    test(name) {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+
   private def withSpillForced[A](body: => A): A = {
     spark.conf.set("graft.mor.broadcastBytes", "1")
     try body finally spark.conf.unset("graft.mor.broadcastBytes")
@@ -100,7 +113,8 @@ class RoutedDeltaSpec extends AnyFunSuite {
     }
   }
 
-  test("SPJ join stays shuffle-free over a flushed table") {
+  confTest("SPJ join stays shuffle-free over a flushed table",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true") {
     val wh = Files.createTempDirectory("graft-routed3-").toString
     def mk(name: String, n: Int, payload: String): GraftTable = {
       val df = (1 to n).map(i => (i.toLong, s"$payload$i")).toDF("k", "v")
@@ -111,7 +125,6 @@ class RoutedDeltaSpec extends AnyFunSuite {
     t1.upsert(Seq((3L, "edited"), (7L, "edited7")).toDF("k", "v"))
     t1.compactDeltas()
     catConf("grd3", wh)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try withSpillForced {

@@ -19,6 +19,19 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   import spark.implicits._
 
+  /** A test run with `confs` set on the shared session, each previous
+    * value restored (or unset) afterwards: a leaked setting would change
+    * how every later suite in the JVM plans. */
+  private def confTest(name: String, confs: (String, String)*)(body: => Any): Unit =
+    test(name) {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try body finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+
   private def mkWarehouse(): String = {
     val wh = Files.createTempDirectory("graft-wh-").toString
     def mk(name: String, n: Int, payload: String): Unit = {
@@ -31,11 +44,11 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     wh
   }
 
-  test("co-partitioned PK-PK join plans with zero shuffle exchanges") {
+  confTest("co-partitioned PK-PK join plans with zero shuffle exchanges",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true") {
     val wh = mkWarehouse()
     spark.conf.set("spark.sql.catalog.gspj", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gspj.warehouse", wh)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -51,7 +64,8 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
   }
 
-  test("PK-PK SPJ joins sort-free on clean sorted snapshots; deltas restore the sorts") {
+  confTest("PK-PK SPJ joins sort-free on clean sorted snapshots; deltas restore the sorts",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true") {
     // SupportsReportOrdering: one PK-sorted file per key group on a clean
     // snapshot → the scan declares per-partition PK order and the
     // SortMergeJoin runs with ZERO Sort stages (on top of the zero
@@ -60,7 +74,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     val wh = mkWarehouse()
     spark.conf.set("spark.sql.catalog.gord", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gord.warehouse", wh)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -88,7 +101,9 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
   }
 
-  test("mismatched-but-divisible bucket counts co-partition via the reducer") {
+  confTest("mismatched-but-divisible bucket counts co-partition via the reducer",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true",
+      "spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled" -> "true") {
     // lineitem(8 buckets) ⋈ orders(4 buckets) shape: pmod(h,8) reduces to
     // pmod(h,4) exactly, so the finer side's key groups fold onto the
     // coarser side's and the join still plans shuffle-free.
@@ -102,8 +117,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     mk("coarse", 4, 90, "c")
     spark.conf.set("spark.sql.catalog.gred", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gred.warehouse", wh)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.sources.v2.bucketing.allowCompatibleTransforms.enabled", "true")
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -116,13 +129,13 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
   }
 
-  test("fixture documents-embeddings join (q30's shape) is shuffle-free") {
+  confTest("fixture documents-embeddings join (q30's shape) is shuffle-free",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true") {
     val dir = "/root/testdata/sf0.001"
     Tables.readonly(spark, dir, "documents")
     Tables.readonly(spark, dir, "embeddings")
     spark.conf.set("spark.sql.catalog.gfix", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gfix.warehouse", Tables.cacheRoot(dir))
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -138,14 +151,14 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBroadcast)
   }
 
-  test("group-by on the bucket key aggregates without a shuffle") {
+  confTest("group-by on the bucket key aggregates without a shuffle",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true") {
     // KeyGroupedPartitioning satisfies the aggregation's clustered
     // distribution, so the partial/final exchange disappears too — at
     // 100 TB a per-key rollup over a graft table is shuffle-free.
     val wh = mkWarehouse()
     spark.conf.set("spark.sql.catalog.gagg", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gagg.warehouse", wh)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val agg = spark.table("gagg.t1").groupBy("k").agg(count(lit(1)).as("c"))
     assert(agg.count() == 100)
     val plan = agg.queryExecution.executedPlan.toString
@@ -181,11 +194,11 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
       .select("v").as[String].head() == "changed")
   }
 
-  test("SPJ key groups survive the MOR overlay (join with pending deltas)") {
+  confTest("SPJ key groups survive the MOR overlay (join with pending deltas)",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true") {
     val wh = mkWarehouse()
     spark.conf.set("spark.sql.catalog.gmor", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gmor.warehouse", wh)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val t = GraftTable.load(spark, s"$wh/t1")
     t.upsert(Seq((3L, "edited"), (200L, "fresh")).toDF("k", "v"))
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -576,7 +589,8 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     assert(spark.table("gref2.rdrop").count() == 23)
   }
 
-  test("multi-component layouts co-partition: composite-keyed SPJ, no shuffle") {
+  confTest("multi-component layouts co-partition: composite-keyed SPJ, no shuffle",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true") {
     // both tables hash (a: 2 buckets) x (b: 3 buckets): the scan reports one
     // bucket transform per component and the (a, b) join aligns 6 key groups
     val wh = Files.createTempDirectory("graft-wh9-").toString
@@ -589,7 +603,6 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     val t2 = mk("mc2", 90, "y")
     spark.conf.set("spark.sql.catalog.gmc", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.gmc.warehouse", wh)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val prevBroadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
@@ -679,11 +692,11 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     assert(GraftTable.load(spark, s"$wh/nt").properties == Map("team" -> "data-eng"))
   }
 
-  test("V2 DDL: ALTER TABLE RENAME moves the table, snapshots stay readable") {
+  confTest("V2 DDL: ALTER TABLE RENAME moves the table, snapshots stay readable",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true") {
     val wh = Files.createTempDirectory("graft-wh7-").toString
     spark.conf.set("spark.sql.catalog.grn", classOf[graft.sources.v2.GraftCatalog].getName)
     spark.conf.set("spark.sql.catalog.grn.warehouse", wh)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     def mk(name: String, n: Int, payload: String): Unit = {
       val df = (1 to n).map(i => (i.toLong, s"$payload$i")).toDF("k", "v")
       GraftTable.create(spark, s"$wh/$name", name, df.schema, Seq("k"),
@@ -732,7 +745,8 @@ class StoragePartitionedJoinSpec extends AnyFunSuite {
     assert(got == Map(Seq[Byte](1, 2) -> "changed", Seq[Byte](5, 6) -> "c"), got)
   }
 
-  test("runtime IN filters prune input files but preserve the key groups") {
+  confTest("runtime IN filters prune input files but preserve the key groups",
+      "spark.sql.sources.v2.bucketing.enabled" -> "true") {
     import org.apache.spark.sql.execution.datasources.FilePartition
     val wh = mkWarehouse()
     val meta = graft.catalog.TableMeta.readCurrent(s"$wh/t1")
