@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BindReferences, Expression, IntegerLiteral, InterpretedUnsafeProjection, Predicate, SubqueryExpression, Unevaluable}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, ReturnAnswer, UnaryNode}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.connector.read.PartitionReader
+import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, SQLExecution, UnaryExecNode}
 import org.apache.spark.sql.execution.datasources.FilePartition
 import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceRDDPartition, DataSourceV2ScanRelation}
@@ -87,7 +87,7 @@ object InlineReads extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def driverEvaluable(e: Expression): Boolean =
+  private[graft] def driverEvaluable(e: Expression): Boolean =
     e.deterministic && !e.exists {
       case _: Attribute => false
       case _: SubqueryExpression | _: Unevaluable => true // Python UDFs are unevaluable
@@ -111,6 +111,35 @@ object InlineReads extends Rule[LogicalPlan] {
     case GlobalLimit(IntegerLiteral(n), c) => evaluate(c, scanRows).take(n)
     case LocalLimit(IntegerLiteral(n), c) => evaluate(c, scanRows).take(n)
     case _: DataSourceV2ScanRelation => scanRows
+  }
+
+  /** The rows of `splits`, read through `factory` on the driver one split
+    * after another (columnar where `columnar` says so), as one iterator
+    * handed to `consume`; every reader opened is closed when `consume`
+    * returns. `counted` sees the number of rows read. Rows may reuse
+    * buffers: consume each before the next, and copy what is kept. The
+    * one driver reader of a V2 scan: point reads ([[InlineReadExec]]) and
+    * keyed reads (GraftTable.readByKeys) both read through it. */
+  private[graft] def readSplits[A](factory: PartitionReaderFactory,
+      splits: Seq[InputPartition], columnar: InputPartition => Boolean,
+      counted: Long => Unit = _ => ())(consume: Iterator[InternalRow] => A): A = {
+    val open = scala.collection.mutable.ArrayBuffer[PartitionReader[_]]()
+    val rows = splits.iterator.flatMap { p =>
+      if (columnar(p)) {
+        val r = factory.createColumnarReader(p)
+        open += r
+        Iterator.continually(r).takeWhile(_.next()).flatMap { x =>
+          val b = x.get()
+          counted(b.numRows())
+          b.rowIterator().asScala
+        }
+      } else {
+        val r = factory.createReader(p)
+        open += r
+        Iterator.continually(r).takeWhile(_.next()).map { x => counted(1); x.get() }
+      }
+    }
+    try consume(rows) finally open.foreach(_.close())
   }
 }
 
@@ -138,42 +167,26 @@ case class InlineReadExec(chain: LogicalPlan, child: SparkPlan) extends UnaryExe
   override protected def withNewChildInternal(c: SparkPlan): InlineReadExec = copy(child = c)
 
   /** At most `n` result rows, read from the scan's splits on the
-    * driver. Building the scan node's input RDD (no job) posts the scan's
-    * driver metrics as the job path does; its partitions are the splits a
-    * task would read. The rows read are counted on the node's output row
-    * metric. */
+    * driver ([[InlineReads.readSplits]]). Building the scan node's input
+    * RDD (no job) posts the scan's driver metrics as the job path does;
+    * its partitions are the splits a task would read. The rows read are
+    * counted on the node's output row metric. */
   private def read(n: Int): Array[InternalRow] = {
     val scan = child.collectFirst { case b: BatchScanExec => b }.get
     val splits = scan.inputRDD.partitions.toSeq.flatMap {
       case p: DataSourceRDDPartition => p.inputPartitions
       case _ => Nil // runtime filtering removed every split
     }
-    val factory = scan.readerFactory
     val numOut = scan.metrics("numOutputRows")
-    val open = scala.collection.mutable.ArrayBuffer[PartitionReader[_]]()
-    val rows = splits.iterator.flatMap { p =>
-      if (scan.supportsColumnar) {
-        val r = factory.createColumnarReader(p)
-        open += r
-        Iterator.continually(r).takeWhile(_.next()).flatMap { x =>
-          val b = x.get()
-          numOut.add(b.numRows())
-          b.rowIterator().asScala
-        }
-      } else {
-        val r = factory.createReader(p)
-        open += r
-        Iterator.continually(r).takeWhile(_.next()).map { x => numOut.add(1); x.get() }
-      }
-    }
     val toUnsafe = InterpretedUnsafeProjection.createProjection(
       BindReferences.bindReferences(chain.output, chain.output))
-    try {
+    InlineReads.readSplits(scan.readerFactory, splits, _ => scan.supportsColumnar,
+        numOut.add) { rows =>
       val out = InlineReads.evaluate(chain, rows).take(n)
         .map(r => toUnsafe(r).copy(): InternalRow).toArray
       SQLMetrics.postDriverMetricUpdates(sparkContext,
         sparkContext.getLocalProperty(SQLExecution.EXECUTION_ID_KEY), Seq(numOut))
       out
-    } finally open.foreach(_.close())
+    }
   }
 }

@@ -150,6 +150,133 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       baseFiles = graft.sources.PartitionPruner.pruneFiles(m, m.baseFiles, filters),
       deltaFiles = graft.sources.PartitionPruner.pruneFiles(m, m.deltaFiles, filters))
 
+  /** The rows of the snapshot at `version` (None = current) whose
+    * `keySchema` columns — any source columns, not only the key — match
+    * one of the collected `keys` (external values, one per field): the
+    * keyed read of the derived-table refresh. When the pruned files fit
+    * [[GraftTable.broadcastDeltaBytes]] the rows are read on the driver
+    * ([[keyedRows]]) and come back as a local relation: no job runs. Past
+    * the bound it is [[scanByKeys]]. `assertPrune` as in [[scanPruned]]
+    * (test/verification hook). */
+  private[graft] def readByKeys(version: Option[Long], keySchema: StructType,
+      keys: Array[Row], assertPrune: Boolean = false): DataFrame = {
+    if (keys.isEmpty) return scan(version).limit(0)
+    val m = version.map(readVersion).getOrElse(meta)
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(keySchema)
+    keyedRows(m, keySchema, keys.map(k => toCatalyst(k).asInstanceOf[InternalRow]),
+        hidden = false, assertPrune)
+      .map { case (schema, rows) => localRelation(schema, rows) }
+      .getOrElse(scanByKeys(version, keySchema, keys, assertPrune))
+  }
+
+  /** [[readByKeys]] as a scan: an IN-list per key column prunes and
+    * filters the snapshot ([[scanPruned]] — exact for one column, a
+    * superset for several) and an exact broadcast key semi-join lands
+    * behind it. Empty keys give an empty scan-shaped frame. The index
+    * serves splice this into the query they rewrite, so the base read
+    * stays in the plan and runs at execution. */
+  private[graft] def scanByKeys(version: Option[Long], keySchema: StructType,
+      keys: Array[Row], assertPrune: Boolean = false): DataFrame = {
+    if (keys.isEmpty) return scan(version).limit(0)
+    scanPruned(keyFilters(keySchema, keys.map(_.toSeq)), version, assertPrune)
+      .join(broadcast(spark.createDataFrame(keys.toSeq.asJava,
+        StructType(keySchema.fields.map(_.copy(nullable = true))))),
+        keySchema.fieldNames.toSeq, "left_semi")
+  }
+
+  /** An IN-list per column of `keySchema` over the key tuples `keys`
+    * (external values): what prunes a keyed read's files at the manifest. */
+  private def keyFilters(keySchema: StructType, keys: Seq[Seq[Any]])
+      : Seq[org.apache.spark.sql.sources.Filter] =
+    keySchema.fieldNames.toSeq.zipWithIndex.map { case (c, i) =>
+      org.apache.spark.sql.sources.In(c, keys.map(_(i)).distinct.toArray)
+    }
+
+  /** The driver keyed read, Kudu's in-tablet presence probe
+    * (`BulkCheckPresence`, tablet/tablet.cc:1148): the rows of snapshot `m`
+    * (every column with `hidden`, else the visible ones; the read schema
+    * comes back with them) whose `keySchema` columns equal one of `keys`
+    * (catalyst values). The manifest prunes with an IN-list per key column
+    * (buckets, zone maps, per-file key bounds); when the surviving base and
+    * delta bytes fit [[GraftTable.broadcastDeltaBytes]], the V2 scan's own
+    * reader factory reads them on the driver (graft.plans.InlineReads
+    * .readSplits: the overlay, the generation remap and the drop masks of
+    * every read) and a driver hash set of the keys (MorOverlay.keyOf:
+    * multi-column keys stay exact; a key with a null never matches) keeps
+    * the matching rows. No job runs. None past the bound, or when a key
+    * field's type is not its column's. */
+  private[graft] def keyedRows(m: TableMeta, keySchema: StructType,
+      keys: Seq[InternalRow], hidden: Boolean, assertPrune: Boolean = false)
+      : Option[(StructType, Array[InternalRow])] = {
+    val cols = if (hidden) m.columns else m.visibleColumns
+    val filters = keyFilters(keySchema, keys.map(k =>
+      keySchema.fields.toSeq.zipWithIndex.map { case (f, i) =>
+        org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .convertToScala(k.get(i, f.dataType), f.dataType)
+      }))
+    val kept = prunedTo(m, filters)
+    if (assertPrune && kept.baseFiles.length * 2 > m.baseFiles.length)
+      throw new IllegalStateException(
+        s"pruned scan of $location must keep at most half its base files: " +
+          s"kept ${kept.baseFiles.length} of ${m.baseFiles.length} for " +
+          filters.mkString(", "))
+    if (!keySchema.forall(f => cols.exists(c => c.name == f.name && c.dataType == f.dataType)))
+      return None
+    val scan = {
+      val b = new graft.sources.v2.GraftScanBuilder(
+        kept.copy(columns = kept.columns.map(_.copy(nullable = true))), hidden = hidden)
+      b.pushFilters(filters.toArray)
+      b.build().asInstanceOf[GraftV2Scan]
+    }
+    if (!scan.opensAtMost(GraftTable.broadcastDeltaBytes)) return None
+    val schema = scan.readSchema()
+    val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
+    val factory = scan.createReaderFactory()
+    val matches = keyProbe(schema, keySchema, keys)
+    Some((schema, graft.plans.InlineReads.readSplits(factory,
+        scan.planInputPartitions().toSeq, factory.supportColumnarReads) { rows =>
+      rows.filter(matches).map(r => toUnsafe(r).copy(): InternalRow).toArray
+    }))
+  }
+
+  /** Whether a row of `schema` carries one of `keys` (catalyst values of
+    * `keySchema`'s fields, which `schema` holds by name) — a key with a null
+    * never matches. A single integral key probes an unboxed hash set, so
+    * the rows a keyed read scans allocate nothing; any other key probes
+    * MorOverlay.keyOf tuples (value semantics, exact for several columns). */
+  private def keyProbe(schema: StructType, keySchema: StructType,
+      keys: Seq[InternalRow]): InternalRow => Boolean = {
+    import org.apache.spark.util.collection.OpenHashSet
+    val idx = keySchema.fieldNames.map(schema.fieldIndex)
+    keySchema.fields.map(_.dataType) match {
+      case Array(LongType) =>
+        val set = new OpenHashSet[Long]()
+        keys.foreach(k => if (!k.isNullAt(0)) set.add(k.getLong(0)))
+        val i = idx(0)
+        r => !r.isNullAt(i) && set.contains(r.getLong(i))
+      case Array(IntegerType) =>
+        val set = new OpenHashSet[Int]()
+        keys.foreach(k => if (!k.isNullAt(0)) set.add(k.getInt(0)))
+        val i = idx(0)
+        r => !r.isNullAt(i) && set.contains(r.getInt(i))
+      case keyTypes =>
+        val types = schema.fields.map(_.dataType)
+        val probe = keySchema.indices.toArray
+        val wanted = new java.util.HashSet[Seq[Any]]()
+        keys.foreach(k => if (!probe.exists(k.isNullAt))
+          wanted.add(MorOverlay.keyOf(k, probe, keyTypes)))
+        r => wanted.contains(MorOverlay.keyOf(r, idx, types))
+    }
+  }
+
+  /** `rows` (catalyst values of `schema`) as a local relation: collecting
+    * it, or a projection or filter over it, runs no job. */
+  private def localRelation(schema: StructType, rows: Seq[InternalRow]): DataFrame =
+    GraftSqlBridge.ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
+        StructType(schema.fields.map(_.copy(nullable = true)))), rows))
+
   /**
    * Table snapshot pruned to what can possibly match `batch` on `joinKeys`
    * — the presence-check scan of the write path (the Spark analog of the
@@ -167,6 +294,10 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
    * any batch row, so semi/anti/inner joins on `joinKeys` are unaffected.
    * Delta files are never pruned (no partition coordinates; small between
    * compactions).
+   *
+   * This is the job path: a local batch whose keyed read fits
+   * [[GraftTable.broadcastDeltaBytes]] probes its keys on the driver
+   * instead ([[presentOnDriver]]), with no Spark job.
    */
   private def scanForBatch(m: TableMeta, batch: DataFrame,
       joinKeys: Seq[String]): DataFrame = {
@@ -337,7 +468,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     StructType(m.schema.fields.map(_.copy(nullable = true)) ++
       Seq(StructField(OpCol, StringType), StructField(SeqCol, LongType)))
 
-  /** Footer-vs-manifest schema audit (`fsck(verifySchemas = true)`):
+  /** Footer-vs-manifest schema audit (`fsck(verifySchemas = true)`): every
+    * column's type, and its repetition — every engine writer writes every
+    * field optional, whatever the column's declared nullability.
     * [[readFileGroup]] reads every committed file under the PHYSICAL
     * schema the manifest implies — sound for every engine writer
     * (the writer casts before writing, register derives ColumnMeta FROM
@@ -348,7 +481,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * not a scan-path cost. */
   def verifyFileSchemas(): Seq[String] = {
     val m = meta
-    val issues = scala.collection.mutable.ArrayBuffer[String]()
+    val mismatches = scala.collection.mutable.ArrayBuffer[String]()
     (m.baseFiles ++ m.deltaFiles).foreach { f =>
       val present = f.colIds.toSet
       val expect: Map[String, DataType] =
@@ -359,26 +492,29 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       val footer =
         try Some(org.apache.spark.sql.GraftSqlBridge.parquetFileSchema(spark, f.path))
         catch { case e: Exception =>
-          issues += s"unreadable footer: ${f.path}: ${e.getMessage}"; None }
+          mismatches += s"unreadable footer: ${f.path}: ${e.getMessage}"; None }
       footer.foreach { ft =>
-        val byName = ft.fields.map(x => x.name -> x.dataType).toMap
+        val byName = ft.fields.map(x => x.name -> x).toMap
         expect.foreach { case (n, dt) =>
           byName.get(n) match {
-            case None => issues += s"manifest/file schema mismatch: " +
+            case None => mismatches += s"manifest/file schema mismatch: " +
               s"column '$n' recorded in manifest but absent from footer: ${f.path}"
-            case Some(have) if have != dt => issues +=
-              s"manifest/file schema mismatch: column '$n' is $have in the " +
+            case Some(have) if have.dataType != dt => mismatches +=
+              s"manifest/file schema mismatch: column '$n' is ${have.dataType} in the " +
                 s"footer but the manifest records $dt: ${f.path}"
+            case Some(have) if !have.nullable => mismatches +=
+              s"manifest/file schema mismatch: column '$n' is required in the " +
+                s"footer but every engine writer writes it optional: ${f.path}"
             case _ => ()
           }
         }
         ft.fieldNames.filterNot(expect.contains).foreach { n =>
-          issues += s"manifest/file schema mismatch: footer column '$n' " +
+          mismatches += s"manifest/file schema mismatch: footer column '$n' " +
             s"not recorded in the manifest: ${f.path}"
         }
       }
     }
-    issues.toSeq
+    mismatches.toSeq
   }
 
   /**
@@ -414,19 +550,6 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         col("_bv").isNull.as(DeletedCol): _*)
   }
 
-  /**
-   * Incremental diff scan from delta files alone — the fast CDC path when no
-   * compaction separates (v1, v2]: reads ONLY the delta commits in range
-   * instead of rescanning two full snapshots (what the reference's diff scan
-   * does physically: mutations since the start timestamp, ghost rows
-   * deduped — generic_iterators.cc:440-467). Falls back to the logical
-   * [[changes]] when [[cdcFastPath]] declines (a compaction intervened).
-   *
-   * Semantics: latest mutated state per key + `_deleted`. Matches Kudu's
-   * physical diff: an upsert writing an unchanged value IS emitted (it is a
-   * mutation); a row inserted and deleted entirely within the window is NOT
-   * (ghost dedup via an existence check against v1).
-   */
   /** True when `(v1, v2]` changed the table through delta files alone —
     * the [[changesSince]] / [[touchedKeys]] fast path. Minor delta folds
     * (`merge_tail`, `compact_deltas`) may rewrite delta files inside the
@@ -476,6 +599,23 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       .map(f => GraftTable.fileSize(f.path)).sum)
   }
 
+  /**
+   * Incremental diff scan from delta files alone — the fast CDC path when no
+   * compaction separates (v1, v2]: reads ONLY the delta commits in range
+   * instead of rescanning two full snapshots (what the reference's diff scan
+   * does physically: mutations since the start timestamp, ghost rows
+   * deduped — generic_iterators.cc:440-467). Falls back to the logical
+   * [[changes]] when [[cdcFastPath]] declines (a compaction intervened).
+   * A window whose delta bytes fit [[GraftTable.broadcastDeltaBytes]] is
+   * read, folded and ghost-checked on the driver and comes back as a local
+   * relation: no Spark job runs ([[changesOnDriver]]); a bigger one folds
+   * in a Spark job.
+   *
+   * Semantics: latest mutated state per key + `_deleted`. Matches Kudu's
+   * physical diff: an upsert writing an unchanged value IS emitted (it is a
+   * mutation); a row inserted and deleted entirely within the window is NOT
+   * (ghost dedup via an existence check against v1).
+   */
   def changesSince(v1: Long, v2: Long): DataFrame = {
     val m1 = readVersion(v1)
     val m2 = readVersion(v2)
@@ -489,6 +629,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(m2.visibleColumns.map(_.toField.copy(nullable = true)) :+
           StructField(DeletedCol, BooleanType, nullable = false)))
+    if (GraftTable.deltaBytes(inRange) <= GraftTable.broadcastDeltaBytes)
+      changesOnDriver(m1, m2, inRange, v1).foreach(return _)
     // the per-key fold over the window's rows, sized by the in-range delta
     // bytes (a CDC window is usually a sliver of the table, often one
     // commit). No drop mask: the fast path requires equal drop lists, so
@@ -509,6 +651,67 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     ups.unionByName(dels)
       .select(m2.visibleColumns.map(c => col(c.name)) :+
         (col(OpCol) === OpDelete).as(DeletedCol): _*)
+  }
+
+  /** [[changesSince]]'s fast path when the window's delta bytes fit
+    * [[GraftTable.broadcastDeltaBytes]], on the driver, as Kudu's diff scan
+    * runs inside the tablet: the window's rows are read by the scan's own
+    * readers (GraftV2Scan.readTail) and those with seq in `(v1, v2]` kept
+    * (a folded file also carries older rows), folded per key
+    * (MorOverlay.latestPerKey), and the ghost check — a tombstone emits
+    * only for a key live at v1 — is a keyed read at v1 of the deleted
+    * keys alone ([[keyedRows]]; none when the window holds no tombstone).
+    * The rows come back as a local relation, which is safe because the
+    * versions `(v1, v2]` are immutable. None when the ghost check's keyed
+    * read is past the bound. */
+  private def changesOnDriver(m1: TableMeta, m2: TableMeta,
+      inRange: Seq[DataFileMeta], v1: Long): Option[DataFrame] = {
+    val n = m2.columns.length
+    val types = m2.columns.map(_.dataType).toArray
+    val keyIdx = m2.keyCols.map(k => m2.columns.indexWhere(_.name == k)).toArray
+    val latest = MorOverlay.latestPerKey(windowRows(m2, inRange, v1), keyIdx, types,
+      n, Some(n + 1)).values.asScala.toSeq
+    val (dels, ups) = latest.partition(MorOverlay.isDelete(_, n))
+    val live = if (dels.isEmpty) Some(Set.empty[Seq[Any]]) else liveAt(m1, m2, dels, keyIdx)
+    val visible = m2.visibleColumns.map(c => m2.columns.indexOf(c))
+    live.map { live =>
+      val out = (ups ++ dels.filter(r => live(MorOverlay.keyOf(r, keyIdx, types))))
+        .map { r =>
+          val vals = visible.map(i => r.get(i, types(i))) :+ MorOverlay.isDelete(r, n)
+          org.apache.spark.sql.catalyst.InternalRow.fromSeq(vals)
+        }
+      localRelation(StructType(m2.visibleColumns.map(_.toField) :+
+        StructField(DeletedCol, BooleanType, nullable = false)), out)
+    }
+  }
+
+  /** The rows of `m2`'s delta files `inRange` committed after `v1` (every
+    * table column, then op and seq), read on the driver
+    * (GraftV2Scan.readTail). */
+  private def windowRows(m2: TableMeta, inRange: Seq[DataFileMeta], v1: Long)
+      : Iterator[InternalRow] = {
+    val seqIdx = m2.columns.length + 1
+    GraftV2Scan.readTail(m2, inRange, None).iterator.filter(_.getLong(seqIdx) > v1)
+  }
+
+  /** The keys (as MorOverlay.keyOf tuples over `m2`'s key columns at
+    * `keyIdx`) of `rows` that are live in snapshot `m1`: a keyed read at
+    * `m1` on the driver ([[keyedRows]]); None past the bound. Key columns
+    * match by column id, so a rename inside the window reads `m1`'s name. */
+  private def liveAt(m1: TableMeta, m2: TableMeta, rows: Seq[InternalRow],
+      keyIdx: Array[Int]): Option[Set[Seq[Any]]] = {
+    val keyCols = m2.keyCols.map { k =>
+      val c = m2.column(k)
+      m1.columns.find(_.id == c.id).getOrElse(c)
+    }
+    val keySchema = StructType(keyCols.map(c => StructField(c.name, c.dataType)))
+    val keys = rows.map(r => org.apache.spark.sql.catalyst.InternalRow.fromSeq(
+      keyIdx.toSeq.zip(keyCols).map { case (i, c) => r.get(i, c.dataType) }))
+    keyedRows(m1, keySchema, keys, hidden = true).map { case (schema, found) =>
+      val idx = keySchema.fieldNames.map(schema.fieldIndex)
+      val types = schema.fields.map(_.dataType)
+      found.map(r => MorOverlay.keyOf(r, idx, types)).toSet
+    }
   }
 
   /** Conservative leading-PK interval filters covering every key the given
@@ -545,7 +748,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * latest), so the fast path reads ONLY the window's delta rows — no
     * window function, no v1 snapshot scan. A minor delta fold inside the
     * window keeps the fast path (see [[cdcFastPath]]); a base rewrite or a
-    * range drop falls back to the logical diff. */
+    * range drop falls back to the logical diff. A fast-path window within
+    * [[GraftTable.broadcastDeltaBytes]] is read on the driver and comes
+    * back as a local relation, with no Spark job. */
   def touchedKeys(v1: Long, v2: Long, cols: Seq[String]): DataFrame = {
     val m1 = readVersion(v1)
     val m2 = readVersion(v2)
@@ -560,6 +765,19 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(cols.map(n =>
           m2.column(n).toField.copy(nullable = true))))
+    if (GraftTable.deltaBytes(inRange) <= GraftTable.broadcastDeltaBytes) {
+      // the window's distinct keys on the driver, as changesSince's
+      val idx = cols.map(c => m2.columns.indexWhere(_.name == c)).toArray
+      val types = m2.columns.map(_.dataType).toArray
+      val seen = new java.util.LinkedHashMap[Seq[Any], InternalRow]()
+      windowRows(m2, inRange, v1).foreach { r =>
+        val k = MorOverlay.keyOf(r, idx, types)
+        if (!seen.containsKey(k)) seen.put(k,
+          org.apache.spark.sql.catalyst.InternalRow.fromSeq(idx.toSeq.map(i => r.get(i, types(i)))))
+      }
+      return localRelation(StructType(cols.map(m2.column(_).toField)),
+        seen.values.asScala.toSeq)
+    }
     // callers persist() this frame: size its distinct's exchange by the
     // in-range delta bytes (foldPartitions)
     windowDeltas(m2, inRange, v1).select(cols.map(col): _*)
@@ -586,33 +804,71 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         if (ignore) "insert_ignore" else "insert")
       return
     }
-    if (!ignore) {
-      // both preconditions (keys already present in the table; duplicate
-      // keys inside the batch) are evaluated by the commit itself —
-      // present keys raise_error out of a left join against the pruned
-      // presence scan as the commit collects or writes the batch,
-      // intra-batch dups use commitDelta's guard — so an INSERT pays no
-      // stats job per mutation batch. The per-row error message carries
-      // the clashing key itself (no second sample-fetch job).
-      val existing = scanForBatch(m, batch, keys).select(keys.map(col): _*)
-        .withColumn("_graft_ex", lit(1))
-      val keyDt = m.column(keys.head).dataType
-      val guarded = batch.join(existing, keys, "left")
-        .withColumn(keys.head,
-          when(col("_graft_ex").isNotNull,
-            raise_error(concat(
-              lit(s"INSERT key already present in ${m.name}: ("),
-              concat_ws(",", keys.map(c => col(c).cast("string")): _*),
-              lit(")"))).cast(keyDt))
-            .otherwise(col(keys.head)))
-        .drop("_graft_ex")
-      commitDelta(m, guarded.withColumn(OpCol, lit(OpUpsert)), "insert",
-        guardDupKeys = true)
-    } else {
-      val existing = scanForBatch(m, batch, keys).select(keys.map(col): _*)
-      val fresh = batch.dropDuplicates(keys).join(existing, keys, "left_anti")
-      commitDelta(m, fresh.withColumn(OpCol, lit(OpUpsert)), "insert_ignore")
+    val clash = concat(lit(s"INSERT key already present in ${m.name}: ("),
+      concat_ws(",", keys.map(c => col(c).cast("string")): _*), lit(")"))
+    presentOnDriver(m, batch, keys) match {
+      case Some((rows, present)) if !ignore =>
+        rows.find(present).foreach { r =>
+          throw new PrimaryKeyException(
+            bindOn(spark, batch.schema, _.select(clash))._1.head.eval(r).toString)
+        }
+        commitDelta(m, batch.withColumn(OpCol, lit(OpUpsert)), "insert",
+          guardDupKeys = true)
+      case Some((rows, present)) =>
+        val idx = keys.map(batch.schema.fieldIndex).toArray
+        val types = batch.schema.fields.map(_.dataType)
+        val seen = new java.util.HashSet[Seq[Any]]()
+        val fresh = rows.filter(r =>
+          seen.add(MorOverlay.keyOf(r, idx, types)) && !present(r))
+        commitDelta(m, localRelation(batch.schema, fresh.toSeq)
+          .withColumn(OpCol, lit(OpUpsert)), "insert_ignore")
+      case None if !ignore =>
+        // both preconditions (keys already present in the table; duplicate
+        // keys inside the batch) are evaluated by the commit itself —
+        // present keys raise_error out of a left join against the pruned
+        // presence scan as the commit collects or writes the batch,
+        // intra-batch dups use commitDelta's guard — so an INSERT pays no
+        // stats job per mutation batch. The per-row error message carries
+        // the clashing key itself (no second sample-fetch job).
+        val existing = scanForBatch(m, batch, keys).select(keys.map(col): _*)
+          .withColumn("_graft_ex", lit(1))
+        val keyDt = m.column(keys.head).dataType
+        val guarded = batch.join(existing, keys, "left")
+          .withColumn(keys.head,
+            when(col("_graft_ex").isNotNull, raise_error(clash).cast(keyDt))
+              .otherwise(col(keys.head)))
+          .drop("_graft_ex")
+        commitDelta(m, guarded.withColumn(OpCol, lit(OpUpsert)), "insert",
+          guardDupKeys = true)
+      case None =>
+        val existing = scanForBatch(m, batch, keys).select(keys.map(col): _*)
+        val fresh = batch.dropDuplicates(keys).join(existing, keys, "left_anti")
+        commitDelta(m, fresh.withColumn(OpCol, lit(OpUpsert)), "insert_ignore")
     }
+  }
+
+  /** The presence check of a local write batch on the driver, Kudu's
+    * `BulkCheckPresence` (tablet/tablet.cc:1148): the batch's rows,
+    * collected with no job, and whether a row's `keys` are present in
+    * snapshot `m` — one keyed read of the batch's keys ([[keyedRows]]).
+    * None when the batch is not local ([[GraftTable.isLocal]]) or the
+    * keyed read is past the bound; callers then join the batch against
+    * the pruned presence scan ([[scanForBatch]]). */
+  private def presentOnDriver(m: TableMeta, batch: DataFrame, keys: Seq[String])
+      : Option[(Array[InternalRow], InternalRow => Boolean)] = {
+    if (!GraftTable.isLocal(batch)) return None
+    val rows = GraftSqlBridge.collectInternal(batch)
+    val idx = keys.map(batch.schema.fieldIndex).toArray
+    val types = batch.schema.fields.map(_.dataType)
+    val keyRows = rows.toSeq.map(r => org.apache.spark.sql.catalyst.InternalRow
+      .fromSeq(idx.toSeq.map(i => r.get(i, types(i)))))
+    keyedRows(m, StructType(keys.map(batch.schema(_))), keyRows, hidden = true)
+      .map { case (schema, found) =>
+        val fIdx = keys.map(schema.fieldIndex).toArray
+        val fTypes = schema.fields.map(_.dataType)
+        val present = found.map(r => MorOverlay.keyOf(r, fIdx, fTypes)).toSet
+        (rows, (r: InternalRow) => present(MorOverlay.keyOf(r, idx, types)))
+      }
   }
 
   /** UPSERT: insert-or-replace by PK (W3 — the Spark sink's default op,
@@ -817,10 +1073,14 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val keys = m.keyCols
     val k = keysDf.select(keys.map(col): _*)
     if (!ignore) {
-      val missing = k.join(
-        scanForBatch(m, k, keys).select(keys.map(col): _*), keys, "left_anti")
-      if (missing.limit(1).count() > 0)
-        throw new PrimaryKeyException(s"DELETE key not found in ${m.name}")
+      val found = presentOnDriver(m,
+        k.select(keys.map(c => col(c).cast(m.column(c).dataType).as(c)): _*), keys)
+      val anyMissing = found match {
+        case Some((rows, present)) => !rows.forall(present)
+        case None => k.join(scanForBatch(m, k, keys).select(keys.map(col): _*),
+          keys, "left_anti").limit(1).count() > 0
+      }
+      if (anyMissing) throw new PrimaryKeyException(s"DELETE key not found in ${m.name}")
     }
     commitDelta(m, tombstoneRows(m, k).withColumn(OpCol, lit(OpDelete)),
       if (ignore) "delete_ignore" else "delete", dropDupKeys = true)
@@ -924,8 +1184,23 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   private[table] def txnConform(m: TableMeta, df: DataFrame): DataFrame =
     conform(m, assignAutoInc(m, df))
 
-  private[table] def txnPresence(m: TableMeta, batch: DataFrame): DataFrame =
-    scanForBatch(m, batch, m.keyCols).select(m.keyCols.map(col): _*)
+  /** The keys of `m` a transaction batch's keys can match: for a local
+    * batch within the bound, exactly its keys present in `m`, read on the
+    * driver ([[presentOnDriver]]); otherwise the pruned presence scan's
+    * keys ([[scanForBatch]]). Either way a semi or anti join of the batch
+    * against it on the key columns is exact. */
+  private[table] def txnPresence(m: TableMeta, batch: DataFrame): DataFrame = {
+    val keys = m.keyCols
+    presentOnDriver(m, batch, keys) match {
+      case Some((rows, present)) =>
+        val idx = keys.map(batch.schema.fieldIndex)
+        val types = batch.schema.fields.map(_.dataType)
+        localRelation(StructType(keys.map(batch.schema(_))), rows.toSeq.filter(present)
+          .map(r => org.apache.spark.sql.catalyst.InternalRow.fromSeq(
+            idx.map(i => r.get(i, types(i))))))
+      case None => scanForBatch(m, batch, keys).select(keys.map(col): _*)
+    }
+  }
 
   // ---------------------------------------------------------- maintenance
 
@@ -2180,8 +2455,11 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     // a known-tiny batch plans statically: a derived batch's collect (or
     // the job path's write) runs as ONE job, not one per shuffle stage;
     // big batches keep AQE
-    try GraftTable.withStaticPlan(spark, estBytes <= GraftTable.staticPlanMaxBytes) {
-      if (estBytes <= GraftTable.broadcastDeltaBytes)
+    val onDriver = estBytes <= GraftTable.broadcastDeltaBytes
+    // local rows commit on the driver with no job: no static plan
+    try GraftTable.withStaticPlan(spark, estBytes <= GraftTable.staticPlanMaxBytes &&
+        !(onDriver && GraftTable.isLocal(rows))) {
+      if (onDriver)
         commitOnDriver(m, rows, op, guardDupKeys, dropDupKeys, props)
       else commitWithJob(m, rows, op, guardDupKeys, dropDupKeys, props, estBytes)
     } catch { case e: Throwable => throw guardError(e) }
@@ -2422,9 +2700,13 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       case _ => ("delta", None)
     }
     val base = kind == "base"
+    // every field optional, as every writer writes it
+    def optional(c: Column) = GraftSqlBridge.toColumn(
+      graft.functions.expressions.Optional(GraftSqlBridge.toExpression(c)))
     val out = rows.select(
-      m.columns.map(c => col(c.name).cast(c.dataType).as(c.physName)) ++
-        (if (base) Nil else Seq(col(OpCol), col(SeqCol))): _*)
+      m.columns.map(c => optional(col(c.name).cast(c.dataType)).as(c.physName)) ++
+        (if (base) Nil else Seq(optional(col(OpCol)).as(OpCol),
+          optional(col(SeqCol)).as(SeqCol))): _*)
     val keys = m.columns.filter(_.isKey).map(c => col(c.physName))
     val partCols = (if (m.hash.nonEmpty) Seq(BucketCol) else Nil) ++
       (if (m.range.isDefined) Seq(RangeCol) else Nil)
@@ -2493,9 +2775,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
     import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, InterpretedUnsafeProjection, SortOrder}
     val dir = a.add(attemptDir(location, v, token))
-    // every field nullable, as a Spark write job writes it
-    val conf = GraftSqlBridge.parquetWriterConf(spark,
-      StructType(deltaFileSchema(m).fields.map(_.copy(nullable = true))), effectiveCodec(m)).value
+    val conf = GraftSqlBridge.parquetWriterConf(spark, deltaFileSchema(m), effectiveCodec(m)).value
     // per-column encoding attribute → parquet dictionary toggle
     m.columns.filter(_.encoding.isDefined).foreach { c =>
       conf.set(s"parquet.enable.dictionary#${c.physName}",
@@ -2736,8 +3016,8 @@ object GraftTable {
     * and seq. Executor-side writers (SQL UPDATE/MERGE) write it directly. */
   private[graft] def deltaFileSchema(m: TableMeta): StructType =
     StructType(m.columns.map(c => StructField(c.physName, c.dataType, nullable = true)) ++
-      Seq(StructField(OpCol, StringType, nullable = false),
-        StructField(SeqCol, LongType, nullable = false)))
+      Seq(StructField(OpCol, StringType, nullable = true),
+        StructField(SeqCol, LongType, nullable = true)))
 
   /** How [[GraftTable.writeFileset]] lays a fileset out. */
   private[table] sealed trait Layout
@@ -2987,6 +3267,25 @@ object GraftTable {
       body(spark.createDataFrame(java.util.Collections.emptyList[Row](), schema))
         .queryExecution.analyzed)
     (projects, conds.reduceOption(And))
+  }
+
+  /** Whether `df` is local rows: projections, filters and unions of local
+    * relations whose expressions evaluate on the driver. Collecting it
+    * runs no job (the optimizer folds it into local relations, and
+    * GraftSqlBridge.collectInternal collects a union of them child by
+    * child), so an engine step over it needs no static plan. */
+  private[graft] def isLocal(df: DataFrame): Boolean = {
+    import org.apache.spark.sql.catalyst.plans.logical
+    def local(p: logical.LogicalPlan): Boolean = p match {
+      case _: logical.LocalRelation => true
+      case logical.Project(list, c) =>
+        list.forall(graft.plans.InlineReads.driverEvaluable) && local(c)
+      case logical.Filter(cond, c) =>
+        graft.plans.InlineReads.driverEvaluable(cond) && local(c)
+      case u: logical.Union => u.children.forall(local)
+      case _ => false
+    }
+    local(df.queryExecution.analyzed)
   }
 
   /** Size estimate of a frame's input for the tiny-gate. The ANALYZED

@@ -227,10 +227,11 @@ object DerivedTables {
     * `sourceRows` the source rows of its keys. `fresh` rows upsert; `stale`
     * rows (any column subset holding the derived table's key) tombstone,
     * so the derivation must keep the two disjoint. A bounded derivation
-    * broadcasts its small join sides explicitly: their optimizer estimates
-    * flow through joins and aggregates, and a static plan would otherwise
-    * pick a session-width sort-merge join; an unbounded (backfill) one
-    * must not broadcast. */
+    * joins through [[keyJoin]]: on the driver over local rows, else
+    * broadcasting its small join sides explicitly (their optimizer
+    * estimates flow through joins and aggregates, and a static plan would
+    * otherwise pick a session-width sort-merge join); an unbounded
+    * (backfill) one must not broadcast. */
   private[tools] final case class Derivation(changes: DataFrame,
       keyCols: Seq[String], readAt: Option[Long])(
       val derive: (DataFrame, DataFrame, Boolean) => (DataFrame, DataFrame))
@@ -243,19 +244,26 @@ object DerivedTables {
    * current. O(changed), never O(derived table) or O(source).
    *
    *   - The window `(v0, v1]` is sized from the manifest
-   *     (`cdcWindowBytes`). A tiny window — the steady-state maintenance
-   *     tick — runs under ONE static plan per action: the CDC fold
-   *     exchange is delta-byte-sized and every small join side is a
-   *     LocalRelation or an explicit broadcast, so AQE's per-stage jobs
-   *     would be most of its cost. Snapshot-diff or backfill windows keep
-   *     AQE, and persist the change frame BEFORE the bounded probe so an
-   *     over-bound fallback reuses its partitions.
+   *     (`cdcWindowBytes`). A window within
+   *     [[GraftTable.broadcastDeltaBytes]] — the steady-state maintenance
+   *     tick — is read and folded on the driver, its source rows are a
+   *     driver keyed read ([[GraftTable.readByKeys]]) and its derivation
+   *     joins local rows on the driver ([[keyJoin]]): a kind whose
+   *     derivation is local rows commits with no job and flips no session
+   *     conf. Any other tiny window, and a step that still runs a job,
+   *     runs under ONE static plan per action: the CDC fold exchange is
+   *     delta-byte-sized and every small join side is a LocalRelation or
+   *     an explicit broadcast, so AQE's per-stage jobs would be most of its
+   *     cost. Snapshot-diff or backfill windows keep AQE, and persist the
+   *     change frame BEFORE the bounded probe so an over-bound fallback
+   *     reuses its partitions.
    *   - ONE bounded probe collects up to `maxPruneKeys + 1` change rows.
    *     An empty window (a compaction, no logical change) only advances
    *     the watermark. A bounded window derives from a LocalRelation of
    *     those rows — exact tiny stats keep the downstream joins broadcast
-   *     — and reads the source through [[readByKeys]]: an IN-list per key
-   *     column prunes untouched tablets at the manifest (S8/P4). A larger
+   *     — and reads the source through [[GraftTable.readByKeys]]: an
+   *     IN-list per key column prunes untouched tablets at the manifest
+   *     (S8/P4). A larger
    *     window semi-joins the source by its distributed key set instead
    *     (no driver risk). `assertPrune = true` gates the pruned path (test
    *     hook: it must run and keep at most half the source files).
@@ -283,66 +291,84 @@ object DerivedTables {
     val watermark = Map(srcVersionKey -> Some(v1.toString))
     val winBytes = src.cdcWindowBytes(v0, v1)
     val winBig = winBytes.forall(_ > GraftTable.staticPlanMaxBytes)
-    GraftTable.withStaticPlan(spark, !winBig) {
-      val d = window(src, v0, v1)
-      def persisted = Some(d.changes.persist(StorageLevel.MEMORY_AND_DISK))
-      var cached = if (winBig) persisted else None
-      try {
-        val rows = cached.getOrElse(d.changes).limit(maxPruneKeys + 1).collect()
-        if (rows.isEmpty) derived.setProperties(watermark)
-        else {
-          val bounded = rows.length <= maxPruneKeys
-          val (changed, sourceRows) =
-            if (bounded) {
-              val keyIdx = d.keyCols.map(d.changes.schema.fieldIndex)
-              (localFrame(spark, d.changes.schema, rows),
-                readByKeys(spark, src, d.readAt,
-                  StructType(d.keyCols.map(d.changes.schema(_))),
-                  rows.map(r => Row.fromSeq(keyIdx.map(r.get))).distinct,
-                  assertPrune))
-            } else {
-              if (assertPrune) throw new IllegalStateException(
-                s"refresh of ${derived.location} fell back to the semi-join " +
-                  s"path (> $maxPruneKeys changed keys)")
-              if (cached.isEmpty) cached = persisted
-              val changed = cached.get
-              // a change frame of exactly the key columns (touchedKeys) is
-              // already a distinct key set
-              val keys =
-                if (changed.columns.toSeq == d.keyCols) changed
-                else changed.select(d.keyCols.map(col): _*).distinct()
-              (changed, src.scan(d.readAt).join(keys, d.keyCols, "left_semi"))
-            }
-          val (fresh, stale) = d.derive(changed, sourceRows, bounded)
-          // fresh + stale per changed key: ~2x the window, a manifest-
-          // derived size for the commit's guard-window exchange (the
-          // optimizer's estimate through the joins is useless)
+    // a window within the driver bound is read and folded on the driver
+    // (changesSince / touchedKeys): only a step that runs a job plans
+    // statically
+    val driverWindow = winBytes.exists(_ <= GraftTable.broadcastDeltaBytes)
+    def static[A](job: Boolean)(body: => A): A =
+      GraftTable.withStaticPlan(spark, job && !winBig)(body)
+    var cached: Option[DataFrame] = None
+    def persisted(d: Derivation) = Some(d.changes.persist(StorageLevel.MEMORY_AND_DISK))
+    try {
+      val (d, rows) = static(!driverWindow) {
+        val d = window(src, v0, v1)
+        if (winBig) cached = persisted(d)
+        (d, cached.getOrElse(d.changes).limit(maxPruneKeys + 1).collect())
+      }
+      if (rows.isEmpty) derived.setProperties(watermark)
+      else {
+        val bounded = rows.length <= maxPruneKeys
+        val (changed, sourceRows) =
+          if (bounded) {
+            val keyIdx = d.keyCols.map(d.changes.schema.fieldIndex)
+            (localFrame(spark, d.changes.schema, rows),
+              src.readByKeys(d.readAt,
+                StructType(d.keyCols.map(d.changes.schema(_))),
+                rows.map(r => Row.fromSeq(keyIdx.map(r.get))).distinct,
+                assertPrune))
+          } else {
+            if (assertPrune) throw new IllegalStateException(
+              s"refresh of ${derived.location} fell back to the semi-join " +
+                s"path (> $maxPruneKeys changed keys)")
+            if (cached.isEmpty) cached = persisted(d)
+            val changed = cached.get
+            // a change frame of exactly the key columns (touchedKeys) is
+            // already a distinct key set
+            val keys =
+              if (changed.columns.toSeq == d.keyCols) changed
+              else changed.select(d.keyCols.map(col): _*).distinct()
+            (changed, src.scan(d.readAt).join(keys, d.keyCols, "left_semi"))
+          }
+        val (fresh, stale) = d.derive(changed, sourceRows, bounded)
+        // fresh + stale per changed key: ~2x the window, a manifest-
+        // derived size for the commit's guard-window exchange (the
+        // optimizer's estimate through the joins is useless); local rows
+        // commit on the driver with no job
+        static(!(GraftTable.isLocal(fresh) && GraftTable.isLocal(stale))) {
           commit(derived, fresh, stale, watermark, winBytes.map(b => b * 2 + 1024))
         }
-        true
-      } finally cached.foreach(_.unpersist(blocking = false))
-    }
+      }
+      true
+    } finally cached.foreach(_.unpersist(blocking = false))
   }
 
-  /** The source rows whose key columns (`keySchema`'s fields) match one of
-    * the collected `keys`, at `version` (None = current). An IN-list per
-    * key column prunes base tablets and files at the manifest and filters
-    * the rows — exact for one column, a superset for several — and an
-    * exact broadcast key semi-join lands behind it. Empty keys give an
-    * empty scan-shaped frame. `assertPrune` as in [[GraftTable.scanPruned]]
-    * (test/verification hook). */
-  private[tools] def readByKeys(spark: SparkSession, src: GraftTable,
-      version: Option[Long], keySchema: StructType, keys: Array[Row],
-      assertPrune: Boolean = false): DataFrame = {
-    if (keys.isEmpty) return src.scan(version).limit(0)
-    val filters: Seq[org.apache.spark.sql.sources.Filter] =
-      keySchema.fieldNames.toSeq.zipWithIndex.map { case (c, i) =>
-        org.apache.spark.sql.sources.In(c, keys.map(_.get(i)).distinct)
+  /** `left`'s rows whose `cols` values appear (`anti` = false) or do not
+    * appear (`anti` = true) in `right`: the key join of every bounded
+    * derivation. Over two local relations (a window read on the driver)
+    * it runs on the driver — a hash set of `right`'s collected keys probed
+    * by `left`'s collected rows, a key with a null never matching — and
+    * returns a local relation, since a broadcast join runs a job even over
+    * local relations. Otherwise it is a Spark join, `right` broadcast when
+    * `broadcastRight`. */
+  private[tools] def keyJoin(left: DataFrame, right: DataFrame, cols: Seq[String],
+      anti: Boolean, broadcastRight: Boolean): DataFrame =
+    if (GraftTable.isLocal(left) && GraftTable.isLocal(right)) {
+      // binary values compare by content
+      def keyOf(df: DataFrame): Row => Seq[Any] = {
+        val idx = cols.map(df.schema.fieldIndex)
+        r => idx.map(i => r.get(i) match {
+          case b: Array[Byte] => b.toSeq
+          case v => v
+        })
       }
-    src.scanPruned(filters, version, assertPrune)
-      .join(broadcast(localFrame(spark, keySchema, keys)),
-        keySchema.fieldNames.toSeq, "left_semi")
-  }
+      val have = right.collect().map(keyOf(right)).filterNot(_.contains(null)).toSet
+      val leftKey = keyOf(left)
+      localFrame(left.sparkSession, left.schema, left.collect().filter { r =>
+        val k = leftKey(r)
+        (!k.contains(null) && have(k)) != anti
+      })
+    } else left.join(if (broadcastRight) broadcast(right) else right, cols,
+      if (anti) "left_anti" else "left_semi")
 
   /** A true LocalRelation (createDataFrame over a java List), never an
     * RDD-backed frame: the RDD form reports UNKNOWN stats, which a static

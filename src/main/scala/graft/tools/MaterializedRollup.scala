@@ -124,10 +124,13 @@ object MaterializedRollup {
         // touched groups whose recompute came back empty vanished from the
         // base
         val freshKeys = fresh.select(groupCols.map(col): _*)
-        (fresh, rollup.scan().select(groupCols.map(col): _*)
-          .join(if (bounded) broadcast(touched) else touched, groupCols, "left_semi")
-          .join(if (bounded) broadcast(freshKeys) else freshKeys,
-            groupCols, "left_anti"))
+        // the rollup's rows of the touched groups: a keyed read of its own
+        // key when bounded
+        val touchedRows =
+          if (bounded) rollup.readByKeys(None, touched.schema, touched.collect())
+          else rollup.scan().join(touched, groupCols, "left_semi")
+        (fresh, DerivedTables.keyJoin(touchedRows.select(groupCols.map(col): _*),
+          freshKeys, groupCols, anti = true, broadcastRight = bounded))
       }
     }
 }

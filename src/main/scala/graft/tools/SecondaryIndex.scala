@@ -383,15 +383,16 @@ object SecondaryIndex {
     fetchByKeys(spark, src, pkCols, seen.values.toArray, Some(baseV))
   }
 
-  /** The base rows for a collected (bounded) PK set, through the derived
-    * tables' keyed read (an IN-list per PK column, an exact key semi-join
-    * behind it). Empty keys → an empty scan-shaped frame. */
+  /** The base rows for a collected (bounded) PK set, as a keyed scan
+    * (GraftTable.scanByKeys: an IN-list per PK column, an exact key
+    * semi-join behind it) — never the driver keyed read: a serve splices
+    * this frame into the query at plan time, and the base read runs when
+    * the query does. Empty keys → an empty scan-shaped frame. */
   private def fetchByKeys(spark: SparkSession, src: GraftTable,
       pkCols: Seq[String], hits: Array[org.apache.spark.sql.Row],
       baseV: Option[Long]): DataFrame = {
     val m = src.meta
-    DerivedTables.readByKeys(spark, src, baseV,
-      StructType(pkCols.map(m.column(_).toField)), hits)
+    src.scanByKeys(baseV, StructType(pkCols.map(m.column(_).toField)), hits)
   }
 
   /**
@@ -621,7 +622,8 @@ object SecondaryIndex {
           // deleted key); the anti-join is on the INDEX KEY (lead, pk…) —
           // a trailing composite column changing value keeps the same key,
           // so upsert alone covers it
-          (fresh, derive(oldRows).join(fresh, colNames.head +: pkCols, "left_anti"))
+          (fresh, DerivedTables.keyJoin(derive(oldRows), fresh, colNames.head +: pkCols,
+            anti = true, broadcastRight = false))
       }
     }
 }

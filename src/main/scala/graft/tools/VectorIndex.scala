@@ -308,8 +308,8 @@ object VectorIndex {
           val freshKeys = fresh.select(col("cell"), col(idCol))
           (fresh, assigned(normalized(oldSrc, idCol, vecCol), idCol, cents)
             .select(col("cell"), col(idCol))
-            .join(if (bounded) broadcast(freshKeys) else freshKeys,
-              Seq("cell", idCol), "left_anti"))
+            .transform(DerivedTables.keyJoin(_, freshKeys, Seq("cell", idCol),
+              anti = true, broadcastRight = bounded)))
       }
     }
 }

@@ -26,6 +26,12 @@ class FuzzSpec extends AnyFunSuite {
 
   private val Keyspace = 8
 
+  /** A fresh table location, alone in its own new directory: the SQL
+    * catalogs of a case take that directory as their warehouse, and
+    * opening a catalog arms and schedules every derived table under it. */
+  private def tableDir(prefix: String): String =
+    Files.createTempDirectory(prefix).resolve("table").toString
+
   /** Footer audit of a random end state: every writer's files (commits,
     * compactions, tablet and minor folds, tail merges, clustering, txns)
     * match the physical schema the manifest records. */
@@ -53,7 +59,7 @@ class FuzzSpec extends AnyFunSuite {
   private def runCase(seed: Long, nOps: Int,
       hash: Seq[HashComponent] = Seq(HashComponent(Seq("k"), 2))): Unit = {
     val rnd = new Random(seed)
-    val loc = Files.createTempDirectory(s"graft-fuzz-$seed-").toString
+    val loc = tableDir(s"graft-fuzz-$seed-")
     val t = GraftTable.create(spark, loc, "kv",
       StructType(Seq(StructField("k", IntegerType, false), StructField("v", IntegerType))),
       keys = Seq("k"), hash = hash)
@@ -255,7 +261,7 @@ class FuzzSpec extends AnyFunSuite {
     * engine scan AND the V2 overlay read against the model. */
   private def runSqlDmlCase(seed: Long, nOps: Int): Unit = {
     val rnd = new Random(seed)
-    val loc = Files.createTempDirectory(s"graft-fuzzsql-$seed-").toString
+    val loc = tableDir(s"graft-fuzzsql-$seed-")
     val t = GraftTable.create(spark, loc, "kv",
       StructType(Seq(StructField("k", IntegerType, false), StructField("v", IntegerType))),
       keys = Seq("k"), hash = Seq(HashComponent(Seq("k"), 2)))
@@ -336,6 +342,72 @@ class FuzzSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.mor.broadcastBytes")
   }
 
+  /** CDC windows and presence checks, on the driver within the bound and
+    * on the job path past it. The op stream mixes strict inserts and
+    * deletes (their presence checks raise or not as the model says),
+    * their ignore variants, upserts, and the seq-preserving folds
+    * (`mergeTailDeltas`, `compactDeltas(tailOnly = true)`), whose folded
+    * files carry rows older than a window that the window's seq filter must
+    * drop. A snapshot follows every op; every window ending just after a
+    * fold, and a sample of other windows, is checked against the model. */
+  private def runWindowCase(seed: Long, nOps: Int): Unit = {
+    val rnd = new Random(seed)
+    val t = GraftTable.create(spark, tableDir(s"graft-fuzz-w-$seed-"), "kv",
+      StructType(Seq(StructField("k", IntegerType, false), StructField("v", IntegerType))),
+      keys = Seq("k"), hash = Seq(HashComponent(Seq("k"), 2)))
+    def df(k: Int, v: Int) = Seq((k, v)).toDF("k", "v")
+    def keysDf(k: Int) = Seq(k).toDF("k")
+    val model = mutable.Map[Int, Int]()
+    val snaps = mutable.ArrayBuffer((t.currentVersion, Map.empty[Int, Int]))
+    val folds = mutable.ArrayBuffer[Int]() // snapshot index right after a fold
+    for (_ <- 0 until nOps) {
+      val k = rnd.nextInt(Keyspace)
+      val v = rnd.nextInt(1000)
+      rnd.nextInt(7) match {
+        case 0 =>
+          if (model.contains(k)) intercept[PrimaryKeyException](t.insert(df(k, v)))
+          else { t.insert(df(k, v)); model(k) = v }
+        case 1 => t.insertIgnore(df(k, v)); if (!model.contains(k)) model(k) = v
+        case 2 => t.upsert(df(k, v)); model(k) = v
+        case 3 =>
+          if (!model.contains(k)) intercept[PrimaryKeyException](t.delete(keysDf(k)))
+          else { t.delete(keysDf(k)); model.remove(k) }
+        case 4 => t.delete(keysDf(k), ignore = true); model.remove(k)
+        case 5 => t.mergeTailDeltas(); folds += snaps.size
+        case 6 => t.compactDeltas(tailOnly = true); folds += snaps.size
+      }
+      snaps += ((t.currentVersion, model.toMap))
+    }
+    assert(t.scan().collect().map(r => r.getInt(0) -> r.getInt(1)).toMap == model.toMap,
+      s"final state mismatch seed=$seed")
+    val windows = (folds.toSeq.map(j => (math.max(0, j - 1 - rnd.nextInt(4)), j)) ++
+      Seq.fill(6) {
+        val i = rnd.nextInt(snaps.size - 1)
+        (i, i + 1 + rnd.nextInt(snaps.size - 1 - i))
+      }).distinct
+    windows.foreach { case (i, j) =>
+      val (va, ma) = snaps(i)
+      val (vb, mb) = snaps(j)
+      val applied = t.changesSince(va, vb).select(col("k"), col("v"), col("_deleted"))
+        .collect().foldLeft(ma) { (m, r) =>
+          if (r.getBoolean(2)) m - r.getInt(0) else m + (r.getInt(0) -> r.getInt(1))
+        }
+      assert(applied == mb, s"changesSince v$va->v$vb mismatch seed=$seed")
+      val touched = t.touchedKeys(va, vb, Seq("k")).collect().map(_.getInt(0)).toSet
+      val differ = (ma.keySet ++ mb.keySet).filter(k => ma.get(k) != mb.get(k))
+      assert(differ.subsetOf(touched),
+        s"touchedKeys v$va->v$vb misses ${differ -- touched} seed=$seed")
+    }
+  }
+
+  test("CDC windows across tail folds and presence checks match the model, " +
+      "within the driver bound and past it (seed 43)") {
+    runWindowCase(43L, 30)
+    spark.conf.set("graft.mor.broadcastBytes", "1024")
+    try runWindowCase(43L, 30)
+    finally spark.conf.unset("graft.mor.broadcastBytes")
+  }
+
   /** Range-partitioned variant: the op stream also drops and re-adds range
     * partitions (the D2 retention ops) — rows of a dropped range vanish,
     * writes into a non-covered range error until the range is re-added, and
@@ -345,7 +417,7 @@ class FuzzSpec extends AnyFunSuite {
     val rnd = new Random(seed)
     val years = Seq(1995, 1996, 1997)
     def ts(y: Int) = java.sql.Timestamp.valueOf(s"$y-06-01 00:00:00")
-    val loc = Files.createTempDirectory(s"graft-fuzz-r-$seed-").toString
+    val loc = tableDir(s"graft-fuzz-r-$seed-")
     val t = GraftTable.create(spark, loc, "kvr",
       StructType(Seq(StructField("k", IntegerType, false),
         StructField("d", TimestampType), StructField("v", IntegerType))),
@@ -422,7 +494,7 @@ class FuzzSpec extends AnyFunSuite {
     * historical snapshots spanning the ALTERs. */
   private def runSchemaCase(seed: Long, nOps: Int): Unit = {
     val rnd = new Random(seed)
-    val loc = Files.createTempDirectory(s"graft-fuzz-s-$seed-").toString
+    val loc = tableDir(s"graft-fuzz-s-$seed-")
     val t = GraftTable.create(spark, loc, "kvs",
       StructType(Seq(StructField("k", IntegerType, false),
         StructField("c0", IntegerType))),
@@ -547,7 +619,7 @@ class FuzzSpec extends AnyFunSuite {
     * schema the spill slices carry). */
   private def runAlterTxnSpillCase(seed: Long, nOps: Int): Unit = {
     val rnd = new Random(seed)
-    val loc = Files.createTempDirectory(s"graft-fuzz-a-$seed-").toString
+    val loc = tableDir(s"graft-fuzz-a-$seed-")
     val t = GraftTable.create(spark, loc, "kva",
       StructType(Seq(StructField("k", IntegerType, false), StructField("v", IntegerType))),
       keys = Seq("k"), hash = Seq(HashComponent(Seq("k"), 2)))
@@ -664,7 +736,7 @@ class FuzzSpec extends AnyFunSuite {
     * fuzz-itest.cc restart cases); fsckRepair must roll the dead commit
     * back and the table must read and write exactly afterwards. */
   test("kill-point mid-commit: unpublished version wedges, fsckRepair unwedges") {
-    val loc = Files.createTempDirectory("graft-crash1-").toString
+    val loc = tableDir("graft-crash1-")
     val t = GraftTable.create(spark, loc, "kv",
       StructType(Seq(StructField("k", IntegerType, false), StructField("v", IntegerType))),
       keys = Seq("k"), hash = Seq(HashComponent(Seq("k"), 2)))
@@ -706,7 +778,7 @@ class FuzzSpec extends AnyFunSuite {
     * throughout and at the end. */
   private def runCrashCase(seed: Long, nOps: Int): Unit = {
     val rnd = new Random(seed)
-    val loc = Files.createTempDirectory(s"graft-crashfuzz-$seed-").toString
+    val loc = tableDir(s"graft-crashfuzz-$seed-")
     val t = GraftTable.create(spark, loc, "kv",
       StructType(Seq(StructField("k", IntegerType, false), StructField("v", IntegerType))),
       keys = Seq("k"), hash = Seq(HashComponent(Seq("k"), 2)))
@@ -766,7 +838,7 @@ class FuzzSpec extends AnyFunSuite {
     * nothing runs concurrently there). */
   private def runSchedulerCase(seed: Long, nOps: Int): Unit = {
     val rnd = new Random(seed)
-    val loc = Files.createTempDirectory(s"graft-schedfuzz-$seed-").toString
+    val loc = tableDir(s"graft-schedfuzz-$seed-")
     val t = GraftTable.create(spark, loc, "kv",
       StructType(Seq(StructField("k", IntegerType, false), StructField("v", IntegerType))),
       keys = Seq("k"), hash = Seq(HashComponent(Seq("k"), 2)))

@@ -132,10 +132,8 @@ class InlineWriteSpec extends AnyFunSuite {
       val f = r.getFooter
       val chunks = f.getBlocks.asScala.flatMap(_.getColumns.asScala)
       def dict(c: String) = chunks.filter(_.getPath.toDotString == c).exists(_.hasDictionaryPage)
-      // a Spark write job marks a non-null key column `required` in some
-      // filesets and `optional` in others; the stored type is what counts
-      (chunks.map(_.getCodec.name).toSet, f.getFileMetaData.getSchema.getType(Seq("t"): _*)
-        .toString.replaceFirst("^(optional|required) ", ""), dict("n"), dict("g"))
+      (chunks.map(_.getCodec.name).toSet,
+        f.getFileMetaData.getSchema.getType(Seq("t"): _*).toString, dict("n"), dict("g"))
     } finally r.close()
   }
 
@@ -163,7 +161,8 @@ class InlineWriteSpec extends AnyFunSuite {
     val job = jobPath(run(s"$wh/j"))
     assert(driver.toSet == job.toSet)
     assert(driver.forall(_._1 == Set("ZSTD")), driver)
-    assert(driver.forall(_._2 == "int64 t (TIMESTAMP(MICROS,true))"), driver)
+    // every writer writes the non-null key optional
+    assert(driver.forall(_._2 == "optional int64 t (TIMESTAMP(MICROS,true))"), driver)
     assert(!driver.exists(_._3) && driver.exists(_._4),
       s"plain `n` must carry no dictionary, `g` must: $driver")
   }

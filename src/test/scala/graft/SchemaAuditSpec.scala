@@ -56,4 +56,48 @@ class SchemaAuditSpec extends AnyFunSuite {
     assert(issues.exists(i => i.contains(victim) && i.contains(physV)),
       s"the swapped file's wrong-typed column must be named, got: $issues")
   }
+
+  test("every writer's footers agree on repetition; a required column is named") {
+    val wh = Files.createTempDirectory("graft-schemaaudit-rep-").toString
+    val df = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("k", "v")
+    val t = GraftTable.create(spark, s"$wh/t", "sa2", df.schema, Seq("k"),
+      Seq(HashComponent(Seq("k"), 2)), data = Some(df))
+    // a driver commit, a job-path commit and fold, and a driver fold
+    t.upsert(Seq((1L, "u1")).toDF("k", "v"))
+    spark.conf.set("graft.mor.broadcastBytes", "1")
+    try {
+      t.upsert(Seq((2L, "u2")).toDF("k", "v"))
+      assert(t.mergeTailDeltas())
+    } finally spark.conf.unset("graft.mor.broadcastBytes")
+    t.upsert(Seq((3L, "u3")).toDF("k", "v"))
+    assert(t.mergeTailDeltas())
+    assert(t.verifyFileSchemas().isEmpty, t.verifyFileSchemas())
+
+    // swap one base file for one whose non-null key column is `required`
+    // (same types): the audit names the file and the column
+    val physK = t.meta.column("k").physName
+    val physV = t.meta.column("v").physName
+    val victim = t.meta.baseFiles.head.path
+    val impostorDir = Files.createTempDirectory("graft-schemaaudit-req-").toString
+    spark.createDataFrame(java.util.Arrays.asList(org.apache.spark.sql.Row(1L, "x")),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField(physK,
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField(physV,
+          org.apache.spark.sql.types.StringType))))
+      .coalesce(1).write.mode("overwrite").parquet(impostorDir)
+    val impostor = Files.list(Paths.get(impostorDir)).iterator()
+    var file: java.nio.file.Path = null
+    while (impostor.hasNext) {
+      val p = impostor.next()
+      if (p.toString.endsWith(".parquet")) file = p
+    }
+    val victimPath = Paths.get(victim)
+    Files.deleteIfExists(victimPath.resolveSibling(
+      "." + victimPath.getFileName.toString + ".crc"))
+    Files.copy(file, victimPath, StandardCopyOption.REPLACE_EXISTING)
+    assert(t.verifyFileSchemas() == Seq(s"manifest/file schema mismatch: column " +
+      s"'$physK' is required in the footer but every engine writer writes it " +
+      s"optional: $victim"))
+  }
 }
