@@ -2041,7 +2041,11 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
           GraftV2Scan.readTail(m, keepTail, Some(routeCol)))
         val (opAt, routeAt) = (cols.length, cols.length + 2)
         val colAt = internalFields.map(f => cols.indexOf(f.name))
-        MorOverlay.latestPerKey(rows.iterator, m.keyCols.map(cols.indexOf).toArray,
+        // only the rows of keys the pushed key filters admit are folded and
+        // shipped: a point read's overlay is O(its keys), not O(tail)
+        val admitted = GraftV2Scan.keyFilter(m, filters.toSeq)
+          .fold(rows.iterator)(rows.iterator.filter)
+        MorOverlay.latestPerKey(admitted, m.keyCols.map(cols.indexOf).toArray,
             colTypes, opAt, Some(opAt + 1))
           .forEach { (key, r) =>
             dead.add(key)
@@ -2443,6 +2447,50 @@ object GraftV2Scan {
   private[v2] val OpSeqFields = Seq(
     StructField(GraftTable.OpCol, org.apache.spark.sql.types.StringType, nullable = false),
     StructField(GraftTable.SeqCol, org.apache.spark.sql.types.LongType, nullable = false))
+
+  /** The pushed `filters` on key columns, as one predicate over rows laid
+    * out as `m.columns` (catalyst values); None when none applies. A key a
+    * delta row fails them for fails them in the base too, and Spark
+    * re-evaluates every pushed filter above the scan, so the overlay may
+    * drop that key's delta rows. A filter on another column (a tombstone
+    * carries only its key), on a floating-point or binary column (whose
+    * equality a hash set does not share with Spark's), or whose value is
+    * not of its column's type, is left out: the predicate then admits a
+    * superset. */
+  private[graft] def keyFilter(m: TableMeta, filters: Seq[Filter])
+      : Option[InternalRow => Boolean] = {
+    import org.apache.spark.sql.catalyst.{expressions => E}
+    import org.apache.spark.sql.sources
+    import org.apache.spark.sql.types._
+    def exact(t: DataType) = t match {
+      case ByteType | ShortType | IntegerType | LongType | _: StringType | _: DecimalType |
+          BooleanType | DateType | TimestampType | TimestampNTZType => true
+      case _ => false
+    }
+    def ref(a: String) = Some(m.columns.indexWhere(_.name == a))
+      .filter(i => i >= 0 && m.columns(i).isKey && exact(m.columns(i).dataType))
+      .map(i => E.BoundReference(i, m.columns(i).dataType, nullable = true))
+    def lit(r: E.BoundReference, v: Any) =
+      scala.util.Try(E.Literal(v)).toOption.filter(_.dataType == r.dataType)
+    def cmp(a: String, v: Any)(op: (E.Expression, E.Expression) => E.Expression) =
+      for (r <- ref(a); l <- lit(r, v)) yield op(r, l)
+    def conv(f: Filter): Option[E.Expression] = f match {
+      case sources.EqualTo(a, v) => cmp(a, v)(E.EqualTo(_, _))
+      case sources.EqualNullSafe(a, v) => cmp(a, v)(E.EqualNullSafe(_, _))
+      case sources.GreaterThan(a, v) => cmp(a, v)(E.GreaterThan(_, _))
+      case sources.GreaterThanOrEqual(a, v) => cmp(a, v)(E.GreaterThanOrEqual(_, _))
+      case sources.LessThan(a, v) => cmp(a, v)(E.LessThan(_, _))
+      case sources.LessThanOrEqual(a, v) => cmp(a, v)(E.LessThanOrEqual(_, _))
+      case sources.In(a, vs) => ref(a).flatMap { r =>
+        val ls = vs.toSeq.map(lit(r, _))
+        if (ls.forall(_.isDefined)) Some(E.InSet(r, ls.map(_.get.value).toSet)) else None
+      }
+      case sources.And(l, r) => (conv(l) ++ conv(r)).reduceOption(E.And)
+      case _ => None
+    }
+    filters.flatMap(conv).reduceOption(E.And)
+      .map(e => E.Predicate.createInterpreted(e).eval _)
+  }
 
   /** The delta rows of `files` — every table column, then the op and seq
     * columns, then, when given, the delta `route` (a string column over

@@ -295,8 +295,7 @@ object DerivedTables {
     // (changesSince / touchedKeys): only a step that runs a job plans
     // statically
     val driverWindow = winBytes.exists(_ <= GraftTable.broadcastDeltaBytes)
-    def static[A](job: Boolean)(body: => A): A =
-      GraftTable.withStaticPlan(spark, job && !winBig)(body)
+    def static[A](job: Boolean)(body: => A): A = staticStep(spark, job && !winBig)(body)
     var cached: Option[DataFrame] = None
     def persisted(d: Derivation) = Some(d.changes.persist(StorageLevel.MEMORY_AND_DISK))
     try {
@@ -341,6 +340,20 @@ object DerivedTables {
       true
     } finally cached.foreach(_.unpersist(blocking = false))
   }
+
+  /** `body`, one refresh step that runs a Spark job, under ONE static plan
+    * when `tiny`: the one session-conf flip of the refresh path. */
+  private def staticStep[A](spark: SparkSession, tiny: Boolean)(body: => A): A =
+    GraftTable.withStaticPlan(spark, tiny)(body)
+
+  /** `df` — a bounded derivation computed over local rows, such as the
+    * rollup's aggregate — collected once, under a static plan, into a local
+    * relation: [[keyJoin]] against it and the commit then run on the
+    * driver, so one job computes it instead of one per use. */
+  private[tools] def collected(df: DataFrame): DataFrame =
+    staticStep(df.sparkSession, tiny = true) {
+      localFrame(df.sparkSession, df.schema, df.collect())
+    }
 
   /** `left`'s rows whose `cols` values appear (`anti` = false) or do not
     * appear (`anti` = true) in `right`: the key join of every bounded

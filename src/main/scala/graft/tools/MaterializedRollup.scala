@@ -118,9 +118,14 @@ object MaterializedRollup {
           readAt = None) { (touched, base, bounded) =>
         // conform to the rollup's persisted column types (an agg's natural
         // result type can widen — e.g. sum(DECIMAL(28,2)) is DECIMAL(38,2))
-        val fresh = grouped(base, groupCols, aggs)
+        val recomputed = grouped(base, groupCols, aggs)
           .select(rollup.meta.visibleColumns.map(c =>
             col(c.name).cast(c.dataType).as(c.name)): _*)
+        // over local source rows the aggregate runs once, and the anti
+        // join and the commit run on the driver
+        val fresh =
+          if (bounded && GraftTable.isLocal(base)) DerivedTables.collected(recomputed)
+          else recomputed
         // touched groups whose recompute came back empty vanished from the
         // base
         val freshKeys = fresh.select(groupCols.map(col): _*)
