@@ -190,10 +190,14 @@ class MorOverlayReaderFactory(
 }
 
 object MorOverlay {
-  /** Key tuple with VALUE semantics: binary key columns come out of
-    * InternalRow as Array[Byte], whose equals/hashCode are by reference —
-    * wrap them so the dead-set probe compares contents. Used by both the
-    * driver-side set construction and the per-row reader probe. */
+  /** Key tuple with Spark's key equality, the one policy of every driver
+    * key match (the overlay's fold and dead set, keyed reads, key joins,
+    * presence checks): binary key columns come out of InternalRow as
+    * Array[Byte], whose equals/hashCode are by reference — wrap them so
+    * they compare contents; a floating-point NaN equals itself, as in a
+    * Spark join or IN (boxed `==` never matches it; -0.0 already equals
+    * 0.0 and hashes alike). Used by both the driver-side set construction
+    * and the per-row reader probe. */
   def keyOf(row: InternalRow, idx: Array[Int],
       types: Array[DataType]): Seq[Any] = {
     val a = new Array[Any](idx.length)
@@ -202,11 +206,30 @@ object MorOverlay {
       // types is indexed by ROW position (idx(i)), not by key ordinal
       a(i) = row.get(idx(i), types(idx(i))) match {
         case b: Array[Byte] => b.toSeq
+        case d: Double if d.isNaN => NaNKey
+        case f: Float if f.isNaN => NaNKey
         case v => v
       }
       i += 1
     }
     scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+  }
+
+  /** What a NaN key value hashes and compares as ([[keyOf]]). */
+  private case object NaNKey
+
+  /** The [[keyOf]] tuples of `keys` (key columns at `idx`, `types` by
+    * row position) as a driver hash set — SQL equality: a key with a null
+    * is never added and never matches. */
+  final class KeySet(keys: Iterator[InternalRow], idx: Array[Int],
+      types: Array[DataType]) {
+    private val set = new java.util.HashSet[Seq[Any]]()
+    keys.foreach(k => if (!idx.exists(k.isNullAt)) set.add(keyOf(k, idx, types)))
+
+    /** Whether a row whose key columns are at `at` (`rowTypes` by row
+      * position) carries one of the keys. */
+    def matcher(at: Array[Int], rowTypes: Array[DataType]): InternalRow => Boolean =
+      r => !at.exists(r.isNullAt) && set.contains(keyOf(r, at, rowTypes))
   }
 
   private val OpDelete =

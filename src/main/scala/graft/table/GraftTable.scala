@@ -166,7 +166,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       .createToCatalystConverter(keySchema)
     keyedRows(m, keySchema, keys.map(k => toCatalyst(k).asInstanceOf[InternalRow]),
         hidden = false, assertPrune)
-      .map { case (schema, rows) => localRelation(schema, rows) }
+      .map { case (schema, rows) => localRelation(spark, schema, rows) }
       .getOrElse(scanByKeys(version, keySchema, keys, assertPrune))
   }
 
@@ -202,9 +202,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * delta bytes fit [[GraftTable.broadcastDeltaBytes]], the V2 scan's own
     * reader factory reads them on the driver (graft.plans.InlineReads
     * .readSplits: the overlay, the generation remap and the drop masks of
-    * every read) and a driver hash set of the keys (MorOverlay.keyOf:
-    * multi-column keys stay exact; a key with a null never matches) keeps
-    * the matching rows. No job runs. None past the bound, or when a key
+    * every read) and a driver hash set of the keys (MorOverlay.KeySet:
+    * multi-column keys stay exact, Spark's key equality) keeps the
+    * matching rows. No job runs. None past the bound, or when a key
     * field's type is not its column's. */
   private[graft] def keyedRows(m: TableMeta, keySchema: StructType,
       keys: Seq[InternalRow], hidden: Boolean, assertPrune: Boolean = false)
@@ -233,49 +233,14 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val schema = scan.readSchema()
     val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
     val factory = scan.createReaderFactory()
-    val matches = keyProbe(schema, keySchema, keys)
+    val matches = new MorOverlay.KeySet(keys.iterator, keySchema.indices.toArray,
+      keySchema.fields.map(_.dataType))
+      .matcher(keySchema.fieldNames.map(schema.fieldIndex), schema.fields.map(_.dataType))
     Some((schema, graft.plans.InlineReads.readSplits(factory,
         scan.planInputPartitions().toSeq, factory.supportColumnarReads) { rows =>
       rows.filter(matches).map(r => toUnsafe(r).copy(): InternalRow).toArray
     }))
   }
-
-  /** Whether a row of `schema` carries one of `keys` (catalyst values of
-    * `keySchema`'s fields, which `schema` holds by name) — a key with a null
-    * never matches. A single integral key probes an unboxed hash set, so
-    * the rows a keyed read scans allocate nothing; any other key probes
-    * MorOverlay.keyOf tuples (value semantics, exact for several columns). */
-  private def keyProbe(schema: StructType, keySchema: StructType,
-      keys: Seq[InternalRow]): InternalRow => Boolean = {
-    import org.apache.spark.util.collection.OpenHashSet
-    val idx = keySchema.fieldNames.map(schema.fieldIndex)
-    keySchema.fields.map(_.dataType) match {
-      case Array(LongType) =>
-        val set = new OpenHashSet[Long]()
-        keys.foreach(k => if (!k.isNullAt(0)) set.add(k.getLong(0)))
-        val i = idx(0)
-        r => !r.isNullAt(i) && set.contains(r.getLong(i))
-      case Array(IntegerType) =>
-        val set = new OpenHashSet[Int]()
-        keys.foreach(k => if (!k.isNullAt(0)) set.add(k.getInt(0)))
-        val i = idx(0)
-        r => !r.isNullAt(i) && set.contains(r.getInt(i))
-      case keyTypes =>
-        val types = schema.fields.map(_.dataType)
-        val probe = keySchema.indices.toArray
-        val wanted = new java.util.HashSet[Seq[Any]]()
-        keys.foreach(k => if (!probe.exists(k.isNullAt))
-          wanted.add(MorOverlay.keyOf(k, probe, keyTypes)))
-        r => wanted.contains(MorOverlay.keyOf(r, idx, types))
-    }
-  }
-
-  /** `rows` (catalyst values of `schema`) as a local relation: collecting
-    * it, or a projection or filter over it, runs no job. */
-  private def localRelation(schema: StructType, rows: Seq[InternalRow]): DataFrame =
-    GraftSqlBridge.ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
-        StructType(schema.fields.map(_.copy(nullable = true)))), rows))
 
   /**
    * Table snapshot pruned to what can possibly match `batch` on `joinKeys`
@@ -469,10 +434,13 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       Seq(StructField(OpCol, StringType), StructField(SeqCol, LongType)))
 
   /** Footer-vs-manifest schema audit (`fsck(verifySchemas = true)`): every
-    * column's type, and its repetition — every engine writer writes every
-    * field optional, whatever the column's declared nullability.
-    * [[readFileGroup]] reads every committed file under the PHYSICAL
-    * schema the manifest implies — sound for every engine writer
+    * column's type, and the nullability of the key — a key column the
+    * footer's statistics record nulls in breaks every key match. A
+    * `required` field is never reported: it is the stronger guarantee, and
+    * registered files keep their own repetition (every engine writer
+    * writes every field optional, whatever the column's declared
+    * nullability). [[readFileGroup]] reads every committed file under
+    * the PHYSICAL schema the manifest implies — sound for every engine writer
     * (the writer casts before writing, register derives ColumnMeta FROM
     * the footer) — so a foreign or hand-edited file whose footer
     * disagrees would otherwise surface as an opaque vectorized-reader
@@ -489,11 +457,12 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
           (if (f.kind == "delta")
             Map(OpCol -> (StringType: DataType), SeqCol -> (LongType: DataType))
           else Map.empty[String, DataType])
+      val keyPhys = m.columns.filter(_.isKey).flatMap(physGenOf(_, present)).map(_._1).toSet
       val footer =
-        try Some(org.apache.spark.sql.GraftSqlBridge.parquetFileSchema(spark, f.path))
+        try Some(org.apache.spark.sql.GraftSqlBridge.parquetFileFooter(spark, f.path))
         catch { case e: Exception =>
           mismatches += s"unreadable footer: ${f.path}: ${e.getMessage}"; None }
-      footer.foreach { ft =>
+      footer.foreach { case (ft, nulls) =>
         val byName = ft.fields.map(x => x.name -> x).toMap
         expect.foreach { case (n, dt) =>
           byName.get(n) match {
@@ -502,9 +471,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
             case Some(have) if have.dataType != dt => mismatches +=
               s"manifest/file schema mismatch: column '$n' is ${have.dataType} in the " +
                 s"footer but the manifest records $dt: ${f.path}"
-            case Some(have) if !have.nullable => mismatches +=
-              s"manifest/file schema mismatch: column '$n' is required in the " +
-                s"footer but every engine writer writes it optional: ${f.path}"
+            case Some(_) if keyPhys(n) && nulls.getOrElse(n, 0L) > 0 => mismatches +=
+              s"manifest/file schema mismatch: key column '$n' holds ${nulls(n)} " +
+                s"null(s) in the footer's statistics: ${f.path}"
             case _ => ()
           }
         }
@@ -672,15 +641,16 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val latest = MorOverlay.latestPerKey(windowRows(m2, inRange, v1), keyIdx, types,
       n, Some(n + 1)).values.asScala.toSeq
     val (dels, ups) = latest.partition(MorOverlay.isDelete(_, n))
-    val live = if (dels.isEmpty) Some(Set.empty[Seq[Any]]) else liveAt(m1, m2, dels, keyIdx)
+    val live = if (dels.isEmpty) Some((_: InternalRow) => false)
+      else liveAt(m1, m2, dels, keyIdx).map(_.matcher(keyIdx, types))
     val visible = m2.visibleColumns.map(c => m2.columns.indexOf(c))
     live.map { live =>
-      val out = (ups ++ dels.filter(r => live(MorOverlay.keyOf(r, keyIdx, types))))
+      val out = (ups ++ dels.filter(live))
         .map { r =>
           val vals = visible.map(i => r.get(i, types(i))) :+ MorOverlay.isDelete(r, n)
           org.apache.spark.sql.catalyst.InternalRow.fromSeq(vals)
         }
-      localRelation(StructType(m2.visibleColumns.map(_.toField) :+
+      localRelation(spark, StructType(m2.visibleColumns.map(_.toField) :+
         StructField(DeletedCol, BooleanType, nullable = false)), out)
     }
   }
@@ -694,12 +664,12 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     GraftV2Scan.readTail(m2, inRange, None).iterator.filter(_.getLong(seqIdx) > v1)
   }
 
-  /** The keys (as MorOverlay.keyOf tuples over `m2`'s key columns at
-    * `keyIdx`) of `rows` that are live in snapshot `m1`: a keyed read at
+  /** The keys of `rows` (`m2`'s key columns at `keyIdx`) that are live in
+    * snapshot `m1`, as a key set: a keyed read at
     * `m1` on the driver ([[keyedRows]]); None past the bound. Key columns
     * match by column id, so a rename inside the window reads `m1`'s name. */
   private def liveAt(m1: TableMeta, m2: TableMeta, rows: Seq[InternalRow],
-      keyIdx: Array[Int]): Option[Set[Seq[Any]]] = {
+      keyIdx: Array[Int]): Option[MorOverlay.KeySet] = {
     val keyCols = m2.keyCols.map { k =>
       val c = m2.column(k)
       m1.columns.find(_.id == c.id).getOrElse(c)
@@ -708,9 +678,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val keys = rows.map(r => org.apache.spark.sql.catalyst.InternalRow.fromSeq(
       keyIdx.toSeq.zip(keyCols).map { case (i, c) => r.get(i, c.dataType) }))
     keyedRows(m1, keySchema, keys, hidden = true).map { case (schema, found) =>
-      val idx = keySchema.fieldNames.map(schema.fieldIndex)
-      val types = schema.fields.map(_.dataType)
-      found.map(r => MorOverlay.keyOf(r, idx, types)).toSet
+      new MorOverlay.KeySet(found.iterator, keySchema.fieldNames.map(schema.fieldIndex),
+        schema.fields.map(_.dataType))
     }
   }
 
@@ -775,7 +744,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         if (!seen.containsKey(k)) seen.put(k,
           org.apache.spark.sql.catalyst.InternalRow.fromSeq(idx.toSeq.map(i => r.get(i, types(i)))))
       }
-      return localRelation(StructType(cols.map(m2.column(_).toField)),
+      return localRelation(spark, StructType(cols.map(m2.column(_).toField)),
         seen.values.asScala.toSeq)
     }
     // callers persist() this frame: size its distinct's exchange by the
@@ -820,7 +789,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         val seen = new java.util.HashSet[Seq[Any]]()
         val fresh = rows.filter(r =>
           seen.add(MorOverlay.keyOf(r, idx, types)) && !present(r))
-        commitDelta(m, localRelation(batch.schema, fresh.toSeq)
+        commitDelta(m, localRelation(spark, batch.schema, fresh.toSeq)
           .withColumn(OpCol, lit(OpUpsert)), "insert_ignore")
       case None if !ignore =>
         // both preconditions (keys already present in the table; duplicate
@@ -864,10 +833,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       .fromSeq(idx.toSeq.map(i => r.get(i, types(i)))))
     keyedRows(m, StructType(keys.map(batch.schema(_))), keyRows, hidden = true)
       .map { case (schema, found) =>
-        val fIdx = keys.map(schema.fieldIndex).toArray
-        val fTypes = schema.fields.map(_.dataType)
-        val present = found.map(r => MorOverlay.keyOf(r, fIdx, fTypes)).toSet
-        (rows, (r: InternalRow) => present(MorOverlay.keyOf(r, idx, types)))
+        (rows, new MorOverlay.KeySet(found.iterator, keys.map(schema.fieldIndex).toArray,
+          schema.fields.map(_.dataType)).matcher(idx, types))
       }
   }
 
@@ -1195,7 +1162,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       case Some((rows, present)) =>
         val idx = keys.map(batch.schema.fieldIndex)
         val types = batch.schema.fields.map(_.dataType)
-        localRelation(StructType(keys.map(batch.schema(_))), rows.toSeq.filter(present)
+        localRelation(spark, StructType(keys.map(batch.schema(_))), rows.toSeq.filter(present)
           .map(r => org.apache.spark.sql.catalyst.InternalRow.fromSeq(
             idx.map(i => r.get(i, types(i))))))
       case None => scanForBatch(m, batch, keys).select(keys.map(col): _*)
@@ -3268,6 +3235,14 @@ object GraftTable {
         .queryExecution.analyzed)
     (projects, conds.reduceOption(And))
   }
+
+  /** `rows` (catalyst values of `schema`) as a local relation: collecting
+    * it, or a projection or filter over it, runs no job. */
+  private[graft] def localRelation(spark: SparkSession, schema: StructType,
+      rows: Seq[InternalRow]): DataFrame =
+    GraftSqlBridge.ofRows(spark, org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+      org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(
+        StructType(schema.fields.map(_.copy(nullable = true)))), rows))
 
   /** Whether `df` is local rows: projections, filters and unions of local
     * relations whose expressions evaluate on the driver. Collecting it

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
@@ -248,13 +248,16 @@ object DerivedTables {
    *     [[GraftTable.broadcastDeltaBytes]] — the steady-state maintenance
    *     tick — is read and folded on the driver, its source rows are a
    *     driver keyed read ([[GraftTable.readByKeys]]) and its derivation
-   *     joins local rows on the driver ([[keyJoin]]): a kind whose
-   *     derivation is local rows commits with no job and flips no session
-   *     conf. Any other tiny window, and a step that still runs a job,
-   *     runs under ONE static plan per action: the CDC fold exchange is
-   *     delta-byte-sized and every small join side is a LocalRelation or
-   *     an explicit broadcast, so AQE's per-stage jobs would be most of its
-   *     cost. Snapshot-diff or backfill windows keep AQE, and persist the
+   *     joins local rows on the driver ([[keyJoin]]). A kind whose bounded
+   *     derivation over those local rows plans no exchange
+   *     (`exchangeFree`: projections, key joins, a single-partition
+   *     aggregate) runs at most one job per action under any plan, so such
+   *     a window is decided up front to flip no session conf. Any other
+   *     tiny window runs under ONE static plan per action: the CDC fold
+   *     exchange is delta-byte-sized and every small join side is a
+   *     LocalRelation or an explicit broadcast, so AQE's per-stage jobs
+   *     would be most of its cost. Snapshot-diff or backfill windows keep
+   *     AQE, and persist the
    *     change frame BEFORE the bounded probe so an over-bound fallback
    *     reuses its partitions.
    *   - ONE bounded probe collects up to `maxPruneKeys + 1` change rows.
@@ -281,7 +284,8 @@ object DerivedTables {
    */
   private[tools] def refresh(spark: SparkSession, derived: GraftTable,
       srcLocKey: String, srcVersionKey: String, maxPruneKeys: Int,
-      assertPrune: Boolean)(window: (GraftTable, Long, Long) => Derivation)
+      assertPrune: Boolean, exchangeFree: Boolean = false)(
+      window: (GraftTable, Long, Long) => Derivation)
       : Boolean = lockFor(derived.location).synchronized {
     val p = derived.properties
     val src = GraftTable.load(spark, p(srcLocKey))
@@ -291,95 +295,71 @@ object DerivedTables {
     val watermark = Map(srcVersionKey -> Some(v1.toString))
     val winBytes = src.cdcWindowBytes(v0, v1)
     val winBig = winBytes.forall(_ > GraftTable.staticPlanMaxBytes)
-    // a window within the driver bound is read and folded on the driver
-    // (changesSince / touchedKeys): only a step that runs a job plans
-    // statically
-    val driverWindow = winBytes.exists(_ <= GraftTable.broadcastDeltaBytes)
-    def static[A](job: Boolean)(body: => A): A = staticStep(spark, job && !winBig)(body)
-    var cached: Option[DataFrame] = None
-    def persisted(d: Derivation) = Some(d.changes.persist(StorageLevel.MEMORY_AND_DISK))
-    try {
-      val (d, rows) = static(!driverWindow) {
-        val d = window(src, v0, v1)
-        if (winBig) cached = persisted(d)
-        (d, cached.getOrElse(d.changes).limit(maxPruneKeys + 1).collect())
-      }
-      if (rows.isEmpty) derived.setProperties(watermark)
-      else {
-        val bounded = rows.length <= maxPruneKeys
-        val (changed, sourceRows) =
-          if (bounded) {
-            val keyIdx = d.keyCols.map(d.changes.schema.fieldIndex)
-            (localFrame(spark, d.changes.schema, rows),
-              src.readByKeys(d.readAt,
-                StructType(d.keyCols.map(d.changes.schema(_))),
-                rows.map(r => Row.fromSeq(keyIdx.map(r.get))).distinct,
-                assertPrune))
-          } else {
-            if (assertPrune) throw new IllegalStateException(
-              s"refresh of ${derived.location} fell back to the semi-join " +
-                s"path (> $maxPruneKeys changed keys)")
-            if (cached.isEmpty) cached = persisted(d)
-            val changed = cached.get
-            // a change frame of exactly the key columns (touchedKeys) is
-            // already a distinct key set
-            val keys =
-              if (changed.columns.toSeq == d.keyCols) changed
-              else changed.select(d.keyCols.map(col): _*).distinct()
-            (changed, src.scan(d.readAt).join(keys, d.keyCols, "left_semi"))
-          }
-        val (fresh, stale) = d.derive(changed, sourceRows, bounded)
-        // fresh + stale per changed key: ~2x the window, a manifest-
-        // derived size for the commit's guard-window exchange (the
-        // optimizer's estimate through the joins is useless); local rows
-        // commit on the driver with no job
-        static(!(GraftTable.isLocal(fresh) && GraftTable.isLocal(stale))) {
+    // a window within the driver bound is read, folded and key-read on the
+    // driver; when the kind's derivation over those local rows plans no
+    // exchange, a static plan would change no job and the session conf
+    // stays as it is
+    val driverOnly = exchangeFree && winBytes.exists(_ <= GraftTable.broadcastDeltaBytes)
+    GraftTable.withStaticPlan(spark, !winBig && !driverOnly) {
+      val d = window(src, v0, v1)
+      def persisted = Some(d.changes.persist(StorageLevel.MEMORY_AND_DISK))
+      var cached = if (winBig) persisted else None
+      try {
+        val rows = cached.getOrElse(d.changes).limit(maxPruneKeys + 1).collect()
+        if (rows.isEmpty) derived.setProperties(watermark)
+        else {
+          val bounded = rows.length <= maxPruneKeys
+          val (changed, sourceRows) =
+            if (bounded) {
+              val keyIdx = d.keyCols.map(d.changes.schema.fieldIndex)
+              (localFrame(spark, d.changes.schema, rows),
+                src.readByKeys(d.readAt,
+                  StructType(d.keyCols.map(d.changes.schema(_))),
+                  rows.map(r => Row.fromSeq(keyIdx.map(r.get))).distinct,
+                  assertPrune))
+            } else {
+              if (assertPrune) throw new IllegalStateException(
+                s"refresh of ${derived.location} fell back to the semi-join " +
+                  s"path (> $maxPruneKeys changed keys)")
+              if (cached.isEmpty) cached = persisted
+              val changed = cached.get
+              // a change frame of exactly the key columns (touchedKeys) is
+              // already a distinct key set
+              val keys =
+                if (changed.columns.toSeq == d.keyCols) changed
+                else changed.select(d.keyCols.map(col): _*).distinct()
+              (changed, src.scan(d.readAt).join(keys, d.keyCols, "left_semi"))
+            }
+          val (fresh, stale) = d.derive(changed, sourceRows, bounded)
+          // fresh + stale per changed key: ~2x the window, a manifest-
+          // derived size for the commit's guard-window exchange (the
+          // optimizer's estimate through the joins is useless); local rows
+          // commit on the driver with no job
           commit(derived, fresh, stale, watermark, winBytes.map(b => b * 2 + 1024))
         }
-      }
-      true
-    } finally cached.foreach(_.unpersist(blocking = false))
-  }
-
-  /** `body`, one refresh step that runs a Spark job, under ONE static plan
-    * when `tiny`: the one session-conf flip of the refresh path. */
-  private def staticStep[A](spark: SparkSession, tiny: Boolean)(body: => A): A =
-    GraftTable.withStaticPlan(spark, tiny)(body)
-
-  /** `df` — a bounded derivation computed over local rows, such as the
-    * rollup's aggregate — collected once, under a static plan, into a local
-    * relation: [[keyJoin]] against it and the commit then run on the
-    * driver, so one job computes it instead of one per use. */
-  private[tools] def collected(df: DataFrame): DataFrame =
-    staticStep(df.sparkSession, tiny = true) {
-      localFrame(df.sparkSession, df.schema, df.collect())
+        true
+      } finally cached.foreach(_.unpersist(blocking = false))
     }
+  }
 
   /** `left`'s rows whose `cols` values appear (`anti` = false) or do not
     * appear (`anti` = true) in `right`: the key join of every bounded
     * derivation. Over two local relations (a window read on the driver)
-    * it runs on the driver — a hash set of `right`'s collected keys probed
-    * by `left`'s collected rows, a key with a null never matching — and
-    * returns a local relation, since a broadcast join runs a job even over
-    * local relations. Otherwise it is a Spark join, `right` broadcast when
-    * `broadcastRight`. */
+    * it runs on the driver — a key set of `right`'s collected keys
+    * (graft.sources.v2.MorOverlay.KeySet: Spark's key equality) probed by
+    * `left`'s collected rows — and returns a local relation, since a
+    * broadcast join runs a job even over local relations. Otherwise it is
+    * a Spark join, `right` broadcast when `broadcastRight`. */
   private[tools] def keyJoin(left: DataFrame, right: DataFrame, cols: Seq[String],
       anti: Boolean, broadcastRight: Boolean): DataFrame =
     if (GraftTable.isLocal(left) && GraftTable.isLocal(right)) {
-      // binary values compare by content
-      def keyOf(df: DataFrame): Row => Seq[Any] = {
-        val idx = cols.map(df.schema.fieldIndex)
-        r => idx.map(i => r.get(i) match {
-          case b: Array[Byte] => b.toSeq
-          case v => v
-        })
-      }
-      val have = right.collect().map(keyOf(right)).filterNot(_.contains(null)).toSet
-      val leftKey = keyOf(left)
-      localFrame(left.sparkSession, left.schema, left.collect().filter { r =>
-        val k = leftKey(r)
-        (!k.contains(null) && have(k)) != anti
-      })
+      def at(df: DataFrame) = cols.map(df.schema.fieldIndex).toArray
+      def types(df: DataFrame) = df.schema.fields.map(_.dataType)
+      val matches = new graft.sources.v2.MorOverlay.KeySet(
+        GraftSqlBridge.collectInternal(right).iterator, at(right), types(right))
+        .matcher(at(left), types(left))
+      GraftTable.localRelation(left.sparkSession, left.schema,
+        GraftSqlBridge.collectInternal(left).toSeq.filter(r => matches(r) != anti))
     } else left.join(if (broadcastRight) broadcast(right) else right, cols,
       if (anti) "left_anti" else "left_semi")
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.catalog.HashComponent
@@ -107,7 +107,7 @@ object MaterializedRollup {
   def refresh(spark: SparkSession, rollup: GraftTable,
       maxPruneKeys: Int = 4096, assertPrune: Boolean = false): Boolean =
     DerivedTables.refresh(spark, rollup, SrcLocKey, SrcVersionKey,
-        maxPruneKeys, assertPrune) { (src, v0, v1) =>
+        maxPruneKeys, assertPrune, exchangeFree = true) { (src, v0, v1) =>
       val p = rollup.properties
       val groupCols = p(GroupColsKey).split(FieldSep).toSeq
       val aggs = p(AggsKey).split(RecSep).toSeq.map { r =>
@@ -118,14 +118,19 @@ object MaterializedRollup {
           readAt = None) { (touched, base, bounded) =>
         // conform to the rollup's persisted column types (an agg's natural
         // result type can widen — e.g. sum(DECIMAL(28,2)) is DECIMAL(38,2))
-        val recomputed = grouped(base, groupCols, aggs)
+        def recompute(rows: DataFrame) = grouped(rows, groupCols, aggs)
           .select(rollup.meta.visibleColumns.map(c =>
             col(c.name).cast(c.dataType).as(c.name)): _*)
-        // over local source rows the aggregate runs once, and the anti
-        // join and the commit run on the driver
+        // over local source rows (a driver keyed read) the aggregate is one
+        // single-partition stage — no exchange, so one job under any plan —
+        // collected into a local relation: the anti join and the commit
+        // then run on the driver
         val fresh =
-          if (bounded && GraftTable.isLocal(base)) DerivedTables.collected(recomputed)
-          else recomputed
+          if (bounded && GraftTable.isLocal(base)) {
+            val one = recompute(base.coalesce(1))
+            GraftTable.localRelation(spark, one.schema,
+              GraftSqlBridge.collectInternal(one).toSeq)
+          } else recompute(base)
         // touched groups whose recompute came back empty vanished from the
         // base
         val freshKeys = fresh.select(groupCols.map(col): _*)

@@ -60,17 +60,33 @@ object GraftSqlBridge {
     * job (per-path `spark.read.parquet` schema inference costs one job
     * each; callers reading many same-table filesets want per-fileset
     * schemas without paying that). */
-  def parquetFileSchema(session: SparkSession, path: String): types.StructType = {
+  def parquetFileSchema(session: SparkSession, path: String): types.StructType =
+    parquetFileFooter(session, path)._1
+
+  /** [[parquetFileSchema]] and, per leaf column (by dotted path), the nulls
+    * the row-group statistics record — absent when a row group records
+    * none — from one footer read. */
+  def parquetFileFooter(session: SparkSession, path: String)
+      : (types.StructType, Map[String, Long]) = {
+    import scala.jdk.CollectionConverters._
     val conf = session.sessionState.newHadoopConf()
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
       new org.apache.hadoop.fs.Path(path), conf)
     val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    // the SQLConf ctor — the Configuration one expects ParquetFileFormat's
-    // explicitly-propagated SQL keys and NPEs on a plain hadoop conf
-    try new execution.datasources.parquet.ParquetToSparkSchemaConverter(
-      session.sessionState.conf)
-      .convert(reader.getFooter.getFileMetaData.getSchema)
-    finally reader.close()
+    try {
+      val footer = reader.getFooter
+      val nulls = footer.getBlocks.asScala.flatMap(_.getColumns.asScala)
+        .groupBy(_.getPath.toDotString).flatMap { case (c, chunks) =>
+          val stats = chunks.map(ch => Option(ch.getStatistics))
+          if (stats.forall(_.exists(_.isNumNullsSet)))
+            Some(c -> stats.map(_.get.getNumNulls).sum)
+          else None
+        }
+      // the SQLConf ctor — the Configuration one expects ParquetFileFormat's
+      // explicitly-propagated SQL keys and NPEs on a plain hadoop conf
+      (new execution.datasources.parquet.ParquetToSparkSchemaConverter(
+        session.sessionState.conf).convert(footer.getFileMetaData.getSchema), nulls)
+    } finally reader.close()
   }
 
   /** A DataFrame over an arbitrary logical plan (Dataset.ofRows is

@@ -98,4 +98,28 @@ class DerivedTablesSpec extends AnyFunSuite {
       assert(c.forall(_.serves == 0L), c.toString)
     } finally ServingRewrites.disarm(spark, roll.location)
   }
+
+  test("a rollup refresh over a NaN DOUBLE group: the driver path matches the job path") {
+    // NaN = NaN as a Spark join, IN or group-by key; -0.0 = 0.0 likewise
+    def run(bound: Option[String]): Seq[String] = {
+      val data = Seq((Double.NaN, 1L, 10L), (Double.NaN, 2L, 20L), (1.5, 3L, 30L),
+        (-0.0, 4L, 40L), (0.0, 5L, 50L)).toDF("g", "k", "v")
+      val src = GraftTable.create(spark, tmp(), "dt_nan", data.schema, Seq("g", "k"),
+        Seq(HashComponent(Seq("k"), 2)), data = Some(data))
+      val roll = MaterializedRollup.build(spark, src, Seq("g"),
+        Seq("s" -> "sum(v)", "n" -> "count(*)"), tmp(), buckets = 2)
+      try {
+        src.upsert(Seq((Double.NaN, 1L, 100L), (0.0, 5L, 500L)).toDF("g", "k", "v"))
+        src.delete(Seq((1.5, 3L)).toDF("g", "k"))
+        bound.foreach(spark.conf.set("graft.mor.broadcastBytes", _))
+        try assert(MaterializedRollup.refresh(spark, roll))
+        finally spark.conf.unset("graft.mor.broadcastBytes")
+        roll.scan().collect().map(r => s"${r.getDouble(0) + 0.0},${r.get(1)},${r.get(2)}")
+          .toSeq.sorted
+      } finally ServingRewrites.disarm(spark, roll.location)
+    }
+    val expected = Seq("0.0,540,2", "NaN,120,2")
+    assert(run(None) == expected)
+    assert(run(Some("1")) == expected)
+  }
 }

@@ -78,13 +78,13 @@ class RefreshJobCountSpec extends AnyFunSuite {
         s"$what refresh (jobs, stages) (sindex, rollup, vindex) $got exceed $floor")
     // a fast-path window within the driver bound reads, folds and joins
     // on the driver: the secondary index runs no job; the rollup's
-    // aggregate (collected once) and the vector index's centroid
-    // assignment still do
-    val fastPath = Seq((0, 0), (1, 2), (3, 6))
+    // aggregate (one single-partition stage, collected once) and the
+    // vector index's centroid assignment still do
+    val fastPath = Seq((0, 0), (1, 1), (3, 6))
     within(first, fastPath, "first")
     within(steady, fastPath, "steady-state fast-path")
     within(merged, fastPath, "across-a-tail-merge")
-    within(compacted, Seq((4, 4), (6, 7), (7, 10)), "across-compaction")
+    within(compacted, Seq((4, 4), (6, 6), (7, 10)), "across-compaction")
 
     // the guarded refreshes stayed exact: each derived table equals a
     // rebuild from the current source

@@ -57,7 +57,7 @@ class SchemaAuditSpec extends AnyFunSuite {
       s"the swapped file's wrong-typed column must be named, got: $issues")
   }
 
-  test("every writer's footers agree on repetition; a required column is named") {
+  test("every writer's footers agree on repetition; a null key is named") {
     val wh = Files.createTempDirectory("graft-schemaaudit-rep-").toString
     val df = (1 to 50).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     val t = GraftTable.create(spark, s"$wh/t", "sa2", df.schema, Seq("k"),
@@ -71,21 +71,26 @@ class SchemaAuditSpec extends AnyFunSuite {
     } finally spark.conf.unset("graft.mor.broadcastBytes")
     t.upsert(Seq((3L, "u3")).toDF("k", "v"))
     assert(t.mergeTailDeltas())
+    val physK = t.meta.column("k").physName
+    def repetition(path: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(path), new org.apache.hadoop.conf.Configuration()))
+      try r.getFooter.getFileMetaData.getSchema.getType(Seq(physK): _*).getRepetition.toString
+      finally r.close()
+    }
+    val files = t.meta.baseFiles ++ t.meta.deltaFiles
+    assert(files.map(f => repetition(f.path)).toSet == Set("OPTIONAL"),
+      files.map(f => f.path -> repetition(f.path)))
     assert(t.verifyFileSchemas().isEmpty, t.verifyFileSchemas())
 
-    // swap one base file for one whose non-null key column is `required`
-    // (same types): the audit names the file and the column
-    val physK = t.meta.column("k").physName
+    // swap one base file for one whose key column holds a null (same
+    // types): the audit names the file and the column
     val physV = t.meta.column("v").physName
     val victim = t.meta.baseFiles.head.path
-    val impostorDir = Files.createTempDirectory("graft-schemaaudit-req-").toString
-    spark.createDataFrame(java.util.Arrays.asList(org.apache.spark.sql.Row(1L, "x")),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(physK,
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField(physV,
-          org.apache.spark.sql.types.StringType))))
-      .coalesce(1).write.mode("overwrite").parquet(impostorDir)
+    val impostorDir = Files.createTempDirectory("graft-schemaaudit-null-").toString
+    Seq((Some(1L), "x"), (None, "y")).toDF(physK, physV).coalesce(1)
+      .write.mode("overwrite").parquet(impostorDir)
     val impostor = Files.list(Paths.get(impostorDir)).iterator()
     var file: java.nio.file.Path = null
     while (impostor.hasNext) {
@@ -96,8 +101,18 @@ class SchemaAuditSpec extends AnyFunSuite {
     Files.deleteIfExists(victimPath.resolveSibling(
       "." + victimPath.getFileName.toString + ".crc"))
     Files.copy(file, victimPath, StandardCopyOption.REPLACE_EXISTING)
-    assert(t.verifyFileSchemas() == Seq(s"manifest/file schema mismatch: column " +
-      s"'$physK' is required in the footer but every engine writer writes it " +
-      s"optional: $victim"))
+    assert(t.verifyFileSchemas() == Seq(s"manifest/file schema mismatch: key column " +
+      s"'$physK' holds 1 null(s) in the footer's statistics: $victim"))
+  }
+
+  test("a registered foreign file with required columns audits clean") {
+    val wh = Files.createTempDirectory("graft-schemaaudit-reg-").toString
+    // spark.range's id is non-null: the write stores it `required`
+    spark.range(0, 40).withColumn("v", col("id") * 2)
+      .coalesce(1).write.parquet(s"$wh/raw")
+    val t = GraftTable.register(spark, s"$wh/t", "sa3", s"$wh/raw", Seq("id"))
+    t.upsert(Seq((1L, 7L)).toDF("id", "v"))
+    assert(t.verifyFileSchemas().isEmpty, t.verifyFileSchemas())
+    assert(graft.tools.GraftTools.fsck(t.location, verifySchemas = true).isEmpty)
   }
 }
