@@ -234,7 +234,7 @@ object GraftTools {
           .filter(_.endsWith(".parquet")).toSeq.sorted.headOption
       }
       part.map(p =>
-        org.apache.spark.sql.GraftSqlBridge.parquetFileSchema(spark, p))
+        org.apache.spark.sql.GraftSqlBridge.parquetFileFooter(spark, p)._1)
     }
     val withSchemas = incrementPaths.zipWithIndex
       .flatMap { case (p, i) => incSchema(p).map(sc => (p, i, sc)) }

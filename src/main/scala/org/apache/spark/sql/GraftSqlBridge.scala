@@ -59,13 +59,9 @@ object GraftSqlBridge {
   /** A parquet file's Spark schema from its footer, DRIVER-SIDE — no Spark
     * job (per-path `spark.read.parquet` schema inference costs one job
     * each; callers reading many same-table filesets want per-fileset
-    * schemas without paying that). */
-  def parquetFileSchema(session: SparkSession, path: String): types.StructType =
-    parquetFileFooter(session, path)._1
-
-  /** [[parquetFileSchema]] and, per leaf column (by dotted path), the nulls
-    * the row-group statistics record — absent when a row group records
-    * none — from one footer read. */
+    * schemas without paying that) — and, per leaf column (by dotted
+    * path), the nulls the row-group statistics record (absent when a row
+    * group records none). */
   def parquetFileFooter(session: SparkSession, path: String)
       : (types.StructType, Map[String, Long]) = {
     import scala.jdk.CollectionConverters._
