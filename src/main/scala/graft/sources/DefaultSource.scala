@@ -1,21 +1,32 @@
 package graft.sources
 
-import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
+import org.apache.spark.sql.connector.catalog.{Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 import graft.catalog.{HashComponent, RangeComponent, TableMeta}
+import graft.sources.v2.GraftV2Table
 import graft.table.GraftTable
 
 /**
  * `spark.read.format("graft")` / `df.write.format("graft")` — the DataSource
  * surface, shaped after the reference's own Spark connector
  * (kudu-spark DefaultSource.scala:85 DataSourceRegister "kudu";
- * KuduRelation :305 BaseRelation with PrunedFilteredScan with
- * InsertableRelation; KuduSink :538 StreamSinkProvider).
+ * KuduSink :538 StreamSinkProvider). A batch read is a DataSource V2
+ * table: [[getTable]] returns the [[GraftV2Table]] the SQL catalog and
+ * every `GraftTable` read face use, pinned at the requested snapshot, so a
+ * `format("graft")` read prunes, merges on read and answers small gets on
+ * the driver (graft.plans.InlineReads) like `scan()`. That handle lacks
+ * BATCH_WRITE and MICRO_BATCH_READ, so Spark saves through the V1
+ * [[createRelation]] below and streams through the op-tagged
+ * [[graft.streaming.GraftChangeSource]].
  *
  * Options:
  *   graft.table.path        table location (required)
@@ -49,14 +60,54 @@ import graft.table.GraftTable
  *                           routing) between real flushes (default 24;
  *                           0 disables)
  */
-class DefaultSource extends RelationProvider with CreatableRelationProvider
+class DefaultSource extends TableProvider with CreatableRelationProvider
     with StreamSinkProvider with StreamSourceProvider with DataSourceRegister {
 
   override def shortName(): String = "graft"
 
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
+    table(CaseInsensitiveMap(options.asCaseSensitiveMap.asScala.toMap)) match {
+      case _: Absent => new StructType() // a save creates the table
+      case t => t.schema()
+    }
+
+  override def getTable(schema: StructType, partitioning: Array[Transform],
+      properties: java.util.Map[String, String]): Table =
+    table(CaseInsensitiveMap(properties.asScala.toMap))
+
+  /** The table at the options' location and snapshot (the current one
+    * unless graft.snapshotVersion or graft.snapshotTimestampMs names one).
+    * A location with no table yet gets [[Absent]]. */
+  private def table(parameters: Map[String, String]): Table = {
+    val loc = path(parameters)
+    if (!GraftTable.exists(loc)) return new Absent(loc)
+    val spark = SparkSession.active
+    graft.plans.InlineReads.inject(spark)
+    val t = GraftTable.load(spark, loc)
+    val version = parameters.get("graft.snapshotVersion").map(_.toLong).orElse(
+      parameters.get("graft.snapshotTimestampMs")
+        .map(ts => TableMeta.versionAtTimestamp(loc, ts.toLong)))
+    new GraftV2Table(version.map(t.metaAt).getOrElse(t.meta), microBatch = false)
+  }
+
+  /** A location with no table yet: a write's handle, which lacks
+    * BATCH_WRITE so the save runs [[createRelation]] and creates the table
+    * there; a read fails when Spark asks for its schema, with the error
+    * loading the table gives. */
+  private class Absent(loc: String) extends Table
+      with org.apache.spark.sql.connector.catalog.SupportsRead {
+    private def missing = new IllegalArgumentException(s"no graft table at $loc")
+    override def name(): String = loc
+    override def schema(): StructType = throw missing
+    override def capabilities(): java.util.Set[TableCapability] =
+      java.util.EnumSet.of(TableCapability.BATCH_READ)
+    override def newScanBuilder(options: CaseInsensitiveStringMap)
+        : org.apache.spark.sql.connector.read.ScanBuilder = throw missing
+  }
+
   /** Streaming CDC source: `spark.readStream.format("graft").option("path",
     * loc)` tails COMMITTED mutation versions (GraftStreaming.changeStream
-    * is the convenience wrapper). Schema: physical columns + op + seq. */
+    * is the convenience wrapper). Schema: table columns + op + seq. */
   override def sourceSchema(sqlContext: SQLContext,
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): (String, StructType) =
@@ -75,14 +126,11 @@ class DefaultSource extends RelationProvider with CreatableRelationProvider
       parameters.getOrElse("path",
         throw new IllegalArgumentException("graft.table.path option required")))
 
-  override def createRelation(sqlContext: SQLContext,
-      parameters: Map[String, String]): BaseRelation = {
-    val loc = path(parameters)
-    val version: Option[Long] =
-      parameters.get("graft.snapshotVersion").map(_.toLong).orElse(
-        parameters.get("graft.snapshotTimestampMs")
-          .map(ts => TableMeta.versionAtTimestamp(loc, ts.toLong)))
-    GraftRelation(sqlContext, loc, version)
+  /** What a V1 save hands back to Spark: the written table's schema. */
+  private def written(ctx: SQLContext, loc: String): BaseRelation = new BaseRelation {
+    override def sqlContext: SQLContext = ctx
+    override def schema: StructType =
+      StructType(TableMeta.readCurrent(loc).visibleColumns.map(_.toField))
   }
 
   override def createRelation(sqlContext: SQLContext, mode: SaveMode,
@@ -104,9 +152,9 @@ class DefaultSource extends RelationProvider with CreatableRelationProvider
         }
         val range = parameters.get("graft.range.column").map(c =>
           RangeComponent(c, parameters.getOrElse("graft.range.granularity", "year")))
-        return GraftRelation(sqlContext,
+        return written(sqlContext,
           GraftTable.create(spark, loc, loc.split('/').last, data.schema,
-            keys, hash, range, data = Some(data)).location, None)
+            keys, hash, range, data = Some(data)).location)
       }
     if (parameters.get("graft.handleSchemaDrift").exists(_.toBoolean)) {
       val known = table.meta.columns.map(_.name).toSet
@@ -121,7 +169,7 @@ class DefaultSource extends RelationProvider with CreatableRelationProvider
       case (_, "upsert") => table.upsert(data)
       case (_, op) => throw new IllegalArgumentException(s"unknown graft.operation: $op")
     }
-    GraftRelation(sqlContext, loc, None)
+    written(sqlContext, loc)
   }
 
   /** Streaming upsert sink — one delta commit per micro-batch, at-least-once
@@ -182,84 +230,5 @@ class DefaultSource extends RelationProvider with CreatableRelationProvider
           }
       }
     }
-  }
-}
-
-/**
- * PrunedFilteredScan relation: Catalyst hands down required columns +
- * filters (KuduRelation.buildScan, DefaultSource.scala:374-384); we prune
- * partitions/files from the filters, push the rest into the Parquet scans,
- * and report unhandled filters for Spark to re-evaluate
- * (unhandledFilters parity, DefaultSource.scala:516-523).
- */
-case class GraftRelation(sqlContext: SQLContext, location: String,
-    version: Option[Long]) extends BaseRelation
-    with PrunedFilteredScan with InsertableRelation {
-
-  private def spark: SparkSession = sqlContext.sparkSession
-  private lazy val table = GraftTable.load(spark, location)
-  private lazy val metaAtVersion = version.map(table.metaAt).getOrElse(table.meta)
-
-  override def schema: StructType =
-    StructType(metaAtVersion.visibleColumns.map(_.toField))
-
-  /** Table stats drive Catalyst's broadcast-join selection (the analog of
-    * the reference reporting on-disk size, DefaultSource.scala:329-352). */
-  override def sizeInBytes: Long = {
-    val m = metaAtVersion
-    (m.baseFiles ++ m.deltaFiles)
-      .map(f => GraftTable.fileSize(f.path)).sum max 1L
-  }
-
-  override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    // the handled filters prune AND filter inside scanPruned; Spark
-    // re-evaluates the unhandled ones above this relation
-    val filtered = table.scanPruned(
-      filters.filter(f => GraftRelation.toColumn(f).isDefined).toSeq, version)
-    val projected =
-      if (requiredColumns.isEmpty) filtered
-      else filtered.select(requiredColumns.map(col).toSeq: _*)
-    projected.rdd
-  }
-
-  override def unhandledFilters(filters: Array[Filter]): Array[Filter] =
-    filters.filter(f => GraftRelation.toColumn(f).isEmpty)
-
-  override def insert(data: DataFrame, overwrite: Boolean): Unit = {
-    // overwrite goes through the single-version atomic replace: a
-    // mid-statement failure leaves the pre-statement snapshot intact
-    // (never truncate-then-die; same path as SaveMode.Overwrite above).
-    if (overwrite) table.overwrite(data)
-    else table.upsert(data)
-  }
-}
-
-object GraftRelation {
-  /** Spark Filter → Column, for the subset the engine evaluates itself
-    * (the reference converts the comparison/IN/NULL/prefix conjunctions,
-    * DefaultSource.scala:392-421; Or/Not/contains are extra surface the
-    * SQL DELETE path wants — metadata pruning still only consumes the
-    * conjunctive shapes and ignores the rest). */
-  def toColumn(f: Filter): Option[Column] = f match {
-    case EqualTo(a, v) => Some(col(a) === v)
-    case EqualNullSafe(a, v) => Some(col(a) <=> v)
-    case GreaterThan(a, v) => Some(col(a) > v)
-    case GreaterThanOrEqual(a, v) => Some(col(a) >= v)
-    case LessThan(a, v) => Some(col(a) < v)
-    case LessThanOrEqual(a, v) => Some(col(a) <= v)
-    case In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
-    case IsNull(a) => Some(col(a).isNull)
-    case IsNotNull(a) => Some(col(a).isNotNull)
-    case StringStartsWith(a, p) => Some(col(a).startsWith(p))
-    case StringEndsWith(a, s) => Some(col(a).endsWith(s))
-    case StringContains(a, s) => Some(col(a).contains(s))
-    case AlwaysTrue() => Some(lit(true))
-    case AlwaysFalse() => Some(lit(false))
-    case And(l, r) =>
-      for (lc <- toColumn(l); rc <- toColumn(r)) yield lc && rc
-    case Or(l, r) =>
-      for (lc <- toColumn(l); rc <- toColumn(r)) yield lc || rc
-    case Not(c) => toColumn(c).map(!_)
-    case _ => None
   }
 }

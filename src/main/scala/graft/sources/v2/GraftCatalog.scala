@@ -696,8 +696,18 @@ class StagedGraftTable(inner: GraftV2Table, stagedLoc: String,
   * the one relation behind every `GraftTable` read face. `meta` is the
   * manifest the scan reads — a catalog snapshot, or a read face's copy
   * restricted to the files it may read; `hidden` exposes the hidden
-  * auto-increment key column of a non-unique-PK table (`scanWithHidden`). */
-class GraftV2Table(meta: TableMeta, hidden: Boolean = false) extends Table with SupportsRead
+  * auto-increment key column of a non-unique-PK table (`scanWithHidden`).
+  * `raw` is the engine's read of files as stored (GraftTable.readRaw):
+  * the manifest's base files, which may be delta files, each remapped to
+  * the current schema (a renamed column moves by position, a widened one
+  * is cast, an added one reads its read default) with every column and
+  * the op and seq columns, stored or null; a raw manifest carries no
+  * delta files and no range drops, so no overlay and no mask applies.
+  * `microBatch` offers `readStream.table` the V2 stream; the `graft`
+  * format's handle declines it, so its streams fall back to the op-tagged
+  * V1 change source. */
+class GraftV2Table(meta: TableMeta, hidden: Boolean = false, raw: Boolean = false,
+    microBatch: Boolean = true) extends Table with SupportsRead
     with SupportsWrite with SupportsDelete with TruncatableTable
     with SupportsRowLevelOperations with SupportsPartitionManagement
     with org.apache.spark.sql.connector.catalog.index.SupportsIndex {
@@ -714,7 +724,7 @@ class GraftV2Table(meta: TableMeta, hidden: Boolean = false) extends Table with 
 
   /** Whether this handle reads the whole snapshot of its version, not a
     * read face's restricted copy (which only drops files). */
-  private[graft] def wholeSnapshot: Boolean = {
+  private[graft] def wholeSnapshot: Boolean = !raw && {
     val m = TableMeta.read(meta.location, meta.version)
     m.baseFiles.size == meta.baseFiles.size && m.deltaFiles.size == meta.deltaFiles.size
   }
@@ -914,11 +924,11 @@ class GraftV2Table(meta: TableMeta, hidden: Boolean = false) extends Table with 
     * evaluate are accepted (Spark checks canDeleteWhere first and errors
     * cleanly on the rest — no partial deletes). */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    filters.forall(f => graft.sources.GraftRelation.toColumn(f).isDefined)
+    filters.forall(f => GraftTable.toColumn(f).isDefined)
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
     val t = GraftTable.load(SparkSession.active, meta.location)
-    t.deleteWhere(filters.flatMap(graft.sources.GraftRelation.toColumn)
+    t.deleteWhere(filters.flatMap(GraftTable.toColumn)
       .reduceOption(_ && _)
       .getOrElse(org.apache.spark.sql.functions.lit(true)))
   }
@@ -936,8 +946,7 @@ class GraftV2Table(meta: TableMeta, hidden: Boolean = false) extends Table with 
   }
 
   override def name(): String = meta.name
-  override def schema(): StructType =
-    StructType((if (hidden) meta.columns else meta.visibleColumns).map(_.toField))
+  override def schema(): StructType = GraftV2Scan.tableSchema(meta, hidden, raw)
   /** Free-form engine properties (TableMeta.props — the extra_configs
     * analog) surface through SHOW TBLPROPERTIES / DESCRIBE EXTENDED. */
   override def properties(): util.Map[String, String] = {
@@ -946,7 +955,10 @@ class GraftV2Table(meta: TableMeta, hidden: Boolean = false) extends Table with 
     out
   }
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ,
+    if (raw) util.EnumSet.of(TableCapability.BATCH_READ)
+    else if (microBatch) util.EnumSet.of(TableCapability.BATCH_READ,
+      TableCapability.MICRO_BATCH_READ, TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
+    else util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.V1_BATCH_WRITE, TableCapability.TRUNCATE)
 
   /** V2 writes through the V1 fallback (the established bridge for engines
@@ -991,12 +1003,12 @@ class GraftV2Table(meta: TableMeta, hidden: Boolean = false) extends Table with 
     }
 
   override def partitioning(): Array[Transform] =
-    GraftV2Scan.keyGroupedComponents(meta)
+    GraftV2Scan.keyGroupedComponents(meta).filter(_ => !raw)
       .map(_.map(hc => Expressions.bucket(hc.buckets, hc.cols.head)).toArray)
       .getOrElse(Array.empty) // multi-col-component/per-range layouts: no report
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(meta, options, hidden, tails)
+    new GraftScanBuilder(meta, options, hidden, tails, raw)
 
   /** The delta tail rows this relation's scans collected, by tail files:
     * a plan reading the relation more than once (a union or join of one
@@ -1008,14 +1020,14 @@ class GraftV2Table(meta: TableMeta, hidden: Boolean = false) extends Table with 
 class GraftScanBuilder(meta: TableMeta,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     hidden: Boolean = false,
-    tails: GraftV2Scan.TailRows = new GraftV2Scan.TailRows)
+    tails: GraftV2Scan.TailRows = new GraftV2Scan.TailRows,
+    raw: Boolean = false)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
     with SupportsPushDownLimit with SupportsPushDownTopN
     with SupportsPushDownAggregates {
 
-  private val fullSchema: StructType =
-    StructType((if (hidden) meta.columns else meta.visibleColumns).map(_.toField))
+  private val fullSchema: StructType = GraftV2Scan.tableSchema(meta, hidden, raw)
   private var requiredSchema: StructType = fullSchema
   private var filters: Array[Filter] = Array.empty
   private var limitN: Option[Int] = None
@@ -1335,7 +1347,7 @@ class GraftScanBuilder(meta: TableMeta,
       limitN, topN,
       Option(options.get("graft.maxBytesPerTrigger"))
         .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes),
-      tails)
+      tails, raw)
   }
 }
 
@@ -1415,7 +1427,8 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     limit: Option[Int] = None,
     topN: Option[(Int, Boolean, Int)] = None,
     maxBytesPerTrigger: Option[Long] = None,
-    tails: GraftV2Scan.TailRows = new GraftV2Scan.TailRows) extends Scan with Batch
+    tails: GraftV2Scan.TailRows = new GraftV2Scan.TailRows,
+    raw: Boolean = false) extends Scan with Batch
     with SupportsReportPartitioning with SupportsRuntimeFiltering
     with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -1438,7 +1451,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
   // so Spark reuses an exchange over one for the other: a plan that
   // broadcasts one frame twice broadcasts it once.
   private def shape = (meta, requiredSchema, filters.toSeq, runtimeFilters.toSeq,
-    limit, topN, startingVersion, maxVersionsPerTrigger, maxBytesPerTrigger)
+    limit, topN, startingVersion, maxVersionsPerTrigger, maxBytesPerTrigger, raw)
   override def equals(o: Any): Boolean = o match {
     case s: GraftV2Scan => (s eq this) || shape == s.shape
     case _ => false
@@ -1699,7 +1712,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     * the groups, the scan sub-splits routes by size instead (the
     * reference's splitSizeBytes posture, KuduScanToken.java:439-467). */
   private def keyGrouped: Option[Seq[graft.catalog.HashComponent]] =
-    GraftV2Scan.keyGroupedComponents(meta).filter(_ =>
+    GraftV2Scan.keyGroupedComponents(meta).filter(_ => !raw &&
       spark.conf.get("spark.sql.sources.v2.bucketing.enabled", "false").toBoolean)
 
   /** Per-PARTITION ordering report (SupportsReportOrdering): when every
@@ -1724,7 +1737,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
   override def outputOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
-    if (meta.deltaFiles.nonEmpty || meta.clusterBy.exists(_.nonEmpty))
+    if (raw || meta.deltaFiles.nonEmpty || meta.clusterBy.exists(_.nonEmpty))
       return Array.empty
     // SPJ group COALESCING breaks per-partition order invisibly: with
     // compatible-transforms (bucket(8) joins bucket(4)) Spark merges
@@ -2442,6 +2455,14 @@ object GraftV2Scan {
           spark, phys, phys, Array.empty), project, keep)
       }.toArray)
   }
+
+  /** The columns a scan of `meta` offers: the visible ones, every one
+    * with `hidden`, and for a `raw` read every one nullable, then the op
+    * and seq columns (null in a base file). */
+  def tableSchema(meta: TableMeta, hidden: Boolean, raw: Boolean): StructType =
+    if (raw) StructType((meta.columns.map(_.toField) ++ OpSeqFields)
+      .map(_.copy(nullable = true)))
+    else StructType((if (hidden) meta.columns else meta.visibleColumns).map(_.toField))
 
   /** The op and seq columns every delta file carries after its data. */
   private[v2] val OpSeqFields = Seq(

@@ -34,16 +34,6 @@ object GraftStreaming {
     upsertSink(stream, table).start()
 
   /**
-   * Change-log stream of a graft table: a file stream over the table's delta
-   * commit directories. New mutation commits (upsert/update/delete/insert
-   * deltas) appear as new files and are emitted incrementally — the
-   * streaming equivalent of repeated diff scans. Base-only commits
-   * (initial load, compaction) do not re-emit rows, matching diff-scan
-   * semantics (logical changes only).
-   *
-   * Schema: all physical table columns (nullable) + `_graft_op` + `_graft_seq`.
-   */
-  /**
    * Continuous replication (E6, java/kudu-replication): tails the source's
    * change stream and applies each micro-batch op-aware to the destination —
    * upserts replayed as upserts, delete tombstones as ignore-deletes.
@@ -55,10 +45,6 @@ object GraftStreaming {
     changeStream(spark, src).writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // physical → logical names for the destination API
-        val logical = batch.select(
-          m.columns.map(c => batch(c.physName).as(c.name)) ++
-            Seq(batch(GraftTable.OpCol), batch(GraftTable.SeqCol)): _*)
         // One micro-batch can span MANY committed versions (the source
         // batches up to maxVersionsPerTrigger commits), so a key may carry
         // several mutations here. Reduce to latest-per-key by commit seq
@@ -69,7 +55,7 @@ object GraftStreaming {
         import org.apache.spark.sql.functions.{col, row_number}
         val w = Window.partitionBy(m.keyCols.map(col): _*)
           .orderBy(col(GraftTable.SeqCol).desc, col(GraftTable.OpCol).desc)
-        val latest = logical.withColumn("_graft_rn", row_number().over(w))
+        val latest = batch.withColumn("_graft_rn", row_number().over(w))
           .filter(col("_graft_rn") === 1).drop("_graft_rn", GraftTable.SeqCol)
         val ups = latest.filter(latest(GraftTable.OpCol) === GraftTable.OpUpsert)
           .drop(GraftTable.OpCol)
@@ -81,13 +67,27 @@ object GraftStreaming {
       .start()
   }
 
+  /**
+   * Change-log stream of a graft table ([[GraftChangeSource]]): each new
+   * mutation commit's delta files (upsert/update/delete/insert) are
+   * emitted incrementally — the streaming equivalent of repeated diff
+   * scans. Base-only commits (initial load, compaction) do not re-emit
+   * rows, matching diff-scan semantics (logical changes only).
+   *
+   * Schema: [[changeSchema]].
+   */
   def changeStream(spark: SparkSession, table: GraftTable): DataFrame =
     spark.readStream.format("graft").option("path", table.location).load()
 
-  /** The change feed's schema: all physical columns (nullable) + op + seq. */
+  /** The change feed's schema: every table column by its current logical
+    * name (nullable; the names [[GraftTable.changesSince]] uses — a
+    * never-altered table's physical names are the same), then op and seq.
+    * A row from a file written before an ALTER reads under it like any
+    * table read: a renamed column by position, a widened one cast, an
+    * added one at its read default. */
   def changeSchema(m: graft.catalog.TableMeta): StructType = {
     val fields = m.columns.map(c =>
-      StructField(c.physName, c.dataType, nullable = true)) ++ Seq(
+      StructField(c.name, c.dataType, nullable = true)) ++ Seq(
       StructField(GraftTable.OpCol, StringType, nullable = false),
       StructField(GraftTable.SeqCol, LongType, nullable = false))
     StructType(fields)
@@ -106,7 +106,9 @@ object GraftStreaming {
  * ([[graft.table.GraftTable.committedDeltas]]) — a minor fold re-emits
  * nothing (logical changes only, diff-scan semantics). A fresh stream
  * starts from version 0: the full committed delta history (initial-load
- * base files are not deltas).
+ * base files are not deltas). Each batch reads its delta files through the
+ * V2 scan's raw read ([[GraftTable.readRaw]]), remapped to the current
+ * schema.
  */
 class GraftChangeSource(spark: SparkSession, location: String,
     maxVersionsPerTrigger: Int = 64)
@@ -145,16 +147,14 @@ class GraftChangeSource(spark: SparkSession, location: String,
     val v0 = start.map(versionOf).getOrElse(0L)
     val v1 = versionOf(end)
     planned = math.max(planned, v1)
-    val paths = (v0 + 1 to v1).flatMap { v =>
+    val files = (v0 + 1 to v1).flatMap { v =>
       // each version's own delta files are the ones stamped seq == v
-      graft.table.GraftTable.committedDeltas(TableMeta.read(location, v), v)
-        .map(_.path)
+      GraftTable.committedDeltas(TableMeta.read(location, v), v)
     }
-    val s = schema
-    val batch =
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], s)
-      else spark.read.schema(s).parquet(paths: _*)
+    // the raw read's columns are the change schema's
+    val m = TableMeta.readCurrent(location)
+    val s = GraftStreaming.changeSchema(m)
+    val batch = GraftTable.readRaw(spark, m, files)
     // a V1 Source must hand back a streaming-tagged DataFrame; the rows
     // stay on the executors (toRdd is the lazy executed plan)
     org.apache.spark.sql.GraftSqlBridge.internalCreateStreamingDataFrame(

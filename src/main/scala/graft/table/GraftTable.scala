@@ -118,7 +118,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * hash columns prune bucket files, range filters prune range
     * partitions, per-file zone maps and key bounds prune the rest
     * (SURVEY.md §4) — and then applies to rows, each filter converted by
-    * [[graft.sources.GraftRelation.toColumn]]; a filter that does not
+    * [[GraftTable.toColumn]]; a filter that does not
     * convert fails loudly. Delta files prune by their recorded first-key
     * bounds too (delta stats, tablet/deltafile.h): a delta file whose
     * interval cannot meet the predicate holds no delta for any row that
@@ -131,7 +131,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       version: Option[Long] = None,
       assertPrune: Boolean = false): DataFrame = {
     val m = version.map(readVersion).getOrElse(meta)
-    val conds = filters.map(f => graft.sources.GraftRelation.toColumn(f)
+    val conds = filters.map(f => GraftTable.toColumn(f)
       .getOrElse(throw new IllegalArgumentException(
         s"scanPruned cannot apply filter $f")))
     val kept = prunedTo(m, filters)
@@ -306,11 +306,12 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
 
   /** Latest delta state per key (all table columns + the op/seq columns),
     * after drop-range masking — the per-key winner the delta folds write
-    * and the spill overlay routes. The V2 scan's broadcast tail reads its
-    * delta files on the driver instead ([[generationRead]] applies the
-    * same mask) and folds them with MorOverlay.latestPerKey. */
+    * and the spill overlay routes, folded in a Spark job over the raw read
+    * of `deltaFiles` ([[GraftTable.readRaw]]). The V2 scan's broadcast
+    * tail reads its delta files on the driver instead ([[generationRead]]
+    * applies the same mask) and folds them with MorOverlay.latestPerKey. */
   private[graft] def latestDeltas(m: TableMeta, deltaFiles: Seq[DataFileMeta]): DataFrame = {
-    val deltas = readFileGroup(m, deltaFiles, delta = true)
+    val deltas = readRaw(spark, m, deltaFiles)
     latestOf(m, droppedRows(m, deltas = true).fold(deltas)(d => deltas.filter(!d)),
       deltaFiles)
   }
@@ -343,51 +344,6 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
       (GraftTable.deltaBytes(files) + GraftTable.CdcFoldTargetBytes - 1) /
         GraftTable.CdcFoldTargetBytes)).toInt
-
-  /** Reads delta files (or, for `compactTablet`, one tablet's base files)
-    * as a DataFrame, remapping physical→current logical names per schema
-    * generation (GetMappedReadProjection analog, common/schema.cc) and
-    * filling later-added columns with their defaults. Table reads go
-    * through the V2 scan instead, which applies the same remap per file
-    * ([[generationRead]]). */
-  private def readFileGroup(m: TableMeta, files: Seq[DataFileMeta], delta: Boolean): DataFrame = {
-    if (files.isEmpty) {
-      val s = if (delta) deltaStruct(m) else m.schema
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    }
-    val groups = files.groupBy(_.colIds)
-    val dfs = groups.map { case (colIds, fs) =>
-      val present = colIds.toSet
-      // Provide the physical schema instead of letting the parquet source
-      // infer it: inference runs a footer-reading Spark JOB at DataFrame
-      // CONSTRUCTION time — one per readFileGroup call, i.e. per scan plan,
-      // per MOR branch, per micro-batch replan. The physical schema is
-      // fully determined by the manifest already: every committed file
-      // carries exactly the physNames of the column ids it records (the
-      // writer casts to the declared type before writing; register derives
-      // the ColumnMeta FROM the footer; prior generations keep their
-      // recorded type), so the provided schema matches the footer
-      // field-for-field and the job disappears. At 100 TB the same call
-      // otherwise pays a driver-side footer read per plan on top of the
-      // job-scheduling floor.
-      val physFields = m.columns.flatMap(c =>
-        physGenOf(c, present).map { case (n, dt) => StructField(n, dt) })
-      val extraFields =
-        if (delta) Seq(StructField(OpCol, StringType), StructField(SeqCol, LongType))
-        else Nil
-      val raw = spark.read.schema(StructType(physFields ++ extraFields))
-        .parquet(fs.map(_.path): _*)
-      val dataCols = m.columns.map { c =>
-        physGenOf(c, present) match {
-          case Some((n, _)) => col(n).cast(c.dataType).as(c.name)
-          case None         => defaultLit(c).as(c.name)
-        }
-      }
-      val extra = if (delta) Seq(col(OpCol), col(SeqCol)) else Nil
-      raw.select(dataCols ++ extra: _*)
-    }
-    dfs.reduce(_ unionByName _)
-  }
 
   /** The physical (name, type) under which column `c` appears in a file
     * group carrying `present` column ids: the current generation, or — for
@@ -439,14 +395,15 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * `required` field is never reported: it is the stronger guarantee, and
     * registered files keep their own repetition (every engine writer
     * writes every field optional, whatever the column's declared
-    * nullability). [[readFileGroup]] reads every committed file under
-    * the PHYSICAL schema the manifest implies — sound for every engine writer
-    * (the writer casts before writing, register derives ColumnMeta FROM
-    * the footer) — so a foreign or hand-edited file whose footer
-    * disagrees would otherwise surface as an opaque vectorized-reader
-    * type error (or silent nulls) at scan time. This names the file and
-    * field instead. One driver-side footer read per file: diagnostic,
-    * not a scan-path cost. */
+    * nullability). The V2 scan's readers (GraftV2Scan.directReader and
+    * generationReader, behind every read including [[GraftTable.readRaw]])
+    * read every committed file under the PHYSICAL schema the manifest
+    * implies — sound for every engine writer (the writer casts before
+    * writing, register derives ColumnMeta FROM the footer) — so a foreign
+    * or hand-edited file whose footer disagrees would otherwise surface as
+    * an opaque vectorized-reader type error (or silent nulls) at scan
+    * time. This names the file and field instead. One driver-side footer
+    * read per file: diagnostic, not a scan-path cost. */
   def verifyFileSchemas(): Seq[String] = {
     val m = meta
     val mismatches = scala.collection.mutable.ArrayBuffer[String]()
@@ -553,7 +510,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * file above v1 may also carry older rows, which the row-level seq
     * filter drops. */
   private def windowDeltas(m2: TableMeta, inRange: Seq[DataFileMeta], v1: Long): DataFrame =
-    readFileGroup(m2, inRange, delta = true).filter(col(SeqCol) > lit(v1))
+    readRaw(spark, m2, inRange).filter(col(SeqCol) > lit(v1))
 
   /** Manifest-derived size in bytes of the CDC window `(v1, v2]` when it
     * changed the table through delta files alone; None when the window
@@ -1349,11 +1306,16 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
            catch { case _: Exception => false }) // unreadable: keep, fsck's problem
       }
       if (prefix.isEmpty) return Nil
+      // the files of version v's manifest; none when a concurrent expiry
+      // already deleted it (those files were that expiry's to reclaim)
+      def filesOf(v: Long): Seq[String] =
+        try {
+          val vm = TableMeta.read(location, v)
+          (vm.baseFiles ++ vm.deltaFiles).map(_.path)
+        } catch { case _: java.nio.file.NoSuchFileException => Nil }
       val survivors = onDisk.filterNot(prefix.contains)
-      val referenced = survivors.flatMap { v =>
-        val vm = TableMeta.read(location, v)
-        (vm.baseFiles ++ vm.deltaFiles).map(f => Paths.get(f.path).normalize.toString)
-      }.toSet ++
+      val referenced = survivors.flatMap(filesOf)
+        .map(p => Paths.get(p).normalize.toString).toSet ++
         // a fork()ed child reads the PARENT's files by path: every file any
         // of a live child's manifests still references must survive the
         // parent's retention (the child compacting itself self-contained —
@@ -1369,10 +1331,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       // shared with a fork()ed table live outside `location` and must
       // survive this table's retention decisions.
       val ownRoot = Paths.get(location).normalize.toString + "/"
-      val deletable = prefix.flatMap { v =>
-        val vm = TableMeta.read(location, v)
-        (vm.baseFiles ++ vm.deltaFiles).map(_.path)
-      }.distinct
+      val deletable = prefix.flatMap(filesOf).distinct
         .filter(p => Paths.get(p).normalize.toString.startsWith(ownRoot))
         .filterNot(p => referenced.contains(Paths.get(p).normalize.toString))
       // No-op when nothing is reclaimable and only ONE manifest would be
@@ -1676,7 +1635,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val m = meta
     require(m.hash.nonEmpty || m.range.isDefined,
       s"${m.name} has no partitioning — use compact()")
-    val deltas = readFileGroup(m, m.deltaFiles, delta = true)
+    val deltas = readRaw(spark, m, m.deltaFiles)
     val coords = ArrayBuffer[Column]()
     if (m.hash.nonEmpty) coords += bucketExpr(m, col).as("bucket")
     m.range.foreach(r => coords += rangeKeyExprM(m, r, col).as("range_key"))
@@ -1749,9 +1708,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       bucket.forall(b => f.bucket.forall(_ == b)) &&
         rangeKey.forall(rk => f.rangeKey.forall(v => v == rk || v == "__null"))
     val (touch, untouched) = m.deltaFiles.partition(mayContain)
-    val deltas = readFileGroup(m, touch, delta = true)
+    val deltas = readRaw(spark, m, touch)
     val dLatest = latestOf(m, deltas.filter(member), touch)
-    val live = readFileGroup(m, inTablet, delta = false)
+    val live = readRaw(spark, m, inTablet).drop(OpCol, SeqCol)
       .join(dLatest.select(m.keyCols.map(col): _*), m.keyCols, "left_anti")
       .unionByName(dLatest.filter(col(OpCol) =!= lit(OpDelete))
         .select(m.columns.map(c => col(c.name).cast(c.dataType).as(c.name)): _*))
@@ -2928,6 +2887,51 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
 object GraftTable {
   /** Hidden key column backing non-unique PKs (Schema.java:44-48). */
   val AutoIncName = "auto_incrementing_id"
+
+  /** The raw read: data files `files` of table `m` as stored, with no
+    * overlay and no drop mask — every column of `m` by its current name
+    * (hidden included; a renamed column moves by position, a widened one
+    * is cast, an added one reads its read default), then `_graft_op` and
+    * `_graft_seq` (null in a base file). It is the V2 scan's raw read
+    * (GraftV2Table `raw`), so the job-path folds, the CDC job path, the
+    * tablet compaction and the change stream read files through the same
+    * per-generation readers as every table read. */
+  private[graft] def readRaw(spark: SparkSession, m: TableMeta,
+      files: Seq[DataFileMeta]): DataFrame =
+    GraftSqlBridge.ofRows(spark,
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        new graft.sources.v2.GraftV2Table(m.copy(baseFiles = files, deltaFiles = Nil,
+          droppedRanges = None), raw = true), None, None))
+
+  /** Spark Filter → Column, for the subset the engine evaluates itself:
+    * the comparison/IN/NULL/prefix conjunctions, plus the Or/Not/contains
+    * surface the SQL DELETE path wants (metadata pruning still only
+    * consumes the conjunctive shapes and ignores the rest). */
+  def toColumn(f: org.apache.spark.sql.sources.Filter): Option[Column] = {
+    import org.apache.spark.sql.sources._
+    f match {
+      case EqualTo(a, v) => Some(col(a) === v)
+      case EqualNullSafe(a, v) => Some(col(a) <=> v)
+      case GreaterThan(a, v) => Some(col(a) > v)
+      case GreaterThanOrEqual(a, v) => Some(col(a) >= v)
+      case LessThan(a, v) => Some(col(a) < v)
+      case LessThanOrEqual(a, v) => Some(col(a) <= v)
+      case In(a, vs) => Some(col(a).isin(vs.toIndexedSeq: _*))
+      case IsNull(a) => Some(col(a).isNull)
+      case IsNotNull(a) => Some(col(a).isNotNull)
+      case StringStartsWith(a, p) => Some(col(a).startsWith(p))
+      case StringEndsWith(a, s) => Some(col(a).endsWith(s))
+      case StringContains(a, s) => Some(col(a).contains(s))
+      case AlwaysTrue() => Some(lit(true))
+      case AlwaysFalse() => Some(lit(false))
+      case And(l, r) =>
+        for (lc <- toColumn(l); rc <- toColumn(r)) yield lc && rc
+      case Or(l, r) =>
+        for (lc <- toColumn(l); rc <- toColumn(r)) yield lc || rc
+      case Not(c) => toColumn(c).map(!_)
+      case _ => None
+    }
+  }
 
   /** Supported parquet codecs, by compression strength (resolution order
     * for mixed per-column requests — see [[GraftTable.setColumnCompression]]). */

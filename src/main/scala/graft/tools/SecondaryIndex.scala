@@ -309,15 +309,12 @@ object SecondaryIndex {
       pinned: Option[(Long, Long)] = None): DataFrame = {
     val src = GraftTable.load(spark, index.properties(SrcLocKey))
     val pkCols = src.meta.keyCols
-    // contract-bounded probe (limit + the require below) over a scan whose
-    // exchanges are byte-sized → one static-planned job instead of one per
-    // AQE stage; this runs at PLAN time for the serving rewrite, so the
-    // job floor here is pure query latency
-    val hits = GraftTable.withStaticPlan(spark, tiny = true) {
-      index.scanPruned(probeFilters, pinned.map(_._1), assertPrune)
-        .select(pkCols.map(col): _*)
-        .limit(maxKeys + 1).collect()
-    }
+    // contract-bounded probe (limit + the require below): a scan, a filter
+    // and a limit, which plan no exchange, so adaptive execution never
+    // applies to it
+    val hits = index.scanPruned(probeFilters, pinned.map(_._1), assertPrune)
+      .select(pkCols.map(col): _*)
+      .limit(maxKeys + 1).collect()
     require(hits.length <= maxKeys,
       s"lookup matched more than $maxKeys rows — not a point read; scan " +
         "the base table instead")
@@ -354,11 +351,9 @@ object SecondaryIndex {
     // thread that farmed it out would.
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
-    // static plans for every probe (bounded, no joins): set ONCE here in
-    // the planning thread — session conf is shared, so the probe futures
-    // inherit it; each future flipping it itself would race the restore
-    val hitArrays = GraftTable.withStaticPlan(spark, tiny = true) {
-      Await.result(
+    // each probe is a scan, a filter and a limit: no exchange, so no
+    // adaptive plan and no session setting the futures would share
+    val hitArrays = Await.result(
       Future.traverse(probes.toList) { case (idx, probeFilters, indexV) =>
         Future(graft.plans.ServingRewrites.guarded {
           val hits = idx.scanPruned(probeFilters, Some(indexV))
@@ -370,7 +365,6 @@ object SecondaryIndex {
           hits
         })
       }, scala.concurrent.duration.Duration.Inf)
-    }
     // dedupe across probes by PK value tuple (a row matching two disjuncts
     // must fetch once); LinkedHashMap keeps first-seen order deterministic
     val seen = scala.collection.mutable.LinkedHashMap[Seq[Any], org.apache.spark.sql.Row]()
@@ -481,13 +475,11 @@ object SecondaryIndex {
     val scan0 = index.scanPruned(
       if (where.nonEmpty) where else topCut(index, k, desc, pinned.map(_._1)),
       pinned.map(_._1))
-    // bounded top-k probe (TakeOrderedAndProject) → one static-planned job
-    val hits = GraftTable.withStaticPlan(spark, tiny = true) {
-      scan0
-        .orderBy(ord +: pkCols.map(col(_).asc): _*)
-        .select(pkCols.map(col): _*)
-        .limit(k).collect()
-    }
+    // bounded top-k probe (TakeOrderedAndProject, no exchange)
+    val hits = scan0
+      .orderBy(ord +: pkCols.map(col(_).asc): _*)
+      .select(pkCols.map(col): _*)
+      .limit(k).collect()
     if (hits.length < k) return None
     Some(fetchByKeys(spark, src, pkCols, hits, pinned.map(_._2)))
   }
@@ -547,9 +539,7 @@ object SecondaryIndex {
     val scan0 = index.scanPruned(
       if (where.nonEmpty) where else topCut(index, k, desc, pinned.map(_._1)),
       pinned.map(_._1))
-    val leadVals = GraftTable.withStaticPlan(spark, tiny = true) {
-      scan0.orderBy(ord).select(col(lead)).limit(k).collect()
-    }
+    val leadVals = scan0.orderBy(ord).select(col(lead)).limit(k).collect()
     if (leadVals.length < k) return None
     val vk = leadVals.last.get(0)
     // pass 2: every entry at-or-better than vk — zone maps prune a
@@ -558,11 +548,9 @@ object SecondaryIndex {
     val candFilters: Seq[org.apache.spark.sql.sources.Filter] =
       (if (desc) org.apache.spark.sql.sources.GreaterThanOrEqual(lead, vk)
        else org.apache.spark.sql.sources.LessThanOrEqual(lead, vk)) +: where
-    val hits = GraftTable.withStaticPlan(spark, tiny = true) {
-      index.scanPruned(candFilters, pinned.map(_._1))
-        .select(pkCols.map(col): _*)
-        .limit(maxKeys + 1).collect()
-    }
+    val hits = index.scanPruned(candFilters, pinned.map(_._1))
+      .select(pkCols.map(col): _*)
+      .limit(maxKeys + 1).collect()
     require(hits.length <= maxKeys,
       s"top-k tie set matched more than $maxKeys rows — not a point read; " +
         "scan the base table instead")

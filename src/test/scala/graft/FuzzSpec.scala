@@ -56,6 +56,37 @@ class FuzzSpec extends AnyFunSuite {
     finally spark.conf.unset("graft.mor.columnar")
   }
 
+  /** The end state read through `spark.read.format("graft")` at the
+    * current version and at one `earlier` recorded version (with the model
+    * state it held): each read equals `scan()` at that version and, under
+    * `stateOf` (which may depend on the version's schema), the model. An
+    * earlier version history GC expired must refuse on both faces. */
+  private def formatReads[A](t: GraftTable, want: A, earlier: Option[(Long, A)],
+      seed: Long)(stateOf: (org.apache.spark.sql.DataFrame, Option[Long]) => A): Unit = {
+    def fmt(v: Option[Long]) = {
+      val r = spark.read.format("graft").option("graft.table.path", t.location)
+      v.fold(r)(x => r.option("graft.snapshotVersion", x.toString))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSet
+    def expired(read: => Any): Boolean = {
+      val e = intercept[Exception](read)
+      Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(x => Option(x.getMessage).exists(_.contains("expired")))
+    }
+    ((None, want) +: earlier.map { case (v, m) => (Some(v), m) }.toSeq).foreach {
+      case (v, m) =>
+        val tag = s"format('graft') at ${v.fold("the current version")(x => s"v$x")} seed=$seed"
+        if (v.exists(_ < t.meta.historyFloor))
+          assert(expired(fmt(v).load().collect()) && expired(t.scan(v).collect()),
+            s"$tag must refuse below the history floor")
+        else {
+          val df = fmt(v).load()
+          assert(rows(df) == rows(t.scan(v)), s"$tag disagrees with scan()")
+          assert(stateOf(df, v) == m, s"$tag disagrees with the model")
+        }
+    }
+  }
+
   private def runCase(seed: Long, nOps: Int,
       hash: Seq[HashComponent] = Seq(HashComponent(Seq("k"), 2))): Unit = {
     val rnd = new Random(seed)
@@ -66,11 +97,13 @@ class FuzzSpec extends AnyFunSuite {
     val model = mutable.Map[Int, Option[Int]]()
     // recorded snapshots: version -> model copy
     val snaps = mutable.ArrayBuffer[(Long, Map[Int, Option[Int]])]()
+    var mid: Option[(Long, Map[Int, Option[Int]])] = None // the format reads' earlier version
 
     def df(k: Int, v: Int) = Seq((k, v)).toDF("k", "v")
     def keysDf(k: Int) = Seq(k).toDF("k")
 
     for (i <- 0 until nOps) {
+      if (i == nOps / 2) mid = Some((t.currentVersion, model.toMap))
       val k = rnd.nextInt(Keyspace)
       val v = rnd.nextInt(1000)
       rnd.nextInt(10) match {
@@ -128,8 +161,9 @@ class FuzzSpec extends AnyFunSuite {
 
     assert(stateOf(t.scan()) == model.toMap, s"final state mismatch seed=$seed")
     assertFooters(t, seed)
-    // the DSv2 catalog's merge-on-read overlay must agree with the DSv1
-    // scan on the same random end state (per-bucket delta routing)
+    formatReads(t, model.toMap, mid, seed)((d, _) => stateOf(d))
+    // the DSv2 catalog's merge-on-read overlay must agree with the
+    // engine scan on the same random end state (per-bucket delta routing)
     val whName = java.nio.file.Paths.get(loc).getFileName.toString
     val catName = s"gfuzz$seed"
     spark.conf.set(s"spark.sql.catalog.$catName",
@@ -273,7 +307,9 @@ class FuzzSpec extends AnyFunSuite {
       java.nio.file.Paths.get(loc).getParent.toString)
     val tbl = s"$cat.`$whName`"
     val model = mutable.Map[Int, Int]()
-    for (_ <- 0 until nOps) {
+    var mid: Option[(Long, Map[Int, Int])] = None
+    for (i <- 0 until nOps) {
+      if (i == nOps / 2) mid = Some((t.currentVersion, model.toMap))
       val k = rnd.nextInt(Keyspace)
       val v = rnd.nextInt(1000)
       rnd.nextInt(6) match {
@@ -321,6 +357,7 @@ class FuzzSpec extends AnyFunSuite {
       df.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     assert(stateOf(t.scan()) == model.toMap, s"engine state mismatch seed=$seed")
     assert(stateOf(spark.table(tbl)) == model.toMap, s"V2 state mismatch seed=$seed")
+    formatReads(t, model.toMap, mid, seed)((d, _) => stateOf(d))
   }
 
   test("random SQL DML sequences match the model (seed 3)") { runSqlDmlCase(3L, 24) }
@@ -380,6 +417,8 @@ class FuzzSpec extends AnyFunSuite {
     }
     assert(t.scan().collect().map(r => r.getInt(0) -> r.getInt(1)).toMap == model.toMap,
       s"final state mismatch seed=$seed")
+    formatReads(t, model.toMap, Some(snaps(snaps.size / 2)), seed)((d, _) =>
+      d.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
     val windows = (folds.toSeq.map(j => (math.max(0, j - 1 - rnd.nextInt(4)), j)) ++
       Seq.fill(6) {
         val i = rnd.nextInt(snaps.size - 1)
@@ -427,10 +466,12 @@ class FuzzSpec extends AnyFunSuite {
     val model = mutable.Map[Int, (Int, Int)]()
     val uncovered = mutable.Set[Int]()
     val snaps = mutable.ArrayBuffer[(Long, Map[Int, (Int, Int)])]()
+    var mid: Option[(Long, Map[Int, (Int, Int)])] = None
 
     def df(k: Int, y: Int, v: Int) = Seq((k, ts(y), v)).toDF("k", "d", "v")
 
-    for (_ <- 0 until nOps) {
+    for (i <- 0 until nOps) {
+      if (i == nOps / 2) mid = Some((t.currentVersion, model.toMap))
       val k = rnd.nextInt(Keyspace)
       val y = years(rnd.nextInt(years.length))
       val v = rnd.nextInt(1000)
@@ -476,6 +517,7 @@ class FuzzSpec extends AnyFunSuite {
 
     assert(stateOf(t.scan()) == model.toMap, s"final state mismatch seed=$seed")
     assertFooters(t, seed)
+    formatReads(t, model.toMap, mid, seed)((d, _) => stateOf(d))
     sqlReads(loc, s"gfuzzr$seed") { (df, tag) =>
       assert(stateOf(df) == model.toMap, s"$tag state mismatch seed=$seed")
     }
@@ -518,6 +560,11 @@ class FuzzSpec extends AnyFunSuite {
     // k -> (column id -> value); column ids are the stable identity, names churn
     val rows = mutable.Map[Int, mutable.Map[Int, Option[Long]]]()
     val snaps = mutable.ArrayBuffer[(Long, List[(Int, String)], Map[Int, Map[Int, Option[Long]]])]()
+    // column id -> the read default it was added with
+    val defaults = mutable.Map[Int, Option[Long]](0 -> None)
+    def snapshot() = (t.currentVersion, cols.map(c => (c.id, c.name)).toList,
+      rows.map { case (kk, m) => kk -> m.toMap }.toMap)
+    var mid: Option[(Long, List[(Int, String)], Map[Int, Map[Int, Option[Long]]])] = None
 
     def upsert(k: Int): Unit = {
       val vals = cols.map(c => c -> rnd.nextInt(1000).toLong).toSeq
@@ -530,7 +577,8 @@ class FuzzSpec extends AnyFunSuite {
       vals.foreach { case (c, v) => m(c.id) = Some(v) }
     }
 
-    for (_ <- 0 until nOps) {
+    for (i <- 0 until nOps) {
+      if (i == nOps / 2) mid = Some(snapshot())
       val k = rnd.nextInt(Keyspace)
       rnd.nextInt(10) match {
         case 0 | 1 | 2 => upsert(k)
@@ -553,6 +601,7 @@ class FuzzSpec extends AnyFunSuite {
           val name = s"c$nextId"
           t.addColumn(name, IntegerType, default = dflt.map(_.toString))
           cols += MCol(nextId, name, 0, dflt)
+          defaults(nextId) = dflt
           // existing rows read the ADD-time default for the new column
           rows.values.foreach(m => m(nextId) = dflt)
           nextId += 1
@@ -562,9 +611,7 @@ class FuzzSpec extends AnyFunSuite {
             t.dropColumn(c.name)
           }
         case 8 => t.compact()
-        case 9 => snaps += ((t.currentVersion,
-          cols.map(c => (c.id, c.name)).toList,
-          rows.map { case (kk, m) => kk -> m.toMap }.toMap))
+        case 9 => snaps += snapshot()
       }
     }
 
@@ -576,21 +623,28 @@ class FuzzSpec extends AnyFunSuite {
         case other => fail(s"unexpected value type: $other")
       })
 
-    def checkState(df: org.apache.spark.sql.DataFrame,
-        colsAt: List[(Int, String)],
-        exp: Map[Int, Map[Int, Option[Long]]], tag: String): Unit = {
+    /** The rows of `df` by key, each as column id -> value over `colsAt`. */
+    def stateOf(df: org.apache.spark.sql.DataFrame,
+        colsAt: List[(Int, String)]): Map[Int, Map[Int, Option[Long]]] = {
       val schema = df.schema
-      val got = df.collect().map { r =>
+      df.collect().map { r =>
         val kk = r.getInt(schema.fieldIndex("k"))
         kk -> colsAt.map { case (cid, name) =>
           cid -> toLongOpt(r, schema.fieldIndex(name))
         }.toMap
       }.toMap
-      val want = exp.map { case (kk, m) =>
-        kk -> colsAt.map { case (cid, _) => cid -> m.getOrElse(cid, None) }.toMap
-      }
-      assert(got == want, s"$tag mismatch seed=$seed")
     }
+    /** The model rows `exp` over `colsAt`; a column the rows never held
+      * reads `absent` (its read default, or null). */
+    def project(exp: Map[Int, Map[Int, Option[Long]]], colsAt: List[(Int, String)],
+        absent: Int => Option[Long] = _ => None): Map[Int, Map[Int, Option[Long]]] =
+      exp.map { case (kk, m) =>
+        kk -> colsAt.map { case (cid, _) => cid -> m.getOrElse(cid, absent(cid)) }.toMap
+      }
+    def checkState(df: org.apache.spark.sql.DataFrame,
+        colsAt: List[(Int, String)],
+        exp: Map[Int, Map[Int, Option[Long]]], tag: String): Unit =
+      assert(stateOf(df, colsAt) == project(exp, colsAt), s"$tag mismatch seed=$seed")
 
     checkState(t.scan(), cols.map(c => (c.id, c.name)).toList,
       rows.map { case (kk, m) => kk -> m.toMap }.toMap, "final")
@@ -602,6 +656,30 @@ class FuzzSpec extends AnyFunSuite {
     snaps.foreach { case (ver, colsAt, exp) =>
       checkState(t.scan(Some(ver)), colsAt, exp, s"snapshot v$ver")
     }
+    val (_, colsNow, rowsNow) = snapshot()
+    val colsOf = (mid.toSeq :+ snapshot()).map { case (v, c, _) => v -> c }.toMap
+    formatReads(t, project(rowsNow, colsNow), mid.map { case (v, c, r) => v -> project(r, c) },
+      seed)((d, v) => stateOf(d, colsOf(v.getOrElse(t.currentVersion))))
+    // CDC windows across the ALTERs, within the driver bound and past it
+    // (the job path's raw read): changesSince applied to the older
+    // snapshot, seen in the newer schema, gives the newer one
+    def windows(bound: String): Unit = snaps.sliding(2).filter(_.size == 2).foreach { pair =>
+      val (va, colsA, ma) = pair(0)
+      val (vb, colsB, mb) = pair(1)
+      val ch = t.changesSince(va, vb)
+      val schema = ch.schema
+      val applied = ch.collect().foldLeft(project(ma, colsB, defaults)) { (acc, r) =>
+        val kk = r.getInt(schema.fieldIndex("k"))
+        if (r.getBoolean(schema.fieldIndex("_deleted"))) acc - kk
+        else acc + (kk -> colsB.map { case (cid, name) =>
+          cid -> toLongOpt(r, schema.fieldIndex(name)) }.toMap)
+      }
+      assert(applied == project(mb, colsB), s"changesSince v$va->v$vb ($bound) seed=$seed")
+    }
+    windows("default bound")
+    spark.conf.set("graft.mor.broadcastBytes", "1024")
+    try windows("1KB bound")
+    finally spark.conf.unset("graft.mor.broadcastBytes")
   }
 
   test("random ops with schema evolution match the model (seed 31)") { runSchemaCase(31L, 50) }
@@ -635,18 +713,21 @@ class FuzzSpec extends AnyFunSuite {
     var nextCol = 1
     // model: k -> (v, extraCol -> value)
     val model = mutable.Map[Int, (Int, Map[String, Option[Int]])]()
-    def stateOf(df: org.apache.spark.sql.DataFrame): Map[Int, (Int, Map[String, Option[Int]])] = {
+    def stateOf(df: org.apache.spark.sql.DataFrame,
+        extras: Seq[String] = extraCols): Map[Int, (Int, Map[String, Option[Int]])] = {
       val schema = df.schema
       df.collect().map { r =>
         r.getInt(schema.fieldIndex("k")) -> (r.getInt(schema.fieldIndex("v")),
-          extraCols.map { c =>
+          extras.map { c =>
             val i = schema.fieldIndex(c)
             c -> (if (r.isNullAt(i)) None else Some(r.getInt(i)))
           }.toMap)
       }.toMap
     }
+    var mid: Option[(Long, Vector[String], Map[Int, (Int, Map[String, Option[Int]])])] = None
 
-    for (_ <- 0 until nOps) {
+    for (i <- 0 until nOps) {
+      if (i == nOps / 2) mid = Some((t.currentVersion, extraCols, model.toMap))
       val k = rnd.nextInt(Keyspace)
       val v = rnd.nextInt(1000)
       rnd.nextInt(10) match {
@@ -712,6 +793,8 @@ class FuzzSpec extends AnyFunSuite {
     val want = model.toMap
     assert(stateOf(GraftTable.load(spark, loc).scan()) == want,
       s"engine state mismatch seed=$seed")
+    formatReads(t, want, mid.map { case (v, _, m) => v -> m }, seed)((d, v) =>
+      stateOf(d, v.fold(extraCols)(_ => mid.get._2)))
     // V2 read through the FORCED spill overlay on the final (post-ALTER) schema
     spark.conf.set("graft.mor.broadcastBytes", "1")
     try assert(stateOf(spark.table(tbl)) == want, s"V2 spill state mismatch seed=$seed")
@@ -786,7 +869,9 @@ class FuzzSpec extends AnyFunSuite {
     def df(k: Int, v: Int) = Seq((k, v)).toDF("k", "v")
     val dataDir = java.nio.file.Paths.get(loc, "data")
     val metaDir = graft.catalog.TableMeta.metaDir(loc)
+    var mid: Option[(Long, Map[Int, Int])] = None
     for (i <- 0 until nOps) {
+      if (i == nOps / 2) mid = Some((t.currentVersion, model.toMap))
       val k = rnd.nextInt(Keyspace); val v = rnd.nextInt(1000)
       rnd.nextInt(6) match {
         case 0 | 1 | 2 => t.upsert(df(k, v)); model(k) = v
@@ -817,6 +902,8 @@ class FuzzSpec extends AnyFunSuite {
     }
     val got = t.scan().collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
     assert(got == model.toMap, s"final state mismatch seed=$seed")
+    formatReads(t, model.toMap, mid, seed)((d, _) =>
+      d.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
     assert(graft.tools.GraftTools.fsck(loc).isEmpty)
   }
 
@@ -848,8 +935,11 @@ class FuzzSpec extends AnyFunSuite {
     val model = mutable.Map[Int, Int]()
     def df(k: Int, v: Int) = Seq((k, v)).toDF("k", "v")
     val dataDir = java.nio.file.Paths.get(loc, "data")
+    var mid: Option[(Long, Map[Int, Int])] = None
     try {
       for (i <- 0 until nOps) {
+        // maintenance ticks commit between ops, but never change the rows
+        if (i == nOps / 2) mid = Some((t.currentVersion, model.toMap))
         val k = rnd.nextInt(Keyspace); val v = rnd.nextInt(1000)
         rnd.nextInt(6) match {
           case 0 | 1 | 2 => t.upsert(df(k, v)); model(k) = v
@@ -893,6 +983,8 @@ class FuzzSpec extends AnyFunSuite {
     val v2 = spark.table(s"gsf$seed.`$whName`").collect()
       .map(r => r.getInt(0) -> r.getInt(1)).toMap
     assert(v2 == model.toMap, s"V2 overlay mismatch seed=$seed")
+    formatReads(t, model.toMap, mid, seed)((d, _) =>
+      d.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
     graft.tools.GraftTools.fsckRepair(loc, graceMs = 0)
     assert(graft.tools.GraftTools.fsck(loc).isEmpty)
   }
@@ -930,6 +1022,7 @@ class FuzzSpec extends AnyFunSuite {
     val model = mutable.Map[(String, Long), Long]()
     init.collect().foreach(r =>
       model((r.getString(0), r.getLong(1))) = r.getLong(2))
+    val initState = model.toMap
     val rollup = graft.tools.MaterializedRollup.build(spark, base, Seq("g"),
       Seq("n" -> "count(*)", "sv" -> "sum(v)", "mx" -> "max(k)"),
       s"$root/roll", buckets = 2)
@@ -1027,6 +1120,8 @@ class FuzzSpec extends AnyFunSuite {
     val got = base.scan().collect()
       .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got == model.toMap, s"base state mismatch seed=$seed")
+    formatReads(base, model.toMap, Some((1L, initState)), seed)((d, _) =>
+      d.collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap)
     assert(checkOnce().isEmpty, s"drained derived state seed=$seed")
     val rt = GraftTable.load(spark, rollup.location)
     assert(rt.properties(graft.tools.MaterializedRollup.SrcVersionKey).toLong

@@ -400,4 +400,65 @@ class SourcesSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(ops == Map("U" -> 1, "D" -> 1), ops.toString)
   }
+
+  test("streaming: change-stream rows across a widen and an added column read like changesSince") {
+    val loc = tmp("graft-src-cs-alter-")
+    val data = (1 to 4).map(i => (i.toLong, i * 10, s"n$i")).toDF("id", "v", "name")
+    val t = GraftTable.create(spark, loc, "csa", data.schema, Seq("id"),
+      Seq(HashComponent(Seq("id"), 2)), data = Some(data))
+    val v0 = t.currentVersion
+    t.upsert(Seq((1L, 100, "a")).toDF("id", "v", "name"))
+    t.deleteWhere(col("id") === 3)
+    t.widenColumnType("v", org.apache.spark.sql.types.LongType)
+    t.addColumn("w", org.apache.spark.sql.types.IntegerType, default = Some("7"))
+    t.upsert(Seq((2L, 5L, "b", 9)).toDF("id", "v", "name", "w"))
+    // the V1 op-tagged source still serves readStream.format("graft")
+    val cs = graft.streaming.GraftStreaming.changeStream(spark, t)
+    assert(cs.queryExecution.analyzed.getClass.getSimpleName == "StreamingRelation",
+      cs.queryExecution.analyzed.toString)
+    val name = s"cs_alter_${System.nanoTime()}"
+    val q = cs.writeStream.format("memory").queryName(name).outputMode("append").start()
+    try q.processAllAvailable() finally q.stop()
+    val out = spark.table(name)
+    assert(out.columns.toSeq == Seq("id", "v", "name", "w", "_graft_op", "_graft_seq"))
+    val pre = out.filter(col("id") === 1L).collect()
+    assert(pre.length == 1 && pre.head.getAs[Long]("v") == 100L &&
+      pre.head.getAs[Int]("w") == 7 && pre.head.getAs[String]("name") == "a",
+      pre.mkString(", "))
+    // each key's latest streamed image is what changesSince reports
+    val latest = out.collect().groupBy(_.getLong(0)).map { case (k, rs) =>
+      val r = rs.maxBy(_.getAs[Long]("_graft_seq"))
+      k -> (if (r.getAs[String]("_graft_op") == "D") None
+        else Some(Seq(r.get(1), r.get(2), r.get(3))))
+    }
+    def cdc() = t.changesSince(v0, t.currentVersion).collect().map { r =>
+      r.getLong(0) -> (if (r.getAs[Boolean]("_deleted")) None
+        else Some(Seq(r.get(1), r.get(2), r.get(3))))
+    }.toMap
+    assert(latest == Map(1L -> Some(Seq(100L, "a", 7)), 2L -> Some(Seq(5L, "b", 9)),
+      3L -> None), latest.toString)
+    assert(cdc() == latest)
+    spark.conf.set("graft.mor.broadcastBytes", "1")
+    try assert(cdc() == latest)
+    finally spark.conf.unset("graft.mor.broadcastBytes")
+  }
+
+  test("format('graft') reads through the V2 scan: a PK get runs no job") {
+    val (loc, t) = mkTable()
+    t.upsert(Seq((5L, "five", 5)).toDF("id", "name", "grp"))
+    val get = spark.read.format("graft").option("graft.table.path", loc).load()
+      .filter(col("id") === 5L).select("name")
+    val ((jobs, _), rows) = TaggedJobs.count(spark)(get.collect())
+    assert(rows.map(_.getString(0)).toSeq == Seq("five"))
+    assert(jobs == 0, s"$jobs jobs")
+    assert(get.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }.exists(_.isInstanceOf[graft.sources.v2.GraftV2Scan]),
+      get.queryExecution.optimizedPlan.toString)
+    // a location with no table fails the read at load, as before
+    val missing = tmp("graft-src-missing-") + "/none"
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("graft").option("graft.table.path", missing).load())
+    assert(e.getMessage.contains("no graft table"), e.getMessage)
+  }
 }
