@@ -65,20 +65,30 @@ class DefaultSource extends TableProvider with CreatableRelationProvider
 
   override def shortName(): String = "graft"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    table(CaseInsensitiveMap(options.asCaseSensitiveMap.asScala.toMap)) match {
+  // Spark asks one provider for a table's schema and then for the table,
+  // with the same options: getTable hands out the handle inferSchema built,
+  // once (a later request builds a fresh one)
+  private var inferred: Option[(java.util.Map[String, String], Table)] = None
+
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val t = table(options.asCaseSensitiveMap)
+    inferred = Some(options.asCaseSensitiveMap -> t)
+    t match {
       case _: Absent => new StructType() // a save creates the table
-      case t => t.schema()
+      case handle => handle.schema()
     }
+  }
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: java.util.Map[String, String]): Table =
-    table(CaseInsensitiveMap(properties.asScala.toMap))
+    try inferred.filter(_._1 == properties).fold(table(properties))(_._2)
+    finally inferred = None
 
   /** The table at the options' location and snapshot (the current one
     * unless graft.snapshotVersion or graft.snapshotTimestampMs names one).
     * A location with no table yet gets [[Absent]]. */
-  private def table(parameters: Map[String, String]): Table = {
+  private def table(options: java.util.Map[String, String]): Table = {
+    val parameters = CaseInsensitiveMap(options.asScala.toMap)
     val loc = path(parameters)
     if (!GraftTable.exists(loc)) return new Absent(loc)
     val spark = SparkSession.active

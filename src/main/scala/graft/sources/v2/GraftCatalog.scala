@@ -702,7 +702,8 @@ class StagedGraftTable(inner: GraftV2Table, stagedLoc: String,
   * the current schema (a renamed column moves by position, a widened one
   * is cast, an added one reads its read default) with every column and
   * the op and seq columns, stored or null; a raw manifest carries no
-  * delta files and no range drops, so no overlay and no mask applies.
+  * delta files and no range drops, so no overlay and no mask applies,
+  * and its splits pack files by size with no delta route.
   * `microBatch` offers `readStream.table` the V2 stream; the `graft`
   * format's handle declines it, so its streams fall back to the op-tagged
   * V1 change source. */
@@ -1831,6 +1832,11 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     // reported bucket transform), unless the files need one split
     val cutFiles = prunedCutFiles()
     mBasesRead = cutFiles.length
+    if (raw)
+      // no overlay, so no delta route to own: the files pack like a file
+      // source scan's, many small delta files to one task
+      return org.apache.spark.sql.GraftSqlBridge
+        .packedFilePartitions(cutFiles.map(_.path)).toArray
     if (singleSplit(cutFiles))
       return Array(org.apache.spark.sql.GraftSqlBridge.filePartition(
         0, cutFiles.map(_.path), None))
@@ -2240,10 +2246,16 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
           }))
         val tmpDir = spillRoot.resolve(
           s"_morspill_tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-        spillFrame
-          .repartition(col(GraftV2Scan.SpillRouteCol))
-          .write.partitionBy(GraftV2Scan.SpillRouteCol)
-          .mode("overwrite").parquet(tmpDir.toString)
+        // a small tail's spill is one static-planned job, not one per
+        // adaptive stage: a point read (an index probe) that has to build
+        // it pays that job inside its own latency
+        GraftTable.withStaticPlan(spark,
+          GraftTable.deltaBytes(m.deltaFiles) <= GraftTable.staticPlanMaxBytes) {
+          spillFrame
+            .repartition(col(GraftV2Scan.SpillRouteCol))
+            .write.partitionBy(GraftV2Scan.SpillRouteCol)
+            .mode("overwrite").parquet(tmpDir.toString)
+        }
         try java.nio.file.Files.move(tmpDir, spillDir,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         catch {

@@ -1300,21 +1300,22 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         }.foldLeft(Long.MaxValue)(math.min)
       val keep = onDisk.takeRight(math.max(1, retainLast)).toSet + m.version
       val cutoffTs = System.currentTimeMillis() - math.max(0L, olderThanMs)
-      val prefix = onDisk.takeWhile { v =>
-        !keep.contains(v) && v < derivedFloor &&
-          (try TableMeta.read(location, v).timestampMs <= cutoffTs
-           catch { case _: Exception => false }) // unreadable: keep, fsck's problem
-      }
+      // the expired versions with their manifests, each read once
+      val expired = onDisk.iterator
+        .takeWhile(v => !keep.contains(v) && v < derivedFloor)
+        // unreadable: keep, fsck's problem
+        .map(v => v -> scala.util.Try(TableMeta.read(location, v)).toOption)
+        .takeWhile(_._2.exists(_.timestampMs <= cutoffTs))
+        .map { case (v, vm) => v -> vm.get }.toSeq
+      val prefix = expired.map(_._1)
       if (prefix.isEmpty) return Nil
-      // the files of version v's manifest; none when a concurrent expiry
-      // already deleted it (those files were that expiry's to reclaim)
-      def filesOf(v: Long): Seq[String] =
-        try {
-          val vm = TableMeta.read(location, v)
-          (vm.baseFiles ++ vm.deltaFiles).map(_.path)
-        } catch { case _: java.nio.file.NoSuchFileException => Nil }
+      def files(vm: TableMeta): Seq[String] = (vm.baseFiles ++ vm.deltaFiles).map(_.path)
+      // a surviving version a concurrent expiry deleted after the listing
+      // references nothing: its files were that expiry's to reclaim
       val survivors = onDisk.filterNot(prefix.contains)
-      val referenced = survivors.flatMap(filesOf)
+      val referenced = survivors.flatMap(v =>
+        try files(TableMeta.read(location, v))
+        catch { case _: java.nio.file.NoSuchFileException => Nil })
         .map(p => Paths.get(p).normalize.toString).toSet ++
         // a fork()ed child reads the PARENT's files by path: every file any
         // of a live child's manifests still references must survive the
@@ -1331,7 +1332,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       // shared with a fork()ed table live outside `location` and must
       // survive this table's retention decisions.
       val ownRoot = Paths.get(location).normalize.toString + "/"
-      val deletable = prefix.flatMap(filesOf).distinct
+      val deletable = expired.flatMap(e => files(e._2)).distinct
         .filter(p => Paths.get(p).normalize.toString.startsWith(ownRoot))
         .filterNot(p => referenced.contains(Paths.get(p).normalize.toString))
       // No-op when nothing is reclaimable and only ONE manifest would be
@@ -1342,7 +1343,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       if (deletable.isEmpty && prefix.size <= 1) return Nil
       // 1. publish the mark (the only step that can race — guard-protected)
       TableMeta.write(m.copy(version = m.version + 1, timestampMs = now(),
-        operation = "expire_versions", expiredBefore = Some(prefix.max + 1)))
+        operation = "expire_versions",
+        // never below a concurrent expiry's mark: its versions are gone
+        expiredBefore = Some(math.max(prefix.max + 1, m.historyFloor))))
       // 2. drop expired manifests, then exclusively-referenced data files.
       // A crash between 1 and 3 leaves only already-expired residue that a
       // re-run or fsckRepair's orphan sweep finishes.
@@ -2888,14 +2891,10 @@ object GraftTable {
   /** Hidden key column backing non-unique PKs (Schema.java:44-48). */
   val AutoIncName = "auto_incrementing_id"
 
-  /** The raw read: data files `files` of table `m` as stored, with no
-    * overlay and no drop mask — every column of `m` by its current name
-    * (hidden included; a renamed column moves by position, a widened one
-    * is cast, an added one reads its read default), then `_graft_op` and
-    * `_graft_seq` (null in a base file). It is the V2 scan's raw read
-    * (GraftV2Table `raw`), so the job-path folds, the CDC job path, the
-    * tablet compaction and the change stream read files through the same
-    * per-generation readers as every table read. */
+  /** The raw read (GraftV2Table `raw`): data files `files` of table `m`
+    * as stored, every column (hidden included) by its current name, then
+    * `_graft_op` and `_graft_seq`, with no overlay and no drop mask,
+    * through the same per-generation readers as every table read. */
   private[graft] def readRaw(spark: SparkSession, m: TableMeta,
       files: Seq[DataFileMeta]): DataFrame =
     GraftSqlBridge.ofRows(spark,
@@ -3445,28 +3444,8 @@ object GraftTable {
     LessThan(v(a), v(b)).eval(null).asInstanceOf[Boolean]
   }
 
-  /** Do two [lower, upper) bounds overlap? (None = unbounded end.) */
-  private[graft] def boundsOverlap(dt: DataType, a: RangeBound, b: RangeBound): Boolean = {
-    def below(x: RangeBound, y: RangeBound): Boolean = (x.upper, y.lower) match {
-      case (Some(u), Some(l)) => !ltVals(dt, l, u) // u <= l
-      case _ => false
-    }
-    !below(a, b) && !below(b, a)
-  }
-
   private def partFromPath(p: String, partCol: String): Option[String] =
     s"/$partCol=([^/]+)/".r.findFirstMatchIn(p).map(_.group(1))
-
-  /** Row count from the parquet footer — free metadata at commit time
-    * (the reference tracks per-rowset row counts the same way, for
-    * count-only scans and size estimates). -1 when unreadable. */
-  private[table] def parquetRows(p: String): Long =
-    try {
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(p), footerConf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try r.getRecordCount finally r.close()
-    } catch { case _: Exception => -1L }
 
   /** Key types the order-preserving bound encoding supports (the types the
     * interval-routed merge-on-read overlay can serve for coordinate-less

@@ -142,23 +142,7 @@ object GraftSqlBridge {
     * indices `firstIndex..`; only the first chunk owns the route's deltas. */
   def routedFilePartitionsBySize(firstIndex: Int, paths: Seq[String],
       route: String, maxSplitBytes: Long): Seq[execution.datasources.FilePartition] = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    val ranged = paths.flatMap { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      val st = path.getFileSystem(conf).getFileStatus(path)
-      if (st.getLen == 0)
-        Seq(execution.datasources.PartitionedFile(
-          catalyst.InternalRow.empty,
-          org.apache.spark.paths.SparkPath.fromPath(path),
-          0L, 0L, Array.empty[String], st.getModificationTime, 0L, Map.empty))
-      else (0L until st.getLen by maxSplitBytes).map { off =>
-        execution.datasources.PartitionedFile(
-          catalyst.InternalRow.empty,
-          org.apache.spark.paths.SparkPath.fromPath(path),
-          off, math.min(maxSplitBytes, st.getLen - off),
-          Array.empty[String], st.getModificationTime, st.getLen, Map.empty)
-      }
-    }
+    val ranged = byteRanges(statuses(paths), maxSplitBytes)
     // greedy sequential pack into <= maxSplitBytes bins
     val bins = scala.collection.mutable.ArrayBuffer(
       scala.collection.mutable.ArrayBuffer.empty[execution.datasources.PartitionedFile])
@@ -175,25 +159,54 @@ object GraftSqlBridge {
     }.toSeq
   }
 
+  /** `paths` packed into input partitions like a file source scan's
+    * (FilePartition.maxSplitBytes and getFilePartitions: each file charged
+    * the open cost), so many small files share a task and the splits
+    * spread over the session's cores. For reads that own no delta route. */
+  def packedFilePartitions(paths: Seq[String]): Seq[execution.datasources.FilePartition] = {
+    val session = SparkSession.active.asInstanceOf[classic.SparkSession]
+    val sts = statuses(paths)
+    val openCost = session.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = execution.datasources.FilePartition.maxSplitBytes(session,
+      sts.map(_._2.getLen + openCost).sum)
+    execution.datasources.FilePartition.getFilePartitions(session,
+      byteRanges(sts, maxSplit).sortBy(-_.length), maxSplit)
+  }
+
+  /** Each path with its status; the path as given, never the status's
+    * qualified one, so a split's file key matches [[fileKey]]. */
+  private def statuses(paths: Seq[String])
+      : Seq[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileStatus)] = {
+    val conf = SparkSession.active.sparkContext.hadoopConfiguration
+    paths.map { p =>
+      val path = new org.apache.hadoop.fs.Path(p)
+      path -> path.getFileSystem(conf).getFileStatus(path)
+    }
+  }
+
+  /** Each file as byte ranges of at most `maxSplitBytes`. */
+  private def byteRanges(
+      sts: Seq[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileStatus)],
+      maxSplitBytes: Long): Seq[execution.datasources.PartitionedFile] =
+    sts.flatMap { case (p, st) =>
+      val path = org.apache.spark.paths.SparkPath.fromPath(p)
+      if (st.getLen == 0)
+        Seq(execution.datasources.PartitionedFile(catalyst.InternalRow.empty,
+          path, 0L, 0L, Array.empty[String], st.getModificationTime, 0L, Map.empty))
+      else (0L until st.getLen by maxSplitBytes).map { off =>
+        execution.datasources.PartitionedFile(catalyst.InternalRow.empty,
+          path, off, math.min(maxSplitBytes, st.getLen - off),
+          Array.empty[String], st.getModificationTime, st.getLen, Map.empty)
+      }
+    }
+
   /** The key a planned file carries in its input partition
     * (`PartitionedFile.urlEncodedPath`) for manifest path `path`. */
   def fileKey(path: String): String =
     org.apache.spark.paths.SparkPath.fromPath(new org.apache.hadoop.fs.Path(path)).urlEncoded
 
-  private def partitionedFiles(
-      paths: Seq[String]): Array[execution.datasources.PartitionedFile] = {
-    val conf = SparkSession.active.sparkContext.hadoopConfiguration
-    paths.map { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      val status = path.getFileSystem(conf).getFileStatus(path)
-      execution.datasources.PartitionedFile(
-        catalyst.InternalRow.empty,
-        org.apache.spark.paths.SparkPath.fromPath(path),
-        0L, status.getLen, Array.empty[String],
-        status.getModificationTime, status.getLen,
-        Map.empty)
-    }.toArray
-  }
+  private def partitionedFiles(paths: Seq[String]) =
+    byteRanges(statuses(paths), Long.MaxValue).toArray
 
   /** The stock vectorized parquet reader factory, reused for the graft V2
     * batch scan (the standard extension move — file formats are not

@@ -73,6 +73,28 @@ class ConcurrencySpec extends AnyFunSuite {
     assert(graft.tools.GraftTools.fsck(t.location).isEmpty)
   }
 
+  test("expiry racing an expiry: a listed manifest the rival deleted first") {
+    val t = mkTable() // v1
+    (2 to 5).foreach(i => t.upsert(Seq((i.toLong, s"u$i")).toDF("id", "name")))
+    val rows = t.scan().as[(Long, String)].collect().toSet
+    val meta = java.nio.file.Paths.get(t.location, "_graft")
+    def manifest(v: Long) = meta.resolve(s"v$v.json")
+    val early = (1L to 2L).map(v => v -> Files.readAllBytes(manifest(v)))
+    // the rival expiry: commits its mark (v6, floor 4), then drops v1-v3
+    assert(t.expireVersions(retainLast = 2).nonEmpty)
+    assert(t.meta.historyFloor == 4)
+    // what the other expiry saw: it listed v1-v3 and read v1 and v2
+    // before the rival deleted them, and v3 was gone when it read it
+    early.foreach { case (v, bytes) => Files.write(manifest(v), bytes) }
+    Files.createSymbolicLink(manifest(3), meta.resolve("v3.gone"))
+    t.expireVersions(retainLast = 4) // prefix v1, v2; v3 survives, unread
+    Files.delete(manifest(3))
+    assert(t.meta.operation == "expire_versions" && t.currentVersion == 7)
+    assert(t.meta.historyFloor == 4, "the floor never drops below the rival's")
+    assert(graft.tools.GraftTools.fsck(t.location).isEmpty)
+    assert(t.scan().as[(Long, String)].collect().toSet == rows)
+  }
+
   test("graft.commit.maxRetries=0 restores throw-on-first-conflict") {
     val t = mkTable()
     val v0 = t.currentVersion

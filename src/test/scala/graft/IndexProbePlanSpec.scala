@@ -17,9 +17,12 @@ import graft.tools.SecondaryIndex
 /**
  * A secondary-index probe is a scan, a filter and a limit (or a top-k): it
  * plans no exchange, so adaptive execution never wraps it and the probes
- * run under the session's own settings. Every query a probe collects is
- * checked for an adaptive plan with adaptive execution on, and each
- * probe's Spark job and stage counts are pinned.
+ * run under the session's own settings. Past the broadcast bound the
+ * probe's scan builds the merge-on-read spill, whose write does shuffle;
+ * a small spill's build plans statically itself. Every query a probe
+ * collects is checked for an adaptive plan with adaptive execution on,
+ * under the default bound and under a 1-byte one, and each probe's Spark
+ * job and stage counts are pinned.
  */
 class IndexProbePlanSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
@@ -53,21 +56,22 @@ class IndexProbePlanSpec extends AnyFunSuite {
       org.apache.spark.sql.GraftSqlBridge.flushListenerBus(spark)
       val seen = plans.synchronized(plans.toList)
       assert(seen.nonEmpty, "the probe collected no query")
-      seen.foreach(qe => assert(qe.executedPlan.collectFirst {
+      val adaptive = seen.map(_.executedPlan).filter(_.collectFirst {
         case a: AdaptiveSparkPlanExec => a
-      }.isEmpty, qe.executedPlan.toString))
+      }.nonEmpty)
+      assert(adaptive.isEmpty, adaptive.mkString("\n"))
       (counts, out.select("id").as[Long].collect().toSet)
     }
-    try {
-      val got = Seq(
-        "lookupWhere" -> probe(SecondaryIndex.lookupWhere(spark, byName,
-          Seq(EqualTo("name", "n5")))),
-        "lookupUnionWhere" -> probe(SecondaryIndex.lookupUnionWhere(spark,
-          Seq((byName, Seq(EqualTo("name", "n99")), nameV),
-            (byV, Seq(EqualTo("v", 2)), vV)), baseV)),
-        "topK" -> probe(SecondaryIndex.topK(spark, byV, 3, desc = true).get),
-        "topKTies" -> probe(SecondaryIndex.topKTies(spark, byV, 3, desc = false,
-          maxKeys = 100, where = Seq(GreaterThan("v", 5))).get))
+    def probes(nameV: Long, vV: Long, baseV: Long) = Seq(
+      "lookupWhere" -> probe(SecondaryIndex.lookupWhere(spark, byName,
+        Seq(EqualTo("name", "n5")))),
+      "lookupUnionWhere" -> probe(SecondaryIndex.lookupUnionWhere(spark,
+        Seq((byName, Seq(EqualTo("name", "n99")), nameV),
+          (byV, Seq(EqualTo("v", 2)), vV)), baseV)),
+      "topK" -> probe(SecondaryIndex.topK(spark, byV, 3, desc = true).get),
+      "topKTies" -> probe(SecondaryIndex.topKTies(spark, byV, 3, desc = false,
+        maxKeys = 100, where = Seq(GreaterThan("v", 5))).get))
+    def checkRows(got: Seq[(String, ((Int, Int), Set[Long]))]): Unit = {
       val rows = got.map { case (n, (_, ids)) => n -> ids }.toMap
       val live = t.scan().as[(Long, String, Int)].collect()
       def ids(p: ((Long, String, Int)) => Boolean) = live.filter(p).map(_._1).toSet
@@ -75,10 +79,28 @@ class IndexProbePlanSpec extends AnyFunSuite {
       assert(rows("lookupUnionWhere") == ids(r => r._2 == "n99" || r._3 == 2))
       assert(rows("topK").size == 3 && rows("topK").subsetOf(ids(_._3 == 7)))
       assert(rows("topKTies") == ids(_._3 == 6))
-      val counts = got.map { case (n, (c, _)) => n -> c }
+    }
+    def counts(got: Seq[(String, ((Int, Int), Set[Long]))]) =
+      got.map { case (n, (c, _)) => n -> c }
+    try {
+      val got = probes(nameV, vV, baseV)
+      checkRows(got)
       // (jobs, stages) measured with each probe wrapped in a static plan
-      assert(counts == Seq("lookupWhere" -> (0, 0), "lookupUnionWhere" -> (0, 0),
-        "topK" -> (1, 1), "topKTies" -> (3, 3)), counts.toString)
+      assert(counts(got) == Seq("lookupWhere" -> (0, 0), "lookupUnionWhere" -> (0, 0),
+        "topK" -> (1, 1), "topKTies" -> (3, 3)), counts(got).toString)
+      // index tails past the broadcast bound: each probe's scan builds (or
+      // reuses) the merge-on-read spill, whose write shuffles by route
+      t.upsert(Seq((5L, "n98", 6), (71L, "n5", 2)).toDF("id", "name", "v"))
+      assert(SecondaryIndex.refresh(spark, byName) && SecondaryIndex.refresh(spark, byV))
+      spark.conf.set("graft.mor.broadcastBytes", "1")
+      val spilled = try probes(byName.currentVersion, byV.currentVersion,
+        t.currentVersion) finally spark.conf.unset("graft.mor.broadcastBytes")
+      checkRows(spilled)
+      // (jobs, stages) measured with each probe wrapped in a static plan:
+      // the first probe of each index version builds the spill in one job
+      assert(counts(spilled) == Seq("lookupWhere" -> (2, 4),
+        "lookupUnionWhere" -> (0, 0), "topK" -> (2, 4), "topKTies" -> (4, 6)),
+        counts(spilled).toString)
     } finally spark.listenerManager.unregister(listener)
   }
 }

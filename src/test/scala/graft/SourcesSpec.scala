@@ -455,6 +455,19 @@ class SourcesSpec extends AnyFunSuite {
       case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
     }.exists(_.isInstanceOf[graft.sources.v2.GraftV2Scan]),
       get.queryExecution.optimizedPlan.toString)
+    // load() asks for the schema and then the table: one handle, one set
+    // of manifest reads
+    def reads(body: => Any): Long = {
+      val before = graft.catalog.TableMeta.versionFileReads.get()
+      body
+      graft.catalog.TableMeta.versionFileReads.get() - before
+    }
+    val opts = Map("graft.table.path" -> loc, "graft.snapshotVersion" -> "1")
+    val oneBuild = reads(new graft.sources.DefaultSource().getTable(
+      new org.apache.spark.sql.types.StructType(), Array.empty,
+      scala.jdk.CollectionConverters.MapHasAsJava(opts).asJava))
+    assert(oneBuild > 0)
+    assert(reads(spark.read.format("graft").options(opts).load()) == oneBuild)
     // a location with no table fails the read at load, as before
     val missing = tmp("graft-src-missing-") + "/none"
     val e = intercept[IllegalArgumentException](
