@@ -26,7 +26,14 @@ object PartitionPruner {
     * A file in a range with a custom hash schema (per-range bucket-count
     * override) is judged against the candidate set computed with ITS
     * modulus — bucket ids are only comparable within one range's schema. */
-  def pruneFiles(m: TableMeta, files: Seq[DataFileMeta], filters: Seq[Filter]): Seq[DataFileMeta] = {
+  def pruneFiles(m: TableMeta, files: Seq[DataFileMeta], filters: Seq[Filter]): Seq[DataFileMeta] =
+    files.filter(compile(m, filters))
+
+  /** [[pruneFiles]]'s per-file test, compiled once: the candidate buckets
+    * hashed and every literal encoded, so one read that prunes several
+    * file lists (base and delta files, a keyed read's long IN list)
+    * prepares its filters once. */
+  def compile(m: TableMeta, filters: Seq[Filter]): DataFileMeta => Boolean = {
     val defaultBuckets = candidateBuckets(m, filters)
     val overrides = m.rangeHashBucketsMap
     val overrideSets: Map[String, Option[Set[Int]]] =
@@ -36,7 +43,7 @@ object PartitionPruner {
     val (loYear, hiYear) = rangeKeyBounds(m, filters)
     val boundsMode = m.range.exists(_.isBounds)
     val fileTests = compileFileTests(m, filters)
-    files.filter { f =>
+    f => {
       val keepSet = f.rangeKey.filter(overrides.contains)
         .map(overrideSets).getOrElse(defaultBuckets)
       val bucketOk = (keepSet, f.bucket) match {
@@ -121,7 +128,17 @@ object PartitionPruner {
       case In(c, vs) => valueTest(c, (_, enc) => {
         val es = vs.toSeq.map(enc)
         if (es.exists(_.isEmpty)) None
-        else Some(iv => es.flatten.exists(e => inIv(e)(iv)))
+        else {
+          // sorted once: a file's interval holds a value iff the least
+          // value at or above its low end is at or below its high end
+          val sorted = es.flatten.distinct.sorted.toArray
+          Some { iv =>
+            val i = java.util.Arrays.binarySearch(sorted.asInstanceOf[Array[AnyRef]],
+              iv._1: AnyRef)
+            val at = if (i >= 0) i else -i - 1
+            at < sorted.length && sorted(at) <= iv._2
+          }
+        }
       })
       case GreaterThan(c, v) => valueTest(c, (_, enc) => enc(v).map(e => _._2 > e))
       case GreaterThanOrEqual(c, v) => valueTest(c, (_, enc) => enc(v).map(e => _._2 >= e))
@@ -210,11 +227,15 @@ object PartitionPruner {
       val valueSets: Seq[Option[Seq[Any]]] = hc.cols.map(c => eqValues(c, filters))
       if (valueSets.exists(_.isEmpty)) None
       else {
-        // cross product of per-column values → component bucket set
-        val combos = valueSets.map(_.get).foldLeft(Seq(Seq.empty[Any])) {
-          (acc, vs) => acc.flatMap(prefix => vs.map(prefix :+ _))
+        // cross product of per-column values → component bucket set,
+        // hashed only until every bucket is a candidate
+        val combos = valueSets.map(_.get).foldLeft(Iterator(Seq.empty[Any])) {
+          (acc, vs) => acc.flatMap(prefix => vs.iterator.map(prefix :+ _))
         }
-        Some(combos.map(vals => componentBucket(m, hc, vals)).toSet)
+        val hit = scala.collection.mutable.Set[Int]()
+        while (hit.size < hc.buckets && combos.hasNext)
+          hit += componentBucket(m, hc, combos.next())
+        Some(hit.toSet)
       }
     }
     if (perComponent.exists(_.isEmpty)) None

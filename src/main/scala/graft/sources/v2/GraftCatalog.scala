@@ -1009,19 +1009,12 @@ class GraftV2Table(meta: TableMeta, hidden: Boolean = false, raw: Boolean = fals
       .getOrElse(Array.empty) // multi-col-component/per-range layouts: no report
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GraftScanBuilder(meta, options, hidden, tails, raw)
-
-  /** The delta tail rows this relation's scans collected, by tail files:
-    * a plan reading the relation more than once (a union or join of one
-    * frame with itself) collects each tail once. The manifest
-    * is pinned and data files are immutable, so the rows never go stale. */
-  private val tails = new GraftV2Scan.TailRows
+    new GraftScanBuilder(meta, options, hidden, raw)
 }
 
 class GraftScanBuilder(meta: TableMeta,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty(),
     hidden: Boolean = false,
-    tails: GraftV2Scan.TailRows = new GraftV2Scan.TailRows,
     raw: Boolean = false)
     extends ScanBuilder
     with SupportsPushDownFilters with SupportsPushDownRequiredColumns
@@ -1348,7 +1341,7 @@ class GraftScanBuilder(meta: TableMeta,
       limitN, topN,
       Option(options.get("graft.maxBytesPerTrigger"))
         .map(org.apache.spark.network.util.JavaUtils.byteStringAsBytes),
-      tails, raw)
+      raw)
   }
 }
 
@@ -1428,7 +1421,6 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     limit: Option[Int] = None,
     topN: Option[(Int, Boolean, Int)] = None,
     maxBytesPerTrigger: Option[Long] = None,
-    tails: GraftV2Scan.TailRows = new GraftV2Scan.TailRows,
     raw: Boolean = false) extends Scan with Batch
     with SupportsReportPartitioning with SupportsRuntimeFiltering
     with SupportsReportStatistics
@@ -1443,6 +1435,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
   @volatile private var mDeltasBroadcast = 0L
   @volatile private var mDeltasAttached = 0L
   @volatile private var mDeltasSpilled = 0L
+  @volatile private var mDeltasDecoded = 0L
 
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
@@ -1466,7 +1459,8 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
       meta.baseFiles.length - mBasesRead),
     GraftV2Scan.TaskMetric(GraftV2Scan.DeltasBroadcast, mDeltasBroadcast),
     GraftV2Scan.TaskMetric(GraftV2Scan.DeltasAttached, mDeltasAttached),
-    GraftV2Scan.TaskMetric(GraftV2Scan.DeltasSpilled, mDeltasSpilled))
+    GraftV2Scan.TaskMetric(GraftV2Scan.DeltasSpilled, mDeltasSpilled),
+    GraftV2Scan.TaskMetric(GraftV2Scan.DeltasDecoded, mDeltasDecoded))
 
   /** TOP-N file cut (`ORDER BY <col> LIMIT n` over ANY zone-mapped column).
     * ASC soundness: sort files by lo ascending and take the minimal prefix
@@ -1548,8 +1542,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     * reports on-disk size the same way, kudu-spark
     * DefaultSource.scala:329-352). */
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics = {
-    val files = graft.sources.PartitionPruner.pruneFiles(
-      meta, meta.baseFiles, filters.toSeq ++ runtimeFilters)
+    val files = pruned()._1
     val bytes = (files ++ meta.deltaFiles)
       .map(f => GraftTable.fileSize(f.path)).sum max 1L
     // exact when the manifest carries footer row counts and no deltas or
@@ -1690,6 +1683,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
   // planning memos built over the old filters
   override def filter(fs: Array[Filter]): Unit = {
     runtimeFilters = fs
+    pruneMemo = null
     cutMemo = null
     factoryMemo = null
   }
@@ -1788,12 +1782,28 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     * outputOrdering — on a many-thousand-file manifest each extra pass is
     * real driver latency. */
   @volatile private var cutMemo: Seq[graft.catalog.DataFileMeta] = null
+
+  /** The base and delta files the filters can touch, tested with one
+    * compiled pruner (PartitionPruner.compile) and memoized like
+    * [[prunedCutFiles]], whose input the base half is. */
+  @volatile private var pruneMemo: (Seq[graft.catalog.DataFileMeta],
+    Seq[graft.catalog.DataFileMeta]) = null
+  private[graft] def pruned()
+      : (Seq[graft.catalog.DataFileMeta], Seq[graft.catalog.DataFileMeta]) = {
+    val memo = pruneMemo
+    if (memo != null) memo
+    else {
+      val keep = graft.sources.PartitionPruner.compile(meta, filters.toSeq ++ runtimeFilters)
+      val p = (meta.baseFiles.filter(keep), meta.deltaFiles.filter(keep))
+      pruneMemo = p
+      p
+    }
+  }
   private def prunedCutFiles(): Seq[graft.catalog.DataFileMeta] = {
     val memo = cutMemo
     if (memo != null) memo
     else {
-      val files = graft.sources.PartitionPruner.pruneFiles(
-        meta, meta.baseFiles, filters.toSeq ++ runtimeFilters)
+      val files = pruned()._1
       // LIMIT file-prefix and TOP-N cuts apply in EVERY branch (both
       // refuse under deltas/filters, so the cut set is sound regardless
       // of how the survivors are grouped into splits): with SPJ bucketing
@@ -1819,8 +1829,7 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     * stop at the first file past the bound, so a big table pays a few
     * file stats, not one per file. */
   private[graft] def opensAtMost(bound: Long): Boolean = {
-    val files = (prunedCutFiles() ++ graft.sources.PartitionPruner.pruneFiles(
-      meta, meta.deltaFiles, filters.toSeq ++ runtimeFilters)).iterator
+    val files = (prunedCutFiles() ++ pruned()._2).iterator
     var bytes = 0L
     while (files.hasNext && bytes <= bound) bytes += GraftTable.fileSize(files.next().path)
     bytes <= bound
@@ -2004,11 +2013,8 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     // tail/spill transport for all deltas.
     val canAttach = m.rangeDrops.isEmpty && (single ||
       prunedFiles.forall(f => f.bucket.isDefined || f.rangeKey.isDefined))
-    val (routedD, tailD) =
-      if (!canAttach) (Nil, m.deltaFiles)
-      else m.deltaFiles.partition(f =>
-        (f.bucket.isDefined || f.rangeKey.isDefined) &&
-          GraftV2Scan.currentGeneration(m, f))
+    def routed(f: graft.catalog.DataFileMeta) = canAttach &&
+      (f.bucket.isDefined || f.rangeKey.isDefined) && GraftV2Scan.currentGeneration(m, f)
     // Transport decision PER SCAN, on the PRUNED tail: tail files prune by
     // their recorded first-key bounds (delta stats, tablet/deltafile.h) —
     // sound because every file that can hold a surviving key is kept, and
@@ -2021,15 +2027,13 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
     // than a global constant. The bound itself is adaptive too
     // (GraftTable.adaptiveBroadcastDeltaBytes) unless the session pins
     // graft.mor.broadcastBytes.
-    val keepTailEarly = graft.sources.PartitionPruner.pruneFiles(
-      m, tailD, filters.toSeq ++ runtimeFilters)
-    if (GraftTable.deltaBytes(keepTailEarly) < GraftTable.broadcastDeltaBytes) {
-      mDeltasBroadcast = keepTailEarly.length
+    val (keepRouted, keepTail) = pruned()._2.partition(routed)
+    if (GraftTable.deltaBytes(keepTail) < GraftTable.broadcastDeltaBytes) {
+      mDeltasBroadcast = keepTail.length
       // broadcast overlay for the tail: collect its delta rows once, fold
       // them to latest-per-key here, ship the result to every split. The
       // spill branch below deliberately keeps the FULL delta set: its
       // per-route spill is cached by (version, shape) across queries.
-      val keepTail = keepTailEarly
       val dead = new java.util.HashSet[Seq[Any]]()
       val ups = scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[Array[Any]]]()
       // Routes touched by ANY delta row (upsert or tombstone). Trackable
@@ -2053,24 +2057,37 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         // session conf. The driver holds at most the tail bytes the
         // broadcast check above admitted, and folds them to latest-per-key
         // with the slice readers' own fold. Every table column is read, so
-        // the relation's scans of other columns share the rows.
+        // every read of a tail file shares its one decoded entry
+        // (DeltaCache).
         val cols = m.columns.map(_.name)
         val colTypes = m.columns.map(_.dataType).toArray
-        val rows = tails.computeIfAbsent(keepTail.map(_.path), _ =>
-          GraftV2Scan.readTail(m, keepTail, Some(routeCol)))
-        val (opAt, routeAt) = (cols.length, cols.length + 2)
+        val tail = GraftV2Scan.readTail(m, keepTail)
+        mDeltasDecoded = tail.decoded
+        val opAt = cols.length
         val colAt = internalFields.map(f => cols.indexOf(f.name))
+        // the route of each row that survives the fold, bound once per scan;
+        // with one owned route every row goes there
+        val routeOf: InternalRow => String =
+          if (owned.size <= 1) _ => fallback
+          else {
+            val e = GraftTable.bindOn(spark, GraftV2Scan.tailSchema(m),
+              _.select(routeCol))._1.head
+            r => e.eval(r) match {
+              case null => fallback
+              case v =>
+                val s = v.toString
+                if (owned.contains(s)) s else fallback
+            }
+          }
         // only the rows of keys the pushed key filters admit are folded and
         // shipped: a point read's overlay is O(its keys), not O(tail)
         val admitted = GraftV2Scan.keyFilter(m, filters.toSeq)
-          .fold(rows.iterator)(rows.iterator.filter)
+          .fold(tail.rows)(tail.rows.filter)
         MorOverlay.latestPerKey(admitted, m.keyCols.map(cols.indexOf).toArray,
             colTypes, opAt, Some(opAt + 1))
           .forEach { (key, r) =>
             dead.add(key)
-            val r0 = if (r.isNullAt(routeAt)) null
-              else r.getUTF8String(routeAt).toString
-            val route = if (r0 != null && owned.contains(r0)) r0 else fallback
+            val route = routeOf(r)
             dirty += route
             if (!MorOverlay.isDelete(r, opAt)) {
               ups.getOrElseUpdate(route, scala.collection.mutable.ArrayBuffer()) +=
@@ -2091,13 +2108,11 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         if (!routeDerivable) Set.empty
         else owned.filter(r => !r.startsWith("f:") &&
           r != GraftV2Scan.OrphanRoute && !dirty.contains(r))
-      val slices = if (routedD.isEmpty) None else {
+      val slices = if (!m.deltaFiles.exists(routed)) None else {
         // routed attachment: group the flushed files by the same route
         // strings the splits carry (routeOf — the writer's own partition
         // expressions); unowned routes fold into the fallback split.
         // Pruning applies to flushed files exactly as to base files.
-        val keepRouted = graft.sources.PartitionPruner.pruneFiles(
-          m, routedD, filters.toSeq ++ runtimeFilters)
         mDeltasAttached = keepRouted.length
         val routeParts: Map[String, Seq[String]] = keepRouted
           .groupBy { f =>
@@ -2291,9 +2306,6 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
 }
 
 object GraftV2Scan {
-  /** Collected delta tail rows by tail files ([[GraftV2Table]]'s memo). */
-  class TailRows extends java.util.concurrent.ConcurrentHashMap[Seq[String], Array[InternalRow]]
-
   /** Scan-observability metrics (the reference's per-scan counters —
     * tablet metrics like `scanner_rows_scanned` / delta-file reads,
     * tablet/tablet_metrics.h): declared once, surfaced in the Spark UI
@@ -2320,13 +2332,15 @@ object GraftV2Scan {
   val DeltasBroadcast = "graftDeltaFilesBroadcast"
   val DeltasAttached = "graftDeltaFilesAttached"
   val DeltasSpilled = "graftDeltaFilesSpilled"
+  val DeltasDecoded = "graftDeltaFilesDecoded"
   private[v2] def scanMetricDecls
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] = Array(
     new SumMetric(FilesRead, "base files read"),
     new SumMetric(FilesPruned, "base files pruned"),
     new SumMetric(DeltasBroadcast, "delta files broadcast (tail overlay)"),
     new SumMetric(DeltasAttached, "delta files attached (routed flush)"),
-    new SumMetric(DeltasSpilled, "delta files spilled (shuffle overlay)"))
+    new SumMetric(DeltasSpilled, "delta files spilled (shuffle overlay)"),
+    new SumMetric(DeltasDecoded, "delta files decoded (tail cache misses)"))
 
   /** Components reportable as a KeyGroupedPartitioning (one `bucket(n,
     * col)` transform per component): every component single-column (the
@@ -2525,27 +2539,49 @@ object GraftV2Scan {
       .map(e => E.Predicate.createInterpreted(e).eval _)
   }
 
-  /** The delta rows of `files` — every table column, then the op and seq
-    * columns, then, when given, the delta `route` (a string column over
-    * the table columns) — read on the driver: the scan's own parquet
-    * readers ([[generationReader]]: every schema generation remapped,
-    * pending range drops masked by seq), one split over all of them, and
-    * the route as a projection bound on the driver (GraftTable.bindOn).
-    * No Spark job runs. The rows are copies. */
-  private[graft] def readTail(meta: TableMeta, files: Seq[graft.catalog.DataFileMeta],
-      route: Option[org.apache.spark.sql.Column]): Array[InternalRow] = {
-    import org.apache.spark.sql.catalyst.expressions.{BoundReference, InterpretedUnsafeProjection}
-    val read = StructType(meta.columns.map(_.toField.copy(nullable = true)) ++ OpSeqFields)
-    val routeExpr = route.toSeq.flatMap(r =>
-      GraftTable.bindOn(SparkSession.active, read, _.select(r))._1)
-    val project = InterpretedUnsafeProjection.createProjection(
-      read.fields.toSeq.zipWithIndex.map { case (f, i) =>
-        BoundReference(i, f.dataType, f.nullable) } ++ routeExpr)
-    val r = generationReader(meta, files, read, Array.empty, _ => meta.rangeDrops.nonEmpty)
-      .createReader(org.apache.spark.sql.GraftSqlBridge.filePartition(
-        0, files.map(_.path), None))
-    try Iterator.continually(r).takeWhile(_.next()).map(x => project(x.get()).copy()).toArray
-    finally r.close()
+  /** The row layout of [[readTail]]: every table column, nullable, then
+    * the op and seq columns. */
+  private[graft] def tailSchema(meta: TableMeta): StructType =
+    StructType(meta.columns.map(_.toField.copy(nullable = true)) ++ OpSeqFields)
+
+  /** The delta rows of `files` as [[tailSchema]], file by file, and how
+    * many of the files were decoded rather than found in the [[DeltaCache]].
+    * A missing file is decoded on the driver by the scan's own parquet
+    * readers ([[generationReader]]: every schema generation remapped, a
+    * row a pending range drop killed read as its key's tombstone) into
+    * immutable UnsafeRow copies,
+    * which the cache then shares with every later read of the same file
+    * and shape. No Spark job runs. */
+  private[graft] def readTail(meta: TableMeta, files: Seq[graft.catalog.DataFileMeta]): Tail = {
+    val shape = DeltaCache.shapeOf(meta)
+    val keys = org.apache.spark.sql.GraftSqlBridge.statuses(files.map(_.path)).zip(files)
+      .map { case ((_, st), f) =>
+        DeltaCache.Key(f.path, st.getLen, st.getModificationTime, f.colIds, shape)
+      }
+    val rows = keys.map(DeltaCache.shared.get).toArray
+    val missing = rows.indices.filter(rows(_) == null)
+    if (missing.nonEmpty) {
+      val read = tailSchema(meta)
+      val factory = generationReader(meta, missing.map(files), read, Array.empty,
+        _ => meta.rangeDrops.nonEmpty)
+      val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(read)
+      missing.foreach { i =>
+        val r = factory.createReader(org.apache.spark.sql.GraftSqlBridge.filePartition(
+          0, Seq(files(i).path), None))
+        val decoded =
+          try Iterator.continually(r).takeWhile(_.next())
+            .map(x => toUnsafe(x.get()).copy(): InternalRow).toArray
+          finally r.close()
+        rows(i) = DeltaCache.shared.put(keys(i), decoded)
+      }
+    }
+    new Tail(rows.toSeq, missing.length)
+  }
+
+  /** [[readTail]]'s rows, one array per file in the order asked, and the
+    * number of files it decoded. */
+  private[graft] final class Tail(files: Seq[Array[InternalRow]], val decoded: Int) {
+    def rows: Iterator[InternalRow] = files.iterator.flatMap(_.iterator)
   }
 
   /** JVM-wide memo of footer-derived key bounds. Published parquet files

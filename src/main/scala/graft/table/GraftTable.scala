@@ -215,20 +215,21 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         org.apache.spark.sql.catalyst.CatalystTypeConverters
           .convertToScala(k.get(i, f.dataType), f.dataType)
       }))
-    val kept = prunedTo(m, filters)
-    if (assertPrune && kept.baseFiles.length * 2 > m.baseFiles.length)
-      throw new IllegalStateException(
-        s"pruned scan of $location must keep at most half its base files: " +
-          s"kept ${kept.baseFiles.length} of ${m.baseFiles.length} for " +
-          filters.mkString(", "))
-    if (!keySchema.forall(f => cols.exists(c => c.name == f.name && c.dataType == f.dataType)))
-      return None
+    // the scan prunes the manifest with the IN lists, compiled once
     val scan = {
       val b = new graft.sources.v2.GraftScanBuilder(
-        kept.copy(columns = kept.columns.map(_.copy(nullable = true))), hidden = hidden)
+        m.copy(columns = m.columns.map(_.copy(nullable = true))), hidden = hidden)
       b.pushFilters(filters.toArray)
       b.build().asInstanceOf[GraftV2Scan]
     }
+    val kept = scan.pruned()._1
+    if (assertPrune && kept.length * 2 > m.baseFiles.length)
+      throw new IllegalStateException(
+        s"pruned scan of $location must keep at most half its base files: " +
+          s"kept ${kept.length} of ${m.baseFiles.length} for " +
+          filters.mkString(", "))
+    if (!keySchema.forall(f => cols.exists(c => c.name == f.name && c.dataType == f.dataType)))
+      return None
     if (!scan.opensAtMost(GraftTable.broadcastDeltaBytes)) return None
     val schema = scan.readSchema()
     val toUnsafe = org.apache.spark.sql.catalyst.expressions.UnsafeProjection.create(schema)
@@ -305,16 +306,22 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   }
 
   /** Latest delta state per key (all table columns + the op/seq columns),
-    * after drop-range masking — the per-key winner the delta folds write
-    * and the spill overlay routes, folded in a Spark job over the raw read
-    * of `deltaFiles` ([[GraftTable.readRaw]]). The V2 scan's broadcast
-    * tail reads its delta files on the driver instead ([[generationRead]]
-    * applies the same mask) and folds them with MorOverlay.latestPerKey. */
+    * after drop-range masking (a delta row a pending drop killed reads as
+    * its key's tombstone, [[droppedRows]]) — the per-key winner the delta
+    * folds write and the spill overlay routes, folded in a Spark job over
+    * the raw read of `deltaFiles` ([[GraftTable.readRaw]]). The V2 scan's
+    * broadcast tail reads its delta files on the driver instead
+    * ([[generationRead]] applies the same mask) and folds them with
+    * MorOverlay.latestPerKey. */
   private[graft] def latestDeltas(m: TableMeta, deltaFiles: Seq[DataFileMeta]): DataFrame = {
     val deltas = readRaw(spark, m, deltaFiles)
-    latestOf(m, droppedRows(m, deltas = true).fold(deltas)(d => deltas.filter(!d)),
-      deltaFiles)
+    latestOf(m, droppedRows(m, deltas = true).fold(deltas)(killed(deltas, _)), deltaFiles)
   }
+
+  /** `deltas` with every row `dead` holds for turned into its key's
+    * tombstone: a dropped upsert still supersedes the key's older rows. */
+  private def killed(deltas: DataFrame, dead: Column): DataFrame =
+    deltas.withColumn(OpCol, when(dead, lit(OpDelete)).otherwise(col(OpCol)))
 
   /** The per-key fold of `deltas`, rows read from `deltaFiles` (which size
     * the fold's exchange). */
@@ -360,10 +367,10 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * delta op and seq columns, read as they are): the physical read schema
     * ([[physGenOf]]), the projection to `out` (a renamed column moves by
     * position, a widened one is cast, an absent one reads its read
-    * default) and, when `masked`, the predicate keeping rows no pending
-    * range drop killed ([[droppedRows]]; seq-aware when `out` carries the
-    * seq column, i.e. for delta rows) — both bound to the physical row on
-    * the driver ([[GraftTable.bindOn]]); no job runs. */
+    * default) and, when `masked`, the rows pending range drops killed
+    * ([[droppedRows]]): base rows are filtered out, and delta rows (`out`
+    * carries the op and seq columns) read as tombstones — both bound to
+    * the physical row on the driver ([[GraftTable.bindOn]]); no job runs. */
   private[graft] def generationRead(m: TableMeta, present: Set[Int],
       out: Seq[StructField], masked: Boolean): (StructType,
       Seq[org.apache.spark.sql.catalyst.expressions.Expression],
@@ -380,7 +387,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         case Some((n, _)) => col(n).cast(c.dataType).as(c.name)
         case None         => defaultLit(c).as(c.name)
       }) ++ extra.map(f => col(f.name)): _*)
-      mask.fold(logical)(d => logical.filter(!d)).select(out.map(f => col(f.name)): _*)
+      mask.fold(logical)(d =>
+        if (out.exists(_.name == OpCol)) killed(logical, d) else logical.filter(!d))
+        .select(out.map(f => col(f.name)): _*)
     })
     (phys, projects, keep)
   }
@@ -618,7 +627,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
   private def windowRows(m2: TableMeta, inRange: Seq[DataFileMeta], v1: Long)
       : Iterator[InternalRow] = {
     val seqIdx = m2.columns.length + 1
-    GraftV2Scan.readTail(m2, inRange, None).iterator.filter(_.getLong(seqIdx) > v1)
+    GraftV2Scan.readTail(m2, inRange).rows.filter(_.getLong(seqIdx) > v1)
   }
 
   /** The keys of `rows` (`m2`'s key columns at `keyIdx`) that are live in
@@ -2139,7 +2148,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * them — those of coordinate-less files — with it. A delta row
     * (`deltas`, the predicate then also reads the seq column) in a dropped
     * range is dead only if written at or before the drop: rows upserted
-    * after a re-add live. */
+    * after a re-add live. A dead delta row reads as its key's tombstone,
+    * never as nothing: an upsert that moved a key into the range
+    * superseded the key's older rows elsewhere, which must stay dead. */
   private def droppedRows(m: TableMeta, deltas: Boolean): Option[Column] =
     (m.rangeDrops, m.range) match {
       case (drops, Some(r)) if drops.nonEmpty =>
@@ -2757,7 +2768,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     val seq = fold.map(_.seq).max
     if (bytes <= GraftTable.broadcastDeltaBytes) {
       val names = m.columns.map(_.name)
-      val latest = MorOverlay.latestPerKey(GraftV2Scan.readTail(m, fold, None).iterator,
+      val latest = MorOverlay.latestPerKey(GraftV2Scan.readTail(m, fold).rows,
         m.keyCols.map(names.indexOf).toArray, m.columns.map(_.dataType).toArray,
         names.length, Some(names.length + 1))
       writeFileset(a, m, latest.values.asScala.toArray, v, token, layout, seq)

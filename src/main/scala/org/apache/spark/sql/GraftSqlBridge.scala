@@ -175,7 +175,7 @@ object GraftSqlBridge {
 
   /** Each path with its status; the path as given, never the status's
     * qualified one, so a split's file key matches [[fileKey]]. */
-  private def statuses(paths: Seq[String])
+  def statuses(paths: Seq[String])
       : Seq[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileStatus)] = {
     val conf = SparkSession.active.sparkContext.hadoopConfiguration
     paths.map { p =>
@@ -293,6 +293,11 @@ object GraftSqlBridge {
       spark.sessionState.conf)
     hconf.set(org.apache.parquet.hadoop.ParquetOutputFormat.COMPRESSION,
       opts.compressionCodecClassName)
+    // local files through a file system that sets permissions without
+    // forking `chmod` (uncached: the cached `file` instance serves every
+    // other conf)
+    hconf.set("fs.file.impl", classOf[graft.table.NioPermissionsLocalFileSystem].getName)
+    hconf.setBoolean("fs.file.impl.disable.cache", true)
     new org.apache.spark.util.SerializableConfiguration(hconf)
   }
 

@@ -419,17 +419,35 @@ class FuzzSpec extends AnyFunSuite {
       s"final state mismatch seed=$seed")
     formatReads(t, model.toMap, Some(snaps(snaps.size / 2)), seed)((d, _) =>
       d.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
-    val windows = (folds.toSeq.map(j => (math.max(0, j - 1 - rnd.nextInt(4)), j)) ++
-      Seq.fill(6) {
-        val i = rnd.nextInt(snaps.size - 1)
-        (i, i + 1 + rnd.nextInt(snaps.size - 1 - i))
+    checkWindows(t, snaps.toSeq, windowsOver(rnd, snaps.size, folds.toSeq, 6), Seq("v"),
+      seed)(_.getInt(1))
+  }
+
+  /** Windows `(i, j)` over `n` snapshots (one after every op): one ending
+    * just after each fold (snapshot index `folds`), starting up to four
+    * ops before it, and `random` more anywhere. */
+  private def windowsOver(rnd: Random, n: Int, folds: Seq[Int],
+      random: Int): Seq[(Int, Int)] =
+    (folds.map(j => (math.max(0, j - 1 - rnd.nextInt(4)), j)) ++
+      Seq.fill(random) {
+        val i = rnd.nextInt(n - 1)
+        (i, i + 1 + rnd.nextInt(n - 1 - i))
       }).distinct
+
+  /** The CDC faces over each window `(i, j)` of `snaps` (version, model
+    * keyed by `k`): changesSince applied to the older model gives the
+    * newer one, and touchedKeys holds every key the two differ on.
+    * `value` reads a model value from a changesSince row selected as
+    * `k`, `cols`, `_deleted`. */
+  private def checkWindows[V](t: GraftTable, snaps: Seq[(Long, Map[Int, V])],
+      windows: Seq[(Int, Int)], cols: Seq[String], seed: Long)(
+      value: org.apache.spark.sql.Row => V): Unit =
     windows.foreach { case (i, j) =>
       val (va, ma) = snaps(i)
       val (vb, mb) = snaps(j)
-      val applied = t.changesSince(va, vb).select(col("k"), col("v"), col("_deleted"))
+      val applied = t.changesSince(va, vb).select(("k" +: cols :+ "_deleted").map(col): _*)
         .collect().foldLeft(ma) { (m, r) =>
-          if (r.getBoolean(2)) m - r.getInt(0) else m + (r.getInt(0) -> r.getInt(1))
+          if (r.getBoolean(cols.length + 1)) m - r.getInt(0) else m + (r.getInt(0) -> value(r))
         }
       assert(applied == mb, s"changesSince v$va->v$vb mismatch seed=$seed")
       val touched = t.touchedKeys(va, vb, Seq("k")).collect().map(_.getInt(0)).toSet
@@ -437,7 +455,6 @@ class FuzzSpec extends AnyFunSuite {
       assert(differ.subsetOf(touched),
         s"touchedKeys v$va->v$vb misses ${differ -- touched} seed=$seed")
     }
-  }
 
   test("CDC windows across tail folds and presence checks match the model, " +
       "within the driver bound and past it (seed 43)") {
@@ -450,7 +467,10 @@ class FuzzSpec extends AnyFunSuite {
   /** Range-partitioned variant: the op stream also drops and re-adds range
     * partitions (the D2 retention ops) — rows of a dropped range vanish,
     * writes into a non-covered range error until the range is re-added, and
-    * historical snapshots still see the pre-drop state. */
+    * historical snapshots still see the pre-drop state — and folds the
+    * deltas (`compact`, `compactTablet`, `compactDeltas(tailOnly = true)`,
+    * `mergeTailDeltas`); CDC windows across the folds and drops match the
+    * model. */
   private def runRangeCase(seed: Long, nOps: Int): Unit = {
     import graft.catalog.RangeComponent
     val rnd = new Random(seed)
@@ -467,6 +487,9 @@ class FuzzSpec extends AnyFunSuite {
     val uncovered = mutable.Set[Int]()
     val snaps = mutable.ArrayBuffer[(Long, Map[Int, (Int, Int)])]()
     var mid: Option[(Long, Map[Int, (Int, Int)])] = None
+    // a snapshot after every op, and the indexes right after a fold
+    val cdcSnaps = mutable.ArrayBuffer((t.currentVersion, Map.empty[Int, (Int, Int)]))
+    val folds = mutable.ArrayBuffer[Int]()
 
     def df(k: Int, y: Int, v: Int) = Seq((k, ts(y), v)).toDF("k", "d", "v")
 
@@ -475,7 +498,7 @@ class FuzzSpec extends AnyFunSuite {
       val k = rnd.nextInt(Keyspace)
       val y = years(rnd.nextInt(years.length))
       val v = rnd.nextInt(1000)
-      rnd.nextInt(8) match {
+      rnd.nextInt(11) match {
         case 0 => // UPSERT (errors when the row's range is not covered)
           if (uncovered.contains(y)) intercept[PrimaryKeyException](t.upsert(df(k, y, v)))
           else { t.upsert(df(k, y, v)); model(k) = (y, v) }
@@ -501,14 +524,21 @@ class FuzzSpec extends AnyFunSuite {
               if (rnd.nextBoolean()) Some(4) else None)
             uncovered -= ay
           }
-        case 5 => t.compact()
+        case 5 => t.compact(); folds += cdcSnaps.size
         case 6 => snaps += ((t.currentVersion, model.toMap))
         case 7 => // UPDATE_IGNORE of v only (keeps the stored range value)
           if (model.contains(k)) {
             t.update(Seq((k, v)).toDF("k", "v"), ignore = true)
             model(k) = (model(k)._1, v)
           } else t.update(Seq((k, v)).toDF("k", "v"), ignore = true)
+        case 8 => // one tablet's fold (refused while a drop is pending)
+          if (t.meta.rangeDrops.isEmpty) {
+            t.compactTablet(bucket = Some(rnd.nextInt(2))); folds += cdcSnaps.size
+          }
+        case 9 => t.compactDeltas(tailOnly = true); folds += cdcSnaps.size
+        case 10 => t.mergeTailDeltas(); folds += cdcSnaps.size
       }
+      cdcSnaps += ((t.currentVersion, model.toMap))
     }
 
     def stateOf(d: org.apache.spark.sql.DataFrame): Map[Int, (Int, Int)] =
@@ -524,6 +554,8 @@ class FuzzSpec extends AnyFunSuite {
     snaps.foreach { case (ver, m) =>
       assert(stateOf(t.scan(Some(ver))) == m, s"snapshot v$ver mismatch seed=$seed")
     }
+    checkWindows(t, cdcSnaps.toSeq, windowsOver(rnd, cdcSnaps.size, folds.toSeq.take(4), 4),
+      Seq("d", "v"), seed)(r => (r.getTimestamp(1).toLocalDateTime.getYear, r.getInt(2)))
   }
 
   test("random ops with range drop/add match the model (seed 11)") { runRangeCase(11L, 45) }
@@ -858,7 +890,9 @@ class FuzzSpec extends AnyFunSuite {
   /** Randomized kill-point injection between ops: dead writers leave
     * attempt-dir orphans and unpublished version files at random points;
     * repair runs after each injection and the model equality must hold
-    * throughout and at the end. */
+    * throughout and at the end. The folds (`compact`, `compactTablet`,
+    * `compactDeltas(tailOnly = true)`, `mergeTailDeltas`) run between them,
+    * and CDC windows across folds and kill points match the model. */
   private def runCrashCase(seed: Long, nOps: Int): Unit = {
     val rnd = new Random(seed)
     val loc = tableDir(s"graft-crashfuzz-$seed-")
@@ -870,10 +904,12 @@ class FuzzSpec extends AnyFunSuite {
     val dataDir = java.nio.file.Paths.get(loc, "data")
     val metaDir = graft.catalog.TableMeta.metaDir(loc)
     var mid: Option[(Long, Map[Int, Int])] = None
+    val snaps = mutable.ArrayBuffer((t.currentVersion, Map.empty[Int, Int]))
+    val folds = mutable.ArrayBuffer[Int]()
     for (i <- 0 until nOps) {
       if (i == nOps / 2) mid = Some((t.currentVersion, model.toMap))
       val k = rnd.nextInt(Keyspace); val v = rnd.nextInt(1000)
-      rnd.nextInt(6) match {
+      rnd.nextInt(10) match {
         case 0 | 1 | 2 => t.upsert(df(k, v)); model(k) = v
         case 3 =>
           t.delete(Seq(k).toDF("k"), ignore = true); model.remove(k)
@@ -894,7 +930,12 @@ class FuzzSpec extends AnyFunSuite {
           backdate(vf)
           val rolled = graft.tools.GraftTools.fsckRepair(loc, graceMs = 0)
           assert(rolled.exists(_.endsWith(vf.getFileName.toString)), rolled.toString)
+        case 6 => t.compact(); folds += snaps.size
+        case 7 => t.compactTablet(bucket = Some(rnd.nextInt(2))); folds += snaps.size
+        case 8 => t.compactDeltas(tailOnly = true); folds += snaps.size
+        case 9 => t.mergeTailDeltas(); folds += snaps.size
       }
+      snaps += ((t.currentVersion, model.toMap))
       if (i % 10 == 9) { // periodic full-state check against the model
         val got = t.scan().collect().map(r => r.getInt(0) -> r.getInt(1)).toMap
         assert(got == model.toMap, s"state diverged at op $i seed=$seed")
@@ -905,6 +946,8 @@ class FuzzSpec extends AnyFunSuite {
     formatReads(t, model.toMap, mid, seed)((d, _) =>
       d.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap)
     assert(graft.tools.GraftTools.fsck(loc).isEmpty)
+    checkWindows(t, snaps.toSeq, windowsOver(rnd, snaps.size, folds.toSeq.take(4), 4),
+      Seq("v"), seed)(_.getInt(1))
   }
 
   test("random kill-point injection: repair keeps the table exact (seed 13)") {

@@ -534,4 +534,33 @@ class GraftTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     t.dropRangePartition("1996")
     assert(t.scan().select("id").as[Long].collect().toSet == Set(1L, 3L, 6L))
   }
+
+  test("a key moved into a dropped range stays dead: its older rows do not come back") {
+    import graft.catalog.RangeComponent
+    def ts(y: Int) = java.sql.Timestamp.valueOf(s"$y-06-01 00:00:00")
+    def ids(t: GraftTable) = t.scan().select("id").as[Long].collect().toSet
+    // key 1 starts in 1995 (a base row), key 2 in 1995 as a delta; both
+    // move to 1997 by upsert, and 1997 is dropped
+    for (bound <- Seq(None, Some("1"))) {
+      bound.foreach(spark.conf.set("graft.mor.broadcastBytes", _))
+      try {
+        val data = Seq((1L, ts(1995), "a"), (3L, ts(1996), "c")).toDF("id", "d", "v")
+        val t = GraftTable.create(spark, tmp(), "mv", data.schema, Seq("id"),
+          Seq(HashComponent(Seq("id"), 2)), Some(RangeComponent("d", "year")),
+          data = Some(data))
+        t.upsert(Seq((2L, ts(1995), "b")).toDF("id", "d", "v"))
+        t.upsert(Seq((1L, ts(1997), "a7"), (2L, ts(1997), "b7")).toDF("id", "d", "v"))
+        t.dropRangePartition("1997")
+        val tag = s"bound=$bound"
+        assert(ids(t) == Set(3L), tag)
+        intercept[PrimaryKeyException](t.delete(Seq(1L).toDF("id")))
+        t.insert(Seq((2L, ts(1996), "b6")).toDF("id", "d", "v"))
+        assert(ids(t) == Set(2L, 3L), tag)
+        assert(t.mergeTailDeltas(), tag) // the fold keeps the tombstones
+        assert(ids(t) == Set(2L, 3L), tag)
+        t.compact()
+        assert(t.meta.rangeDrops.isEmpty && ids(t) == Set(2L, 3L), tag)
+      } finally spark.conf.unset("graft.mor.broadcastBytes")
+    }
+  }
 }

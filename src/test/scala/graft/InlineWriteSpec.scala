@@ -84,6 +84,33 @@ class InlineWriteSpec extends AnyFunSuite {
     }
   }
 
+  test("bounded writes start no process and write Hadoop's file modes") {
+    val t = table(Files.createTempDirectory("graft-inw0-").toString + "/t", "hash")
+    // every process the writes start on this thread (a `chmod` per file,
+    // directory and checksum file when Hadoop sets permissions by fork)
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try writes(t) finally rec.stop()
+    val dump = Files.createTempFile("graft-inw0-", ".jfr")
+    try {
+      rec.dump(dump)
+      val me = Thread.currentThread.getId
+      val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
+        .filter(e => e.getEventType.getName == "jdk.ProcessStart" &&
+          e.getThread != null && e.getThread.getJavaThreadId == me)
+        .map(_.getString("command"))
+      assert(forks.isEmpty, s"${forks.size} processes started: ${forks.take(3)}")
+    } finally { rec.close(); Files.deleteIfExists(dump) }
+    val files = t.meta.deltaFiles.map(f => java.nio.file.Paths.get(f.path))
+    assert(files.nonEmpty)
+    files.foreach { f =>
+      val mode = java.nio.file.attribute.PosixFilePermissions.toString(
+        Files.getPosixFilePermissions(f))
+      assert(mode == "rw-r--r--", s"$f")
+    }
+  }
+
   /** Per version: the operation and, per (seq, bucket, rangeKey, fold
     * token), the rows, key interval and column ids of its non-empty delta
     * files — what a write decides, whatever its file count. */

@@ -131,6 +131,11 @@ class ScanMetricsSpec extends AnyFunSuite {
     assert(metric(tail, GraftV2Scan.DeltasBroadcast) >= 1L)
     assert(metric(tail, GraftV2Scan.DeltasAttached) == 0L)
     assert(metric(tail, GraftV2Scan.DeltasSpilled) == 0L)
+    // the new tail file decodes once; the next scan reads it decoded
+    assert(metric(tail, GraftV2Scan.DeltasDecoded) == metric(tail, GraftV2Scan.DeltasBroadcast))
+    val again = scanNode(spark.sql(s"SELECT k, v FROM $sqlName"))
+    assert(metric(again, GraftV2Scan.DeltasBroadcast) >= 1L)
+    assert(metric(again, GraftV2Scan.DeltasDecoded) == 0L)
 
     // flushed (routed) deltas → attach transport, nothing broadcast
     t.compactDeltas()
@@ -138,6 +143,7 @@ class ScanMetricsSpec extends AnyFunSuite {
     assert(metric(attached, GraftV2Scan.DeltasAttached) >= 1L)
     assert(metric(attached, GraftV2Scan.DeltasBroadcast) == 0L)
     assert(metric(attached, GraftV2Scan.DeltasSpilled) == 0L)
+    assert(metric(attached, GraftV2Scan.DeltasDecoded) == 0L)
 
     // force the spill overlay: a fresh tail past a 1-byte bound
     t.upsert(Seq((9L, "u9")).toDF("k", "v"))
@@ -146,6 +152,7 @@ class ScanMetricsSpec extends AnyFunSuite {
       val spilled = scanNode(spark.sql(s"SELECT v FROM $sqlName"))
       assert(metric(spilled, GraftV2Scan.DeltasSpilled) >= 1L)
       assert(metric(spilled, GraftV2Scan.DeltasBroadcast) == 0L)
+      assert(metric(spilled, GraftV2Scan.DeltasDecoded) == 0L)
     } finally spark.conf.unset("graft.mor.broadcastBytes")
   }
 }
