@@ -131,11 +131,9 @@ object PartitionPruner {
         else {
           // sorted once: a file's interval holds a value iff the least
           // value at or above its low end is at or below its high end
-          val sorted = es.flatten.distinct.sorted.toArray
+          val sorted = es.flatten.distinct.sorted.toIndexedSeq
           Some { iv =>
-            val i = java.util.Arrays.binarySearch(sorted.asInstanceOf[Array[AnyRef]],
-              iv._1: AnyRef)
-            val at = if (i >= 0) i else -i - 1
+            val at = sorted.search(iv._1).insertionPoint
             at < sorted.length && sorted(at) <= iv._2
           }
         }
