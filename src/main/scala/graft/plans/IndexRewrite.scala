@@ -672,10 +672,9 @@ object IndexRewrite extends Rule[LogicalPlan] {
         // output is bounded either way; only the dim's own scan size
         // decides whether AQE's runtime coalescing is worth its per-stage
         // jobs)
-        val vals = GraftTable.withStaticPlan(spark,
-          GraftTable.planBytes(dimKeys) <= GraftTable.staticPlanMaxBytes) {
-          dimKeys.collect()
-        }.map(_.get(0))
+        val vals = GraftTable.planned(dimKeys,
+          Some(GraftTable.planBytes(dimKeys, GraftTable.StaticPlanBytes)))
+          .collect().map(_.get(0))
         // over the bound: the dim is key-rich enough that this IS a join,
         // not a point-read fan — keep the scan plan. Empty: the join is
         // empty anyway; the scan plan handles it without a probe.

@@ -3,7 +3,7 @@ package graft.plans
 import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.rules.Rule
 
@@ -13,9 +13,10 @@ import graft.tools.{DerivedTables, MaterializedRollup, SecondaryIndex}
 
 /**
  * The serving half of every derived table, in one place: ONE
- * session-keyed registry of armed derived tables, which injects each
- * kind's rewrite rule into `spark.experimental.extraOptimizations` once
- * per session — a persisted ROLLUP arms [[RollupRewrite]], a persisted
+ * session-keyed registry of armed derived tables (a clone an engine action
+ * plans in reads its owner's entries, GraftSqlBridge.owner), which injects
+ * each kind's rewrite rule into `spark.experimental.extraOptimizations`
+ * once per session — a persisted ROLLUP arms [[RollupRewrite]], a persisted
  * SECONDARY INDEX arms [[IndexRewrite]]; both rules read their own kind's
  * entries through [[armed]]. Serving state is session-scoped (weak per
  * session: sessions die with their tests), and it outlives the building
@@ -63,7 +64,7 @@ object ServingRewrites extends Logging {
     new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, Entry]]()
 
   private def entries(spark: SparkSession): Option[ConcurrentHashMap[String, Entry]] =
-    registry.synchronized(Option(registry.get(spark)))
+    registry.synchronized(Option(registry.get(GraftSqlBridge.owner(spark))))
 
   /** Arm `t` — a persisted rollup or secondary index — in `spark`, and
     * inject its kind's rule (once per session). The registry's monitor
@@ -77,24 +78,27 @@ object ServingRewrites extends Logging {
     val k = kindOf(p).getOrElse(throw new IllegalArgumentException(
       s"$loc is not a materialized rollup or a secondary index"))
     registry.synchronized {
-      registry.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, Entry]())
+      registry.computeIfAbsent(GraftSqlBridge.owner(spark),
+        _ => new ConcurrentHashMap[String, Entry]())
         .put(loc, Entry(k, p(k.srcLocKey), k.cols(p)))
       inject(spark, k.rule)
     }
   }
 
-  /** Append `rule` (and `strategies`) to `spark`'s extra optimizations
-    * (planner strategies) once, under the registry's monitor. The inline
-    * point read ([[InlineReads]]) stays the last rule, so every serve sees
-    * the plan before it. */
+  /** Append `rule` (and `strategies`) to the extra optimizations (planner
+    * strategies) of `spark` and of the session it serves for, once each,
+    * under the registry's monitor. The inline point read ([[InlineReads]])
+    * stays the last rule, so every serve sees the plan before it. */
   private[plans] def inject(spark: SparkSession, rule: Rule[LogicalPlan],
       strategies: Seq[org.apache.spark.sql.execution.SparkStrategy] = Nil): Unit =
     registry.synchronized {
-      val exp = spark.experimental
-      if (!exp.extraOptimizations.contains(rule)) {
-        val (inline, serving) = exp.extraOptimizations.partition(_ eq InlineReads)
-        exp.extraOptimizations = (serving :+ rule) ++ inline
-        exp.extraStrategies = exp.extraStrategies ++ strategies
+      Seq(spark, GraftSqlBridge.owner(spark)).distinct.foreach { s =>
+        val exp = s.experimental
+        if (!exp.extraOptimizations.contains(rule)) {
+          val (inline, serving) = exp.extraOptimizations.partition(_ eq InlineReads)
+          exp.extraOptimizations = (serving :+ rule) ++ inline
+          exp.extraStrategies = exp.extraStrategies ++ strategies
+        }
       }
     }
 

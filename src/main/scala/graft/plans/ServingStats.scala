@@ -2,7 +2,7 @@ package graft.plans
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftSqlBridge, SparkSession}
 
 /**
  * Per-session serving observability — the queryable half of the serving
@@ -15,11 +15,12 @@ import org.apache.spark.sql.SparkSession
  * dropping) becomes visible in one procedure call instead of a log grep.
  *
  * Counts are in-memory and session-scoped (weak per-session maps, like the
- * rewrite registries): serving is a plan-time property of THIS session's
- * armed rules, and a restart re-arms from persisted state anyway. "Not
- * applicable" outcomes (a predicate the index cannot express, a covering
- * need the index does not carry) are NOT counted — they are the rewrite
- * not matching, not the serving layer failing.
+ * rewrite registries; a clone an engine action plans in counts for its
+ * owner, GraftSqlBridge.owner): serving is a plan-time property of THIS
+ * session's armed rules, and a restart re-arms from persisted state
+ * anyway. "Not applicable" outcomes (a predicate the index cannot
+ * express, a covering need the index does not carry) are NOT counted —
+ * they are the rewrite not matching, not the serving layer failing.
  */
 object ServingStats {
 
@@ -32,7 +33,7 @@ object ServingStats {
 
   private def map(spark: SparkSession): ConcurrentHashMap[String, Counts] =
     bySession.synchronized {
-      bySession.computeIfAbsent(spark,
+      bySession.computeIfAbsent(GraftSqlBridge.owner(spark),
         _ => new ConcurrentHashMap[String, Counts]())
     }
 

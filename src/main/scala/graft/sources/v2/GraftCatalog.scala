@@ -2264,13 +2264,11 @@ class GraftV2Scan(meta: TableMeta, requiredSchema: StructType,
         // a small tail's spill is one static-planned job, not one per
         // adaptive stage: a point read (an index probe) that has to build
         // it pays that job inside its own latency
-        GraftTable.withStaticPlan(spark,
-          GraftTable.deltaBytes(m.deltaFiles) <= GraftTable.staticPlanMaxBytes) {
-          spillFrame
-            .repartition(col(GraftV2Scan.SpillRouteCol))
-            .write.partitionBy(GraftV2Scan.SpillRouteCol)
-            .mode("overwrite").parquet(tmpDir.toString)
-        }
+        GraftTable.planned(spillFrame, Some(BigInt(GraftTable.deltaBytes(m.deltaFiles))))
+          .repartition(col(GraftV2Scan.SpillRouteCol))
+          .write.partitionBy(GraftV2Scan.SpillRouteCol)
+          .options(org.apache.spark.sql.GraftSqlBridge.localWriteFs)
+          .mode("overwrite").parquet(tmpDir.toString)
         try java.nio.file.Files.move(tmpDir, spillDir,
           java.nio.file.StandardCopyOption.ATOMIC_MOVE)
         catch {

@@ -71,11 +71,8 @@ case class ColumnarMorSupport(
  *                   of internal data columns)
  * @param seqIdx     position of the seq column; None for spill slices,
  *                   which already hold the latest state per key
- * @param routeParts route -> its slice's parquet paths. A split rebuilds its
- *                   own file partition executor-side, so reads redirect
- *                   through the executor-local slice cache
- *                   (SpillLocalCache; slice files are immutable — commits
- *                   only add new paths — so a local copy never goes stale)
+ * @param routeParts route -> its slice's parquet paths, which a split reads
+ *                   through its own file partition, rebuilt executor-side
  */
 case class MorSlices(
     deltaFactory: PartitionReaderFactory,
@@ -165,7 +162,7 @@ class MorOverlayReaderFactory(
     val t = tail.value
     val s = slices.get
     val dp: InputPartition = org.apache.spark.sql.GraftSqlBridge.filePartition(
-      0, paths.map(SpillLocalCache.localize), None)
+      0, paths, None)
     val dr = s.deltaFactory.createReader(dp)
     // a spill slice carries no seq, so only the op decides between a key's
     // owner row and its dead-set-only duplicate

@@ -2386,8 +2386,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       guardDupKeys: Boolean = false, dropDupKeys: Boolean = false,
       propsUpdate: Map[String, Option[String]] = Map.empty,
       sizeHintBytes: Option[Long] = None): Unit = {
+    val bound = GraftTable.broadcastDeltaBytes
     val estBytes = sizeHintBytes.map(BigInt(_))
-      .getOrElse(GraftTable.planBytes(rows))
+      .getOrElse(GraftTable.planBytes(rows, bound))
     val props = propsUpdate.foldLeft(m.propsMap) {
       case (acc, (k, Some(value))) => acc + (k -> value)
       case (acc, (k, None)) => acc - k
@@ -2395,12 +2396,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     // a known-tiny batch plans statically: a derived batch's collect (or
     // the job path's write) runs as ONE job, not one per shuffle stage;
     // big batches keep AQE
-    val onDriver = estBytes <= GraftTable.broadcastDeltaBytes
-    // local rows commit on the driver with no job: no static plan
-    try GraftTable.withStaticPlan(spark, estBytes <= GraftTable.staticPlanMaxBytes &&
-        !(onDriver && GraftTable.isLocal(rows))) {
-      if (onDriver)
-        commitOnDriver(m, rows, op, guardDupKeys, dropDupKeys, props)
+    try {
+      if (estBytes <= bound)
+        commitOnDriver(m, rows, op, guardDupKeys, dropDupKeys, props, estBytes)
       else commitWithJob(m, rows, op, guardDupKeys, dropDupKeys, props, estBytes)
     } catch { case e: Throwable => throw guardError(e) }
   }
@@ -2452,10 +2450,12 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
           limited.map(c => s"${c.name} varchar(${c.varcharLength.get})").mkString(", ") + ")")))
   }
 
-  /** Runs `checks` over `rows`, one bounded probe each. */
-  private def requireRows(rows: DataFrame, checks: Seq[(Column, () => Throwable)]): Unit =
+  /** Runs `checks` over `rows` (of `estBytes`, [[GraftTable.planned]]),
+    * one bounded probe each. */
+  private def requireRows(rows: DataFrame, checks: Seq[(Column, () => Throwable)],
+      estBytes: Option[BigInt] = None): Unit =
     checks.foreach { case (bad, error) =>
-      if (rows.filter(bad).limit(1).count() > 0) throw error()
+      if (GraftTable.planned(rows.filter(bad).limit(1), estBytes).count() > 0) throw error()
     }
 
   /** Errors when a write batch touches a non-covered range ([[coverageCheck]]). */
@@ -2505,13 +2505,16 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     * one PK-sorted file ([[writeFileset]]). A failed guard leaves no
     * attempt dir: it fails before the write. */
   private def commitOnDriver(m: TableMeta, rows: DataFrame, op: String,
-      guardDupKeys: Boolean, dropDupKeys: Boolean, props: Map[String, String]): Unit = {
+      guardDupKeys: Boolean, dropDupKeys: Boolean, props: Map[String, String],
+      estBytes: BigInt): Unit = {
     import org.apache.spark.sql.catalyst.expressions.Predicate
     val v = m.version + 1
     val schema = deltaStruct(m)
-    val collected = GraftSqlBridge.collectInternal(rows.select(
-      m.columns.map(c => col(c.name).cast(c.dataType).as(c.name)) ++
-        Seq(col(OpCol), lit(v).as(SeqCol)): _*))
+    val batch = rows.select(m.columns.map(c => col(c.name).cast(c.dataType).as(c.name)) ++
+      Seq(col(OpCol), lit(v).as(SeqCol)): _*)
+    // local rows collect with no job under any plan
+    val collected = GraftSqlBridge.collectInternal(
+      if (GraftTable.isLocal(rows)) batch else GraftTable.planned(batch, Some(estBytes)))
     rowChecks(m, rows.columns.toSeq).foreach { case (bad, error) =>
       val p = Predicate.createInterpreted(bindOn(spark, schema, _.filter(bad))._2.get)
       if (collected.exists(p.eval)) throw error()
@@ -2539,7 +2542,7 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
       guardDupKeys: Boolean, dropDupKeys: Boolean, props: Map[String, String],
       estBytes: BigInt): Unit = {
     val rows = if (dropDupKeys) rows0.dropDuplicates(m.keyCols) else rows0
-    requireRows(rows, rowChecks(m, rows.columns.toSeq))
+    requireRows(rows, rowChecks(m, rows.columns.toSeq), Some(estBytes))
     val v = m.version + 1
     val out0 = rows.withColumn(SeqCol, lit(v))
     // Intra-batch duplicate-key guard, evaluated INSIDE the write job (a
@@ -2551,7 +2554,8 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
     // so that rare shape checks "more than one row" with a limit(2) probe
     // instead ([[keysAllFoldable]]).
     val foldable = guardDupKeys && keysAllFoldable(m, out0)
-    if (foldable && rows.limit(2).count() > 1) throw constantKeyError(m, op)
+    if (foldable && GraftTable.planned(rows.limit(2), Some(estBytes)).count() > 1)
+      throw constantKeyError(m, op)
     val out = if (guardDupKeys && !foldable) {
       // size the guard window's exchange by the batch's estimated bytes —
       // the same derivation as the CDC fold; AQE previously re-coalesced
@@ -2619,9 +2623,11 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
    * `c<v>_<token>_<nonce>` ([[GraftTable.attemptDir]]). It returns the
    * files' manifest entries stamped `seq` ([[GraftTable.fileMetas]]).
    * `planBytes` is the write's input size: at or under
-   * [[GraftTable.staticPlanMaxBytes]] the write plans statically, None
-   * keeps AQE. `dropEmpty` deletes zero-row part files (and the whole dir
-   * when nothing is left).
+   * [[GraftTable.StaticPlanBytes]] the write plans statically, None
+   * keeps AQE. Both settings hold for the write alone: it plans in a clone
+   * of the session ([[GraftSqlBridge.planIn]]), and its writer options
+   * name [[GraftSqlBridge.localWriteFs]]. `dropEmpty` deletes zero-row
+   * part files (and the whole dir when nothing is left).
    *
    * This writes through a Spark job. A delta fileset whose rows are
    * already on the driver — a bounded commit ([[commitOnDriver]]) or fold
@@ -2629,10 +2635,13 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
    * written there by the overload below, into the same layout; every
    * `Base` layout and every input past the bound takes this path.
    */
-  private def writeFileset(a: Attempt, m: TableMeta, rows: DataFrame, v: Long,
+  private def writeFileset(a: Attempt, m: TableMeta, rows0: DataFrame, v: Long,
       token: String, layout: Layout, seq: Long, planBytes: Option[BigInt],
       dropEmpty: Boolean = false): Seq[DataFileMeta] = {
     val dir = a.add(attemptDir(location, v, token))
+    val rows = GraftSqlBridge.planIn(rows0, GraftTable.staticPlan(planBytes) +
+      (org.apache.spark.sql.internal.SQLConf.PARQUET_OUTPUT_TIMESTAMP_TYPE.key ->
+        FileTimestampType))
     // every layout PK-sorts within each output file — except the
     // clustered rewrite, whose file order is (z, PK)
     val (kind, sorted) = layout match {
@@ -2681,13 +2690,9 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
           (c.encoding.get == "dictionary").toString)
       }
       effectiveCodec(m).fold(enc)(cc => enc.option("compression", cc))
+        .options(GraftSqlBridge.localWriteFs)
     }
-    GraftTable.withStaticPlan(spark,
-      planBytes.exists(_ <= GraftTable.staticPlanMaxBytes)) {
-      withMicrosTimestamps {
-        writes.foreach { case (w, d) => withAttrs(w).mode("overwrite").parquet(d) }
-      }
-    }
+    writes.foreach { case (w, d) => withAttrs(w).mode("overwrite").parquet(d) }
     val files = fileMetas(spark, m, listParquet(dir), kind, seq, Some(dir), sorted)
     if (!dropEmpty) files
     else {
@@ -2773,20 +2778,6 @@ class GraftTable private[table] (val spark: SparkSession, val location: String) 
         names.length, Some(names.length + 1))
       writeFileset(a, m, latest.values.asScala.toArray, v, token, layout, seq)
     } else writeFileset(a, m, latestDeltas(m, fold), v, token, layout, seq, Some(BigInt(bytes)))
-  }
-
-  /** Runs `f` with parquet timestamps written as INT64 micros — Spark's
-    * INT96 default carries footer statistics with no defined ordering, so
-    * timestamp key columns would get no usable min/max (no row-group
-    * pruning, no recorded key bounds). Session conf, so set-and-restore. */
-  private def withMicrosTimestamps[A](f: => A): A = {
-    val k = "spark.sql.parquet.outputTimestampType"
-    val prev = spark.conf.getOption(k)
-    spark.conf.set(k, FileTimestampType)
-    try f finally prev match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
-    }
   }
 
   /** The base layouts over `out` (physical rows with their route columns):
@@ -3178,38 +3169,41 @@ object GraftTable {
     * folds in one task, a backfill window still spreads cluster-wide. */
   val CdcFoldTargetBytes: Long = 64L * 1024 * 1024
 
-  /** Input-bytes ceiling under which an engine-internal operation plans
-    * STATICALLY (adaptive execution off for that one query) — override with
-    * `graft.staticPlan.maxBytes`, 0 disables. AQE materializes every
-    * exchange as its own job plus a driver replan; on the engine's
-    * maintenance/commit paths every exchange is already explicitly sized
-    * from manifest bytes and every small join side explicitly
-    * broadcast/local, so for a manifest-known-tiny input those per-stage
-    * round-trips are the dominant cost of the whole operation (a 1-row
-    * index refresh ran 11 jobs) with nothing left for AQE to decide. The
-    * gate is the operation's INPUT BYTES, never a core count: a 100 TB
-    * table's 1-row maintenance tick plans statically, a backfill keeps
-    * AQE. */
-  def staticPlanMaxBytes: Long =
-    org.apache.spark.sql.SparkSession.active.conf
-      .getOption("graft.staticPlan.maxBytes").map(_.toLong)
-      .getOrElse(64L * 1024 * 1024)
+  /** Input bytes at or under which an engine action plans STATICALLY
+    * (adaptive execution off for that one action, [[planned]]). AQE
+    * materializes every exchange as its own job plus a driver replan; on
+    * the engine's maintenance/commit paths every exchange is already
+    * explicitly sized from manifest bytes and every small join side
+    * explicitly broadcast/local, so for a manifest-known-tiny input those
+    * per-stage round-trips are the dominant cost of the whole operation
+    * (a 1-row index refresh ran 11 jobs) with nothing left for AQE to
+    * decide. The gate is the action's INPUT BYTES, never a core count: a
+    * 100 TB table's 1-row maintenance tick plans statically, a backfill
+    * keeps AQE. */
+  val StaticPlanBytes: Long = 64L * 1024 * 1024
 
-  /** Runs `body` with adaptive execution OFF when `tiny` (see
-    * [[staticPlanMaxBytes]]); set-and-restore on the session conf, the
-    * same scoping as the writer's timestamp-type flip. Queries PLANNED inside `body`
-    * get one job per action instead of one per query stage. */
-  private[graft] def withStaticPlan[A](spark: org.apache.spark.sql.SparkSession,
-      tiny: Boolean)(body: => A): A = {
-    if (!tiny || staticPlanMaxBytes <= 0) return body
-    val k = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(k)
-    if (prev.contains("false")) return body
-    spark.conf.set(k, "false")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(k, v)
-      case None => spark.conf.unset(k)
-    }
+  /** The SQL settings of an engine action over `inputBytes` of input:
+    * adaptive execution off when the input is known and at most
+    * [[StaticPlanBytes]], else none. */
+  private[graft] def staticPlan(inputBytes: Option[BigInt]): Map[String, String] =
+    if (inputBytes.exists(_ <= StaticPlanBytes))
+      Map(org.apache.spark.sql.internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED.key -> "false")
+    else Map.empty
+
+  /** `df` as one engine action over `inputBytes` of input runs it
+    * ([[GraftSqlBridge.planIn]] with [[staticPlan]]): a static plan, one
+    * job per action instead of one per query stage, when the input is
+    * small, planned in a clone of the session, so no other query of the
+    * session sees the setting. */
+  private[graft] def planned(df: DataFrame, inputBytes: Option[BigInt]): DataFrame =
+    GraftSqlBridge.planIn(df, staticPlan(inputBytes))
+
+  /** Persists `df` (memory and disk) as [[planned]] plans it, and returns
+    * `df`: the cache entry matches `df`'s plan in any session, so every
+    * later action over `df` reads it, and `df.unpersist` drops it. */
+  private[graft] def persisted(df: DataFrame, inputBytes: Option[BigInt]): DataFrame = {
+    planned(df, inputBytes).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    df
   }
 
   /** The projection and filter `body` applies to rows of `schema`, bound
@@ -3277,20 +3271,20 @@ object GraftTable {
     local(df.queryExecution.analyzed)
   }
 
-  /** Size estimate of a frame's input for the tiny-gate. The ANALYZED
-    * plan's estimate decides when it already fits — running the optimizer
-    * just to size a commit costs real driver time (Catalyst folds
-    * projections over LocalRelations eagerly, re-evaluating a streaming
-    * batch's rows), and analysis-time estimates only shrink under
-    * optimization (pushdown prunes scans), so "analyzed says tiny" is
-    * final. Bigger analyzed estimates consult the optimized plan (a
-    * point mutation over a huge table is tiny only after file pruning).
-    * Unavailable/inflated estimates (windows, joins) return huge — the
-    * conservative direction. */
-  private[graft] def planBytes(df: org.apache.spark.sql.DataFrame): BigInt =
+  /** Size estimate of a frame's input, exact enough to compare with
+    * `bound`. The ANALYZED plan's estimate decides when it already fits —
+    * running the optimizer just to size a commit costs real driver time
+    * (Catalyst folds projections over LocalRelations eagerly,
+    * re-evaluating a streaming batch's rows), and analysis-time estimates
+    * only shrink under optimization (pushdown prunes scans), so "analyzed
+    * fits" is final. A bigger analyzed estimate consults the optimized
+    * plan (a point mutation over a huge table fits only after file
+    * pruning). Unavailable/inflated estimates (windows, joins) return
+    * huge — the conservative direction. */
+  private[graft] def planBytes(df: org.apache.spark.sql.DataFrame, bound: Long): BigInt =
     try {
       val a = df.queryExecution.analyzed.stats.sizeInBytes
-      if (a <= BigInt(staticPlanMaxBytes)) a
+      if (a <= BigInt(bound)) a
       else df.queryExecution.optimizedPlan.stats.sizeInBytes
     } catch { case _: Exception => BigInt(Long.MaxValue) }
 
@@ -3887,7 +3881,7 @@ object GraftTable {
         if (range.exists(_.isBounds)) t.requireCovered(m0, conformed)
         t.publish { a =>
           m0.copy(baseFiles = t.writeFileset(a, m0, conformed, 1L, BaseToken,
-            Layout.Base(None), 1L, Some(planBytes(conformed))))
+            Layout.Base(None), 1L, Some(planBytes(conformed, StaticPlanBytes))))
         }
       case None => TableMeta.write(m0)
     }

@@ -59,16 +59,14 @@ class GraftTxn private[table] (t: GraftTable, m: TableMeta) {
     // commonly re-read the base table (UPDATE-shaped upserts), so persist
     // it across the two actions (spills for big batches; strictly one
     // materialization instead of two computations either way).
-    GraftTable.withStaticPlan(t.spark,
-      GraftTable.planBytes(all) <= GraftTable.staticPlanMaxBytes) {
-      val cached = all.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try commitValidated(keys, cached)
-      finally cached.unpersist(blocking = false)
-    }
+    val plan = Some(GraftTable.planBytes(all, GraftTable.StaticPlanBytes))
+    val cached = GraftTable.persisted(all, plan)
+    try commitValidated(keys, cached, plan)
+    finally cached.unpersist(blocking = false)
   }
 
   private def commitValidated(keys: Seq[String],
-      all: DataFrame): Unit = {
+      all: DataFrame, plan: Option[BigInt]): Unit = {
     // Validation runs as ONE job: the duplicate-key check, the strict-insert
     // presence clash, and the strict-delete absence check are independent
     // probes of the txn-start snapshot, so they union into a single action
@@ -88,8 +86,8 @@ class GraftTxn private[table] (t: GraftTable, m: TableMeta) {
         batch.join(t.txnPresence(m, batch), keys, "left_anti")
           .limit(1).select(lit("delete_missing").as("issue"))
       }
-    val issues = (Seq(dup) ++ insertClash ++ deleteMissing)
-      .reduce(_ unionByName _).collect().map(_.getString(0)).toSet
+    val issues = GraftTable.planned((Seq(dup) ++ insertClash ++ deleteMissing)
+      .reduce(_ unionByName _), plan).collect().map(_.getString(0)).toSet
     if (issues("dup"))
       throw new PrimaryKeyException(
         s"transaction touches a primary key more than once on ${m.name}")

@@ -3,7 +3,6 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.storage.StorageLevel
 
 import graft.catalog.{HashComponent, TableMeta}
 import graft.table.GraftTable
@@ -248,18 +247,14 @@ object DerivedTables {
    *     [[GraftTable.broadcastDeltaBytes]] — the steady-state maintenance
    *     tick — is read and folded on the driver, its source rows are a
    *     driver keyed read ([[GraftTable.readByKeys]]) and its derivation
-   *     joins local rows on the driver ([[keyJoin]]). A kind whose bounded
-   *     derivation over those local rows plans no exchange
-   *     (`exchangeFree`: projections, key joins, a single-partition
-   *     aggregate) runs at most one job per action under any plan, so such
-   *     a window is decided up front to flip no session conf. Any other
-   *     tiny window runs under ONE static plan per action: the CDC fold
-   *     exchange is delta-byte-sized and every small join side is a
-   *     LocalRelation or an explicit broadcast, so AQE's per-stage jobs
-   *     would be most of its cost. Snapshot-diff or backfill windows keep
-   *     AQE, and persist the
-   *     change frame BEFORE the bounded probe so an over-bound fallback
-   *     reuses its partitions.
+   *     joins local rows on the driver ([[keyJoin]]). Any other tiny
+   *     window's probe, persist and commit each run under ONE static plan
+   *     ([[GraftTable.planned]]): the CDC fold exchange is
+   *     delta-byte-sized and every small join side is a LocalRelation or
+   *     an explicit broadcast, so AQE's per-stage jobs would be most of
+   *     its cost. Snapshot-diff or backfill windows keep AQE, and persist
+   *     the change frame BEFORE the bounded probe so an over-bound
+   *     fallback reuses its partitions.
    *   - ONE bounded probe collects up to `maxPruneKeys + 1` change rows.
    *     An empty window (a compaction, no logical change) only advances
    *     the watermark. A bounded window derives from a LocalRelation of
@@ -284,7 +279,7 @@ object DerivedTables {
    */
   private[tools] def refresh(spark: SparkSession, derived: GraftTable,
       srcLocKey: String, srcVersionKey: String, maxPruneKeys: Int,
-      assertPrune: Boolean, exchangeFree: Boolean = false)(
+      assertPrune: Boolean)(
       window: (GraftTable, Long, Long) => Derivation)
       : Boolean = lockFor(derived.location).synchronized {
     val p = derived.properties
@@ -294,52 +289,50 @@ object DerivedTables {
     if (v1 == v0) return false
     val watermark = Map(srcVersionKey -> Some(v1.toString))
     val winBytes = src.cdcWindowBytes(v0, v1)
-    val winBig = winBytes.forall(_ > GraftTable.staticPlanMaxBytes)
-    // a window within the driver bound is read, folded and key-read on the
-    // driver; when the kind's derivation over those local rows plans no
-    // exchange, a static plan would change no job and the session conf
-    // stays as it is
-    val driverOnly = exchangeFree && winBytes.exists(_ <= GraftTable.broadcastDeltaBytes)
-    GraftTable.withStaticPlan(spark, !winBig && !driverOnly) {
-      val d = window(src, v0, v1)
-      def persisted = Some(d.changes.persist(StorageLevel.MEMORY_AND_DISK))
-      var cached = if (winBig) persisted else None
-      try {
-        val rows = cached.getOrElse(d.changes).limit(maxPruneKeys + 1).collect()
-        if (rows.isEmpty) derived.setProperties(watermark)
-        else {
-          val bounded = rows.length <= maxPruneKeys
-          val (changed, sourceRows) =
-            if (bounded) {
-              val keyIdx = d.keyCols.map(d.changes.schema.fieldIndex)
-              (localFrame(spark, d.changes.schema, rows),
-                src.readByKeys(d.readAt,
-                  StructType(d.keyCols.map(d.changes.schema(_))),
-                  rows.map(r => Row.fromSeq(keyIdx.map(r.get))).distinct,
-                  assertPrune))
-            } else {
-              if (assertPrune) throw new IllegalStateException(
-                s"refresh of ${derived.location} fell back to the semi-join " +
-                  s"path (> $maxPruneKeys changed keys)")
-              if (cached.isEmpty) cached = persisted
-              val changed = cached.get
-              // a change frame of exactly the key columns (touchedKeys) is
-              // already a distinct key set
-              val keys =
-                if (changed.columns.toSeq == d.keyCols) changed
-                else changed.select(d.keyCols.map(col): _*).distinct()
-              (changed, src.scan(d.readAt).join(keys, d.keyCols, "left_semi"))
-            }
-          val (fresh, stale) = d.derive(changed, sourceRows, bounded)
-          // fresh + stale per changed key: ~2x the window, a manifest-
-          // derived size for the commit's guard-window exchange (the
-          // optimizer's estimate through the joins is useless); local rows
-          // commit on the driver with no job
-          commit(derived, fresh, stale, watermark, winBytes.map(b => b * 2 + 1024))
-        }
-        true
-      } finally cached.foreach(_.unpersist(blocking = false))
-    }
+    val winBig = winBytes.forall(_ > GraftTable.StaticPlanBytes)
+    val d = window(src, v0, v1)
+    def persisted = Some(GraftTable.persisted(d.changes, winBytes.map(BigInt(_))))
+    var cached = if (winBig) persisted else None
+    try {
+      // a window within the driver bound comes back as local rows, which
+      // collect with no job under any plan
+      val changes = cached.getOrElse(d.changes)
+      val probe = changes.limit(maxPruneKeys + 1)
+      val rows = (if (GraftTable.isLocal(changes)) probe
+        else GraftTable.planned(probe, winBytes.map(BigInt(_)))).collect()
+      if (rows.isEmpty) derived.setProperties(watermark)
+      else {
+        val bounded = rows.length <= maxPruneKeys
+        val (changed, sourceRows) =
+          if (bounded) {
+            val keyIdx = d.keyCols.map(d.changes.schema.fieldIndex)
+            (localFrame(spark, d.changes.schema, rows),
+              src.readByKeys(d.readAt,
+                StructType(d.keyCols.map(d.changes.schema(_))),
+                rows.map(r => Row.fromSeq(keyIdx.map(r.get))).distinct,
+                assertPrune))
+          } else {
+            if (assertPrune) throw new IllegalStateException(
+              s"refresh of ${derived.location} fell back to the semi-join " +
+                s"path (> $maxPruneKeys changed keys)")
+            if (cached.isEmpty) cached = persisted
+            val changed = cached.get
+            // a change frame of exactly the key columns (touchedKeys) is
+            // already a distinct key set
+            val keys =
+              if (changed.columns.toSeq == d.keyCols) changed
+              else changed.select(d.keyCols.map(col): _*).distinct()
+            (changed, src.scan(d.readAt).join(keys, d.keyCols, "left_semi"))
+          }
+        val (fresh, stale) = d.derive(changed, sourceRows, bounded)
+        // fresh + stale per changed key: ~2x the window, a manifest-
+        // derived size for the commit's guard-window exchange (the
+        // optimizer's estimate through the joins is useless); local rows
+        // commit on the driver with no job
+        commit(derived, fresh, stale, watermark, winBytes.map(b => b * 2 + 1024))
+      }
+      true
+    } finally cached.foreach(_.unpersist(blocking = false))
   }
 
   /** `left`'s rows whose `cols` values appear (`anti` = false) or do not

@@ -137,11 +137,16 @@ object GraftTools {
   def backup(table: GraftTable, outPath: String, version: Option[Long] = None): Unit = {
     val snap = table.scan(version)
     // small snapshot → one static-planned export job; big ones keep AQE
-    GraftTable.withStaticPlan(table.spark,
-      GraftTable.planBytes(snap) <= GraftTable.staticPlanMaxBytes) {
-      snap.write.mode("overwrite").parquet(outPath)
-    }
+    writeBackup(GraftTable.planned(snap,
+      Some(GraftTable.planBytes(snap, GraftTable.StaticPlanBytes))), outPath)
   }
+
+  /** Writes `rows` as the parquet files of the backup at `outPath`,
+    * through the engine's local file system settings
+    * (GraftSqlBridge.localWriteFs). */
+  private def writeBackup(rows: DataFrame, outPath: String): Unit =
+    rows.write.options(org.apache.spark.sql.GraftSqlBridge.localWriteFs)
+      .mode("overwrite").parquet(outPath)
 
   /**
    * Incremental backup (E3 — the reference exports diff-scan rows with a
@@ -186,14 +191,9 @@ object GraftTools {
     // a manifest-known-tiny window exports under ONE static plan (the CDC
     // fold exchange is delta-byte-sized; AQE only splits the export into
     // per-stage jobs); snapshot-diff or backfill windows keep AQE
-    GraftTable.withStaticPlan(table.spark,
-      table.cdcWindowBytes(fromVersion, head)
-        .exists(_ <= GraftTable.staticPlanMaxBytes)) {
-      table.changesSince(fromVersion, head)
-        .withColumn("_action", when(col("_deleted"), "DELETE").otherwise("UPSERT"))
-        .drop("_deleted")
-        .write.mode("overwrite").parquet(outPath)
-    }
+    writeBackup(GraftTable.planned(table.changesSince(fromVersion, head)
+      .withColumn("_action", when(col("_deleted"), "DELETE").otherwise("UPSERT"))
+      .drop("_deleted"), table.cdcWindowBytes(fromVersion, head).map(BigInt(_))), outPath)
     head
   }
 
@@ -260,35 +260,31 @@ object GraftTools {
         }: _*)
         .withColumn("_ord", lit(i))
     }.reduce(_ unionByName _)
-    GraftTable.withStaticPlan(spark,
-      incBytes <= GraftTable.staticPlanMaxBytes) {
-      // size the chain fold's exchange by the increments' on-disk bytes —
-      // same derivation as the CDC fold; the explicit hash repartition
-      // satisfies the window's required distribution (exchange count
-      // unchanged, width byte-derived instead of the session constant)
-      val foldParts = math.max(1L, math.min(
-        spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
-        (incBytes + (64L << 20) - 1) / (64L << 20))).toInt
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(keys.map(col): _*).orderBy(col("_ord").desc)
-      // cached across its two consumers (upsert + delete branches would each
-      // recompute the union + window), released before returning — a pinned
-      // localCheckpoint here leaked blocks across bench iterations
-      val last = tagged.repartition(foldParts, keys.map(col): _*)
-        .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-        .drop("_rn", "_ord")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try {
-        // one atomic apply: upserts + ignore-tombstones in a single commit
-        // (deletes are never strict — a key born in one increment and dead in
-        // a later one folds to DELETE yet never existed in the full backup)
-        val folded = last
-          .withColumn("_deleted", col("_action") === "DELETE").drop("_action")
-        if (folded.limit(1).count() > 0)
-          t.applyChanges(folded, sizeHintBytes = Some(incBytes))
-        t
-      } finally last.unpersist(blocking = false)
-    }
+    // size the chain fold's exchange by the increments' on-disk bytes —
+    // same derivation as the CDC fold; the explicit hash repartition
+    // satisfies the window's required distribution (exchange count
+    // unchanged, width byte-derived instead of the session constant)
+    val foldParts = math.max(1L, math.min(
+      spark.conf.get("spark.sql.shuffle.partitions").toInt.toLong,
+      (incBytes + (64L << 20) - 1) / (64L << 20))).toInt
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*).orderBy(col("_ord").desc)
+    // cached across its two consumers (upsert + delete branches would each
+    // recompute the union + window), released before returning — a pinned
+    // localCheckpoint here leaked blocks across bench iterations
+    val last = GraftTable.persisted(tagged.repartition(foldParts, keys.map(col): _*)
+      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
+      .drop("_rn", "_ord"), Some(BigInt(incBytes)))
+    try {
+      // one atomic apply: upserts + ignore-tombstones in a single commit
+      // (deletes are never strict — a key born in one increment and dead in
+      // a later one folds to DELETE yet never existed in the full backup)
+      val folded = last
+        .withColumn("_deleted", col("_action") === "DELETE").drop("_action")
+      if (GraftTable.planned(folded.limit(1), Some(BigInt(incBytes))).count() > 0)
+        t.applyChanges(folded, sizeHintBytes = Some(incBytes))
+      t
+    } finally last.unpersist(blocking = false)
   }
 
   /** One-shot replication: apply all changes between the destination's
@@ -306,15 +302,12 @@ object GraftTools {
       // probe + apply under ONE static plan per action (see
       // backupIncremental).
       val winBytes = src.cdcWindowBytes(sinceVersion, head)
-      GraftTable.withStaticPlan(src.spark,
-        winBytes.exists(_ <= GraftTable.staticPlanMaxBytes)) {
-        val delta = src.changesSince(sinceVersion, head)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          if (delta.limit(1).count() > 0)
-            dest.applyChanges(delta, sizeHintBytes = winBytes)
-        } finally delta.unpersist(blocking = false)
-      }
+      val inputBytes = winBytes.map(BigInt(_))
+      val delta = GraftTable.persisted(src.changesSince(sinceVersion, head), inputBytes)
+      try {
+        if (GraftTable.planned(delta.limit(1), inputBytes).count() > 0)
+          dest.applyChanges(delta, sizeHintBytes = winBytes)
+      } finally delta.unpersist(blocking = false)
     }
     head
   }

@@ -107,7 +107,7 @@ object MaterializedRollup {
   def refresh(spark: SparkSession, rollup: GraftTable,
       maxPruneKeys: Int = 4096, assertPrune: Boolean = false): Boolean =
     DerivedTables.refresh(spark, rollup, SrcLocKey, SrcVersionKey,
-        maxPruneKeys, assertPrune, exchangeFree = true) { (src, v0, v1) =>
+        maxPruneKeys, assertPrune) { (src, v0, v1) =>
       val p = rollup.properties
       val groupCols = p(GroupColsKey).split(FieldSep).toSeq
       val aggs = p(AggsKey).split(RecSep).toSeq.map { r =>

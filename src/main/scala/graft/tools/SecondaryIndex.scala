@@ -579,7 +579,7 @@ object SecondaryIndex {
   def refresh(spark: SparkSession, index: GraftTable,
       maxPruneKeys: Int = 4096, assertPrune: Boolean = false): Boolean =
     DerivedTables.refresh(spark, index, SrcLocKey, SrcVersionKey,
-        maxPruneKeys, assertPrune, exchangeFree = true) { (src, v0, v1) =>
+        maxPruneKeys, assertPrune) { (src, v0, v1) =>
       val p = index.properties
       val colNames = indexedCols(p)
       val exprCanon = p.get(ExprKey)

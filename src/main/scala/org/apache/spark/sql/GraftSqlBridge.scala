@@ -94,6 +94,42 @@ object GraftSqlBridge {
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(session.asInstanceOf[classic.SparkSession], plan)
 
+  /** Each session [[planIn]] cloned -> the session it serves for. */
+  private val owners = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  /** `df`'s analyzed plan in a clone of its session (`cloneSession`) with
+    * `settings` set on the clone only, so the SQL settings of one engine
+    * action reach no other query of the session. Call it at the action
+    * (collect, persist, write): a frame built on the result plans in the
+    * clone too, as a join plans in its left side's session. The plan is
+    * already analyzed, so the clone resolves no name and opens no catalog;
+    * the serving registries find the session it serves for through
+    * [[owner]]. With every setting already in force, `df` itself. */
+  def planIn(df: DataFrame, settings: Map[String, String]): DataFrame = {
+    val session = df.sparkSession
+    if (settings.forall { case (k, v) => session.conf.getOption(k).contains(v) }) df
+    else {
+      val clone = session.asInstanceOf[classic.SparkSession].cloneSession()
+      settings.foreach { case (k, v) => clone.sessionState.conf.setConfString(k, v) }
+      owners.synchronized(owners.put(clone, owner(session)))
+      ofRows(clone, df.queryExecution.analyzed)
+    }
+  }
+
+  /** The session `session` serves for: the one [[planIn]] cloned it from,
+    * else itself. */
+  def owner(session: SparkSession): SparkSession =
+    owners.synchronized(owners.getOrDefault(session, session))
+
+  /** The Hadoop settings every engine parquet write names: local files go
+    * through a file system that sets permissions without forking `chmod`
+    * (uncached: the cached `file` instance serves every other conf). The
+    * driver writers set them in [[parquetWriterConf]], the Spark write
+    * jobs as writer options. */
+  val localWriteFs: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[graft.table.NioPermissionsLocalFileSystem].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
   /** Re-wrap an already-executed plan's InternalRow RDD as a batch
     * DataFrame WITHOUT moving rows to the driver — the standard pattern for
     * streaming Sinks (the incoming micro-batch DataFrame carries a streaming
@@ -293,11 +329,7 @@ object GraftSqlBridge {
       spark.sessionState.conf)
     hconf.set(org.apache.parquet.hadoop.ParquetOutputFormat.COMPRESSION,
       opts.compressionCodecClassName)
-    // local files through a file system that sets permissions without
-    // forking `chmod` (uncached: the cached `file` instance serves every
-    // other conf)
-    hconf.set("fs.file.impl", classOf[graft.table.NioPermissionsLocalFileSystem].getName)
-    hconf.setBoolean("fs.file.impl.disable.cache", true)
+    localWriteFs.foreach { case (k, v) => hconf.set(k, v) }
     new org.apache.spark.util.SerializableConfiguration(hconf)
   }
 

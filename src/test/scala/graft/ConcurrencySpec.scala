@@ -3,6 +3,11 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.CyclicBarrier
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.catalog.HashComponent
@@ -28,6 +33,19 @@ object MergeRaceGate {
     }
     id
   }
+}
+
+/** A graft catalog that counts its opens. */
+class CountingGraftCatalog extends graft.sources.v2.GraftCatalog {
+  override def initialize(name: String,
+      options: org.apache.spark.sql.util.CaseInsensitiveStringMap): Unit = {
+    CountingGraftCatalog.opened.incrementAndGet()
+    super.initialize(name, options)
+  }
+}
+
+object CountingGraftCatalog {
+  val opened = new java.util.concurrent.atomic.AtomicInteger
 }
 
 /** Concurrent-writer behavior of the PK mutation surface: the bounded
@@ -262,5 +280,95 @@ class ConcurrencySpec extends AnyFunSuite {
     // the rival's commit stands; the transaction's op does not
     assert(t.scan().filter("id = 201").count() == 1)
     assert(t.scan().filter("id = 200").count() == 0)
+  }
+
+  /** Runs `write` on another thread with [[MergeRaceGate]] armed, and
+    * `probe` on this one once the write's batch reached the gate; the
+    * write then completes. */
+  private def whileBlocked[A](write: => Unit)(probe: => A): A = {
+    MergeRaceGate.arm()
+    val err = new java.util.concurrent.atomic.AtomicReference[Throwable]()
+    val writer = new Thread(() => try write catch { case e: Throwable => err.set(e) })
+    writer.start()
+    try {
+      assert(MergeRaceGate.reached.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the write never reached the gate")
+      probe
+    } finally {
+      MergeRaceGate.release.countDown()
+      writer.join(120000)
+      MergeRaceGate.disarm()
+      assert(err.get() == null, String.valueOf(err.get()))
+    }
+  }
+
+  private val gate = udf((id: Long) => MergeRaceGate.pass(id))
+
+  test("a static-planned engine collect leaves other threads' queries adaptive") {
+    assert(spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
+    val t = mkTable()
+    // a small batch that is not local rows: its driver commit collects it
+    // through a static plan, blocked in the gate
+    val batch = spark.range(100, 104)
+      .select(gate(col("id")).as("id"), concat(lit("g"), col("id").cast("string")).as("name"))
+    val plan = whileBlocked(t.upsert(batch)) {
+      spark.range(100).groupBy((col("id") % 3).as("g")).count().queryExecution.executedPlan
+    }
+    assert(plan.isInstanceOf[AdaptiveSparkPlanExec], plan.treeString)
+    assert(t.scan().filter(col("id") >= 100).count() == 4)
+  }
+
+  test("a job-path engine write leaves other threads' parquet timestamps alone") {
+    val loc = Files.createTempDirectory("graft-conc-ts-").toString
+    val ts = java.sql.Timestamp.valueOf("2024-01-02 03:04:05")
+    val data = Seq((1L, ts)).toDF("id", "ts")
+    val t = GraftTable.create(spark, s"$loc/t", "t", data.schema, Seq("id"),
+      Seq(HashComponent(Seq("id"), 2)), data = Some(data))
+    val plain = s"$loc/plain"
+    spark.conf.set("graft.mor.broadcastBytes", "1")
+    try whileBlocked(t.upsert(spark.range(2, 6).select(gate(col("id")).as("id"), lit(ts).as("ts")))) {
+      data.write.parquet(plain)
+    } finally spark.conf.unset("graft.mor.broadcastBytes")
+    def tsType(file: String) = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getFileMetaData.getSchema.getType(Seq("ts"): _*).asPrimitiveType
+        .getPrimitiveTypeName.toString
+      finally r.close()
+    }
+    val plainFile = Files.list(java.nio.file.Paths.get(plain)).iterator().asScala
+      .map(_.toString).find(_.endsWith(".parquet")).get
+    // the session's type (INT96 by default) for the plain write, INT64
+    // micros for every engine file
+    assert(tsType(plainFile) == "INT96")
+    assert(t.meta.deltaFiles.filter(_.rows > 0).nonEmpty)
+    t.meta.deltaFiles.filter(_.rows > 0).foreach(f => assert(tsType(f.path) == "INT64", f.path))
+    assert(t.scan().count() == 5)
+  }
+
+  test("an engine action's clone serves its session's index and opens no catalog") {
+    val wh = Files.createTempDirectory("graft-conc-clone-").toString
+    val data = (1L to 64L).map(i => (i, s"n$i")).toDF("id", "name")
+    val t = GraftTable.create(spark, s"$wh/base", "base", data.schema, Seq("id"),
+      Seq(HashComponent(Seq("id"), 4)), data = Some(data))
+    val idx = graft.tools.SecondaryIndex.build(spark, t, "name", s"$wh/by_name", 4)
+    spark.conf.set("spark.sql.catalog.gclone", classOf[CountingGraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gclone.warehouse", wh)
+    // the session's current catalog is the graft catalog, open already
+    spark.conf.set("spark.sql.defaultCatalog", "gclone")
+    try {
+      val q = spark.table("base").filter(col("name") === "n7")
+      val opened = CountingGraftCatalog.opened.get()
+      assert(opened > 0)
+      graft.plans.ServingStats.reset(spark)
+      val staticQ = GraftSqlBridge.planIn(q, Map("spark.sql.adaptive.enabled" -> "false"))
+      assert(staticQ.sparkSession ne spark)
+      assert(staticQ.collect().map(_.getLong(0)).toSeq == Seq(7L))
+      assert(CountingGraftCatalog.opened.get() == opened, "the clone opened a catalog")
+      val served = graft.plans.ServingStats.snapshot(spark).toMap.get(idx.location)
+      assert(served.exists(_.serves == 1), served.toString)
+      assert(spark.conf.get("spark.sql.adaptive.enabled").toBoolean)
+    } finally spark.conf.unset("spark.sql.defaultCatalog")
   }
 }

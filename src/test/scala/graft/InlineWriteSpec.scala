@@ -84,26 +84,38 @@ class InlineWriteSpec extends AnyFunSuite {
     }
   }
 
-  test("bounded writes start no process and write Hadoop's file modes") {
-    val t = table(Files.createTempDirectory("graft-inw0-").toString + "/t", "hash")
-    // every process the writes start on this thread (a `chmod` per file,
-    // directory and checksum file when Hadoop sets permissions by fork)
+  /** The commands of the processes `body` starts that name `dir` (a
+    * `chmod` per file, directory and checksum file when Hadoop sets
+    * permissions by fork), on any thread: a write job's tasks fork on
+    * executor threads. */
+  private def processes(dir: String)(body: => Any): Seq[String] = {
     val rec = new jdk.jfr.Recording()
     rec.enable("jdk.ProcessStart")
     rec.start()
-    try writes(t) finally rec.stop()
+    try body finally rec.stop()
     val dump = Files.createTempFile("graft-inw0-", ".jfr")
     try {
       rec.dump(dump)
-      val me = Thread.currentThread.getId
-      val forks = jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala
-        .filter(e => e.getEventType.getName == "jdk.ProcessStart" &&
-          e.getThread != null && e.getThread.getJavaThreadId == me)
-        .map(_.getString("command"))
-      assert(forks.isEmpty, s"${forks.size} processes started: ${forks.take(3)}")
+      jdk.jfr.consumer.RecordingFile.readAllEvents(dump).asScala.toSeq
+        .filter(_.getEventType.getName == "jdk.ProcessStart")
+        .map(_.getString("command")).filter(_.contains(dir))
     } finally { rec.close(); Files.deleteIfExists(dump) }
-    val files = t.meta.deltaFiles.map(f => java.nio.file.Paths.get(f.path))
-    assert(files.nonEmpty)
+  }
+
+  test("bounded writes start no process and write Hadoop's file modes") {
+    val dir = Files.createTempDirectory("graft-inw0-").toString
+    // the job path: the created table's base write, then a compaction's
+    var t: GraftTable = null
+    val jobForks = processes(dir) {
+      t = table(s"$dir/t", "hash")
+      t.upsert(rows(Seq(1L, 500L), "j"))
+      t.compact()
+    }
+    assert(jobForks.isEmpty, s"${jobForks.size} processes started: ${jobForks.take(3)}")
+    val forks = processes(dir)(writes(t))
+    assert(forks.isEmpty, s"${forks.size} processes started: ${forks.take(3)}")
+    val files = (t.meta.deltaFiles ++ t.meta.baseFiles).map(f => java.nio.file.Paths.get(f.path))
+    assert(t.meta.deltaFiles.nonEmpty && t.meta.baseFiles.nonEmpty)
     files.foreach { f =>
       val mode = java.nio.file.attribute.PosixFilePermissions.toString(
         Files.getPosixFilePermissions(f))
@@ -192,5 +204,22 @@ class InlineWriteSpec extends AnyFunSuite {
     assert(driver.forall(_._2 == "optional int64 t (TIMESTAMP(MICROS,true))"), driver)
     assert(!driver.exists(_._3) && driver.exists(_._4),
       s"plain `n` must carry no dictionary, `g` must: $driver")
+  }
+
+  test("a point upsert over a scan past the bound commits on the driver once pruned") {
+    val t = table(Files.createTempDirectory("graft-inw4-").toString + "/t", "hash")
+    // an UPDATE-shaped upsert: one key of a filtered scan of the table
+    val upd = t.scan().filter(org.apache.spark.sql.functions.col("id") === 7L)
+      .withColumn("name", org.apache.spark.sql.functions.lit("seven"))
+    val analyzed = upd.queryExecution.analyzed.stats.sizeInBytes
+    val optimized = upd.queryExecution.optimizedPlan.stats.sizeInBytes
+    // a bound the whole table passes and the bucket the filter prunes to
+    // fits
+    val bound = (analyzed + optimized) / 2
+    assert(optimized < bound && bound < analyzed, s"analyzed $analyzed, optimized $optimized")
+    spark.conf.set("graft.mor.broadcastBytes", bound.toString)
+    val n = try counted(t.upsert(upd)) finally spark.conf.unset("graft.mor.broadcastBytes")
+    assert(n == ((0, 0)), s"(jobs, stages) $n: the upsert took the job path")
+    assert(t.scan().filter("id = 7").collect().head.getString(2) == "seven")
   }
 }
